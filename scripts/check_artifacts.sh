@@ -14,6 +14,14 @@ ROUND="${1:?usage: check_artifacts.sh <round-label, e.g. r18>}"
 # immediately re-stale the very artifacts it ships (r19 — the check is
 # meant to prove the artifacts describe the shipped CODE).
 HEAD_TS=$(git log -1 --format=%ct -- src build.sbt)
+# An empty HEAD_TS (no commit touches src/ or build.sbt) would make the
+# `-lt` test below error inside the elif, which `set -e` ignores, and the
+# script would report OK: fail loudly instead.
+if [ -z "$HEAD_TS" ]; then
+  echo "STALE-CHECK FAIL: no commit touches src/ or build.sbt — no" \
+       "engine commit to compare the artifacts against" >&2
+  exit 1
+fi
 fail=0
 for f in "CORRECTNESS_sf0.1_${ROUND}.json" "PLANDUMP_${ROUND}.txt" \
          "BENCH_LOCAL_${ROUND}.json"; do

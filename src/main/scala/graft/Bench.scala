@@ -182,7 +182,7 @@ object Bench {
       f""""max":${if (calibSamples.nonEmpty) calibSamples.max else 0.0}%.4f,""" +
       f""""drain_timeouts":$drainTimeouts}"""
     val meta = f"""{"passes":$passes,"load_avg_start":$loadStart%.2f,""" +
-      f""""load_avg_end":$loadEnd%.2f,"cpus":${os.getAvailableProcessors},""" +
+      f""""load_avg_end":$loadEnd%.2f,"cpus":${spark.sparkContext.defaultParallelism},""" +
       floorMeta + "," +
       s""""missing_artifacts":${gaps.map(n => f""""BENCH_r$n%02d.json"""").mkString("[", ",", "]")}}"""
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_median":$meds,"queries_jobs":$jobsJson,"queries_floor_adj":$adjs,"total_median":$totalMed%.3f,"total_floor_adj":$totalAdj%.3f,"meta":$meta,"sf":"$sfDir"}""")

@@ -4,6 +4,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{CorpusQueries, DatalakeQueries, EventQueries, GraphQueries, JourneyQueries, LayoutQueries, Relational, SimilarityQueries, StreamQueries, TextQueries}
 
+/** One registry row: how to compute its frame, and the DuckDB SQL that
+  * checks it. */
+sealed trait QueryDef {
+  /** The row's oracle SQL and its frame from one model value. A fixed
+    * row's SQL is known up front; a trained row fetches its model once,
+    * renders the oracle from it and computes the frame with it. The frame
+    * is a thunk, so the oracle is known even when the frame throws.
+    */
+  def run(spark: SparkSession, dir: String): QueryDef.Run
+}
+
+object QueryDef {
+  final case class Run(oracleSql: String, frame: () => DataFrame)
+
+  /** A row whose oracle does not depend on a trained model. */
+  final case class Fixed(query: (SparkSession, String) => DataFrame,
+      oracleSql: String) extends QueryDef {
+    def run(spark: SparkSession, dir: String): Run =
+      Run(oracleSql, () => query(spark, dir))
+  }
+
+  /** A row over a trained model: `model` trains it or fetches it from its
+    * per-dir memo, and that one value goes to both `query` and `oracle`.
+    */
+  final case class Trained[M](model: (SparkSession, String) => M,
+      query: (SparkSession, String, M) => DataFrame,
+      oracle: M => String) extends QueryDef {
+    /** The row's frame alone; renders no oracle SQL. */
+    def frame(spark: SparkSession, dir: String): DataFrame =
+      query(spark, dir, model(spark, dir))
+    def run(spark: SparkSession, dir: String): Run = {
+      val m = model(spark, dir)
+      Run(oracle(m), () => query(spark, dir, m))
+    }
+  }
+
+  /** [[Trained]] with one argument list per part, so `M` is inferred from
+    * `model` before the query and oracle lambdas are typed. */
+  def trained[M](model: (SparkSession, String) => M)(
+      query: (SparkSession, String, M) => DataFrame)(
+      oracle: M => String): Trained[M] = Trained(model, query, oracle)
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
@@ -13,8 +56,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.qMarketStats(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every registry row's frame. Renders no oracle SQL: the benchmark
+    * and Bench call it on their timed paths. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    fixedQueries ++ trainedQueries.map { case (k, t) => k -> (t.frame _) }
+
+  /** Every registry row with its DuckDB oracle — what Verify dumps. */
+  def defs: Map[String, QueryDef] = {
+    val sql = fixedOracleSql
+    fixedQueries.map[String, QueryDef] { case (k, f) =>
+      k -> QueryDef.Fixed(f, sql(k)) } ++ trainedQueries
+  }
+
+  /** The rows whose oracle is fixed SQL, one per implemented operator
+    * from SURVEY.md §2; the rows over a trained model are
+    * [[trainedQueries]]. */
+  private def fixedQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_pricing_summary" -> (Relational.q1PricingSummary _),
     "q_market_stats" -> (Relational.qMarketStats _),
     "q_opportunities" -> (Relational.qOpportunities _),
@@ -75,17 +132,10 @@ object SparkEntry {
     "q_sample_weighted" -> (CorpusQueries.qSampleWeighted _),
     "q_knn_cosine" -> (SimilarityQueries.qKnnCosine _),
     "q_embed_neardup" -> (SimilarityQueries.qEmbedNearDup _),
-    "q_semantic_dedup" -> (SimilarityQueries.qSemanticDedup _),
     "q_ann_lsh" -> (SimilarityQueries.qAnnLsh _),
     "q_dedup_clusters" -> (SimilarityQueries.qDedupClusters _),
     "q_dedup_keep_best" -> (SimilarityQueries.qDedupKeepBest _),
     "q_dedup_clusters_incremental" -> (SimilarityQueries.qDedupClustersIncremental _),
-    "q_ann_ivf" -> (SimilarityQueries.qAnnIvf _),
-    "q_ann_ivf_retrain" -> (SimilarityQueries.qAnnIvfRetrain _),
-    "q_ann_ivf_quantized" -> (SimilarityQueries.qAnnIvfQuantized _),
-    "q_ann_pq" -> (SimilarityQueries.qAnnPq _),
-    "q_ann_ivfpq" -> (SimilarityQueries.qAnnIvfPq _),
-    "q_ann_ivfpq_residual" -> (SimilarityQueries.qAnnIvfPqResidual _),
     "q_minhash_neardup" -> (SimilarityQueries.qMinhashNearDup _),
     "q_dedup_incremental" -> (SimilarityQueries.qDedupIncremental _),
     "q_simhash" -> (SimilarityQueries.qSimhash _),
@@ -105,7 +155,6 @@ object SparkEntry {
     "q_bm25_search" -> (TextQueries.qBm25Search _),
     "q_lm_score" -> (TextQueries.qLmScore _),
     "q_pagerank" -> (GraphQueries.qPagerank _),
-    "q_bpe_tokenize" -> (TextQueries.qBpeTokenize _),
     "q_curriculum" -> (CorpusQueries.qCurriculum _),
     "q_heavy_hitters" -> (TextQueries.qHeavyHitters _),
     "q_nb_classifier" -> (TextQueries.qNbClassifier _),
@@ -158,7 +207,6 @@ object SparkEntry {
     "q_stream_quarantine" -> (StreamQueries.qStreamQuarantine _),
     "q_stream_merge" -> (StreamQueries.qStreamMerge _),
     "q_stream_dedup_incremental" -> (StreamQueries.qStreamDedupIncremental _),
-    "q_stream_ivf_ingest" -> (SimilarityQueries.qStreamIvfIngest _),
     "q_stream_datalake" -> (StreamQueries.qStreamDatalake _),
     "q_stream_clusters" -> (StreamQueries.qStreamClusters _),
     "q_bucketed_join" -> (LayoutQueries.qBucketedJoin _),
@@ -170,7 +218,6 @@ object SparkEntry {
     "q_source_quota" -> (CorpusQueries.qSourceQuota _),
     "q_token_budget" -> (CorpusQueries.qTokenBudget _),
     "q_source_temperature" -> (CorpusQueries.qSourceTemperature _),
-    "q_pca_project" -> (SimilarityQueries.qPcaProject _),
     "q_quantize_roundtrip" -> (SimilarityQueries.qQuantizeRoundtrip _),
     "q_manifest_skipping" -> (LayoutQueries.qManifestSkipping _),
     "q_optimize_zorder" -> (LayoutQueries.qOptimizeZorder _),
@@ -180,8 +227,6 @@ object SparkEntry {
     "q_stream_change_feed" -> (StreamQueries.qStreamChangeFeed _),
     "q_stream_cdc_delete" -> (StreamQueries.qStreamCdcDelete _),
     "q_table_replicate" -> (StreamQueries.qTableReplicate _),
-    "q_ann_opq" -> (SimilarityQueries.qAnnOpq _),
-    "q_ann_ivf_pca" -> (SimilarityQueries.qAnnIvfPca _),
     "q_hybrid_search" -> (TextQueries.qHybridSearch _),
     "q_index_serve" -> (TextQueries.qIndexServe _),
     "q_outlier_mad" -> (Relational.qOutlierMad _),
@@ -234,24 +279,12 @@ object SparkEntry {
     "q_rfm_segmentation" -> (Relational.qRfmSegmentation _),
     "q_benford_audit" -> (Relational.qBenfordAudit _),
     "q_evolve_vacuum" -> (DatalakeQueries.qEvolveVacuum _),
-    "q_gbt_regression" -> (Relational.qGbtRegression _),
-    "q_gbt_importance" -> (Relational.qGbtImportance _),
     "q_geo_radius" -> (Relational.qGeoRadius _),
-    "q_conformal_interval" -> (Relational.qConformalInterval _),
     "q_ab_cuped" -> (Relational.qAbCuped _),
-    "q_stream_gbt_score" -> (StreamQueries.qStreamGbtScore _),
     "q_bootstrap_ci" -> (Relational.qBootstrapCi _),
     "q_cohort_ltv" -> (Relational.qCohortLtv _),
     "q_kcore" -> ((s, d) => GraphQueries.qKcore(s, d)),
-    "q_model_serve" -> (Relational.qModelServe _),
-    "q_stream_model_ingest" -> (StreamQueries.qStreamModelIngest _),
-    "q_gbt_tree" -> (Relational.qGbtTree _),
     "q_evolve_delete" -> (DatalakeQueries.qEvolveDelete _),
-    "q_model_rollback" -> (Relational.qModelRollback _),
-    "q_model_serve_tree" -> (Relational.qModelServeTree _),
-    "q_gbt_depth3" -> (Relational.qGbtDepth3 _),
-    "q_model_alias" -> (Relational.qModelAlias _),
-    "q_hybrid_serve" -> (TextQueries.qHybridServe _),
   )
 
   /** The LSH oracle is GENERATED: the seeded hyperplanes (the exact arrays
@@ -1006,87 +1039,95 @@ object SparkEntry {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** DuckDB-dialect equivalents over the same bare table names.
-    * Column names and numeric determinism rules: see SURVEY.md §4 — money
-    * aggregates go through DECIMAL so both engines produce identical values.
-    * Model-dependent oracles (IVF, PQ, SemDeDup) are appended when their
-    * trained model is available in this JVM; otherwise those queries fall
-    * back to the driver's rows-only check.
+  /** The registry rows over a trained model. Each row fetches its model
+    * once through a per-dir memoized accessor, runs the query with it and
+    * renders the oracle from the same value: the model's constants are
+    * inlined as literals into generated DuckDB SQL.
     */
-  def oracleSql: Map[String, String] =
-    staticOracleSql ++
-      graft.queries.SimilarityQueries.lastIvfModel
-        .map { case (_, c) => "q_ann_ivf" -> ivfOracle(c) } ++
-      graft.queries.SimilarityQueries.lastRetrainModel
-        .map { case (_, c) => "q_ann_ivf_retrain" -> ivfRetrainOracle(c) } ++
-      graft.queries.SimilarityQueries.lastIvfQModel
-        .toSeq.flatMap { case (_, c) => Seq(
-          "q_ann_ivf_quantized" -> ivfQuantOracle(c),
-          // store-served row: the serve equals the on-the-fly quantized
-          // serve (CorpusStreamSpec), so the trained-centroid replay
-          // oracle is verbatim
-          "q_stream_ivf_ingest" -> ivfQuantOracle(c)) } ++
-      graft.queries.SimilarityQueries.lastPqModel
-        .map { case (_, mdl) => "q_ann_pq" -> pqOracle(mdl) } ++
-      graft.queries.SimilarityQueries.lastOpqModel
-        .map { case (_, rm) => "q_ann_opq" -> opqOracle(rm._1, rm._2) } ++
-      graft.queries.SimilarityQueries.lastIvfPcaModel
-        .map { case (_, m) =>
-          "q_ann_ivf_pca" -> ivfPcaOracle(m._1, m._2, m._3) } ++
-      graft.queries.SimilarityQueries.lastIvfPqModel
-        .map { case (_, cm) => "q_ann_ivfpq" -> ivfpqOracle(cm._1, cm._2) } ++
-      graft.queries.SimilarityQueries.lastIvfPqResModel
-        .map { case (_, cm) =>
-          "q_ann_ivfpq_residual" -> ivfpqResidualOracle(cm._1, cm._2) } ++
-      graft.queries.SimilarityQueries.lastSemModel
-        .map { case (_, c) => "q_semantic_dedup" -> semOracle(c) } ++
-      graft.queries.SimilarityQueries.lastPcaModel
-        .map { case (_, m) => "q_pca_project" -> pcaOracle(m) } ++
-      graft.queries.TextQueries.lastBpeModel
-        .map { case (_, m) => "q_bpe_tokenize" -> bpeOracle(m) } ++
-      graft.queries.Relational.lastGbtModel
-        .map { case (_, m) => "q_gbt_regression" -> gbtScoreOracle(m) } ++
-      graft.queries.Relational.lastGbtModel
-        .map { case (_, m) =>
-          "q_gbt_importance" -> gbtImportanceOracle(m) } ++
-      graft.queries.Relational.lastGbtModel
-        .map { case (_, m) =>
-          "q_conformal_interval" -> gbtConformalOracle(m) } ++
+  private def trainedQueries: Map[String, QueryDef.Trained[_]] = {
+    import QueryDef.trained
+    Map(
+      "q_ann_ivf" -> trained(SimilarityQueries.centroidsFor)(
+        SimilarityQueries.qAnnIvf)(ivfOracle),
+      "q_ann_ivf_retrain" -> trained(SimilarityQueries.retrainModelFor)(
+        SimilarityQueries.qAnnIvfRetrain)(m => ivfRetrainOracle(m._2)),
+      "q_ann_ivf_quantized" -> trained(SimilarityQueries.centroidsFor)(
+        SimilarityQueries.qAnnIvfQuantized)(ivfQuantOracle),
+      // store-served row: the serve equals the on-the-fly quantized
+      // serve (CorpusStreamSpec), so the trained-centroid replay
+      // oracle is verbatim
+      "q_stream_ivf_ingest" -> trained(SimilarityQueries.centroidsFor)(
+        SimilarityQueries.qStreamIvfIngest)(ivfQuantOracle),
+      "q_ann_pq" -> trained(SimilarityQueries.pqModelFor)(
+        SimilarityQueries.qAnnPq)(pqOracle),
+      "q_ann_opq" -> trained(SimilarityQueries.opqModelFor)(
+        SimilarityQueries.qAnnOpq)(m => opqOracle(m._1, m._2)),
+      "q_ann_ivf_pca" -> trained(SimilarityQueries.ivfPcaModelFor)(
+        SimilarityQueries.qAnnIvfPca)(m => ivfPcaOracle(m._1, m._2, m._3)),
+      "q_ann_ivfpq" -> trained(SimilarityQueries.ivfPqModelFor)(
+        SimilarityQueries.qAnnIvfPq)(m => ivfpqOracle(m._1, m._2)),
+      "q_ann_ivfpq_residual" -> trained(SimilarityQueries.ivfPqResModelFor)(
+        SimilarityQueries.qAnnIvfPqResidual)(
+        m => ivfpqResidualOracle(m._1, m._2)),
+      "q_semantic_dedup" -> trained(SimilarityQueries.centroidsFor)(
+        SimilarityQueries.qSemanticDedup)(semOracle),
+      "q_pca_project" -> trained(SimilarityQueries.pcaModelFor)(
+        SimilarityQueries.qPcaProject)(pcaOracle),
+      "q_bpe_tokenize" -> trained(TextQueries.bpeModelFor)(
+        TextQueries.qBpeTokenize)(bpeOracle),
+      "q_gbt_regression" -> trained(Relational.gbtTrainOrGet)(
+        Relational.qGbtRegression)(gbtScoreOracle),
+      "q_gbt_importance" -> trained(Relational.gbtTrainOrGet)(
+        Relational.qGbtImportance)(gbtImportanceOracle),
+      "q_conformal_interval" -> trained(Relational.gbtTrainOrGet)(
+        Relational.qConformalInterval)(gbtConformalOracle),
       // streaming replay of the scoring eval: exact partial moments fold
       // linearly, so stream == batch and the oracle is verbatim
-      graft.queries.Relational.lastGbtModel
-        .map { case (_, m) => "q_stream_gbt_score" -> gbtScoreOracle(m) } ++
+      "q_stream_gbt_score" -> trained(Relational.gbtTrainOrGet)(
+        StreamQueries.qStreamGbtScore)(gbtScoreOracle),
       // the registry rows score with the STORED artifact; the oracle
       // inlines the in-session model — store/serve drift hash-fails
-      graft.queries.Relational.lastGbtModel
-        .map { case (_, m) => "q_model_serve" -> modelServeOracle(m) } ++
-      graft.queries.Relational.lastGbtModel
-        .map { case (_, m) =>
-          "q_stream_model_ingest" -> modelIngestOracle(m) } ++
-      graft.queries.Relational.lastGbtTreeModel
-        .map { case (_, m) => "q_gbt_tree" -> gbtTreeOracle(m) } ++
+      "q_model_serve" -> trained(Relational.gbtVersionsFor)(
+        (s, d, m) => Relational.qModelServe(s, d, m))(
+        m => modelServeOracle(m.fresh)),
+      "q_stream_model_ingest" -> trained(Relational.gbtTrainOrGet)(
+        StreamQueries.qStreamModelIngest)(modelIngestOracle),
+      "q_gbt_tree" -> trained(Relational.gbtTreeTrainOrGet)(
+        Relational.qGbtTree)(gbtTreeOracle),
       // rollback serves the PINNED v1 artifact — the oracle inlines the
-      // half-trained model, so serving the wrong version hash-fails
-      graft.queries.Relational.lastRollbackModel
-        .map { case (_, m) => "q_model_rollback" -> rollbackOracle(m) } ++
+      // in-session half-trained model, so serving the wrong version or
+      // reading back a different artifact hash-fails
+      "q_model_rollback" -> trained(Relational.gbtVersionsFor)(
+        (s, d, m) => Relational.qModelRollback(s, d, m))(
+        m => rollbackOracle(m.stale)),
       // the tree registry serves the STORED depth-2 artifact; the oracle
       // inlines the in-session tree model — any round-trip loss in a
       // node, child flag or leaf delta hash-fails the scores
-      graft.queries.Relational.lastGbtTreeModel
-        .map { case (_, m) => "q_model_serve_tree" -> treeServeOracle(m) } ++
+      "q_model_serve_tree" -> trained(Relational.gbtTreeVersionsFor)(
+        (s, d, m) => Relational.qModelServeTree(s, d, m))(
+        m => treeServeOracle(m.fresh)),
       // depth-3 scoring replay from the generic trainer's model — any
       // routing or leaf-delta defect at any level hash-fails
-      graft.queries.Relational.lastDeepModel
-        .map { case (_, m) => "q_gbt_depth3" -> deepScoreOracle(m) } ++
+      "q_gbt_depth3" -> trained(Relational.gbtDeepTrainOrGet)(
+        Relational.qGbtDepth3)(deepScoreOracle),
       // alias staging: promoted rows score with the full model (prod →
       // v2), rolled-back rows with the half model (prod re-pointed at
       // v1) — an alias swap that doesn't change what serves hash-fails
-      graft.queries.Relational.lastAliasModels
-        .map { case (_, fm) => "q_model_alias" -> aliasOracle(fm._1, fm._2) } ++
+      "q_model_alias" -> trained(Relational.gbtVersionsFor)(
+        Relational.qModelAlias)(m => aliasOracle(m.fresh, m.stale)),
       // hybrid-over-stores: the bm25 store replay + the centroid-inlined
       // IVF replay, fused with the same RRF tail as q_hybrid_search
-      graft.queries.SimilarityQueries.lastHybridIvfModel
-        .map { case (_, c) => "q_hybrid_serve" -> hybridServeOracle(c) } ++
+      "q_hybrid_serve" -> trained(SimilarityQueries.centroidsFor)(
+        TextQueries.qHybridServe)(hybridServeOracle))
+  }
+
+  /** DuckDB-dialect equivalents of the [[fixedQueries]] over the same
+    * bare table names. Column names and numeric determinism rules: see
+    * SURVEY.md §4 — money aggregates go through DECIMAL so both engines
+    * produce identical values.
+    */
+  private def fixedOracleSql: Map[String, String] =
+    staticOracleSql ++
       // The streaming replay rows share their batch twins' oracles
       // VERBATIM — stream==batch over the same input is exactly the
       // equality the driver re-proves by hash every round.

@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registry row's frame → parquet, plus
+  * oracle_sql.json with the SQL each row's run rendered, for the DuckDB
+  * hash compare (scripts/check_oracle.py replicates it). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — dev-loop filter for
@@ -34,40 +35,39 @@ object Verify {
     // manifest, so check_oracle's missing-output check catches the partial
     // snapshot — written after, the same death leaves no manifest and the
     // oracle-keys-only fallback would silently pass over the missing dirs
+    val defs = SparkEntry.defs
     val selected = only match {
-      case None => SparkEntry.queries
+      case None => defs
       case Some(names) =>
         // loud on typos: a silently-empty selection writes an empty
         // manifest, dumps nothing, and exits clean — the developer
         // concludes the query verified when nothing ran (review finding)
-        val unknown = names.diff(SparkEntry.queries.keySet)
+        val unknown = names.diff(defs.keySet)
         require(unknown.isEmpty,
           s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
             s"— check SparkEntry.queries")
-        SparkEntry.queries.view.filterKeys(names).toMap
+        defs.view.filterKeys(names).toMap
     }
     Files.writeString(Paths.get(s"$outDir/queries.txt"),
       selected.keys.toSeq.sorted.mkString("", "\n", "\n"))
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // each row's oracle comes from its own run: a trained row's SQL is
+    // rendered from the very model value its frame is computed with, so
+    // rows may run in any order or alone. The oracle is recorded before
+    // the frame runs — a row that throws keeps its oracle key unless the
+    // model step itself threw.
+    val oracles = scala.collection.mutable.Map.empty[String, String]
+    selected.foreach { case (name, qd) =>
+      try {
+        val run = qd.run(spark, sfDir)
+        oracles(name) = run.oracleSql
+        run.frame().coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
     }
-    // the generated trained-model oracles are only valid for the sfDir the
-    // models were trained on — a cache populated from a different dir (or a
-    // partial run) would dump oracles that don't match the dumped parquet
-    if (!graft.queries.SimilarityQueries.modelsConsistentWith(sfDir) ||
-        !graft.queries.TextQueries.bpeModelConsistentWith(sfDir) ||
-        !graft.queries.Relational.gbtModelConsistentWith(sfDir) ||
-        !graft.queries.Relational.gbtTreeModelConsistentWith(sfDir) ||
-        !graft.queries.Relational.rollbackModelConsistentWith(sfDir) ||
-        !graft.queries.Relational.aliasModelsConsistentWith(sfDir) ||
-        !graft.queries.Relational.deepModelConsistentWith(sfDir))
-      failed += "_model_dir_mismatch"
     // machine-readable failure marker: the exit code stays 0 (the driver's
     // contract), so tooling (scripts/gate.sh) reads this file instead of
     // scraping logs — log-scrape breaks silently if the message wording
@@ -87,7 +87,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -16,9 +16,6 @@ object Cleaning {
   def coerceDouble(c: Column, default: Double = 0.0): Column =
     coalesce(c.try_cast("double"), lit(default))
 
-  def coerceLong(c: Column, default: Long = 0L): Column =
-    coalesce(c.try_cast("long"), lit(default))
-
   /** to_datetime(errors='coerce'): null on unparseable (try_to_timestamp —
     * plain to_timestamp THROWS under ANSI mode, like cast).
     */

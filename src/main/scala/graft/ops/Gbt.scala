@@ -337,19 +337,6 @@ object Gbt {
         lit(1 << (2 * j))
     }.reduce(_ + _)
 
-  private def leafDelta(t: Tree, leaf: Int): Long = leaf match {
-    case 0 => t.dLL
-    case 1 => t.dLR
-    case 2 => t.dRL
-    case _ => t.dRR
-  }
-
-  /** Tree-model value (integer cents) at a leaf pattern. */
-  def fOfTree(base: Long, trees: Seq[Tree], p: Int): Long =
-    base + trees.zipWithIndex.map { case (t, j) =>
-      leafDelta(t, (p >> (2 * j)) & 3)
-    }.sum
-
   /** Tree-model scoring column: base + per-tree routed leaf delta. */
   def fhatColTree(m: TreeModel): Column =
     m.trees.foldLeft(lit(m.base): Column) { (acc, t) =>

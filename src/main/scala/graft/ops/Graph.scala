@@ -158,20 +158,13 @@ object Graph {
     // FILTER VIEW over the checkpointed stats, not a second scan
     val sinks = if (hasDangling) stats.filter(col("is_src") === 0)
       .select(col("node")) else null
-    val spark = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val aqePrior = spark.conf.getOption(aqeKey)
-    val spPrior = spark.conf.getOption(spKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(spKey, loopWidth.toString)
     // hoisted so the finally block can release a mid-loop checkpoint if
     // the rank loop throws (round-9 ADVICE: the unpersists ran in the
     // try body, so an exception leaked ed0/deg/stats — and possibly a
     // superseded rank checkpoint — with only the AQE conf restored)
     var lastCp: DataFrame = null
     var completed = false
-    val result = try {
+    try Fixpoint.withLoopConf(edges.sparkSession, loopWidth) {
     // same IEEE divisions the oracle runs engine-side on the same value
     val r0 = lit(1.0) / lit(nd.toDouble)
     val teleport = lit(0.15) / lit(nd.toDouble)
@@ -268,16 +261,7 @@ object Graph {
       raw.unpersist(blocking = true) // no-op on the success path
       Checkpoints.release(stats) // nodes and sinks are filter views over it
       if (!completed && lastCp != null) Checkpoints.release(lastCp)
-      aqePrior match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      spPrior match {
-        case Some(v) => spark.conf.set(spKey, v)
-        case None => spark.conf.unset(spKey)
-      }
     }
-    result
   }
 
   /** Multi-source BFS hop distances over a directed edge list: dist(v) =
@@ -343,75 +327,66 @@ object Graph {
     // hash-partitioned on src AT that width from the raw cache — one
     // extra cached |E| pass at construction buys per-round exchanges
     // sized to the data instead of the session's cluster-width constant.
+    // Both caches are built inside the try: a count that throws (a
+    // failing edge derivation) must still release them.
     val raw = edges.select(col("src"), col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = raw.count()
-    val spark = edges.sparkSession
-    val width = Fixpoint.widthFor(spark, nEdges)
-    val ed = raw.repartition(width, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ed.count() // materialize from the raw cache, then drop it
-    raw.unpersist(blocking = true)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val aqePrior = spark.conf.getOption(aqeKey)
-    val spPrior = spark.conf.getOption(spKey)
+    var ed: DataFrame = null
     var dist: DataFrame = null
     var completed = false
     try {
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(spKey, width.toString)
-      // distinct: a caller-supplied source set may repeat a node — the old
-      // union-min fixpoint absorbed that in its groupBy, but the
-      // append-only settled table would carry the duplicate (node, 0) rows
-      // forever. The hop-0 witness (|sources| after dedup) rides the
-      // checkpoint action the same way the loop's does.
-      val obs0 = Observation()
-      dist = Checkpoints.checkpoint(
-        sources.select(col("node"), lit(0L).as("dist")).distinct()
-          .observe(obs0, count(lit(1)).as("n_settled")))
-      var fsize = obs0.get("n_settled").asInstanceOf[Long]
-      var hops = 0
-      while (fsize > 0 && hops < maxHops) {
-        // frontier: a FILTER VIEW over the checkpointed settled table
-        // (dist == h) — one cached scan, zero extra storage. shuffle_hash
-        // hints keep the static planner off SMJ: ed's cached
-        // HashPartitioning(src) side never moves, only the node-sized
-        // frontier/settled tables exchange.
-        val frontier = dist.filter(col("dist") === lit(hops.toLong))
-        val obs = Observation()
-        val fresh = ed.join(frontier.hint("shuffle_hash"),
-            ed("src") === frontier("node"))
-          .select(ed("dst").as("node")).distinct()
-          .join(dist.hint("shuffle_hash"), Seq("node"), "left_anti")
-          .select(col("node"), lit((hops + 1).toLong).as("dist"))
-          .observe(obs, count(lit(1)).as("n_settled"))
-        val next = Checkpoints.checkpoint(dist.unionByName(fresh))
-        // adopt the fresh checkpoint BEFORE releasing the superseded one:
-        // if release (or the observation read below) throws, the finally
-        // block must release the frame that is actually persisted — the
-        // old order left `next` unguarded in that window (round-10
-        // ADVICE).
-        val prev = dist
-        dist = next
-        Checkpoints.release(prev)
-        hops += 1
-        // harvested from the checkpoint's own action — no second job
-        fsize = obs.get("n_settled").asInstanceOf[Long]
+      val nEdges = raw.count()
+      val width = Fixpoint.widthFor(edges.sparkSession, nEdges)
+      ed = raw.repartition(width, col("src"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ed.count() // materialize from the raw cache, then drop it
+      raw.unpersist(blocking = true)
+      Fixpoint.withLoopConf(edges.sparkSession, width) {
+        // distinct: a caller-supplied source set may repeat a node — the old
+        // union-min fixpoint absorbed that in its groupBy, but the
+        // append-only settled table would carry the duplicate (node, 0) rows
+        // forever. The hop-0 witness (|sources| after dedup) rides the
+        // checkpoint action the same way the loop's does.
+        val obs0 = Observation()
+        dist = Checkpoints.checkpoint(
+          sources.select(col("node"), lit(0L).as("dist")).distinct()
+            .observe(obs0, count(lit(1)).as("n_settled")))
+        var fsize = obs0.get("n_settled").asInstanceOf[Long]
+        var hops = 0
+        while (fsize > 0 && hops < maxHops) {
+          // frontier: a FILTER VIEW over the checkpointed settled table
+          // (dist == h) — one cached scan, zero extra storage. shuffle_hash
+          // hints keep the static planner off SMJ: ed's cached
+          // HashPartitioning(src) side never moves, only the node-sized
+          // frontier/settled tables exchange.
+          val frontier = dist.filter(col("dist") === lit(hops.toLong))
+          val obs = Observation()
+          val fresh = ed.join(frontier.hint("shuffle_hash"),
+              ed("src") === frontier("node"))
+            .select(ed("dst").as("node")).distinct()
+            .join(dist.hint("shuffle_hash"), Seq("node"), "left_anti")
+            .select(col("node"), lit((hops + 1).toLong).as("dist"))
+            .observe(obs, count(lit(1)).as("n_settled"))
+          val next = Checkpoints.checkpoint(dist.unionByName(fresh))
+          // adopt the fresh checkpoint BEFORE releasing the superseded one:
+          // if release (or the observation read below) throws, the finally
+          // block must release the frame that is actually persisted — the
+          // old order left `next` unguarded in that window (round-10
+          // ADVICE).
+          val prev = dist
+          dist = next
+          Checkpoints.release(prev)
+          hops += 1
+          // harvested from the checkpoint's own action — no second job
+          fsize = obs.get("n_settled").asInstanceOf[Long]
+        }
+        completed = true
+        dist
       }
-      completed = true
-      dist
     } finally {
-      ed.unpersist(blocking = true)
+      raw.unpersist(blocking = true) // no-op once the edge cache is built
+      if (ed != null) ed.unpersist(blocking = true)
       if (!completed && dist != null) Checkpoints.release(dist)
-      aqePrior match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      spPrior match {
-        case Some(v) => spark.conf.set(spKey, v)
-        case None => spark.conf.unset(spKey)
-      }
     }
   }
 

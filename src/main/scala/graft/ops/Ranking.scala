@@ -66,22 +66,23 @@ object Ranking {
       .otherwise(lit(-3000L)) // zero sits between the two log ranges
   }
 
-  /** Max rows in any single phase-2 window partition of the most recent
-    * [[withRank]] call — test-visible evidence that the skew sub-split
-    * actually bounded the per-reducer sort (the driver already holds
-    * every partition's count, so this is free bookkeeping).
+  /** A ranked frame plus what the ranking's driver-side passes saw.
+    *
+    * `maxPartitionRows`: max rows in any single phase-2 window partition
+    * — evidence that the skew sub-split actually bounded the per-reducer
+    * sort (the driver already holds every partition's count, so this is
+    * free bookkeeping).
+    *
+    * `fellBack`: [[withRanks]] took the sequential skew fallback. On that
+    * path the input frame is fully consumed DURING the call (the first
+    * dimension's checkpoint materializes from it), so a caller that
+    * checkpointed its input may release it immediately — where the fused
+    * path reads the input lazily through the returned plan and the input
+    * must stay persisted (r18 ADVICE #2: the fallback used to leak the
+    * caller's input checkpoint until ContextCleaner GC).
     */
-  @volatile private[graft] var lastMaxPartitionRows: Long = 0L
-
-  /** True iff the LAST [[withRanks]] call took the sequential skew
-    * fallback. On that path the input frame is fully consumed DURING the
-    * call (the first dimension's checkpoint materializes from it), so a
-    * caller that checkpointed its input may release it immediately —
-    * where the fused path reads the input lazily through the returned
-    * plan and the input must stay persisted (r18 ADVICE #2: the fallback
-    * used to leak the caller's input checkpoint until ContextCleaner GC).
-    */
-  @volatile private[graft] var lastRanksFellBack: Boolean = false
+  final case class Ranked(df: DataFrame, maxPartitionRows: Long,
+      fellBack: Boolean = false)
 
   /** Adds `rankName` (exact 1-based rank within `groupCols`, ordered by
     * (`keyCol` asc/desc, `tieCol` asc — the tie column must make the
@@ -103,13 +104,13 @@ object Ranking {
     * where the repeated value lands on a single grid point and that one
     * sub-bucket inherits the mass. Ranks stay EXACT either way (the
     * sub-bucket is order-preserving and offsets are exact); only the
-    * per-reducer sort bound degrades, and [[lastMaxPartitionRows]]
-    * reports the realized bound after every call so a caller can detect
-    * the case and pre-split such keys upstream.
+    * per-reducer sort bound degrades, and the returned
+    * [[Ranked.maxPartitionRows]] reports the realized bound so a caller
+    * can detect the case and pre-split such keys upstream.
     */
   def withRank(df: DataFrame, groupCols: Seq[String], keyCol: String,
       desc: Boolean, tieCol: String, rankName: String,
-      nName: String, skewThreshold: Long = 1L << 22): DataFrame = {
+      nName: String, skewThreshold: Long = 1L << 22): Ranked = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     require(skewThreshold > 0, "skewThreshold must be positive")
@@ -125,7 +126,7 @@ object Ranking {
     val oversized = countRows
       .filter(_.getAs[Long]("__rc") > skewThreshold)
     if (oversized.isEmpty) {
-      lastMaxPartitionRows =
+      val maxPart =
         if (countRows.isEmpty) 0L
         else countRows.iterator.map(_.getAs[Long]("__rc")).max
       val offRows = countRows.groupBy(r => groupCols.map(r.getAs[Any]))
@@ -157,13 +158,13 @@ object Ranking {
       val w = Window.partitionBy(gb.map(col): _*)
         .orderBy((if (desc) col(keyCol).desc else col(keyCol).asc) ::
           col(tieCol).asc :: Nil: _*)
-      keyed.join(broadcast(offsA), cond, "left")
+      Ranked(keyed.join(broadcast(offsA), cond, "left")
         .withColumn(rankName,
           when(col("__roff").isNull, raise_error(lit(
             "Ranking.withRank: bucket unseen by the count pass — the " +
               "input snapshot changed between phases")))
             .otherwise(col("__roff")) + row_number().over(w))
-        .drop(("__rb" +: "__roff" +: gb.map(c => s"__o_$c")): _*)
+        .drop(("__rb" +: "__roff" +: gb.map(c => s"__o_$c")): _*), maxPart)
     } else {
       withRankSubSplit(df, keyed, countRows, oversized, groupCols, gb,
         keyCol, desc, tieCol, rankName, nName, dCol, skewThreshold)
@@ -190,7 +191,7 @@ object Ranking {
     * sub-bucket machinery handles the split.
     */
   def withRanks(df: DataFrame, dims: Seq[RankDim], tieCol: String,
-      skewThreshold: Long = 1L << 22): DataFrame = {
+      skewThreshold: Long = 1L << 22): Ranked = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     require(dims.nonEmpty, "withRanks: need at least one dimension")
@@ -209,28 +210,26 @@ object Ranking {
     if (cntRows.exists(_.getAs[Long]("c") > skewThreshold)) {
       // sequential fallback, checkpointing between dims like the fused
       // path's single plan makes unnecessary — identical output
-      lastRanksFellBack = true
       var cur = df
       var done = List.empty[DataFrame]
       var maxPart = 0L
       dims.foreach { dim =>
-        val r = Checkpoints.checkpoint(withRank(cur, Nil, dim.keyCol,
-          dim.desc, tieCol, dim.rankName, dim.nName, skewThreshold))
+        val ranked = withRank(cur, Nil, dim.keyCol, dim.desc, tieCol,
+          dim.rankName, dim.nName, skewThreshold)
+        val r = Checkpoints.checkpoint(ranked.df)
         // max ACROSS dims, like the fused path — not just the last call's
         // (r18 ADVICE #2)
-        maxPart = math.max(maxPart, lastMaxPartitionRows)
+        maxPart = math.max(maxPart, ranked.maxPartitionRows)
         done = r :: done
         cur = r
       }
-      lastMaxPartitionRows = maxPart
       // the tail checkpoint stays persisted (the caller reads it lazily);
       // everything BEFORE it — including the caller's input, which the
       // flag hands back to the caller to release — is fully consumed
       done.tail.foreach(Checkpoints.release)
-      return cur
+      return Ranked(cur, maxPart, fellBack = true)
     }
-    lastRanksFellBack = false
-    lastMaxPartitionRows =
+    val maxPart =
       if (cntRows.isEmpty) 0L
       else cntRows.iterator.map(_.getAs[Long]("c")).max
     var out = keyed
@@ -262,7 +261,7 @@ object Ranking {
             .otherwise(col(s"__roff_$i")) + row_number().over(w))
         .drop(s"__ob_$i", s"__roff_$i")
     }
-    out.drop(dims.indices.map(i => s"__rb_$i"): _*)
+    Ranked(out.drop(dims.indices.map(i => s"__rb_$i"): _*), maxPart)
   }
 
   /** The skew path: oversized (group, bucket) cells get a second-level
@@ -278,7 +277,7 @@ object Ranking {
       oversized: Array[org.apache.spark.sql.Row], groupCols: Seq[String],
       gb: Seq[String], keyCol: String, desc: Boolean, tieCol: String,
       rankName: String, nName: String, dCol: Column,
-      skewThreshold: Long): DataFrame = {
+      skewThreshold: Long): Ranked = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
       StructType}
@@ -346,7 +345,7 @@ object Ranking {
     val sub2 = counts2.groupBy(r =>
         (groupCols.map(r.getAs[Any]), r.getAs[Long]("__rb")))
       .map { case (k, rs) => k -> rs.sortBy(_.getAs[Long]("__rb2")) }
-    lastMaxPartitionRows = (
+    val maxPart = (
       countRows.iterator.filter(_.getAs[Long]("__rc") <= skewThreshold)
         .map(_.getAs[Long]("__rc")) ++
       counts2.iterator.map(_.getAs[Long]("__rc"))).foldLeft(0L)(math.max)
@@ -393,13 +392,14 @@ object Ranking {
     val w = Window.partitionBy(gb2.map(col): _*)
       .orderBy((if (desc) col(keyCol).desc else col(keyCol).asc) ::
         col(tieCol).asc :: Nil: _*)
-    keyed2.join(broadcast(offsA), cond, "left")
+    Ranked(keyed2.join(broadcast(offsA), cond, "left")
       .withColumn(rankName,
         when(col("__roff").isNull, raise_error(lit(
           "Ranking.withRank: bucket unseen by the count pass — the " +
             "input snapshot changed between phases")))
           .otherwise(col("__roff")) + row_number().over(w))
-      .drop(("__rb" +: "__rb2" +: "__roff" +: gb2.map(c => s"__o_$c")): _*)
+      .drop(("__rb" +: "__rb2" +: "__roff" +: gb2.map(c => s"__o_$c")): _*),
+      maxPart)
   }
 
   /** NTILE(k) as a closed form of (rank, n) — the exact SQL-standard

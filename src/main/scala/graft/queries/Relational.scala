@@ -567,30 +567,21 @@ object Relational {
       .orderBy(col("split"))
   }
 
-  /** Trained GBT model per sfDir — the trained-model oracle contract of
-    * TextQueries.lastBpeModel: the queries memoize the model here and
-    * SparkEntry generates the DuckDB training-replay / scoring oracles
-    * from it; Verify asserts the cached dir matches the dumped dir.
+  /** Trained GBT model per sfDir, memoized — the model is a pure
+    * function of the dir's data. The GBT rows take the model as an
+    * argument; SparkEntry fetches it here and generates the DuckDB
+    * training-replay / scoring oracles from the same value.
     */
-  @volatile private[graft] var lastGbtModel: Option[(String, graft.ops.Gbt.Model)] = None
-
-  /** True iff the GBT model cache (if populated) was trained on `dir`. */
-  private[graft] def gbtModelConsistentWith(dir: String): Boolean =
-    lastGbtModel.forall(_._1 == dir)
-
   private val gbtMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Gbt.Model]()
 
-  private[graft] def gbtTrainOrGet(spark: SparkSession, dir: String): graft.ops.Gbt.Model = {
-    val m = gbtMemo.computeIfAbsent(dir, _ => {
+  private[graft] def gbtTrainOrGet(spark: SparkSession, dir: String): graft.ops.Gbt.Model =
+    gbtMemo.computeIfAbsent(dir, _ => {
       import graft.ops.{Checkpoints, Gbt}
       val tr = Checkpoints.checkpoint(
         Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
       try Gbt.train(tr) finally Checkpoints.release(tr)
     })
-    lastGbtModel = Some((dir, m))
-    m
-  }
 
   /** BOOSTED-TREE regression eval (round 16 — ML_ROADMAP.md Phase 2.2/4,
     * the Kibana DFA *Regression* twin the OLS pair couldn't be): train
@@ -606,9 +597,9 @@ object Relational {
     * integer/decimal domains), closed-form double arithmetic only at
     * the end, written identically in the model-inlined oracle.
     */
-  def qGbtRegression(spark: SparkSession, dir: String): DataFrame = {
+  def qGbtRegression(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
-    val m = gbtTrainOrGet(spark, dir)
     scoreEval(Gbt.featurize(Tables.part(spark, dir), dir), Gbt.fhatCol(m))
   }
 
@@ -623,10 +614,10 @@ object Relational {
     * gain/argmax — so a single diverged split decision anywhere in
     * training hash-fails the row set.
     */
-  def qGbtImportance(spark: SparkSession, dir: String): DataFrame = {
+  def qGbtImportance(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
     import spark.implicits._
-    val m = gbtTrainOrGet(spark, dir)
     // a stump-less model would make share = 0/0 = NaN here and leave the
     // generated replay oracle syntactically invalid — train() already
     // requires a non-empty slice, so an empty model means the planted
@@ -646,28 +637,19 @@ object Relational {
       .orderBy(col("feature"))
   }
 
-  /** Trained depth-2 TREE model per sfDir — same trained-model oracle
-    * contract as [[lastGbtModel]]. */
-  @volatile private[graft] var lastGbtTreeModel: Option[(String, graft.ops.Gbt.TreeModel)] = None
-
-  /** True iff the tree-model cache (if populated) was trained on `dir`. */
-  private[graft] def gbtTreeModelConsistentWith(dir: String): Boolean =
-    lastGbtTreeModel.forall(_._1 == dir)
-
+  /** Trained depth-2 TREE model per sfDir — memoized like
+    * [[gbtTrainOrGet]]. */
   private val gbtTreeMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Gbt.TreeModel]()
 
   private[graft] def gbtTreeTrainOrGet(spark: SparkSession,
-      dir: String): graft.ops.Gbt.TreeModel = {
-    val m = gbtTreeMemo.computeIfAbsent(dir, _ => {
+      dir: String): graft.ops.Gbt.TreeModel =
+    gbtTreeMemo.computeIfAbsent(dir, _ => {
       import graft.ops.{Checkpoints, Gbt}
       val tr = Checkpoints.checkpoint(
         Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
       try Gbt.trainTree(tr) finally Checkpoints.release(tr)
     })
-    lastGbtTreeModel = Some((dir, m))
-    m
-  }
 
   /** DEPTH-2 BOOSTED TREES (round 17 — r16 verdict #3: Kibana DFA grows
     * real trees; stumps cannot express the planted p_size × mod
@@ -682,10 +664,10 @@ object Relational {
     * two-level induction hash-fails the row set. Round17Spec pins the
     * tree model's train SSE strictly below the stump model's.
     */
-  def qGbtTree(spark: SparkSession, dir: String): DataFrame = {
+  def qGbtTree(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.TreeModel): DataFrame = {
     import graft.ops.Gbt
     import spark.implicits._
-    val m = gbtTreeTrainOrGet(spark, dir)
     require(m.trees.nonEmpty,
       "qGbtTree: the trained model has zero trees — no valid root split " +
         "existed, which the planted signal should make impossible")
@@ -703,15 +685,20 @@ object Relational {
       .orderBy(col("feature"))
   }
 
-  /** Trained depth-3 model per sfDir — the [[lastGbtModel]] oracle
-    * contract for the generic-depth trainer. */
-  @volatile private[graft] var lastDeepModel: Option[(String, graft.ops.Gbt.DeepModel)] = None
-
-  private[graft] def deepModelConsistentWith(dir: String): Boolean =
-    lastDeepModel.forall(_._1 == dir)
-
+  /** Trained depth-3 model per sfDir from the generic-depth trainer —
+    * memoized like [[gbtTrainOrGet]]. */
   private val gbtDeepMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Gbt.DeepModel]()
+
+  private[graft] def gbtDeepTrainOrGet(spark: SparkSession,
+      dir: String): graft.ops.Gbt.DeepModel =
+    gbtDeepMemo.computeIfAbsent(dir, _ => {
+      import graft.ops.{Checkpoints, Gbt}
+      val tr = Checkpoints.checkpoint(
+        Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
+      try Gbt.trainDepth(tr, rounds = Gbt.TreeRounds, depth = 3)
+      finally Checkpoints.release(tr)
+    })
 
   /** DEPTH-3 BOOSTED TREES through the GENERIC trainer (round 18 — the
     * production proof of the r17 verdict's #6 ask: depth is a
@@ -725,16 +712,9 @@ object Relational {
     * nested-CASE scoring replay, so any routing or leaf-delta defect
     * at any of the three levels hash-fails.
     */
-  def qGbtDepth3(spark: SparkSession, dir: String): DataFrame = {
+  def qGbtDepth3(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.DeepModel): DataFrame = {
     import graft.ops.Gbt
-    val m = gbtDeepMemo.computeIfAbsent(dir, _ => {
-      import graft.ops.Checkpoints
-      val tr = Checkpoints.checkpoint(
-        Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
-      try Gbt.trainDepth(tr, rounds = Gbt.TreeRounds, depth = 3)
-      finally Checkpoints.release(tr)
-    })
-    lastDeepModel = Some((dir, m))
     scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
         Gbt.fhatColDeep(m))
       .select(lit(3L).as("depth"), lit(m.trees.length.toLong).as("n_trees"),
@@ -742,23 +722,24 @@ object Relational {
       .orderBy(col("split"))
   }
 
-  /** Lake root of the LAST qModelServe publish — test hook so the spec
-    * can re-serve from the same store and pin "serving never retrains".
-    */
-  @volatile private[graft] var lastModelRoot: Option[String] = None
-
   /** The "yesterday" model of the registry rows — trained on the even
     * half of the train slice, memoized per sfDir (qModelServe publishes
     * it as the stale v1; qModelRollback pins and serves it). */
   private val gbtHalfMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (graft.ops.Gbt.Model, Long)]()
 
-  /** Model served by the LAST qModelRollback — trained-model oracle
-    * contract like [[lastGbtModel]]. */
-  @volatile private[graft] var lastRollbackModel: Option[(String, graft.ops.Gbt.Model)] = None
+  /** The two versions of one model class the registry rows publish:
+    * `stale` (yesterday's, trained on the even half of the train slice,
+    * recorded with its `staleN` training rows) and `fresh` (the full
+    * train slice).
+    */
+  final case class Versions[M](stale: M, staleN: Long, fresh: M)
 
-  private[graft] def rollbackModelConsistentWith(dir: String): Boolean =
-    lastRollbackModel.forall(_._1 == dir)
+  private[graft] def gbtVersionsFor(spark: SparkSession,
+      dir: String): Versions[graft.ops.Gbt.Model] = {
+    val (stale, staleN) = gbtHalfTrainOrGet(spark, dir)
+    Versions(stale, staleN, gbtTrainOrGet(spark, dir))
+  }
 
   private[graft] def gbtHalfTrainOrGet(spark: SparkSession,
       dir: String): (graft.ops.Gbt.Model, Long) =
@@ -775,23 +756,23 @@ object Relational {
     * version-addressed read every model registry offers): both
     * versions are published, then serving resolves v1 by VERSION
     * (time travel on the registry table, bypassing the manifest) and
-    * scores with it. The oracle inlines the v1 (half-trained) model —
-    * a rollback that silently serves the manifest-current v2, or a
-    * version read returning the wrong artifact, hash-fails the scores;
+    * scores with it. The oracle inlines the in-session v1 (half-trained)
+    * model — a rollback that silently serves the manifest-current v2, or
+    * a version read returning the wrong artifact, hash-fails the scores;
     * the evidence literals pin served_version/n_versions. Scale: same
     * catalog-sized artifact reads as q_model_serve.
     */
-  def qModelRollback(spark: SparkSession, dir: String): DataFrame = {
+  def qModelRollback(spark: SparkSession, dir: String,
+      models: Versions[graft.ops.Gbt.Model],
+      root: String = DatalakeQueries.tempLakeRoot() + "/gbt_model_rollback")
+      : DataFrame = {
     import graft.ops.Gbt
     import graft.sources.Datalake
-    val root = DatalakeQueries.tempLakeRoot() + "/gbt_model_rollback"
-    val (half, halfN) = gbtHalfTrainOrGet(spark, dir)
-    Datalake.publish(Gbt.modelToDf(spark, half, halfN), root, "1")
-    val fresh = gbtTrainOrGet(spark, dir)
-    Datalake.publish(Gbt.modelToDf(spark, fresh, 0L), root, "2")
+    Datalake.publish(Gbt.modelToDf(spark, models.stale, models.staleN),
+      root, "1")
+    Datalake.publish(Gbt.modelToDf(spark, models.fresh, 0L), root, "2")
     // the incident: serve the PINNED v1, not the manifest-current v2
     val (rolled, _) = Gbt.modelFromDf(Datalake.readVersion(spark, root, "1"))
-    lastRollbackModel = Some((dir, rolled))
     val nVersions = Datalake.listVersions(spark, root).length.toLong
     scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
         Gbt.fhatCol(rolled))
@@ -825,35 +806,34 @@ object Relational {
     *     train slice) — yesterday's artifact;
     *  2. the serving job's freshness gate compares the artifact's
     *     recorded n_train against the live train count — mismatch ⇒
-    *     retrain on the full slice and REPUBLISH as v2 (the
+    *     REPUBLISH the full-slice model (`models.fresh`) as v2 (the
     *     q_ann_ivf_retrain republish discipline, deterministic at any
     *     SF because the halves genuinely differ in size);
     *  3. scoring reads the manifest-current artifact back from the
     *     store and never touches the trainer ([[scoreFromStore]]).
     *
     * The oracle is the model-INLINED scoring replay built from the
-    * in-session trained model plus the version-evidence literals: a
+    * in-session fresh model plus the version-evidence literals: a
     * lossy publish→read round trip, a refresh gate that fails to fire
     * (serving the stale v1), or a manifest pointing at the wrong
     * version all hash-fail. Scale: the artifact is rounds+1 rows —
     * publish and resolve are catalog-sized; scoring is the one scan
-    * it always was.
+    * it always was. `root` is the model store's lake root.
     */
-  def qModelServe(spark: SparkSession, dir: String): DataFrame = {
+  def qModelServe(spark: SparkSession, dir: String,
+      models: Versions[graft.ops.Gbt.Model],
+      root: String = DatalakeQueries.tempLakeRoot() + "/gbt_model")
+      : DataFrame = {
     import graft.ops.Gbt
     import graft.sources.Datalake
-    val root = DatalakeQueries.tempLakeRoot() + "/gbt_model"
-    lastModelRoot = Some(root)
-    val (stale, halfN) = gbtHalfTrainOrGet(spark, dir)
-    Datalake.publish(Gbt.modelToDf(spark, stale, halfN), root, "1")
+    Datalake.publish(Gbt.modelToDf(spark, models.stale, models.staleN),
+      root, "1")
     // the serving job's freshness gate: stored n_train vs live count
     val liveN = Gbt.featurize(Tables.part(spark, dir), dir)
       .filter(col("is_train")).count()
     val (_, storedN) = Gbt.modelFromDf(Datalake.readPublished(spark, root))
-    if (storedN != liveN) {
-      val fresh = gbtTrainOrGet(spark, dir)
-      Datalake.publish(Gbt.modelToDf(spark, fresh, liveN), root, "2")
-    }
+    if (storedN != liveN)
+      Datalake.publish(Gbt.modelToDf(spark, models.fresh, liveN), root, "2")
     val nVersions = Datalake.listVersions(spark, root).length.toLong
     val version = Datalake.currentVersion(spark, root).getOrElse("?")
     val nStumps = graft.ops.Gbt.modelFromDf(
@@ -907,6 +887,12 @@ object Relational {
       try (Gbt.trainTree(half), half.count()) finally Checkpoints.release(half)
     })
 
+  private[graft] def gbtTreeVersionsFor(spark: SparkSession,
+      dir: String): Versions[graft.ops.Gbt.TreeModel] = {
+    val (stale, staleN) = gbtTreeHalfTrainOrGet(spark, dir)
+    Versions(stale, staleN, gbtTreeTrainOrGet(spark, dir))
+  }
+
   /** Pure store-side TREE serving step — the depth-2 twin of
     * [[scoreFromStore]]: resolve the manifest-current tree artifact and
     * score with it, NO training anywhere on this path (Round18Spec pins
@@ -921,10 +907,6 @@ object Relational {
     scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
       Gbt.fhatColTree(served))
   }
-
-  /** Lake root of the LAST qModelServeTree publish — test hook, the
-    * [[lastModelRoot]] contract for the tree registry. */
-  @volatile private[graft] var lastTreeModelRoot: Option[String] = None
 
   /** TREE-MODEL REGISTRY (round 18 — r17 verdict #1: the registry
     * lifecycle could round-trip only stumps, so the BEST model class the
@@ -943,21 +925,21 @@ object Relational {
     * Scale: the artifact is rounds+1 rows; publish/resolve are
     * catalog-sized; scoring is the one scan it always was.
     */
-  def qModelServeTree(spark: SparkSession, dir: String): DataFrame = {
+  def qModelServeTree(spark: SparkSession, dir: String,
+      models: Versions[graft.ops.Gbt.TreeModel],
+      root: String = DatalakeQueries.tempLakeRoot() + "/gbt_tree_model")
+      : DataFrame = {
     import graft.ops.Gbt
     import graft.sources.Datalake
-    val root = DatalakeQueries.tempLakeRoot() + "/gbt_tree_model"
-    lastTreeModelRoot = Some(root)
-    val (stale, halfN) = gbtTreeHalfTrainOrGet(spark, dir)
-    Datalake.publish(Gbt.treeModelToDf(spark, stale, halfN), root, "1")
+    Datalake.publish(Gbt.treeModelToDf(spark, models.stale, models.staleN),
+      root, "1")
     val liveN = Gbt.featurize(Tables.part(spark, dir), dir)
       .filter(col("is_train")).count()
     val (_, storedN) =
       Gbt.treeModelFromDf(Datalake.readPublished(spark, root))
-    if (storedN != liveN) {
-      val fresh = gbtTreeTrainOrGet(spark, dir)
-      Datalake.publish(Gbt.treeModelToDf(spark, fresh, liveN), root, "2")
-    }
+    if (storedN != liveN)
+      Datalake.publish(Gbt.treeModelToDf(spark, models.fresh, liveN),
+        root, "2")
     val nVersions = Datalake.listVersions(spark, root).length.toLong
     val version = Datalake.currentVersion(spark, root).getOrElse("?")
     val nTrees = Gbt.treeModelFromDf(
@@ -968,14 +950,6 @@ object Relational {
         col("split"), col("n"), col("rmse"), col("r2"))
       .orderBy(col("split"))
   }
-
-  /** The (full, half) stump models the LAST qModelAlias served —
-    * trained-model oracle contract like [[lastGbtModel]]. */
-  @volatile private[graft] var lastAliasModels:
-    Option[(String, (graft.ops.Gbt.Model, graft.ops.Gbt.Model))] = None
-
-  private[graft] def aliasModelsConsistentWith(dir: String): Boolean =
-    lastAliasModels.forall(_._1 == dir)
 
   /** MODEL-REGISTRY ALIAS STAGING (round 18 — r17 verdict #5:
     * qModelRollback pins a version by NUMBER, but production registries
@@ -993,15 +967,14 @@ object Relational {
     * rows. Round18Spec pins that a dangling alias fails loudly and that
     * re-pointing one alias leaves the others intact.
     */
-  def qModelAlias(spark: SparkSession, dir: String): DataFrame = {
+  def qModelAlias(spark: SparkSession, dir: String,
+      models: Versions[graft.ops.Gbt.Model]): DataFrame = {
     import graft.ops.Gbt
     import graft.sources.Datalake
     val root = DatalakeQueries.tempLakeRoot() + "/gbt_model_alias"
-    val (half, halfN) = gbtHalfTrainOrGet(spark, dir)
-    val full = gbtTrainOrGet(spark, dir)
-    lastAliasModels = Some((dir, (full, half)))
-    Datalake.publish(Gbt.modelToDf(spark, half, halfN), root, "1")
-    Datalake.publish(Gbt.modelToDf(spark, full, 0L), root, "2")
+    Datalake.publish(Gbt.modelToDf(spark, models.stale, models.staleN),
+      root, "1")
+    Datalake.publish(Gbt.modelToDf(spark, models.fresh, 0L), root, "2")
     // promotion: prod → v2, the superseded champion stays addressable
     Datalake.writeAlias(spark, root, "prod", "2")
     Datalake.writeAlias(spark, root, "challenger", "1")
@@ -1039,9 +1012,9 @@ object Relational {
     * per half. The oracle replays qhat with the identical cumulative-
     * count rule over the same inlined model.
     */
-  def qConformalInterval(spark: SparkSession, dir: String): DataFrame = {
+  def qConformalInterval(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
-    val m = gbtTrainOrGet(spark, dir)
     val scored = Gbt.featurize(Tables.part(spark, dir), dir)
       .filter(!col("is_train"))
       .select(col("pk"), col("y"), Gbt.fhatCol(m).as("fhat"))
@@ -1843,7 +1816,7 @@ object Relational {
     // returned frame's rank phases read it lazily — blocks live until
     // ContextCleaner collects the unreferenced frame (r16 ADVICE note)
     Ranking.withRank(joined, Seq("c_mktsegment"), "spend", desc = true,
-        tieCol = "c_custkey", rankName = "__rk", nName = "__n")
+        tieCol = "c_custkey", rankName = "__rk", nName = "__n").df
       .select(col("c_custkey"), col("c_mktsegment"), col("spend"),
         col("n_orders"),
         Ranking.ntileOf(col("__rk"), col("__n"), 4).cast("bigint")
@@ -2067,8 +2040,8 @@ object Relational {
     // instead of leaking its blocks until ContextCleaner GC (r18 ADVICE
     // #2); on the fused path the returned plan reads cp0 lazily and it
     // must stay persisted (the deliberate non-release above).
-    if (Ranking.lastRanksFellBack) Checkpoints.release(cp0)
-    ranked
+    if (ranked.fellBack) Checkpoints.release(cp0)
+    ranked.df
       .select(col("o_custkey"), col("r_days"), col("f_orders"),
         col("m_total"),
         Ranking.ntileOf(col("__rk_r"), col("__n"), 5).as("r_q"),

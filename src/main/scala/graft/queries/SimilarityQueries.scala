@@ -158,45 +158,6 @@ object SimilarityQueries {
       .orderBy(col("id"))
   }
 
-  /** Trained centroids of the LAST qAnnIvf invocation, for oracle
-    * generation: float-mean training isn't bit-stable ACROSS engines, but
-    * the trained model is just data — SparkEntry.oracleSql inlines these
-    * exact values as literals into generated DuckDB SQL (the lshOracle
-    * pattern), so assignment+probe+topk replays exactly. Verify runs every
-    * query before dumping oracle_sql.json, so the cache is always populated
-    * with the model the dumped parquet was computed from. Each cache
-    * carries the sfDir it was trained on; [[modelsConsistentWith]] lets
-    * Verify assert the dumped oracles belong to the dumped parquet (a
-    * model trained on a DIFFERENT sfDir would generate a desynced oracle).
-    */
-  @volatile private[graft] var lastIvfModel: Option[(String, Array[Array[Float]])] = None
-
-  /** Centroid model the LAST qHybridServe vector leg served — same
-    * oracle-generation contract as [[lastIvfModel]] (it is the same
-    * memoized centroidsFor model; a separate cache var keeps the hybrid
-    * oracle independent of whether q_ann_ivf ran). */
-  @volatile private[graft] var lastHybridIvfModel:
-    Option[(String, Array[Array[Float]])] = None
-
-  /** True iff every populated model cache was trained on `dir`. */
-  private[graft] def modelsConsistentWith(dir: String): Boolean =
-    (lastIvfModel.iterator.map(_._1) ++
-      lastHybridIvfModel.iterator.map(_._1) ++
-      lastRetrainModel.iterator.map(_._1) ++
-      lastIvfQModel.iterator.map(_._1) ++
-      lastPqModel.iterator.map(_._1) ++
-      lastIvfPqModel.iterator.map(_._1) ++
-      lastIvfPqResModel.iterator.map(_._1) ++
-      lastSemModel.iterator.map(_._1) ++
-      lastPcaModel.iterator.map(_._1) ++
-      lastOpqModel.iterator.map(_._1) ++
-      lastIvfPcaModel.iterator.map(_._1)).forall(_ == dir)
-
-  /** PCA model of the LAST qPcaProject invocation — same oracle-generation
-    * contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastPcaModel:
-    Option[(String, graft.ops.Pca.PcaModel)] = None
-
   /** Trained-PCA memo per sfDir (the centroidCache discipline: the model
     * is a pure function of the dir's corpus, training is two aggregate
     * jobs + a bounded eigen step — once per JVM is enough).
@@ -204,17 +165,11 @@ object SimilarityQueries {
   private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
     String, graft.ops.Pca.PcaModel]()
 
-  /** PCA projection of the embedding corpus onto its top-4 principal
-    * axes (round 10 — the dimensionality-reduction pass: compress a
-    * stored embedding column, decorrelate before clustering, 2-D corpus
-    * maps). Training is the deterministic two-pass mean/scatter
-    * aggregation (one d(d+1)/2 buffer per partition — ops.Pca scaladoc
-    * for the 100 TB argument) + cyclic Jacobi on the driver; the
-    * projection is a pure codegen scan whose 64-term left-associated
-    * multiply-add chains render IDENTICALLY in the generated DuckDB
-    * oracle with the trained model inlined as literals — trained-model
-    * hash-exactness, the q_ann_ivf pattern.
-    */
+  private[graft] def pcaModelFor(spark: SparkSession,
+      dir: String): graft.ops.Pca.PcaModel =
+    pcaCache.computeIfAbsent(dir, _ => graft.ops.Pca.train(
+      Tables.embeddings(spark, dir), "embedding", dim = 64, k = 4))
+
   /** INT8 quantization as a DRIVER row (round 10 — closes §2's last
     * spec-only entry): every embedding goes through the real codegen
     * kernels `vec_quantize` → `vec_dequantize` (VectorExprs), emitting
@@ -250,15 +205,22 @@ object SimilarityQueries {
       .orderBy(col("vec_id"))
   }
 
-  def qPcaProject(spark: SparkSession, dir: String): DataFrame = {
-    val embs = Tables.embeddings(spark, dir)
-    val model = pcaCache.computeIfAbsent(dir,
-      _ => graft.ops.Pca.train(embs, "embedding", dim = 64, k = 4))
-    lastPcaModel = Some((dir, model))
-    embs.select(col("vec_id") +:
+  /** PCA projection of the embedding corpus onto its top-4 principal
+    * axes (round 10 — the dimensionality-reduction pass: compress a
+    * stored embedding column, decorrelate before clustering, 2-D corpus
+    * maps). Training is the deterministic two-pass mean/scatter
+    * aggregation (one d(d+1)/2 buffer per partition — ops.Pca scaladoc
+    * for the 100 TB argument) + cyclic Jacobi on the driver; the
+    * projection is a pure codegen scan whose 64-term left-associated
+    * multiply-add chains render IDENTICALLY in the generated DuckDB
+    * oracle with the trained model inlined as literals — trained-model
+    * hash-exactness, the q_ann_ivf pattern.
+    */
+  def qPcaProject(spark: SparkSession, dir: String,
+      model: graft.ops.Pca.PcaModel): DataFrame =
+    Tables.embeddings(spark, dir).select(col("vec_id") +:
         graft.ops.Pca.projectionCols(col("embedding"), model): _*)
       .orderBy(col("vec_id"))
-  }
 
   val IvfK = 5
   val IvfNProbe = 4
@@ -269,6 +231,13 @@ object SimilarityQueries {
     * once per dir removes two full k-means trainings and their count()
     * scans from every Verify/bench sweep. The model is a pure function of
     * the dir's corpus, so cache staleness is not a concern in one JVM.
+    *
+    * The trained models are plain values: the registry (SparkEntry)
+    * fetches one through an accessor like [[centroidsFor]], passes it to
+    * the query as an argument and renders the row's DuckDB oracle from
+    * the same value, inlining it as literals (the lshOracle pattern) —
+    * float-mean training isn't bit-stable ACROSS engines, but the model
+    * is just data, so assignment+probe+topk replays exactly.
     */
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
@@ -279,11 +248,6 @@ object SimilarityQueries {
       Similarity.trainCentroids(c,
         nCells = Similarity.cellsFor(c.count()), iters = 2)
     })
-
-  /** Retrained model of the LAST qAnnIvfRetrain invocation — same
-    * oracle-generation contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastRetrainModel:
-    Option[(String, Array[Array[Float]])] = None
 
   private val retrainCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
@@ -311,6 +275,28 @@ object SimilarityQueries {
       array((0 until 64).map(i =>
         lit(0.05f) + lit(0.3f) * col("emb").getItem(i)): _*).as("emb"))
 
+  /** The retrain row's model step: the drift gate's verdict and the
+    * centroids it selects. The gate monitors where the INCREMENT lands
+    * in the CURRENT index — the signal that actually predicts recall
+    * loss (a mirrored corpus has identical coordinate histograms but
+    * lands in different cells). Stale model kept under no-drift, retrain
+    * on base ∪ increment past threshold (deterministic: same trainer,
+    * same seed sample discipline as centroidsFor).
+    */
+  private[graft] def retrainModelFor(spark: SparkSession,
+      dir: String): (Boolean, Array[Array[Float]]) = {
+    val base = corpus(spark, dir)
+    val inc = driftedIncrement(base)
+    val drifted =
+      Similarity.assignmentPsi(base, inc, centroidsFor(spark, dir)) > 0.2
+    if (!drifted) (false, centroidsFor(spark, dir))
+    else (true, retrainCache.computeIfAbsent(dir, _ => {
+      val full = base.unionByName(inc)
+      Similarity.trainCentroids(full,
+        nCells = Similarity.cellsFor(full.count()), iters = 2)
+    }))
+  }
+
   /** ANN INDEX MAINTENANCE UNDER DRIFT (round 14 — r13 verdict #7: the
     * IVF coarse quantizer was frozen at train time with no recovery path
     * when the embedding distribution moves). The full maintenance loop
@@ -332,26 +318,15 @@ object SimilarityQueries {
     * Lloyd pass as the original build (bounded driver model); the
     * republish is one directory write + manifest PUT. Nothing here is
     * per-query work — it's the hourly/daily maintenance job.
+    *
+    * `model` is [[retrainModelFor]]'s (drift detected, centroids served).
     */
-  def qAnnIvfRetrain(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnIvfRetrain(spark: SparkSession, dir: String,
+      model: (Boolean, Array[Array[Float]])): DataFrame = {
+    val (drifted, cents) = model
     val base = corpus(spark, dir)
     val inc = driftedIncrement(base)
-    // the gate monitors where the INCREMENT lands in the CURRENT index —
-    // the signal that actually predicts recall loss (a mirrored corpus
-    // has identical coordinate histograms but lands in different cells)
-    val psi = Similarity.assignmentPsi(base, inc, centroidsFor(spark, dir))
-    val drifted = psi > 0.2
     val full = base.unionByName(inc)
-    // the gate decides: stale model kept under no-drift, retrain on
-    // base ∪ increment past threshold (deterministic: same trainer,
-    // same seed sample discipline as centroidsFor)
-    val cents =
-      if (drifted)
-        retrainCache.computeIfAbsent(dir, _ =>
-          Similarity.trainCentroids(full,
-            nCells = Similarity.cellsFor(full.count()), iters = 2))
-      else centroidsFor(spark, dir)
-    lastRetrainModel = Some((dir, cents))
     val root = DatalakeQueries.tempLakeRoot() + "/ivf_store"
     Datalake.publish(base, root, "1")
     Datalake.publish(full, root, "2")
@@ -370,19 +345,14 @@ object SimilarityQueries {
     * with the corpus (√n — Similarity.cellsFor) so the within-cell
     * candidate population stays bounded as the corpus grows.
     */
-  def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnIvf(spark: SparkSession, dir: String,
+      cents: Array[Array[Float]]): DataFrame = {
     val c = corpus(spark, dir)
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    val cents = centroidsFor(spark, dir)
-    lastIvfModel = Some((dir, cents))
     Similarity.ivfFlatKnnWith(c, queries, cents, k = IvfK, nProbe = IvfNProbe)
       .orderBy(col("query_id"), col("rank"))
   }
-
-  /** Centroid model of the LAST qAnnIvfQuantized invocation — same
-    * oracle-generation contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastIvfQModel: Option[(String, Array[Array[Float]])] = None
 
   /** IVF over the int8-QUANTIZED store — the true 100 TB serving path:
     * the corpus scan reads dim+4 bytes per vector (4x less IO), cell
@@ -393,12 +363,11 @@ object SimilarityQueries {
     * (SparkEntry.ivfQuantOracle); recall ≥ 0.95 vs the float IVF is
     * pinned in SimilaritySpec.
     */
-  def qAnnIvfQuantized(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnIvfQuantized(spark: SparkSession, dir: String,
+      cents: Array[Array[Float]]): DataFrame = {
     val c = corpus(spark, dir)
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    val cents = centroidsFor(spark, dir)
-    lastIvfQModel = Some((dir, cents))
     Similarity.ivfFlatKnnQuantized(Similarity.quantizeCorpus(c), queries,
         cents, k = IvfK, nProbe = IvfNProbe)
       .orderBy(col("query_id"), col("rank"))
@@ -415,13 +384,12 @@ object SimilarityQueries {
     * registered quantized serve (CorpusStreamSpec); the DuckDB oracle is
     * q_ann_ivf_quantized's trained-centroid replay verbatim.
     */
-  def qStreamIvfIngest(spark: SparkSession, dir: String): DataFrame = {
+  def qStreamIvfIngest(spark: SparkSession, dir: String,
+      cents: Array[Array[Float]]): DataFrame = {
     import java.nio.file.Files
     val c = corpus(spark, dir)
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    val cents = centroidsFor(spark, dir)
-    lastIvfQModel = Some((dir, cents))
     val root = Files.createTempDirectory("graft-ivf-replay")
     graft.streaming.StreamReplay.track(root)
     val feed = root.resolve("feed").toString
@@ -440,10 +408,6 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Trained PQ codebook of the LAST qAnnPq invocation — same
-    * oracle-generation contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastPqModel: Option[(String, graft.ops.Pq.PqModel)] = None
-
   val PqK = 5
   val PqShortlist = 64
 
@@ -455,7 +419,7 @@ object SimilarityQueries {
   private val pqModelCache =
     new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Pq.PqModel]()
 
-  private def pqModelFor(spark: SparkSession, dir: String): graft.ops.Pq.PqModel =
+  private[graft] def pqModelFor(spark: SparkSession, dir: String): graft.ops.Pq.PqModel =
     pqModelCache.computeIfAbsent(dir, _ =>
       graft.ops.Pq.train(corpus(spark, dir), col("emb"), m = 8, ksub = 16,
         iters = 2))
@@ -466,11 +430,10 @@ object SimilarityQueries {
     * trained-codebook inlining (SparkEntry.pqOracle); recall vs exact L2
     * additionally asserted in SimilaritySpec.
     */
-  def qAnnPq(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnPq(spark: SparkSession, dir: String,
+      model: graft.ops.Pq.PqModel): DataFrame = {
     import graft.ops.Pq
     val c = corpus(spark, dir)
-    val model = pqModelFor(spark, dir)
-    lastPqModel = Some((dir, model))
     val encoded = Pq.encodeCorpus(c, col("emb"), model).drop("emb")
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
@@ -478,12 +441,6 @@ object SimilarityQueries {
         shortlist = PqShortlist)
       .orderBy(col("query_id"), col("rank"))
   }
-
-  /** Model of the LAST qAnnIvfPca invocation (PCA mean + k×d projection +
-    * centroids trained on the projected vectors) — same oracle-generation
-    * contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastIvfPcaModel: Option[(String,
-    (Array[Double], Array[Double], Array[Array[Float]]))] = None
 
   /** Serving dimensionality of the PCA-compressed IVF path. */
   val PcaServeDims = 16
@@ -494,12 +451,13 @@ object SimilarityQueries {
   /** Per-dir PCA-compressed-IVF memo: the 64→16 projection is the trained
     * PCA's top axes (pure function of the corpus), and the coarse
     * quantizer is the SAME deterministic Lloyd as centroidsFor run on the
-    * projected column.
+    * projected column. The model is (PCA mean, row-major k×d projection,
+    * centroids trained on the projected vectors).
     */
   private val ivfPcaCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Double], Array[Double], Array[Array[Float]])]()
 
-  private def ivfPcaModelFor(spark: SparkSession, dir: String)
+  private[graft] def ivfPcaModelFor(spark: SparkSession, dir: String)
       : (Array[Double], Array[Double], Array[Array[Float]]) =
     ivfPcaCache.computeIfAbsent(dir, _ => {
       val c = corpus(spark, dir)
@@ -530,10 +488,10 @@ object SimilarityQueries {
     * snapped-grid projection replay + shared IVF fragments + full-dim
     * rerank tail (SparkEntry.ivfPcaOracle).
     */
-  def qAnnIvfPca(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnIvfPca(spark: SparkSession, dir: String,
+      model: (Array[Double], Array[Double], Array[Array[Float]])): DataFrame = {
     val c = corpus(spark, dir)
-    val (mean, proj, cents) = ivfPcaModelFor(spark, dir)
-    lastIvfPcaModel = Some((dir, (mean, proj, cents)))
+    val (mean, proj, cents) = model
     val reduced = c.select(col("id"),
       org.apache.spark.sql.graft.VectorColumns
         .opqRotate(col("emb"), mean, proj).as("emb"))
@@ -548,12 +506,6 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Model of the LAST qAnnOpq invocation (rotation + codebook trained in
-    * the rotated space) — same oracle-generation contract as
-    * [[lastIvfModel]]. */
-  @volatile private[graft] var lastOpqModel:
-    Option[(String, (graft.ops.Opq.Rotation, graft.ops.Pq.PqModel))] = None
-
   /** Per-dir OPQ memo: the rotation is a pure function of the corpus
     * (distributed PCA + deterministic allocation), and the codebook is
     * the SAME deterministic Lloyd as pqModelFor run on the rotated
@@ -563,7 +515,7 @@ object SimilarityQueries {
   private val opqModelCache = new java.util.concurrent.ConcurrentHashMap[
     String, (graft.ops.Opq.Rotation, graft.ops.Pq.PqModel)]()
 
-  private def opqModelFor(spark: SparkSession,
+  private[graft] def opqModelFor(spark: SparkSession,
       dir: String): (graft.ops.Opq.Rotation, graft.ops.Pq.PqModel) =
     opqModelCache.computeIfAbsent(dir, _ => {
       val c = corpus(spark, dir)
@@ -590,11 +542,11 @@ object SimilarityQueries {
     * fragments run on the rotated corpus; distortion-vs-plain-PQ is
     * pinned in SimilaritySpec.
     */
-  def qAnnOpq(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnOpq(spark: SparkSession, dir: String,
+      opq: (graft.ops.Opq.Rotation, graft.ops.Pq.PqModel)): DataFrame = {
     import graft.ops.Pq
     val c = corpus(spark, dir)
-    val (r, model) = opqModelFor(spark, dir)
-    lastOpqModel = Some((dir, (r, model)))
+    val (r, model) = opq
     val rotated = c.select(col("id"),
       org.apache.spark.sql.graft.VectorColumns
         .opqRotate(col("emb"), r.mean, r.rot).as("emb"))
@@ -606,39 +558,32 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Models of the LAST qAnnIvfPq invocation (coarse centroids + PQ
-    * codebook) — same oracle-generation contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastIvfPqModel:
-    Option[(String, (Array[Array[Float]], graft.ops.Pq.PqModel))] = None
-
   val IvfPqShortlist = 32
 
   /** The COMPOSED serving index — IVF cells over PQ codes (IVFADC): the
     * production ANN shape at 100 TB, where the coarse cell bounds which
     * rows a query touches and the PQ code bounds what each row costs.
-    * Reuses the per-dir centroid and codebook models (both caches), so
-    * query + oracle see identical constants. Exact-oracled: the generated
+    * `model` is the per-dir (centroids, codebook) pair — both caches —
+    * so query + oracle see identical constants. Exact-oracled: the generated
     * SQL merges the IVF assignment/probe CTEs with the PQ
     * encode/LUT/ADC/rerank CTEs (SparkEntry.ivfpqOracle); recall vs the
     * float IVF-flat is pinned in SimilaritySpec.
     */
-  def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def ivfPqModelFor(spark: SparkSession,
+      dir: String): (Array[Array[Float]], graft.ops.Pq.PqModel) =
+    (centroidsFor(spark, dir), pqModelFor(spark, dir))
+
+  def qAnnIvfPq(spark: SparkSession, dir: String,
+      model: (Array[Array[Float]], graft.ops.Pq.PqModel)): DataFrame = {
     import graft.ops.Pq
     val c = corpus(spark, dir)
-    val cents = centroidsFor(spark, dir)
-    val model = pqModelFor(spark, dir)
-    lastIvfPqModel = Some((dir, (cents, model)))
+    val (cents, codebook) = model
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    Pq.searchIvfPq(c, queries, cents, model, k = IvfK, nProbe = IvfNProbe,
+    Pq.searchIvfPq(c, queries, cents, codebook, k = IvfK, nProbe = IvfNProbe,
         shortlist = IvfPqShortlist)
       .orderBy(col("query_id"), col("rank"))
   }
-
-  /** Models of the LAST qAnnIvfPqResidual invocation — same contract as
-    * [[lastIvfPqModel]]; the codebook here is trained on RESIDUALS. */
-  @volatile private[graft] var lastIvfPqResModel:
-    Option[(String, (Array[Array[Float]], graft.ops.Pq.PqModel))] = None
 
   /** Per-dir RESIDUAL codebook memo: trained on emb − centroid[cell]
     * (the same deterministic Lloyd as pqModelFor, different input
@@ -647,14 +592,16 @@ object SimilarityQueries {
   private val pqResModelCache =
     new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Pq.PqModel]()
 
-  private def pqResModelFor(spark: SparkSession, dir: String,
-      cents: Array[Array[Float]]): graft.ops.Pq.PqModel =
-    pqResModelCache.computeIfAbsent(dir, _ =>
+  private[graft] def ivfPqResModelFor(spark: SparkSession,
+      dir: String): (Array[Array[Float]], graft.ops.Pq.PqModel) = {
+    val cents = centroidsFor(spark, dir)
+    (cents, pqResModelCache.computeIfAbsent(dir, _ =>
       graft.ops.Pq.train(
         corpus(spark, dir).withColumn("__res",
           org.apache.spark.sql.graft.VectorColumns.ivfResidual(
             col("emb"), cents.flatten, cents.length)),
-        col("__res"), m = 8, ksub = 16, iters = 2))
+        col("__res"), m = 8, ksub = 16, iters = 2)))
+  }
 
   /** IVFADC with RESIDUAL encoding — the composed index as published
     * (Jégou et al. 2011 §IV.A): PQ codes quantize emb − centroid[cell],
@@ -665,15 +612,14 @@ object SimilarityQueries {
     * fragments run on the residual columns
     * (SparkEntry.ivfpqResidualOracle).
     */
-  def qAnnIvfPqResidual(spark: SparkSession, dir: String): DataFrame = {
+  def qAnnIvfPqResidual(spark: SparkSession, dir: String,
+      model: (Array[Array[Float]], graft.ops.Pq.PqModel)): DataFrame = {
     import graft.ops.Pq
     val c = corpus(spark, dir)
-    val cents = centroidsFor(spark, dir)
-    val model = pqResModelFor(spark, dir, cents)
-    lastIvfPqResModel = Some((dir, (cents, model)))
+    val (cents, codebook) = model
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    Pq.searchIvfPqResidual(c, queries, cents, model, k = IvfK,
+    Pq.searchIvfPqResidual(c, queries, cents, codebook, k = IvfK,
         nProbe = IvfNProbe, shortlist = IvfPqShortlist)
       .orderBy(col("query_id"), col("rank"))
   }
@@ -853,10 +799,6 @@ object SimilarityQueries {
     erSurvivorship(mentions, labels)
   }
 
-  /** Centroid model of the LAST qSemanticDedup invocation — same
-    * oracle-generation contract as [[lastIvfModel]]. */
-  @volatile private[graft] var lastSemModel: Option[(String, Array[Array[Float]])] = None
-
   val SemTau = 0.35
 
   /** SemDeDup-shaped clustered embedding near-dup: k-means cells (the IVF
@@ -867,10 +809,9 @@ object SimilarityQueries {
     * within-cell pair join is O((n/nCells)²) per cell, so a fixed cell
     * count would blow up quadratically as the corpus grows.
     */
-  def qSemanticDedup(spark: SparkSession, dir: String): DataFrame = {
+  def qSemanticDedup(spark: SparkSession, dir: String,
+      cents: Array[Array[Float]]): DataFrame = {
     val c = corpus(spark, dir)
-    val cents = centroidsFor(spark, dir)
-    lastSemModel = Some((dir, cents))
     Similarity.clusteredNearDupPairs(c, cents, tau = SemTau)
       .orderBy(col("id_a"), col("id_b"))
   }

@@ -915,7 +915,8 @@ object StreamQueries {
     * closed-form score column; the sink grows one file per epoch and
     * compacts by the same fold.
     */
-  def qStreamModelIngest(spark: SparkSession, dir: String): DataFrame = {
+  def qStreamModelIngest(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.Model): DataFrame = {
     import java.nio.file.Files
     import graft.sources.{Datalake, Tables}
     import graft.streaming.CorpusStreams
@@ -925,7 +926,6 @@ object StreamQueries {
     // publish the registry artifact (the q_model_serve lifecycle's
     // serving half: the ingest job is a pure CONSUMER of the store)
     val modelRoot = root.resolve("model_store").toString
-    val m = Relational.gbtTrainOrGet(spark, dir)
     Datalake.publish(Gbt.modelToDf(spark, m, 0L), modelRoot, "1")
     val (served, _) =
       Gbt.modelFromDf(Datalake.readPublished(spark, modelRoot))
@@ -959,13 +959,13 @@ object StreamQueries {
       .orderBy(col("split"))
   }
 
-  def qStreamGbtScore(spark: SparkSession, dir: String): DataFrame = {
+  def qStreamGbtScore(spark: SparkSession, dir: String,
+      m: graft.ops.Gbt.Model): DataFrame = {
     import java.nio.file.Files
     import org.apache.spark.sql.types.DecimalType
     import graft.sources.{Datalake, Tables}
     import graft.streaming.CorpusStreams
     import graft.ops.Gbt
-    val m = Relational.gbtTrainOrGet(spark, dir)
     val root = Files.createTempDirectory("graft-gbtscore-replay")
     StreamReplay.track(root)
     val t = Gbt.featurize(Tables.part(spark, dir), dir)

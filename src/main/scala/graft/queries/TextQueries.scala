@@ -237,7 +237,8 @@ object TextQueries {
     * rank lists. This is the serve-side twin of q_hybrid_search —
     * that row remains the build-side/exact reference.
     */
-  def qHybridServe(spark: SparkSession, dir: String): DataFrame = {
+  def qHybridServe(spark: SparkSession, dir: String,
+      cents: Array[Array[Float]]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.sources.Datalake
     val docs = Tables.documents(spark, dir)
@@ -255,8 +256,6 @@ object TextQueries {
     Datalake.publish(indexStats(docs), s"$root/docstats", "1")
     val emb = SimilarityQueries.corpus(spark, dir)
     Datalake.publish(emb, s"$root/ivf", "1")
-    val cents = SimilarityQueries.centroidsFor(spark, dir)
-    SimilarityQueries.lastHybridIvfModel = Some((dir, cents))
     val lex = graft.ops.Retrieval.bm25TopKFromIndex(
         Datalake.readPublished(spark, s"$root/postings"),
         Datalake.readPublished(spark, s"$root/docstats"), queryTerms, k = 20)
@@ -298,34 +297,28 @@ object TextQueries {
         isRef = col("doc_id") % 10 === 0, tau = 6.0)
       .orderBy(col("doc_id"))
 
-  /** Trained BPE merge list per sfDir — the same trained-model oracle
-    * contract as SimilarityQueries.lastIvfModel: the query memoizes its
-    * merges here and SparkEntry inlines them into the generated DuckDB
-    * replay; Verify asserts the cached dir matches the dumped dir.
-    */
-  @volatile private[graft] var lastBpeModel: Option[(String, Seq[(String, String)])] = None
-
-  /** True iff the BPE model cache (if populated) was trained on `dir`. */
-  private[graft] def bpeModelConsistentWith(dir: String): Boolean =
-    lastBpeModel.forall(_._1 == dir)
-
   private val bpeMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
-  /** BPE subword tokenizer: train 64 merges on every-5th doc's word
-    * counts, tokenize the whole corpus dictionary-encoded (ops.Bpe).
-    * Training is memoized per sfDir — the merges are a pure function of
-    * the data, so re-invocation replays the cached model.
+  /** The 64 BPE merges trained on every-5th doc's word counts, memoized
+    * per sfDir — the merges are a pure function of the data. SparkEntry
+    * hands them to [[qBpeTokenize]] and inlines the same value into the
+    * generated DuckDB replay.
     */
-  def qBpeTokenize(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val merges = bpeMemo.computeIfAbsent(dir, _ =>
-      graft.ops.Bpe.trainOnSlice(docs, col("doc_id"), col("text"),
-        isTrain = col("doc_id") % 5 === 0, nMerges = 64))
-    lastBpeModel = Some((dir, merges))
-    graft.ops.Bpe.tokenizeStats(docs, col("doc_id"), col("text"), merges)
+  private[graft] def bpeModelFor(spark: SparkSession,
+      dir: String): Seq[(String, String)] =
+    bpeMemo.computeIfAbsent(dir, _ =>
+      graft.ops.Bpe.trainOnSlice(Tables.documents(spark, dir), col("doc_id"),
+        col("text"), isTrain = col("doc_id") % 5 === 0, nMerges = 64))
+
+  /** BPE subword tokenizer: tokenize the whole corpus dictionary-encoded
+    * with `merges` (ops.Bpe).
+    */
+  def qBpeTokenize(spark: SparkSession, dir: String,
+      merges: Seq[(String, String)]): DataFrame =
+    graft.ops.Bpe.tokenizeStats(Tables.documents(spark, dir), col("doc_id"),
+        col("text"), merges)
       .orderBy(col("doc_id"))
-  }
 
   /** Document fingerprinting: portable md5 of the normal form. */
   def qFingerprint(spark: SparkSession, dir: String): DataFrame = {

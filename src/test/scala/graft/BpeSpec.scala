@@ -32,8 +32,11 @@ class BpeSpec extends SparkSpecBase {
   }
 
   test("corpus bpe: compression > 1, words conserved, deterministic") {
-    val a = TextQueries.qBpeTokenize(spark, "/root/testdata/sf0.01").collect()
-    val b = TextQueries.qBpeTokenize(spark, "/root/testdata/sf0.01").collect()
+    val dir = "/root/testdata/sf0.01"
+    val a = TextQueries.qBpeTokenize(spark, dir,
+      TextQueries.bpeModelFor(spark, dir)).collect()
+    val b = TextQueries.qBpeTokenize(spark, dir,
+      TextQueries.bpeModelFor(spark, dir)).collect()
     assert(a.toSeq === b.toSeq)
     assert(a.length === 500)
     val meanComp = a.map(_.getAs[Double]("compression")).sum / a.length

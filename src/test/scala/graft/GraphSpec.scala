@@ -128,6 +128,31 @@ class GraphSpec extends SparkSpecBase {
     }
   }
 
+  test("bfs releases its edge caches and keeps the session confs when the edge frame throws") {
+    // the failing edge derivation throws inside the cache build (the
+    // counts that run under AQE, before the loop conf is set): both
+    // caches must be released and both session confs must read as before
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val spKey = "spark.sql.shuffle.partitions"
+    val aqe0 = spark.conf.get(aqeKey)
+    val sp0 = spark.conf.get(spKey)
+    // range-backed, not a local relation: the optimizer folds a
+    // projection over a local relation at planning time, so the error
+    // would fire before the cache build instead of inside it
+    val edges = spark.range(1, 4).select(col("id").as("src"),
+      when(col("id") === 2L, raise_error(lit("edge derivation failed")))
+        .otherwise(col("id") + 1).as("dst"))
+    val sources = spark.range(1, 2).select(col("id").as("node"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](
+      Graph.bfsDistances(edges, sources, maxHops = 3).collect())
+    assert(e.getMessage.contains("edge derivation failed"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"bfs leaked persistent RDDs $leaked")
+    assert(spark.conf.get(aqeKey) === aqe0)
+    assert(spark.conf.get(spKey) === sp0)
+  }
+
   test("pagerank releases its working storage: only the result survives") {
     // the edge cache and every superseded rank checkpoint must be
     // unpersisted by the time the query returns — one invocation may leave

@@ -155,7 +155,8 @@ class PlanAuditSpec extends SparkSpecBase {
     Seq("q_ann_ivf" -> SimilarityQueries.qAnnIvf _,
         "q_ann_ivf_quantized" -> SimilarityQueries.qAnnIvfQuantized _)
       .foreach { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val plan = fn(spark, sfDir, SimilarityQueries.centroidsFor(spark, sfDir))
+          .queryExecution.executedPlan.toString
         val hashExch = "Exchange hashpartitioning".r.findAllIn(plan).length
         assert(hashExch === 1,
           s"$name: expected ONE hash exchange (the top-k agg), got $hashExch:\n$plan")
@@ -176,7 +177,8 @@ class PlanAuditSpec extends SparkSpecBase {
       s"q_source_quota must rank via the topk aggregate:\n$quota")
     // q_pca_project: the projection is a pure codegen scan — the ONLY
     // exchange is the final presentation sort's range partitioning
-    val pca = SimilarityQueries.qPcaProject(spark, sfDir)
+    val pca = SimilarityQueries.qPcaProject(spark, sfDir,
+        SimilarityQueries.pcaModelFor(spark, sfDir))
       .queryExecution.executedPlan.toString
     assert(!pca.contains("Exchange hashpartitioning"),
       s"q_pca_project projection must not hash-shuffle:\n$pca")
@@ -186,7 +188,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // plus the rerank tail: shortlist/query sides broadcast, so the hash
     // exchanges are exactly the two bounded-heap aggs (16-dim shortlist +
     // full-dim rerank), and nothing sort-merges
-    val plan = SimilarityQueries.qAnnIvfPca(spark, sfDir)
+    val plan = SimilarityQueries.qAnnIvfPca(spark, sfDir,
+        SimilarityQueries.ivfPcaModelFor(spark, sfDir))
       .queryExecution.executedPlan.toString
     val hashExch = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(hashExch <= 2,
@@ -205,7 +208,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // that same query_id partitioning (its joins broadcast the tiny
     // shortlist/query sides), so the encoded corpus never shuffles and
     // the rerank adds zero exchanges
-    val plan = SimilarityQueries.qAnnIvfPq(spark, sfDir)
+    val plan = SimilarityQueries.qAnnIvfPq(spark, sfDir,
+        SimilarityQueries.ivfPqModelFor(spark, sfDir))
       .queryExecution.executedPlan.toString
     val hashExch = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(hashExch === 1,

@@ -137,7 +137,7 @@ class Round16Spec extends SparkSpecBase {
       4.0, 1e15).zipWithIndex.map { case (k, i) => (i.toLong, k) }
     val df = rows.toDF("id", "k")
     for (desc <- Seq(false, true)) {
-      val got = Ranking.withRank(df, Nil, "k", desc, "id", "rk", "n")
+      val got = Ranking.withRank(df, Nil, "k", desc, "id", "rk", "n").df
         .select(col("id"), col("rk"), col("n")).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val w = Window.orderBy(if (desc) col("k").desc else col("k").asc,
@@ -156,7 +156,7 @@ class Round16Spec extends SparkSpecBase {
     val df = (1 to 97).map(i => (i.toLong, s"g${i % 3}", (i * 37 % 19).toDouble))
       .toDF("id", "g", "k")
     val got = Ranking.withRank(df, Seq("g"), "k", desc = true, "id", "rk", "n")
-      .select(col("id"), Ranking.ntileOf(col("rk"), col("n"), 4).as("q"))
+      .df.select(col("id"), Ranking.ntileOf(col("rk"), col("n"), 4).as("q"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val w = Window.partitionBy(col("g")).orderBy(col("k").desc, col("id"))
     val want = df.select(col("id"), ntile(4).over(w).cast("long").as("q"))
@@ -187,7 +187,8 @@ class Round16Spec extends SparkSpecBase {
 
   test("GBT regression beats the OLS closed form on the nonlinear slice") {
     import graft.ops.Gbt
-    val rows = graft.queries.Relational.qGbtRegression(spark, sfDir)
+    val rows = graft.queries.Relational.qGbtRegression(spark, sfDir,
+        graft.queries.Relational.gbtTrainOrGet(spark, sfDir))
       .collect().map(r => r.getString(0) -> r).toMap
     val train = rows("train")
     val rmseGbt = train.getAs[Double]("rmse")
@@ -217,7 +218,8 @@ class Round16Spec extends SparkSpecBase {
   }
 
   test("GBT importance: nonlinear driver dominates, noise feature reads zero") {
-    val rows = graft.queries.Relational.qGbtImportance(spark, sfDir)
+    val m = graft.queries.Relational.gbtTrainOrGet(spark, sfDir)
+    val rows = graft.queries.Relational.qGbtImportance(spark, sfDir, m)
       .collect().map(r => (r.getString(0),
         r.getLong(1), r.getAs[Double]("total_gain"),
         r.getAs[Double]("share"))).sortBy(-_._4)
@@ -227,11 +229,9 @@ class Round16Spec extends SparkSpecBase {
     assert(noise._4 < 0.05, s"noise share ${noise._4} must be ~0")
     assert(math.abs(rows.map(_._4).sum - 1.0) < 1e-12,
       "shares must partition the total gain")
-    assert(rows.map(_._2).sum === graft.queries.Relational
-      .lastGbtModel.get._2.stumps.length.toLong)
+    assert(rows.map(_._2).sum === m.stumps.length.toLong)
     // every trained stump carries positive variance reduction
-    assert(graft.queries.Relational.lastGbtModel.get._2.stumps
-      .forall(_.gain > 0))
+    assert(m.stumps.forall(_.gain > 0))
   }
 
   test("geohash5FromCell is exactly the precision-5 prefix of geohash6") {
@@ -252,7 +252,8 @@ class Round16Spec extends SparkSpecBase {
   }
 
   test("conformal intervals: calibration coverage >= 1 - alpha by construction, eval near it") {
-    val rows = graft.queries.Relational.qConformalInterval(spark, sfDir)
+    val rows = graft.queries.Relational.qConformalInterval(spark, sfDir,
+        graft.queries.Relational.gbtTrainOrGet(spark, sfDir))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getAs[Double]("coverage"))).toMap
     val (nCal, qhat, covCal) = rows("calibration")

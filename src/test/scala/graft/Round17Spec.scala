@@ -34,14 +34,14 @@ class Round17Spec extends SparkSpecBase {
       .select(col("id"), lit(7.5).as("k"))
     val r = Ranking.withRank(df, Nil, "k", desc = false, tieCol = "id",
       rankName = "rk", nName = "nn", skewThreshold = 1000)
-    val got = r.select(col("id"), col("rk"), col("nn")).collect()
+    val got = r.df.select(col("id"), col("rk"), col("nn")).collect()
     assert(got.length === n)
     assert(got.forall(_.getLong(2) === n))
     // constant key ⇒ rank is exactly the tie (id) order
     got.foreach(row => assert(row.getLong(1) === row.getLong(0),
       s"rank ${row.getLong(1)} != id ${row.getLong(0)}"))
-    assert(Ranking.lastMaxPartitionRows <= 1000,
-      s"max window partition ${Ranking.lastMaxPartitionRows} must be " +
+    assert(r.maxPartitionRows <= 1000,
+      s"max window partition ${r.maxPartitionRows} must be " +
         "bounded by the threshold after the tie sub-split")
   }
 
@@ -56,11 +56,11 @@ class Round17Spec extends SparkSpecBase {
     val exp = groundTruthRanks(df, Nil, "k", desc = true, "id")
     val r = Ranking.withRank(df, Nil, "k", desc = true, tieCol = "id",
       rankName = "rk", nName = "nn", skewThreshold = 500)
-    r.select(col("id"), col("rk")).collect().foreach { row =>
+    r.df.select(col("id"), col("rk")).collect().foreach { row =>
       assert(row.getLong(1) === exp(row.getLong(0)))
     }
-    assert(Ranking.lastMaxPartitionRows <= 500,
-      s"max window partition ${Ranking.lastMaxPartitionRows} exceeds " +
+    assert(r.maxPartitionRows <= 500,
+      s"max window partition ${r.maxPartitionRows} exceeds " +
         "the threshold after the grid sub-split")
   }
 
@@ -75,11 +75,11 @@ class Round17Spec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val r = Ranking.withRank(df, Seq("g"), "k", desc = false,
       tieCol = "id", rankName = "rk", nName = "nn", skewThreshold = 400)
-    r.select(col("id"), col("rk"), col("nn")).collect().foreach { row =>
+    r.df.select(col("id"), col("rk"), col("nn")).collect().foreach { row =>
       assert(row.getLong(1) === exp(row.getLong(0)))
       assert(row.getLong(2) === n / 3)
     }
-    assert(Ranking.lastMaxPartitionRows <= 400)
+    assert(r.maxPartitionRows <= 400)
   }
 
   test("withRank ranks a NULL group value instead of erroring (null-safe join)") {
@@ -89,7 +89,7 @@ class Round17Spec extends SparkSpecBase {
       .select(col("id"), col("g"), col("k"))
     val r = Ranking.withRank(df, Seq("g"), "k", desc = true,
       tieCol = "id", rankName = "rk", nName = "nn")
-    val got = r.select(col("id"), col("rk")).collect()
+    val got = r.df.select(col("id"), col("rk")).collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 2L))
   }
@@ -98,7 +98,7 @@ class Round17Spec extends SparkSpecBase {
     val df = Seq((1L, 1.0), (2L, Double.NaN)).toDF("id", "k")
     val e = intercept[Exception] {
       Ranking.withRank(df, Nil, "k", desc = false, tieCol = "id",
-        rankName = "rk", nName = "nn").collect()
+        rankName = "rk", nName = "nn").df.collect()
     }
     def chainHas(t: Throwable): Boolean =
       t != null && (Option(t.getMessage).exists(_.contains("NaN sort key"))
@@ -111,7 +111,7 @@ class Round17Spec extends SparkSpecBase {
       .select(concat(lit("t"), col("id")).as("tie"), lit(1.0).as("k"))
     val e = intercept[IllegalStateException] {
       Ranking.withRank(df, Nil, "k", desc = false, tieCol = "tie",
-        rankName = "rk", nName = "nn", skewThreshold = 100).collect()
+        rankName = "rk", nName = "nn", skewThreshold = 100).df.collect()
     }
     assert(e.getMessage.contains("not numeric"))
   }
@@ -140,7 +140,8 @@ class Round17Spec extends SparkSpecBase {
       // leakage check: the encoding is out-of-fold, so the categorical
       // feature cannot memorize rows — test R² must stay in the same
       // band as train R² (a leaking encoder shows train >> test)
-      val rows = graft.queries.Relational.qGbtRegression(spark, dir)
+      val rows = graft.queries.Relational.qGbtRegression(spark, dir,
+          graft.queries.Relational.gbtTrainOrGet(spark, dir))
         .collect().map(r => r.getString(0) -> r.getAs[Double]("r2")).toMap
       assert(rows("test") > rows("train") - 0.1,
         s"test R² ${rows("test")} collapsed vs train ${rows("train")} — " +
@@ -161,16 +162,34 @@ class Round17Spec extends SparkSpecBase {
   test("store serving never retrains and matches in-session scoring") {
     import graft.ops.Gbt
     import graft.queries.Relational
-    Relational.qModelServe(spark, sfDir).collect()
-    val root = Relational.lastModelRoot.get
+    val root = graft.queries.DatalakeQueries.tempLakeRoot() + "/gbt_model"
+    Relational.qModelServe(spark, sfDir,
+      Relational.gbtVersionsFor(spark, sfDir), root).collect()
     val before = Gbt.trainCount.get()
     val served = Relational.scoreFromStore(spark, sfDir, root).collect()
     assert(Gbt.trainCount.get() === before,
       "the serving path must read the store, never the trainer")
-    val insession = Relational.qGbtRegression(spark, sfDir).collect()
+    val insession = Relational.qGbtRegression(spark, sfDir,
+      Relational.gbtTrainOrGet(spark, sfDir)).collect()
     assert(served.map(_.toString).toSeq ===
       insession.map(_.toString).toSeq,
       "stored-serve must equal in-session scoring bit-for-bit")
+  }
+
+  test("rollback's pinned v1 artifact is the in-session half model, not the fresh one") {
+    import graft.ops.Gbt
+    import graft.queries.Relational
+    import graft.sources.Datalake
+    val root =
+      graft.queries.DatalakeQueries.tempLakeRoot() + "/gbt_model_rollback"
+    Relational.qModelRollback(spark, sfDir,
+      Relational.gbtVersionsFor(spark, sfDir), root).collect()
+    val (v1, _) = Gbt.modelFromDf(Datalake.readVersion(spark, root, "1"))
+    assert(v1 === Relational.gbtHalfTrainOrGet(spark, sfDir)._1,
+      "the v1 read back must be the half-trained model the oracle inlines")
+    assert(v1 !== Relational.gbtTrainOrGet(spark, sfDir),
+      "v1 must differ from the fresh model, or the rollback oracle " +
+        "could not tell the two versions apart")
   }
 
   test("depth-2 trees beat stumps on the planted interaction slice") {
@@ -290,10 +309,10 @@ class Round17Spec extends SparkSpecBase {
       .select(col("id"), (col("id").cast("double") + 1.0).as("k"))
     val r = Ranking.withRank(df, Nil, "k", desc = false, tieCol = "id",
       rankName = "rk", nName = "nn")
-    r.select(col("id"), col("rk")).collect().foreach { row =>
+    r.df.select(col("id"), col("rk")).collect().foreach { row =>
       assert(row.getLong(1) === row.getLong(0) + 1)
     }
-    assert(r.columns.toSet === Set("id", "k", "rk", "nn"),
+    assert(r.df.columns.toSet === Set("id", "k", "rk", "nn"),
       "no internal bucket columns may leak into the output")
   }
 }

@@ -73,8 +73,9 @@ class Round18Spec extends SparkSpecBase {
 
   test("tree store serving never retrains and matches in-session scoring") {
     import graft.queries.Relational
-    Relational.qModelServeTree(spark, sfDir).collect()
-    val root = Relational.lastTreeModelRoot.get
+    val root = graft.queries.DatalakeQueries.tempLakeRoot() + "/gbt_tree_model"
+    Relational.qModelServeTree(spark, sfDir,
+      Relational.gbtTreeVersionsFor(spark, sfDir), root).collect()
     val before = Gbt.trainCount.get()
     val served = Relational.scoreFromStoreTree(spark, sfDir, root).collect()
     assert(Gbt.trainCount.get() === before,
@@ -126,7 +127,8 @@ class Round18Spec extends SparkSpecBase {
   test("hybrid serve equals the from-scratch two-leg fusion") {
     import org.apache.spark.sql.expressions.Window
     val dir = sfDir
-    val served = graft.queries.TextQueries.qHybridServe(spark, dir)
+    val served = graft.queries.TextQueries.qHybridServe(spark, dir,
+        graft.queries.SimilarityQueries.centroidsFor(spark, dir))
       .collect().map(_.toString).toSeq
     // from-scratch composition: bm25 from raw text + IVF probe on the
     // raw corpus (no stores anywhere), then the same RRF fusion
@@ -181,12 +183,12 @@ class Round18Spec extends SparkSpecBase {
         lit(5.0).as("k"))
     val r = Ranking.withRank(df, Nil, "k", desc = false, tieCol = "tie",
       rankName = "rk", nName = "nn", skewThreshold = 600)
-    val got = r.select(col("id"), col("rk")).collect()
+    val got = r.df.select(col("id"), col("rk")).collect()
     assert(got.length === n)
     got.foreach(row => assert(row.getLong(1) === row.getLong(0) + 1,
       s"rank ${row.getLong(1)} != tie order ${row.getLong(0) + 1}"))
-    assert(Ranking.lastMaxPartitionRows <= 600,
-      s"max window partition ${Ranking.lastMaxPartitionRows} must stay " +
+    assert(r.maxPartitionRows <= 600,
+      s"max window partition ${r.maxPartitionRows} must stay " +
         "bounded by the threshold after the tie sub-split")
   }
 
@@ -205,20 +207,22 @@ class Round18Spec extends SparkSpecBase {
       Ranking.RankDim("a", desc = false, "rk_a", "n_a"),
       Ranking.RankDim("b", desc = true, "rk_b", "n_b"),
       Ranking.RankDim("c", desc = false, "rk_c", "n_c"))
-    val fused = Ranking.withRanks(df, dims, tieCol = "id")
+    val fused = Ranking.withRanks(df, dims, tieCol = "id").df
       .select("id", "rk_a", "n_a", "rk_b", "n_b", "rk_c", "n_c")
       .orderBy("id").collect().map(_.toString).toSeq
     val seq0 = dims.foldLeft(df) { (d, dim) =>
       Ranking.withRank(d, Nil, dim.keyCol, dim.desc, tieCol = "id",
-        rankName = dim.rankName, nName = dim.nName)
+        rankName = dim.rankName, nName = dim.nName).df
     }.select("id", "rk_a", "n_a", "rk_b", "n_b", "rk_c", "n_c")
       .orderBy("id").collect().map(_.toString).toSeq
     assert(fused === seq0,
       "fused multi-dimension ranks must equal the sequential two-phase " +
         "ranks bit-for-bit")
     // the skew fallback routes through the sequential path — same output
-    val fb = Ranking.withRanks(df, dims, tieCol = "id",
+    val fbRanked = Ranking.withRanks(df, dims, tieCol = "id",
         skewThreshold = 50)
+    assert(fbRanked.fellBack, "threshold 50 must take the skew fallback")
+    val fb = fbRanked.df
       .select("id", "rk_a", "n_a", "rk_b", "n_b", "rk_c", "n_c")
       .orderBy("id").collect().map(_.toString).toSeq
     assert(fb === seq0, "the skew fallback must stay output-identical")

@@ -62,8 +62,9 @@ class StreamReplaySpec extends SparkSpecBase {
   }
 
   test("stream-ingested IVF store serves the registered quantized query exactly") {
-    assert(rowsOf(graft.queries.SimilarityQueries.qStreamIvfIngest(spark, sfDir)) ===
-      rowsOf(graft.queries.SimilarityQueries.qAnnIvfQuantized(spark, sfDir)))
+    val cents = graft.queries.SimilarityQueries.centroidsFor(spark, sfDir)
+    assert(rowsOf(graft.queries.SimilarityQueries.qStreamIvfIngest(spark, sfDir, cents)) ===
+      rowsOf(graft.queries.SimilarityQueries.qAnnIvfQuantized(spark, sfDir, cents)))
   }
 
   test("streamed datalake DAG's drained usage layer equals the batch pipeline") {
