@@ -31,10 +31,20 @@ object Checkpoints {
 
   /** Eagerly checkpoint `df` in the configured mode (reliable when
     * [[ConfKey]] is set, executor-local otherwise). The returned frame's
-    * lineage is truncated either way; `unpersist()` on it releases the
+    * lineage is truncated either way; [[release]] on it drops the
     * in-memory copy (reliable checkpoint files are cleaned by Spark's
     * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints`
     * is on, or by lake retention policy).
+    *
+    * A local checkpoint persists its RDD BEFORE the job that materializes
+    * it, so a job that throws would leave a persisted RDD no caller holds
+    * a handle to; the failure path releases every unnamed, unmaterialized
+    * RDD persisted since the call began (cached tables carry a name). The
+    * job stays inside the checkpoint action — a lazy checkpoint plus a
+    * separate job would not do: `observe()`d metrics (Components, Graph)
+    * are delivered by that action and would arrive empty. The window is
+    * this call's own under the single-threaded-session assumption the
+    * loop operators already make (see [[Fixpoint]]).
     */
   def checkpoint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -46,7 +56,17 @@ object Checkpoints {
         // (checkpoint dirs are append-only state, not per-query)
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
         df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
+      case None =>
+        val sc = spark.sparkContext
+        val before = sc.getPersistentRDDs.keySet
+        try df.localCheckpoint(eager = true)
+        catch {
+          case e: Throwable =>
+            (sc.getPersistentRDDs -- before).values
+              .filter(r => r.name == null && !r.isCheckpointed)
+              .foreach(_.unpersist(blocking = true))
+            throw e
+        }
     }
   }
 

@@ -128,17 +128,8 @@ object Datalake {
     */
   def writeJsonlExport(df: DataFrame, p: String): Unit = {
     writeJsonl(df, p)
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(p)
-    val fs = root.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"._SCHEMA.${java.util.UUID.randomUUID().toString}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(exportMapping(df.schema).getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, "_SCHEMA.json"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    replaceSmallFile(df.sparkSession.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(p, "_SCHEMA.json"), exportMapping(df.schema))
   }
 
   /** Read an export's mapping sidecar back as (field, type) pairs in
@@ -146,10 +137,10 @@ object Datalake {
     */
   def readExportMapping(spark: SparkSession,
       p: String): Seq[(String, String)] = {
-    val root = new org.apache.hadoop.fs.Path(p)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(root, "_SCHEMA.json"))
-    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val sidecar = new org.apache.hadoop.fs.Path(p, "_SCHEMA.json")
+    val body = readSmallFile(
+      sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration), sidecar)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no $sidecar"))
     val entry = """"([^"]+)": \{"type": "([^"]+)"\}""".r
     entry.findAllMatchIn(body).map(m => (m.group(1), m.group(2))).toSeq
   }
@@ -307,12 +298,8 @@ object Datalake {
     val dir = new org.apache.hadoop.fs.Path(root, HistoryDir)
     if (!fs.exists(dir)) return None
     val entries = fs.listStatus(dir).iterator.flatMap { st =>
-      val in = fs.open(st.getPath)
-      val s = try new String(in.readAllBytes(), "UTF-8").trim
-        finally in.close()
-      if (s.nonEmpty && s.forall(_.isDigit) && s.length <= 18)
-        Some(st.getPath.getName -> s.toLong)
-      else None
+      readSmallFile(fs, st.getPath).flatMap(digits)
+        .map(st.getPath.getName -> _)
     }.toSeq
     val eligible = entries.filter(_._2 <= tsMillis)
     if (eligible.isEmpty) None
@@ -358,6 +345,80 @@ object Datalake {
       true
     } else false
 
+  // ==================== the shared commit loop ====================
+  //
+  // Every read-modify-write lake op is ONE optimistic loop (the Delta
+  // commit protocol): read a snapshot, derive, stage under a fresh dir,
+  // claim the next commit record (or swap the manifest on an unlogged
+  // table), and on a lost claim discard what was staged and re-derive over
+  // the winner's state. The helpers below are each step's only site.
+
+  /** Attempts an optimistic op (a derived rewrite, a delete, a
+    * transaction) makes before it fails with [[ConcurrentCommitException]].
+    */
+  private val CommitAttempts = 5
+
+  /** Claim attempts of one stream epoch ([[publishEpochCas]]): an epoch
+    * never re-derives, so a lost claim costs a record probe, not a rewrite.
+    */
+  private val EpochClaimAttempts = 10
+
+  /** Run `attempt` until it returns Some (its commit landed), at most
+    * [[CommitAttempts]] times. None means the claim was lost and the
+    * attempt already discarded its staged output.
+    */
+  private def retryCommit[T](op: String)(attempt: => Option[T]): T =
+    Iterator.continually(attempt).take(CommitAttempts)
+      .collectFirst { case Some(t) => t }
+      .getOrElse(throw new ConcurrentCommitException(
+        s"$op lost $CommitAttempts commit races — re-read and retry"))
+
+  /** One attempt's view of a table: the newest commit sequence, then the
+    * MANIFEST token and the data dir it resolves to, each read ONCE — every
+    * value an attempt derives comes from this snapshot, so no second
+    * manifest read can pair one commit's data with another's version.
+    */
+  private final case class Snapshot(seq: Long, token: String,
+      dataPath: String) {
+    def version: String = tokenVersion(token)
+  }
+
+  private def readSnapshot(spark: SparkSession, tableRoot: String): Snapshot = {
+    val seq = latestCommitSeq(spark, tableRoot)
+    val token = manifestToken(spark, tableRoot).getOrElse(
+      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
+    Snapshot(seq, token, resolveToken(tableRoot, token))
+  }
+
+  /** Commit a rewrite derived from `snap` ([[commitDerivedToken]]) and
+    * return `result`; on a lost claim discard everything `token` names —
+    * its version dir and, for a `dv=` token, its vector — and return None,
+    * so [[retryCommit]] re-derives over the winner's state.
+    */
+  private def commitOrDiscard[T](spark: SparkSession, tableRoot: String,
+      snap: Snapshot, token: String)(result: T): Option[T] =
+    if (commitDerivedToken(spark, tableRoot, snap.seq, token)) Some(result)
+    else {
+      discard(spark, resolveToken(tableRoot, token) +: parseDvToken(token)
+        .map { case (_, rel) => s"$tableRoot/$rel" }.toSeq: _*)
+      None
+    }
+
+  /** Delete what a losing claimant staged. A leftover is unreferenced
+    * garbage that vacuum collects, so an IO failure must not mask the
+    * race outcome — but only non-fatal errors are swallowed: an interrupt
+    * or an OOM still propagates.
+    */
+  private def discard(spark: SparkSession, paths: String*): Unit =
+    paths.foreach { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      try {
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(path, true)
+        ()
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+
   /** Atomically point `tableRoot`'s MANIFEST at `token` — the one-small-
     * PUT commit both [[publish]] (token `v=<name>`) and [[shallowClone]]
     * (token `ref=<absolute data path>`) share.
@@ -379,22 +440,53 @@ object Datalake {
           "atomic rename — the manifest swap is NOT old-or-new atomic here; " +
           "use a conditional-put manifest implementation for object stores")
     }
-    // per-attempt unique tmp name: a token-derived name (32-bit hashCode,
-    // or even the raw version) lets two concurrent writers of COLLIDING
-    // names create/overwrite each other's tmp before the rename, silently
-    // installing the wrong token — a UUID makes cross-writer tmp
-    // interference impossible and the rename below stays the only commit
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s".MANIFEST.${java.util.UUID.randomUUID().toString}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$token\n".getBytes("UTF-8")) finally out.close()
-    val manifest = new org.apache.hadoop.fs.Path(root, "MANIFEST")
-    // FileContext rename+OVERWRITE is the atomic-replace primitive
-    // (plain FileSystem.rename won't overwrite; delete-then-rename would
-    // open a window with no manifest at all)
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, manifest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    replaceSmallFile(conf, new org.apache.hadoop.fs.Path(root, "MANIFEST"),
+      s"$token\n")
   }
+
+  /** Atomically replace the small file `target` with `body` — the one
+    * pointer-write every reader-facing pointer shares (MANIFEST, CATALOG,
+    * the commit-log checkpoint, `_ALIASES`, an export's `_SCHEMA.json`):
+    * readers see the old body or the new one, never a partial file. The
+    * tmp name is unique per call: a target-derived name would let two
+    * concurrent writers create/overwrite each other's tmp before the
+    * rename and silently install the wrong body, so the rename stays the
+    * only commit. FileContext rename+OVERWRITE is the atomic-replace
+    * primitive (plain FileSystem.rename won't overwrite; delete-then-
+    * rename would open a window with no file at all).
+    */
+  private def replaceSmallFile(conf: org.apache.hadoop.conf.Configuration,
+      target: org.apache.hadoop.fs.Path, body: String): Unit = {
+    val dir = target.getParent
+    val tmp = new org.apache.hadoop.fs.Path(dir,
+      s".${target.getName}.${java.util.UUID.randomUUID().toString}.tmp")
+    writeSmallFile(target.getFileSystem(conf), tmp, body)
+    org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
+      .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, body: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The trimmed body of the small file `p`, None when it does not exist —
+    * the one read every pointer, sidecar and commit record goes through.
+    * One open, no separate existence probe.
+    */
+  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      Some(try new String(in.readAllBytes(), "UTF-8").trim finally in.close())
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** `s` as a number when it is all digits (at most 18, so it fits a Long)
+    * — counter versions, commit timestamps, the checkpoint pointer. */
+  private def digits(s: String): Option[Long] =
+    if (s.nonEmpty && s.forall(_.isDigit) && s.length <= 18) Some(s.toLong)
+    else None
 
   /** Resolve a manifest token to the data directory it names: `v=<name>`
     * is a version dir under this root, `ref=<path>` an absolute pointer
@@ -573,11 +665,8 @@ object Datalake {
   def catalogSnapshot(spark: SparkSession,
       catalogRoot: String): (Long, Map[String, String]) = {
     val p = new org.apache.hadoop.fs.Path(catalogRoot, "CATALOG")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, Map.empty)
-    val in = fs.open(p)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    parseCatalogBody(txt)
+    readSmallFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(parseCatalogBody).getOrElse((0L, Map.empty))
   }
 
   /** Atomically replace the CATALOG with `body` — but only while commit
@@ -589,19 +678,11 @@ object Datalake {
       txn: Long, body: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(catalogRoot)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val lock = commitLocks.computeIfAbsent(
-      fs.makeQualified(root).toString, _ => new Object)
-    lock.synchronized {
+    withRootLock(spark, catalogRoot) {
       if (latestCommitSeq(spark, catalogRoot) == txn) {
-        fs.mkdirs(root)
-        val tmp = new org.apache.hadoop.fs.Path(root,
-          s".CATALOG.${java.util.UUID.randomUUID().toString}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-        org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-          .rename(tmp, new org.apache.hadoop.fs.Path(root, "CATALOG"),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        root.getFileSystem(conf).mkdirs(root)
+        replaceSmallFile(conf, new org.apache.hadoop.fs.Path(root, "CATALOG"),
+          body)
       }
     }
   }
@@ -671,11 +752,7 @@ object Datalake {
       pins.toSeq.sortBy(_._1).map { case (t, v) => s"$t\t$v" })
       .mkString("", "\n", "\n")
     if (!claimCommit(spark, catalogRoot, txn, body)) {
-      staged.foreach { case (t, v) =>
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$catalogRoot/$t/$v"), true); () }
-        catch { case _: Throwable => () }
-      }
+      discard(spark, staged.map { case (t, v) => s"$catalogRoot/$t/$v" }: _*)
       throw new ConcurrentCommitException(
         s"catalog txn $txn at $catalogRoot was taken by a concurrent " +
           s"committer (snapshot was $seq) — re-derive and retry")
@@ -737,106 +814,92 @@ object Datalake {
     // new dv= token inside the read→commit window — same JVM OR another
     // process — forces a re-derivation instead of being discarded
     withRootLock(spark, tableRoot) {
-    var attempt = 0
-    while (attempt < 5) {
-    attempt += 1
-    val seqAtRead = latestCommitSeq(spark, tableRoot)
-    val token = manifestToken(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    val dv = parseDvToken(token)
-    val dataPath = resolveToken(tableRoot, token)
-    val stats = readFileStats(spark, dataPath)
-    require(stats.nonEmpty,
-      s"no stats sidecar under $dataPath — publish with statsCols first")
-    val (small, big) = stats.partition(_.rows < minRows)
-    val newV = nextNumericVersion(spark, tableRoot, None, "")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(dataPath)
-    val dst = new org.apache.hadoop.fs.Path(s"$tableRoot/v=$newV")
-    val fs = dst.getFileSystem(conf)
-    fs.mkdirs(dst)
-    big.foreach { f =>
-      val to = new org.apache.hadoop.fs.Path(dst, f.file)
-      fs.mkdirs(to.getParent) // Hive subdir of a partitioned table
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(src, f.file), fs, to, false, conf)
-    }
-    // Hive partition dir of a relative file path ("" for a flat table):
-    // compaction must never merge ACROSS partition values — the output
-    // file lands back in its own name=value dir, so partition discovery
-    // (and every later reader's pruning) survives the rewrite (r13
-    // verdict #5: the flat-dir require made hourly maintenance on a
-    // partitioned streaming ingest impossible).
-    def partDir(rel: String): String = {
-      val i = rel.lastIndexOf('/')
-      if (i < 0) "" else rel.substring(0, i)
-    }
-    small.groupBy(f => partDir(f.file)).toSeq.sortBy(_._1)
-      .foreach { case (pd, files) =>
-        // no basePath: the file schema alone (partition values live in
-        // the DIRECTORY; injecting them as data columns here would
-        // collide with the byte-copied files' schema on read)
-        val raw = spark.read
-          .parquet(files.map(f => s"$dataPath/${f.file}"): _*)
-        // a live deletion vector must be FOLDED into the rewrite of the
-        // small files (a raw compaction would resurrect their deleted
-        // rows — review finding); the copied files keep their positions,
-        // so their share of the vector is carried forward below instead
-        val live = dv match {
-          case Some((_, dvRel)) =>
-            applyDvTo(spark, raw, dataPath, s"$tableRoot/$dvRel")
-          case None => raw
+      retryCommit(s"optimizeCompact on $tableRoot") {
+        val snap = readSnapshot(spark, tableRoot)
+        val dv = parseDvToken(snap.token)
+        val dataPath = snap.dataPath
+        val stats = readFileStats(spark, dataPath)
+        require(stats.nonEmpty,
+          s"no stats sidecar under $dataPath — publish with statsCols first")
+        val (small, big) = stats.partition(_.rows < minRows)
+        val newV = nextNumericVersion(spark, tableRoot, None, "")
+        val conf = spark.sparkContext.hadoopConfiguration
+        val src = new org.apache.hadoop.fs.Path(dataPath)
+        val dst = new org.apache.hadoop.fs.Path(s"$tableRoot/v=$newV")
+        val fs = dst.getFileSystem(conf)
+        fs.mkdirs(dst)
+        big.foreach { f =>
+          val to = new org.apache.hadoop.fs.Path(dst, f.file)
+          fs.mkdirs(to.getParent) // Hive subdir of a partitioned table
+          org.apache.hadoop.fs.FileUtil.copy(fs,
+            new org.apache.hadoop.fs.Path(src, f.file), fs, to, false, conf)
         }
-        val outDir = if (pd.isEmpty) dst.toString else s"$dst/$pd"
-        live.coalesce(1)
-          .write.mode(SaveMode.Append).option("compression", "snappy")
-          .parquet(outDir)
+        // Hive partition dir of a relative file path ("" for a flat table):
+        // compaction must never merge ACROSS partition values — the output
+        // file lands back in its own name=value dir, so partition discovery
+        // (and every later reader's pruning) survives the rewrite (r13
+        // verdict #5: the flat-dir require made hourly maintenance on a
+        // partitioned streaming ingest impossible).
+        def partDir(rel: String): String = {
+          val i = rel.lastIndexOf('/')
+          if (i < 0) "" else rel.substring(0, i)
+        }
+        small.groupBy(f => partDir(f.file)).toSeq.sortBy(_._1)
+          .foreach { case (pd, files) =>
+            // no basePath: the file schema alone (partition values live in
+            // the DIRECTORY; injecting them as data columns here would
+            // collide with the byte-copied files' schema on read)
+            val raw = spark.read
+              .parquet(files.map(f => s"$dataPath/${f.file}"): _*)
+            // a live deletion vector must be FOLDED into the rewrite of the
+            // small files (a raw compaction would resurrect their deleted
+            // rows — review finding); the copied files keep their positions,
+            // so their share of the vector is carried forward below instead
+            val live = dv match {
+              case Some((_, dvRel)) =>
+                applyDvTo(spark, raw, dataPath, s"$tableRoot/$dvRel")
+              case None => raw
+            }
+            val outDir = if (pd.isEmpty) dst.toString else s"$dst/$pd"
+            live.coalesce(1)
+              .write.mode(SaveMode.Append).option("compression", "snappy")
+              .parquet(outDir)
+          }
+        writeFileStats(spark, dst.toString,
+          if (statsCols.nonEmpty) statsCols
+          else stats.flatMap(_.cols.keys).distinct)
+        // carry the vector forward for the byte-copied files (identical
+        // names, identical row positions in the new dir); the compacted
+        // file's share was folded above. Empty carried vector → the token
+        // returns to plain v= and the old vector becomes vacuum garbage.
+        val newToken = dv match {
+          case Some((_, dvRel)) =>
+            // __file lives in the _metadata domain: Spark URL-encodes the
+            // file URI (a Hive value dir like `p=NOT SPECIFIED` appears as
+            // NOT%20SPECIFIED), while the stats sidecar records DECODED
+            // names. Encode before comparing, or the carried vector silently
+            // drops every copied file in such a partition — the deleted rows
+            // resurrect (found by q_compact_partitioned's oracle).
+            def metaRel(rel: String): String =
+              new org.apache.hadoop.fs.Path("/" + rel).toUri.toString
+                .stripPrefix("/")
+            val bigNames = big.map(f => metaRel(f.file))
+            val carried = spark.read.parquet(s"$tableRoot/$dvRel")
+              .filter(col("__file").isin(bigNames: _*))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              if (carried.count() > 0) {
+                val rel =
+                  s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
+                carried.write.parquet(s"$tableRoot/$rel")
+                s"dv=v=$newV;$rel"
+              } else s"v=$newV"
+            } finally { carried.unpersist(blocking = false); () }
+          case None => s"v=$newV"
+        }
+        commitOrDiscard(spark, tableRoot, snap, newToken)(
+          (newV, small.length, big.length))
       }
-    writeFileStats(spark, dst.toString,
-      if (statsCols.nonEmpty) statsCols else stats.flatMap(_.cols.keys).distinct)
-    // carry the vector forward for the byte-copied files (identical
-    // names, identical row positions in the new dir); the compacted
-    // file's share was folded above. Empty carried vector → the token
-    // returns to plain v= and the old vector becomes vacuum garbage.
-    val newToken = dv match {
-      case Some((_, dvRel)) =>
-        // __file lives in the _metadata domain: Spark URL-encodes the
-        // file URI (a Hive value dir like `p=NOT SPECIFIED` appears as
-        // NOT%20SPECIFIED), while the stats sidecar records DECODED
-        // names. Encode before comparing, or the carried vector silently
-        // drops every copied file in such a partition — the deleted rows
-        // resurrect (found by q_compact_partitioned's oracle).
-        def metaRel(rel: String): String =
-          new org.apache.hadoop.fs.Path("/" + rel).toUri.toString
-            .stripPrefix("/")
-        val bigNames = big.map(f => metaRel(f.file))
-        val carried = spark.read.parquet(s"$tableRoot/$dvRel")
-          .filter(col("__file").isin(bigNames: _*))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (carried.count() > 0) {
-            val rel =
-              s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
-            carried.write.parquet(s"$tableRoot/$rel")
-            s"dv=v=$newV;$rel"
-          } else s"v=$newV"
-        } finally { carried.unpersist(blocking = false); () }
-      case None => s"v=$newV"
-    }
-    if (commitDerivedToken(spark, tableRoot, seqAtRead, newToken))
-      return (newV, small.length, big.length)
-    // lost to a cross-process CAS writer: discard the staged version dir
-    // AND the carried vector (if one was written) and re-derive
-    try {
-      fs.delete(dst, true)
-      parseDvToken(newToken).foreach { case (_, rel) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tableRoot/$rel"), true)
-      }
-      ()
-    } catch { case _: Throwable => () }
-    }
-    throw new ConcurrentCommitException(
-      s"optimizeCompact on $tableRoot lost 5 commit races — retry")
     }
 
   /** DYNAMIC PARTITION OVERWRITE as a versioned commit (Hive's
@@ -860,19 +923,13 @@ object Datalake {
       batch: DataFrame, partCols: Seq[String],
       statsCols: Seq[String] = Nil): String = {
     require(partCols.nonEmpty, "overwritePartitions needs partition columns")
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // stripe = in-process serialization; the commit rides the log on CAS
     // tables (commitDerivedToken) so a cross-process writer landing
     // inside the token-read → commit window forces a re-derivation
     withRootLock(spark, tableRoot) {
-      var attempt = 0
-      while (attempt < 5) {
-        attempt += 1
-        val seqAtRead = latestCommitSeq(spark, tableRoot)
-        val token = manifestToken(spark, tableRoot).getOrElse(
-          throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-        val cur = readToken(spark, tableRoot, token)
+      retryCommit(s"overwritePartitions on $tableRoot") {
+        val snap = readSnapshot(spark, tableRoot)
+        val cur = readToken(spark, tableRoot, snap.token)
         val parts = batch.select(partCols.map(col): _*).distinct()
         val untouched = cur.join(
           org.apache.spark.sql.functions.broadcast(parts), partCols,
@@ -880,14 +937,8 @@ object Datalake {
         val next = untouched.unionByName(batch.select(cur.columns.map(col): _*))
         val newV = nextNumericVersion(spark, tableRoot, None, "")
         stageVersion(next, tableRoot, newV, partCols, statsCols)
-        if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-          return newV
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v=$newV"), true); () }
-        catch { case _: Throwable => () }
+        commitOrDiscard(spark, tableRoot, snap, s"v=$newV")(newV)
       }
-      throw new ConcurrentCommitException(
-        s"overwritePartitions on $tableRoot lost 5 commit races — retry")
     }
   }
 
@@ -900,7 +951,10 @@ object Datalake {
     * orders of magnitude smaller than the table; the hint keeps the
     * full-outer off SortMergeJoin), the three ANSI arms applied in a
     * single pass over the joined stream, and the result published as the
-    * next version through the manifest swap under the per-root stripe.
+    * next version under the per-root stripe — through the plain manifest
+    * swap on an unlogged table, through a claimed commit record on a CAS
+    * table ([[commitDerivedToken]]: a competitor committing between the
+    * snapshot read and the claim makes the merge re-derive over its state).
     * The superseded vector is retired with its base version (vacuum
     * garbage) — the new version is a plain `v=` token.
     *
@@ -926,48 +980,35 @@ object Datalake {
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       statsCols: Seq[String] = Nil,
       evolveSchema: Boolean = false): String = {
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     withRootLock(spark, tableRoot) {
-      var attempt = 0
-      while (attempt < 5) {
-        attempt += 1
-        val seqAtRead = latestCommitSeq(spark, tableRoot)
-        val token = manifestToken(spark, tableRoot).getOrElse(
-          throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-        val base = readToken(spark, tableRoot, token)
+      retryCommit(s"mergeInto on $tableRoot") {
+        val snap = readSnapshot(spark, tableRoot)
+        val base = readToken(spark, tableRoot, snap.token)
         val merged = mergeFrames(base, delta, keys, deleteWhen, evolveSchema)
-        val parts = currentDataPath(spark, tableRoot)
-          .map(detectPartitionColumns(spark, _)).getOrElse(Nil)
-        val newV = nextNumericVersion(spark, tableRoot,
-          currentVersion(spark, tableRoot), "-merged")
+        val parts = detectPartitionColumns(spark, snap.dataPath)
+        val newV = nextNumericVersion(spark, tableRoot, Some(snap.version),
+          "-merged")
         stageVersion(merged, tableRoot, newV, parts, statsCols)
-        if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-          return newV
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v=$newV"), true); () }
-        catch { case _: Throwable => () }
+        commitOrDiscard(spark, tableRoot, snap, s"v=$newV")(newV)
       }
-      throw new ConcurrentCommitException(
-        s"mergeInto on $tableRoot lost 5 commit races — retry (or use " +
-          "mergeTransact, the cross-process form)")
     }
   }
 
-  /** [[mergeInto]]'s CROSS-PROCESS form: the same three-arm merge run as
-    * an optimistic [[transact]]ion over the commit log — two concurrent
-    * mergers (threads OR processes) race the claim, the loser re-reads
-    * the WINNER'S committed state and re-derives its merge over it, so
-    * both deltas land exactly once (the Delta conflict-resolution loop
-    * applied to MERGE). The per-root stripe alone (what mergeInto holds)
-    * serializes only in-process writers; this composes the shared merge
-    * semantics with the log so the guarantee crosses JVMs. Returns
-    * (commit sequence, version name).
+  /** [[mergeInto]] as an optimistic [[transact]]ion: the same three-arm
+    * merge, but the snapshot comes from the commit log and every merge
+    * claims a log record — on a plain table too, which its first merge
+    * turns into a CAS table. Two concurrent mergers (threads OR processes)
+    * race the claim; the loser re-reads the WINNER'S committed state and
+    * re-derives its merge over it, so both deltas land exactly once (the
+    * Delta conflict-resolution loop applied to MERGE). [[mergeInto]] gives
+    * the same guarantee on a CAS table (it claims a record there too) but
+    * keeps the plain swap on an unlogged one; it also holds the per-root
+    * stripe, which this does not. Returns (commit sequence, version name).
     */
   def mergeTransact(spark: SparkSession, tableRoot: String,
       delta: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      maxAttempts: Int = 5, partitionBy: Seq[String] = Nil,
+      partitionBy: Seq[String] = Nil,
       statsCols: Seq[String] = Nil,
       evolveSchema: Boolean = false): (Long, String) =
     transact(spark, tableRoot, {
@@ -975,7 +1016,7 @@ object Datalake {
         evolveSchema)
       case None => throw new IllegalStateException(
         s"mergeTransact needs an existing table at $tableRoot")
-    }, maxAttempts, partitionBy, statsCols)
+    }, partitionBy, statsCols)
 
   /** The ONE definition of the three-arm merge over a base snapshot —
     * shared by the stripe-serialized [[mergeInto]] and the CAS-looped
@@ -1069,7 +1110,7 @@ object Datalake {
     * where DVs belong to a commit, not to the parquet files.
     */
   def deleteWhere(spark: SparkSession, tableRoot: String,
-      predicate: org.apache.spark.sql.Column, maxAttempts: Int = 5): Long = {
+      predicate: org.apache.spark.sql.Column): Long =
     // Concurrency (r13 verdict #2 — this was the one standing protocol
     // defect): the read-merge-swap rides the `_commits/` log. Each
     // attempt snapshots the manifest token, stages the merged vector
@@ -1080,20 +1121,12 @@ object Datalake {
     // so its retry merges over the winner's vector and neither delete's
     // positions can be lost. The per-root stripe still wraps each
     // attempt: in-process it serializes deletes against the maintenance
-    // ops' read-rewrite-swap windows (which don't claim log records).
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val committed: Option[Long] = withRootLock(spark, tableRoot) {
+    // ops' read-rewrite-commit windows.
+    retryCommit(s"deleteWhere on $tableRoot") {
+      withRootLock(spark, tableRoot) {
         deleteWhereAttempt(spark, tableRoot, predicate, seqOverride = None)
       }
-      committed.foreach(n => return n)
     }
-    throw new ConcurrentCommitException(
-      s"deleteWhere on $tableRoot lost $maxAttempts commit races — " +
-        "re-read and retry")
-  }
 
   /** ONE optimistic delete attempt: snapshot, stage the merged vector,
     * claim the next record. Returns the new vector's position count on a
@@ -1107,8 +1140,6 @@ object Datalake {
   private[graft] def deleteWhereAttempt(spark: SparkSession,
       tableRoot: String, predicate: org.apache.spark.sql.Column,
       seqOverride: Option[Long]): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the MANIFEST (not the newest log record) is the base snapshot:
     // mixed-mode tables also move by plain publish / maintenance
     // swaps the log never sees, and deleting against a stale log
@@ -1155,9 +1186,7 @@ object Datalake {
         // lost the sequence to a concurrent committer: roll back the
         // staged vector; the retry re-reads the winner's state, so its
         // merge carries the winner's positions — no delete can be lost
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/$rel"), true); () }
-        catch { case _: Throwable => () }
+        discard(spark, s"$tableRoot/$rel")
         None
       }
     } finally { merged.unpersist(blocking = false); () }
@@ -1216,18 +1245,9 @@ object Datalake {
 
   private def readCheckpointSeq(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root, CheckpointFile)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try new String(in.readAllBytes(), "UTF-8").trim
-          finally in.close()
-        if (s.nonEmpty && s.forall(_.isDigit) && s.length <= 18)
-          Some(s.toLong)
-        else None
-      }
-    } catch { case _: java.io.IOException => None }
+    try readSmallFile(fs, new org.apache.hadoop.fs.Path(root, CheckpointFile))
+      .flatMap(digits)
+    catch { case _: java.io.IOException => None }
   }
 
   /** Roll the checkpoint pointer forward to `seq` (never backward — a
@@ -1241,17 +1261,10 @@ object Datalake {
       seq: Long): Unit = try {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = root.getFileSystem(conf)
     withRootLock(spark, tableRoot) {
-      if (readCheckpointSeq(fs, root).forall(_ < seq)) {
-        val tmp = new org.apache.hadoop.fs.Path(root,
-          s"$CommitDir/._ckpt.${java.util.UUID.randomUUID().toString}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(s"$seq\n".getBytes("UTF-8")) finally out.close()
-        org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-          .rename(tmp, new org.apache.hadoop.fs.Path(root, CheckpointFile),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      }
+      if (readCheckpointSeq(root.getFileSystem(conf), root).forall(_ < seq))
+        replaceSmallFile(conf,
+          new org.apache.hadoop.fs.Path(root, CheckpointFile), s"$seq\n")
     }
   } catch { case _: java.io.IOException => () }
 
@@ -1325,12 +1338,7 @@ object Datalake {
   /** The token recorded by commit `seq`, if that record exists. */
   private def commitTokenAt(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, seq: Long): Option[String] = {
-    val p = commitFile(root, seq)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try new String(in.readAllBytes(), "UTF-8").trim finally in.close())
-    }
+    readSmallFile(fs, commitFile(root, seq))
   }
 
   /** In-JVM claim mutex per table root: local-filesystem rename-without-
@@ -1345,12 +1353,13 @@ object Datalake {
 
   /** Run `body` holding `tableRoot`'s per-root commit stripe — the ONE
     * in-process serialization point for every read-modify-swap on a
-    * table's manifest (deletes, compaction, z-order rewrites, partition
-    * overwrites, vacuum's vector sweep). The monitor is reentrant, so a
-    * stripe-holding op may call [[claimCommit]]/[[syncManifestIfNewest]]
-    * (which take the same stripe) freely. Cross-process exclusion is NOT
-    * this lock's job — that's the commit log's rename-without-overwrite
-    * arbitration ([[claimCommit]]).
+    * table's manifest (deletes, merges, compaction, z-order rewrites,
+    * partition overwrites, vacuum's vector sweep) and for the claim,
+    * manifest/catalog sync and checkpoint roll steps. The monitor is
+    * reentrant, so a stripe-holding op may call
+    * [[claimCommit]]/[[syncManifestIfNewest]] (which take the same stripe)
+    * freely. Cross-process exclusion is NOT this lock's job — that's the
+    * commit log's rename-without-overwrite arbitration ([[claimCommit]]).
     */
   private def withRootLock[T](spark: SparkSession, tableRoot: String)(
       body: => T): T = {
@@ -1373,12 +1382,9 @@ object Datalake {
     fs.mkdirs(new org.apache.hadoop.fs.Path(root, CommitDir))
     val tmp = new org.apache.hadoop.fs.Path(root,
       s"$CommitDir/.c.${java.util.UUID.randomUUID().toString}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$token\n".getBytes("UTF-8")) finally out.close()
+    writeSmallFile(fs, tmp, s"$token\n")
     val dst = commitFile(root, seq)
-    val lock = commitLocks.computeIfAbsent(
-      fs.makeQualified(root).toString, _ => new Object)
-    val won = lock.synchronized {
+    val won = withRootLock(spark, tableRoot) {
       if (fs.exists(dst)) false
       else
         try {
@@ -1389,7 +1395,7 @@ object Datalake {
           true
         } catch { case _: java.io.IOException => false }
     }
-    if (!won) { try { fs.delete(tmp, false); () } catch { case _: Throwable => () } }
+    if (!won) discard(spark, tmp.toString)
     // roll the resolution checkpoint every CheckpointInterval commits —
     // on the winner's dime, amortized (one tiny PUT per interval)
     if (won && seq % CheckpointInterval == 0L)
@@ -1413,11 +1419,7 @@ object Datalake {
     */
   private[graft] def syncManifestIfNewest(spark: SparkSession,
       tableRoot: String, seq: Long, token: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lock = commitLocks.computeIfAbsent(
-      fs.makeQualified(root).toString, _ => new Object)
-    lock.synchronized {
+    withRootLock(spark, tableRoot) {
       if (latestCommitSeq(spark, tableRoot) == seq)
         swapManifest(spark, tableRoot, token)
     }
@@ -1464,22 +1466,14 @@ object Datalake {
       partitionBy: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): (Long, String) = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nextSeq = expectedSeq + 1
     // unique dir per ATTEMPT: racing claimants of the same sequence must
     // never write into each other's files
     val version =
       s"c$nextSeq-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataPath = s"$tableRoot/v=$version"
-    val w0 = df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-    (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-      .parquet(dataPath)
-    if (statsCols.nonEmpty) writeFileStats(spark, dataPath, statsCols)
-    recordCommitTs(spark, tableRoot, version, System.currentTimeMillis())
+    stageVersion(df, tableRoot, version, partitionBy, statsCols)
     if (!claimCommit(spark, tableRoot, nextSeq, s"v=$version")) {
-      try { fs.delete(new org.apache.hadoop.fs.Path(dataPath), true); () }
-      catch { case _: Throwable => () }
+      discard(spark, s"$tableRoot/v=$version")
       throw new ConcurrentCommitException(
         s"commit $nextSeq at $tableRoot was taken by a concurrent writer " +
           s"(snapshot was $expectedSeq) — re-read the table and retry")
@@ -1535,21 +1529,14 @@ object Datalake {
     None
 
   def publishEpochCas(df: DataFrame, tableRoot: String, epoch: String,
-      partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
-      maxAttempts: Int = 10): Long = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
+      partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val token = s"v=e$epoch"
     // stage the epoch dir (Overwrite IS the replay contract: same epoch →
     // same dir, identical content)
-    val dataPath = s"$tableRoot/v=e$epoch"
-    val w0 = df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-    (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-      .parquet(dataPath)
-    if (statsCols.nonEmpty) writeFileStats(spark, dataPath, statsCols)
-    recordCommitTs(spark, tableRoot, s"e$epoch", System.currentTimeMillis())
+    stageVersion(df, tableRoot, s"e$epoch", partitionBy, statsCols)
     withRootLock(spark, tableRoot) {
       // the replay scan and every re-scan below look only at records NOT
       // yet examined; scannedTo tracks the high-water mark
@@ -1570,7 +1557,7 @@ object Datalake {
           // makes unreachable in-process.
           epochClaimRaceHook.foreach(h => h(token, scannedTo))
           var attempt = 0
-          while (attempt < maxAttempts) {
+          while (attempt < EpochClaimAttempts) {
             attempt += 1
             val latest = latestCommitSeq(spark, tableRoot)
             // a LOST claim may have lost to a replay of THIS epoch from
@@ -1599,7 +1586,8 @@ object Datalake {
               syncManifestIfNewest(spark, tableRoot, seq, token)
               seq
             case None => throw new ConcurrentCommitException(
-              s"epoch $epoch at $tableRoot lost $maxAttempts claim races")
+              s"epoch $epoch at $tableRoot lost $EpochClaimAttempts claim " +
+                "races")
           }
       }
     }
@@ -1613,19 +1601,16 @@ object Datalake {
     * conflict-resolution loop). The snapshot is taken FROM THE COMMIT LOG
     * (record token → immutable version dir), not the manifest — the log
     * is the CAS source of truth, and a manifest lagging a crashed writer
-    * must not fork history. Throws after `maxAttempts` losses.
+    * must not fork history. Takes no stripe: two transactions really race
+    * the claim, in one JVM as across processes.
     */
   def transact(spark: SparkSession, tableRoot: String,
-      transform: Option[DataFrame] => DataFrame, maxAttempts: Int = 5,
+      transform: Option[DataFrame] => DataFrame,
       partitionBy: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): (Long, String) = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    var lastErr: ConcurrentCommitException = null
-    while (attempt < maxAttempts) {
-      attempt += 1
+    retryCommit(s"transaction on $tableRoot") {
       val seq = latestCommitSeq(spark, tableRoot)
       // snapshots read THROUGH the token (readToken), not the raw
       // resolved dir: since deletes ride the commit log (r14) the newest
@@ -1639,13 +1624,10 @@ object Datalake {
         else // never CAS-written: adopt a plain-publish table if present
           manifestToken(spark, tableRoot)
             .map(t => readToken(spark, tableRoot, t))
-      try return publishCas(transform(cur), tableRoot, seq, partitionBy,
-        statsCols)
-      catch { case e: ConcurrentCommitException => lastErr = e }
+      try Some(publishCas(transform(cur), tableRoot, seq, partitionBy,
+        statsCols))
+      catch { case _: ConcurrentCommitException => None }
     }
-    throw new ConcurrentCommitException(
-      s"transaction on $tableRoot lost $maxAttempts commit races: " +
-        lastErr.getMessage)
   }
 
   /** SHALLOW CLONE (the Delta `CLONE ... SHALLOW` shape): make `dstRoot`
@@ -1666,12 +1648,8 @@ object Datalake {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(srcRoot)
     val fs = root.getFileSystem(conf)
-    val m = new org.apache.hadoop.fs.Path(root, "MANIFEST")
-    if (!fs.exists(m))
-      throw new IllegalStateException(s"no MANIFEST under $srcRoot")
-    val in = fs.open(m)
-    val token = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
+    val token = manifestToken(spark, srcRoot).getOrElse(
+      throw new IllegalStateException(s"no MANIFEST under $srcRoot"))
     // qualify to an absolute URI so the pointer survives any working-dir
     // or default-FS difference between writer and reader
     val abs = fs.makeQualified(
@@ -1816,20 +1794,6 @@ object Datalake {
       writeSmallFile(fs, new org.apache.hadoop.fs.Path(vDir, EvolvedBase), b))
     recordCommitTs(spark, tableRoot, version, System.currentTimeMillis())
   }
-
-  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try new String(in.readAllBytes(), "UTF-8").trim finally in.close())
-    }
 
   /** The manifest-current segment chain, newest → oldest. Fails loudly on
     * a table that was never [[publishEvolved]]-published (no `_SPEC`):
@@ -1978,13 +1942,9 @@ object Datalake {
     * `v=` dir, or — for an undiverged shallow clone — the `ref=` pointer
     * into the source's version dir).
     */
-  def readPublished(spark: SparkSession, tableRoot: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(root, "MANIFEST"))
-    val v = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    readToken(spark, tableRoot, v)
-  }
+  def readPublished(spark: SparkSession, tableRoot: String): DataFrame =
+    readToken(spark, tableRoot, manifestToken(spark, tableRoot).getOrElse(
+      throw new IllegalStateException(s"no MANIFEST under $tableRoot")))
 
   /** The manifest-current version name, if a manifest exists. For an
     * UNDIVERGED shallow clone the manifest holds a `ref=` pointer, not a
@@ -1993,25 +1953,21 @@ object Datalake {
     * forms).
     */
   def currentVersion(spark: SparkSession, tableRoot: String): Option[String] =
-    manifestToken(spark, tableRoot).map { t =>
-      // a dv= token resolves to its BASE version: that dir is what vacuum
-      // must protect (deleting it would orphan the live vector) and what
-      // version-naming successors count from
-      parseDvToken(t).map(_._1).getOrElse(t).stripPrefix("v=")
-    }
+    manifestToken(spark, tableRoot).map(tokenVersion)
+
+  /** The version a manifest token serves. A dv= token resolves to its BASE
+    * version: that dir is what vacuum must protect (deleting it would
+    * orphan the live vector) and what version-naming successors count from.
+    */
+  private def tokenVersion(token: String): String =
+    parseDvToken(token).map(_._1).getOrElse(token).stripPrefix("v=")
 
   /** The raw manifest token (`v=<name>` or `ref=<path>`), if a manifest
     * exists. */
   private def manifestToken(spark: SparkSession,
       tableRoot: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = new org.apache.hadoop.fs.Path(root, "MANIFEST")
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      Some(try new String(in.readAllBytes(), "UTF-8").trim finally in.close())
-    }
+    val m = new org.apache.hadoop.fs.Path(tableRoot, "MANIFEST")
+    readSmallFile(m.getFileSystem(spark.sparkContext.hadoopConfiguration), m)
   }
 
   /** The data directory the manifest currently serves — resolves BOTH
@@ -2043,9 +1999,10 @@ object Datalake {
     * then everything else lexicographically.
     */
   private def versionOrderKey(v: String): (Int, Long, String) =
-    (if (v.nonEmpty && v.forall(_.isDigit) && v.length <= 18) 0 else 1,
-      if (v.nonEmpty && v.forall(_.isDigit) && v.length <= 18) v.toLong
-      else 0L, v)
+    digits(v) match {
+      case Some(n) => (0, n, v)
+      case None => (1, 0L, v)
+    }
 
   // ==================== version aliases ====================
   //
@@ -2055,26 +2012,22 @@ object Datalake {
   // swap — one catalog-sized PUT re-pointing the alias — never a code
   // change or a data copy. The `_ALIASES` sidecar lives next to the
   // MANIFEST and follows the same commit discipline: the whole alias map
-  // is rewritten to a UUID tmp file and installed with FileContext
-  // rename+OVERWRITE, so readers see the old map or the new map, never a
-  // partial file. Alias names never collide with version names (they
-  // live in a separate namespace resolved by [[resolveAlias]] only).
+  // is rewritten through the same atomic small-file replace, so readers
+  // see the old map or the new map, never a partial file. Alias names
+  // never collide with version names (they live in a separate namespace
+  // resolved by [[resolveAlias]] only).
 
   private val AliasFile = "_ALIASES"
 
   private def readAliasMap(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(root, AliasFile)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      body.linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
+    readSmallFile(fs, new org.apache.hadoop.fs.Path(root, AliasFile))
+      .iterator.flatMap(_.linesIterator).map(_.trim).filter(_.nonEmpty)
+      .map { line =>
         val i = line.indexOf('=')
         require(i > 0, s"Datalake: corrupt $AliasFile line '$line'")
         (line.substring(0, i), line.substring(i + 1))
       }.toMap
-    }
   }
 
   /** Atomically (re-)point `alias` at `version` — promotion, demotion
@@ -2093,15 +2046,8 @@ object Datalake {
       s"Datalake.writeAlias: cannot point '$alias' at version '$version' " +
         s"of $tableRoot — no such staged version")
     val next = readAliasMap(fs, root) + (alias -> version)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s".ALIASES.${java.util.UUID.randomUUID().toString}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toSeq.sortBy(_._1)
-      .map { case (a, v) => s"$a=$v\n" }.mkString.getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, AliasFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    replaceSmallFile(conf, new org.apache.hadoop.fs.Path(root, AliasFile),
+      next.toSeq.sortBy(_._1).map { case (a, v) => s"$a=$v\n" }.mkString)
   }
 
   /** Resolve `alias` to the version it names. An unknown alias or a
@@ -2203,9 +2149,7 @@ object Datalake {
     // stripe: an unserialized sweep could read the manifest, lose the CPU
     // to a delete's write-then-swap, and collect the dir the new token is
     // about to reference.
-    val lock = commitLocks.computeIfAbsent(
-      fs.makeQualified(root).toString, _ => new Object)
-    lock.synchronized {
+    withRootLock(spark, tableRoot) {
       val dvKeep = manifestToken(spark, tableRoot).flatMap(parseDvToken)
         .map { case (_, rel) => rel.stripPrefix(s"$DvDir/") }.toSet
       val dvBase = new org.apache.hadoop.fs.Path(root, DvDir)
@@ -2286,17 +2230,15 @@ object Datalake {
 
   /** Numeric successor of the newest numeric version (epoch/counter
     * versioning keeps working), with the table-has-no-numeric-versions
-    * fallbacks every maintenance op shares: a clone's first own version
+    * fallbacks every derived rewrite shares: a clone's first own version
     * is "1", otherwise the current version plus `fallbackSuffix`. ONE
-    * definition — the four maintenance ops (optimize, optimizeZorder,
-    * optimizeCompact, overwritePartitions) previously each carried a
-    * diverging copy (review finding).
+    * definition for the five derived rewrites: optimize, optimizeCurve
+    * (behind optimizeZorder and optimizeHilbert), optimizeCompact,
+    * overwritePartitions and mergeInto.
     */
   private def nextNumericVersion(spark: SparkSession, tableRoot: String,
       cur: Option[String], fallbackSuffix: String): String = {
-    val versions = listVersions(spark, tableRoot)
-    val numeric = versions.filter(v =>
-      v.nonEmpty && v.forall(_.isDigit) && v.length <= 18).map(_.toLong)
+    val numeric = listVersions(spark, tableRoot).flatMap(digits)
     if (numeric.nonEmpty) (numeric.max + 1).toString
     else cur match {
       case Some(c) if c.startsWith("ref=") => "1"
@@ -2433,64 +2375,52 @@ object Datalake {
       clusterBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       partitionBy: Option[Seq[String]] = None): String = {
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val fsOpt = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // stripe = in-process serialization; the commit rides the log on CAS
     // tables (commitDerivedToken) so a cross-process delete landing
     // inside the token-read -> commit window forces a re-derivation
     withRootLock(spark, tableRoot) {
-    var attempt = 0
-    while (attempt < 5) {
-    attempt += 1
-    val seqAtRead = latestCommitSeq(spark, tableRoot)
-    val cur = currentVersion(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    // currentDataPath, not a hand-built v= dir: on an UNDIVERGED shallow
-    // clone the manifest is a ref= pointer and OPTIMIZE-on-clone is that
-    // clone's first divergence (a compacted local v1; the source stays
-    // untouched)
-    val dataPath = currentDataPath(spark, tableRoot).get
-    // partitionBy=None PRESERVES the current version's Hive layout
-    // (round-11 ADVICE: an OPTIMIZE that silently flattened a partitioned
-    // table kept the rows but destroyed partition-directory pruning for
-    // every later reader); Some(Nil) is the explicit flatten.
-    val parts = partitionBy.getOrElse(detectPartitionColumns(spark, dataPath))
-    // token-aware read, NOT a raw dir scan: on a deletion-vector table a
-    // raw scan would resurrect every deleted row into the rewrite.
-    // OPTIMIZE instead FOLDS the vector (the rewrite contains only live
-    // rows) and the new plain v= token retires it — Delta's compaction
-    // contract.
-    val df0 = readToken(spark, tableRoot,
-      manifestToken(spark, tableRoot).get)
-    val cf = org.apache.spark.sql.functions.col _
-    val df =
-      if (clusterBy.nonEmpty)
-        // range over parts FIRST, then the cluster keys: ranging over
-        // clusterBy alone on a Hive-partitioned table lets every one of
-        // the nFiles range tasks see every partition value, and the
-        // writer's partitionBy then splits each task per value — the
-        // nFiles × values small-file explosion the detected-partition
-        // branch exists to avoid. Leading with parts keeps each task
-        // (near-)single-valued in the partition dirs while still
-        // clustering by the requested keys within them.
-        df0.repartitionByRange(nFiles, (parts ++ clusterBy).map(cf): _*)
-      else if (parts.nonEmpty)
-        // co-locate each partition value so every output file is
-        // single-valued; the writer's partitionBy then splits by dir
-        // without a per-task file explosion (nFiles tasks × values files)
-        df0.repartition(nFiles, parts.map(cf): _*)
-      else df0.repartition(nFiles)
-    val newV = nextNumericVersion(spark, tableRoot, Some(cur), "-optimized")
-    stageVersion(df, tableRoot, newV, parts, statsCols)
-    if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-      return newV
-    // lost to a cross-process CAS writer: discard and re-derive
-    try { fsOpt.delete(new org.apache.hadoop.fs.Path(
-      s"$tableRoot/v=$newV"), true); () }
-    catch { case _: Throwable => () }
-    }
-    throw new ConcurrentCommitException(
-      s"optimize on $tableRoot lost 5 commit races — retry")
+      retryCommit(s"optimize on $tableRoot") {
+        // the snapshot's resolved data dir, not a hand-built v= dir: on an
+        // UNDIVERGED shallow clone the manifest is a ref= pointer and
+        // OPTIMIZE-on-clone is that clone's first divergence (a compacted
+        // local v1; the source stays untouched)
+        val snap = readSnapshot(spark, tableRoot)
+        // partitionBy=None PRESERVES the current version's Hive layout
+        // (round-11 ADVICE: an OPTIMIZE that silently flattened a
+        // partitioned table kept the rows but destroyed partition-directory
+        // pruning for every later reader); Some(Nil) is the explicit
+        // flatten.
+        val parts =
+          partitionBy.getOrElse(detectPartitionColumns(spark, snap.dataPath))
+        // token-aware read, NOT a raw dir scan: on a deletion-vector table
+        // a raw scan would resurrect every deleted row into the rewrite.
+        // OPTIMIZE instead FOLDS the vector (the rewrite contains only live
+        // rows) and the new plain v= token retires it — Delta's compaction
+        // contract.
+        val df0 = readToken(spark, tableRoot, snap.token)
+        val cf = org.apache.spark.sql.functions.col _
+        val df =
+          if (clusterBy.nonEmpty)
+            // range over parts FIRST, then the cluster keys: ranging over
+            // clusterBy alone on a Hive-partitioned table lets every one of
+            // the nFiles range tasks see every partition value, and the
+            // writer's partitionBy then splits each task per value — the
+            // nFiles × values small-file explosion the detected-partition
+            // branch exists to avoid. Leading with parts keeps each task
+            // (near-)single-valued in the partition dirs while still
+            // clustering by the requested keys within them.
+            df0.repartitionByRange(nFiles, (parts ++ clusterBy).map(cf): _*)
+          else if (parts.nonEmpty)
+            // co-locate each partition value so every output file is
+            // single-valued; the writer's partitionBy then splits by dir
+            // without a per-task file explosion (nFiles tasks × values files)
+            df0.repartition(nFiles, parts.map(cf): _*)
+          else df0.repartition(nFiles)
+        val newV = nextNumericVersion(spark, tableRoot, Some(snap.version),
+          "-optimized")
+        stageVersion(df, tableRoot, newV, parts, statsCols)
+        commitOrDiscard(spark, tableRoot, snap, s"v=$newV")(newV)
+      }
     }
   }
 
@@ -2551,20 +2481,14 @@ object Datalake {
         Int) => org.apache.spark.sql.Column): String = {
     require(nFiles >= 1 && nFiles.toLong <= (1L << (2 * bits)),
       s"nFiles must be in [1, 4^bits], got $nFiles (bits=$bits)")
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // stripe held across token read -> commit (in-process serialization);
     // the COMMIT rides the log on CAS tables (commitDerivedToken): the
     // rewrite derives from the token read at the top, and a cross-process
     // delete committing inside the window must force a re-derivation,
     // not be discarded by the swap
     withRootLock(spark, tableRoot) {
-      var attempt = 0
-      while (attempt < 5) {
-        attempt += 1
-        val seqAtRead = latestCommitSeq(spark, tableRoot)
-        val cur = currentVersion(spark, tableRoot).getOrElse(
-          throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
+      retryCommit(s"optimize$suffix on $tableRoot") {
+        val snap = readSnapshot(spark, tableRoot)
         val mask = (1L << bits) - 1
         val z = curve(
           org.apache.spark.sql.functions.col(xCol).bitwiseAND(
@@ -2584,24 +2508,16 @@ object Datalake {
             2 * bits).cast("int")
         // token-aware read (see optimize): a curve rewrite folds any live
         // deletion vector instead of resurrecting its rows
-        val df = readToken(spark, tableRoot,
-            manifestToken(spark, tableRoot).get)
+        val df = readToken(spark, tableRoot, snap.token)
           .withColumn("zfile", zfile)
           // one partition per curve range → exactly one file per zfile dir
           .repartition(org.apache.spark.sql.functions.col("zfile"))
-        val newV = nextNumericVersion(spark, tableRoot, Some(cur), suffix)
+        val newV = nextNumericVersion(spark, tableRoot, Some(snap.version),
+          suffix)
         stageVersion(df, tableRoot, newV, Seq("zfile"),
           (Seq(xCol, yCol) ++ extraStatsCols).distinct)
-        if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-          return newV
-        // lost to a cross-process CAS writer: the rewrite is stale —
-        // discard the staged dir and re-derive over the winner's state
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v=$newV"), true); () }
-        catch { case _: Throwable => () }
+        commitOrDiscard(spark, tableRoot, snap, s"v=$newV")(newV)
       }
-      throw new ConcurrentCommitException(
-        s"optimize$suffix on $tableRoot lost 5 commit races — retry")
     }
   }
 
@@ -2773,11 +2689,8 @@ object Datalake {
   def readFileStats(spark: SparkSession, dataPath: String): Seq[FileStat] = {
     val base = new org.apache.hadoop.fs.Path(dataPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(base, StatsFile)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    txt.split("\n").iterator.filter(_.nonEmpty).toSeq
+    readSmallFile(fs, new org.apache.hadoop.fs.Path(base, StatsFile)).toSeq
+      .flatMap(_.split("\n")).filter(_.nonEmpty)
       .map { l =>
         val f = l.split("\t")
         (f(0), f(1).toLong,

@@ -996,6 +996,55 @@ class DatalakeSpec extends SparkSpecBase {
       .head.getLong(0) === 10, "winner's delete resurrected")
   }
 
+  test("mergeInto's lost claim discards its staged version and re-derives over the winner") {
+    // the derived rewrites' lost-claim branch, which no in-JVM schedule
+    // reaches (the stripe serializes local writers): a competitor lands
+    // commit record N+1 between the merge's snapshot read and its claim.
+    // A UDF in the delta frame plays the other process — its first
+    // evaluation, inside the merge's first attempt, writes the record
+    // straight through the Hadoop FS, holding the current manifest token
+    import org.apache.spark.sql.functions.{col, udf}
+    val root = s"${Files.createTempDirectory("graft-mergerace")}/t"
+    Datalake.publish(spark.range(0, 20)
+      .select(col("id"), (col("id") * 10).as("v")).toDF(), root, "1")
+    assert(Datalake.deleteWhere(spark, root, col("id") < 5) === 5)
+    val n = Datalake.latestCommitSeq(spark, root)
+    assert(n === 1L, "the delete makes this a CAS table")
+    val token = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/MANIFEST")), "UTF-8").trim
+    val record = f"$root/_commits/${n + 1}%020d"
+    MergeRace.fired.set(false)
+    val competitor = udf { (v: Long) =>
+      if (MergeRace.fired.compareAndSet(false, true)) {
+        val p = new org.apache.hadoop.fs.Path(record)
+        val out = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+          .create(p, false)
+        try out.write(s"$token\n".getBytes("UTF-8")) finally out.close()
+      }
+      v
+    }
+    // updates 10..19, inserts 20..21
+    val delta = spark.range(10, 22)
+      .select(col("id"), competitor(col("id") * 100).as("v"))
+    val newV = Datalake.mergeInto(spark, root, delta, Seq("id"))
+    assert(MergeRace.fired.get, "the competitor never committed")
+    assert(Datalake.latestCommitSeq(spark, root) === n + 2,
+      "the merge must claim the record after the competitor's")
+    assert(Datalake.commitTokenSeq(spark, root, n + 1) === Some(token))
+    assert(Datalake.commitTokenSeq(spark, root, n + 2) === Some(s"v=$newV"))
+    // the first attempt staged v=2 and lost the claim; had its dir not been
+    // discarded, the retry's numeric successor would be 3 and v=2 an orphan
+    assert(newV === "2")
+    assert(Datalake.listVersions(spark, root) === Seq("1", "2"),
+      "the first attempt's staged version dir survived its lost claim")
+    // the merge landed exactly once, over the snapshot the retry re-read
+    // (the delete's vector folded)
+    val got = Datalake.readPublished(spark, root).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(got === (5L until 10L).map(i => (i, i * 10)) ++
+      (10L until 22L).map(i => (i, i * 100)))
+  }
+
   test("maintenance rewrite and a concurrent delete serialize: neither update is lost") {
     // r13 ADVICE (medium): optimize/optimizeCompact/optimizeZorder/
     // overwritePartitions read the manifest token and swapped later
@@ -1139,4 +1188,10 @@ class DatalakeSpec extends SparkSpecBase {
     Datalake.syncManifestIfNewest(spark, root, 2L, s"v=$v2")
     assert(Datalake.readPublished(spark, root).count() === 2)
   }
+}
+
+/** The competing committer's one-shot latch in the mergeInto lost-claim
+  * spec: JVM-global, so every task evaluating the UDF shares it. */
+private object MergeRace {
+  val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
