@@ -7,8 +7,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — dev-loop filter for
-    // checking one new query without dumping all 135 (the driver always
-    // passes exactly two args, so its contract is unchanged)
+    // checking one new query without dumping every SparkEntry.defs row
+    // (the driver always passes exactly two args, so its contract is
+    // unchanged)
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
       case Array(s, o, names) => (s, o, Some(names.split(",").toSet))
@@ -45,7 +46,7 @@ object Verify {
         val unknown = names.diff(defs.keySet)
         require(unknown.isEmpty,
           s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
-            s"— check SparkEntry.queries")
+            s"— check SparkEntry.defs")
         defs.view.filterKeys(names).toMap
     }
     Files.writeString(Paths.get(s"$outDir/queries.txt"),

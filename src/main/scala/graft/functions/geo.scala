@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Geospatial column builders (round 15c). Pure Column arithmetic — no
   * UDFs, every op stays inside whole-stage codegen, and every step is
   * integer/IEEE-deterministic so the SAME construction replays in the
-  * DuckDB oracle (the generated-SQL twin lives in SparkEntry's
+  * DuckDB oracle (the generated-SQL twin lives in Relational's
   * geohash oracle).
   *
   * Geohash (the reference's geo_point world, index_to_es.py:247-268,
@@ -27,7 +27,7 @@ object geo {
     * quantize to 32768, a 16th bit the 15-bit interleave would misplace
     * — the clamp folds each boundary into its max cell (half-open cells
     * everywhere except the closed top edge, the standard geohash
-    * convention). Mirrored verbatim in SparkEntry.geohashOracle.
+    * convention). Mirrored verbatim in Relational.geohashOracle.
     */
   def geohashBits(lat: Column, lon: Column): Column = {
     val (ix, iy) = cellIndices(lat, lon)

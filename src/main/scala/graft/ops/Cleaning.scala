@@ -22,9 +22,6 @@ object Cleaning {
   def coerceTimestamp(c: Column, fmt: String = "yyyy-MM-dd HH:mm:ss"): Column =
     try_to_timestamp(c, lit(fmt))
 
-  /** NaN → null (parquet/ES both prefer absent over NaN). */
-  def nanToNull(c: Column): Column = when(isnan(c), lit(null)).otherwise(c)
-
   /** Range-validation predicate builder (index_to_es.py filters). */
   def inRange(c: Column, lo: Double, hi: Double): Column =
     c.isNotNull && c >= lo && c <= hi

@@ -97,10 +97,10 @@ object Similarity {
       cosineSim(col("q_emb"), graft.functions.vectors.dequantize(col("qemb"))), k)
 
   /** The ONE definition of the production LSH family. The generated DuckDB
-    * oracle (SparkEntry.lshPairCtes) re-derives the same planes from these
-    * constants, so tuning any of them cannot silently desynchronize the
-    * query from its oracle — both sides change together or the build fails
-    * to say what it checks.
+    * oracle (SimilarityQueries.lshPairCtes) re-derives the same planes
+    * from these constants, so tuning any of them cannot silently
+    * desynchronize the query from its oracle — both sides change together
+    * or the build fails to say what it checks.
     */
   object LshParams {
     val dim = 64
@@ -409,7 +409,7 @@ object Similarity {
 
   /** Search phase against an already-trained centroid model — split out so
     * a caller can hold the exact model (e.g. to generate the DuckDB oracle
-    * with the centroids inlined as literals, SparkEntry.ivfOracle).
+    * with the centroids inlined as literals, SimilarityQueries.ivfOracle).
     */
   def ivfFlatKnnWith(corpus: DataFrame, queries: DataFrame,
       cents: Array[Array[Float]], k: Int, nProbe: Int): DataFrame =
@@ -422,7 +422,7 @@ object Similarity {
     * Composes [[quantizeCorpus]] with the IVF serve; recall vs the float
     * IVF is pinned ≥ 0.95 in SimilaritySpec, and the registered query is
     * exact-oracled — int8 quantize/dequantize replays bit-for-bit in
-    * DuckDB float32 arithmetic (SparkEntry.ivfQuantOracle).
+    * DuckDB float32 arithmetic (SimilarityQueries.ivfQuantOracle).
     */
   def ivfFlatKnnQuantized(qcorpus: DataFrame, queries: DataFrame,
       cents: Array[Array[Float]], k: Int, nProbe: Int): DataFrame =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed}
 import graft.ops.Corpus
 import graft.sources.Tables
 
@@ -363,4 +365,307 @@ object CorpusQueries {
           .as("est_intersection"),
         col("exact_intersection"))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The CorpusQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    // weight = integer-derived arithmetic (bit-identical both engines);
+    // draw = md5 prefix vs fixed-width hex threshold, string compare
+    "q_sample_weighted" -> fixed(qSampleWeighted _)(
+      """WITH d AS (SELECT doc_id, source, text,
+        |    least(1.0, CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE) / 150.0) * 0.5 AS weight
+        |  FROM documents)
+        |SELECT doc_id, source, weight FROM d
+        |WHERE substring(md5(text), 1, 8) <
+        |  lower(lpad(to_hex(greatest(least(CAST(floor(weight * 4294967296.0) AS BIGINT), 4294967295), 0)), 8, '0'))
+        |ORDER BY doc_id""".stripMargin),
+    // eval set = every 50th doc; contamination = any shared word 8-gram
+    // (same normalization as the jaccard oracle)
+    "q_decontaminate" -> fixed(qDecontaminate _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id,
+        |    list_distinct(CASE WHEN len(ws) < 8 THEN [array_to_string(ws, ' ')]
+        |      ELSE list_transform(generate_series(1, len(ws) - 7),
+        |        i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||
+        |          ws[i+4]||' '||ws[i+5]||' '||ws[i+6]||' '||ws[i+7]) END) AS sg
+        |  FROM w),
+        |ev AS (SELECT DISTINCT unnest(sg) AS g FROM sh WHERE doc_id % 50 = 0),
+        |tr AS (SELECT doc_id, unnest(sg) AS g FROM sh WHERE doc_id % 50 <> 0),
+        |hits AS (SELECT tr.doc_id, count(DISTINCT tr.g) AS n_shared
+        |  FROM tr JOIN ev ON tr.g = ev.g GROUP BY tr.doc_id)
+        |SELECT d.doc_id, COALESCE(h.n_shared, CAST(0 AS BIGINT)) AS n_shared,
+        |  COALESCE(h.n_shared, CAST(0 AS BIGINT)) > 0 AS contaminated
+        |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+        |WHERE d.doc_id % 50 <> 0
+        |ORDER BY d.doc_id""".stripMargin),
+    "q_sample_stratified" -> fixed(qSampleStratified _)(
+      """SELECT doc_id, source, substring(md5(text), 1, 3) AS samp_key
+        |FROM documents
+        |WHERE substring(md5(text), 1, 3) <
+        |  (CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS INT) % 2 = 0
+        |    THEN '800' ELSE '333' END)
+        |ORDER BY doc_id""".stripMargin),
+    "q_source_mix" -> fixed(qSourceMix _)(
+      """WITH per AS (SELECT source, COUNT(*) AS n_docs,
+        |    CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS tokens
+        |  FROM documents GROUP BY source),
+        |t AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total_tokens FROM per)
+        |SELECT source, n_docs, tokens,
+        |  CAST(tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE) AS share,
+        |  CAST(FLOOR(1000000 *
+        |    (CAST(tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)))
+        |    AS BIGINT) AS token_budget
+        |FROM per CROSS JOIN t ORDER BY source""".stripMargin),
+    // DuckDB list_slice end is INCLUSIVE (start-1+len), unlike Spark's
+    // slice(start, length)
+    "q_chunk_windows" -> fixed(qChunkWindows _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(text), '\s+') AS ws
+        |  FROM documents),
+        |t AS (SELECT doc_id, ws, len(ws) AS n FROM w),
+        |c AS (SELECT doc_id, ws, n,
+        |    unnest(generate_series(0, greatest((n-1)//48, 0))) AS chunk_idx
+        |  FROM t)
+        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+        |  CAST(chunk_idx*48 AS BIGINT) AS chunk_start,
+        |  CAST(least(64, n - chunk_idx*48) AS BIGINT) AS chunk_len,
+        |  array_to_string(list_slice(ws, chunk_idx*48 + 1,
+        |    chunk_idx*48 + least(64, n - chunk_idx*48)), ' ') AS chunk_text
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    "q_pii_scrub" -> fixed(qPiiScrub _)(
+      """SELECT event_id,
+        |  regexp_replace(props, '\d+', '[NUM]', 'g') AS props_clean,
+        |  CAST(len(regexp_extract_all(props, '\d+')) AS BIGINT) AS n_redacted
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_repetition_filter" -> fixed(qRepetitionFilter _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |d AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
+        |    CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct
+        |  FROM w),
+        |bg AS (SELECT doc_id, unnest(CASE WHEN len(ws) < 2
+        |    THEN [array_to_string(ws, ' ')]
+        |    ELSE list_transform(generate_series(1, len(ws) - 1),
+        |      i -> ws[i]||' '||ws[i+1]) END) AS b
+        |  FROM w),
+        |bc AS (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY doc_id, b),
+        |bt AS (SELECT doc_id, MAX(c) AS top_bigram_n,
+        |    CAST(SUM(c) AS BIGINT) AS n_bigrams FROM bc GROUP BY doc_id)
+        |SELECT d.doc_id, n_words, n_distinct,
+        |  1.0 - CAST(n_distinct AS DOUBLE)/CAST(n_words AS DOUBLE) AS dup_word_ratio,
+        |  CAST(top_bigram_n AS DOUBLE)/CAST(n_bigrams AS DOUBLE) AS top_bigram_frac,
+        |  (1.0 - CAST(n_distinct AS DOUBLE)/CAST(n_words AS DOUBLE)) <= 0.95
+        |    AND CAST(top_bigram_n AS DOUBLE)/CAST(n_bigrams AS DOUBLE) <= 0.18 AS keep
+        |FROM d JOIN bt ON d.doc_id = bt.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    // the composed pipeline: sample → repetition keep → chunk, each stage
+    // the proven oracle fragment of its standalone query
+    "q_corpus_pipeline" -> fixed(qCorpusPipeline _)(
+      """WITH s AS (SELECT doc_id, text FROM documents
+        |  WHERE substring(md5(text), 1, 3) <
+        |    (CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS INT) % 2 = 0
+        |      THEN '800' ELSE '333' END)),
+        |w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS lws
+        |  FROM s),
+        |d AS (SELECT doc_id, len(lws) AS n_words,
+        |    len(list_distinct(lws)) AS n_distinct FROM w),
+        |bg AS (SELECT doc_id, unnest(CASE WHEN len(lws) < 2
+        |    THEN [array_to_string(lws, ' ')]
+        |    ELSE list_transform(generate_series(1, len(lws) - 1),
+        |      i -> lws[i]||' '||lws[i+1]) END) AS b
+        |  FROM w),
+        |bc AS (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY doc_id, b),
+        |bt AS (SELECT doc_id, MAX(c) AS top_n, SUM(c) AS n_bg FROM bc GROUP BY doc_id),
+        |keep AS (SELECT d.doc_id FROM d JOIN bt ON d.doc_id = bt.doc_id
+        |  WHERE 1.0 - CAST(n_distinct AS DOUBLE)/CAST(n_words AS DOUBLE) <= 0.95
+        |    AND CAST(top_n AS DOUBLE)/CAST(n_bg AS DOUBLE) <= 0.18),
+        |t AS (SELECT s.doc_id, regexp_split_to_array(trim(s.text), '\s+') AS ws
+        |  FROM s JOIN keep ON s.doc_id = keep.doc_id),
+        |t2 AS (SELECT doc_id, ws, len(ws) AS n FROM t),
+        |c AS (SELECT doc_id, ws, n,
+        |    unnest(generate_series(0, greatest((n-1)//48, 0))) AS chunk_idx
+        |  FROM t2)
+        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+        |  CAST(chunk_idx*48 AS BIGINT) AS chunk_start,
+        |  CAST(least(64, n - chunk_idx*48) AS BIGINT) AS chunk_len,
+        |  array_to_string(list_slice(ws, chunk_idx*48 + 1,
+        |    chunk_idx*48 + least(64, n - chunk_idx*48)), ' ') AS chunk_text
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    // the two-phase enumeration (bounded subbucket counts + offsets +
+    // within-subbucket row_number) equals ONE window ranked by
+    // (subbucket, key, doc_id) within the shard — which is how the oracle
+    // replays it; shard/subbucket are ascii arithmetic on md5 hex chars,
+    // identical in both engines
+    "q_shard_shuffle" -> fixed(qShardShuffle _)(
+      """WITH k AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS key
+        |  FROM documents),
+        |d AS (SELECT doc_id, key,
+        |    (ascii(substring(key,1,1)) - CASE WHEN ascii(substring(key,1,1)) >= 97
+        |      THEN 87 ELSE 48 END) % 8 AS shard,
+        |    ascii(substring(key,2,1)) - CASE WHEN ascii(substring(key,2,1)) >= 97
+        |      THEN 87 ELSE 48 END AS sub
+        |  FROM k)
+        |SELECT doc_id, CAST(shard AS INT) AS shard,
+        |  CAST(row_number() OVER (PARTITION BY shard
+        |    ORDER BY sub, key, doc_id) - 1 AS BIGINT) AS pos
+        |FROM d ORDER BY shard, pos""".stripMargin),
+    // two-phase curriculum enumeration == ONE window ordered globally by
+    // (tier, subbucket, key, doc_id) — the same replay shape as
+    // q_shard_shuffle; quality fragment = the proven q_quality_score CTE
+    "q_curriculum" -> fixed(qCurriculum _)(
+      """WITH b AS (SELECT doc_id,
+        |    CAST(length(text) AS BIGINT) AS n_chars_txt,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_words,
+        |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS BIGINT) AS n_punct,
+        |    CAST(len(regexp_extract_all(text, '\b(the|and|of|to|in|is)\b')) AS BIGINT) AS n_stop
+        |  FROM documents),
+        |q AS (SELECT doc_id,
+        |    0.4 * least(1.0, CAST(n_words AS DOUBLE)/200.0)
+        |    + 0.3 * (1.0 - least(1.0, (CAST(n_punct AS DOUBLE)/n_chars_txt) * 5.0))
+        |    + 0.3 * least(1.0, (CAST(n_stop AS DOUBLE)/n_words) * 4.0) AS quality
+        |  FROM b),
+        |t AS (SELECT doc_id,
+        |    CAST(3 - least(3, CAST(floor(quality * 4.0) AS INT)) AS INT) AS tier,
+        |    md5(CAST(doc_id AS VARCHAR)) AS key
+        |  FROM q),
+        |d AS (SELECT doc_id, tier, key,
+        |    ascii(substring(key,1,1)) - CASE WHEN ascii(substring(key,1,1)) >= 97
+        |      THEN 87 ELSE 48 END AS sub
+        |  FROM t)
+        |SELECT doc_id, tier,
+        |  CAST(row_number() OVER (ORDER BY tier, sub, key, doc_id) - 1
+        |    AS BIGINT) AS pos
+        |FROM d ORDER BY pos""".stripMargin),
+    // Efraimidis-Spirakis replay: u from the LOW 53 BITS of the md5 lane
+    // (exact in a double on both engines — the full unsigned lane would
+    // double-round in Spark), snapped ln, weight division, top-8 per
+    // source by (key desc, doc_id)
+    "q_sample_reservoir" -> fixed(qSampleReservoir _)(
+      """WITH k AS (SELECT source, doc_id,
+        |    (floor(ln((CAST(md5_number_lower(CAST(doc_id AS VARCHAR))
+        |          AS HUGEINT) % 9007199254740992 + 1)
+        |        / 9007199254740992.0) * 65536.0) / 65536.0)
+        |      / CAST(n_chars + 1 AS DOUBLE) AS es_key
+        |  FROM documents),
+        |r AS (SELECT source, doc_id, es_key, row_number() OVER
+        |    (PARTITION BY source ORDER BY es_key DESC, doc_id) AS rn
+        |  FROM k)
+        |SELECT source, doc_id, es_key FROM r WHERE rn <= 8
+        |ORDER BY source, es_key DESC, doc_id""".stripMargin),
+    // domain-quota pass: the engine runs the bounded-heap topk aggregate
+    // (k·partitions rows per source through the exchange); the oracle is
+    // the WINDOW form — heap == window semantics incl. tie order
+    // (n_chars DESC, doc_id ASC) is re-proven by hash every round
+    "q_source_quota" -> fixed(qSourceQuota _)(
+      """WITH r AS (SELECT source, doc_id, length(text) AS n_chars,
+        |    row_number() OVER (PARTITION BY source
+        |      ORDER BY length(text) DESC, doc_id) AS rank
+        |  FROM documents)
+        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id,
+        |  CAST(n_chars AS BIGINT) AS n_chars
+        |FROM r WHERE rank <= 50 ORDER BY source, rank""".stripMargin),
+    // the NAIVE per-row running-sum window — the engine's histogram-window
+    // fill must equal it exactly (keep while tokens-before < budget, the
+    // crossing doc kept)
+    "q_token_budget" -> fixed(qTokenBudget _)(
+      """WITH d AS (SELECT source, doc_id,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
+        |      AS n_tokens
+        |  FROM documents),
+        |w AS (SELECT source, doc_id, n_tokens,
+        |    COALESCE(SUM(n_tokens) OVER (PARTITION BY source
+        |      ORDER BY n_tokens DESC, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS cum_before
+        |  FROM d)
+        |SELECT source, doc_id, n_tokens FROM w WHERE cum_before < 800
+        |ORDER BY source, n_tokens DESC, doc_id""".stripMargin),
+    // α=1/2 temperature weights: sqrt is correctly rounded in both
+    // engines, each weight snaps to the 2^-20 grid pre-sum → the
+    // normalizer is an exact dyadic sum, shares single IEEE divisions
+    "q_source_temperature" -> fixed(qSourceTemperature _)(
+      """WITH per AS (SELECT source, COUNT(*) AS n_docs,
+        |    CAST(SUM(len(regexp_split_to_array(trim(text), '\s+')))
+        |      AS BIGINT) AS tokens
+        |  FROM documents GROUP BY 1),
+        |w AS (SELECT *, floor(sqrt(CAST(tokens AS DOUBLE)) * 1048576.0)
+        |    / 1048576.0 AS w FROM per),
+        |t AS (SELECT SUM(w) AS wsum, CAST(SUM(tokens) AS BIGINT)
+        |    AS total_tokens FROM w)
+        |SELECT source, n_docs, tokens,
+        |  CAST(tokens AS DOUBLE) / total_tokens AS raw_share,
+        |  w / wsum AS temp_share,
+        |  CAST(floor(1000000.0 * (w / wsum)) AS BIGINT) AS token_budget
+        |FROM w, t ORDER BY source""".stripMargin),
+    "q_train_split" -> fixed(qTrainSplit _)(
+      """SELECT doc_id, source,
+        |  CAST(((doc_id * 2654435761) >> 16) % 100 AS BIGINT) AS bucket,
+        |  CASE WHEN ((doc_id * 2654435761) >> 16) % 100 < 80 THEN 'train'
+        |       WHEN ((doc_id * 2654435761) >> 16) % 100 < 90 THEN 'valid'
+        |       ELSE 'test' END AS split
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // KMV replay: masked hashes are exact longs in both engines (mod 2^62
+    // of the md5 lane — non-negative, identical ordering); the estimator
+    // divides two identically-rounded doubles and snaps to the 2^-16
+    // grid; rho/256 is exact dyadic; exact counts ride along
+    "q_kmv_overlap" -> fixed(qKmvOverlap _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id,
+        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+        |      ELSE list_transform(generate_series(1, len(ws) - 2),
+        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
+        |  FROM w),
+        |p AS (SELECT doc_id, unnest(sg) AS s FROM sh),
+        |hh AS (SELECT doc_id, CAST(CAST(md5_number_lower(s) AS HUGEINT)
+        |    % 4611686018427387904 AS BIGINT) AS h FROM p),
+        |ea AS (SELECT DISTINCT h FROM hh WHERE doc_id % 2 = 0),
+        |eb AS (SELECT DISTINCT h FROM hh WHERE doc_id % 3 = 0),
+        |sa AS (SELECT h FROM ea ORDER BY h LIMIT 256),
+        |sb AS (SELECT h FROM eb ORDER BY h LIMIT 256),
+        |su AS (SELECT DISTINCT h FROM
+        |    (SELECT h FROM sa UNION ALL SELECT h FROM sb)
+        |  ORDER BY h LIMIT 256),
+        |kth AS (SELECT MAX(h) AS kth_value, COUNT(*) AS k FROM su),
+        |rho_t AS (SELECT COUNT(*) AS rho FROM su
+        |  WHERE h IN (SELECT h FROM sa) AND h IN (SELECT h FROM sb)),
+        |exu AS (SELECT COUNT(*) AS exact_union FROM
+        |  (SELECT h FROM ea UNION SELECT h FROM eb)),
+        |exi AS (SELECT COUNT(*) AS exact_intersection FROM ea
+        |  WHERE h IN (SELECT h FROM eb)),
+        |est AS (SELECT k, kth_value,
+        |    floor((CAST(255 AS DOUBLE) * CAST(4611686018427387904 AS DOUBLE)
+        |      / CAST(kth_value AS DOUBLE)) * CAST(65536 AS DOUBLE))
+        |      / CAST(65536 AS DOUBLE) AS est_union
+        |  FROM kth)
+        |SELECT CAST(k AS BIGINT) AS k, kth_value, est_union, exact_union,
+        |  CAST(rho AS BIGINT) AS rho,
+        |  CAST(rho AS DOUBLE) / CAST(256 AS DOUBLE) AS jaccard_est,
+        |  est_union * (CAST(rho AS DOUBLE) / CAST(256 AS DOUBLE))
+        |    AS est_intersection,
+        |  exact_intersection
+        |FROM est CROSS JOIN rho_t CROSS JOIN exu CROSS JOIN exi""".stripMargin),
+    // Hamilton apportionment in exact long arithmetic: scaled remainders
+    // (S·n mod N) avoid fractions; Σ alloc == S by construction
+    "q_largest_remainder" -> fixed(qLargestRemainder _)(
+      """WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents
+        |  GROUP BY 1),
+        |t AS (SELECT source, n_docs, SUM(n_docs) OVER () AS n_total FROM c),
+        |s AS (SELECT source, n_docs,
+        |    (10000 * n_docs) // n_total AS base,
+        |    (10000 * n_docs) % n_total AS rem FROM t),
+        |r AS (SELECT *,
+        |    row_number() OVER (ORDER BY rem DESC, source) AS rem_rank,
+        |    10000 - SUM(base) OVER () AS leftover FROM s)
+        |SELECT source, n_docs,
+        |  CAST(base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END
+        |    AS BIGINT) AS alloc,
+        |  CAST(rem_rank AS BIGINT) AS rem_rank
+        |FROM r ORDER BY source""".stripMargin),
+  )
 }

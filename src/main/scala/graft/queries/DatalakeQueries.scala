@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed}
 import graft.sources.{Datalake, Tables, Watermark}
 
 /** The reference's whole DAG (dags/DAG_Project.py:1-82) as ONE composed
@@ -1698,4 +1700,580 @@ object DatalakeQueries {
           .when(col("o_orderkey") % 3 === 0, lit("inserted"))
           .otherwise(lit("updated")))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The q_datalake_pipeline oracle; q_stream_datalake, q_stream_publish
+    * replay it verbatim.
+    * the full DAG (raw JSON → coerce+dedup → usage stats) reduced to its
+    * data semantics: the lake-layer round trips are lossless (micros longs
+    * through JSON, parquet elsewhere), so DuckDB computes the usage
+    * aggregate straight off the source table
+    */
+  private[graft] def datalakePipelineOracle: String =
+    """WITH e AS (SELECT event_id, user_id, event_type,
+      |    COALESCE(value, 0.0) AS value_clean,
+      |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS event_date,
+      |    CAST(ts AS TIMESTAMP) AS tsx
+      |  FROM events),
+      |d AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+      |    ORDER BY tsx DESC, event_id DESC) AS rn FROM e)
+      |SELECT event_type, event_date, COUNT(*) AS n_events,
+      |  CAST(SUM(CAST(value_clean AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+      |FROM d WHERE rn = 1 AND value_clean > 0
+      |GROUP BY event_type, event_date
+      |ORDER BY event_type, event_date""".stripMargin
+
+  /** The DatalakeQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    // the full DAG (raw JSON → coerce+dedup → usage stats) reduced to its
+    // data semantics: the lake-layer round trips are lossless (micros longs
+    // through JSON, parquet elsewhere), so DuckDB computes the usage
+    // aggregate straight off the source table
+    "q_datalake_pipeline" -> fixed(qDatalakePipeline _)(datalakePipelineOracle),
+    // the dual-feed DAG reduced to its data semantics: both lake round
+    // trips are lossless for the columns used (micros longs through JSON;
+    // long/int/varchar through CSV), so DuckDB joins the source tables
+    // directly after replaying the JSON side's coerce+dedup
+    "q_datalake_dual" -> fixed(qDatalakeDual _)(
+      """WITH e AS (SELECT event_id, user_id, event_type,
+        |    COALESCE(value, 0.0) AS value_clean,
+        |    CAST(ts AS TIMESTAMP) AS tsx
+        |  FROM events),
+        |d AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+        |    ORDER BY tsx DESC, event_id DESC) AS rn FROM e),
+        |f AS (SELECT * FROM d WHERE rn = 1 AND value_clean > 0)
+        |SELECT c_mktsegment, event_type, COUNT(*) AS n_events,
+        |  COUNT(DISTINCT user_id) AS n_users,
+        |  CAST(SUM(CAST(value_clean AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM f JOIN customer ON user_id = c_custkey
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // incremental == full recompute: the oracle is the ONE-PASS aggregate,
+    // so the driver re-proves the store+delta merge exact every round
+    "q_mv_incremental" -> fixed(qMvIncremental _)(
+      """SELECT o_orderdate,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        |  COUNT(*) AS n_orders
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    // presence markers, not value-null checks; +5.0 is an exact IEEE add
+    // so changed-ness is bit-decidable in both engines
+    "q_table_diff" -> fixed(qTableDiff _)(
+      """WITH old AS (SELECT o_orderkey, 1 AS in_old,
+        |    o_totalprice AS old_price
+        |  FROM orders WHERE o_orderkey % 7 <> 0),
+        |new AS (SELECT o_orderkey, 1 AS in_new,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+        |      ELSE o_totalprice END AS new_price
+        |  FROM orders WHERE o_orderkey % 5 <> 0),
+        |d AS (SELECT COALESCE(old.o_orderkey, new.o_orderkey) AS o_orderkey,
+        |    old_price, new_price,
+        |    CASE WHEN in_old IS NULL THEN 'added'
+        |      WHEN in_new IS NULL THEN 'removed'
+        |      WHEN old_price IS DISTINCT FROM new_price THEN 'changed'
+        |      ELSE 'unchanged' END AS status
+        |  FROM old FULL OUTER JOIN new ON old.o_orderkey = new.o_orderkey)
+        |SELECT o_orderkey, status, old_price, new_price FROM d
+        |WHERE status <> 'unchanged' ORDER BY o_orderkey""".stripMargin),
+    "q_merge_upsert" -> fixed(qMergeUpsert _)(
+      """WITH base AS (SELECT o_orderkey, 1 AS in_base, o_custkey,
+        |    o_totalprice, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 3 <> 0),
+        |delta AS (SELECT o_orderkey, 1 AS in_delta,
+        |    o_custkey AS d_custkey, o_totalprice + 10.0 AS d_price,
+        |    'MERGED' AS d_priority
+        |  FROM orders WHERE o_orderkey % 2 = 0)
+        |SELECT COALESCE(base.o_orderkey, delta.o_orderkey) AS o_orderkey,
+        |  COALESCE(d_custkey, o_custkey) AS o_custkey,
+        |  CASE WHEN in_delta IS NOT NULL THEN d_price
+        |    ELSE o_totalprice END AS o_totalprice,
+        |  CASE WHEN in_delta IS NOT NULL THEN d_priority
+        |    ELSE o_orderpriority END AS o_orderpriority,
+        |  CASE WHEN in_base IS NULL THEN 'inserted'
+        |    WHEN in_delta IS NULL THEN 'kept'
+        |    ELSE 'updated' END AS action
+        |FROM base FULL OUTER JOIN delta ON base.o_orderkey = delta.o_orderkey
+        |ORDER BY o_orderkey""".stripMargin),
+    // MERGE with the DELETE arm: matched deletes (key ≡ 0 mod 10) drop
+    // the base row, unmatched deletes are no-ops — the WHERE clause after
+    // the full outer join IS the delete arm
+    "q_merge_delete" -> fixed(qMergeDelete _)(
+      """WITH base AS (SELECT o_orderkey, 1 AS in_base, o_custkey,
+        |    o_totalprice, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 3 <> 0),
+        |delta AS (SELECT o_orderkey, 1 AS in_delta,
+        |    o_custkey AS d_custkey, o_totalprice + 10.0 AS d_price,
+        |    'MERGED' AS d_priority,
+        |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete'
+        |      ELSE 'upsert' END AS d_op
+        |  FROM orders WHERE o_orderkey % 2 = 0)
+        |SELECT COALESCE(base.o_orderkey, delta.o_orderkey) AS o_orderkey,
+        |  COALESCE(d_custkey, o_custkey) AS o_custkey,
+        |  CASE WHEN in_delta IS NOT NULL THEN d_price
+        |    ELSE o_totalprice END AS o_totalprice,
+        |  CASE WHEN in_delta IS NOT NULL THEN d_priority
+        |    ELSE o_orderpriority END AS o_orderpriority,
+        |  CASE WHEN in_base IS NULL THEN 'inserted'
+        |    WHEN in_delta IS NULL THEN 'kept'
+        |    ELSE 'updated' END AS action
+        |FROM base FULL OUTER JOIN delta ON base.o_orderkey = delta.o_orderkey
+        |WHERE d_op IS NULL OR d_op <> 'delete'
+        |ORDER BY o_orderkey""".stripMargin),
+    // CDF replay: insert/delete one row each, updates emit PRE+POST image
+    // pairs; unchanged keys emit nothing. The engine runs this through a
+    // real publish → version-read round trip; the oracle replays the
+    // feed classes from the same filters over orders.
+    "q_change_feed" -> fixed(qChangeFeed _)(
+      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
+        |    WHERE o_orderkey % 7 <> 0),
+        |nu AS (SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+        |      ELSE o_totalprice END AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 5 <> 0),
+        |j AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k,
+        |    o.o_orderkey AS ko, n.o_orderkey AS kn,
+        |    o.o_totalprice AS po, n.o_totalprice AS pn
+        |  FROM old o FULL OUTER JOIN nu n ON o.o_orderkey = n.o_orderkey)
+        |SELECT k AS o_orderkey, pn AS o_totalprice,
+        |    'insert' AS _change_type, '1' AS _from_version,
+        |    '2' AS _to_version
+        |  FROM j WHERE ko IS NULL
+        |UNION ALL SELECT k, po, 'delete', '1', '2' FROM j WHERE kn IS NULL
+        |UNION ALL SELECT k, po, 'update_preimage', '1', '2' FROM j
+        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+        |    AND po IS DISTINCT FROM pn
+        |UNION ALL SELECT k, pn, 'update_postimage', '1', '2' FROM j
+        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+        |    AND po IS DISTINCT FROM pn
+        |ORDER BY o_orderkey, _change_type""".stripMargin),
+    // the oracle replays the SNAPSHOT RULES directly — the Spark side must
+    // round-trip them through publish/readVersion/readPublished to match,
+    // so a wrong manifest resolution or version bleed hash-fails here
+    "q_time_travel" -> fixed(qTimeTravel _)(
+      """WITH old AS (SELECT o_orderkey, 1 AS in_old,
+        |    o_totalprice AS old_price
+        |  FROM orders WHERE o_orderkey % 7 <> 0),
+        |new AS (SELECT o_orderkey, 1 AS in_new,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+        |      ELSE o_totalprice END AS new_price
+        |  FROM orders WHERE o_orderkey % 5 <> 0),
+        |d AS (SELECT CASE WHEN in_old IS NULL THEN 'added'
+        |      WHEN in_new IS NULL THEN 'removed'
+        |      WHEN old_price IS DISTINCT FROM new_price THEN 'changed'
+        |      ELSE 'unchanged' END AS status, old_price, new_price
+        |  FROM old FULL OUTER JOIN new ON old.o_orderkey = new.o_orderkey)
+        |SELECT status, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(old_price AS DECIMAL(18,2))) AS DOUBLE) AS sum_old,
+        |  CAST(SUM(CAST(new_price AS DECIMAL(18,2))) AS DOUBLE) AS sum_new
+        |FROM d WHERE status <> 'unchanged'
+        |GROUP BY status ORDER BY status""".stripMargin),
+    // AS OF TIMESTAMP: the oracle replays the resolution rule's four
+    // cases directly (between / exactly-on / between / after) — a wrong
+    // ≤-boundary or version mix-up changes resolved_version AND the mass
+    "q_time_travel_ts" -> fixed(qTimeTravelTs _)(
+      """WITH v1 AS (SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS sum_price
+        |  FROM orders WHERE o_orderkey % 7 <> 0),
+        |v2 AS (SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CAST(CASE WHEN o_orderkey % 3 = 0
+        |        THEN o_totalprice + 5.0 ELSE o_totalprice END
+        |      AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |  FROM orders WHERE o_orderkey % 7 <> 0),
+        |v3 AS (SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS sum_price
+        |  FROM orders WHERE o_orderkey % 5 <> 0)
+        |SELECT CAST(1500 AS BIGINT) AS probe_ts, '1' AS resolved_version,
+        |  n_rows, sum_price FROM v1
+        |UNION ALL SELECT CAST(2000 AS BIGINT), '2', n_rows, sum_price
+        |  FROM v2
+        |UNION ALL SELECT CAST(2500 AS BIGINT), '2', n_rows, sum_price
+        |  FROM v2
+        |UNION ALL SELECT CAST(9000 AS BIGINT), '3', n_rows, sum_price
+        |  FROM v3
+        |ORDER BY probe_ts""".stripMargin),
+    // commit-log checkpoint: 12 appends (pointer rolled at 10) → probe
+    // resolution examines 3 (2 probes + the pointer read), never the 12
+    // live records; the mass re-proves the resolved state is unchanged
+    "q_commit_checkpoint" -> fixed(qCommitCheckpoint _)(
+      """SELECT COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price,
+        |  CAST(12 AS BIGINT) AS latest_seq,
+        |  CAST(12 AS BIGINT) AS records_live,
+        |  CAST(3 AS BIGINT) AS n_examined,
+        |  CAST(1 AS BIGINT) AS used_checkpoint
+        |FROM orders""".stripMargin),
+    // evolving MERGE: the delta's NEW column (o_orderpriority) appends to
+    // the schema — delta rows carry it, pre-existing base rows
+    // null-backfill ('kept'); the FULL OUTER JOIN form with the added
+    // column is the oracle
+    "q_merge_evolve" -> fixed(qMergeEvolve _)(
+      """WITH base AS (SELECT o_orderkey, o_totalprice
+        |  FROM orders WHERE o_orderkey % 3 <> 0),
+        |delta AS (SELECT o_orderkey, o_totalprice + 10.0 AS d_price,
+        |    o_orderpriority AS d_prio
+        |  FROM orders WHERE o_orderkey % 2 = 0)
+        |SELECT COALESCE(delta.o_orderkey, base.o_orderkey) AS o_orderkey,
+        |  CASE WHEN delta.o_orderkey IS NOT NULL THEN d_price
+        |    ELSE base.o_totalprice END AS o_totalprice,
+        |  d_prio AS o_orderpriority,
+        |  CASE WHEN d_prio IS NULL THEN 'kept'
+        |    WHEN COALESCE(delta.o_orderkey, base.o_orderkey) % 3 = 0
+        |      THEN 'inserted'
+        |    ELSE 'updated' END AS action
+        |FROM base FULL OUTER JOIN delta
+        |  ON base.o_orderkey = delta.o_orderkey""".stripMargin),
+    // bounded task retry: the publish stage's torn first attempt must be
+    // invisible through the manifest; attempts (1, 2) are the evidence
+    "q_pipeline_retry" -> fixed(qPipelineRetry _)(
+      """SELECT o_orderpriority, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue,
+        |  CAST(1 AS BIGINT) AS attempts_format,
+        |  CAST(2 AS BIGINT) AS attempts_publish
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_vacuum" -> fixed(qVacuum _)(
+      """WITH o AS (SELECT o_orderkey,
+        |    CAST(o_totalprice AS DECIMAL(18,2)) AS p, o_orderpriority
+        |  FROM orders),
+        |v2 AS (SELECT '2' AS version, COUNT(*) AS n_rows,
+        |    CAST(SUM(p) AS DOUBLE) AS sum_price,
+        |    CAST(0 AS BIGINT) AS n_with_priority
+        |  FROM o WHERE o_orderkey % 5 <> 0),
+        |v3 AS (SELECT '3' AS version, COUNT(*) AS n_rows,
+        |    CAST(SUM(p) AS DOUBLE) AS sum_price,
+        |    COUNT(o_orderpriority) AS n_with_priority
+        |  FROM o WHERE o_orderkey % 3 <> 0)
+        |SELECT version, n_rows, sum_price, n_with_priority,
+        |  CAST(2 AS BIGINT) AS n_versions_left
+        |FROM (SELECT * FROM v2 UNION ALL SELECT * FROM v3)
+        |ORDER BY version""".stripMargin),
+    "q_deletion_vectors" -> fixed(qDeletionVectors _)(
+      """SELECT o_orderpriority, CAST(8 AS BIGINT) AS files_before,
+        |  CAST(8 AS BIGINT) AS files_after, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders
+        |WHERE NOT (o_orderkey % 10 = 0) AND NOT (o_totalprice > 200000.0)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // partition-overwrite replay: final state = untouched days + the
+    // restated day's clicks only + the shifted backfill day
+    "q_partition_overwrite" -> fixed(qPartitionOverwrite _)(
+      """WITH e AS (SELECT event_id, ts, event_type, value,
+        |    CAST(ts AS DATE) AS day FROM events),
+        |final AS (
+        |  SELECT * FROM e WHERE day <> DATE '2024-01-10'
+        |    AND day <> DATE '2024-02-01'
+        |  UNION ALL
+        |  SELECT * FROM e
+        |  WHERE day = DATE '2024-01-10' AND event_type = 'click'
+        |  UNION ALL
+        |  SELECT event_id, ts + INTERVAL 31 DAY, event_type, value,
+        |    CAST(ts + INTERVAL 31 DAY AS DATE)
+        |  FROM e WHERE day = DATE '2024-01-01')
+        |SELECT day, COUNT(*) AS n_events,
+        |  COUNT(DISTINCT event_type) AS n_types
+        |FROM final GROUP BY day ORDER BY day""".stripMargin),
+    // selective compaction: invisible in values (plain aggregate); the
+    // 8/6/2/3 accounting is deterministic by construction (2 bulk +
+    // 6 trickle files, threshold total/20 scales with SF)
+    "q_compact_small" -> fixed(qCompactSmall _)(
+      """SELECT o_orderpriority, CAST(8 AS BIGINT) AS files_before,
+        |  CAST(6 AS BIGINT) AS files_compacted,
+        |  CAST(2 AS BIGINT) AS files_copied,
+        |  CAST(3 AS BIGINT) AS files_after, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
+    // erasure proof: physical-absence and version counts are structural
+    // zeros/ones; survivors = NOT subject
+    "q_gdpr_erase" -> fixed(qGdprErase _)(
+      """SELECT CAST(0 AS BIGINT) AS n_subject_rows_physical,
+        |  CAST(1 AS BIGINT) AS n_versions_left,
+        |  COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
+        |FROM customer WHERE NOT (c_custkey % 100 = 7)""".stripMargin),
+    // both tables computed from the SAME subset — a torn snapshot breaks
+    // the cross-table invariant and hash-fails
+    "q_multi_table_txn" -> fixed(qMultiTableTxn _)(
+      """WITH s AS (SELECT * FROM orders WHERE o_orderkey % 2 = 0),
+        |a AS (SELECT o_orderpriority, COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS revenue
+        |  FROM s GROUP BY 1),
+        |b AS (SELECT COUNT(*) AS n_total,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS revenue_total
+        |  FROM s)
+        |SELECT CAST(2 AS BIGINT) AS txn, o_orderpriority, n_orders,
+        |  revenue, n_total, revenue_total
+        |FROM a, b ORDER BY o_orderpriority""".stripMargin),
+    // OPTIMIZE evidence: the aggregate is the plain orders query (the
+    // rewrite must be invisible in values); file counts are deterministic
+    // (round-robin 64 → range 4, one file per non-empty partition)
+    "q_optimize" -> fixed(qOptimize _)(
+      """SELECT o_orderpriority, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        |  CAST(64 AS BIGINT) AS files_before, CAST(4 AS BIGINT) AS files_after
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
+    // the oracle replays all three clone-lifecycle snapshots from orders:
+    // a broken ref pointer (clone_at_clone), a lost/duplicated divergence
+    // row (clone_after), or source mutation (src_after) each hash-fail;
+    // the n_own_versions literals pin zero-copy + exactly-one-new-version
+    "q_shallow_clone" -> fixed(qShallowClone _)(
+      """WITH o AS (SELECT o_orderkey, o_totalprice FROM orders),
+        |s0 AS (SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS sum_price FROM o),
+        |s1 AS (SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CAST(CASE WHEN o_orderkey % 3 = 0
+        |        THEN o_totalprice + 5.0 ELSE o_totalprice END
+        |      AS DECIMAL(18,2))) AS DOUBLE) AS sum_price FROM o)
+        |SELECT 'clone_after' AS snapshot, n_rows, sum_price,
+        |  CAST(1 AS BIGINT) AS n_own_versions FROM s1
+        |UNION ALL SELECT 'clone_at_clone', n_rows, sum_price,
+        |  CAST(0 AS BIGINT) FROM s0
+        |UNION ALL SELECT 'src_after', n_rows, sum_price,
+        |  CAST(1 AS BIGINT) FROM s0
+        |ORDER BY snapshot""".stripMargin),
+    // CAS-publish race: whichever writer wins the first commit, the final
+    // table is even-keys ∪ odd-keys exactly once — so the oracle is the
+    // plain per-half aggregate; the commit-count and abort literals pin
+    // "2 commits, no lost version, stale single-shot refused"
+    "q_concurrent_publish" -> fixed(qConcurrentPublish _)(
+      """SELECT CAST(o_orderkey % 2 AS BIGINT) AS writer,
+        |  COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price,
+        |  CAST(2 AS BIGINT) AS n_commits,
+        |  CAST(1 AS BIGINT) AS stale_publish_aborted
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    // survivors = base minus BOTH racing predicates; the literals pin the
+    // protocol evidence (2 log records, stale claim lost)
+    "q_concurrent_delete" -> fixed(qConcurrentDelete _)(
+      """SELECT COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price,
+        |  CAST(2 AS BIGINT) AS n_commits,
+        |  CAST(1 AS BIGINT) AS stale_delete_lost
+        |FROM orders
+        |WHERE NOT (o_orderkey % 10 = 0)
+        |  AND NOT (o_totalprice > 200000.0)""".stripMargin),
+    // the committed MERGE: identical FULL OUTER JOIN + CASE as the
+    // non-committed merges, with the deletion vector's predicate folded
+    // into the base CTE (the merge reads THROUGH the vector)
+    "q_merge_publish" -> fixed(qMergePublish _)(
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+        |  FROM orders
+        |  WHERE o_orderkey % 3 <> 0 AND NOT (o_custkey % 7 = 0)
+        |), delta AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    o_totalprice + 10.0 AS o_totalprice,
+        |    'MERGED' AS o_orderpriority,
+        |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete' ELSE 'upsert'
+        |      END AS d_op
+        |  FROM orders WHERE o_orderkey % 2 = 0
+        |)
+        |SELECT COALESCE(d.o_orderkey, b.o_orderkey) AS o_orderkey,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_custkey
+        |    ELSE b.o_custkey END AS o_custkey,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_totalprice
+        |    ELSE b.o_totalprice END AS o_totalprice,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderpriority
+        |    ELSE b.o_orderpriority END AS o_orderpriority
+        |FROM base b FULL OUTER JOIN delta d
+        |  ON b.o_orderkey = d.o_orderkey
+        |WHERE NOT (d.o_orderkey IS NOT NULL AND d.d_op = 'delete')
+        |ORDER BY 1""".stripMargin),
+    // COMMUTING racing mergers: the final table is the closed form of
+    // both writers' arms regardless of schedule; the 2-commit literal
+    // pins that losing claims create no record
+    "q_merge_concurrent" -> fixed(qMergeConcurrent _)(
+      """WITH survivors AS (
+        |  SELECT o_orderkey, o_totalprice FROM orders
+        |  WHERE o_orderkey % 3 <> 0 AND o_orderkey % 10 NOT IN (2, 5, 7)
+        |  UNION ALL
+        |  SELECT o_orderkey, o_totalprice + 10.0 FROM orders
+        |  WHERE o_orderkey % 10 = 2
+        |  UNION ALL
+        |  SELECT o_orderkey, o_totalprice + 20.0 FROM orders
+        |  WHERE o_orderkey % 10 = 7)
+        |SELECT COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price,
+        |  CAST(2 AS BIGINT) AS n_commits
+        |FROM survivors""".stripMargin),
+    // log retention: 5 appends (records 1-5) → sweep to newest 2 (3
+    // removed) → a delete commit claims 6 over the truncated log
+    "q_vacuum_commits" -> fixed(qVacuumCommits _)(
+      """SELECT COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price,
+        |  CAST(3 AS BIGINT) AS n_removed,
+        |  CAST(6 AS BIGINT) AS latest_seq
+        |FROM orders
+        |WHERE NOT (o_orderkey % 100 = 0)""".stripMargin),
+    // per-partition compaction: survivors exclude both DV predicates
+    // (small-file share FOLDED, copied-file share CARRIED); the literals
+    // pin the per-partition 4→2 file accounting (1 bulk + 3 trickle →
+    // 1 copied + 1 compacted in each of the 5 priority partitions)
+    "q_compact_partitioned" -> fixed(qCompactPartitioned _)(
+      """SELECT o_orderpriority,
+        |  COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue,
+        |  CAST(4 AS BIGINT) AS files_before_part,
+        |  CAST(2 AS BIGINT) AS files_after_part,
+        |  CAST(15 AS BIGINT) AS files_compacted,
+        |  CAST(5 AS BIGINT) AS files_copied
+        |FROM orders
+        |WHERE NOT (o_orderkey % 10 = 9 OR o_orderkey % 100 = 0)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // bitemporal replay: wave k's SCD2 history from events with
+    // event_id % 3 <= k, state at valid-time V = newest valid_from <= V
+    // (change_id tie-break) — the knowledge-time axis replayed as the
+    // wave filter instead of the lake's publishAt timestamps
+    "q_bitemporal" -> fixed(qBitemporal _)(
+      """WITH probes(known_at, wave) AS (
+        |  VALUES (1500, 0), (2500, 1), (3500, 2)),
+        |e AS (SELECT p.known_at, user_id, ts, event_type, event_id,
+        |    lag(event_type) OVER w AS prev, row_number() OVER w AS rn
+        |  FROM events, probes p WHERE event_id % 3 <= p.wave
+        |  WINDOW w AS (PARTITION BY p.known_at, user_id
+        |    ORDER BY ts, event_id)),
+        |ch AS (SELECT known_at, user_id, event_type AS state,
+        |    ts AS valid_from, event_id AS change_id
+        |  FROM e WHERE rn = 1 OR prev IS DISTINCT FROM event_type),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY known_at, user_id
+        |    ORDER BY valid_from DESC, change_id DESC) AS rn2
+        |  FROM ch
+        |  WHERE valid_from <= TIMESTAMP '2024-01-16 00:00:00')
+        |SELECT CAST(known_at AS BIGINT) AS known_at, user_id, state,
+        |  valid_from
+        |FROM r WHERE rn2 = 1
+        |ORDER BY known_at, user_id""".stripMargin),
+    // full-recompute oracle: the driver hash-compare re-proves
+    // incremental == from-scratch on the delta-join algebra every round
+    "q_mv_join_incremental" -> fixed(qMvJoinIncremental _)(
+      """WITH j AS (SELECT o.o_orderkey, c.c_mktsegment, o.o_totalprice,
+        |    CASE WHEN o.o_orderkey % 5 <> 4 AND c.c_custkey % 7 <> 3
+        |      THEN 'store' ELSE 'delta' END AS src
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
+        |SELECT c_mktsegment, COUNT(*) AS n_rows,
+        |  CAST(SUM(CASE WHEN src = 'store' THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_from_store,
+        |  CAST(SUM(CASE WHEN src <> 'store' THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_from_delta,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
+    // one writer task per segment → one file per partition value, so the
+    // layout (and the file-count evidence) is a pure function of the
+    // data: files replay as COUNT(DISTINCT key) over the same splits
+    "q_partition_evolution" -> fixed(qPartitionEvolution _)(
+      """WITH e AS (SELECT event_id,
+        |    CAST(date_trunc('day', ts) AS DATE) AS day,
+        |    event_type, value FROM events),
+        |old AS (SELECT * FROM e WHERE event_id % 3 <> 0),
+        |new AS (SELECT * FROM e WHERE event_id % 3 = 0)
+        |SELECT '1' AS version, 'event_type' AS spec,
+        |  (SELECT COUNT(DISTINCT event_type) FROM old) AS files_total,
+        |  (SELECT COUNT(DISTINCT event_type) FROM old) AS files_scanned,
+        |  COUNT(CASE WHEN day = DATE '2024-01-10' THEN 1 END) AS n_match,
+        |  CAST(COALESCE(SUM(CASE WHEN day = DATE '2024-01-10'
+        |    THEN CAST(value AS DECIMAL(18,2)) END), 0) AS DOUBLE)
+        |    AS sum_value
+        |FROM old
+        |UNION ALL
+        |SELECT '2', 'day',
+        |  (SELECT COUNT(DISTINCT day) FROM new),
+        |  (SELECT COUNT(DISTINCT day) FROM new
+        |    WHERE day = DATE '2024-01-10'),
+        |  COUNT(CASE WHEN day = DATE '2024-01-10' THEN 1 END),
+        |  CAST(COALESCE(SUM(CASE WHEN day = DATE '2024-01-10'
+        |    THEN CAST(value AS DECIMAL(18,2)) END), 0) AS DOUBLE)
+        |FROM new
+        |ORDER BY version""".stripMargin),
+    // both stages aggregate the same day's rows (migration must not lose
+    // or double anything); the file model replays as COUNT(DISTINCT key)
+    // per layout — one writer task per stage by construction
+    "q_evolve_compact" -> fixed(qEvolveCompact _)(
+      """WITH e AS (SELECT event_id,
+        |    CAST(date_trunc('day', ts) AS DATE) AS day,
+        |    event_type, value FROM events),
+        |old AS (SELECT * FROM e WHERE event_id % 3 <> 0),
+        |new AS (SELECT * FROM e WHERE event_id % 3 = 0),
+        |agg AS (SELECT COUNT(*) AS n_match,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |  FROM e WHERE day = DATE '2024-01-10')
+        |SELECT '1_pre_optimize' AS stage, CAST(2 AS BIGINT) AS n_segments,
+        |  (SELECT COUNT(DISTINCT event_type) FROM old)
+        |    + (SELECT COUNT(DISTINCT day) FROM new) AS files_total,
+        |  (SELECT COUNT(DISTINCT event_type) FROM old)
+        |    + CAST(1 AS BIGINT) AS files_scanned,
+        |  n_match, sum_value FROM agg
+        |UNION ALL
+        |SELECT '2_post_optimize', CAST(1 AS BIGINT),
+        |  (SELECT COUNT(DISTINCT day) FROM e),
+        |  CAST(1 AS BIGINT),
+        |  n_match, sum_value FROM agg
+        |ORDER BY stage""".stripMargin),
+    // the report is a pure function of the two versions' footers —
+    // SF-independent, so the oracle is the expected contract itself
+    "q_schema_drift" -> fixed(qSchemaDrift _)(
+      """SELECT * FROM (VALUES
+        |  ('day', 'added', CAST(NULL AS VARCHAR), 'date'),
+        |  ('event_id', 'unchanged', 'bigint', 'bigint'),
+        |  ('event_type', 'removed', 'string', CAST(NULL AS VARCHAR)),
+        |  ('value', 'retyped', 'double', 'float'))
+        |  AS t(col_name, status, old_type, new_type)
+        |ORDER BY col_name""".stripMargin),
+    // chain-aware vacuum evidence: both stages must aggregate the FULL
+    // events extract (retention never touches live chain segments); the
+    // dropped/on-disk version counts are protocol facts the read verifies
+    "q_evolve_vacuum" -> fixed(qEvolveVacuum _)(
+      """WITH e AS (SELECT event_id, event_type, value,
+        |    CAST(date_trunc('day', ts) AS DATE) AS day FROM events),
+        |agg AS (SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |  FROM e)
+        |SELECT '1_chain_pinned' AS stage, CAST(0 AS BIGINT) AS n_dropped,
+        |  CAST(3 AS BIGINT) AS n_versions, n_rows, sum_value FROM agg
+        |UNION ALL
+        |SELECT '2_post_rewrite', CAST(3 AS BIGINT), CAST(1 AS BIGINT),
+        |  n_rows, sum_value FROM agg
+        |ORDER BY stage""".stripMargin),
+    // post-vacuum facts only: v1 rows appearing, a drifted retained sum,
+    // a misread evolved schema (v2 priority non-null) or a wrong surviving
+    // directory count would each break the hash
+    // deletion vectors: visibility is NOT(p1) AND NOT(p2) over the base
+    // table regardless of physical layout; the 8/8 file-count evidence
+    // pins that neither delete rewrote a data file
+    // survivor algebra of the two point-in-time chain deletes: pred1
+    // applies only to the segments that existed when it committed
+    // (v1 ∪ v2 = event_id % 3 IN (0, 1)), pred2 to the whole chain; the
+    // vector cardinalities replay as scalar subqueries (second = the
+    // distinct union of both mark sets)
+    "q_evolve_delete" -> fixed(qEvolveDelete _)(
+      """WITH d1 AS (SELECT COUNT(*) AS c FROM events
+        |    WHERE event_id % 3 IN (0, 1) AND event_id % 10 = 0),
+        |dt AS (SELECT COUNT(*) AS c FROM events
+        |    WHERE (event_id % 3 IN (0, 1) AND event_id % 10 = 0)
+        |      OR value > 400.0)
+        |SELECT event_type, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        |  (SELECT c FROM d1) AS n_pos_v1,
+        |  (SELECT c FROM dt) AS n_pos_total
+        |FROM events
+        |WHERE NOT (event_id % 3 IN (0, 1) AND event_id % 10 = 0)
+        |  AND NOT (value > 400.0)
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+  )
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
+import graft.QueryDef
+import graft.QueryDef.{fixed}
 import graft.ops.AsOf
 import graft.sources.Tables
 import graft.ops.Agg._
@@ -785,4 +787,466 @@ object EventQueries {
           col("forecast") * lit(0.25)).cast("long").as("is_alert"))
       .orderBy(col("event_type"), col("day"))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The q_scd2_history oracle; q_stream_scd2 replays it verbatim. */
+  private[graft] def scd2HistoryOracle: String =
+    """WITH e AS (SELECT user_id, ts, event_type, event_id,
+      |    lag(event_type) OVER w AS prev,
+      |    row_number() OVER w AS rn
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+      |ch AS (SELECT user_id, ts AS valid_from, event_type, event_id
+      |  FROM e WHERE rn = 1 OR prev IS DISTINCT FROM event_type)
+      |SELECT user_id, event_type, valid_from,
+      |  lead(valid_from) OVER w2 AS valid_to,
+      |  CAST(row_number() OVER w2 AS BIGINT) AS version,
+      |  (lead(valid_from) OVER w2) IS NULL AS is_current
+      |FROM ch
+      |WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, event_id)
+      |ORDER BY user_id, version""".stripMargin
+
+  /** The q_sessionize oracle; q_stream_sessionize replays it over its
+    * coalesced value column. */
+  private[graft] def sessionizeOracle(value: String): String =
+    s"""WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
+      |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
+      |f AS (SELECT *, CASE
+      |    WHEN ts_us - lag(ts_us) OVER w > 1800000000 THEN 1
+      |    WHEN lag(ts_us) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+      |n AS (SELECT *, SUM(is_new) OVER (PARTITION BY user_id
+      |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM f)
+      |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
+      |  COUNT(*) AS n_events, MIN(ts) AS session_start, MAX(ts) AS session_end,
+      |  CAST(SUM(CAST($value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+      |FROM n GROUP BY user_id, session_seq
+      |ORDER BY user_id, session_seq""".stripMargin
+
+  /** The q_window_tumbling oracle; q_stream_window replays it over its
+    * coalesced value column. */
+  private[graft] def windowTumblingOracle(value: String): String =
+    s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket, event_type,
+      |  COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users,
+      |  CAST(SUM(CAST($value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** The q_range_join oracle; q_stream_attribution replays it verbatim. */
+  private[graft] def rangeJoinOracle: String =
+    """WITH c AS (SELECT event_id AS click_id, user_id,
+      |    CAST(ts AS TIMESTAMP) AS click_ts
+      |  FROM events WHERE event_type = 'click'),
+      |p AS (SELECT event_id AS purchase_id, user_id AS p_user,
+      |    CAST(ts AS TIMESTAMP) AS p_ts
+      |  FROM events WHERE event_type = 'purchase')
+      |SELECT click_id, purchase_id, user_id
+      |FROM c JOIN p ON user_id = p_user
+      |  AND click_ts >= p_ts - INTERVAL 1 HOUR AND click_ts < p_ts
+      |ORDER BY click_id, purchase_id""".stripMargin
+
+  /** The q_drift_psi oracle; q_stream_drift replays it verbatim.
+    * PSI terms snapped to the 2^-16 grid pre-sum (the BM25 ln
+    * discipline); binning is IEEE divide+floor, identical both engines
+    */
+  private[graft] def driftPsiOracle: String =
+    """WITH e AS (SELECT event_type,
+      |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 0 ELSE 1 END AS cohort,
+      |    CASE WHEN ts >= TIMESTAMP '2024-01-16' AND event_type = 'purchase'
+      |      THEN value * 1.5 ELSE value END AS v
+      |  FROM events),
+      |b AS (SELECT event_type, cohort,
+      |    CAST(least(floor(v / 50.0), 9) AS BIGINT) AS bin FROM e),
+      |bins AS (SELECT DISTINCT event_type, unnest(range(10)) AS bin FROM b),
+      |c AS (SELECT event_type, bin,
+      |    COUNT(*) FILTER (cohort = 0) AS n0,
+      |    COUNT(*) FILTER (cohort = 1) AS n1
+      |  FROM b GROUP BY 1, 2),
+      |f AS (SELECT bins.event_type, bins.bin,
+      |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
+      |  FROM bins LEFT JOIN c
+      |    ON bins.event_type = c.event_type AND bins.bin = c.bin),
+      |tot AS (SELECT event_type, SUM(n0) AS t0, SUM(n1) AS t1
+      |  FROM f GROUP BY 1),
+      |terms AS (SELECT f.event_type, tot.t0, tot.t1,
+      |    CAST(f.n0 + 1 AS DOUBLE) / (tot.t0 + 10) AS p,
+      |    CAST(f.n1 + 1 AS DOUBLE) / (tot.t1 + 10) AS q
+      |  FROM f JOIN tot USING (event_type))
+      |SELECT event_type, CAST(max(t0) AS BIGINT) AS n_before,
+      |  CAST(max(t1) AS BIGINT) AS n_after,
+      |  SUM(floor((p - q) * ln(p / q) * 65536.0) / 65536.0) AS psi
+      |FROM terms GROUP BY 1 ORDER BY event_type""".stripMargin
+
+  /** The q_cusum_shift oracle; q_stream_cusum replays it verbatim.
+    * the whole CUSUM pipeline is exact decimal arithmetic (scaled
+    * deviations n·v − T avoid every division); the only IEEE op is the
+    * emission cast, identical on identical exact values. Every DuckDB
+    * multiply is width-bounded by explicit casts — an over-38-digit
+    * decimal product silently promotes to DOUBLE there, which would
+    * smuggle float arithmetic into the "exact" pipeline (ulp drift on
+    * ~39 rows before the fix)
+    */
+  private[graft] def cusumShiftOracle: String =
+    """WITH daily AS (SELECT event_type,
+      |    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+      |    SUM(CAST(value AS DECIMAL(18,2))) AS v
+      |  FROM events GROUP BY 1, 2),
+      |s1 AS (SELECT event_type, day, v,
+      |    COUNT(*) OVER (PARTITION BY event_type) AS n_days,
+      |    CAST(SUM(v) OVER (PARTITION BY event_type) AS DECIMAL(28,2))
+      |      AS total FROM daily),
+      |s2 AS (SELECT event_type, day, v, total,
+      |    CAST(SUM(v * CAST(n_days AS DECIMAL(6,0))) OVER w
+      |      - total * CAST(row_number() OVER w AS DECIMAL(8,0))
+      |      AS DECIMAL(20,2)) AS p
+      |  FROM s1 WINDOW w AS (PARTITION BY event_type ORDER BY day
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+      |s3 AS (SELECT event_type, day, v, total,
+      |    p - (CASE WHEN m < 0 THEN m ELSE CAST(0 AS DECIMAL(20,2)) END)
+      |      AS s
+      |  FROM (SELECT *, min(p) OVER w2 AS m FROM s2
+      |    WINDOW w2 AS (PARTITION BY event_type ORDER BY day
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)))
+      |SELECT event_type, day, CAST(v AS DOUBLE) AS v,
+      |  CAST(s AS DOUBLE) AS cusum_scaled,
+      |  CAST(s + s > total AS BIGINT) AS alarm
+      |FROM s3 ORDER BY event_type, day""".stripMargin
+
+  /** The EventQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    "q_sessionize" -> fixed(qSessionize _)(sessionizeOracle("value")),
+    "q_window_tumbling" -> fixed(qWindowTumbling _)(
+      windowTumblingOracle("value")),
+    "q_incremental_watermark" -> fixed(qIncrementalWatermark _)(
+      """SELECT user_id, COUNT(*) AS n_new_events,
+        |  MAX(CAST(ts AS TIMESTAMP)) AS latest_ts
+        |FROM events WHERE CAST(ts AS TIMESTAMP) > TIMESTAMP '2024-01-15 00:00:00'
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    "q_asof_attribution" -> fixed(qAsofAttribution _)(
+      """WITH p AS (SELECT event_id AS purchase_id, user_id,
+        |    CAST(ts AS TIMESTAMP) AS purchase_ts
+        |  FROM events WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id AS c_user, CAST(ts AS TIMESTAMP) AS click_ts,
+        |    max(event_id) AS click_event_id
+        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+        |SELECT purchase_id, user_id, purchase_ts, click_event_id, click_ts
+        |FROM p ASOF LEFT JOIN c
+        |  ON p.user_id = c.c_user AND p.purchase_ts >= c.click_ts
+        |ORDER BY purchase_id""".stripMargin),
+    // tolerance = null out matches staler than 1h (merge_asof semantics)
+    "q_asof_tolerance" -> fixed(qAsofTolerance _)(
+      """WITH p AS (SELECT event_id AS purchase_id, user_id,
+        |    CAST(ts AS TIMESTAMP) AS purchase_ts
+        |  FROM events WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id AS c_user, CAST(ts AS TIMESTAMP) AS click_ts,
+        |    max(event_id) AS click_event_id
+        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+        |j AS (SELECT purchase_id, user_id, purchase_ts, click_event_id, click_ts
+        |  FROM p ASOF LEFT JOIN c
+        |    ON p.user_id = c.c_user AND p.purchase_ts >= c.click_ts)
+        |SELECT purchase_id, user_id, purchase_ts,
+        |  CASE WHEN click_ts >= purchase_ts - INTERVAL 1 HOUR
+        |    THEN click_event_id END AS click_event_id,
+        |  CASE WHEN click_ts >= purchase_ts - INTERVAL 1 HOUR
+        |    THEN click_ts END AS click_ts
+        |FROM j ORDER BY purchase_id""".stripMargin),
+    // SCD2 windows: change rows by null-safe lag compare, intervals by
+    // lead, versions by row_number — all over (ts, event_id) per user
+    // PIT enrichment: the dim is the SCD2 history of NON-purchase events;
+    // ASOF LEFT JOIN picks the version current at purchase time (>= —
+    // matching the engine's right-before-left sort at equal ts)
+    "q_pit_join" -> fixed(qPitJoin _)(
+      """WITH s AS (SELECT user_id, ts, event_type, event_id FROM events
+        |  WHERE event_type <> 'purchase'),
+        |e2 AS (SELECT user_id, ts, event_type, event_id,
+        |    lag(event_type) OVER w AS prev, row_number() OVER w AS rn
+        |  FROM s WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |ch AS (SELECT user_id, ts AS valid_from, event_type, event_id
+        |  FROM e2 WHERE rn = 1 OR prev IS DISTINCT FROM event_type),
+        |hist AS (SELECT user_id, event_type AS state_at_purchase,
+        |    valid_from,
+        |    CAST(row_number() OVER (PARTITION BY user_id
+        |      ORDER BY valid_from, event_id) AS BIGINT) AS dim_version
+        |  FROM ch),
+        |p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
+        |  FROM events WHERE event_type = 'purchase')
+        |SELECT purchase_id, p.user_id, state_at_purchase, dim_version
+        |FROM p ASOF LEFT JOIN hist
+        |  ON p.user_id = hist.user_id AND p.purchase_ts >= hist.valid_from
+        |ORDER BY purchase_id""".stripMargin),
+    "q_range_join" -> fixed(qRangeJoin _)(rangeJoinOracle),
+    "q_attribution_linear" -> fixed(qAttributionLinear _)(
+      """WITH c AS (SELECT event_id AS click_id, user_id,
+        |    CAST(ts AS TIMESTAMP) AS click_ts
+        |  FROM events WHERE event_type = 'click'),
+        |p AS (SELECT event_id AS purchase_id, user_id AS p_user, value AS p_value,
+        |    CAST(ts AS TIMESTAMP) AS p_ts
+        |  FROM events WHERE event_type = 'purchase'),
+        |j AS (SELECT click_id, purchase_id, user_id, p_value
+        |  FROM c JOIN p ON user_id = p_user
+        |    AND click_ts >= p_ts - INTERVAL 1 HOUR AND click_ts < p_ts)
+        |SELECT click_id, purchase_id, user_id,
+        |  p_value / COUNT(*) OVER (PARTITION BY purchase_id) AS credit
+        |FROM j ORDER BY click_id, purchase_id""".stripMargin),
+    "q_salted_join" -> fixed(qSaltedJoin _)(
+      """WITH stats AS (SELECT event_type,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)/COUNT(*) AS type_avg
+        |  FROM events GROUP BY event_type)
+        |SELECT event_id, e.event_type, COALESCE(value, 0.0) AS value, type_avg,
+        |  COALESCE(value, 0.0) > type_avg AS above_avg
+        |FROM events e JOIN stats USING (event_type)
+        |ORDER BY event_id""".stripMargin),
+    // skew evidence: the reduce-unit distributions are pure functions of
+    // the data (per-key counts; ceil-chunking; the deterministic
+    // event_id % 8 salt), and the n_rows/n_above invariance columns come
+    // from the PLAIN join — mitigation must be invisible in values
+    "q_skew_evidence" -> fixed(qSkewEvidence _)(
+      """WITH stats AS (SELECT event_type,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)/COUNT(*) AS type_avg
+        |  FROM events GROUP BY event_type),
+        |res AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+        |    CAST(SUM(CASE WHEN COALESCE(value, 0.0) > type_avg
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_above
+        |  FROM events e JOIN stats USING (event_type)),
+        |pk AS (SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1),
+        |tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM pk),
+        |u1 AS (SELECT '1_unsalted' AS strategy,
+        |    CAST(COUNT(*) AS BIGINT) AS units,
+        |    CAST(MAX(n) AS BIGINT) AS max_unit_rows FROM pk),
+        |c2 AS (SELECT n, (n - 1) // 65536 + 1 AS chunks FROM pk),
+        |u2 AS (SELECT '2_aqe_split' AS strategy,
+        |    CAST(SUM(chunks) AS BIGINT) AS units,
+        |    CAST(MAX((n + chunks - 1) // chunks) AS BIGINT) AS max_unit_rows
+        |  FROM c2),
+        |u3 AS (SELECT '3_salted_8' AS strategy,
+        |    CAST(COUNT(*) AS BIGINT) AS units,
+        |    CAST(MAX(n) AS BIGINT) AS max_unit_rows
+        |  FROM (SELECT event_type, event_id % 8 AS salt, COUNT(*) AS n
+        |    FROM events GROUP BY 1, 2)),
+        |u AS (SELECT * FROM u1 UNION ALL SELECT * FROM u2
+        |  UNION ALL SELECT * FROM u3)
+        |SELECT strategy, units, max_unit_rows,
+        |  CAST(max_unit_rows * units AS DOUBLE) / total AS skew_ratio,
+        |  n_rows, n_above
+        |FROM u, tot, res ORDER BY strategy""".stripMargin),
+    // sliding windows: each event expands to its two hour-aligned
+    // 2h-window starts
+    "q_window_sliding" -> fixed(qWindowSliding _)(
+      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value
+        |    FROM events),
+        |b AS (SELECT unnest([date_trunc('hour', ts),
+        |    date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS bucket,
+        |    event_type, value FROM e)
+        |SELECT bucket, event_type, COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // binned-ECDF KS: every CDF value is one long/long IEEE division
+    // (correctly rounded both engines), diff and max exact — no snapping
+    "q_drift_ks" -> fixed(qDriftKs _)(
+      """WITH e AS (SELECT event_type,
+        |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 0 ELSE 1 END AS cohort,
+        |    CASE WHEN ts >= TIMESTAMP '2024-01-16' AND event_type = 'purchase'
+        |      THEN value * 1.5 ELSE value END AS v
+        |  FROM events),
+        |b AS (SELECT event_type, cohort,
+        |    CAST(least(floor(v / 50.0), 9) AS BIGINT) AS bin FROM e),
+        |bins AS (SELECT DISTINCT event_type, unnest(range(10)) AS bin FROM b),
+        |c AS (SELECT event_type, bin,
+        |    COUNT(*) FILTER (cohort = 0) AS n0,
+        |    COUNT(*) FILTER (cohort = 1) AS n1
+        |  FROM b GROUP BY 1, 2),
+        |f AS (SELECT bins.event_type, bins.bin,
+        |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
+        |  FROM bins LEFT JOIN c
+        |    ON bins.event_type = c.event_type AND bins.bin = c.bin),
+        |cum AS (SELECT event_type, bin, n0, n1,
+        |    SUM(n0) OVER (PARTITION BY event_type ORDER BY bin
+        |      ROWS UNBOUNDED PRECEDING) AS c0,
+        |    SUM(n1) OVER (PARTITION BY event_type ORDER BY bin
+        |      ROWS UNBOUNDED PRECEDING) AS c1
+        |  FROM f),
+        |tot AS (SELECT event_type, CAST(SUM(n0) AS BIGINT) AS t0,
+        |    CAST(SUM(n1) AS BIGINT) AS t1 FROM f GROUP BY 1)
+        |SELECT cum.event_type, CAST(max(t0) AS BIGINT) AS n_before,
+        |  CAST(max(t1) AS BIGINT) AS n_after,
+        |  max(abs(CAST(c0 AS DOUBLE) / t0 - CAST(c1 AS DOUBLE) / t1)) AS ks
+        |FROM cum JOIN tot USING (event_type)
+        |GROUP BY cum.event_type ORDER BY cum.event_type""".stripMargin),
+    "q_lead_lag" -> fixed(qLeadLag _)(
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
+        |  FROM events)
+        |SELECT event_id, user_id, ts,
+        |  epoch_us(ts) - epoch_us(lag(ts, 1) OVER w) AS us_since_prev,
+        |  epoch_us(lead(ts, 1) OVER w) - epoch_us(ts) AS us_to_next,
+        |  CAST(ntile(4) OVER w AS INT) AS quartile,
+        |  first_value(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS UNBOUNDED PRECEDING) AS first_event
+        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |ORDER BY event_id""".stripMargin),
+    // ROWS frames over the unique (ts, event_id) order; decimal frame sums
+    // cast to double at the end
+    "q_rolling_features" -> fixed(qRollingFeatures _)(
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
+        |  FROM events)
+        |SELECT event_id, user_id,
+        |  COUNT(*) OVER w5 AS roll_n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w5 AS DOUBLE) AS roll_sum,
+        |  MIN(value) OVER w5 AS roll_min,
+        |  MAX(value) OVER w5 AS roll_max,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER wc AS DOUBLE) AS cum_value
+        |FROM e WINDOW
+        |  w5 AS (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
+        |  wc AS (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS UNBOUNDED PRECEDING)
+        |ORDER BY event_id""".stripMargin),
+    // top-10 heavy keys; deterministic tiebreak (count desc, key asc);
+    // share = exact-int / exact-int
+    "q_skew_profile" -> fixed(qSkewProfile _)(
+      """WITH per AS (SELECT user_id, COUNT(*) AS n_events
+        |  FROM events GROUP BY user_id),
+        |t AS (SELECT COUNT(*) AS total FROM events)
+        |SELECT user_id, n_events, CAST(n_events AS DOUBLE) / total AS share
+        |FROM per CROSS JOIN t
+        |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin),
+    "q_scd2_history" -> fixed(qScd2History _)(scd2HistoryOracle),
+    // RANGE-frame replay: frame key = epoch micros on both engines
+    // (events.ts is micros after the nanos truncation both loaders do)
+    "q_rolling_time" -> fixed(qRollingTime _)(
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
+        |    value FROM events)
+        |SELECT event_id, user_id,
+        |  COUNT(*) OVER w AS n_1h,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
+        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
+        |ORDER BY event_id""".stripMargin),
+    // sweep-line concurrency: closed-open [s, s+30min) intervals, boundary
+    // rows combined per (type, t), running sum = count(start<=t)-count(end<=t)
+    // — equal-timestamp order can't matter, so both engines agree exactly
+    "q_concurrency" -> fixed(qConcurrency _)(
+      """WITH iv AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS s,
+        |    CAST(ts AS TIMESTAMP) + INTERVAL 30 MINUTE AS en FROM events),
+        |b AS (SELECT event_type, s AS t, 1 AS d FROM iv
+        |  UNION ALL SELECT event_type, en, -1 FROM iv),
+        |g AS (SELECT event_type, t, SUM(d) AS net FROM b GROUP BY 1, 2),
+        |r AS (SELECT event_type, t,
+        |    SUM(net) OVER (PARTITION BY event_type ORDER BY t) AS active
+        |  FROM g),
+        |m AS (SELECT event_type, MAX(active) AS mx FROM r GROUP BY 1),
+        |base AS (SELECT event_type, COUNT(*) AS n_intervals
+        |  FROM events GROUP BY 1)
+        |SELECT base.event_type, n_intervals,
+        |  CAST(m.mx AS BIGINT) AS max_concurrent, MIN(r.t) AS peak_ts
+        |FROM base JOIN m USING (event_type) JOIN r USING (event_type)
+        |WHERE r.active = m.mx
+        |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin),
+    // PSI terms snapped to the 2^-16 grid pre-sum (the BM25 ln
+    // discipline); binning is IEEE divide+floor, identical both engines
+    "q_drift_psi" -> fixed(qDriftPsi _)(driftPsiOracle),
+    // weights are exact dyadic literals (1/2^k); credit is one IEEE
+    // multiply — engine-exact, per-pair rows, no cross-row double sum
+    "q_attribution_decay" -> fixed(qAttributionDecay _)(
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
+        |    event_type, value,
+        |    lag(event_id, 1) OVER w AS t1, lag(event_type, 1) OVER w AS y1,
+        |    lag(event_id, 2) OVER w AS t2, lag(event_type, 2) OVER w AS y2,
+        |    lag(event_id, 3) OVER w AS t3, lag(event_type, 3) OVER w AS y3,
+        |    lag(event_id, 4) OVER w AS t4, lag(event_type, 4) OVER w AS y4
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |p AS (SELECT event_id AS purchase_id, user_id,
+        |    value AS p_value,
+        |    unnest([t1, t2, t3, t4]) AS touch_id,
+        |    unnest([y1, y2, y3, y4]) AS touch_type,
+        |    unnest([1, 2, 3, 4]) AS k,
+        |    unnest([0.5, 0.25, 0.125, 0.0625]) AS weight
+        |  FROM e WHERE event_type = 'purchase')
+        |SELECT purchase_id, user_id, touch_id, touch_type,
+        |  CAST(k AS BIGINT) AS k, CAST(weight AS DOUBLE) AS weight,
+        |  p_value * CAST(weight AS DOUBLE) AS credit
+        |FROM p WHERE touch_id IS NOT NULL
+        |ORDER BY purchase_id, k""".stripMargin),
+    // daily v is an exact decimal sum cast once; the forecast's dyadic
+    // weights are exact power-of-two scalings and the eight-term sum is
+    // the SAME left-associative tree in both engines — IEEE addition is
+    // deterministic, so every node rounds identically; no snapping
+    "q_ewma_anomaly" -> fixed(qEwmaAnomaly _)(
+      """WITH daily AS (SELECT event_type,
+        |    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v,
+        |    COUNT(*) AS n_events
+        |  FROM events GROUP BY 1, 2),
+        |l AS (SELECT event_type, day, v, n_events,
+        |    lag(v,1) OVER w AS l1, lag(v,2) OVER w AS l2,
+        |    lag(v,3) OVER w AS l3, lag(v,4) OVER w AS l4,
+        |    lag(v,5) OVER w AS l5, lag(v,6) OVER w AS l6,
+        |    lag(v,7) OVER w AS l7, lag(v,8) OVER w AS l8,
+        |    row_number() OVER w AS rn
+        |  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+        |f AS (SELECT event_type, day, v, n_events,
+        |    l1 * CAST(0.5 AS DOUBLE) + l2 * CAST(0.25 AS DOUBLE)
+        |      + l3 * CAST(0.125 AS DOUBLE) + l4 * CAST(0.0625 AS DOUBLE)
+        |      + l5 * CAST(0.03125 AS DOUBLE) + l6 * CAST(0.015625 AS DOUBLE)
+        |      + l7 * CAST(0.0078125 AS DOUBLE)
+        |      + l8 * CAST(0.0078125 AS DOUBLE) AS forecast
+        |  FROM l WHERE rn > 8)
+        |SELECT event_type, day, v, n_events, forecast,
+        |  v - forecast AS deviation,
+        |  CAST(abs(v - forecast) > forecast * CAST(0.25 AS DOUBLE)
+        |    AS BIGINT) AS is_alert
+        |FROM f ORDER BY event_type, day""".stripMargin),
+    // the whole CUSUM pipeline is exact decimal arithmetic (scaled
+    // deviations n·v − T avoid every division); the only IEEE op is the
+    // emission cast, identical on identical exact values. Every DuckDB
+    // multiply is width-bounded by explicit casts — an over-38-digit
+    // decimal product silently promotes to DOUBLE there, which would
+    // smuggle float arithmetic into the "exact" pipeline (ulp drift on
+    // ~39 rows before the fix)
+    "q_cusum_shift" -> fixed(qCusumShift _)(cusumShiftOracle),
+    // all timestamps in exact long microseconds; the break flag uses the
+    // running max of PREVIOUS ends (an early long interval swallows
+    // later short ones — lag(e) would split spans it covers)
+    "q_interval_merge" -> fixed(qIntervalMerge _)(
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS s,
+        |    epoch_us(ts) + 1800000000 AS e FROM events),
+        |f AS (SELECT user_id, event_id, s, e,
+        |    CASE WHEN max(e) OVER pw IS NULL OR s > max(e) OVER pw
+        |      THEN 1 ELSE 0 END AS brk
+        |  FROM e WINDOW pw AS (PARTITION BY user_id ORDER BY s, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+        |g AS (SELECT user_id, s, e,
+        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY s, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS span_id FROM f)
+        |SELECT user_id, CAST(span_id AS BIGINT) AS span_id,
+        |  make_timestamp(min(s)) AS span_start,
+        |  make_timestamp(max(e)) AS span_end,
+        |  COUNT(*) AS n_events,
+        |  (max(e) - min(s)) // 1000000 AS span_seconds
+        |FROM g GROUP BY user_id, span_id
+        |ORDER BY user_id, span_id""".stripMargin),
+    // per-day sMAPE terms snapped to the 2^-16 grid pre-sum (exact,
+    // order-free); the mean is one final division; worst day is a
+    // comparison-only argmax
+    "q_forecast_backtest" -> fixed(qForecastBacktest _)(
+      """WITH daily AS (SELECT event_type,
+        |    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
+        |  FROM events GROUP BY 1, 2),
+        |l AS (SELECT event_type, day, v, lag(v, 7) OVER w AS f,
+        |    row_number() OVER w AS rn
+        |  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+        |t AS (SELECT event_type, day,
+        |    floor(CAST(2 AS DOUBLE) * abs(v - f) / (v + f)
+        |      * CAST(65536 AS DOUBLE)) / CAST(65536 AS DOUBLE) AS term
+        |  FROM l WHERE rn > 7),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
+        |    ORDER BY term DESC, day) AS wrk FROM t)
+        |SELECT event_type, COUNT(*) AS n_scored,
+        |  SUM(term) / CAST(COUNT(*) AS DOUBLE) AS smape,
+        |  MAX(CASE WHEN wrk = 1 THEN day END) AS worst_day,
+        |  MAX(CASE WHEN wrk = 1 THEN term END) AS worst_term
+        |FROM r GROUP BY 1 ORDER BY event_type""".stripMargin),
+  )
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed}
 import graft.ops.Graph
 import graft.sources.Tables
 
@@ -283,4 +285,144 @@ object GraphQueries {
     Checkpoints.release(cp)
     res
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** Generated k-core oracle: the shared co-purchase edge CTEs, then a
+    * FIXED unrolled peel of R = 16 rounds (degree → ≥k filter → edge
+    * prune per round) — R matches the engine loop's 16-round hard cap
+    * in [[qKcore]] and the two must move together. The engine loop stops
+    * at its fixpoint; peeling a converged core is the identity, so the
+    * fixed unroll and the early-stopping loop agree by construction (and
+    * the engine fails loudly if 16 rounds ever stop sufficing).
+    */
+  private def kcoreOracle: String = {
+    val k = 2
+    val R = 16
+    // MATERIALIZED is load-bearing: each round references its
+    // predecessor three times, and default CTE inlining would expand
+    // the unrolled chain into 3^R copies of the lineitem scan (observed
+    // as a too-many-open-files explosion)
+    val rounds = (1 to R).map { i =>
+      s"""d$i AS MATERIALIZED (SELECT n, COUNT(*) AS d FROM
+         |  (SELECT u AS n FROM e${i - 1} UNION ALL SELECT v FROM e${i - 1})
+         |  GROUP BY n),
+         |e$i AS MATERIALIZED (SELECT u, v FROM e${i - 1}
+         |  WHERE u IN (SELECT n FROM d$i WHERE d >= $k)
+         |    AND v IN (SELECT n FROM d$i WHERE d >= $k))""".stripMargin
+    }
+    s"""WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o,
+       |    l_partkey AS p
+       |  FROM lineitem),
+       |e0 AS MATERIALIZED (SELECT u, v FROM (
+       |    SELECT least(a.p, b.p) AS u, greatest(a.p, b.p) AS v,
+       |      COUNT(*) AS w
+       |    FROM li a JOIN li b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
+       |  WHERE w >= 2),
+       |${rounds.mkString(",\n")}
+       |SELECT node, COUNT(*) AS core_deg FROM
+       |  (SELECT u AS node FROM e$R UNION ALL SELECT v FROM e$R)
+       |GROUP BY node ORDER BY node""".stripMargin
+  }
+
+  /** PageRank oracle: the power iteration UNROLLED as `iters` chained CTE
+    * pairs (per-edge contributions snapped to the 2^-52 grid, then the
+    * damping update), mirroring ops.Graph.pageRank's expression tree
+    * exactly — identical literals, casts and association, so all five
+    * iterations stay bit-equal in both engines.
+    */
+  private def pagerankOracle(iters: Int): String = {
+    val head =
+      """e0 AS (SELECT DISTINCT o_custkey*2 AS src, l_suppkey*2+1 AS dst
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |e AS (SELECT src, dst FROM e0
+        |  UNION ALL SELECT dst AS src, src AS dst FROM e0),
+        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
+        |nt AS (SELECT COUNT(*) AS nd FROM deg),
+        |r0 AS (SELECT src AS node, 1.0/CAST(nd AS DOUBLE) AS r
+        |  FROM deg CROSS JOIN nt)""".stripMargin
+    val steps = (1 to iters).map { i =>
+      s"""s$i AS (SELECT e.dst AS node,
+         |    SUM(floor((r.r/deg.deg)*4503599627370496.0)/4503599627370496.0) AS s
+         |  FROM e JOIN r${i - 1} r ON e.src = r.node
+         |  JOIN deg ON e.src = deg.src
+         |  GROUP BY e.dst),
+         |r$i AS (SELECT node, 0.15/CAST(nd AS DOUBLE) + 0.85*s AS r
+         |  FROM s$i CROSS JOIN nt)""".stripMargin
+    }
+    val ctes = (head +: steps).mkString(",\n")
+    s"""WITH $ctes
+       |SELECT node,
+       |  CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+       |  node >> 1 AS entity_key, r AS pr
+       |FROM r$iters ORDER BY node""".stripMargin
+  }
+
+  /** The GraphQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    "q_pagerank" -> fixed(qPagerank _)(pagerankOracle(5)),
+    // degree-oriented triangle enumeration over the top-8 co-purchase
+    // graph — identical orientation rule ((deg, id)-smaller endpoint
+    // first), identical kNN edge construction
+    "q_triangle_count" -> fixed(qTriangleCount _)(
+      """WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+        |  FROM lineitem),
+        |pairs AS (SELECT a.p AS u, b.p AS v, COUNT(*) AS w
+        |  FROM li a JOIN li b ON a.o = b.o AND a.p <> b.p GROUP BY 1, 2),
+        |top8 AS (SELECT u, v FROM (SELECT u, v,
+        |    row_number() OVER (PARTITION BY u ORDER BY w DESC, v) AS rn
+        |  FROM pairs) WHERE rn <= 8),
+        |und AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
+        |  FROM top8),
+        |deg AS (SELECT n, COUNT(*) AS d FROM
+        |  (SELECT u AS n FROM und UNION ALL SELECT v FROM und) GROUP BY n),
+        |ori AS (SELECT
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v)
+        |      THEN u ELSE v END AS s,
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v)
+        |      THEN v ELSE u END AS t
+        |  FROM und JOIN deg du ON du.n = u JOIN deg dv ON dv.n = v),
+        |tri AS (SELECT e1.s AS a, e1.t AS b, e2.t AS c
+        |  FROM ori e1 JOIN ori e2 ON e1.t = e2.s
+        |  JOIN ori e3 ON e3.s = e1.s AND e3.t = e2.t),
+        |nodes AS (SELECT a AS node FROM tri UNION ALL
+        |  SELECT b FROM tri UNION ALL SELECT c FROM tri)
+        |SELECT node, COUNT(*) AS n_tri FROM nodes GROUP BY node
+        |ORDER BY node""".stripMargin),
+    // BFS distances: min hop count over paths of <= 6 hops via recursive
+    // CTE — integer arithmetic, exact in both engines; same edge CTE as
+    // the pagerank oracle, source = lowest-keyed supplier node
+    "q_bfs_distance" -> fixed(qBfsDistance _)(
+      """WITH RECURSIVE e0 AS (
+        |  SELECT DISTINCT o_custkey*2 AS src, l_suppkey*2+1 AS dst
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |e AS (SELECT src, dst FROM e0
+        |  UNION ALL SELECT dst AS src, src AS dst FROM e0),
+        |s0 AS (SELECT MIN(s_suppkey)*2+1 AS n FROM supplier),
+        |reach(node, d) AS (
+        |  SELECT n, 0 FROM s0
+        |  UNION
+        |  SELECT e.dst, reach.d + 1 FROM reach JOIN e ON reach.node = e.src
+        |  WHERE reach.d < 6)
+        |SELECT node,
+        |  CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+        |  node >> 1 AS entity_key, CAST(MIN(d) AS BIGINT) AS dist
+        |FROM reach GROUP BY node ORDER BY node""".stripMargin),
+    // the recursive CTE IS the naive per-level walk — hash equality
+    // re-proves the pointer-doubling composition == step-by-step every
+    // round; all quantities exact BIGINT
+    "q_bom_rollup" -> fixed(qBomRollup _)(
+      """WITH RECURSIVE up AS (
+        |  SELECT p_partkey AS node, p_partkey AS cur,
+        |    CAST(1 AS BIGINT) AS prod, CAST(0 AS BIGINT) AS depth
+        |  FROM part
+        |  UNION ALL
+        |  SELECT node, cur // 4, prod * (cur % 3 + 1), depth + 1
+        |  FROM up WHERE cur >= 4)
+        |SELECT cur AS root, depth, COUNT(*) AS n_parts,
+        |  CAST(SUM(prod) AS BIGINT) AS total_units
+        |FROM up WHERE cur < 4
+        |GROUP BY 1, 2 ORDER BY root, depth""".stripMargin),
+    "q_kcore" -> fixed((s, d) => qKcore(s, d))(kcoreOracle),
+  )
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.QueryDef
+import graft.QueryDef.{fixed}
 import graft.ops.Agg._
 import graft.sources.Tables
 
@@ -236,4 +238,146 @@ object JourneyQueries {
       .orderBy(col("n_sessions").desc, col("path"))
       .limit(20)
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The q_retention_cohort oracle; q_stream_retention, q_stream_recovery
+    * replay it verbatim.
+    * retention = exact-int ÷ exact-int (one IEEE division, bit-identical);
+    * day_offset BIGINT on both sides (Spark datediff is INT → widened)
+    */
+  private[graft] def retentionCohortOracle: String =
+    """WITH ud AS (SELECT DISTINCT user_id,
+      |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
+      |c AS (SELECT user_id, MIN(day) AS cohort_day FROM ud GROUP BY user_id),
+      |sz AS (SELECT cohort_day, COUNT(*) AS cohort_size FROM c
+      |  GROUP BY cohort_day),
+      |act AS (SELECT c.cohort_day,
+      |    date_diff('day', c.cohort_day, ud.day) AS day_offset,
+      |    COUNT(*) AS n_active
+      |  FROM ud JOIN c USING (user_id) GROUP BY 1, 2)
+      |SELECT act.cohort_day, day_offset, n_active, cohort_size,
+      |  CAST(n_active AS DOUBLE)/cohort_size AS retention
+      |FROM act JOIN sz USING (cohort_day)
+      |ORDER BY cohort_day, day_offset""".stripMargin
+
+  /** The q_markov_transitions oracle; q_stream_markov replays it verbatim.
+    * null event types filtered BEFORE the lead window on both sides;
+    * p = int/int in double — no snapping needed
+    */
+  private[graft] def markovTransitionsOracle: String =
+    """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
+      |    event_type AS cur_type
+      |  FROM events WHERE event_type IS NOT NULL),
+      |s AS (SELECT cur_type, lead(cur_type) OVER
+      |    (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+      |  FROM e),
+      |c AS (SELECT cur_type, next_type, COUNT(*) AS n FROM s
+      |  WHERE next_type IS NOT NULL GROUP BY 1, 2)
+      |SELECT cur_type, next_type, n,
+      |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER
+      |    (PARTITION BY cur_type) AS DOUBLE) AS p
+      |FROM c ORDER BY cur_type, next_type""".stripMargin
+
+  /** The q_funnel_steps oracle; q_stream_funnel replays it verbatim.
+    * chained conditional window minima — each step's "first occurrence
+    * at-or-after the previous step" is a whole-partition MIN over the
+    * same user_id partitioning in both engines
+    */
+  private[graft] def funnelStepsOracle: String =
+    """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
+      |  FROM events),
+      |s1 AS (SELECT *, MIN(CASE WHEN event_type='signup' THEN ts END)
+      |    OVER (PARTITION BY user_id) AS signup_ts FROM e),
+      |s2 AS (SELECT *, MIN(CASE WHEN event_type='click' AND ts >= signup_ts
+      |    THEN ts END) OVER (PARTITION BY user_id) AS first_click_ts FROM s1),
+      |s3 AS (SELECT *, MIN(CASE WHEN event_type='purchase'
+      |    AND ts >= first_click_ts THEN ts END)
+      |    OVER (PARTITION BY user_id) AS first_purchase_ts FROM s2)
+      |SELECT user_id, MAX(signup_ts) AS signup_ts,
+      |  MAX(first_click_ts) AS first_click_ts,
+      |  MAX(first_purchase_ts) AS first_purchase_ts,
+      |  CASE WHEN MAX(first_purchase_ts) IS NOT NULL THEN 'purchased'
+      |       WHEN MAX(first_click_ts) IS NOT NULL THEN 'clicked'
+      |       ELSE 'signed_up' END AS stage
+      |FROM s3 GROUP BY user_id HAVING MAX(signup_ts) IS NOT NULL
+      |ORDER BY user_id""".stripMargin
+
+  /** The q_gap_fill oracle; q_stream_gapfill replays it over its coalesced
+    * value column.
+    * calendar densify via generate_series (Spark: sequence+explode);
+    * forward-fill via IGNORE NULLS running last_value; decimal day
+    * totals cast to double after the aggregate
+    */
+  private[graft] def gapFillOracle(value: String): String =
+    s"""WITH daily AS (SELECT user_id,
+      |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    COUNT(*) AS n,
+      |    CAST(SUM(CAST($value AS DECIMAL(18,2))) AS DOUBLE) AS day_total
+      |  FROM events GROUP BY 1, 2),
+      |cal AS (SELECT user_id, CAST(unnest(generate_series(
+      |      CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
+      |      INTERVAL 1 DAY)) AS DATE) AS day
+      |  FROM (SELECT user_id, MIN(day) AS d0, MAX(day) AS d1 FROM daily
+      |    GROUP BY user_id)),
+      |j AS (SELECT cal.user_id, cal.day, daily.n, daily.day_total
+      |  FROM cal LEFT JOIN daily USING (user_id, day))
+      |SELECT user_id, day, COALESCE(n, 0) AS n_events,
+      |  last_value(day_total IGNORE NULLS) OVER w AS filled_total,
+      |  date_diff('day', last_value(CASE WHEN n IS NOT NULL THEN day END
+      |    IGNORE NULLS) OVER w, day) AS days_since_active,
+      |  n IS NOT NULL AS is_active
+      |FROM j WINDOW w AS (PARTITION BY user_id ORDER BY day
+      |  ROWS UNBOUNDED PRECEDING)
+      |ORDER BY user_id, day""".stripMargin
+
+  /** The JourneyQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    "q_top_paths" -> fixed(qTopPaths _)(
+      """WITH e AS (SELECT user_id, event_id, event_type,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
+        |f AS (SELECT *, CASE
+        |    WHEN ts_us - lag(ts_us) OVER w > 1800000000 THEN 1
+        |    WHEN lag(ts_us) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+        |n AS (SELECT *, SUM(is_new) OVER (PARTITION BY user_id
+        |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM f),
+        |c AS (SELECT *, row_number() OVER (PARTITION BY user_id, session_seq
+        |    ORDER BY ts_us, event_id) AS pos FROM n),
+        |p AS (SELECT user_id, session_seq,
+        |    string_agg(event_type, '>' ORDER BY ts_us, event_id) AS path
+        |  FROM c WHERE pos <= 64 AND event_type IS NOT NULL
+        |  GROUP BY user_id, session_seq)
+        |SELECT path, COUNT(*) AS n_sessions FROM p GROUP BY path
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
+    // chained conditional window minima — each step's "first occurrence
+    // at-or-after the previous step" is a whole-partition MIN over the
+    // same user_id partitioning in both engines
+    "q_funnel_steps" -> fixed(qFunnelSteps _)(funnelStepsOracle),
+    // retention = exact-int ÷ exact-int (one IEEE division, bit-identical);
+    // day_offset BIGINT on both sides (Spark datediff is INT → widened)
+    "q_retention_cohort" -> fixed(qRetentionCohort _)(retentionCohortOracle),
+    // calendar densify via generate_series (Spark: sequence+explode);
+    // forward-fill via IGNORE NULLS running last_value; decimal day
+    // totals cast to double after the aggregate
+    "q_gap_fill" -> fixed(qGapFill _)(gapFillOracle("value")),
+    // typed JSON extraction; decade bucket in pure INT arithmetic
+    // (k - k%10) — identical truncation semantics in both engines.
+    // Data contract: the testdata generator emits props uniformly as
+    // {"k": <int>} (verified at every SF). from_json's PERMISSIVE edge
+    // semantics (quoted "42" → NULL, malformed JSON → NULL) have no
+    // DuckDB equivalent in this CAST — messier props would need a
+    // try_cast + json_valid guard AND would still diverge on
+    // string-coercion; revisit if the generator changes.
+    "q_json_props" -> fixed(qJsonProps _)(
+      """WITH k AS (SELECT event_id,
+        |    CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
+        |SELECT event_id, k, k IS NOT NULL AS has_k,
+        |  k - (k % 10) AS k_decade
+        |FROM k ORDER BY event_id""".stripMargin),
+    // null event types filtered BEFORE the lead window on both sides;
+    // p = int/int in double — no snapping needed
+    "q_markov_transitions" -> fixed(qMarkovTransitions _)(
+      markovTransitionsOracle),
+  )
 }

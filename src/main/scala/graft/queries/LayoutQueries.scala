@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed}
 import graft.ops.Layout
 import graft.sources.Tables
 
@@ -363,4 +365,213 @@ object LayoutQueries {
         max(col("l_shipdate")).as("last_ship"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The Morton interleave of the low `bits` bits of `x` and `y` as a SQL
+    * expression string — pure (>>, &, <<, |) integer arithmetic, valid in
+    * both the Spark and DuckDB dialects, and the exact formula
+    * `ops.Layout.zValue` builds as Columns.
+    */
+  private def zExprSql(x: String, y: String, bits: Int): String =
+    (0 until bits).flatMap(i => Seq(
+      s"((($x >> $i) & 1) << ${2 * i})",
+      s"((($y >> $i) & 1) << ${2 * i + 1})"))
+      .mkString(" | ")
+
+  /** The LayoutQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    // Morton z-value as generated bit arithmetic — the IDENTICAL
+    // (>>, &, <<, |) expression both engines evaluate on exact integers
+    "q_zorder_layout" -> fixed(qZorderLayout _)(
+      s"""WITH m AS (SELECT l_partkey & 1023 AS x, l_orderkey & 1023 AS y
+         |    FROM lineitem),
+         |z AS (SELECT x, y, ${zExprSql("x", "y", 10)} AS z FROM m)
+         |SELECT CAST(z >> 14 AS INT) AS file_id, COUNT(*) AS n_rows,
+         |  min(z) AS z_min, max(z) AS z_max,
+         |  min(x) AS min_x, max(x) AS max_x,
+         |  min(y) AS min_y, max(y) AS max_y
+         |FROM z GROUP BY 1 ORDER BY file_id""".stripMargin),
+    "q_zorder_skipping" -> fixed(qZorderSkipping _)(
+      s"""WITH m AS (SELECT l_partkey & 1023 AS x, l_orderkey & 1023 AS y
+         |    FROM lineitem),
+         |zf AS (SELECT 'zorder' AS layout,
+         |    CAST((${zExprSql("x", "y", 10)}) >> 14 AS INT) AS file_id, x, y
+         |  FROM m),
+         |lf AS (SELECT 'linear' AS layout, CAST(x >> 4 AS INT) AS file_id,
+         |    x, y FROM m),
+         |u AS (SELECT * FROM zf UNION ALL SELECT * FROM lf),
+         |f AS (SELECT layout, file_id, COUNT(*) AS n_rows,
+         |    min(x) AS min_x, max(x) AS max_x,
+         |    min(y) AS min_y, max(y) AS max_y
+         |  FROM u GROUP BY 1, 2)
+         |SELECT layout, CAST(COUNT(*) AS BIGINT) AS files_total,
+         |  CAST(SUM(CASE WHEN max_x >= 128 AND min_x <= 255
+         |      AND max_y >= 128 AND min_y <= 255 THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS files_scanned,
+         |  CAST(SUM(CASE WHEN max_x >= 128 AND min_x <= 255
+         |      AND max_y >= 128 AND min_y <= 255 THEN n_rows ELSE 0 END) AS BIGINT)
+         |    AS rows_scanned
+         |FROM f GROUP BY layout ORDER BY layout""".stripMargin),
+    // oracle = the UNSALTED join: salting must be invisible in the result
+    // bucketing / storage format are invisible in results (the
+    // q_salted_join pattern): the oracles are the plain join + aggregate
+    "q_bucketed_join" -> fixed(qBucketedJoin _)(
+      """SELECT o_orderpriority, COUNT(*) AS n_items,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    "q_orc_roundtrip" -> fixed(qOrcRoundtrip _)(
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem WHERE l_quantity > 25
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    // Avro bridge must be format-invisible; last_ship pins the
+    // date logical-type round-trip value-exactly
+    "q_avro_roundtrip" -> fixed(qAvroRoundtrip _)(
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue,
+        |  MAX(CAST(l_shipdate AS DATE)) AS last_ship
+        |FROM lineitem WHERE l_quantity > 25
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    // Manifest stats-pruning replay: files are one-per-contiguous-16-wide
+    // key range by construction, so per-file envelopes (and the pruning
+    // decision) are a pure function of the data — the oracle rebuilds
+    // them from the same masked key the engine's footer sweep recorded
+    "q_manifest_skipping" -> fixed(qManifestSkipping _)(
+      """WITH m AS (SELECT l_orderkey & 1023 AS ok_m, l_extendedprice
+        |    FROM lineitem),
+        |f AS (SELECT ok_m >> 4 AS bucket, COUNT(*) AS n_rows,
+        |    min(ok_m) AS mn, max(ok_m) AS mx FROM m GROUP BY 1),
+        |p AS (SELECT * FROM (VALUES ('ok_128_255', 128, 255),
+        |    ('ok_512_543', 512, 543)) AS t(predicate, lo, hi))
+        |SELECT p.predicate,
+        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM f) AS files_total,
+        |  CAST((SELECT COUNT(*) FROM f WHERE f.mx >= p.lo AND f.mn <= p.hi)
+        |    AS BIGINT) AS files_scanned,
+        |  CAST((SELECT COALESCE(SUM(f.n_rows), 0) FROM f
+        |    WHERE f.mx >= p.lo AND f.mn <= p.hi) AS BIGINT) AS rows_in_files,
+        |  CAST((SELECT COUNT(*) FROM m
+        |    WHERE m.ok_m BETWEEN p.lo AND p.hi) AS BIGINT) AS n_rows,
+        |  (SELECT CAST(SUM(CAST(m.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    FROM m WHERE m.ok_m BETWEEN p.lo AND p.hi) AS revenue
+        |FROM p ORDER BY p.predicate""".stripMargin),
+    // OPTIMIZE ZORDER replay: both layouts' per-file envelopes are pure
+    // functions of the data (one file per x>>4 range / per z>>14 range);
+    // the aggregate columns are the plain whole-table rectangle query —
+    // identical for both rows, which is the rewrite-invisibility proof
+    "q_optimize_zorder" -> fixed(qOptimizeZorder _)(
+      s"""WITH m AS (SELECT l_partkey & 1023 AS x, l_orderkey & 1023 AS y,
+         |    l_extendedprice FROM lineitem),
+         |res AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+         |      AS revenue
+         |  FROM m WHERE x BETWEEN 128 AND 255 AND y BETWEEN 128 AND 255),
+         |lf AS (SELECT x >> 4 AS fid, COUNT(*) AS n,
+         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
+         |  FROM m GROUP BY 1),
+         |zf AS (SELECT (${zExprSql("x", "y", 10)}) >> 14 AS fid,
+         |    COUNT(*) AS n,
+         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
+         |  FROM m GROUP BY 1),
+         |l AS (SELECT '1_linear' AS layout,
+         |    CAST(COUNT(*) AS BIGINT) AS files_total,
+         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
+         |        AND mxy >= 128 AND mny <= 255 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS files_scanned,
+         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
+         |        AND mxy >= 128 AND mny <= 255 THEN n ELSE 0 END) AS BIGINT)
+         |      AS rows_in_files
+         |  FROM lf),
+         |z AS (SELECT '2_zorder' AS layout,
+         |    CAST(COUNT(*) AS BIGINT) AS files_total,
+         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
+         |        AND mxy >= 128 AND mny <= 255 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS files_scanned,
+         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
+         |        AND mxy >= 128 AND mny <= 255 THEN n ELSE 0 END) AS BIGINT)
+         |      AS rows_in_files
+         |  FROM zf),
+         |u AS (SELECT * FROM l UNION ALL SELECT * FROM z)
+         |SELECT layout, files_total, files_scanned, rows_in_files,
+         |  n_rows, revenue
+         |FROM u, res ORDER BY layout""".stripMargin),
+    // three layouts, ONE unaligned probe box: the Hilbert transform is
+    // replayed per distinct grid cell as a recursive CTE (the exact
+    // iterate-and-rotate walk of LayoutExprs.hilbertD — s halves from
+    // 512, quadrant index (3*rx) XOR ry spelled as a CASE); envelopes
+    // and scan counts all DERIVED, no hand-pinned literals
+    "q_optimize_hilbert" -> fixed(qOptimizeHilbert _)(
+      s"""WITH RECURSIVE m AS (SELECT l_partkey & 1023 AS x,
+         |    l_orderkey & 1023 AS y, l_extendedprice FROM lineitem),
+         |cells AS (SELECT DISTINCT x, y FROM m),
+         |hw(x0, y0, x, y, s, d) AS (
+         |  SELECT x, y, x, y, CAST(512 AS BIGINT), CAST(0 AS BIGINT)
+         |    FROM cells
+         |  UNION ALL
+         |  SELECT x0, y0,
+         |    CASE WHEN (y & s) = 0 THEN
+         |      (CASE WHEN (x & s) <> 0 THEN s - 1 - y ELSE y END)
+         |    ELSE x END,
+         |    CASE WHEN (y & s) = 0 THEN
+         |      (CASE WHEN (x & s) <> 0 THEN s - 1 - x ELSE x END)
+         |    ELSE y END,
+         |    s // 2,
+         |    d + s * s * (CASE
+         |      WHEN (x & s) <> 0 AND (y & s) <> 0 THEN 2
+         |      WHEN (x & s) <> 0 THEN 3
+         |      WHEN (y & s) <> 0 THEN 1 ELSE 0 END)
+         |  FROM hw WHERE s > 0),
+         |hd AS (SELECT x0 AS x, y0 AS y, d FROM hw WHERE s = 0),
+         |res AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+         |      AS revenue
+         |  FROM m WHERE x BETWEEN 96 AND 223 AND y BETWEEN 96 AND 223),
+         |lf AS (SELECT x >> 4 AS fid, COUNT(*) AS n,
+         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
+         |  FROM m GROUP BY 1),
+         |zf AS (SELECT ((${zExprSql("x", "y", 10)}) * 63) >> 20 AS fid,
+         |    COUNT(*) AS n,
+         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
+         |  FROM m GROUP BY 1),
+         |hf AS (SELECT (hd.d * 63) >> 20 AS fid, COUNT(*) AS n,
+         |    min(m.x) AS mnx, max(m.x) AS mxx,
+         |    min(m.y) AS mny, max(m.y) AS mxy
+         |  FROM m JOIN hd ON m.x = hd.x AND m.y = hd.y GROUP BY 1),
+         |l AS (SELECT '1_linear' AS layout,
+         |    CAST(COUNT(*) AS BIGINT) AS files_total,
+         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
+         |        AND mxy >= 96 AND mny <= 223 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS files_scanned,
+         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
+         |        AND mxy >= 96 AND mny <= 223 THEN n ELSE 0 END) AS BIGINT)
+         |      AS rows_in_files
+         |  FROM lf),
+         |z AS (SELECT '2_zorder' AS layout,
+         |    CAST(COUNT(*) AS BIGINT) AS files_total,
+         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
+         |        AND mxy >= 96 AND mny <= 223 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS files_scanned,
+         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
+         |        AND mxy >= 96 AND mny <= 223 THEN n ELSE 0 END) AS BIGINT)
+         |      AS rows_in_files
+         |  FROM zf),
+         |h AS (SELECT '3_hilbert' AS layout,
+         |    CAST(COUNT(*) AS BIGINT) AS files_total,
+         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
+         |        AND mxy >= 96 AND mny <= 223 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS files_scanned,
+         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
+         |        AND mxy >= 96 AND mny <= 223 THEN n ELSE 0 END) AS BIGINT)
+         |      AS rows_in_files
+         |  FROM hf),
+         |u AS (SELECT * FROM l UNION ALL SELECT * FROM z
+         |  UNION ALL SELECT * FROM h)
+         |SELECT layout, files_total, files_scanned, rows_in_files,
+         |  n_rows, revenue
+         |FROM u, res ORDER BY layout""".stripMargin),
+  )
 }

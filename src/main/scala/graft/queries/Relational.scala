@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
+import graft.QueryDef.{fixed, trained}
 import graft.sources.Tables
 import graft.ops.Agg._
 
@@ -569,7 +571,7 @@ object Relational {
 
   /** Trained GBT model per sfDir, memoized — the model is a pure
     * function of the dir's data. The GBT rows take the model as an
-    * argument; SparkEntry fetches it here and generates the DuckDB
+    * argument; their registry rows fetch it here and generate the DuckDB
     * training-replay / scoring oracles from the same value.
     */
   private val gbtMemo =
@@ -2334,4 +2336,1620 @@ object Relational {
           .as("enc_target_mean"))
       .orderBy(col("segment"), col("fold"))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** Generated Benford oracle: the log10(1+1/d) expectations come from
+    * the SAME grid-snapped Scala constants the query inlines — zero
+    * transcendentals in either engine, single source of truth.
+    */
+  private def benfordOracle: String = {
+    val cases = BenfordFreqs
+      .map { case (d, f) => s"WHEN d = '$d' THEN CAST($f AS DOUBLE)" }
+      .mkString(" ")
+    s"""WITH c AS (SELECT
+       |    substr(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
+       |      1, 1) AS d,
+       |    COUNT(*) AS n
+       |  FROM orders WHERE o_totalprice >= 1.0 GROUP BY 1),
+       |t AS (SELECT d, n,
+       |    CAST(n AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE) AS obs_freq,
+       |    CASE $cases END AS benford_freq FROM c)
+       |SELECT d, n, obs_freq, benford_freq,
+       |  floor(abs(obs_freq - benford_freq) * CAST(65536 AS DOUBLE))
+       |    / CAST(65536 AS DOUBLE) AS abs_dev
+       |FROM t ORDER BY d""".stripMargin
+  }
+
+  /** Generated geohash oracle: the 30-term lon/lat bit interleave and
+    * base32 character extraction regenerated as SQL from the SAME
+    * constants the Spark builder uses (graft.functions.geo) — single
+    * source of truth, every character must agree.
+    */
+  private def geohashOracle: String = {
+    val alpha = graft.functions.geo.GeohashAlphabet
+    val terms = (0 until 15).flatMap { j =>
+      Seq(
+        s"((ix // ${1L << (14 - j)}) % 2) * ${1L << (29 - 2 * j)}",
+        s"((iy // ${1L << (14 - j)}) % 2) * ${1L << (28 - 2 * j)}")
+    }.mkString(" + ")
+    val chars = (0 until 6).map { i =>
+      s"substr('$alpha', CAST((bits // ${1L << (25 - 5 * i)}) % 32 AS INT) + 1, 1)"
+    }.mkString(" || ")
+    s"""WITH c AS (SELECT c_custkey,
+       |    CAST(48 AS DOUBLE) + CAST(c_custkey * 2654435761 % 1000
+       |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS lat,
+       |    CAST(2 AS DOUBLE) + CAST(c_custkey * 1099087573 % 1000
+       |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS lon
+       |  FROM customer),
+       |q0 AS (SELECT c_custkey, lat, lon,
+       |    CAST(FLOOR((lon + CAST(180 AS DOUBLE)) / CAST(360 AS DOUBLE)
+       |      * CAST(32768 AS DOUBLE)) AS BIGINT) AS ix0,
+       |    CAST(FLOOR((lat + CAST(90 AS DOUBLE)) / CAST(180 AS DOUBLE)
+       |      * CAST(32768 AS DOUBLE)) AS BIGINT) AS iy0
+       |  FROM c),
+       |q AS (SELECT c_custkey, lat, lon,
+       |    CASE WHEN ix0 > 32767 THEN 32767 ELSE ix0 END AS ix,
+       |    CASE WHEN iy0 > 32767 THEN 32767 ELSE iy0 END AS iy
+       |  FROM q0),
+       |m AS (SELECT c_custkey, lat, lon, $terms AS bits FROM q),
+       |g AS (SELECT c_custkey, lat, lon, $chars AS geohash FROM m)
+       |SELECT c_custkey, lat, lon, geohash,
+       |  substr(geohash, 1, 4) AS prefix4,
+       |  COUNT(*) OVER (PARTITION BY substr(geohash, 1, 4))
+       |    AS n_in_prefix4
+       |FROM g ORDER BY c_custkey""".stripMargin
+  }
+
+  /** Generated geohash-radius oracle: the precision-5 re-encode (13+12
+    * bit interleave, base32) regenerated as SQL from the SAME constants
+    * graft.functions.geo.geohash5FromCell uses; ring candidates via the
+    * |Δcell| ≤ 1 predicate (provably the string-join's admit set —
+    * the encode is injective over valid cells), and n_within re-proved
+    * COMPLETE by a brute-force all-pairs count (the q_geo_grid_join
+    * discipline).
+    */
+  private def geoRadiusOracle: String = {
+    val alpha = graft.functions.geo.GeohashAlphabet
+    val terms = ((0 until 13).map { j =>
+      s"((cx // ${1L << (12 - j)}) % 2) * ${1L << (24 - 2 * j)}"
+    } ++ (0 until 12).map { j =>
+      s"((cy // ${1L << (11 - j)}) % 2) * ${1L << (23 - 2 * j)}"
+    }).mkString(" + ")
+    val chars = (0 until 5).map { i =>
+      s"substr('$alpha', CAST((bits // ${1L << (20 - 5 * i)}) % 32 AS INT) + 1, 1)"
+    }.mkString(" || ")
+    def pointCtes(tag: String, table: String, key: String): String =
+      s"""$tag AS (SELECT $key,
+         |    CAST(48 AS DOUBLE) + CAST($key * 2654435761 % 1000
+         |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS ${tag}_lat,
+         |    CAST(2 AS DOUBLE) + CAST($key * 1099087573 % 1000
+         |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS ${tag}_lon
+         |  FROM $table),
+         |${tag}q0 AS (SELECT *,
+         |    CAST(FLOOR((${tag}_lon + CAST(180 AS DOUBLE))
+         |      / CAST(360 AS DOUBLE) * CAST(32768 AS DOUBLE)) AS BIGINT)
+         |      AS ix0,
+         |    CAST(FLOOR((${tag}_lat + CAST(90 AS DOUBLE))
+         |      / CAST(180 AS DOUBLE) * CAST(32768 AS DOUBLE)) AS BIGINT)
+         |      AS iy0
+         |  FROM $tag),
+         |${tag}c AS (SELECT $key, ${tag}_lat, ${tag}_lon,
+         |    (CASE WHEN ix0 > 32767 THEN 32767 ELSE ix0 END) // 4 AS cx,
+         |    (CASE WHEN iy0 > 32767 THEN 32767 ELSE iy0 END) // 8 AS cy
+         |  FROM ${tag}q0)""".stripMargin
+    s"""WITH ${pointCtes("c", "customer", "c_custkey")},
+       |${pointCtes("s", "supplier", "s_suppkey")},
+       |sb AS (SELECT s_suppkey, s_lat, s_lon, cx, cy, $terms AS bits
+       |  FROM sc),
+       |sg AS (SELECT s_suppkey, s_lat, s_lon, cx, cy, $chars AS gh5
+       |  FROM sb),
+       |cand AS (SELECT s_suppkey, gh5, c_custkey,
+       |    (s_lat - c_lat) * (s_lat - c_lat)
+       |      + (s_lon - c_lon) * (s_lon - c_lon) AS d2
+       |  FROM sg JOIN cc ON abs(sg.cx - cc.cx) <= 1
+       |    AND abs(sg.cy - cc.cy) <= 1),
+       |win AS (SELECT s.s_suppkey, COUNT(*) AS n_within
+       |  FROM s CROSS JOIN c
+       |  WHERE (s_lat - c_lat) * (s_lat - c_lat)
+       |      + (s_lon - c_lon) * (s_lon - c_lon)
+       |    < CAST(0.0004 AS DOUBLE)
+       |  GROUP BY 1),
+       |r AS (SELECT *, row_number() OVER (PARTITION BY s_suppkey
+       |    ORDER BY d2, c_custkey) AS rk FROM cand)
+       |SELECT r.s_suppkey, MAX(r.gh5) AS gh5, COUNT(*) AS n_candidates,
+       |  CAST(COALESCE(MAX(win.n_within), 0) AS BIGINT) AS n_within,
+       |  MAX(CASE WHEN rk = 1 THEN c_custkey END) AS nearest_custkey,
+       |  MAX(CASE WHEN rk = 1 THEN d2 END) AS nearest_d2
+       |FROM r LEFT JOIN win ON r.s_suppkey = win.s_suppkey
+       |GROUP BY 1 ORDER BY r.s_suppkey""".stripMargin
+  }
+
+  /** ONE rendering of the md5-lane HLL estimator CTE chain over `events`
+    * grouped by event_type (h → r → rr → regs → per → est → fin), shared
+    * by q_hll_distinct and q_approx_profile so the estimator replay can't
+    * drift between oracles. `fin` carries (g, `out` — the 2^-16-floored
+    * estimate, est_kind).
+    */
+  private def hllFinCtes(out: String): String = {
+    val rho = graft.ops.Sketches.rhoCaseSql("w")
+    val a = graft.ops.Sketches.HllAlphaC
+    s"""h AS (SELECT event_type AS g,
+       |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) AS HUGEINT) AS h
+       |  FROM events WHERE user_id IS NOT NULL),
+       |r AS (SELECT g, CAST(h % 1024 AS BIGINT) AS bucket,
+       |    h // 1024 AS w FROM h),
+       |rr AS (SELECT g, bucket, $rho AS rho FROM r),
+       |regs AS (SELECT g, bucket, MAX(rho) AS rho FROM rr GROUP BY g, bucket),
+       |per AS (SELECT g,
+       |    SUM(CAST(1::UBIGINT << (55 - rho) AS HUGEINT)) AS sumterm,
+       |    COUNT(*) AS present
+       |  FROM regs GROUP BY g),
+       |est AS (SELECT g,
+       |    sumterm + (1024 - present) * CAST(1::UBIGINT << 55 AS HUGEINT) AS num,
+       |    1024 - present AS zeros
+       |  FROM per),
+       |fin AS (SELECT g,
+       |    CASE WHEN ($a / CAST(num AS DOUBLE)) <= 2560.0 AND zeros > 0
+       |      THEN floor(1024.0 * ln(1024.0 / CAST(zeros AS DOUBLE)) * 65536.0) / 65536.0
+       |      ELSE floor(($a / CAST(num AS DOUBLE)) * 65536.0) / 65536.0 END
+       |      AS $out,
+       |    CASE WHEN ($a / CAST(num AS DOUBLE)) <= 2560.0 AND zeros > 0
+       |      THEN 'linear' ELSE 'raw' END AS est_kind
+       |  FROM est)""".stripMargin
+  }
+
+  /** ONE rendering of the histogram-quantile CTE chain over events.value
+    * grouped by event_type (vb → hist → cum → hq), shared by
+    * q_hist_quantiles and q_approx_profile. `hq` carries
+    * (g, `p50 name`, `p95 name`, n). Width-1 buckets clamped to [0,1023],
+    * nulls/non-finite dropped — pure arithmetic in both dialects.
+    */
+  private def histHqCtes(p50: String, p95: String): String =
+    s"""vb AS (SELECT event_type AS g,
+       |    greatest(0, least(1023, CAST(floor(value) AS BIGINT))) AS bucket
+       |  FROM events WHERE value IS NOT NULL
+       |    AND NOT isnan(value) AND NOT isinf(value)),
+       |hist AS (SELECT g, bucket, COUNT(*) AS cnt FROM vb GROUP BY g, bucket),
+       |cum AS (SELECT g, bucket, cnt,
+       |    SUM(cnt) OVER (PARTITION BY g ORDER BY bucket
+       |      ROWS UNBOUNDED PRECEDING) AS cum,
+       |    SUM(cnt) OVER (PARTITION BY g) AS n
+       |  FROM hist),
+       |hq AS (SELECT g,
+       |    CAST(MIN(CASE WHEN cum >= ceil(0.5 * n) THEN bucket END) AS DOUBLE)
+       |      AS $p50,
+       |    CAST(MIN(CASE WHEN cum >= ceil(0.95 * n) THEN bucket END) AS DOUBLE)
+       |      AS $p95,
+       |    MAX(n) AS n
+       |  FROM cum GROUP BY g)""".stripMargin
+
+  /** Shared GBT feature/target CTE chain — rendered from the SAME
+    * strings the Spark featurize uses (graft.ops.Gbt.BinSql/TargetSql/
+    * catBinSql, `%DIV%` → `//`): both engines must rebuild the identical
+    * supervised slice, INCLUDING the out-of-fold categorical target
+    * encoding (exact integer floor-div means, so the replay is
+    * bit-exact; the GREATEST clamp absorbs the trunc-vs-floor division
+    * difference on negative numerators — see Gbt's scaladoc).
+    */
+  private def gbtTCte: String = {
+    import graft.ops.Gbt
+    val bins = Gbt.BinCols.take(3).zip(Gbt.BinSql)
+      .map { case (n, s) => s"    ${Gbt.render(s, duck = true)} AS $n" }
+    val catBin = Gbt.render(
+      Gbt.catBinSql("COALESCE(enc, (SELECT genc FROM g))"), duck = true)
+    s"""t0 AS (SELECT
+       |    CAST(p_partkey AS BIGINT) AS pk,
+       |${bins.mkString(",\n")},
+       |    ${Gbt.CatSql} AS cat,
+       |    CAST(${Gbt.CatFoldSql} AS BIGINT) AS fold,
+       |    CAST(${Gbt.TargetSql} AS BIGINT) AS y,
+       |    CASE WHEN ${Gbt.TrainPredSql} THEN 'train' ELSE 'test' END
+       |      AS split
+       |  FROM part WHERE p_size IS NOT NULL),
+       |cm AS (SELECT cat, fold, COUNT(*) AS n, SUM(y) AS sy
+       |  FROM t0 WHERE split = 'train' GROUP BY 1, 2),
+       |ct AS (SELECT cat, SUM(n) AS nn, SUM(sy) AS ss FROM cm GROUP BY 1),
+       |g AS (SELECT SUM(ss) // SUM(nn) AS genc FROM ct),
+       |encf AS (SELECT cm.cat AS cat, cm.fold AS fold,
+       |    CASE WHEN ct.nn - cm.n > 0 THEN (ct.ss - cm.sy) // (ct.nn - cm.n)
+       |      ELSE ct.ss // ct.nn END AS enc
+       |  FROM cm JOIN ct ON cm.cat = ct.cat
+       |  UNION ALL SELECT cat, -1, ss // nn FROM ct),
+       |t AS (SELECT pk, b_size, b_mod, b_noise,
+       |    $catBin AS b_cat,
+       |    y, split
+       |  FROM t0 LEFT JOIN encf ON t0.cat = encf.cat
+       |    AND encf.fold = CASE WHEN t0.split = 'train' THEN t0.fold
+       |      ELSE -1 END)""".stripMargin
+  }
+
+  /** Model-inlined GBT scoring oracle: ŷ = base + routed per-stump
+    * deltas (exact integers), per-split exact sums, then the identical
+    * closed-form double RMSE/R² tree as the Spark query.
+    */
+  private[graft] def gbtScoreOracle(m: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    val fhat = s"${m.base}" + m.stumps.map(s =>
+      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
+        s"ELSE ${s.dr} END").mkString
+    s"""WITH $gbtTCte,
+       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
+       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
+       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
+       |  FROM s GROUP BY split)
+       |SELECT split, n,
+       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+       |    AS r2
+       |FROM a ORDER BY split""".stripMargin
+  }
+
+  /** q_model_serve oracle: the scoring replay of [[gbtScoreOracle]]
+    * (the STORED model must score identically to the in-session one —
+    * the round-trip proof) plus the registry-lifecycle literals: the
+    * manifest must land on v2 after the freshness-gated republish, two
+    * versions must exist, and the artifact must carry every stump.
+    */
+  private def modelServeOracle(m: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    val fhat = s"${m.base}" + m.stumps.map(s =>
+      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
+        s"ELSE ${s.dr} END").mkString
+    s"""WITH $gbtTCte,
+       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
+       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
+       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
+       |  FROM s GROUP BY split)
+       |SELECT '2' AS model_version, CAST(2 AS BIGINT) AS n_versions,
+       |  CAST(${m.stumps.length} AS BIGINT) AS n_stumps, split, n,
+       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+       |    AS r2
+       |FROM a ORDER BY split""".stripMargin
+  }
+
+  /** q_model_rollback oracle: the scoring replay with the PINNED v1
+    * (half-trained) model inlined, plus the version-pin evidence — a
+    * rollback that silently serves the manifest-current v2 hash-fails
+    * because the two models' scores differ on the planted slice.
+    */
+  private def rollbackOracle(m: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    val fhat = s"${m.base}" + m.stumps.map(s =>
+      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
+        s"ELSE ${s.dr} END").mkString
+    s"""WITH $gbtTCte,
+       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
+       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
+       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
+       |  FROM s GROUP BY split)
+       |SELECT '1' AS served_version, CAST(2 AS BIGINT) AS n_versions,
+       |  split, n,
+       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+       |    AS r2
+       |FROM a ORDER BY split""".stripMargin
+  }
+
+  /** The depth-2 model's scoring expression: base + per-tree routed
+    * leaf delta — a nested exact-integer CASE per tree, mirroring
+    * Gbt.fhatColTree token for token (a side with no child serves its
+    * single leaf delta unconditionally).
+    */
+  private def treeFhatSql(m: graft.ops.Gbt.TreeModel): String = {
+    import graft.ops.Gbt
+    s"${m.base}" + m.trees.map { t =>
+      def side(c: Option[Gbt.Node], dl: Long, dr: Long): String =
+        c.map(n => s"CASE WHEN ${Gbt.BinCols(n.f)} <= ${n.b} " +
+          s"THEN $dl ELSE $dr END").getOrElse(s"$dl")
+      s" + CASE WHEN ${Gbt.BinCols(t.root.f)} <= ${t.root.b}" +
+        s" THEN ${side(t.lChild, t.dLL, t.dLR)}" +
+        s" ELSE ${side(t.rChild, t.dRL, t.dRR)} END"
+    }.mkString
+  }
+
+  /** q_model_serve_tree oracle: [[modelServeOracle]]'s lifecycle
+    * evidence with the DEPTH-2 scoring replay — the stored tree
+    * artifact must score bit-identically to the in-session model.
+    */
+  private def treeServeOracle(m: graft.ops.Gbt.TreeModel): String = {
+    val fhat = treeFhatSql(m)
+    s"""WITH $gbtTCte,
+       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
+       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
+       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
+       |  FROM s GROUP BY split)
+       |SELECT '2' AS model_version, CAST(2 AS BIGINT) AS n_versions,
+       |  CAST(${m.trees.length} AS BIGINT) AS n_trees, split, n,
+       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+       |    AS r2
+       |FROM a ORDER BY split""".stripMargin
+  }
+
+  /** The generic depth-d model's scoring expression — the recursive
+    * nested CASE mirroring Gbt.fhatColDeep token for token. */
+  private def deepFhatSql(m: graft.ops.Gbt.DeepModel): String = {
+    import graft.ops.Gbt
+    s"${m.base}" + m.trees.map { t =>
+      def route(l: Int, p: Int): String =
+        t.splits.get((l, p)) match {
+          case Some(n) if l < m.depth =>
+            s"CASE WHEN ${Gbt.BinCols(n.f)} <= ${n.b} " +
+              s"THEN ${route(l + 1, p << 1)} " +
+              s"ELSE ${route(l + 1, (p << 1) | 1)} END"
+          case _ => s"${t.deltas(p << (m.depth - l))}"
+        }
+      s" + ${route(0, 0)}"
+    }.mkString
+  }
+
+  /** q_gbt_depth3 oracle: the depth-3 model-inlined scoring replay with
+    * the depth/n_trees evidence literals. */
+  private def deepScoreOracle(m: graft.ops.Gbt.DeepModel): String = {
+    val fhat = deepFhatSql(m)
+    s"""WITH $gbtTCte,
+       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
+       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
+       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
+       |  FROM s GROUP BY split)
+       |SELECT CAST(${m.depth} AS BIGINT) AS depth,
+       |  CAST(${m.trees.length} AS BIGINT) AS n_trees, split, n,
+       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+       |    AS r2
+       |FROM a ORDER BY split""".stripMargin
+  }
+
+  /** q_model_alias oracle: BOTH stages' scoring replays over the one
+    * shared featurized CTE — promoted rows with the full model (prod →
+    * v2), rolled-back rows with the half model (prod re-pointed at v1).
+    */
+  private def aliasOracle(full: graft.ops.Gbt.Model,
+      half: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    def fhatOf(m: Gbt.Model): String = s"${m.base}" + m.stumps.map(s =>
+      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
+        s"ELSE ${s.dr} END").mkString
+    def evalCtes(tag: String, m: Gbt.Model): String =
+      s"""s$tag AS (SELECT split, y, (${fhatOf(m)}) AS fhat FROM t),
+         |a$tag AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+         |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
+         |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
+         |  FROM s$tag GROUP BY split)""".stripMargin
+    def sel(stage: String, ver: String, tag: String): String =
+      s"""SELECT '$stage' AS stage, 'prod' AS alias,
+         |  '$ver' AS served_version, split, n,
+         |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+         |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+         |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+         |    AS r2
+         |FROM a$tag""".stripMargin
+    s"""WITH $gbtTCte,
+       |${evalCtes("p", full)},
+       |${evalCtes("r", half)}
+       |${sel("1_promoted", "2", "p")}
+       |UNION ALL
+       |${sel("2_rolled_back", "1", "r")}
+       |ORDER BY stage, split""".stripMargin
+  }
+
+  /** q_stream_model_ingest oracle: the batch aggregate over rows scored
+    * with the inlined stored model — exact integer sums of (y, pred)
+    * per split, plus the 3-drop epoch evidence. Scoring is row-local,
+    * so stream == batch by construction and any ingest drift (stale
+    * model, lost epoch, duplicated replay) hash-fails.
+    */
+  private[graft] def modelIngestOracle(m: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    val fhat = s"${m.base}" + m.stumps.map(s =>
+      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
+        s"ELSE ${s.dr} END").mkString
+    s"""WITH $gbtTCte
+       |SELECT split, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS sum_y,
+       |  CAST(SUM($fhat) AS BIGINT) AS sum_pred,
+       |  CAST(3 AS BIGINT) AS n_epochs
+       |FROM t GROUP BY split ORDER BY split""".stripMargin
+  }
+
+  /** Split-conformal oracle: the inlined model scores the held-out
+    * split, qhat replays as the identical cumulative-count order
+    * statistic over the integer |residual| histogram (k = ⌈(n+1)·0.9⌉
+    * clamped to n), coverage as exact counting aggregates.
+    */
+  private def gbtConformalOracle(m: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    val fhat = s"${m.base}" + m.stumps.map(s =>
+      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
+        s"ELSE ${s.dr} END").mkString
+    s"""WITH $gbtTCte,
+       |a AS (SELECT pk, abs(y - ($fhat)) AS ar,
+       |    CASE WHEN (pk // 5) % 2 = 0 THEN 'calibration' ELSE 'eval' END
+       |      AS grp
+       |  FROM t WHERE split = 'test'),
+       |calc AS (SELECT ar, COUNT(*) AS c FROM a
+       |  WHERE grp = 'calibration' GROUP BY ar),
+       |n0 AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM calc),
+       |k0 AS (SELECT CASE
+       |    WHEN CAST(CEIL(CAST(n + 1 AS DOUBLE) * CAST(0.9 AS DOUBLE))
+       |      AS BIGINT) > n THEN n
+       |    ELSE CAST(CEIL(CAST(n + 1 AS DOUBLE) * CAST(0.9 AS DOUBLE))
+       |      AS BIGINT) END AS k FROM n0),
+       |cum AS (SELECT ar, SUM(c) OVER (ORDER BY ar) AS cs FROM calc),
+       |q0 AS (SELECT MIN(ar) AS qhat FROM cum, k0 WHERE cs >= k)
+       |SELECT grp, COUNT(*) AS n, (SELECT qhat FROM q0) AS qhat,
+       |  CAST(SUM(CASE WHEN ar <= (SELECT qhat FROM q0) THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_covered,
+       |  CAST(SUM(CASE WHEN ar <= (SELECT qhat FROM q0) THEN 1 ELSE 0 END)
+       |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS coverage
+       |FROM a GROUP BY grp ORDER BY grp""".stripMargin
+  }
+
+  /** GBT importance oracle: replays the ENTIRE training in SQL — per
+    * round the same (pattern, feature, bin) histogram over the raw
+    * table, exact-integer residual prefix sums (HUGEINT domain), the
+    * identical IEEE gain/delta expressions, and the (gain DESC, f, b)
+    * argmax — then aggregates grid-snapped gains per feature. A single
+    * diverged split decision anywhere in training changes the rows.
+    */
+  private def gbtImportanceOracle(m: graft.ops.Gbt.Model): String = {
+    import graft.ops.Gbt
+    // a stump-less model would render a dangling comma and an empty
+    // UNION chain below — fail loudly instead of emitting invalid SQL
+    // (qGbtImportance guards the same condition on the query side)
+    require(m.stumps.nonEmpty,
+      "gbtImportanceOracle: cannot render a replay for a zero-stump model")
+    def patSql(stumps: Seq[Gbt.Stump]): String =
+      if (stumps.isEmpty) "0"
+      else stumps.zipWithIndex.map { case (s, j) =>
+        s"(CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${1 << j} " +
+          "ELSE 0 END)"
+      }.mkString(" + ")
+    def fSql(stumps: Seq[Gbt.Stump]): String =
+      "(SELECT base FROM b0)" + stumps.zipWithIndex.map { case (s, j) =>
+        s" + CASE WHEN (p // ${1 << j}) % 2 = 1 THEN ${s.dl} " +
+          s"ELSE ${s.dr} END"
+      }.mkString
+    val fvals = Gbt.BinCols.indices.map(i => s"($i)").mkString(",")
+    val bvals = (0 until Gbt.NBins - 1).map(b => s"($b)").mkString(",")
+    val caseV = "CASE ff.f " + Gbt.BinCols.zipWithIndex.map {
+      case (c, i) => s"WHEN $i THEN $c "
+    }.mkString + "END"
+    val rounds = m.stumps.indices.map { k =>
+      val prior = m.stumps.take(k)
+      val i = k + 1
+      s"""c$i AS (SELECT ${patSql(prior)} AS p, ff.f AS f,
+         |    $caseV AS v, COUNT(*) AS n, SUM(y) AS sy
+         |  FROM tr CROSS JOIN (VALUES $fvals) AS ff(f) GROUP BY 1, 2, 3),
+         |r$i AS (SELECT f, v, CAST(n AS BIGINT) AS n,
+         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
+         |      AS r
+         |  FROM c$i),
+         |t$i AS (SELECT f, CAST(SUM(n) AS BIGINT) AS tot_n,
+         |    CAST(SUM(r) AS BIGINT) AS tot_r FROM r$i GROUP BY f),
+         |s$i AS (SELECT cell.f AS f, bb.b AS b,
+         |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
+         |  FROM r$i cell CROSS JOIN (VALUES $bvals) AS bb(b)
+         |  WHERE cell.v <= bb.b GROUP BY 1, 2),
+         |g$i AS (SELECT s.f, s.b, ln, lr, tot_n - ln AS rn,
+         |    tot_r - lr AS rr
+         |  FROM s$i s JOIN t$i USING (f)
+         |  WHERE ln > 0 AND tot_n - ln > 0),
+         |w$i AS (SELECT f, b,
+         |    (CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
+         |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
+         |        / CAST(rn AS DOUBLE) AS gain,
+         |    CAST(FLOOR(CAST(0.5 AS DOUBLE) * (CAST(lr AS DOUBLE)
+         |      / CAST(ln AS DOUBLE)) + CAST(0.5 AS DOUBLE)) AS BIGINT)
+         |      AS dl,
+         |    CAST(FLOOR(CAST(0.5 AS DOUBLE) * (CAST(rr AS DOUBLE)
+         |      / CAST(rn AS DOUBLE)) + CAST(0.5 AS DOUBLE)) AS BIGINT)
+         |      AS dr
+         |  FROM g$i ORDER BY gain DESC, f ASC, b ASC LIMIT 1)""".stripMargin
+    }
+    val union = m.stumps.indices
+      .map(k => s"SELECT ${k + 1} AS round, f, b, dl, dr, gain FROM w${k + 1}")
+      .mkString("\n  UNION ALL ")
+    val names = Gbt.FeatureNames.zipWithIndex
+      .map { case (n, i) => s"($i, '$n')" }.mkString(", ")
+    s"""WITH $gbtTCte,
+       |tr AS (SELECT * FROM t WHERE split = 'train'),
+       |b0 AS (SELECT CAST(SUM(y) // COUNT(*) AS BIGINT) AS base FROM tr),
+       |${rounds.mkString(",\n")},
+       |allr AS ($union),
+       |fl AS (SELECT f, COUNT(*) AS n_splits, SUM(FLOOR(gain)) AS tg
+       |  FROM allr GROUP BY f),
+       |names AS (SELECT * FROM (VALUES $names) AS nm(f, feature)),
+       |tot AS (SELECT SUM(FLOOR(gain)) AS gt FROM allr)
+       |SELECT feature,
+       |  CAST(COALESCE(n_splits, 0) AS BIGINT) AS n_splits,
+       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE)) AS total_gain,
+       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE))
+       |    / CAST(gt AS DOUBLE) AS share
+       |FROM names LEFT JOIN fl USING (f) CROSS JOIN tot
+       |ORDER BY feature""".stripMargin
+  }
+
+  /** Depth-2 tree oracle: replays the ENTIRE two-level training in SQL.
+    * Per round i (prior trees inlined as literals from the trained
+    * model): the (pattern, feature, bin) root histogram with exact-
+    * integer residual prefix sums and the IEEE gain argmax (wa$i), then
+    * the (pattern, SIDE, feature, bin) child histogram conditioned on
+    * wa$i's split via a 1-row cross join, with a per-side QUALIFY
+    * argmax (wb$i). The final readout aggregates the SQL-DERIVED
+    * splits' floor-snapped variance reductions per feature — a single
+    * diverged root or child decision anywhere in training changes the
+    * rows. Gains materialize in the w CTEs and the parent-term
+    * subtraction happens in the union projection, mirroring
+    * Gbt.bestOver's exact two-step IEEE sequence.
+    */
+  private def gbtTreeOracle(m: graft.ops.Gbt.TreeModel): String = {
+    import graft.ops.Gbt
+    require(m.trees.nonEmpty,
+      "gbtTreeOracle: cannot render a replay for a zero-tree model")
+    def patSql(trees: Seq[Gbt.Tree]): String =
+      if (trees.isEmpty) "0"
+      else trees.zipWithIndex.map { case (t, j) =>
+        val l = t.lChild.map(c =>
+          s"CASE WHEN ${Gbt.BinCols(c.f)} <= ${c.b} THEN 0 ELSE 1 END")
+          .getOrElse("0")
+        val r = t.rChild.map(c =>
+          s"CASE WHEN ${Gbt.BinCols(c.f)} <= ${c.b} THEN 2 ELSE 3 END")
+          .getOrElse("2")
+        s"(CASE WHEN ${Gbt.BinCols(t.root.f)} <= ${t.root.b} THEN $l " +
+          s"ELSE $r END) * ${1 << (2 * j)}"
+      }.mkString(" + ")
+    def fSql(trees: Seq[Gbt.Tree]): String =
+      "(SELECT base FROM b0)" + trees.zipWithIndex.map { case (t, j) =>
+        s" + CASE (p // ${1 << (2 * j)}) % 4 WHEN 0 THEN ${t.dLL} " +
+          s"WHEN 1 THEN ${t.dLR} WHEN 2 THEN ${t.dRL} ELSE ${t.dRR} END"
+      }.mkString
+    val fvals = Gbt.BinCols.indices.map(i => s"($i)").mkString(",")
+    val bvals = (0 until Gbt.NBins - 1).map(b => s"($b)").mkString(",")
+    val caseV = "CASE ff.f " + Gbt.BinCols.zipWithIndex.map {
+      case (c, i) => s"WHEN $i THEN $c "
+    }.mkString + "END"
+    val caseRoot = "CASE wa.f " + Gbt.BinCols.zipWithIndex.map {
+      case (c, i) => s"WHEN $i THEN $c "
+    }.mkString + "END"
+    val rounds = m.trees.indices.map { k =>
+      val prior = m.trees.take(k)
+      val i = k + 1
+      s"""ca$i AS (SELECT ${patSql(prior)} AS p, ff.f AS f,
+         |    $caseV AS v, COUNT(*) AS n, SUM(y) AS sy
+         |  FROM tr CROSS JOIN (VALUES $fvals) AS ff(f) GROUP BY 1, 2, 3),
+         |ra$i AS (SELECT f, v, CAST(n AS BIGINT) AS n,
+         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
+         |      AS r
+         |  FROM ca$i),
+         |ta$i AS (SELECT f, CAST(SUM(n) AS BIGINT) AS tot_n,
+         |    CAST(SUM(r) AS BIGINT) AS tot_r FROM ra$i GROUP BY f),
+         |sa$i AS (SELECT cell.f AS f, bb.b AS b,
+         |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
+         |  FROM ra$i cell CROSS JOIN (VALUES $bvals) AS bb(b)
+         |  WHERE cell.v <= bb.b GROUP BY 1, 2),
+         |ga$i AS (SELECT s.f, s.b, ln, lr, tot_n - ln AS rn,
+         |    tot_r - lr AS rr, tot_n, tot_r
+         |  FROM sa$i s JOIN ta$i USING (f)
+         |  WHERE ln > 0 AND tot_n - ln > 0),
+         |wa$i AS (SELECT f, b,
+         |    (CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
+         |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
+         |        / CAST(rn AS DOUBLE) AS gain,
+         |    tot_n, tot_r
+         |  FROM ga$i ORDER BY gain DESC, f ASC, b ASC LIMIT 1),
+         |cb$i AS (SELECT ${patSql(prior)} AS p,
+         |    CASE WHEN ($caseRoot) <= wa.b THEN 1 ELSE 0 END AS s,
+         |    ff.f AS f, $caseV AS v, COUNT(*) AS n, SUM(y) AS sy
+         |  FROM tr CROSS JOIN wa$i wa CROSS JOIN (VALUES $fvals) AS ff(f)
+         |  GROUP BY 1, 2, 3, 4),
+         |rb$i AS (SELECT s, f, v, CAST(n AS BIGINT) AS n,
+         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
+         |      AS r
+         |  FROM cb$i),
+         |tb$i AS (SELECT s, f, CAST(SUM(n) AS BIGINT) AS tot_n,
+         |    CAST(SUM(r) AS BIGINT) AS tot_r FROM rb$i GROUP BY s, f),
+         |sb$i AS (SELECT cell.s AS s, cell.f AS f, bb.b AS b,
+         |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
+         |  FROM rb$i cell CROSS JOIN (VALUES $bvals) AS bb(b)
+         |  WHERE cell.v <= bb.b GROUP BY 1, 2, 3),
+         |gb$i AS (SELECT s.s, s.f, s.b, ln, lr, t.tot_n - ln AS rn,
+         |    t.tot_r - lr AS rr, t.tot_n, t.tot_r
+         |  FROM sb$i s JOIN tb$i t ON s.s = t.s AND s.f = t.f
+         |  WHERE ln > 0 AND t.tot_n - ln > 0),
+         |wb$i AS (SELECT s, f, b,
+         |    (CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
+         |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
+         |        / CAST(rn AS DOUBLE) AS gain,
+         |    tot_n, tot_r
+         |  FROM gb$i
+         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY s
+         |    ORDER BY gain DESC, f ASC, b ASC) = 1)""".stripMargin
+    }
+    val union = m.trees.indices.flatMap { k =>
+      val i = k + 1
+      Seq(
+        s"SELECT f, gain - (CAST(tot_r AS DOUBLE) * CAST(tot_r AS DOUBLE))" +
+          s" / CAST(tot_n AS DOUBLE) AS gred FROM wa$i",
+        s"SELECT f, gain - (CAST(tot_r AS DOUBLE) * CAST(tot_r AS DOUBLE))" +
+          s" / CAST(tot_n AS DOUBLE) AS gred FROM wb$i")
+    }.mkString("\n  UNION ALL ")
+    val names = Gbt.FeatureNames.zipWithIndex
+      .map { case (n, i) => s"($i, '$n')" }.mkString(", ")
+    s"""WITH $gbtTCte,
+       |tr AS (SELECT * FROM t WHERE split = 'train'),
+       |b0 AS (SELECT CAST(SUM(y) // COUNT(*) AS BIGINT) AS base FROM tr),
+       |${rounds.mkString(",\n")},
+       |allr AS ($union),
+       |fl AS (SELECT f, COUNT(*) AS n_splits, SUM(FLOOR(gred)) AS tg
+       |  FROM allr GROUP BY f),
+       |names AS (SELECT * FROM (VALUES $names) AS nm(f, feature)),
+       |tot AS (SELECT SUM(FLOOR(gred)) AS gt FROM allr)
+       |SELECT feature,
+       |  CAST(COALESCE(n_splits, 0) AS BIGINT) AS n_splits,
+       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE)) AS total_gain,
+       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE))
+       |    / CAST(gt AS DOUBLE) AS share
+       |FROM names LEFT JOIN fl USING (f) CROSS JOIN tot
+       |ORDER BY feature""".stripMargin
+  }
+
+  /** The q_quarantine oracle; q_stream_quarantine replays it verbatim.
+    * the same four rules, dual-output: reason string rebuilt with the
+    * identical null-safe CASE chain (concat_ws skips NULL arms)
+    */
+  private[graft] def quarantineOracle: String =
+    """WITH tagged AS (
+      |  SELECT o_totalprice, concat_ws(',',
+      |    CASE WHEN NOT COALESCE(o_orderstatus IN ('O','F'), FALSE)
+      |      THEN 'bad_status' END,
+      |    CASE WHEN NOT COALESCE(
+      |        o_totalprice BETWEEN 5000 AND 50000000, FALSE)
+      |      THEN 'price_range' END,
+      |    CASE WHEN o_custkey IS NULL THEN 'null_cust' END,
+      |    CASE WHEN o_orderdate IS NULL THEN 'null_date' END
+      |  ) AS reject_reason FROM orders)
+      |SELECT CASE WHEN reject_reason = '' THEN 'valid'
+      |    ELSE 'quarantined' END AS class,
+      |  reject_reason, COUNT(*) AS n_rows,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+      |    AS sum_price
+      |FROM tagged GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** The q_hll_distinct oracle; q_stream_hll replays it verbatim.
+    * generated HLL replay: rho chain + α·m²·2^55 constant come from the
+    * same Scala code the engine runs (Sketches.rhoCaseSql / HllAlphaC);
+    * the indicator sum is the exact HUGEINT numerator, mirroring the
+    * engine's DECIMAL(38,0) — the one double division then has
+    * identically-rounded operands in both engines
+    */
+  private[graft] def hllDistinctOracle: String =
+    s"""WITH ${hllFinCtes("hll_users")},
+       |base AS (SELECT event_type, COUNT(*) AS n_events,
+       |    COUNT(DISTINCT user_id) AS exact_users FROM events GROUP BY 1)
+       |SELECT base.event_type, n_events, exact_users, hll_users, est_kind
+       |FROM base JOIN fin ON fin.g = base.event_type
+       |ORDER BY base.event_type""".stripMargin
+
+  /** The Relational registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    "q1_pricing_summary" -> fixed(q1PricingSummary _)(
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))), 2) AS DOUBLE) AS sum_disc_price,
+        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4))) * (CAST(1 AS DECIMAL(8,4)) + CAST(l_tax AS DECIMAL(8,4)))), 2) AS DOUBLE) AS sum_charge,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)/COUNT(*) AS avg_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)/COUNT(*) AS avg_price,
+        |  CAST(SUM(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE)/COUNT(*) AS avg_disc,
+        |  COUNT(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q_market_stats" -> fixed(qMarketStats _)(
+      """SELECT n_name,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)/CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS avg_unit_price,
+        |  COUNT(*) AS nb_sales
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE l_quantity > 9 AND l_extendedprice > 1000 AND l_extendedprice IS NOT NULL
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    "q_opportunities" -> fixed(qOpportunities _)(
+      """WITH stats AS (
+        |  SELECT p_brand AS stats_brand,
+        |    CAST(SUM(CAST(p_retailprice AS DECIMAL(18,6))) AS DOUBLE)/COUNT(*) AS brand_avg_price,
+        |    COUNT(*) AS brand_n
+        |  FROM part GROUP BY p_brand)
+        |SELECT p_partkey, p_brand, p_retailprice, brand_avg_price, brand_n,
+        |  p_retailprice < brand_avg_price * 0.95 AS is_opportunity
+        |FROM part LEFT JOIN stats ON p_brand = stats_brand
+        |ORDER BY p_partkey""".stripMargin),
+    "q_validated_filter" -> fixed(qValidatedFilter _)(
+      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority,
+        |  CASE WHEN o_orderpriority LIKE '1-%' THEN 'urgent' ELSE 'std' END AS route
+        |FROM orders
+        |WHERE o_orderstatus IN ('O','F')
+        |  AND o_totalprice BETWEEN 5000 AND 50000000
+        |  AND o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
+        |ORDER BY o_orderkey""".stripMargin),
+    // the same four rules, dual-output: reason string rebuilt with the
+    // identical null-safe CASE chain (concat_ws skips NULL arms)
+    "q_quarantine" -> fixed(qQuarantine _)(quarantineOracle),
+    "q_clean_cast" -> fixed(qCleanCast _)(
+      """SELECT event_id, user_id, event_type,
+        |  COALESCE(value, 0.0) AS value_clean,
+        |  COALESCE(CAST(NULLIF(regexp_extract(props, '"k": (\d+)', 1), '') AS INT), 0) AS k_value,
+        |  CAST(ts AS DATE) AS event_date
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_dedup_keeplast" -> fixed(qDedupKeepLast _)(
+      """SELECT user_id, event_type, event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM (
+        |  SELECT *, row_number() OVER (
+        |    PARTITION BY user_id, event_type
+        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1
+        |ORDER BY user_id, event_type""".stripMargin),
+    "q_doc_export" -> fixed(qDocExport _)(
+      """SELECT 'ord_' || CAST(o_orderkey AS VARCHAR) AS doc_id,
+        |  o_orderkey, c_name, n_name AS geo_name, c_mktsegment, o_totalprice,
+        |  o_orderdate,
+        |  CASE WHEN o_orderpriority LIKE '1-%' THEN 'hot' ELSE 'all' END AS routing
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |ORDER BY o_orderkey""".stripMargin),
+    // nested pin.location struct via struct_pack, emitted as its JSON doc
+    // form (both engines print doubles with a trailing .0); hot docs emitted
+    // twice (main + hot index) so the export row count exceeds the input's
+    "q_doc_export_geo" -> fixed(qDocExportGeo _)(
+      """WITH base AS (
+        |  SELECT 'ord_' || CAST(o_orderkey AS VARCHAR) AS doc_id,
+        |    o_orderkey, c_name,
+        |    to_json(struct_pack(location := struct_pack(
+        |        lat := CAST(c_custkey % 180 - 90 AS DOUBLE),
+        |        lon := CAST(c_custkey % 360 - 180 AS DOUBLE)),
+        |      geo_name := n_name)) AS pin,
+        |    o_totalprice,
+        |    o_orderpriority LIKE '1-%' AS hot
+        |  FROM orders
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey)
+        |SELECT doc_id, o_orderkey, c_name, pin, o_totalprice,
+        |  'orders-all' AS es_index FROM base
+        |UNION ALL
+        |SELECT doc_id, o_orderkey, c_name, pin, o_totalprice,
+        |  'orders-hot' AS es_index FROM base WHERE hot
+        |ORDER BY o_orderkey, es_index""".stripMargin),
+    "q_nested_join" -> fixed(qNestedJoin _)(
+      """WITH listings AS (
+        |  SELECT o_orderkey, o_totalprice,
+        |    struct_pack(zipcode := c_nationkey, segment := c_mktsegment) AS location
+        |  FROM orders JOIN customer ON o_custkey = c_custkey)
+        |SELECT o_orderkey, location.zipcode AS zipcode,
+        |  location.segment AS segment, n_name AS zip_name, o_totalprice
+        |FROM listings JOIN nation ON location.zipcode = n_nationkey
+        |ORDER BY o_orderkey""".stripMargin),
+    // exact-domain sums (BIGINT/DECIMAL), closed-form double arithmetic
+    // written in the same shape as the Spark query → bit-exact
+    "q_regression" -> fixed(qRegression _)(
+      """WITH f AS (SELECT
+        |    CASE WHEN p_partkey % 5 = 0 THEN 'test' ELSE 'train' END AS split,
+        |    CAST(p_size AS BIGINT) AS x,
+        |    CAST(p_retailprice AS DECIMAL(18,2)) AS y
+        |  FROM part WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
+        |a AS (SELECT split, COUNT(*) AS n_rows,
+        |    CAST(COUNT(*) AS DOUBLE) AS n,
+        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(x*x) AS DOUBLE) AS sxx,
+        |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(x*y) AS DOUBLE) AS sxy,
+        |    CAST(SUM(y*y) AS DOUBLE) AS syy
+        |  FROM f GROUP BY split)
+        |SELECT split, n_rows AS n,
+        |  (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
+        |  (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept,
+        |  ((n*sxy - sx*sy) * (n*sxy - sx*sy))
+        |    / ((n*sxx - sx*sx) * (n*syy - sy*sy)) AS r2
+        |FROM a ORDER BY split""".stripMargin),
+    // train coefficients applied to both splits; residual sums expanded
+    // over the six exact aggregates — operator tree written identically
+    // to the Spark side (IEEE double is order-sensitive)
+    "q_regression_eval" -> fixed(qRegressionEval _)(
+      """WITH f AS (SELECT
+        |    CASE WHEN p_partkey % 5 = 0 THEN 'test' ELSE 'train' END AS split,
+        |    CAST(p_size AS BIGINT) AS x,
+        |    CAST(p_retailprice AS DECIMAL(18,2)) AS y
+        |  FROM part WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
+        |a AS (SELECT split, COUNT(*) AS n_rows,
+        |    CAST(COUNT(*) AS DOUBLE) AS n,
+        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(x*x) AS DOUBLE) AS sxx,
+        |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(x*y) AS DOUBLE) AS sxy,
+        |    CAST(SUM(y*y) AS DOUBLE) AS syy
+        |  FROM f GROUP BY split),
+        |c AS (SELECT
+        |    (n*sxy - sx*sy) / (n*sxx - sx*sx) AS m,
+        |    (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS b
+        |  FROM a WHERE split = 'train')
+        |SELECT split, n_rows AS n, m AS slope, b AS intercept,
+        |  sqrt((syy - 2.0*m*sxy - 2.0*b*sy + m*m*sxx + 2.0*m*b*sx + n*b*b) / n) AS rmse,
+        |  1.0 - (syy - 2.0*m*sxy - 2.0*b*sy + m*m*sxx + 2.0*m*b*sx + n*b*b)
+        |      / (syy - sy*sy/n) AS r2
+        |FROM a CROSS JOIN c ORDER BY split""".stripMargin),
+    // mean/std from exact sums, closed-form double arithmetic written
+    // identically to the Spark side; zero-variance groups → NULL z
+    "q_outlier_zscore" -> fixed(qOutlierZscore _)(
+      """WITH p AS (SELECT p_partkey, p_brand, p_retailprice FROM part
+        |  WHERE p_retailprice IS NOT NULL),
+        |s AS (SELECT p_brand AS stats_brand,
+        |    CAST(COUNT(*) AS DOUBLE) AS n,
+        |    CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS sx,
+        |    CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2)) * CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS sxx
+        |  FROM p GROUP BY p_brand),
+        |j AS (SELECT p_partkey, p_brand, p_retailprice,
+        |    sx / n AS mean,
+        |    (n * sxx - sx * sx) / (n * (n - 1.0)) AS variance
+        |  FROM p JOIN s ON p_brand = stats_brand)
+        |SELECT p_partkey, p_brand, p_retailprice,
+        |  CASE WHEN NOT isnan(variance) AND variance > 0
+        |    THEN (p_retailprice - mean) / sqrt(variance) END AS z,
+        |  COALESCE(CASE WHEN NOT isnan(variance) AND variance > 0
+        |    THEN abs((p_retailprice - mean) / sqrt(variance)) > 2.0 END,
+        |    false) AS is_outlier
+        |FROM j ORDER BY p_partkey""".stripMargin),
+    // top-10 taken on the exact decimal sum; double cast applied OUTSIDE
+    // the limit so the selected set matches the Spark plan
+    "q3_top_orders" -> fixed(q3TopOrders _)(
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |  CAST(round(revenue_dec, 2) AS DOUBLE) AS revenue
+        |FROM (
+        |  SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |    SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS revenue_dec
+        |  FROM lineitem
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  WHERE c_mktsegment = 'BUILDING'
+        |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        |    AND l_shipdate > TIMESTAMP '1996-01-01 00:00:00'
+        |  GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |  ORDER BY revenue_dec DESC, l_orderkey LIMIT 10)""".stripMargin),
+    "q5_region_revenue" -> fixed(q5RegionRevenue _)(
+      """SELECT n_name,
+        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    "q_top_spenders" -> fixed(qTopSpenders _)(
+      """SELECT n_name, rank_in_nation, c_custkey, c_name,
+        |  CAST(total_spent AS DOUBLE) AS total_spent FROM (
+        |  SELECT n_name, c_custkey, c_name,
+        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS total_spent,
+        |    CAST(row_number() OVER (PARTITION BY n_name
+        |      ORDER BY SUM(CAST(o_totalprice AS DECIMAL(18,2))) DESC, c_custkey) AS INT) AS rank_in_nation
+        |  FROM orders
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  GROUP BY n_name, c_custkey, c_name)
+        |WHERE rank_in_nation <= 3
+        |ORDER BY n_name, rank_in_nation""".stripMargin),
+    "q_feature_extract" -> fixed(qFeatureExtract _)(
+      """SELECT p_partkey,
+        |  CAST(p_size AS DOUBLE) AS f_size,
+        |  CAST(regexp_extract(p_brand, '(\d+)', 1) AS INT) AS f_brand_code,
+        |  CAST(length(p_type) AS INT) AS f_type_len,
+        |  p_retailprice AS target_price,
+        |  CASE WHEN p_partkey % 5 = 0 THEN 'test' ELSE 'train' END AS split
+        |FROM part
+        |WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL
+        |ORDER BY p_partkey""".stripMargin),
+    "q_rollup_revenue" -> fixed(qRollupRevenue _)(
+      """SELECT r_name, n_name,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue,
+        |  COUNT(*) AS n_orders
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP(r_name, n_name)
+        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin),
+    "q_cube_orders" -> fixed(qCubeOrders _)(
+      """SELECT c_mktsegment, o_orderpriority,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue,
+        |  COUNT(*) AS n_orders
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY CUBE(c_mktsegment, o_orderpriority)
+        |ORDER BY c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    "q_anti_customers" -> fixed(qAntiCustomers _)(
+      """SELECT c_custkey, c_name, c_mktsegment
+        |FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |  WHERE o_custkey = c_custkey
+        |    AND o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')
+        |ORDER BY c_custkey""".stripMargin),
+    "q_table_profile" -> fixed(qTableProfile _)(
+      """SELECT COUNT(*) AS n_rows,
+        |  CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_custkey,
+        |  CAST(SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_orderdate,
+        |  CAST(SUM(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1 ELSE 0 END) AS BIGINT) AS bad_status,
+        |  CAST(SUM(CASE WHEN o_totalprice NOT BETWEEN 0 AND 50000000 THEN 1 ELSE 0 END) AS BIGINT) AS price_out_of_range,
+        |  COUNT(DISTINCT o_orderstatus) AS n_statuses,
+        |  COUNT(DISTINCT o_orderpriority) AS n_priorities,
+        |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price,
+        |  MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date
+        |FROM orders""".stripMargin),
+    "q_correlated_min" -> fixed(qCorrelatedMin _)(
+      """SELECT p_brand, p_partkey, p_retailprice
+        |FROM part
+        |WHERE p_retailprice = (SELECT MIN(p2.p_retailprice)
+        |                       FROM part p2
+        |                       WHERE p2.p_brand = part.p_brand)
+        |ORDER BY p_brand, p_partkey""".stripMargin),
+    "q_pivot_revenue" -> fixed(qPivotRevenue _)(
+      """SELECT n_name,
+        |  CAST(SUM(CASE WHEN o_orderstatus = 'O'
+        |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS O,
+        |  CAST(SUM(CASE WHEN o_orderstatus = 'F'
+        |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS F,
+        |  CAST(SUM(CASE WHEN o_orderstatus = 'P'
+        |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS P
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    "q_unpivot_features" -> fixed(qUnpivotFeatures _)(
+      """SELECT p_partkey, 'size' AS feature, CAST(p_size AS DOUBLE) AS value
+        |FROM part
+        |UNION ALL
+        |SELECT p_partkey, 'retailprice' AS feature, p_retailprice AS value
+        |FROM part
+        |ORDER BY p_partkey, feature""".stripMargin),
+    // the sketch PROFILE: the same HLL + histogram replays joined per
+    // event type — the whole approximate dashboard row is hash-exact
+    "q_approx_profile" -> fixed(qApproxProfile _)(
+      s"""WITH ${hllFinCtes("approx_users")},
+         |${histHqCtes("p50_value", "p95_value")},
+         |base AS (SELECT event_type, COUNT(*) AS n_events
+         |  FROM events GROUP BY 1)
+         |SELECT base.event_type, n_events, approx_users, p50_value, p95_value
+         |FROM base JOIN fin ON fin.g = base.event_type
+         |JOIN hq ON hq.g = base.event_type
+         |ORDER BY base.event_type""".stripMargin),
+    // strict-dominance skyline: NOT EXISTS is the definition the
+    // two-phase scan implements
+    "q_skyline_parts" -> fixed(qSkylineParts _)(
+      """SELECT p_partkey, p_retailprice, CAST(p_size AS DOUBLE) AS p_size
+        |FROM part a
+        |WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL
+        |  AND NOT EXISTS (SELECT 1 FROM part b
+        |    WHERE b.p_retailprice IS NOT NULL AND b.p_size IS NOT NULL
+        |      AND b.p_retailprice <= a.p_retailprice
+        |      AND b.p_size >= a.p_size
+        |      AND (b.p_retailprice < a.p_retailprice
+        |        OR b.p_size > a.p_size))
+        |ORDER BY p_retailprice, p_partkey""".stripMargin),
+    // generated HLL replay: rho chain + α·m²·2^55 constant come from the
+    // same Scala code the engine runs (Sketches.rhoCaseSql / HllAlphaC);
+    // the indicator sum is the exact HUGEINT numerator, mirroring the
+    // engine's DECIMAL(38,0) — the one double division then has
+    // identically-rounded operands in both engines
+    "q_hll_distinct" -> fixed(qHllDistinct _)(hllDistinctOracle),
+    // mergeability replay: merged (per-type max-of-max) and direct
+    // (all-rows) register paths computed independently, estimated with
+    // the same fragment, equality re-proven engine-side AND oracle-side
+    "q_hll_union" -> fixed(qHllUnion _) {
+      val rho = graft.ops.Sketches.rhoCaseSql("(h // 1024)")
+      val a = graft.ops.Sketches.HllAlphaC
+      def est(per: String, out: String): String =
+        s"""SELECT CASE WHEN ($a / CAST(sumterm + (1024 - present) *
+           |      CAST(1::UBIGINT << 55 AS HUGEINT) AS DOUBLE)) <= 2560.0
+           |      AND present < 1024
+           |    THEN floor(1024.0 * ln(1024.0 / CAST(1024 - present AS DOUBLE))
+           |      * 65536.0) / 65536.0
+           |    ELSE floor(($a / CAST(sumterm + (1024 - present) *
+           |      CAST(1::UBIGINT << 55 AS HUGEINT) AS DOUBLE)) * 65536.0)
+           |      / 65536.0 END AS $out,
+           |  CASE WHEN ($a / CAST(sumterm + (1024 - present) *
+           |      CAST(1::UBIGINT << 55 AS HUGEINT) AS DOUBLE)) <= 2560.0
+           |      AND present < 1024
+           |    THEN 'linear' ELSE 'raw' END AS kind
+           |  FROM $per""".stripMargin
+      s"""WITH rr AS (SELECT event_type AS g,
+         |    CAST(CAST(md5_number_lower(CAST(user_id AS VARCHAR)) AS HUGEINT)
+         |      % 1024 AS BIGINT) AS bucket,
+         |    $rho AS rho
+         |  FROM (SELECT event_type, user_id,
+         |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) AS HUGEINT) AS h
+         |    FROM events WHERE user_id IS NOT NULL)),
+         |regs AS (SELECT g, bucket, MAX(rho) AS rho FROM rr GROUP BY g, bucket),
+         |merged AS (SELECT bucket, MAX(rho) AS rho FROM regs GROUP BY bucket),
+         |direct AS (SELECT bucket, MAX(rho) AS rho FROM rr GROUP BY bucket),
+         |m_per AS (SELECT SUM(CAST(1::UBIGINT << (55 - rho) AS HUGEINT))
+         |    AS sumterm, COUNT(*) AS present FROM merged),
+         |d_per AS (SELECT SUM(CAST(1::UBIGINT << (55 - rho) AS HUGEINT))
+         |    AS sumterm, COUNT(*) AS present FROM direct),
+         |m_fin AS (${est("m_per", "hll_merged")}),
+         |d_fin AS (${est("d_per", "hll_direct")}),
+         |base AS (SELECT COUNT(*) AS n_events,
+         |    COUNT(DISTINCT user_id) AS exact_users FROM events)
+         |SELECT 'all' AS scope, n_events, exact_users, hll_merged,
+         |  hll_direct, hll_merged = hll_direct AS merged_equals_direct,
+         |  d_fin.kind AS est_kind
+         |FROM base, m_fin, d_fin""".stripMargin
+    },
+    // histogram-quantile replay: width-1 buckets, running counts, first
+    // bucket reaching ceil(q*n) — pure arithmetic in both dialects
+    "q_hist_quantiles" -> fixed(qHistQuantiles _)(
+      s"""WITH ${histHqCtes("p50_est", "p95_est")}
+        |SELECT g AS event_type, p50_est, p95_est,
+        |  CAST(n AS BIGINT) AS n_rows
+        |FROM hq ORDER BY event_type""".stripMargin),
+    "q_exact_quantiles" -> fixed(qExactQuantiles _)(
+      """SELECT l_returnflag, COUNT(*) AS n_items,
+        |  quantile_cont(l_extendedprice, 0.25) AS p25,
+        |  quantile_cont(l_extendedprice, 0.5) AS p50,
+        |  quantile_cont(l_extendedprice, 0.75) AS p75
+        |FROM lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin),
+    // Bloom replay: the same four md5 slices (lower/upper lane, low/high
+    // 32-bit half) masked to 2^17, membership = all four cells present
+    "q_bloom_prune" -> fixed(qBloomPrune _)(
+      """WITH u AS (SELECT o_orderkey FROM orders
+        |  WHERE o_orderpriority LIKE '1-%'),
+        |ub AS (SELECT
+        |    unnest([CAST(CAST(md5_number_lower(CAST(o_orderkey AS VARCHAR)) AS HUGEINT) % 131072 AS BIGINT),
+        |      CAST((CAST(md5_number_lower(CAST(o_orderkey AS VARCHAR)) AS HUGEINT) // 4294967296) % 131072 AS BIGINT),
+        |      CAST(CAST(md5_number_upper(CAST(o_orderkey AS VARCHAR)) AS HUGEINT) % 131072 AS BIGINT),
+        |      CAST((CAST(md5_number_upper(CAST(o_orderkey AS VARCHAR)) AS HUGEINT) // 4294967296) % 131072 AS BIGINT)]) AS bucket,
+        |    unnest([0, 1, 2, 3]) AS lane
+        |  FROM u),
+        |bits AS (SELECT DISTINCT lane, bucket FROM ub),
+        |p AS (SELECT l_orderkey,
+        |    CAST(CAST(md5_number_lower(CAST(l_orderkey AS VARCHAR)) AS HUGEINT) % 131072 AS BIGINT) AS b0,
+        |    CAST((CAST(md5_number_lower(CAST(l_orderkey AS VARCHAR)) AS HUGEINT) // 4294967296) % 131072 AS BIGINT) AS b1,
+        |    CAST(CAST(md5_number_upper(CAST(l_orderkey AS VARCHAR)) AS HUGEINT) % 131072 AS BIGINT) AS b2,
+        |    CAST((CAST(md5_number_upper(CAST(l_orderkey AS VARCHAR)) AS HUGEINT) // 4294967296) % 131072 AS BIGINT) AS b3
+        |  FROM lineitem),
+        |f AS (SELECT
+        |    b0 IN (SELECT bucket FROM bits WHERE lane = 0)
+        |      AND b1 IN (SELECT bucket FROM bits WHERE lane = 1)
+        |      AND b2 IN (SELECT bucket FROM bits WHERE lane = 2)
+        |      AND b3 IN (SELECT bucket FROM bits WHERE lane = 3) AS pass,
+        |    l_orderkey IN (SELECT o_orderkey FROM u) AS hit
+        |  FROM p),
+        |m AS (SELECT COUNT(*) AS probe_rows,
+        |    CAST(SUM(CASE WHEN pass THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS bloom_pass_rows,
+        |    CAST(SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS exact_match_rows,
+        |    CAST(SUM(CASE WHEN pass AND NOT hit THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS false_positive_rows,
+        |    CAST(SUM(CASE WHEN NOT pass AND hit THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS false_negative_rows
+        |  FROM f)
+        |SELECT probe_rows, bloom_pass_rows, exact_match_rows,
+        |  false_positive_rows, false_negative_rows,
+        |  CAST(probe_rows - bloom_pass_rows AS DOUBLE) / probe_rows
+        |    AS pruned_fraction
+        |FROM m""".stripMargin),
+    // constraint-suite replay: one aggregation pass + NOT EXISTS orphans
+    // (matching left_anti's null-key semantics, unlike NOT IN), exact-int
+    // ratios
+    "q_quality_report" -> fixed(qQualityReport _)(
+      """WITH a AS (SELECT COUNT(*) AS n,
+        |    SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS null_cust,
+        |    SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS null_date,
+        |    COUNT(DISTINCT o_orderkey) AS dk,
+        |    SUM(CASE WHEN o_totalprice < 0 OR o_totalprice > 1000000000.0
+        |      THEN 1 ELSE 0 END) AS range_viol,
+        |    SUM(CASE WHEN o_orderstatus NOT IN ('O', 'F', 'P')
+        |      THEN 1 ELSE 0 END) AS domain_viol
+        |  FROM orders),
+        |b AS (SELECT COUNT(*) AS orphans FROM lineitem l
+        |  WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |    WHERE o.o_orderkey = l.l_orderkey))
+        |SELECT check_name, metric, passed FROM (
+        |  SELECT 'completeness_custkey' AS check_name,
+        |    1.0 - CAST(null_cust AS DOUBLE) / n AS metric,
+        |    null_cust = 0 AS passed FROM a, b
+        |  UNION ALL SELECT 'completeness_orderdate',
+        |    1.0 - CAST(null_date AS DOUBLE) / n, null_date = 0 FROM a, b
+        |  UNION ALL SELECT 'uniqueness_orderkey',
+        |    CAST(dk AS DOUBLE) / n, dk = n FROM a, b
+        |  UNION ALL SELECT 'range_violations_totalprice',
+        |    CAST(range_viol AS DOUBLE), range_viol = 0 FROM a, b
+        |  UNION ALL SELECT 'domain_violations_orderstatus',
+        |    CAST(domain_viol AS DOUBLE), domain_viol = 0 FROM a, b
+        |  UNION ALL SELECT 'referential_orphans_lineitem',
+        |    CAST(orphans AS DOUBLE), orphans = 0 FROM a, b)
+        |ORDER BY check_name""".stripMargin),
+    // basket membership = DISTINCT (order, part); cosine is one multiply,
+    // one correctly-rounded sqrt, one divide — engine-exact, no snapping
+    "q_cooccurrence" -> fixed(qCooccurrence _)(
+      """WITH basket AS (SELECT DISTINCT l_orderkey AS okey,
+        |    l_partkey AS pkey FROM lineitem),
+        |marg AS (SELECT pkey, COUNT(*) AS n_solo FROM basket GROUP BY 1),
+        |pairs AS (SELECT a.pkey AS p_a, b.pkey AS p_b, COUNT(*) AS n_ab
+        |  FROM basket a JOIN basket b
+        |    ON a.okey = b.okey AND a.pkey < b.pkey
+        |  GROUP BY 1, 2 HAVING COUNT(*) >= 3)
+        |SELECT p_a, p_b, n_ab, ma.n_solo AS n_a, mb.n_solo AS n_b,
+        |  CAST(n_ab AS DOUBLE) /
+        |    sqrt(CAST(ma.n_solo AS DOUBLE) * CAST(mb.n_solo AS DOUBLE))
+        |    AS cosine
+        |FROM pairs
+        |JOIN marg ma ON pairs.p_a = ma.pkey
+        |JOIN marg mb ON pairs.p_b = mb.pkey
+        |ORDER BY p_a, p_b""".stripMargin),
+    // export mapping sidecar: one row per typed field (geo struct →
+    // geo_point, date → date, array<string> → keyword, numerics split
+    // long/double) + n_docs re-counted from the exported JSONL
+    "q_export_schema" -> fixed(qExportSchema _)(
+      """WITH n AS (SELECT COUNT(*) AS n_docs
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
+        |SELECT field, es_type, n_docs FROM (VALUES
+        |    ('doc_id', 'keyword'), ('o_orderkey', 'long'),
+        |    ('c_name', 'keyword'), ('o_totalprice', 'double'),
+        |    ('created', 'date'), ('location', 'geo_point'),
+        |    ('tags', 'keyword')) AS t(field, es_type)
+        |CROSS JOIN n
+        |ORDER BY field""".stripMargin),
+    // exact quantiles: DuckDB's quantile_cont interpolates the same
+    // type-7 CONVEX expression (lower*(1-frac) + higher*frac at p*(n-1))
+    // Spark's percentile evaluates — identical IEEE result, no snapping
+    // robust MAD anomaly scores: both medians are quantile_cont (the
+    // q_exact_quantiles type-7 pin), the modified z a fixed IEEE op
+    // sequence; MAD=0 groups NULL the score (the zscore guard pattern)
+    "q_outlier_mad" -> fixed(qOutlierMad _)(
+      """WITH p AS (SELECT p_partkey, p_brand, p_retailprice FROM part
+        |  WHERE p_retailprice IS NOT NULL),
+        |m AS (SELECT p_brand, quantile_cont(p_retailprice, 0.5) AS med
+        |  FROM p GROUP BY p_brand),
+        |d AS (SELECT p.p_partkey, p.p_brand, p.p_retailprice, m.med,
+        |    abs(p.p_retailprice - m.med) AS dev
+        |  FROM p JOIN m USING (p_brand)),
+        |md AS (SELECT p_brand, quantile_cont(dev, 0.5) AS mad
+        |  FROM d GROUP BY p_brand)
+        |SELECT d.p_partkey, d.p_brand, d.p_retailprice, d.med, md.mad,
+        |  CASE WHEN md.mad > 0
+        |    THEN 0.6745 * (d.p_retailprice - d.med) / md.mad END AS mz,
+        |  COALESCE(CASE WHEN md.mad > 0
+        |    THEN abs(0.6745 * (d.p_retailprice - d.med) / md.mad) > 3.5 END,
+        |    FALSE) AS is_outlier
+        |FROM d JOIN md USING (p_brand) ORDER BY d.p_partkey""".stripMargin),
+    // Apriori rules: the oracle prunes at the same absolute supports and
+    // replays confidence/lift as the same exact-int IEEE divisions; a
+    // missed pair (broken prune) or swapped direction hash-fails
+    "q_assoc_rules" -> fixed(qAssocRules _)(
+      """WITH basket AS (SELECT DISTINCT l_orderkey AS okey,
+        |    l_partkey AS pkey FROM lineitem),
+        |marg AS (SELECT pkey, COUNT(*) AS n_item FROM basket GROUP BY 1),
+        |no AS (SELECT COUNT(DISTINCT okey) AS n_orders FROM basket),
+        |fb AS (SELECT b.okey, b.pkey, m.n_item FROM basket b
+        |  JOIN marg m USING (pkey) WHERE m.n_item >= 25),
+        |pairs AS (SELECT a.pkey AS p_a, b.pkey AS p_b,
+        |    a.n_item AS n_a, b.n_item AS n_b, COUNT(*) AS n_ab
+        |  FROM fb a JOIN fb b ON a.okey = b.okey AND a.pkey < b.pkey
+        |  GROUP BY 1, 2, 3, 4 HAVING COUNT(*) >= 3),
+        |rules AS (
+        |  SELECT p_a AS antecedent, p_b AS consequent,
+        |    n_a AS n_ant, n_b AS n_cons, n_ab FROM pairs
+        |  UNION ALL
+        |  SELECT p_b, p_a, n_b, n_a, n_ab FROM pairs)
+        |SELECT antecedent, consequent, CAST(n_ab AS BIGINT) AS n_ab,
+        |  CAST(n_ant AS BIGINT) AS n_ant, CAST(n_cons AS BIGINT) AS n_cons,
+        |  CAST(n_ab AS DOUBLE) / n_ant AS confidence,
+        |  CAST(n_ab * no.n_orders AS DOUBLE) / (n_ant * n_cons) AS lift
+        |FROM rules, no
+        |ORDER BY antecedent, consequent""".stripMargin),
+    // GROUPING() bit order is the shared convention: 1 = column
+    // aggregated away, first listed column = MSB — Spark grouping_id()
+    // and DuckDB GROUPING() agree bit for bit
+    "q_grouping_sets" -> fixed(qGroupingSets _)(
+      """SELECT r_name, c_mktsegment, o_orderstatus,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS total_revenue,
+        |  COUNT(*) AS n_orders,
+        |  CAST(GROUPING(r_name, c_mktsegment, o_orderstatus) AS BIGINT)
+        |    AS gid
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY GROUPING SETS ((r_name, o_orderstatus),
+        |  (c_mktsegment), ())
+        |ORDER BY gid, r_name NULLS FIRST, c_mktsegment NULLS FIRST,
+        |  o_orderstatus NULLS FIRST""".stripMargin),
+    // the window sort key (spend DESC, custkey) is a total order, so
+    // NTILE bucket boundaries are engine-deterministic; percent_rank /
+    // cume_dist are single exact-integer divisions (engine-exact doubles)
+    "q_ntile_spend" -> fixed(qNtileSpend _)(
+      """WITH spend AS (SELECT o_custkey,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS spend,
+        |    COUNT(*) AS n_orders
+        |  FROM orders GROUP BY 1)
+        |SELECT c_custkey, c_mktsegment, spend, n_orders,
+        |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
+        |  PERCENT_RANK() OVER w AS pct_rank,
+        |  CUME_DIST() OVER w AS cume
+        |FROM spend JOIN customer ON o_custkey = c_custkey
+        |WINDOW w AS (PARTITION BY c_mktsegment
+        |  ORDER BY spend DESC, c_custkey)
+        |ORDER BY c_mktsegment, spend DESC, c_custkey""".stripMargin),
+    "q_k_anonymity" -> fixed((s, d) => qKAnonymity(s, d))(
+      """WITH g AS (SELECT c_custkey,
+        |    CAST(c_nationkey % 5 AS VARCHAR) AS zone_q,
+        |    c_mktsegment AS segment_q,
+        |    CAST(CAST(FLOOR(c_acctbal / 2000.0) AS BIGINT) AS VARCHAR)
+        |      AS band_q
+        |  FROM customer),
+        |w AS (SELECT *, COUNT(*) OVER (PARTITION BY zone_q, segment_q,
+        |    band_q) AS grp_n FROM g)
+        |SELECT c_custkey,
+        |  CASE WHEN grp_n >= 5 THEN zone_q ELSE '*' END AS zone_q,
+        |  CASE WHEN grp_n >= 5 THEN segment_q ELSE '*' END AS segment_q,
+        |  CASE WHEN grp_n >= 5 THEN band_q ELSE '*' END AS band_q,
+        |  grp_n >= 5 AS retained
+        |FROM w ORDER BY c_custkey""".stripMargin),
+    // each p·ln term snapped to the 2^-16 grid before SUM (the
+    // q_source_entropy discipline): snapped terms are exactly
+    // representable, so the sum is order-exact on both engines
+    "q_mutual_info" -> fixed(qMutualInfo _)(
+      """WITH j AS (SELECT c_mktsegment AS seg, o_orderpriority AS prio
+        |  FROM orders JOIN customer ON o_custkey = c_custkey),
+        |cxy AS (SELECT seg, prio, COUNT(*) AS n_xy FROM j GROUP BY 1, 2),
+        |cx AS (SELECT seg, CAST(SUM(n_xy) AS BIGINT) AS n_x FROM cxy
+        |  GROUP BY 1),
+        |cy AS (SELECT prio, CAST(SUM(n_xy) AS BIGINT) AS n_y FROM cxy
+        |  GROUP BY 1),
+        |t AS (SELECT CAST(SUM(n_xy) AS BIGINT) AS n FROM cxy)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs, MAX(n) AS n,
+        |  SUM(floor((CAST(n_xy AS DOUBLE) / n) *
+        |    ln((CAST(n_xy AS DOUBLE) * CAST(n AS DOUBLE)) /
+        |       (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE)))
+        |    * 65536.0) / 65536.0) AS mi_nats
+        |FROM cxy JOIN cx USING (seg) JOIN cy USING (prio)
+        |CROSS JOIN t""".stripMargin),
+    // seeded Laplace replay: u is an odd dyadic (2·(h mod 2^52)+1)/2^53
+    // — open (0,1), never 1/2; t = 1-2|u-1/2| is exact dyadic, ln
+    // snapped to the 2^-16 grid, negation exact, count+noise exact sum
+    "q_dp_counts" -> fixed(qDpCounts _)(
+      """WITH g AS (SELECT c_nationkey, c_mktsegment,
+        |    COUNT(*) AS n_true FROM customer GROUP BY 1, 2),
+        |d AS (SELECT *,
+        |    (CAST(CAST(md5_number_lower(CAST(c_nationkey AS VARCHAR)
+        |        || ':' || c_mktsegment) AS HUGEINT) % 4503599627370496
+        |      * 2 + 1 AS DOUBLE)) / 9007199254740992.0 AS u
+        |  FROM g),
+        |n AS (SELECT *,
+        |    floor(ln(1.0 - 2.0 * abs(u - 0.5)) * 65536.0) / 65536.0
+        |      AS ln_t
+        |  FROM d)
+        |SELECT c_nationkey, c_mktsegment, n_true,
+        |  CASE WHEN u >= 0.5 THEN -ln_t ELSE ln_t END AS noise,
+        |  CAST(n_true AS DOUBLE) +
+        |    CASE WHEN u >= 0.5 THEN -ln_t ELSE ln_t END AS released,
+        |  CAST(1.0 AS DOUBLE) AS epsilon,
+        |  CAST(1.0 AS DOUBLE) AS sensitivity
+        |FROM n ORDER BY c_nationkey, c_mktsegment""".stripMargin),
+    // revenues are exact-decimal sums cast once; delta and pct are
+    // single IEEE subtract/divide — engine-exact
+    "q_period_over_period" -> fixed(qPeriodOverPeriod _)(
+      """WITH rev AS (SELECT
+        |    CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS day,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS revenue,
+        |    COUNT(*) AS n_orders
+        |  FROM orders GROUP BY 1)
+        |SELECT day, revenue, n_orders,
+        |  lag(revenue, 1) OVER (ORDER BY day) AS prev_revenue,
+        |  revenue - lag(revenue, 1) OVER (ORDER BY day) AS delta,
+        |  (revenue - lag(revenue, 1) OVER (ORDER BY day))
+        |    / lag(revenue, 1) OVER (ORDER BY day) AS pct_change
+        |FROM rev ORDER BY day""".stripMargin),
+    // fold partials are exact DECIMAL(18,2) sums; the leave-one-fold-out
+    // window sums stay exact (decimal addition associative); the encoding
+    // is ONE IEEE division of the two exactly-rounded casts
+    "q_target_encode" -> fixed(qTargetEncode _)(
+      """WITH j AS (SELECT c.c_mktsegment AS segment,
+        |    o.o_orderkey % 5 AS fold,
+        |    CAST(o.o_totalprice AS DECIMAL(18,2)) AS v
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
+        |pf AS (SELECT segment, fold, SUM(v) AS s, COUNT(*) AS n
+        |  FROM j GROUP BY 1, 2)
+        |SELECT segment, CAST(fold AS BIGINT) AS fold, n AS n_fold,
+        |  CAST(SUM(n) OVER (PARTITION BY segment) - n AS BIGINT)
+        |    AS n_other_folds,
+        |  CAST(SUM(s) OVER (PARTITION BY segment) - s AS DOUBLE)
+        |    / CAST(SUM(n) OVER (PARTITION BY segment) - n AS DOUBLE)
+        |    AS enc_target_mean
+        |FROM pf ORDER BY segment, fold""".stripMargin),
+    // the quasi-group verdict (COUNT DISTINCT sensitive) replays as the
+    // same grouped aggregate; suppression is all-or-nothing per group
+    "q_l_diversity" -> fixed((s, d) => qLDiversity(s, d))(
+      """WITH g AS (SELECT c_custkey,
+        |    CAST(c_nationkey % 5 AS VARCHAR) AS zone_q,
+        |    CAST(CAST(FLOOR(c_acctbal / 2000.0) AS BIGINT) AS VARCHAR)
+        |      AS band_q,
+        |    c_mktsegment AS sensitive
+        |  FROM customer),
+        |gr AS (SELECT zone_q, band_q,
+        |    COUNT(DISTINCT sensitive) AS n_sensitive
+        |  FROM g GROUP BY 1, 2)
+        |SELECT c_custkey,
+        |  CASE WHEN n_sensitive >= 3 THEN g.zone_q ELSE '*' END AS zone_q,
+        |  CASE WHEN n_sensitive >= 3 THEN g.band_q ELSE '*' END AS band_q,
+        |  sensitive, n_sensitive,
+        |  CAST(n_sensitive >= 3 AS BIGINT) AS retained
+        |FROM g JOIN gr USING (zone_q, band_q)
+        |ORDER BY c_custkey""".stripMargin),
+    // n_within is recomputed from the FULL cross join — since the radius
+    // (0.05°) never exceeds the cell (0.1°), the 3×3 neighborhood must
+    // cover every within-radius pair; a grid join that missed one would
+    // undercount and hash-fail (the q_fuzzy_join completeness discipline)
+    "q_geo_grid_join" -> fixed(qGeoGridJoin _)(
+      """WITH c AS (SELECT c_custkey,
+        |    CAST(48 AS DOUBLE) + CAST(c_custkey * 2654435761 % 1000
+        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS c_lat,
+        |    CAST(2 AS DOUBLE) + CAST(c_custkey * 1099087573 % 1000
+        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS c_lon
+        |  FROM customer),
+        |cc AS (SELECT *, CAST(FLOOR(c_lat * 10) AS BIGINT) AS cx,
+        |    CAST(FLOOR(c_lon * 10) AS BIGINT) AS cy FROM c),
+        |s AS (SELECT s_suppkey,
+        |    CAST(48 AS DOUBLE) + CAST(s_suppkey * 2654435761 % 1000
+        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS s_lat,
+        |    CAST(2 AS DOUBLE) + CAST(s_suppkey * 1099087573 % 1000
+        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS s_lon
+        |  FROM supplier),
+        |ss AS (SELECT *, CAST(FLOOR(s_lat * 10) AS BIGINT) AS sx,
+        |    CAST(FLOOR(s_lon * 10) AS BIGINT) AS sy FROM s),
+        |cand AS (SELECT s_suppkey, c_custkey,
+        |    (s_lat - c_lat) * (s_lat - c_lat)
+        |      + (s_lon - c_lon) * (s_lon - c_lon) AS d2
+        |  FROM ss JOIN cc ON abs(sx - cx) <= 1 AND abs(sy - cy) <= 1),
+        |win AS (SELECT s.s_suppkey, COUNT(*) AS n_within
+        |  FROM s CROSS JOIN c
+        |  WHERE (s_lat - c_lat) * (s_lat - c_lat)
+        |      + (s_lon - c_lon) * (s_lon - c_lon)
+        |    < CAST(0.0025 AS DOUBLE)
+        |  GROUP BY 1),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY s_suppkey
+        |    ORDER BY d2, c_custkey) AS rk FROM cand)
+        |SELECT r.s_suppkey, COUNT(*) AS n_candidates,
+        |  CAST(COALESCE(MAX(win.n_within), 0) AS BIGINT) AS n_within,
+        |  MAX(CASE WHEN rk = 1 THEN c_custkey END) AS nearest_custkey,
+        |  MAX(CASE WHEN rk = 1 THEN d2 END) AS nearest_d2
+        |FROM r LEFT JOIN win ON r.s_suppkey = win.s_suppkey
+        |GROUP BY 1 ORDER BY r.s_suppkey""".stripMargin),
+    // deterministic keyed tokens: same md5 over the same concatenation
+    // in both engines; the raw identifier never reaches the output
+    "q_pseudonymize" -> fixed(qPseudonymize _)(
+      """SELECT c_custkey,
+        |  md5('release-2024-06:' || c_name) AS token,
+        |  md5('release-2024-07:' || c_name) AS token_rotated,
+        |  c_mktsegment
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    "q_geohash" -> fixed(qGeohash _)(geohashOracle),
+    // quintile boundaries are engine-deterministic: total-order NTILE
+    // sort keys (metric, custkey); recency anchored to the corpus max
+    // date, never wall clock
+    "q_rfm_segmentation" -> fixed(qRfmSegmentation _)(
+      """WITH a AS (SELECT MAX(o_orderdate) AS anchor FROM orders),
+        |rfm AS (SELECT o_custkey,
+        |    CAST(MIN(date_diff('day', CAST(o_orderdate AS DATE),
+        |      CAST(anchor AS DATE))) AS BIGINT) AS r_days,
+        |    COUNT(*) AS f_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |      AS m_total
+        |  FROM orders CROSS JOIN a GROUP BY 1),
+        |q AS (SELECT o_custkey, r_days, f_orders, m_total,
+        |    CAST(NTILE(5) OVER (ORDER BY r_days, o_custkey) AS BIGINT)
+        |      AS r_q,
+        |    CAST(NTILE(5) OVER (ORDER BY f_orders DESC, o_custkey)
+        |      AS BIGINT) AS f_q,
+        |    CAST(NTILE(5) OVER (ORDER BY m_total DESC, o_custkey)
+        |      AS BIGINT) AS m_q
+        |  FROM rfm)
+        |SELECT o_custkey, r_days, f_orders, m_total, r_q, f_q, m_q,
+        |  r_q || '-' || f_q || '-' || m_q AS segment
+        |FROM q ORDER BY o_custkey""".stripMargin),
+    "q_benford_audit" -> fixed(qBenfordAudit _)(benfordOracle),
+    "q_geo_radius" -> fixed(qGeoRadius _)(geoRadiusOracle),
+    // A/A hash-split experiment: all twelve moments in exact decimal
+    // domains, the CUPED closed forms written as the identical double
+    // expression trees (CAST(k AS DOUBLE) literals — bare decimals are
+    // DECIMAL-typed in this dialect)
+    "q_ab_cuped" -> fixed(qAbCuped _)(
+      """WITH pc AS (SELECT o_custkey,
+        |    CAST(COALESCE(SUM(CASE WHEN o_orderdate < DATE '1996-01-01'
+        |      THEN CAST(o_totalprice AS DECIMAL(18,2)) END),
+        |      CAST(0 AS DECIMAL(18,2))) * 100 AS BIGINT) AS x,
+        |    CAST(COALESCE(SUM(CASE WHEN o_orderdate >= DATE '1996-01-01'
+        |      THEN CAST(o_totalprice AS DECIMAL(18,2)) END),
+        |      CAST(0 AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
+        |  FROM orders GROUP BY o_custkey),
+        |u AS (SELECT o_custkey, x, y,
+        |    CASE WHEN (ascii(substring(md5(CAST(o_custkey AS VARCHAR)),1,1))
+        |      - CASE WHEN ascii(substring(md5(CAST(o_custkey AS VARCHAR)),1,1)) >= 97
+        |        THEN 87 ELSE 48 END) % 2 = 0 THEN 'A' ELSE 'B' END AS v,
+        |    CAST(x * x AS DECIMAL(30,0)) AS xx,
+        |    CAST(y * y AS DECIMAL(30,0)) AS yy,
+        |    CAST(x * y AS DECIMAL(30,0)) AS xy
+        |  FROM pc),
+        |s AS (SELECT
+        |    CAST(SUM(CASE WHEN v = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS na_e,
+        |    CAST(SUM(CASE WHEN v = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS nb_e,
+        |    SUM(CASE WHEN v = 'A' THEN CAST(x AS DECIMAL(20,0)) END) AS sxa_e,
+        |    SUM(CASE WHEN v = 'A' THEN CAST(y AS DECIMAL(20,0)) END) AS sya_e,
+        |    SUM(CASE WHEN v = 'A' THEN xx END) AS sxxa_e,
+        |    SUM(CASE WHEN v = 'A' THEN yy END) AS syya_e,
+        |    SUM(CASE WHEN v = 'A' THEN xy END) AS sxya_e,
+        |    SUM(CASE WHEN v = 'B' THEN CAST(x AS DECIMAL(20,0)) END) AS sxb_e,
+        |    SUM(CASE WHEN v = 'B' THEN CAST(y AS DECIMAL(20,0)) END) AS syb_e,
+        |    SUM(CASE WHEN v = 'B' THEN xx END) AS sxxb_e,
+        |    SUM(CASE WHEN v = 'B' THEN yy END) AS syyb_e,
+        |    SUM(CASE WHEN v = 'B' THEN xy END) AS sxyb_e
+        |  FROM u),
+        |d AS (SELECT na_e, nb_e,
+        |    CAST(na_e AS DOUBLE) AS nad, CAST(nb_e AS DOUBLE) AS nbd,
+        |    CAST(na_e + nb_e AS DOUBLE) AS nd,
+        |    CAST(sxa_e + sxb_e AS DOUBLE) AS sxd,
+        |    CAST(sya_e + syb_e AS DOUBLE) AS syd,
+        |    CAST(sxxa_e + sxxb_e AS DOUBLE) AS sxxd,
+        |    CAST(sxya_e + sxyb_e AS DOUBLE) AS sxyd,
+        |    CAST(sxa_e AS DOUBLE) AS sxad, CAST(sxb_e AS DOUBLE) AS sxbd,
+        |    CAST(sya_e AS DOUBLE) AS syad, CAST(syb_e AS DOUBLE) AS sybd,
+        |    CAST(sxxa_e AS DOUBLE) AS sxxad, CAST(sxxb_e AS DOUBLE) AS sxxbd,
+        |    CAST(syya_e AS DOUBLE) AS syyad, CAST(syyb_e AS DOUBLE) AS syybd,
+        |    CAST(sxya_e AS DOUBLE) AS sxyad, CAST(sxyb_e AS DOUBLE) AS sxybd
+        |  FROM s),
+        |t AS (SELECT *,
+        |    (sxyd - sxd * syd / nd) / (sxxd - sxd * sxd / nd) AS theta,
+        |    sxd / nd AS mxp,
+        |    syad / nad AS mya, sybd / nbd AS myb,
+        |    sxad / nad AS mxa, sxbd / nbd AS mxb
+        |  FROM d),
+        |w AS (SELECT *,
+        |    mya - theta * (mxa - mxp) AS mcva,
+        |    myb - theta * (mxb - mxp) AS mcvb,
+        |    (syyad - syad * syad / nad) / (nad - CAST(1 AS DOUBLE)) AS vya,
+        |    (syybd - sybd * sybd / nbd) / (nbd - CAST(1 AS DOUBLE)) AS vyb,
+        |    (syyad - CAST(2 AS DOUBLE) * theta * sxyad
+        |      + theta * theta * sxxad
+        |      - nad * (mya - theta * mxa) * (mya - theta * mxa))
+        |      / (nad - CAST(1 AS DOUBLE)) AS vcva,
+        |    (syybd - CAST(2 AS DOUBLE) * theta * sxybd
+        |      + theta * theta * sxxbd
+        |      - nbd * (myb - theta * mxb) * (myb - theta * mxb))
+        |      / (nbd - CAST(1 AS DOUBLE)) AS vcvb
+        |  FROM t)
+        |SELECT na_e AS n_a, nb_e AS n_b, mya AS mean_a, myb AS mean_b,
+        |  myb - mya AS lift, theta,
+        |  mcvb - mcva AS lift_cuped,
+        |  sqrt(vcva / nad + vcvb / nbd) AS se_cuped,
+        |  (mcvb - mcva) / sqrt(vcva / nad + vcvb / nbd) AS z_cuped,
+        |  CAST(1 AS DOUBLE) - (vcva + vcvb) / (vya + vyb) AS var_reduction
+        |FROM w""".stripMargin),
+    // deterministic Poisson-bootstrap replay: the same md5 lane →
+    // Poisson(1) CDF thresholds → exact integer weighted sums; each
+    // replica mean is one IEEE division, order statistics tie-broken
+    // by replica id in both engines
+    "q_bootstrap_ci" -> fixed(qBootstrapCi _)(
+      """WITH pc AS (SELECT o_custkey,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+        |      AS y
+        |  FROM orders GROUP BY o_custkey),
+        |f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        |    SUM(CAST(y AS DECIMAL(20,0))) AS sy FROM pc),
+        |r AS (SELECT o_custkey, y, CAST(bb.b AS INT) AS b
+        |  FROM pc CROSS JOIN (SELECT unnest(range(64)) AS b) bb),
+        |hs0 AS (SELECT y, b,
+        |    substring(md5(CAST(o_custkey AS VARCHAR) || '-'
+        |        || CAST(b // 16 AS VARCHAR)),
+        |      2 * (b % 16) + 1, 2) AS hs
+        |  FROM r),
+        |w0 AS (SELECT y, b,
+        |    (ascii(substring(hs, 1, 1))
+        |      - CASE WHEN ascii(substring(hs, 1, 1)) >= 97
+        |        THEN 87 ELSE 48 END) * 16
+        |    + (ascii(substring(hs, 2, 1))
+        |      - CASE WHEN ascii(substring(hs, 2, 1)) >= 97
+        |        THEN 87 ELSE 48 END) AS u
+        |  FROM hs0),
+        |w1 AS (SELECT y, b, CASE WHEN u < 94 THEN 0 WHEN u < 188 THEN 1
+        |    WHEN u < 235 THEN 2 WHEN u < 251 THEN 3 ELSE 4 END AS w
+        |  FROM w0),
+        |g AS (SELECT b, CAST(SUM(w) AS BIGINT) AS sw,
+        |    SUM(CAST(w * y AS DECIMAL(25,0))) AS swy
+        |  FROM w1 WHERE w > 0 GROUP BY b),
+        |m AS (SELECT b, CAST(swy AS DOUBLE) / CAST(sw AS DOUBLE) AS mm
+        |  FROM g),
+        |o AS (SELECT mm, row_number() OVER (ORDER BY mm, b) AS rn FROM m)
+        |SELECT (SELECT n FROM f) AS n, CAST(64 AS BIGINT) AS n_replicas,
+        |  (SELECT CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) FROM f)
+        |    AS mean_cents,
+        |  (SELECT mm FROM o WHERE rn = 2) AS ci_lo,
+        |  (SELECT mm FROM o WHERE rn = 63) AS ci_hi,
+        |  (SELECT mm FROM o WHERE rn = 63) - (SELECT mm FROM o WHERE rn = 2)
+        |    AS width""".stripMargin),
+    // cohort grid in integer cents; exact month arithmetic (never the
+    // fractional months_between); cumulative window over the bounded
+    // (cohort, age) grid — HUGEINT window sum cast back to BIGINT
+    "q_cohort_ltv" -> fixed(qCohortLtv _)(
+      """WITH o AS (SELECT o_custkey, o_orderdate, o_totalprice
+        |  FROM orders),
+        |f AS (SELECT o_custkey, MIN(o_orderdate) AS first_dt
+        |  FROM o GROUP BY o_custkey),
+        |co AS (SELECT CAST(date_trunc('month', first_dt) AS DATE)
+        |      AS cohort,
+        |    CAST((year(o_orderdate) * 12 + month(o_orderdate))
+        |      - (year(first_dt) * 12 + month(first_dt)) AS BIGINT) AS age,
+        |    o_totalprice
+        |  FROM o JOIN f USING (o_custkey)),
+        |grid AS (SELECT cohort, age,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+        |      AS rev_cents,
+        |    COUNT(*) AS n_orders
+        |  FROM co GROUP BY 1, 2),
+        |sz AS (SELECT CAST(date_trunc('month', first_dt) AS DATE)
+        |      AS cohort,
+        |    COUNT(*) AS n_customers
+        |  FROM f GROUP BY 1),
+        |j AS (SELECT g.cohort, age, n_customers, n_orders, rev_cents,
+        |    CAST(SUM(rev_cents) OVER (PARTITION BY g.cohort ORDER BY age
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum_cents
+        |  FROM grid g JOIN sz USING (cohort))
+        |SELECT cohort, age, n_customers, n_orders, rev_cents, cum_cents,
+        |  CAST(cum_cents AS DOUBLE) / CAST(n_customers AS DOUBLE)
+        |    AS ltv_cents
+        |FROM j ORDER BY cohort, age""".stripMargin),
+    "q_gbt_regression" -> trained(gbtTrainOrGet)(
+      qGbtRegression)(gbtScoreOracle),
+    "q_gbt_importance" -> trained(gbtTrainOrGet)(
+      qGbtImportance)(gbtImportanceOracle),
+    "q_conformal_interval" -> trained(gbtTrainOrGet)(
+      qConformalInterval)(gbtConformalOracle),
+    // the registry rows score with the STORED artifact; the oracle
+    // inlines the in-session model — store/serve drift hash-fails
+    "q_model_serve" -> trained(gbtVersionsFor)(
+      (s, d, m) => qModelServe(s, d, m))(
+      m => modelServeOracle(m.fresh)),
+    "q_gbt_tree" -> trained(gbtTreeTrainOrGet)(qGbtTree)(gbtTreeOracle),
+    // rollback serves the PINNED v1 artifact — the oracle inlines the
+    // in-session half-trained model, so serving the wrong version or
+    // reading back a different artifact hash-fails
+    "q_model_rollback" -> trained(gbtVersionsFor)(
+      (s, d, m) => qModelRollback(s, d, m))(
+      m => rollbackOracle(m.stale)),
+    // the tree registry serves the STORED depth-2 artifact; the oracle
+    // inlines the in-session tree model — any round-trip loss in a
+    // node, child flag or leaf delta hash-fails the scores
+    "q_model_serve_tree" -> trained(gbtTreeVersionsFor)(
+      (s, d, m) => qModelServeTree(s, d, m))(
+      m => treeServeOracle(m.fresh)),
+    // depth-3 scoring replay from the generic trainer's model — any
+    // routing or leaf-delta defect at any level hash-fails
+    "q_gbt_depth3" -> trained(gbtDeepTrainOrGet)(qGbtDepth3)(deepScoreOracle),
+    // alias staging: promoted rows score with the full model (prod →
+    // v2), rolled-back rows with the half model (prod re-pointed at
+    // v1) — an alias swap that doesn't change what serves hash-fails
+    "q_model_alias" -> trained(gbtVersionsFor)(
+      qModelAlias)(m => aliasOracle(m.fresh, m.stale)),
+  )
 }

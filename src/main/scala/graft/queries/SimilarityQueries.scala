@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed, trained}
 import graft.sources.{Datalake, Tables}
 import graft.ops.{Dedup, Similarity}
 
@@ -11,7 +13,7 @@ import graft.ops.{Dedup, Similarity}
   * path AND the trained-model ANN paths (IVF, PQ) have exact DuckDB
   * oracles: constants the query depends on — seeded hyperplanes, trained
   * centroids/codebooks — are inlined as literals into GENERATED SQL
-  * (SparkEntry.lshOracle/ivfOracle/pqOracle), so DuckDB replays the full
+  * ([[lshOracle]]/[[ivfOracle]]/[[pqOracle]]), so DuckDB replays the full
   * model-application path without retraining. The text-sketch families
   * (minhash/simhash/winnow) are ALSO exact: their kernels hash shingles
   * with md5 lanes (the one hash both engines share — DuckDB
@@ -232,7 +234,7 @@ object SimilarityQueries {
     * scans from every Verify/bench sweep. The model is a pure function of
     * the dir's corpus, so cache staleness is not a concern in one JVM.
     *
-    * The trained models are plain values: the registry (SparkEntry)
+    * The trained models are plain values: the registry row ([[defs]])
     * fetches one through an accessor like [[centroidsFor]], passes it to
     * the query as an argument and renders the row's DuckDB oracle from
     * the same value, inlining it as literals (the lshOracle pattern) —
@@ -360,7 +362,7 @@ object SimilarityQueries {
     * the smaller store shuffles; queries stay on their original floats.
     * Exact-oracled: DuckDB's float32 arithmetic replays quantize →
     * dequantize → assignment → probe → serve bit-for-bit
-    * (SparkEntry.ivfQuantOracle); recall ≥ 0.95 vs the float IVF is
+    * ([[ivfQuantOracle]]); recall ≥ 0.95 vs the float IVF is
     * pinned in SimilaritySpec.
     */
   def qAnnIvfQuantized(spark: SparkSession, dir: String,
@@ -427,7 +429,7 @@ object SimilarityQueries {
   /** PQ-compressed ANN: train per-subspace codebooks, encode the corpus to
     * 8-byte codes (32x compression), ADC-shortlist 64 candidates from the
     * codes alone, exact-L2 rerank only the shortlist. SQL-oracled via
-    * trained-codebook inlining (SparkEntry.pqOracle); recall vs exact L2
+    * trained-codebook inlining ([[pqOracle]]); recall vs exact L2
     * additionally asserted in SimilaritySpec.
     */
   def qAnnPq(spark: SparkSession, dir: String,
@@ -486,7 +488,7 @@ object SimilarityQueries {
     * restores it (PcaSpec pins the floor) — the projection's job is
     * CANDIDATE GENERATION, the floats' job is ranking. Exact-oracled:
     * snapped-grid projection replay + shared IVF fragments + full-dim
-    * rerank tail (SparkEntry.ivfPcaOracle).
+    * rerank tail ([[ivfPcaOracle]]).
     */
   def qAnnIvfPca(spark: SparkSession, dir: String,
       model: (Array[Double], Array[Double], Array[Array[Float]])): DataFrame = {
@@ -538,7 +540,7 @@ object SimilarityQueries {
     * the 2⁻²⁰ grid). The rotation is one extra map-side codegen pass at
     * write/query time — same scan cost as plain PQ, better code-budget
     * use. Exact-oracled: the rotation replays as snapped-grid sums
-    * (SparkEntry.opqOracle), then the shared encode/LUT/ADC/rerank
+    * ([[opqOracle]]), then the shared encode/LUT/ADC/rerank
     * fragments run on the rotated corpus; distortion-vs-plain-PQ is
     * pinned in SimilaritySpec.
     */
@@ -566,7 +568,7 @@ object SimilarityQueries {
     * `model` is the per-dir (centroids, codebook) pair — both caches —
     * so query + oracle see identical constants. Exact-oracled: the generated
     * SQL merges the IVF assignment/probe CTEs with the PQ
-    * encode/LUT/ADC/rerank CTEs (SparkEntry.ivfpqOracle); recall vs the
+    * encode/LUT/ADC/rerank CTEs ([[ivfpqOracle]]); recall vs the
     * float IVF-flat is pinned in SimilaritySpec.
     */
   private[graft] def ivfPqModelFor(spark: SparkSession,
@@ -610,7 +612,7 @@ object SimilarityQueries {
     * residual. Exact-oracled: the float32 residual subtraction replays in
     * DuckDB FLOAT[] arithmetic, then the shared encode/LUT/ADC/rerank
     * fragments run on the residual columns
-    * (SparkEntry.ivfpqResidualOracle).
+    * ([[ivfpqResidualOracle]]).
     */
   def qAnnIvfPqResidual(spark: SparkSession, dir: String,
       model: (Array[Array[Float]], graft.ops.Pq.PqModel)): DataFrame = {
@@ -804,7 +806,7 @@ object SimilarityQueries {
   /** SemDeDup-shaped clustered embedding near-dup: k-means cells (the IVF
     * coarse quantizer reused as the cluster model), within-cell exact
     * cosine pairs. SQL-oracled via trained-centroid inlining
-    * (SparkEntry.semOracle); within-cell-subset-of-exact additionally
+    * ([[semOracle]]); within-cell-subset-of-exact additionally
     * asserted in SimilaritySpec. nCells = √n (Similarity.cellsFor): the
     * within-cell pair join is O((n/nCells)²) per cell, so a fixed cell
     * count would blow up quadratically as the corpus grows.
@@ -854,7 +856,7 @@ object SimilarityQueries {
     * the join key so only the daily increment ever shuffles.
     *
     * Exact-oracled: DuckDB replays both generations' md5-lane sketches,
-    * the store contents, and both joins (SparkEntry: q_dedup_incremental).
+    * the store contents, and both joins (q_dedup_incremental in [[defs]]).
     */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Datalake
@@ -886,7 +888,7 @@ object SimilarityQueries {
     * merged into per-doc removable spans, canonical first occurrence kept.
     * Exact-oracled: DuckDB replays the positioned md5-lane window hashes,
     * the count/min window and the gaps-and-islands merge
-    * (SparkEntry: q_substring_dedup).
+    * (q_substring_dedup in [[defs]]).
     */
   def qSubstringDedup(spark: SparkSession, dir: String): DataFrame =
     Dedup.exactSubstringSpans(Tables.documents(spark, dir),
@@ -946,4 +948,890 @@ object SimilarityQueries {
     graft.ops.SetJoin.containmentPairs(Tables.documents(spark, dir),
         col("doc_id"), col("text"), tauNum = 2, tauDen = 3)
       .orderBy(col("doc_a"), col("doc_b"))
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The LSH oracle is GENERATED: the seeded hyperplanes (the exact arrays
+    * the Spark query uses — same `Similarity.hyperplanes(64, 4, 4)` call)
+    * are inlined as DOUBLE list literals, so DuckDB reproduces the
+    * signatures bit-for-bit: each sign bit is a double-accumulated dot of
+    * the same float values in the same order on both engines, and the
+    * verification filter computes cosine on the DOUBLE[] embedding (the
+    * FLOAT[] overload computes in float, ~1e-7 off the Spark kernel's
+    * double accumulation — near-tau pairs would diverge).
+    */
+  private def lshPairCtes: String = {
+    // single source of truth with the Spark query — see LshParams scaladoc
+    import graft.ops.Similarity.LshParams.{bands, bits, dim, tau}
+    val planes = graft.ops.Similarity.hyperplanes(dim, bands, bits)
+    def planeLit(p: Array[Float]): String =
+      p.map(v => v.toDouble.toString).mkString("[", ", ", "]")
+    val sigs = (0 until bands).map { b =>
+      (0 until bits).map { i =>
+        s"(CASE WHEN list_dot_product(embd, ${planeLit(planes(b * bits + i))}) >= 0 THEN ${1 << i} ELSE 0 END)"
+      }.mkString("", " + ", s" AS sig_$b")
+    }
+    s"""e AS (SELECT vec_id AS id,
+       |    CAST(embedding AS DOUBLE[]) AS embd FROM embeddings),
+       |s AS (SELECT id, embd, ${sigs.mkString(",\n")} FROM e),
+       |bk AS (SELECT id, embd, band,
+       |    CASE band ${(0 until bands).map(b => s"WHEN $b THEN sig_$b").mkString(" ")} END AS sig
+       |  FROM s CROSS JOIN (SELECT unnest(range($bands)) AS band)),
+       |p AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
+       |  FROM bk a JOIN bk b
+       |    ON a.band = b.band AND a.sig = b.sig AND a.id < b.id
+       |  WHERE list_cosine_similarity(a.embd, b.embd) >= $tau)""".stripMargin
+  }
+
+  private def lshOracle: String =
+    s"""WITH $lshPairCtes
+       |SELECT id_a, id_b FROM p ORDER BY id_a, id_b""".stripMargin
+
+  /** Connected components over the LSH pair graph: min reachable id via a
+    * recursive transitive-closure CTE — exact, so it matches the converged
+    * min-label propagation regardless of either engine's iteration order.
+    */
+  private[graft] def clustersOracle: String =
+    s"""WITH RECURSIVE $lshPairCtes,
+       |ed AS (SELECT id_a AS src, id_b AS dst FROM p
+       |  UNION ALL SELECT id_b, id_a FROM p),
+       |reach(id, r) AS (
+       |  SELECT vec_id, vec_id FROM embeddings
+       |  UNION
+       |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src)
+       |SELECT id, CAST(MIN(r) AS BIGINT) AS component
+       |FROM reach GROUP BY id ORDER BY id""".stripMargin
+
+  /** ONE definition of the md5-lane minhash signature + banding CTEs
+    * (w → sh → hx → g → sig → bk over `documents`), shared by every
+    * oracle that replays the sketch (q_minhash_neardup,
+    * q_dedup_incremental) — the sketch parameters (3-gram shingles, k=32,
+    * 8 bands × 4 rows) exist in exactly one SQL rendering, so an edit
+    * cannot desync one oracle from the shared Spark kernel.
+    */
+  private val minhashSigCtes =
+    """w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+      |  FROM documents),
+      |sh AS (SELECT doc_id,
+      |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+      |      ELSE list_transform(generate_series(1, len(ws) - 2),
+      |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END AS sg
+      |  FROM w),
+      |hx AS (SELECT doc_id,
+      |    CAST(md5_number_lower(s) AS HUGEINT) AS h1,
+      |    CAST(md5_number_upper(s) AS HUGEINT) AS h2
+      |  FROM (SELECT doc_id, unnest(sg) AS s FROM sh)),
+      |g AS (SELECT doc_id, j, min((h1 + j*h2) % 18446744073709551616) AS gj
+      |  FROM hx CROSS JOIN (SELECT unnest(range(32)) AS j)
+      |  GROUP BY doc_id, j),
+      |sig AS (SELECT doc_id, list(gj ORDER BY j) AS sig FROM g GROUP BY doc_id),
+      |bk AS (SELECT doc_id, sig, band, list_slice(sig, band*4 + 1, band*4 + 4) AS bslice
+      |  FROM sig CROSS JOIN (SELECT unnest(range(8)) AS band))""".stripMargin
+
+  /** The float corpus as the assignment CTE's `e` input. */
+  private val floatCorpusCte =
+    """e AS (SELECT vec_id AS id,
+      |    CAST(embedding AS DOUBLE[]) AS embd FROM embeddings)""".stripMargin
+
+  /** The int8-quantized-then-dequantized corpus as `e` — replays
+    * VectorKernels.quantize/dequantize BIT-FOR-BIT: DuckDB FLOAT
+    * arithmetic is true float32 (verified: FLOAT/FLOAT and FLOAT*FLOAT
+    * match numpy float32 exactly), scale = list_max(|x|)/127f, dequantize
+    * is code*scale in float — so `e` holds exactly the doubles the Spark
+    * kernel scores. The rounding replay is floor(DOUBLE(x/scale) + 0.5):
+    * JDK 7+ Math.round(float) is EXACT round-half-up (JDK-6430675), NOT
+    * floor(f + 0.5f) — the float-domain add rounds up at values just
+    * below k+0.5 (e.g. 0.49999997f + 0.5f == 1.0f while Math.round gives
+    * 0); float→double widening and the double +0.5 are both exact for
+    * |x/scale| ≤ 127, so the double-domain floor IS Math.round.
+    */
+  private val quantCorpusCtes =
+    """eq AS (SELECT vec_id AS id, embedding AS embf FROM embeddings),
+      |sc AS (SELECT id, embf,
+      |    list_max(list_transform(embf, x -> abs(x))) / CAST(127 AS FLOAT) AS scale
+      |  FROM eq),
+      |dq AS (SELECT id, CASE WHEN scale > 0 THEN
+      |      list_transform(embf, x ->
+      |        CAST(CAST(floor(CAST(x/scale AS DOUBLE) + 0.5) AS INT) AS FLOAT) * scale)
+      |    ELSE list_transform(embf, x -> CAST(0 AS FLOAT)) END AS deqf
+      |  FROM sc),
+      |e AS (SELECT id, CAST(deqf AS DOUBLE[]) AS embd FROM dq)""".stripMargin
+
+  /** Shared centroid-assignment CTE block for every trained-centroid
+    * oracle (IVF, SemDeDup): `e` (corpus with DOUBLE[] embd — FLOAT[]
+    * `list_cosine_similarity` computes in float and deviates ~1e-7 from
+    * the kernels' double accumulation; the DOUBLE[] overload bit-matches),
+    * `cents` (the trained model as literals), `assigned` (argmax cell,
+    * ties to the LOWEST cell — mirrors argmaxCosine's strict `>`). ONE
+    * definition so the assignment rule cannot drift between oracles.
+    */
+  private[graft] def centroidAssignCtes(cents: Array[Array[Float]],
+      corpusCtes: String = floatCorpusCte): String = {
+    def centLit(c: Array[Float]): String =
+      c.map(v => v.toDouble.toString).mkString("[", ", ", "]")
+    val centRows = cents.zipWithIndex
+      .map { case (c, i) => s"($i, CAST(${centLit(c)} AS DOUBLE[]))" }
+      .mkString(",\n")
+    // the CASE mirrors IvfKernels.argmaxCosine's zero-norm guard (cosine
+    // against a zero vector is DEFINED as 0.0 there, where DuckDB's
+    // list_cosine_similarity yields NaN — which sorts ABOVE all values in
+    // DuckDB ORDER BY DESC and would desync assignment for a zero
+    // embedding); the current generator never emits zero vectors, but the
+    // oracle should not depend on that contract silently
+    s"""$corpusCtes,
+       |cents(cell, c) AS (VALUES
+       |$centRows),
+       |assigned AS (SELECT id, embd,
+       |    (SELECT cell FROM cents
+       |     ORDER BY (CASE WHEN list_dot_product(e.embd, e.embd) = 0
+       |         OR list_dot_product(c, c) = 0 THEN 0.0
+       |       ELSE list_cosine_similarity(e.embd, c) END) DESC, cell
+       |     LIMIT 1) AS cell
+       |  FROM e)""".stripMargin
+  }
+
+  /** ONE SQL rendering of the probe stage (top-nProbe cells per query,
+    * ties to the HIGHEST cell — mirrors Similarity.probeCells'
+    * reverse(sort_array)), shared by every IVF-family oracle so the
+    * tie-break rule cannot drift between them. `q` and `cents` must be in
+    * scope; `withQEmbd` keeps the query vector in the output for oracles
+    * that score candidates directly against it.
+    */
+  private[graft] def probesCte(withQEmbd: Boolean): String = {
+    val cols = if (withQEmbd) "query_id, q_embd, cell" else "query_id, cell"
+    s"""probes AS (SELECT $cols FROM (
+       |    SELECT q.query_id, q.q_embd, cents.cell,
+       |      row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY list_cosine_similarity(q.q_embd, cents.c) DESC,
+       |          cents.cell DESC) AS pr
+       |    FROM q CROSS JOIN cents) WHERE pr <= $IvfNProbe)""".stripMargin
+  }
+
+  /** The IVF oracle is GENERATED from the TRAINED model (the lshOracle
+    * pattern, extended to data-dependent constants): float-mean Lloyd
+    * training isn't bit-stable across engines, but the trained centroids
+    * are just numbers — inlined as DOUBLE list literals, DuckDB replays
+    * assignment (argmax cosine, ties to the LOWEST cell — `s > bestS` in
+    * IvfKernels.argmaxCosine), probing (top-nProbe cells, ties to the
+    * HIGHEST cell — reverse(sort_array) in ivfFlatKnnWith), and the
+    * bounded-heap serve (score DESC, id ASC, self excluded) exactly.
+    */
+  private def ivfOracleFrom(cents: Array[Array[Float]], corpusCtes: String,
+      qCte: String): String = {
+    s"""WITH ${centroidAssignCtes(cents, corpusCtes)},
+       |$qCte,
+       |${probesCte(withQEmbd = true)},
+       |cand AS (SELECT p.query_id, a.id,
+       |    CAST(row_number() OVER (PARTITION BY p.query_id
+       |      ORDER BY list_cosine_similarity(p.q_embd, a.embd) DESC, a.id)
+       |      AS BIGINT) AS rank
+       |  FROM probes p JOIN assigned a ON a.cell = p.cell
+       |  WHERE a.id <> p.query_id)
+       |SELECT query_id, id AS neighbor_id, rank FROM cand WHERE rank <= $IvfK
+       |ORDER BY query_id, rank""".stripMargin
+  }
+
+  /** PCA projection replay from the trained model: per component a sum of
+    * per-dimension terms each floored onto the 2⁻²⁰ grid — multiples of
+    * 2⁻²⁰ sum EXACTLY in any association, so the chain is portable even
+    * though DuckDB reassociates long `+` chains (measured: a strict
+    * left-assoc replay diverged ~100 ulps under cancellation). Mean and
+    * axes inlined as shortest-round-trip double literals; the single
+    * multiply-subtract inside each floor is one IEEE op sequence in both
+    * engines.
+    */
+  private def pcaOracle(m: graft.ops.Pca.PcaModel): String = {
+    val cols = m.comps.zipWithIndex.map { case (p, j) =>
+      val terms = (0 until m.dim).map(i =>
+        s"floor((embd[${i + 1}] - ${m.mean(i)}) * ${p(i)} * 1048576.0) / 1048576.0")
+      s"0.0 + ${terms.mkString(" + ")} AS pc${j + 1}"
+    }
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embd
+       |  FROM embeddings)
+       |SELECT vec_id,
+       |  ${cols.mkString(",\n  ")}
+       |FROM e ORDER BY vec_id""".stripMargin
+  }
+
+  private def ivfOracle(cents: Array[Array[Float]]): String =
+    ivfOracleFrom(cents, floatCorpusCte,
+      """q AS (SELECT id AS query_id, embd AS q_embd
+        |  FROM e WHERE id < 10)""".stripMargin)
+
+  /** Retrain-under-drift replay: the corpus is base ∪ the CONE-
+    * CONTRACTED increment (0.05 + 0.3·x per component, ids offset —
+    * both ops exactly-rounded float32 in both engines, literals kept
+    * FLOAT-typed so DuckDB computes in float32), served from the
+    * RETRAINED centroids; queries are the first ten drifted vectors.
+    * The assignment-PSI gate fires deterministically on the contracted
+    * distribution, so the drift_detected literal is part of the hash.
+    */
+  private def ivfRetrainOracle(cents: Array[Array[Float]]): String = {
+    val off = RetrainIdOffset
+    val unionCte =
+      s"""e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS embd
+         |    FROM embeddings
+         |  UNION ALL
+         |  SELECT vec_id + $off AS id,
+         |    CAST(list_transform(embedding,
+         |      x -> CAST(0.05 AS FLOAT) + CAST(0.3 AS FLOAT) * x)
+         |      AS DOUBLE[]) AS embd
+         |    FROM embeddings)""".stripMargin
+    val qCte =
+      s"""q AS (SELECT id AS query_id, embd AS q_embd
+         |  FROM e WHERE id >= $off AND id < ${off + 10})""".stripMargin
+    s"""SELECT query_id, neighbor_id, rank, TRUE AS drift_detected FROM (
+       |${ivfOracleFrom(cents, unionCte, qCte)}
+       |)""".stripMargin
+  }
+
+  /** Quantized-store IVF: corpus side scores the dequantized int8 codes;
+    * the QUERY side stays on the original floats (queries arrive as
+    * floats at serving time — only the stored corpus is quantized).
+    */
+  private def ivfQuantOracle(cents: Array[Array[Float]]): String =
+    ivfOracleFrom(cents, quantCorpusCtes,
+      """q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_embd
+        |  FROM embeddings WHERE vec_id < 10)""".stripMargin)
+
+  /** Shared PQ CTE fragments (codebook VALUES, encode, LUT, ADC sum,
+    * rerank distance) — ONE SQL rendering of each kernel, composed by both
+    * the standalone PQ oracle and the IVF+PQ oracle so the two cannot
+    * drift. All fragments assume the `e(id, embd DOUBLE[])` corpus CTE and
+    * a `q(query_id, q_embd)` query CTE are in scope.
+    */
+  private def pqSq(a: String, b: String): String = s"($a - $b)*($a - $b)"
+
+  private def pqSubDist(model: graft.ops.Pq.PqModel, vec: String): String =
+    (1 to model.sub)
+      .map(d => pqSq(s"$vec[cb.mi*${model.sub} + $d]", s"cb.c[$d]"))
+      .mkString(" + ")
+
+  /** The `cb(mi, cell, c)` codebook VALUES block (DOUBLE[] literals —
+    * the kernels widen float inputs to double before subtracting, so the
+    * double rendering of the float codebook is the exact arithmetic
+    * domain). */
+  private def pqCbValues(model: graft.ops.Pq.PqModel): String = {
+    val cbRows = (for (mi <- 0 until model.m; k <- 0 until model.ksub) yield {
+      val vals = model.centroid(mi, k).map(_.toDouble.toString)
+        .mkString("[", ", ", "]")
+      s"($mi, $k, CAST($vals AS DOUBLE[]))"
+    }).mkString(",\n")
+    s"""cb(mi, cell, c) AS (VALUES
+       |$cbRows)""".stripMargin
+  }
+
+  /** cb / encd / enc / lut: codebook literals, per-subspace argmin encode
+    * (ties to the LOWEST cell — the kernel's strict `<`), per-query float
+    * LUT (`acc.toFloat`).
+    */
+  private def pqEncodeLutCtes(model: graft.ops.Pq.PqModel): String = {
+    s"""${pqCbValues(model)},
+       |encd AS (SELECT e.id, cb.mi, cb.cell,
+       |    ${pqSubDist(model, "e.embd")} AS dist
+       |  FROM e CROSS JOIN cb),
+       |enc AS (SELECT id, mi, cell FROM (
+       |    SELECT id, mi, cell, row_number() OVER (PARTITION BY id, mi
+       |      ORDER BY dist ASC, cell ASC) AS rn FROM encd) WHERE rn = 1),
+       |lut AS (SELECT q.query_id, cb.mi, cb.cell,
+       |    CAST(${pqSubDist(model, "q.q_embd")} AS FLOAT) AS lv
+       |  FROM q CROSS JOIN cb)""".stripMargin
+  }
+
+  /** ADC total over the per-(query, vector) LUT list `ls` (mi order,
+    * left-assoc double adds = the kernel's `acc += getFloat`). */
+  private def pqAdcSum(model: graft.ops.Pq.PqModel): String =
+    (1 to model.m).map(i => s"ls[$i]").mkString(" + ")
+
+  /** shortlist → exact-L2 rerank tail: sqrt BEFORE the ordering (sqrt can
+    * collapse near-equal distances into double ties — EuclideanDistance
+    * applies math.sqrt first), ties to the smaller id, top-k.
+    */
+  private def pqRerankTail(model: graft.ops.Pq.PqModel, k: Int): String = {
+    val rerankDist = (1 to model.dim)
+      .map(i => pqSq(s"a.embd[$i]", s"b.embd[$i]")).mkString(" + ")
+    s"""rr AS (SELECT s.query_id, s.id,
+       |    CAST(row_number() OVER (PARTITION BY s.query_id
+       |      ORDER BY sqrt($rerankDist) ASC, s.id ASC) AS BIGINT) AS rank
+       |  FROM shortlist s
+       |  JOIN e a ON a.id = s.query_id
+       |  JOIN e b ON b.id = s.id)
+       |SELECT query_id, id AS neighbor_id, rank FROM rr WHERE rank <= $k
+       |ORDER BY query_id, rank""".stripMargin
+  }
+
+  /** The PQ oracle replays encode → LUT → ADC → shortlist → exact rerank
+    * from the TRAINED codebook, matching the kernels bit-for-bit
+    * (PqKernels in VectorExprs.scala):
+    *  - encode: unrolled squared-L2 terms in dimension order (left-assoc
+    *    double adds = the kernel's `acc +=` loop), argmin with ties to the
+    *    LOWEST cell (`acc < bestD` is strict);
+    *  - LUT: same unrolled sum, then CAST(... AS FLOAT) = `acc.toFloat`;
+    *  - ADC: per-(query, vector) list of LUT floats ordered by subspace,
+    *    summed left-assoc after CAST AS DOUBLE = `acc += getFloat(...)`;
+    *  - rerank: sqrt of the 64-term unrolled squared L2 (EuclideanDistance
+    *    applies math.sqrt BEFORE the ordering — sqrt can collapse
+    *    near-equal distances into double ties, so the oracle must order by
+    *    the sqrt'd value too), ties to the smaller id, top-k.
+    */
+  private def pqOracle(model: graft.ops.Pq.PqModel): String = {
+    s"""WITH e AS (SELECT vec_id AS id,
+       |    CAST(embedding AS DOUBLE[]) AS embd FROM embeddings),
+       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |${pqEncodeLutCtes(model)},
+       |adcl AS (SELECT l.query_id, enc.id,
+       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
+       |  FROM enc JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell
+       |  WHERE enc.id <> l.query_id
+       |  GROUP BY l.query_id, enc.id),
+       |shortlist AS (SELECT query_id, id FROM (
+       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
+       |    FROM adcl) WHERE rn <= $PqShortlist),
+       |${pqRerankTail(model, PqK)}""".stripMargin
+  }
+
+  /** Snapped-grid projection of the corpus CTE: `e(id, embd)` where embd
+    * is the k-dim projection of `embeddings` under (mean, proj) —
+    * each component a grid-exact sum cast to FLOAT (the kernel's
+    * `acc.toFloat`) and widened back to DOUBLE. Shared by the OPQ and
+    * PCA-IVF oracles so the rotation rendering cannot drift.
+    */
+  private def projectedCorpusCtes(mean: Array[Double], proj: Array[Double],
+      inDim: Int): String = {
+    val outDim = proj.length / inDim
+    val dims = (0 until outDim).map { j =>
+      val terms = (0 until inDim).map(i =>
+        s"floor((x[${i + 1}] - ${mean(i)}) * ${proj(j * inDim + i)} * 1048576.0) / 1048576.0")
+      s"CAST(CAST(0.0 + ${terms.mkString(" + ")} AS FLOAT) AS DOUBLE)"
+    }
+    s"""e0 AS (SELECT vec_id AS id,
+       |    CAST(embedding AS DOUBLE[]) AS x FROM embeddings),
+       |e AS (SELECT id,
+       |    [${dims.mkString(",\n     ")}] AS embd
+       |  FROM e0)""".stripMargin
+  }
+
+  /** The PCA-compressed IVF oracle (q_ann_ivf_pca): assignment, probes,
+    * and the within-cell shortlist run over the 16-dim projected corpus
+    * (16-dim trained centroids inlined); the rerank tail re-scores the
+    * shortlist with full-dim cosine on the ORIGINAL vectors (`e0`), ties
+    * to the smaller id — exactly the engine's rerankCosine.
+    */
+  private def ivfPcaOracle(mean: Array[Double], proj: Array[Double],
+      cents: Array[Array[Float]]): String = {
+    s"""WITH ${centroidAssignCtes(cents, projectedCorpusCtes(mean, proj, 64))},
+       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |${probesCte(withQEmbd = true)},
+       |shortlist AS (SELECT query_id, id FROM (
+       |    SELECT p.query_id, a.id,
+       |      row_number() OVER (PARTITION BY p.query_id
+       |        ORDER BY list_cosine_similarity(p.q_embd, a.embd) DESC, a.id)
+       |        AS rn
+       |    FROM probes p JOIN assigned a ON a.cell = p.cell
+       |    WHERE a.id <> p.query_id) WHERE rn <= $PcaShortlist),
+       |rr AS (SELECT s.query_id, s.id,
+       |    CAST(row_number() OVER (PARTITION BY s.query_id
+       |      ORDER BY list_cosine_similarity(qa.x, b.x) DESC, s.id ASC)
+       |      AS BIGINT) AS rank
+       |  FROM shortlist s
+       |  JOIN e0 qa ON qa.id = s.query_id
+       |  JOIN e0 b ON b.id = s.id)
+       |SELECT query_id, id AS neighbor_id, rank FROM rr WHERE rank <= $IvfK
+       |ORDER BY query_id, rank""".stripMargin
+  }
+
+  /** The OPQ oracle (q_ann_opq): the plain-PQ replay over the ROTATED
+    * corpus. The rotation replays exactly because each rotated component
+    * is a snapped-grid sum (the Pca.projectionCols discipline — every
+    * term a dyadic multiple of 2⁻²⁰, order-independent in any
+    * association) cast to FLOAT (= the kernel's `acc.toFloat`) and then
+    * widened back to DOUBLE for the shared encode/LUT/ADC/rerank
+    * fragments, exactly as PqKernels widens its float input per element.
+    */
+  private def opqOracle(r: graft.ops.Opq.Rotation,
+      model: graft.ops.Pq.PqModel): String = {
+    s"""WITH ${projectedCorpusCtes(r.mean, r.rot, r.dim)},
+       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |${pqEncodeLutCtes(model)},
+       |adcl AS (SELECT l.query_id, enc.id,
+       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
+       |  FROM enc JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell
+       |  WHERE enc.id <> l.query_id
+       |  GROUP BY l.query_id, enc.id),
+       |shortlist AS (SELECT query_id, id FROM (
+       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
+       |    FROM adcl) WHERE rn <= $PqShortlist),
+       |${pqRerankTail(model, PqK)}""".stripMargin
+  }
+
+  /** The residual IVFADC oracle (q_ann_ivfpq_residual): like
+    * [[ivfpqOracle]] but encode/LUT run on RESIDUALS. The residual
+    * subtraction happens in FLOAT (ef.embf FLOAT[] minus the FLOAT[]
+    * centroid rendering — DuckDB float arithmetic is true float32, same
+    * IEEE value as the kernel's float−float and the query side's
+    * zip_with), then the result widens to DOUBLE[] for the shared
+    * encode/LUT fragments, exactly as the kernels widen per element.
+    * The LUT is keyed per (query, probed cell): the query's residual
+    * differs per cell, and the lut→assigned join on pcell = cell IS the
+    * probe restriction.
+    */
+  private def ivfpqResidualOracle(cents: Array[Array[Float]],
+      model: graft.ops.Pq.PqModel): String = {
+    val dim = model.dim
+    val centfRows = cents.zipWithIndex.map { case (c, i) =>
+      s"($i, CAST(${c.map(_.toString).mkString("[", ", ", "]")} AS FLOAT[]))"
+    }.mkString(",\n")
+    s"""WITH ${centroidAssignCtes(cents)},
+       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |${probesCte(withQEmbd = false)},
+       |ef AS (SELECT vec_id AS id, embedding AS embf FROM embeddings),
+       |centsf(cell, cf) AS (VALUES
+       |$centfRows),
+       |res AS (SELECT a.id, CAST(list_transform(range(1, ${dim + 1}),
+       |      i -> ef.embf[i] - cf.cf[i]) AS DOUBLE[]) AS resd
+       |  FROM assigned a JOIN ef ON ef.id = a.id
+       |  JOIN centsf cf ON cf.cell = a.cell),
+       |qres AS (SELECT p.query_id, p.cell AS pcell,
+       |    CAST(list_transform(range(1, ${dim + 1}),
+       |      i -> ef.embf[i] - cf.cf[i]) AS DOUBLE[]) AS qresd
+       |  FROM probes p JOIN ef ON ef.id = p.query_id
+       |  JOIN centsf cf ON cf.cell = p.cell),
+       |${pqCbValues(model)},
+       |encd AS (SELECT res.id, cb.mi, cb.cell,
+       |    ${pqSubDist(model, "res.resd")} AS dist
+       |  FROM res CROSS JOIN cb),
+       |enc AS (SELECT id, mi, cell FROM (
+       |    SELECT id, mi, cell, row_number() OVER (PARTITION BY id, mi
+       |      ORDER BY dist ASC, cell ASC) AS rn FROM encd) WHERE rn = 1),
+       |lut AS (SELECT qr.query_id, qr.pcell, cb.mi, cb.cell,
+       |    CAST(${pqSubDist(model, "qr.qresd")} AS FLOAT) AS lv
+       |  FROM qres qr CROSS JOIN cb),
+       |adcl AS (SELECT l.query_id, enc.id,
+       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
+       |  FROM enc
+       |  JOIN assigned a ON a.id = enc.id
+       |  JOIN lut l ON l.pcell = a.cell AND enc.mi = l.mi
+       |    AND enc.cell = l.cell
+       |  WHERE enc.id <> l.query_id
+       |  GROUP BY l.query_id, enc.id),
+       |shortlist AS (SELECT query_id, id FROM (
+       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
+       |    FROM adcl) WHERE rn <= $IvfPqShortlist),
+       |${pqRerankTail(model, IvfK)}""".stripMargin
+  }
+
+  /** The composed IVFADC oracle: the trained-centroid assignment + probe
+    * CTEs (shared with the IVF oracles) restrict the PQ ADC scan to
+    * probed-cell rows, then the shared shortlist/rerank tail runs
+    * unchanged — a CTE merge of ivfOracle and pqOracle, exactly like the
+    * Spark plan it checks (Pq.searchIvfPq).
+    */
+  private def ivfpqOracle(cents: Array[Array[Float]],
+      model: graft.ops.Pq.PqModel): String = {
+    s"""WITH ${centroidAssignCtes(cents)},
+       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |${probesCte(withQEmbd = false)},
+       |${pqEncodeLutCtes(model)},
+       |adcl AS (SELECT l.query_id, enc.id,
+       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
+       |  FROM enc
+       |  JOIN assigned a ON a.id = enc.id
+       |  JOIN probes p ON p.cell = a.cell
+       |  JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell
+       |    AND l.query_id = p.query_id
+       |  WHERE enc.id <> l.query_id
+       |  GROUP BY l.query_id, enc.id),
+       |shortlist AS (SELECT query_id, id FROM (
+       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
+       |    FROM adcl) WHERE rn <= $IvfPqShortlist),
+       |${pqRerankTail(model, IvfK)}""".stripMargin
+  }
+
+  /** SemDeDup oracle: the shared trained-centroid assignment CTEs, then
+    * within-cell pairs under the exact cosine threshold (DOUBLE[] columns
+    * — the tau comparison must be in the same double precision as the
+    * Spark filter, or pairs within ~1e-7 of tau diverge).
+    */
+  private def semOracle(cents: Array[Array[Float]]): String = {
+    s"""WITH ${centroidAssignCtes(cents)}
+       |SELECT a.id AS id_a, b.id AS id_b, a.cell
+       |FROM assigned a JOIN assigned b
+       |  ON a.cell = b.cell AND a.id < b.id
+       |WHERE list_cosine_similarity(a.embd, b.embd) >= $SemTau
+       |ORDER BY id_a, id_b""".stripMargin
+  }
+
+  /** The q_dedup_incremental oracle; q_stream_dedup_incremental replays it
+    * verbatim.
+    * incremental dedup replay: both generations' sketches (the shared
+    * md5-lane minhash CTEs), the historical store contents (he = exact
+    * fps, hist-side bk rows = the band store), and both joins — exact-dup
+    * precedence over near-dup, canonical match = min historical id. The
+    * testdata has no exact cross-generation text dups (both engines emit
+    * zero exact_dup rows — the join still runs); the positive exact path
+    * is pinned in DedupSpec with crafted generations.
+    */
+  private[graft] def dedupIncrementalOracle: String =
+    s"""WITH $minhashSigCtes,
+      |fp AS (SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+      |  FROM documents),
+      |he AS (SELECT fp, min(doc_id) AS keep_id FROM fp WHERE doc_id % 5 <> 4 GROUP BY fp),
+      |ex AS (SELECT f.doc_id, he.keep_id AS exact_id FROM fp f JOIN he USING (fp)
+      |  WHERE f.doc_id % 5 = 4),
+      |cand AS (SELECT DISTINCT b.doc_id AS doc_id, h.doc_id AS hist_id,
+      |    b.sig AS sb, h.sig AS sh2
+      |  FROM bk b JOIN bk h ON b.band = h.band AND b.bslice = h.bslice
+      |  WHERE b.doc_id % 5 = 4 AND h.doc_id % 5 <> 4),
+      |near AS (SELECT doc_id, min(hist_id) AS near_id FROM cand
+      |  WHERE CAST(len(list_filter(range(32), i -> sb[i+1] = sh2[i+1])) AS DOUBLE)/32.0 >= 0.5
+      |  GROUP BY doc_id)
+      |SELECT b.doc_id,
+      |  CASE WHEN ex.exact_id IS NOT NULL THEN 'exact_dup'
+      |       WHEN near.near_id IS NOT NULL THEN 'near_dup'
+      |       ELSE 'unique' END AS status,
+      |  COALESCE(ex.exact_id, near.near_id) AS match_id
+      |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 4) b
+      |LEFT JOIN ex ON b.doc_id = ex.doc_id
+      |LEFT JOIN near ON b.doc_id = near.doc_id
+      |ORDER BY b.doc_id""".stripMargin
+
+  /** The SimilarityQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    // cosine on DOUBLE[] columns — bit-matches the Spark kernel's double
+    // accumulation (the FLOAT[] overload computes in float)
+    "q_knn_cosine" -> fixed(qKnnCosine _)(
+      """WITH ed AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embd
+        |    FROM embeddings),
+        |q AS (SELECT vec_id AS query_id, embd AS q_embd
+        |    FROM ed WHERE vec_id < 10)
+        |SELECT query_id, vec_id AS neighbor_id, rank FROM (
+        |  SELECT q.query_id, e.vec_id,
+        |    CAST(row_number() OVER (PARTITION BY q.query_id
+        |      ORDER BY list_cosine_similarity(q.q_embd, e.embd) DESC, e.vec_id)
+        |      AS BIGINT) AS rank
+        |  FROM q CROSS JOIN ed e WHERE e.vec_id <> q.query_id)
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    "q_embed_neardup" -> fixed(qEmbedNearDup _)(
+      """WITH ed AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embd
+        |    FROM embeddings)
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |FROM ed a JOIN ed b ON a.vec_id < b.vec_id
+        |WHERE list_cosine_similarity(a.embd, b.embd) >= 0.4
+        |ORDER BY id_a, id_b""".stripMargin),
+    "q_ann_lsh" -> fixed(qAnnLsh _)(lshOracle),
+    "q_dedup_clusters" -> fixed(qDedupClusters _)(clustersOracle),
+    // keep-best survivorship: the same recursive-closure discipline over
+    // the DOCUMENT minhash bucket graph, plus the argmax policy (longest
+    // text, doc_id tie-break) replayed as max-by over (n_chars, -id)
+    "q_dedup_keep_best" -> fixed(qDedupKeepBest _)(
+      s"""WITH RECURSIVE $minhashSigCtes,
+        |pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bk a JOIN bk b ON a.band = b.band AND a.bslice = b.bslice
+        |    AND a.doc_id < b.doc_id),
+        |ed AS (SELECT doc_a AS src, doc_b AS dst FROM pr
+        |  UNION ALL SELECT doc_b, doc_a FROM pr),
+        |reach(id, r) AS (
+        |  SELECT doc_id, doc_id FROM documents
+        |  UNION
+        |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
+        |comp AS (SELECT id, CAST(MIN(r) AS BIGINT) AS component
+        |  FROM reach GROUP BY id),
+        |m AS (SELECT component, comp.id, length(text) AS n_chars
+        |  FROM comp JOIN documents ON comp.id = documents.doc_id),
+        |a AS (SELECT component, COUNT(*) AS n_members,
+        |    MAX({'nc': n_chars, 'nid': -id}) AS b
+        |  FROM m GROUP BY component)
+        |SELECT component, n_members,
+        |  CAST(-(b.nid) AS BIGINT) AS keeper_id,
+        |  CAST(b.nc AS BIGINT) AS keeper_chars
+        |FROM a ORDER BY component""".stripMargin),
+    // deliberately the SAME full-graph recursive CTE: the incremental
+    // fold's correctness claim IS "equals the from-scratch components",
+    // so the driver re-proves the equivalence on every round
+    "q_dedup_clusters_incremental" -> fixed(qDedupClustersIncremental _)(
+      clustersOracle),
+    // the sketch-family oracles (minhash/simhash/winnow) replay the md5-lane
+    // kernels exactly: TextSketch hashes each shingle/token with md5 and
+    // takes the little-endian 64-bit lanes — the SAME values DuckDB's
+    // md5_number_lower/upper produce — and every comparison on lanes is
+    // unsigned on both engines (UBIGINT there, Long.compareUnsigned here).
+    // Kirsch-Mitzenmacher g_j = h1 + j*h2 wraps mod 2^64 → HUGEINT % 2^64.
+    "q_minhash_neardup" -> fixed(qMinhashNearDup _)(
+      s"""WITH $minhashSigCtes,
+        |pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    a.sig AS sa, b.sig AS sb
+        |  FROM bk a JOIN bk b ON a.band = b.band AND a.bslice = b.bslice
+        |    AND a.doc_id < b.doc_id)
+        |SELECT doc_a, doc_b,
+        |  CAST(len(list_filter(range(32), i -> sa[i+1] = sb[i+1])) AS DOUBLE) / 32.0
+        |    AS est_jaccard
+        |FROM pr ORDER BY doc_a, doc_b""".stripMargin),
+    // incremental dedup replay: both generations' sketches (the shared
+    // md5-lane minhash CTEs), the historical store contents (he = exact
+    // fps, hist-side bk rows = the band store), and both joins — exact-dup
+    // precedence over near-dup, canonical match = min historical id. The
+    // testdata has no exact cross-generation text dups (both engines emit
+    // zero exact_dup rows — the join still runs); the positive exact path
+    // is pinned in DedupSpec with crafted generations.
+    "q_dedup_incremental" -> fixed(qDedupIncremental _)(dedupIncrementalOracle),
+    // simhash replay via the 64-bit BIT LIST (sign of the per-bit vote sum):
+    // chunk keys are 16-bit reassemblies of the bits, hamming = count of
+    // differing bit positions = bit_count(xor) on the Spark side
+    "q_simhash" -> fixed(qSimhash _)(
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |th AS (SELECT doc_id, md5_number_lower(t) AS h
+        |  FROM (SELECT doc_id, unnest(ws) AS t FROM w)),
+        |v AS (SELECT doc_id, b,
+        |    SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
+        |  FROM th CROSS JOIN (SELECT unnest(range(64)) AS b)
+        |  GROUP BY doc_id, b),
+        |bits AS (SELECT doc_id,
+        |    list(CASE WHEN vote > 0 THEN 1 ELSE 0 END ORDER BY b) AS bl
+        |  FROM v GROUP BY doc_id),
+        |bk AS (SELECT doc_id, bl, c,
+        |    CAST(list_sum(list_transform(range(16), i -> bl[c*16 + i + 1] * (1 << i))) AS INT) AS ckey
+        |  FROM bits CROSS JOIN (SELECT unnest(range(4)) AS c)),
+        |pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    a.bl AS ba, b.bl AS bb
+        |  FROM bk a JOIN bk b ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id),
+        |hm AS (SELECT doc_a, doc_b,
+        |    CAST(len(list_filter(range(64), i -> ba[i+1] <> bb[i+1])) AS BIGINT) AS hamming
+        |  FROM pr)
+        |SELECT doc_a, doc_b, hamming FROM hm WHERE hamming <= 16
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    // winnow replay: ordered 3-gram hash sequence, min of each 4-wide
+    // sliding window (tie rule irrelevant — only the VALUE is kept),
+    // distinct fingerprints, pairs weighted by shared count
+    "q_winnow_neardup" -> fixed(qWinnowNearDup _)(
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id,
+        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+        |      ELSE list_transform(generate_series(1, len(ws) - 2),
+        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END AS sg
+        |  FROM w),
+        |hx AS (SELECT doc_id, len(sg) AS m,
+        |    unnest(range(1, len(sg) + 1)) AS i,
+        |    md5_number_lower(unnest(sg)) AS h
+        |  FROM sh),
+        |win AS (SELECT doc_id, i, m,
+        |    min(h) OVER (PARTITION BY doc_id ORDER BY i
+        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin
+        |  FROM hx),
+        |kept AS (SELECT DISTINCT doc_id, wmin AS fp FROM win
+        |  WHERE i <= greatest(m - 3, 1))
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
+        |FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
+        |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin),
+    // exact word-3gram Jaccard — same normalization as TextSketch.words
+    // (lower, trim, split \s+), whole-text shingle for docs < 3 words,
+    // Jaccard over DISTINCT shingles
+    "q_ngram_jaccard" -> fixed(qNgramJaccard _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id,
+        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+        |      ELSE list_transform(generate_series(1, len(ws) - 2),
+        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
+        |  FROM w),
+        |p AS (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
+        |GROUP BY a.doc_id, b.doc_id, a.n, b.n
+        |HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.03
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    // ExactSubstr span replay: positioned word-8-gram md5-lane hashes
+    // (md5_number_lower = TextSketch.shingleLanes' lower lane), canonical
+    // occurrence = min packed (doc_id*2^20 + pos), flagged positions merged
+    // into spans by the same gaps-and-islands windows; docs < 8 words are
+    // excluded on both sides (their collapse shingle is q_dedup_exact's
+    // business)
+    "q_substring_dedup" -> fixed(qSubstringDedup _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |g AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i
+        |  FROM w WHERE len(ws) >= 8),
+        |p AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+        |    md5_number_lower(ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]
+        |      ||' '||ws[i+4]||' '||ws[i+5]||' '||ws[i+6]||' '||ws[i+7]) AS h,
+        |    doc_id * 1048576 + (i - 1) AS packed
+        |  FROM g),
+        |f AS (SELECT doc_id, pos, packed,
+        |    COUNT(*) OVER (PARTITION BY h) AS cnt,
+        |    MIN(packed) OVER (PARTITION BY h) AS keeper
+        |  FROM p),
+        |fl AS (SELECT doc_id, pos FROM f WHERE cnt >= 2 AND packed <> keeper),
+        |b AS (SELECT doc_id, pos,
+        |    CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 8
+        |      THEN 0 ELSE 1 END AS brk
+        |  FROM fl),
+        |isl AS (SELECT doc_id, pos, SUM(brk) OVER (PARTITION BY doc_id
+        |    ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island FROM b)
+        |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 7 AS span_end,
+        |  MAX(pos) + 7 - MIN(pos) + 1 AS span_words, COUNT(*) AS n_windows
+        |FROM isl GROUP BY doc_id, island
+        |ORDER BY doc_id, span_start""".stripMargin),
+    // prefix-filter completeness proof: the oracle is the FULL exact
+    // Jaccard join (no prefix filter) — hash equality every round means
+    // the prefix candidate set missed nothing. Jaccard emitted as the
+    // same single double division of exact integers on both sides.
+    "q_setjoin_prefix" -> fixed(qSetjoinPrefix _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id,
+        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+        |      ELSE list_transform(generate_series(1, len(ws) - 2),
+        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
+        |  FROM w),
+        |p AS (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) AS jaccard
+        |FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
+        |GROUP BY a.doc_id, b.doc_id, a.n, b.n
+        |HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.5
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    "q_fuzzy_join" -> fixed(qFuzzyJoin _)(
+      """SELECT a.c_custkey AS id1, b.c_custkey AS id2,
+        |  a.c_name AS name1, b.c_name AS name2,
+        |  CAST(levenshtein(a.c_name, b.c_name) AS INT) AS dist
+        |FROM customer a JOIN customer b
+        |  ON a.c_custkey < b.c_custkey
+        |  AND levenshtein(a.c_name, b.c_name) <= 1
+        |ORDER BY id1, id2""".stripMargin),
+    // int8 quantize→dequantize kernel replay (the quantCorpusCtes
+    // rounding identity), error terms floored onto the 2^-40 grid before
+    // the 64-term sum (§4: many-term cross-engine float sums snap),
+    // then one correctly-rounded sqrt
+    "q_quantize_roundtrip" -> fixed(qQuantizeRoundtrip _) {
+      val g = "1099511627776.0"
+      val terms = (1 to 64).map { i =>
+        val d = s"(CAST(embf[$i] AS DOUBLE) - CAST(deqf[$i] AS DOUBLE))"
+        s"floor($d * $d * $g) / $g"
+      }.mkString(" + ")
+      s"""WITH eq AS (SELECT vec_id AS id, embedding AS embf FROM embeddings),
+         |sc AS (SELECT id, embf,
+         |    list_max(list_transform(embf, x -> abs(x))) / CAST(127 AS FLOAT)
+         |      AS scale
+         |  FROM eq),
+         |dq AS (SELECT id, embf, scale, CASE WHEN scale > 0 THEN
+         |      list_transform(embf, x ->
+         |        CAST(CAST(floor(CAST(x/scale AS DOUBLE) + 0.5) AS INT) AS FLOAT) * scale)
+         |    ELSE list_transform(embf, x -> CAST(0 AS FLOAT)) END AS deqf
+         |  FROM sc)
+         |SELECT id AS vec_id, CAST(scale AS DOUBLE) AS scale,
+         |  sqrt(0.0 + $terms) AS l2_err
+         |FROM dq ORDER BY vec_id""".stripMargin
+    },
+    // the neighborhood join's completeness proof: DuckDB brute-forces
+    // levenshtein over all pairs, Spark only meets candidates that share a
+    // deletion key — a hash mismatch here would mean a missed pair
+    // entity resolution: dirty-mention construction (every 10th customer
+    // gets a C→K typo duplicate), brute-force levenshtein × exact-balance
+    // pairs (re-proving the deletion-neighborhood blocking complete) →
+    // the q_dedup_clusters recursive min-label CTE → field survivorship
+    "q_entity_resolution" -> fixed(qEntityResolution _)(
+      """WITH RECURSIVE m AS (
+        |  SELECT c_custkey*2 AS m_id, c_name AS m_name, c_acctbal
+        |    FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey*2+1, replace(c_name, 'C', 'K'), c_acctbal
+        |    FROM customer WHERE c_custkey % 10 = 0),
+        |p AS (SELECT a.m_id AS src, b.m_id AS dst
+        |  FROM m a JOIN m b ON a.m_id < b.m_id
+        |    AND a.c_acctbal = b.c_acctbal
+        |    AND levenshtein(a.m_name, b.m_name) <= 1),
+        |ed AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
+        |reach(id, r) AS (
+        |  SELECT m_id, m_id FROM m
+        |  UNION
+        |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
+        |lab AS (SELECT id, CAST(MIN(r) AS BIGINT) AS component
+        |  FROM reach GROUP BY id)
+        |SELECT lab.component, CAST(COUNT(*) AS BIGINT) AS n_members,
+        |  MIN(m.m_name) AS canonical_name,
+        |  CAST(MAX(CAST(m.c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |    AS best_acctbal,
+        |  string_agg(CAST(m.m_id AS VARCHAR), ','
+        |    ORDER BY m.m_id) AS member_keys
+        |FROM lab JOIN m ON m.m_id = lab.id
+        |GROUP BY lab.component HAVING COUNT(*) > 1
+        |ORDER BY lab.component""".stripMargin),
+    // full exact containment join — completeness proof for the asymmetric
+    // prefix filter; τ in integer form so no float threshold boundary
+    "q_containment" -> fixed(qContainment _)(
+      """WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |sh AS (SELECT doc_id,
+        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+        |      ELSE list_transform(generate_series(1, len(ws) - 2),
+        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
+        |  FROM w),
+        |p AS (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(COUNT(*) AS DOUBLE) / a.n AS containment
+        |FROM p a JOIN p b ON a.s = b.s AND a.doc_id <> b.doc_id
+        |GROUP BY a.doc_id, b.doc_id, a.n
+        |HAVING 3 * COUNT(*) >= 2 * a.n
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    // incremental entity resolution: the oracle is the FROM-SCRATCH
+    // recursive CTE above VERBATIM — the driver hash re-proves
+    // incremental == batch on the full linkage pipeline every round
+    "q_entity_resolution_incremental" -> fixed(qEntityResolutionIncremental _)(
+      """WITH RECURSIVE m AS (
+        |  SELECT c_custkey*2 AS m_id, c_name AS m_name, c_acctbal
+        |    FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey*2+1, replace(c_name, 'C', 'K'), c_acctbal
+        |    FROM customer WHERE c_custkey % 10 = 0),
+        |p AS (SELECT a.m_id AS src, b.m_id AS dst
+        |  FROM m a JOIN m b ON a.m_id < b.m_id
+        |    AND a.c_acctbal = b.c_acctbal
+        |    AND levenshtein(a.m_name, b.m_name) <= 1),
+        |ed AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
+        |reach(id, r) AS (
+        |  SELECT m_id, m_id FROM m
+        |  UNION
+        |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
+        |lab AS (SELECT id, CAST(MIN(r) AS BIGINT) AS component
+        |  FROM reach GROUP BY id)
+        |SELECT lab.component, CAST(COUNT(*) AS BIGINT) AS n_members,
+        |  MIN(m.m_name) AS canonical_name,
+        |  CAST(MAX(CAST(m.c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |    AS best_acctbal,
+        |  string_agg(CAST(m.m_id AS VARCHAR), ','
+        |    ORDER BY m.m_id) AS member_keys
+        |FROM lab JOIN m ON m.m_id = lab.id
+        |GROUP BY lab.component HAVING COUNT(*) > 1
+        |ORDER BY lab.component""".stripMargin),
+    "q_ann_ivf" -> trained(centroidsFor)(qAnnIvf)(ivfOracle),
+    "q_ann_ivf_retrain" -> trained(retrainModelFor)(
+      qAnnIvfRetrain)(m => ivfRetrainOracle(m._2)),
+    "q_ann_ivf_quantized" -> trained(centroidsFor)(
+      qAnnIvfQuantized)(ivfQuantOracle),
+    // store-served row: the serve equals the on-the-fly quantized
+    // serve (CorpusStreamSpec), so the trained-centroid replay
+    // oracle is verbatim
+    "q_stream_ivf_ingest" -> trained(centroidsFor)(
+      qStreamIvfIngest)(ivfQuantOracle),
+    "q_ann_pq" -> trained(pqModelFor)(qAnnPq)(pqOracle),
+    "q_ann_opq" -> trained(opqModelFor)(qAnnOpq)(m => opqOracle(m._1, m._2)),
+    "q_ann_ivf_pca" -> trained(ivfPcaModelFor)(
+      qAnnIvfPca)(m => ivfPcaOracle(m._1, m._2, m._3)),
+    "q_ann_ivfpq" -> trained(ivfPqModelFor)(
+      qAnnIvfPq)(m => ivfpqOracle(m._1, m._2)),
+    "q_ann_ivfpq_residual" -> trained(ivfPqResModelFor)(
+      qAnnIvfPqResidual)(
+      m => ivfpqResidualOracle(m._1, m._2)),
+    "q_semantic_dedup" -> trained(centroidsFor)(qSemanticDedup)(semOracle),
+    "q_pca_project" -> trained(pcaModelFor)(qPcaProject)(pcaOracle),
+  )
 }

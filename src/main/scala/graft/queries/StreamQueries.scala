@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed, trained}
 import graft.streaming.{EventStreams, StreamReplay}
 
 /** Driver-checkable rows for the streaming changelog surface: each query
@@ -1007,4 +1009,272 @@ object StreamQueries {
         (lit(1.0) - sseD / (syyD - syD * syD / nD)).as("r2"))
       .orderBy(col("split"))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The StreamQueries registry rows. A streaming replay row names its
+    * batch twin's oracle: stream == batch over the same input is exactly
+    * the equality the hash check re-proves. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    "q_stream_retention" -> fixed(qStreamRetention _)(
+      JourneyQueries.retentionCohortOracle),
+    // crash recovery: two incarnations against one checkpoint must
+    // still reproduce the batch matrix bit-for-bit
+    "q_stream_recovery" -> fixed(qStreamRecovery _)(
+      JourneyQueries.retentionCohortOracle),
+    "q_stream_scd2" -> fixed(qStreamScd2 _)(EventQueries.scd2HistoryOracle),
+    "q_stream_markov" -> fixed(qStreamMarkov _)(
+      JourneyQueries.markovTransitionsOracle),
+    "q_stream_funnel" -> fixed(qStreamFunnel _)(
+      JourneyQueries.funnelStepsOracle),
+    // q_gap_fill's oracle over the COALESCED value frame — the
+    // streaming Event schema is primitive-Double, so the replay feed
+    // coalesces NULL values to 0.0 before the fold (the documented
+    // gapFillChangelog value contract)
+    "q_stream_gapfill" -> fixed(qStreamGapfill _)(
+      JourneyQueries.gapFillOracle("coalesce(value, 0)")),
+    // same COALESCE note as q_stream_gapfill: the replay feed's Event
+    // schema is primitive-Double (all-NULL sessions would sum to 0.0,
+    // not NULL) — the events table has no NULL values at any shipped
+    // SF, so the twin oracle applies verbatim-with-coalesce either way
+    "q_stream_sessionize" -> fixed(qStreamSessionize _)(
+      EventQueries.sessionizeOracle("coalesce(value, 0)")),
+    "q_stream_window" -> fixed(qStreamWindow _)(
+      EventQueries.windowTumblingOracle("coalesce(value, 0)")),
+    "q_stream_attribution" -> fixed(qStreamAttribution _)(
+      EventQueries.rangeJoinOracle),
+    // CMS linearity: the epoch-folded store's cells equal the batch
+    // build's cells exactly, so the estimates — and the oracle — are
+    // the batch row's verbatim
+    "q_stream_heavy_hitters" -> fixed(qStreamHeavyHitters _)(
+      TextQueries.heavyHittersOracle),
+    // the dead-letter stream's report must equal the batch split —
+    // chunking commutes with per-row rules
+    "q_stream_quarantine" -> fixed(qStreamQuarantine _)(
+      Relational.quarantineOracle),
+    // the CDC apply stream: key-disjoint chunks make the serialized
+    // per-epoch merges compose to ONE whole-delta merge — same join +
+    // CASE as q_merge_publish, base WITHOUT the DV filter
+    "q_stream_merge" -> fixed(qStreamMerge _)(
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 3 <> 0
+        |), delta AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    o_totalprice + 10.0 AS o_totalprice,
+        |    'MERGED' AS o_orderpriority,
+        |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete' ELSE 'upsert'
+        |      END AS d_op
+        |  FROM orders WHERE o_orderkey % 2 = 0
+        |)
+        |SELECT COALESCE(d.o_orderkey, b.o_orderkey) AS o_orderkey,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_custkey
+        |    ELSE b.o_custkey END AS o_custkey,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_totalprice
+        |    ELSE b.o_totalprice END AS o_totalprice,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderpriority
+        |    ELSE b.o_orderpriority END AS o_orderpriority
+        |FROM base b FULL OUTER JOIN delta d
+        |  ON b.o_orderkey = d.o_orderkey
+        |WHERE NOT (d.o_orderkey IS NOT NULL AND d.d_op = 'delete')
+        |ORDER BY 1""".stripMargin),
+    // new-vs-history-only dedup: the union of per-epoch streamed
+    // results equals one batch run, so the batch oracle is verbatim
+    "q_stream_dedup_incremental" -> fixed(qStreamDedupIncremental _)(
+      SimilarityQueries.dedupIncrementalOracle),
+    // keep-last dedup is a pure function of the accumulated raw rows:
+    // the drained stream's usage layer == the batch DAG's
+    "q_stream_datalake" -> fixed(qStreamDatalake _)(
+      DatalakeQueries.datalakePipelineOracle),
+    // the component labeling is canonical (min label per component of
+    // the accumulated graph) — fold order can't change it, so the
+    // from-scratch CTE re-proves the streamed fold too
+    "q_stream_clusters" -> fixed(qStreamClusters _)(
+      SimilarityQueries.clustersOracle),
+    // the manifest-published final epoch == the batch pipeline's usage
+    // layer; n_versions = one published version per micro-batch (3
+    // staged drops × maxFilesPerTrigger=1)
+    "q_stream_publish" -> fixed(qStreamPublish _)(
+      s"""SELECT event_type, event_date, n_events, total_value,
+         |  CAST(3 AS BIGINT) AS n_versions
+         |FROM (${DatalakeQueries.datalakePipelineOracle})
+         |ORDER BY event_type, event_date""".stripMargin),
+    // lake-as-stream: the initial snapshot arrives as inserts
+    // (_from_version 'initial'), then the e1→e2 feed — q_change_feed's
+    // oracle join relabeled to the epoch version names
+    "q_stream_change_feed" -> fixed(qStreamChangeFeed _)(
+      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
+        |    WHERE o_orderkey % 7 <> 0),
+        |nu AS (SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+        |      ELSE o_totalprice END AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 5 <> 0),
+        |j AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k,
+        |    o.o_orderkey AS ko, n.o_orderkey AS kn,
+        |    o.o_totalprice AS po, n.o_totalprice AS pn
+        |  FROM old o FULL OUTER JOIN nu n ON o.o_orderkey = n.o_orderkey)
+        |SELECT o_orderkey, o_totalprice, 'insert' AS _change_type,
+        |    'initial' AS _from_version, 'e1' AS _to_version
+        |  FROM old
+        |UNION ALL SELECT k, pn, 'insert', 'e1', 'e2' FROM j
+        |  WHERE ko IS NULL
+        |UNION ALL SELECT k, po, 'delete', 'e1', 'e2' FROM j
+        |  WHERE kn IS NULL
+        |UNION ALL SELECT k, po, 'update_preimage', 'e1', 'e2' FROM j
+        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+        |    AND po IS DISTINCT FROM pn
+        |UNION ALL SELECT k, pn, 'update_postimage', 'e1', 'e2' FROM j
+        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+        |    AND po IS DISTINCT FROM pn""".stripMargin),
+    // the lake stream materializes a DELETION-VECTOR commit as delete
+    // rows (label e1+dv), and the next feed diffs against the DELETED
+    // state — a resurrecting reader corrupts both
+    "q_stream_cdc_delete" -> fixed(qStreamCdcDelete _)(
+      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
+        |    WHERE o_orderkey % 7 <> 0),
+        |afterdel AS (SELECT * FROM old WHERE o_orderkey % 9 <> 0),
+        |nu AS (SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+        |      ELSE o_totalprice END AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 5 <> 0),
+        |j AS (SELECT COALESCE(a.o_orderkey, n.o_orderkey) AS k,
+        |    a.o_orderkey AS ko, n.o_orderkey AS kn,
+        |    a.o_totalprice AS po, n.o_totalprice AS pn
+        |  FROM afterdel a FULL OUTER JOIN nu n
+        |    ON a.o_orderkey = n.o_orderkey)
+        |SELECT o_orderkey, o_totalprice, 'insert' AS _change_type,
+        |    'initial' AS _from_version, 'e1' AS _to_version
+        |  FROM old
+        |UNION ALL SELECT o_orderkey, o_totalprice, 'delete', 'e1',
+        |    'e1+dv'
+        |  FROM old WHERE o_orderkey % 9 = 0
+        |UNION ALL SELECT k, pn, 'insert', 'e1+dv', 'e2' FROM j
+        |  WHERE ko IS NULL
+        |UNION ALL SELECT k, po, 'delete', 'e1+dv', 'e2' FROM j
+        |  WHERE kn IS NULL
+        |UNION ALL SELECT k, po, 'update_preimage', 'e1+dv', 'e2' FROM j
+        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+        |    AND po IS DISTINCT FROM pn
+        |UNION ALL SELECT k, pn, 'update_postimage', 'e1+dv', 'e2' FROM j
+        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+        |    AND po IS DISTINCT FROM pn""".stripMargin),
+    // end-to-end CDC replication: the replica's content is the closed
+    // form of snapshot → vector delete → merge, one replica version per
+    // source commit
+    "q_table_replicate" -> fixed(qTableReplicate _)(
+      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
+        |    WHERE o_orderkey % 7 <> 0),
+        |afterdel AS (SELECT * FROM old WHERE o_orderkey % 9 <> 0),
+        |delta AS (SELECT o_orderkey, o_totalprice + 10.0 AS d_price
+        |  FROM orders WHERE o_orderkey % 5 = 0)
+        |SELECT COALESCE(d.o_orderkey, a.o_orderkey) AS o_orderkey,
+        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.d_price
+        |    ELSE a.o_totalprice END AS o_totalprice,
+        |  CAST(3 AS BIGINT) AS n_replica_versions
+        |FROM afterdel a FULL OUTER JOIN delta d
+        |  ON a.o_orderkey = d.o_orderkey""".stripMargin),
+    // LEFT OUTER stream-stream join: the oracle is the batch LEFT
+    // JOIN on the same interval — a null row emitted early (before
+    // its seal), dropped (state evicted under a future match), or
+    // duplicated (match + spurious null) each hash-fail
+    "q_stream_outer_join" -> fixed(qStreamOuterJoin _)(
+      """WITH c AS (SELECT event_id AS click_id, user_id,
+        |    CAST(ts AS TIMESTAMP) AS click_ts
+        |  FROM events WHERE event_type = 'click'),
+        |p AS (SELECT event_id AS purchase_id, user_id AS p_user,
+        |    CAST(ts AS TIMESTAMP) AS p_ts
+        |  FROM events WHERE event_type = 'purchase')
+        |SELECT click_id, purchase_id, user_id
+        |FROM c LEFT JOIN p ON user_id = p_user
+        |  AND click_ts >= p_ts - INTERVAL 1 HOUR AND click_ts < p_ts
+        |ORDER BY click_id, purchase_id""".stripMargin),
+    // histogram-store fold == batch counts by count linearity, PSI
+    // tail shared verbatim → the batch oracle applies unchanged
+    "q_stream_drift" -> fixed(qStreamDrift _)(EventQueries.driftPsiOracle),
+    // register fold (cell-wise max over epochs) == single-pass batch
+    // registers — max is associative AND idempotent — and the
+    // estimate tail is shared verbatim → the batch oracle unchanged
+    "q_stream_hll" -> fixed(qStreamHll _)(Relational.hllDistinctOracle),
+    // watermark-sealed daily cohorts: day windows never straddle the
+    // midnight cutoff, so summing sealed window cells per cohort
+    // equals the per-event cutoff flag by count linearity; the
+    // n_windows_* columns replay as distinct active days per type —
+    // a window the watermark failed to seal would be missing and
+    // hash-fail here
+    "q_stream_drift_windows" -> fixed(qStreamDriftWindows _)(
+      """WITH e AS (SELECT event_type, ts,
+        |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 0 ELSE 1 END
+        |      AS cohort,
+        |    CASE WHEN ts >= TIMESTAMP '2024-01-16'
+        |        AND event_type = 'purchase'
+        |      THEN value * 1.5 ELSE value END AS v
+        |  FROM events),
+        |b AS (SELECT event_type, ts, cohort,
+        |    CAST(least(floor(v / 50.0), 9) AS BIGINT) AS bin FROM e),
+        |w AS (SELECT event_type,
+        |    CAST(COUNT(DISTINCT date_trunc('day', ts))
+        |      FILTER (cohort = 0) AS BIGINT) AS n_windows_before,
+        |    CAST(COUNT(DISTINCT date_trunc('day', ts))
+        |      FILTER (cohort = 1) AS BIGINT) AS n_windows_after
+        |  FROM b GROUP BY 1),
+        |bins AS (SELECT DISTINCT event_type, unnest(range(10)) AS bin
+        |  FROM b),
+        |c AS (SELECT event_type, bin,
+        |    COUNT(*) FILTER (cohort = 0) AS n0,
+        |    COUNT(*) FILTER (cohort = 1) AS n1
+        |  FROM b GROUP BY 1, 2),
+        |f AS (SELECT bins.event_type, bins.bin,
+        |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
+        |  FROM bins LEFT JOIN c
+        |    ON bins.event_type = c.event_type AND bins.bin = c.bin),
+        |tot AS (SELECT event_type, SUM(n0) AS t0, SUM(n1) AS t1
+        |  FROM f GROUP BY 1),
+        |terms AS (SELECT f.event_type, tot.t0, tot.t1,
+        |    CAST(f.n0 + 1 AS DOUBLE) / (tot.t0 + 10) AS p,
+        |    CAST(f.n1 + 1 AS DOUBLE) / (tot.t1 + 10) AS q
+        |  FROM f JOIN tot USING (event_type)),
+        |p AS (SELECT event_type, CAST(max(t0) AS BIGINT) AS n_before,
+        |    CAST(max(t1) AS BIGINT) AS n_after,
+        |    SUM(floor((p - q) * ln(p / q) * 65536.0) / 65536.0) AS psi
+        |  FROM terms GROUP BY 1)
+        |SELECT p.event_type, w.n_windows_before, w.n_windows_after,
+        |  n_before, n_after, psi
+        |FROM p JOIN w USING (event_type)
+        |ORDER BY event_type""".stripMargin),
+    // native session_window semantics: end-exclusive gap windows →
+    // split on >= gap (one tick stricter than the lag-based batch
+    // row's >), session_end = last event + gap by definition
+    "q_stream_session_window" -> fixed(qStreamSessionWindow _)(
+      """WITH e AS (SELECT user_id, event_id,
+        |    CAST(ts AS TIMESTAMP) AS ts, value,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
+        |f AS (SELECT *, CASE
+        |    WHEN lag(ts_us) OVER w IS NULL THEN 1
+        |    WHEN ts_us - lag(ts_us) OVER w >= 1800000000 THEN 1
+        |    ELSE 0 END AS is_new
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+        |n AS (SELECT *, SUM(is_new) OVER (PARTITION BY user_id
+        |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING)
+        |    AS session_seq FROM f)
+        |SELECT user_id, MIN(ts) AS session_start,
+        |  MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM n GROUP BY user_id, session_seq
+        |ORDER BY user_id, session_start""".stripMargin),
+    // TTL dedup of the doubled feed = the plain table: every distinct
+    // event exactly once
+    "q_stream_dedup_ttl" -> fixed(qStreamDedupTtl _)(
+      """SELECT event_id, event_type, value FROM events
+        |ORDER BY event_id""".stripMargin),
+    // store fold == batch daily sums by decimal linearity; the CUSUM
+    // tail is cusumFromDaily shared verbatim → batch oracle unchanged
+    "q_stream_cusum" -> fixed(qStreamCusum _)(EventQueries.cusumShiftOracle),
+    // streaming replay of the scoring eval: exact partial moments fold
+    // linearly, so stream == batch and the oracle is verbatim
+    "q_stream_gbt_score" -> trained(Relational.gbtTrainOrGet)(
+      qStreamGbtScore)(Relational.gbtScoreOracle),
+    "q_stream_model_ingest" -> trained(Relational.gbtTrainOrGet)(
+      qStreamModelIngest)(Relational.modelIngestOracle),
+  )
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+import graft.QueryDef.{fixed, trained}
 import graft.sources.Tables
 import graft.ops.TextAnalysis._
 
@@ -65,7 +67,7 @@ object TextQueries {
       .orderBy(col("doc_id"), col("rank"))
 
   /** The fixed BM25 query set — one source of truth for the Spark query
-    * AND the generated oracle VALUES (SparkEntry.bm25Oracle). Terms come
+    * AND the generated oracle VALUES ([[bm25Oracle]]). Terms come
     * from the synthetic corpus vocabulary so every query matches.
     */
   val bm25Queries: Seq[(Long, String)] = Seq(
@@ -301,9 +303,9 @@ object TextQueries {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
   /** The 64 BPE merges trained on every-5th doc's word counts, memoized
-    * per sfDir — the merges are a pure function of the data. SparkEntry
-    * hands them to [[qBpeTokenize]] and inlines the same value into the
-    * generated DuckDB replay.
+    * per sfDir — the merges are a pure function of the data. The
+    * q_bpe_tokenize row hands them to [[qBpeTokenize]] and inlines the
+    * same value into the generated DuckDB replay.
     */
   private[graft] def bpeModelFor(spark: SparkSession,
       dir: String): Seq[(String, String)] =
@@ -632,4 +634,569 @@ object TextQueries {
       .agg((-sum(col("term"))).as("entropy"))
       .orderBy(col("source"))
   }
+
+  // ---- Registry rows and their DuckDB oracles ----
+
+  /** The hybrid-retrieval LEXICAL leg (bm25 replay with each query doc's
+    * distinct unigrams as the query set, self-doc slot kept in the
+    * ranking then filtered) and the RRF fusion tail — ONE rendering
+    * shared by q_hybrid_search (brute vector leg) and q_hybrid_serve
+    * (IVF-probed vector leg from the published store) so the scoring and
+    * fusion rules cannot drift between the build-side and serve-side
+    * rows. Both fragments expect `lex`/`vec` CTEs of
+    * (query_id, doc_id, *_rank ≤ 20).
+    */
+  private val hybridLexCtes =
+    """qd AS (SELECT doc_id AS query_id, term FROM (
+      |    SELECT doc_id,
+      |      unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+      |    FROM documents WHERE doc_id < 5)
+      |  WHERE term <> '' GROUP BY query_id, term),
+      |w AS (SELECT doc_id,
+      |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS dl,
+      |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+      |  FROM documents),
+      |t AS (SELECT doc_id, term, max(dl) AS dl, COUNT(*) AS tf FROM w
+      |  WHERE term <> '' AND term IN (SELECT term FROM qd)
+      |  GROUP BY doc_id, term),
+      |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term),
+      |n AS (SELECT COUNT(*) AS nd,
+      |    CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS sumdl
+      |  FROM documents),
+      |s AS (SELECT qd.query_id, t.doc_id,
+      |    floor((ln(1.0 + (CAST(nd AS DOUBLE) - df + 0.5) / (df + 0.5))
+      |      * ((CAST(tf AS DOUBLE) * 2.2)
+      |        / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
+      |          * (CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / nd))))))
+      |      * 65536.0) / 65536.0 AS ts
+      |  FROM t JOIN qd USING (term) JOIN d USING (term) CROSS JOIN n),
+      |sc AS (SELECT query_id, doc_id, SUM(ts) AS score FROM s
+      |  GROUP BY query_id, doc_id),
+      |lexall AS (SELECT query_id, doc_id, row_number() OVER (
+      |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS lex_rank
+      |  FROM sc),
+      |lex AS (SELECT query_id, doc_id, lex_rank FROM lexall
+      |  WHERE lex_rank <= 20 AND doc_id <> query_id)""".stripMargin
+
+  private val hybridFuseSql =
+    """fused AS (SELECT COALESCE(lex.query_id, vec.query_id) AS query_id,
+      |    COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
+      |    COALESCE(1.0/(60.0 + lex.lex_rank), 0.0)
+      |      + COALESCE(1.0/(60.0 + vec.vec_rank), 0.0) AS rrf,
+      |    lex.lex_rank, vec.vec_rank
+      |  FROM lex FULL OUTER JOIN vec
+      |    ON lex.query_id = vec.query_id AND lex.doc_id = vec.doc_id),
+      |r AS (SELECT query_id, doc_id, rrf, lex_rank, vec_rank,
+      |    row_number() OVER (PARTITION BY query_id
+      |      ORDER BY rrf DESC, doc_id) AS rank
+      |  FROM fused)
+      |SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id, rrf,
+      |  CAST(lex_rank AS BIGINT) AS lex_rank,
+      |  CAST(vec_rank AS BIGINT) AS vec_rank
+      |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+
+  /** q_hybrid_serve oracle: the lexical store replay (identical to the
+    * from-text replay — the q_index_serve equivalence) + the
+    * centroid-inlined IVF assignment→probe→rank replay as the vector
+    * leg (k = 20, self excluded before ranking, the serving path's
+    * rule), fused by the shared RRF tail.
+    */
+  private def hybridServeOracle(cents: Array[Array[Float]]): String = {
+    s"""WITH $hybridLexCtes,
+       |${SimilarityQueries.centroidAssignCtes(cents)},
+       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 5),
+       |${SimilarityQueries.probesCte(withQEmbd = true)},
+       |vecall AS (SELECT p.query_id, a.id AS doc_id,
+       |    row_number() OVER (PARTITION BY p.query_id
+       |      ORDER BY list_cosine_similarity(p.q_embd, a.embd) DESC, a.id)
+       |      AS vec_rank
+       |  FROM probes p JOIN assigned a ON a.cell = p.cell
+       |  WHERE a.id <> p.query_id),
+       |vec AS (SELECT query_id, doc_id, vec_rank FROM vecall
+       |  WHERE vec_rank <= 20),
+       |$hybridFuseSql""".stripMargin
+  }
+
+  /** BM25 oracle — the query set inlined from its single source of truth
+    * (bm25Queries); scoring expression mirrors
+    * ops.Retrieval.bm25TopK token for token: same literals, same
+    * association, per-term partials floored onto the 2^-16 dyadic grid so
+    * the cross-term SUM is reduction-order-exact in both engines.
+    */
+  private def bm25Oracle: String = {
+    val vals = bm25Queries
+      .map { case (q, t) => s"($q, '$t')" }.mkString(", ")
+    s"""WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, term
+       |    FROM (VALUES $vals) AS v(query_id, term)),
+       |w AS (SELECT doc_id,
+       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS dl,
+       |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
+       |  FROM documents),
+       |t AS (SELECT doc_id, term, max(dl) AS dl, COUNT(*) AS tf FROM w
+       |  WHERE term <> '' AND term IN (SELECT term FROM q)
+       |  GROUP BY doc_id, term),
+       |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term),
+       |n AS (SELECT COUNT(*) AS nd,
+       |    CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS sumdl
+       |  FROM documents),
+       |s AS (SELECT q.query_id, t.doc_id,
+       |    floor((ln(1.0 + (CAST(nd AS DOUBLE) - df + 0.5) / (df + 0.5))
+       |      * ((CAST(tf AS DOUBLE) * 2.2)
+       |        / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
+       |          * (CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / nd))))))
+       |      * 65536.0) / 65536.0 AS ts
+       |  FROM t JOIN q USING (term) JOIN d USING (term) CROSS JOIN n),
+       |sc AS (SELECT query_id, doc_id, SUM(ts) AS score FROM s
+       |  GROUP BY query_id, doc_id),
+       |r AS (SELECT query_id, doc_id, score, row_number() OVER (
+       |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank FROM sc)
+       |SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score
+       |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+  }
+
+  /** BPE oracle — trained-model pattern: the learned merge list inlined
+    * as a chain of plain `replace` calls over the separator-wrapped
+    * representation (ops.Bpe's portability trick: both engines' replace
+    * is a left-to-right non-overlapping scan, and the double-separator
+    * wrapping makes that exactly canonical simultaneous BPE merging).
+    * chr(1) is the separator; RE2's replacement backref is `\1` where
+    * Java's is `$1`, hence the dialect-specific wrap expression.
+    */
+  private def bpeOracle(merges: Seq[(String, String)]): String = {
+    def sq(s: String): String = s.replace("'", "''")
+    def wrapped(sym: String): String = s"chr(1)||'${sq(sym)}'||chr(1)"
+    val repChain = merges.foldLeft(
+      "regexp_replace(word, '(.)', chr(1)||'\\1'||chr(1), 'g')") {
+      case (rep, (a, b)) =>
+        s"replace($rep,\n      ${wrapped(a)}||${wrapped(b)}, ${wrapped(a + b)})"
+    }
+    s"""WITH w AS (SELECT doc_id,
+       |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS word
+       |  FROM documents),
+       |wc AS (SELECT doc_id, word, COUNT(*) AS wn FROM w
+       |  WHERE word <> '' GROUP BY doc_id, word),
+       |dw AS (SELECT DISTINCT word FROM wc),
+       |tok AS (SELECT word,
+       |    $repChain AS rep
+       |  FROM dw),
+       |tl AS (SELECT word,
+       |    CAST((length(rep) - length(replace(rep, chr(1), ''))) >> 1
+       |      AS BIGINT) AS ntok
+       |  FROM tok)
+       |SELECT wc.doc_id, CAST(SUM(wn) AS BIGINT) AS n_words,
+       |  CAST(SUM(wn * length(word)) AS BIGINT) AS n_chars,
+       |  CAST(SUM(wn * ntok) AS BIGINT) AS n_bpe_tokens,
+       |  CAST(SUM(wn * length(word)) AS DOUBLE) / SUM(wn * ntok)
+       |    AS compression
+       |FROM wc JOIN tl USING (word)
+       |GROUP BY wc.doc_id ORDER BY doc_id""".stripMargin
+  }
+
+  /** The q_heavy_hitters oracle; q_stream_heavy_hitters replays it verbatim.
+    * Count-Min replay: ONE md5 digest per token occurrence sliced into
+    * four 32-bit bucket words (lower/upper lane, low/high half) — the
+    * same slices Sketches.buckets masks engine-side; arithmetic stays in
+    * HUGEINT because UBIGINT lanes exceed BIGINT
+    */
+  private[graft] def heavyHittersOracle: String =
+    """WITH tok AS (SELECT unnest(regexp_split_to_array(trim(lower(text)),
+      |    '\s+')) AS t FROM documents),
+      |buck AS (SELECT t,
+      |    unnest([CAST(CAST(md5_number_lower(t) AS HUGEINT) % 1024 AS BIGINT),
+      |      CAST((CAST(md5_number_lower(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT),
+      |      CAST(CAST(md5_number_upper(t) AS HUGEINT) % 1024 AS BIGINT),
+      |      CAST((CAST(md5_number_upper(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT)]) AS bucket,
+      |    unnest([0, 1, 2, 3]) AS lane
+      |  FROM tok),
+      |cms AS (SELECT lane, bucket, COUNT(*) AS cnt FROM buck
+      |  GROUP BY lane, bucket),
+      |exact AS (SELECT t, COUNT(*) AS exact_cnt FROM tok GROUP BY t
+      |  ORDER BY exact_cnt DESC, t LIMIT 20),
+      |qb AS (SELECT t,
+      |    unnest([CAST(CAST(md5_number_lower(t) AS HUGEINT) % 1024 AS BIGINT),
+      |      CAST((CAST(md5_number_lower(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT),
+      |      CAST(CAST(md5_number_upper(t) AS HUGEINT) % 1024 AS BIGINT),
+      |      CAST((CAST(md5_number_upper(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT)]) AS bucket,
+      |    unnest([0, 1, 2, 3]) AS lane
+      |  FROM exact),
+      |est AS (SELECT qb.t, MIN(cnt) AS cms_est FROM qb
+      |  JOIN cms USING (lane, bucket) GROUP BY qb.t)
+      |SELECT exact.t AS token, exact_cnt, cms_est,
+      |  cms_est - exact_cnt AS overcount
+      |FROM exact JOIN est ON est.t = exact.t
+      |ORDER BY exact_cnt DESC, token""".stripMargin
+
+  /** The TextQueries registry rows. */
+  def defs: Seq[(String, QueryDef)] = Seq(
+    "q_lang_id" -> fixed(qLangId _)(
+      """WITH s AS (SELECT doc_id, lang,
+        |  CAST(len(regexp_extract_all(text, '\b(the|and|of|to|in|is)\b')) AS BIGINT) AS score_en,
+        |  CAST(len(regexp_extract_all(text, '\b(le|la|les|de|et|une)\b')) AS BIGINT) AS score_fr,
+        |  CAST(len(regexp_extract_all(text, '\b(der|die|und|das|ist|ein)\b')) AS BIGINT) AS score_de,
+        |  CAST(len(regexp_extract_all(text, '\b(el|los|y|que|como|un)\b')) AS BIGINT) AS score_es
+        |  FROM documents)
+        |SELECT doc_id, lang AS labeled_lang, score_en, score_fr, score_de, score_es,
+        |  CASE WHEN score_en >= score_fr AND score_en >= score_de AND score_en >= score_es THEN 'en'
+        |       WHEN score_fr >= score_de AND score_fr >= score_es THEN 'fr'
+        |       WHEN score_de >= score_es THEN 'de'
+        |       ELSE 'es' END AS pred_lang
+        |FROM s ORDER BY doc_id""".stripMargin),
+    "q_quality_score" -> fixed(qQualityScore _)(
+      """WITH b AS (SELECT doc_id,
+        |  CAST(length(text) AS BIGINT) AS n_chars_txt,
+        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_words,
+        |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS BIGINT) AS n_punct,
+        |  CAST(len(regexp_extract_all(text, '\b(the|and|of|to|in|is)\b')) AS BIGINT) AS n_stop
+        |  FROM documents)
+        |SELECT doc_id, n_chars_txt, n_words, n_punct,
+        |  CAST(n_punct AS DOUBLE)/n_chars_txt AS punct_ratio,
+        |  CAST(n_stop AS DOUBLE)/n_words AS stop_ratio,
+        |  0.4 * least(1.0, CAST(n_words AS DOUBLE)/200.0)
+        |  + 0.3 * (1.0 - least(1.0, (CAST(n_punct AS DOUBLE)/n_chars_txt) * 5.0))
+        |  + 0.3 * least(1.0, (CAST(n_stop AS DOUBLE)/n_words) * 4.0) AS quality
+        |FROM b ORDER BY doc_id""".stripMargin),
+    "q_token_count" -> fixed(qTokenCount _)(
+      """SELECT doc_id,
+        |  CAST(length(text) AS BIGINT) AS n_chars_txt,
+        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // same tokenization as the ngram oracle (trim+lower+split \s+, drop
+    // empty edge fields); score = tf*N/df — exact ints, one IEEE division
+    "q_tfidf_keywords" -> fixed(qTfidfKeywords _)(
+      """WITH w AS (SELECT doc_id,
+        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+        |  FROM documents),
+        |t AS (SELECT doc_id, term, COUNT(*) AS tf FROM w
+        |  WHERE term <> '' GROUP BY doc_id, term),
+        |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term),
+        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+        |s AS (SELECT t.doc_id, t.term, t.tf, d.df,
+        |    CAST(t.tf * n.n_docs AS DOUBLE) / d.df AS score
+        |  FROM t JOIN d USING (term) CROSS JOIN n),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+        |    ORDER BY score DESC, term) AS rank FROM s)
+        |SELECT doc_id, term, tf, df, score, CAST(rank AS INT) AS rank
+        |FROM r WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin),
+    "q_fingerprint" -> fixed(qFingerprint _)(
+      """SELECT doc_id,
+        |  md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
+        |  source
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    "q_dedup_exact" -> fixed(qDedupExact _)(
+      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
+        |  min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin),
+    // real-codec round-trip replay: the engine encodes the UTF-8 bytes as
+    // a 32-wide zero-padded grayscale PNG and decodes it back through
+    // javax.imageio; PNG losslessness means the decoded pixel stats ARE
+    // the byte stats, which this SQL computes from the hex of the blob —
+    // any decode defect (color transform, padding, truncation) hash-fails
+    "q_multimodal_features" -> fixed(qMultimodalFeatures _)(
+      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
+        |s AS (SELECT doc_id, CAST(octet_length(bl) AS BIGINT) AS n,
+        |    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,
+        |    list_transform(range(CAST(octet_length(bl) AS INT)),
+        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
+        |      AS bs
+        |  FROM b)
+        |SELECT doc_id, n AS n_bytes, CAST(32 AS BIGINT) AS img_w, h AS img_h,
+        |  CAST(coalesce(list_sum(bs), 0) AS DOUBLE) / (32 * h) AS mean_px,
+        |  CAST(coalesce(list_max(bs), 0) AS BIGINT) AS max_px
+        |FROM s ORDER BY doc_id""".stripMargin),
+    // frame fan-out: every-2nd 64-byte frame of the payload, emitted as
+    // uppercase hex in both engines (docs are ASCII so VARCHAR slicing =
+    // byte slicing; the driver's checker cannot sort raw binary)
+    "q_multimodal_frames" -> fixed(qMultimodalFrames _)(
+      """WITH f AS (SELECT doc_id, text,
+        |    unnest(generate_series(0,
+        |      CAST(ceil(length(text)/64.0) AS BIGINT) - 1, 2)) AS frame_idx
+        |  FROM documents)
+        |SELECT doc_id AS media_id, CAST(frame_idx AS INT) AS frame_idx,
+        |  hex(substring(text, CAST(frame_idx*64 + 1 AS BIGINT), 64)) AS frame
+        |FROM f ORDER BY media_id, frame_idx""".stripMargin),
+    "q_pack_sequences" -> fixed(qPackSequences _)(
+      """WITH t AS (SELECT doc_id,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS tokens
+        |  FROM documents),
+        |c AS (SELECT doc_id, tokens,
+        |    SUM(tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM t)
+        |SELECT CAST(FLOOR((cum - tokens) / 2048) AS BIGINT) AS pack_id,
+        |  COUNT(*) AS n_docs, CAST(SUM(tokens) AS BIGINT) AS total_tokens,
+        |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
+        |FROM c GROUP BY 1 ORDER BY pack_id""".stripMargin),
+    "q_corpus_funnel" -> fixed(qCorpusFunnel _)(
+      """WITH s AS (SELECT doc_id,
+        |    CAST(len(regexp_extract_all(text, '\b(the|and|of|to|in|is)\b')) AS BIGINT) AS s_en,
+        |    CAST(len(regexp_extract_all(text, '\b(le|la|les|de|et|une)\b')) AS BIGINT) AS s_fr,
+        |    CAST(len(regexp_extract_all(text, '\b(der|die|und|das|ist|ein)\b')) AS BIGINT) AS s_de,
+        |    CAST(len(regexp_extract_all(text, '\b(el|los|y|que|como|un)\b')) AS BIGINT) AS s_es,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_words,
+        |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS BIGINT) AS n_punct,
+        |    CAST(length(text) AS BIGINT) AS n_chars,
+        |    md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
+        |  FROM documents),
+        |scored AS (SELECT doc_id, fp,
+        |    CASE WHEN s_en >= s_fr AND s_en >= s_de AND s_en >= s_es THEN 'en'
+        |         WHEN s_fr >= s_de AND s_fr >= s_es THEN 'fr'
+        |         WHEN s_de >= s_es THEN 'de' ELSE 'es' END AS pred_lang,
+        |    0.4 * least(1.0, CAST(n_words AS DOUBLE)/200.0)
+        |    + 0.3 * (1.0 - least(1.0, (CAST(n_punct AS DOUBLE)/n_chars) * 5.0))
+        |    + 0.3 * least(1.0, (CAST(s_en AS DOUBLE)/n_words) * 4.0) AS quality
+        |  FROM s),
+        |kept AS (SELECT * FROM scored WHERE pred_lang = 'en' AND quality >= 0.5)
+        |SELECT doc_id, fp, pred_lang, quality FROM kept
+        |WHERE doc_id = (SELECT min(k.doc_id) FROM kept k WHERE k.fp = kept.fp)
+        |ORDER BY doc_id""".stripMargin),
+    "q_bm25_search" -> fixed(qBm25Search _)(bm25Oracle),
+    // add-one bigram LM trained on every-10th docs; ln p floored to the
+    // 2^-16 grid pre-sum (reduction-order-exact, same tree as the Spark op)
+    "q_lm_score" -> fixed(qLmScore _)(
+      """WITH wr AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |bg AS (SELECT doc_id, unnest(CASE WHEN len(ws) < 2
+        |    THEN [array_to_string(ws, ' ')]
+        |    ELSE list_transform(generate_series(1, len(ws) - 1),
+        |      i -> ws[i]||' '||ws[i+1]) END) AS g
+        |  FROM wr),
+        |c2 AS (SELECT g, COUNT(*) AS c2n FROM bg
+        |  WHERE doc_id % 10 = 0 GROUP BY g),
+        |c1 AS (SELECT split_part(g, ' ', 1) AS w1,
+        |    CAST(SUM(c2n) AS BIGINT) AS c1n FROM c2 GROUP BY 1),
+        |vt AS (SELECT COUNT(DISTINCT t) AS v FROM
+        |  (SELECT unnest(ws) AS t FROM wr WHERE doc_id % 10 = 0)),
+        |p AS (SELECT bg.doc_id, c2.c2n IS NULL AS unseen,
+        |    floor(ln(CAST(COALESCE(c2.c2n, 0) + 1 AS DOUBLE)
+        |        / CAST(COALESCE(c1.c1n, 0) + v AS DOUBLE))
+        |      * 65536.0) / 65536.0 AS lp
+        |  FROM bg
+        |  LEFT JOIN c2 USING (g)
+        |  LEFT JOIN c1 ON split_part(bg.g, ' ', 1) = c1.w1
+        |  CROSS JOIN vt)
+        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+        |  CAST(SUM(CASE WHEN unseen THEN 1 ELSE 0 END) AS BIGINT) AS n_unseen,
+        |  (-SUM(lp)) / COUNT(*) AS cross_entropy,
+        |  ((-SUM(lp)) / COUNT(*)) <= 6.0 AS keep
+        |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // Count-Min replay: ONE md5 digest per token occurrence sliced into
+    // four 32-bit bucket words (lower/upper lane, low/high half) — the
+    // same slices Sketches.buckets masks engine-side; arithmetic stays in
+    // HUGEINT because UBIGINT lanes exceed BIGINT
+    "q_heavy_hitters" -> fixed(qHeavyHitters _)(heavyHittersOracle),
+    // trained-model replay (the q_lm_score pattern, supervised): the NB
+    // model = (cls, token) counts + class totals + priors + vocab scalar,
+    // every ln floored to the 2^-16 grid, argmax by (score desc, cls)
+    "q_nb_classifier" -> fixed(qNbClassifier _)(
+      """WITH wr AS (SELECT doc_id, lang,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |tok AS (SELECT doc_id, lang, unnest(ws) AS t FROM wr),
+        |ref AS (SELECT * FROM tok WHERE doc_id % 10 = 0),
+        |ctk AS (SELECT lang AS cls, t, COUNT(*) AS ctn FROM ref
+        |  GROUP BY 1, 2),
+        |ck AS (SELECT cls, CAST(SUM(ctn) AS BIGINT) AS ckn FROM ctk
+        |  GROUP BY 1),
+        |vt AS (SELECT COUNT(DISTINCT t) AS v FROM ref),
+        |dpc AS (SELECT lang AS cls, COUNT(*) AS nd FROM documents
+        |  WHERE doc_id % 10 = 0 GROUP BY 1),
+        |tot AS (SELECT COUNT(*) AS ntot FROM documents WHERE doc_id % 10 = 0),
+        |cls AS (SELECT ck.cls, ckn,
+        |    floor(ln(CAST(nd AS DOUBLE) / CAST(ntot AS DOUBLE))
+        |      * 65536.0) / 65536.0 AS lp0
+        |  FROM ck JOIN dpc ON ck.cls = dpc.cls CROSS JOIN tot),
+        |sc AS (SELECT tok.doc_id, tok.lang AS actual, cls.cls, cls.lp0,
+        |    floor(ln(CAST(COALESCE(ctn, 0) + 1 AS DOUBLE)
+        |        / CAST(ckn + v AS DOUBLE)) * 65536.0) / 65536.0 AS lp
+        |  FROM tok CROSS JOIN cls
+        |  LEFT JOIN ctk ON ctk.cls = cls.cls AND ctk.t = tok.t
+        |  CROSS JOIN vt),
+        |ag AS (SELECT doc_id, actual, cls, lp0 + SUM(lp) AS score FROM sc
+        |  GROUP BY doc_id, actual, cls, lp0),
+        |rk AS (SELECT doc_id, actual, cls, score, row_number() OVER
+        |    (PARTITION BY doc_id ORDER BY score DESC, cls) AS rn FROM ag)
+        |SELECT doc_id, cls AS predicted, score, actual,
+        |  cls = actual AS is_correct
+        |FROM rk WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    // same shingling CTE as q_lm_score; marginals are the bigram table's
+    // own left/right totals; ln snapped to the 2^-16 grid
+    "q_pmi_collocations" -> fixed(qPmiCollocations _)(
+      """WITH wr AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |bg AS (SELECT unnest(CASE WHEN len(ws) < 2
+        |    THEN [array_to_string(ws, ' ')]
+        |    ELSE list_transform(generate_series(1, len(ws) - 1),
+        |      i -> ws[i]||' '||ws[i+1]) END) AS g
+        |  FROM wr),
+        |b2 AS (SELECT split_part(g, ' ', 1) AS w1, split_part(g, ' ', 2) AS w2
+        |  FROM bg WHERE g LIKE '% %'),
+        |cxy AS (SELECT w1, w2, COUNT(*) AS n_xy FROM b2 GROUP BY 1, 2),
+        |cl AS (SELECT w1, CAST(SUM(n_xy) AS BIGINT) AS n_left FROM cxy
+        |  GROUP BY 1),
+        |cr AS (SELECT w2, CAST(SUM(n_xy) AS BIGINT) AS n_right FROM cxy
+        |  GROUP BY 1),
+        |t AS (SELECT CAST(SUM(n_xy) AS BIGINT) AS total FROM cxy)
+        |SELECT w1, w2, n_xy,
+        |  floor(ln((CAST(n_xy AS DOUBLE) * CAST(total AS DOUBLE)) /
+        |      (CAST(n_left AS DOUBLE) * CAST(n_right AS DOUBLE)))
+        |    * 65536.0) / 65536.0 AS pmi
+        |FROM cxy JOIN cl USING (w1) JOIN cr USING (w2) CROSS JOIN t
+        |WHERE n_xy >= 5
+        |ORDER BY pmi DESC, w1, w2 LIMIT 100""".stripMargin),
+    // p·ln p snapped to the 2^-16 grid per term → the entropy sum is
+    // exact dyadic arithmetic, order-free on both engines
+    "q_source_entropy" -> fixed(qSourceEntropy _)(
+      """WITH wr AS (SELECT source,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |tk AS (SELECT source, unnest(ws) AS t FROM wr),
+        |c AS (SELECT source, t, COUNT(*) AS c FROM tk GROUP BY 1, 2),
+        |n AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
+        |    COUNT(*) AS vocab_size FROM c GROUP BY 1)
+        |SELECT source, n_tokens, vocab_size,
+        |  -SUM(floor((CAST(c AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+        |      * ln(CAST(c AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+        |      * 65536.0) / 65536.0) AS entropy
+        |FROM c JOIN n USING (source)
+        |GROUP BY source, n_tokens, vocab_size
+        |ORDER BY source""".stripMargin),
+    // real MJPEG demux + JDK decode on the Spark side; the oracle replays
+    // the REPLAYABLE facts — frame geometry (w fixed, h = ceil(slice/16),
+    // both produced by the actual decoder engine-side) and source-slice
+    // brightness; the lossy decoded brightness is spec-pinned, not hashed
+    "q_video_frames" -> fixed(qVideoFrames _)(
+      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
+        |f AS (SELECT doc_id, bl, CAST(octet_length(bl) AS BIGINT) AS len,
+        |    unnest(generate_series(0,
+        |      CAST(ceil(octet_length(bl)/64.0) AS BIGINT) - 1, 2)) AS fi
+        |  FROM b),
+        |c AS (SELECT doc_id, fi,
+        |    least(CAST(64 AS BIGINT), len - fi*64) AS clen,
+        |    list_transform(range(CAST(least(CAST(64 AS BIGINT), len - fi*64) AS INT)),
+        |      i -> CAST(('0x' || substr(hex(bl), CAST((fi*64 + i)*2 + 1 AS INT), 2)) AS INT))
+        |      AS bs
+        |  FROM f)
+        |SELECT doc_id AS media_id, CAST(fi AS INT) AS frame_idx,
+        |  CAST(16 AS BIGINT) AS frame_w,
+        |  greatest(1, CAST(ceil(clen/16.0) AS BIGINT)) AS frame_h,
+        |  clen AS n_src_bytes,
+        |  CAST(coalesce(list_sum(bs), 0) AS DOUBLE) /
+        |    (16 * greatest(1, CAST(ceil(clen/16.0) AS BIGINT))) AS mean_src_px
+        |FROM c ORDER BY media_id, frame_idx""".stripMargin),
+    // real WAV PCM round-trip engine-side (javax.sound); PCM is lossless,
+    // so the decoded sample stats replay arithmetically from the bytes —
+    // n_samples/sample_rate are the DECODER's container view
+    "q_audio_features" -> fixed(qAudioFeatures _)(
+      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
+        |s AS (SELECT doc_id, CAST(octet_length(bl) AS BIGINT) AS n,
+        |    list_transform(range(CAST(octet_length(bl) AS INT)),
+        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
+        |      AS bs
+        |  FROM b)
+        |SELECT doc_id, n AS n_bytes, n AS n_samples,
+        |  CAST(8000 AS DOUBLE) AS sample_rate,
+        |  CAST(coalesce(list_sum(bs), 0) AS DOUBLE) / greatest(1, n) AS mean_amp,
+        |  CAST(coalesce(list_max(bs), 0) AS BIGINT) AS max_amp
+        |FROM s ORDER BY doc_id""".stripMargin),
+    // real resize replay: the engine encodes the bytes as a 32-wide gray
+    // PNG, decodes it, area-mean ÷2 downsamples (floor of each 2×2 block
+    // mean; odd-height images end with clipped 2×1 blocks), re-encodes
+    // PNG, decodes AGAIN, and emits the thumbnail's pixel stats. All
+    // exact integer arithmetic → this SQL replays the thumbnail pixels
+    // from the blob's hex; any kernel/codec defect hash-fails.
+    "q_image_thumbnail" -> fixed(qImageThumbnail _)(
+      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
+        |s AS (SELECT doc_id, CAST(octet_length(bl) AS BIGINT) AS n,
+        |    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,
+        |    list_transform(range(CAST(octet_length(bl) AS INT)),
+        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
+        |      AS bs
+        |  FROM b),
+        |t AS (SELECT doc_id, n, h, CAST(ceil(h / 2.0) AS BIGINT) AS th,
+        |    list_transform(range(CAST(16 * ceil(h / 2.0) AS INT)), q ->
+        |      CASE WHEN (q // 16) * 2 + 1 < h THEN
+        |        (coalesce(bs[CAST((q//16)*64 + (q%16)*2 + 1 AS INT)], 0)
+        |       + coalesce(bs[CAST((q//16)*64 + (q%16)*2 + 2 AS INT)], 0)
+        |       + coalesce(bs[CAST((q//16)*64 + 32 + (q%16)*2 + 1 AS INT)], 0)
+        |       + coalesce(bs[CAST((q//16)*64 + 32 + (q%16)*2 + 2 AS INT)], 0)) // 4
+        |      ELSE
+        |        (coalesce(bs[CAST((q//16)*64 + (q%16)*2 + 1 AS INT)], 0)
+        |       + coalesce(bs[CAST((q//16)*64 + (q%16)*2 + 2 AS INT)], 0)) // 2
+        |      END) AS tp
+        |  FROM s)
+        |SELECT doc_id, n AS n_bytes, CAST(32 AS BIGINT) AS src_w, h AS src_h,
+        |  CAST(16 AS BIGINT) AS thumb_w, th AS thumb_h,
+        |  CAST(coalesce(list_sum(tp), 0) AS DOUBLE) / (16 * th) AS mean_thumb_px,
+        |  CAST(coalesce(list_max(tp), 0) AS BIGINT) AS max_thumb_px
+        |FROM t ORDER BY doc_id""".stripMargin),
+    // RRF hybrid retrieval: the bm25 replay with each query DOC's distinct
+    // unigrams as the query set, the knn cosine replay, then the pure
+    // rank-arithmetic fusion 1/(60+r_lex) + 1/(60+r_vec) — two IEEE
+    // divides + one fixed-order add, bit-identical across engines.
+    // Lexical ranks keep the self-doc's slot (ranked before the self
+    // filter); vector ranks exclude self before ranking — both mirror
+    // the engine exactly.
+    "q_hybrid_search" -> fixed(qHybridSearch _)(
+      s"""WITH $hybridLexCtes,
+        |ed AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embd
+        |  FROM embeddings),
+        |qv AS (SELECT vec_id AS query_id, embd AS q_embd
+        |  FROM ed WHERE vec_id < 5),
+        |vecall AS (SELECT q.query_id, e.vec_id AS doc_id,
+        |    row_number() OVER (PARTITION BY q.query_id
+        |      ORDER BY list_cosine_similarity(q.q_embd, e.embd) DESC, e.vec_id)
+        |      AS vec_rank
+        |  FROM qv q CROSS JOIN ed e WHERE e.vec_id <> q.query_id),
+        |vec AS (SELECT query_id, doc_id, vec_rank FROM vecall
+        |  WHERE vec_rank <= 20),
+        |$hybridFuseSql""".stripMargin),
+    // stored-index serve == from-text serve, bit-for-bit: the build's
+    // tf/dl are the same integers the on-the-fly path derives and the
+    // scoring tail is shared code — so the oracle is bm25's VERBATIM,
+    // and the publish→merge→read round trip is what the hash proves
+    "q_index_serve" -> fixed(qIndexServe _)(bm25Oracle),
+    // image aHash replay in byte arithmetic: pixel (r,c) of the 32-wide
+    // pad-0 gray image IS byte r*32+c, samples at the 8×8 cell centers,
+    // bit = v*64 >= Σv (ties set), chunk keys + bit-list hamming exactly
+    // as the q_simhash oracle — a codec defect on the Spark side flips
+    // bits and hash-fails here
+    "q_image_phash" -> fixed(qImagePhash _)(
+      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
+        |s AS (SELECT doc_id,
+        |    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,
+        |    list_transform(range(CAST(octet_length(bl) AS INT)),
+        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
+        |      AS bs
+        |  FROM b),
+        |v AS (SELECT doc_id,
+        |    list_transform(range(64), q ->
+        |      coalesce(bs[CAST(((2*(q//8)+1)*h)//16 * 32
+        |        + (2*(q%8)+1)*2 + 1 AS INT)], 0)) AS vq
+        |  FROM s),
+        |bits AS (SELECT doc_id,
+        |    list_transform(vq, x ->
+        |      CASE WHEN x * 64 >= list_sum(vq) THEN 1 ELSE 0 END) AS bl
+        |  FROM v),
+        |bk AS (SELECT doc_id, bl, c,
+        |    list_sum(list_transform(range(16),
+        |      i -> bl[CAST(c*16+i+1 AS INT)] * (1 << i))) AS ckey
+        |  FROM bits CROSS JOIN (SELECT unnest(range(4)) AS c)),
+        |pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    a.bl AS ba, b.bl AS bb
+        |  FROM bk a JOIN bk b
+        |    ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id),
+        |hm AS (SELECT doc_a, doc_b,
+        |    CAST(len(list_filter(range(64), i -> ba[i+1] <> bb[i+1]))
+        |      AS BIGINT) AS hamming
+        |  FROM pr)
+        |SELECT doc_a, doc_b, hamming FROM hm WHERE hamming <= 8
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    "q_bpe_tokenize" -> trained(bpeModelFor)(qBpeTokenize)(bpeOracle),
+    // hybrid-over-stores: the bm25 store replay + the centroid-inlined
+    // IVF replay, fused with the same RRF tail as q_hybrid_search
+    "q_hybrid_serve" -> trained(SimilarityQueries.centroidsFor)(
+      qHybridServe)(hybridServeOracle),
+  )
 }
