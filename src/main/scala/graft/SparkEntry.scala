@@ -31,8 +31,8 @@ object QueryDef {
       Run(oracleSql(), () => query(spark, dir))
   }
 
-  /** A row over a trained model: `model` trains it or fetches it from its
-    * per-dir memo, and that one value goes to both `query` and `oracle`.
+  /** A row over a trained model: `model` yields it, and that one value
+    * goes to both `query` and `oracle`.
     */
   final case class Trained[M](model: (SparkSession, String) => M,
       query: (SparkSession, String, M) => DataFrame,
@@ -55,6 +55,26 @@ object QueryDef {
   def trained[M](model: (SparkSession, String) => M)(
       query: (SparkSession, String, M) => DataFrame)(
       oracle: M => String): Trained[M] = Trained(model, query, oracle)
+}
+
+/** A model trained once per data dir. The model is a pure function of the
+  * dir's data, so one JVM trains it on the first call for a dir and every
+  * later call — each Verify pass, each spec, each row sharing the model —
+  * returns that same value. A `train` that throws caches nothing. Each
+  * instance owns its map, so a trainer may call another `PerDir` (a GBT
+  * fit featurizes through the encoder's) without a recursive update.
+  */
+final class PerDir[M](train: (SparkSession, String) => M)
+    extends ((SparkSession, String) => M) {
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, M]()
+
+  def apply(spark: SparkSession, dir: String): M =
+    memo.computeIfAbsent(dir, _ => train(spark, dir))
+}
+
+object PerDir {
+  def apply[M](train: (SparkSession, String) => M): PerDir[M] =
+    new PerDir(train)
 }
 
 /** Driver contract — see SURVEY.md §2 for the inventory. */

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.PerDir
+import graft.sources.Tables
 
 /** Gradient-boosted regression stumps with a per-feature importance
   * readout — the in-engine twin of the reference's Kibana Data Frame
@@ -191,16 +194,6 @@ object Gbt {
   def render(sql: String, duck: Boolean): String =
     sql.replace("%DIV%", if (duck) "//" else "div")
 
-  /** Collected categorical-encoder model per memo key (r17 ADVICE #3:
-    * the encoder aggregate is an eager bounded collect, and one query
-    * family — q_model_serve alone calls featurize three times — was
-    * paying an identical full part scan per call to rebuild the same
-    * broadcast frame). Keyed by the caller's sfDir; the encoder is a
-    * pure function of that dir's part table, so one JVM needs it once.
-    */
-  private val encMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long, Long)], Long)]()
-
   /** The out-of-fold encoder as driver data: ONE bounded aggregate over
     * the train slice (≤ |categories| × folds cells), collected, and the
     * per-fold/full/global encodings derived with exact `Math.floorDiv`
@@ -234,35 +227,21 @@ object Gbt {
     (encRows, genc)
   }
 
-  /** Spark-side featurized frame: the row key `pk`, the four bin
-    * columns, integer-cents target `y`, and the train/test flag. The
-    * three numeric bins are scan-side projections; the categorical bin
-    * needs the out-of-fold encoder — [[trainEncoder]]'s bounded collect
-    * turned into a local broadcast frame (the Ranking-offsets model-step
-    * discipline), which keeps the consumer plan to one broadcast join:
-    * leaving the encodings as dependent aggregates re-planned the cm/ct
-    * subtree 3-4× per consumer with no exchange reuse (observed
-    * exch=2 → 13 on every scoring row). A non-empty `memoKey` (the
-    * caller's sfDir) memoizes the collected encoder so repeated
-    * featurize calls in one JVM pay the encoder scan once.
+  /** Spark-side featurized frame of `dir`'s part table: the row key
+    * `pk`, the four bin columns, integer-cents target `y`, and the
+    * train/test flag. The three numeric bins are scan-side projections;
+    * the categorical bin needs the out-of-fold encoder — [[trainEncoder]]'s
+    * bounded collect turned into a local broadcast frame (the
+    * Ranking-offsets model-step discipline), which keeps the consumer plan
+    * to one broadcast join: leaving the encodings as dependent aggregates
+    * re-planned the cm/ct subtree 3-4× per consumer with no exchange reuse
+    * (observed exch=2 → 13 on every scoring row).
     */
-  def featurize(part: DataFrame, memoKey: String = ""): DataFrame = {
-    val base = part.filter("p_size IS NOT NULL").selectExpr(
-      Seq("CAST(p_partkey AS BIGINT) AS pk") ++
-        BinCols.take(3).zip(BinSql).map { case (n, s) =>
-          s"${render(s, duck = false)} AS $n"
-        } ++ Seq(s"$CatSql AS cat",
-        s"CAST($CatFoldSql AS BIGINT) AS fold",
-        s"CAST($TargetSql AS BIGINT) AS y",
-        s"($TrainPredSql) AS is_train"): _*)
-    val (encRows, genc) =
-      if (memoKey.nonEmpty)
-        encMemo.computeIfAbsent(memoKey, _ => trainEncoder(base))
-      else trainEncoder(base)
-    val spark = part.sparkSession
+  def featurize(spark: SparkSession, dir: String): DataFrame = {
+    val (encRows, genc) = encoder(spark, dir)
     import spark.implicits._
     val encf = encRows.toDF("e_cat", "e_fold", "enc")
-    base
+    unencoded(spark, dir)
       .join(broadcast(encf),
         col("cat") === col("e_cat") &&
           col("e_fold") === when(col("is_train"), col("fold"))
@@ -273,6 +252,21 @@ object Gbt {
           .as("b_cat"),
         col("y"), col("is_train"))
   }
+
+  private val encoder = PerDir { (spark, dir) =>
+    trainEncoder(unencoded(spark, dir))
+  }
+
+  /** The featurized columns before the categorical encoding joins in. */
+  private def unencoded(spark: SparkSession, dir: String): DataFrame =
+    Tables.part(spark, dir).filter("p_size IS NOT NULL").selectExpr(
+      Seq("CAST(p_partkey AS BIGINT) AS pk") ++
+        BinCols.take(3).zip(BinSql).map { case (n, s) =>
+          s"${render(s, duck = false)} AS $n"
+        } ++ Seq(s"$CatSql AS cat",
+        s"CAST($CatFoldSql AS BIGINT) AS fold",
+        s"CAST($TargetSql AS BIGINT) AS y",
+        s"($TrainPredSql) AS is_train"): _*)
 
   /** Leaf-pattern column after `stumps`: bit j set iff stump j routes
     * the row left. Exact integer CASE chain — identical in the replay.

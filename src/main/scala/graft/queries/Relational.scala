@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.QueryDef
+import graft.{PerDir, QueryDef}
 import graft.QueryDef.{fixed, trained}
 import graft.sources.Tables
 import graft.ops.Agg._
@@ -569,21 +569,26 @@ object Relational {
       .orderBy(col("split"))
   }
 
-  /** Trained GBT model per sfDir, memoized — the model is a pure
-    * function of the dir's data. The GBT rows take the model as an
-    * argument; their registry rows fetch it here and generate the DuckDB
-    * training-replay / scoring oracles from the same value.
+  /** Fits `fit` on `dir`'s checkpointed GBT train slice — only its
+    * even-`pk` half when `evenHalf` (the registry rows' "yesterday"
+    * model) — and releases the checkpoint afterwards.
     */
-  private val gbtMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Gbt.Model]()
+  private def fitTrainSlice[M](spark: SparkSession, dir: String,
+      evenHalf: Boolean)(fit: DataFrame => M): M = {
+    import graft.ops.{Checkpoints, Gbt}
+    val train = Gbt.featurize(spark, dir).filter(col("is_train"))
+    val tr = Checkpoints.checkpoint(
+      if (evenHalf) train.filter(expr("pk % 2 = 0")) else train)
+    try fit(tr) finally Checkpoints.release(tr)
+  }
 
-  private[graft] def gbtTrainOrGet(spark: SparkSession, dir: String): graft.ops.Gbt.Model =
-    gbtMemo.computeIfAbsent(dir, _ => {
-      import graft.ops.{Checkpoints, Gbt}
-      val tr = Checkpoints.checkpoint(
-        Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
-      try Gbt.train(tr) finally Checkpoints.release(tr)
-    })
+  /** The GBT stump model on the full train slice. The GBT rows take it as
+    * an argument; their registry rows generate the DuckDB training-replay
+    * / scoring oracles from the same value.
+    */
+  private[graft] val gbtTrainOrGet = PerDir { (spark, dir) =>
+    fitTrainSlice(spark, dir, evenHalf = false)(graft.ops.Gbt.train(_))
+  }
 
   /** BOOSTED-TREE regression eval (round 16 — ML_ROADMAP.md Phase 2.2/4,
     * the Kibana DFA *Regression* twin the OLS pair couldn't be): train
@@ -591,8 +596,9 @@ object Relational {
     * the synthetic nonlinear slice, score BOTH splits with the exact
     * integer-cents model, and report per-split RMSE and R². The target
     * is quadratic in p_size, so the q_regression-style linear fit is
-    * structurally blind to it — GbtSpec pins train-RMSE strictly below
-    * the OLS closed form's.
+    * structurally blind to it — Round16Spec "GBT regression beats the
+    * OLS closed form on the nonlinear slice" pins train-RMSE strictly
+    * below the OLS closed form's.
     *
     * Scale: training = K bounded histogram aggregates (Gbt scaladoc);
     * eval = one scan with per-split exact sums (n, Σy, Σy², Σ(y−ŷ)² —
@@ -602,7 +608,7 @@ object Relational {
   def qGbtRegression(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
-    scoreEval(Gbt.featurize(Tables.part(spark, dir), dir), Gbt.fhatCol(m))
+    scoreEval(Gbt.featurize(spark, dir), Gbt.fhatCol(m))
   }
 
   /** GBT FEATURE IMPORTANCE (round 16 — ML_ROADMAP.md Phase 4 step 4,
@@ -639,19 +645,10 @@ object Relational {
       .orderBy(col("feature"))
   }
 
-  /** Trained depth-2 TREE model per sfDir — memoized like
-    * [[gbtTrainOrGet]]. */
-  private val gbtTreeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Gbt.TreeModel]()
-
-  private[graft] def gbtTreeTrainOrGet(spark: SparkSession,
-      dir: String): graft.ops.Gbt.TreeModel =
-    gbtTreeMemo.computeIfAbsent(dir, _ => {
-      import graft.ops.{Checkpoints, Gbt}
-      val tr = Checkpoints.checkpoint(
-        Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
-      try Gbt.trainTree(tr) finally Checkpoints.release(tr)
-    })
+  /** The depth-2 TREE model on the full train slice. */
+  private[graft] val gbtTreeTrainOrGet = PerDir { (spark, dir) =>
+    fitTrainSlice(spark, dir, evenHalf = false)(graft.ops.Gbt.trainTree(_))
+  }
 
   /** DEPTH-2 BOOSTED TREES (round 17 — r16 verdict #3: Kibana DFA grows
     * real trees; stumps cannot express the planted p_size × mod
@@ -687,20 +684,12 @@ object Relational {
       .orderBy(col("feature"))
   }
 
-  /** Trained depth-3 model per sfDir from the generic-depth trainer —
-    * memoized like [[gbtTrainOrGet]]. */
-  private val gbtDeepMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Gbt.DeepModel]()
-
-  private[graft] def gbtDeepTrainOrGet(spark: SparkSession,
-      dir: String): graft.ops.Gbt.DeepModel =
-    gbtDeepMemo.computeIfAbsent(dir, _ => {
-      import graft.ops.{Checkpoints, Gbt}
-      val tr = Checkpoints.checkpoint(
-        Gbt.featurize(Tables.part(spark, dir), dir).filter(col("is_train")))
-      try Gbt.trainDepth(tr, rounds = Gbt.TreeRounds, depth = 3)
-      finally Checkpoints.release(tr)
-    })
+  /** The depth-3 model from the generic-depth trainer. */
+  private[graft] val gbtDeepTrainOrGet = PerDir { (spark, dir) =>
+    import graft.ops.Gbt
+    fitTrainSlice(spark, dir, evenHalf = false)(
+      Gbt.trainDepth(_, rounds = Gbt.TreeRounds, depth = 3))
+  }
 
   /** DEPTH-3 BOOSTED TREES through the GENERIC trainer (round 18 — the
     * production proof of the r17 verdict's #6 ask: depth is a
@@ -717,18 +706,12 @@ object Relational {
   def qGbtDepth3(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.DeepModel): DataFrame = {
     import graft.ops.Gbt
-    scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
+    scoreEval(Gbt.featurize(spark, dir),
         Gbt.fhatColDeep(m))
       .select(lit(3L).as("depth"), lit(m.trees.length.toLong).as("n_trees"),
         col("split"), col("n"), col("rmse"), col("r2"))
       .orderBy(col("split"))
   }
-
-  /** The "yesterday" model of the registry rows — trained on the even
-    * half of the train slice, memoized per sfDir (qModelServe publishes
-    * it as the stale v1; qModelRollback pins and serves it). */
-  private val gbtHalfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (graft.ops.Gbt.Model, Long)]()
 
   /** The two versions of one model class the registry rows publish:
     * `stale` (yesterday's, trained on the even half of the train slice,
@@ -743,15 +726,13 @@ object Relational {
     Versions(stale, staleN, gbtTrainOrGet(spark, dir))
   }
 
-  private[graft] def gbtHalfTrainOrGet(spark: SparkSession,
-      dir: String): (graft.ops.Gbt.Model, Long) =
-    gbtHalfMemo.computeIfAbsent(dir, _ => {
-      import graft.ops.{Checkpoints, Gbt}
-      val half = Checkpoints.checkpoint(
-        Gbt.featurize(Tables.part(spark, dir), dir)
-          .filter(col("is_train")).filter(expr("pk % 2 = 0")))
-      try (Gbt.train(half), half.count()) finally Checkpoints.release(half)
-    })
+  /** The "yesterday" model of the registry rows — trained on the even
+    * half of the train slice — with its training row count (qModelServe
+    * publishes it as the stale v1; qModelRollback pins and serves it). */
+  private[graft] val gbtHalfTrainOrGet = PerDir { (spark, dir) =>
+    fitTrainSlice(spark, dir, evenHalf = true)(half =>
+      (graft.ops.Gbt.train(half), half.count()))
+  }
 
   /** MODEL ROLLBACK (round 17 — the registry lifecycle's incident
     * path: v2 is live, but serving must PIN an earlier version — the
@@ -776,7 +757,7 @@ object Relational {
     // the incident: serve the PINNED v1, not the manifest-current v2
     val (rolled, _) = Gbt.modelFromDf(Datalake.readVersion(spark, root, "1"))
     val nVersions = Datalake.listVersions(spark, root).length.toLong
-    scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
+    scoreEval(Gbt.featurize(spark, dir),
         Gbt.fhatCol(rolled))
       .select(lit("1").as("served_version"),
         lit(nVersions).as("n_versions"), col("split"), col("n"),
@@ -793,7 +774,7 @@ object Relational {
     import graft.ops.Gbt
     import graft.sources.Datalake
     val (served, _) = Gbt.modelFromDf(Datalake.readPublished(spark, modelRoot))
-    scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
+    scoreEval(Gbt.featurize(spark, dir),
       Gbt.fhatCol(served))
   }
 
@@ -831,7 +812,7 @@ object Relational {
     Datalake.publish(Gbt.modelToDf(spark, models.stale, models.staleN),
       root, "1")
     // the serving job's freshness gate: stored n_train vs live count
-    val liveN = Gbt.featurize(Tables.part(spark, dir), dir)
+    val liveN = Gbt.featurize(spark, dir)
       .filter(col("is_train")).count()
     val (_, storedN) = Gbt.modelFromDf(Datalake.readPublished(spark, root))
     if (storedN != liveN)
@@ -872,22 +853,12 @@ object Relational {
       .orderBy(col("split"))
   }
 
-  /** The "yesterday" DEPTH-2 model — trained on the even half of the
-    * train slice, memoized per sfDir (the gbtHalfMemo discipline for
-    * trees; qModelServeTree publishes it as the stale v1). */
-  private val gbtTreeHalfMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.Gbt.TreeModel, Long)]()
-
-  private[graft] def gbtTreeHalfTrainOrGet(spark: SparkSession,
-      dir: String): (graft.ops.Gbt.TreeModel, Long) =
-    gbtTreeHalfMemo.computeIfAbsent(dir, _ => {
-      import graft.ops.{Checkpoints, Gbt}
-      val half = Checkpoints.checkpoint(
-        Gbt.featurize(Tables.part(spark, dir), dir)
-          .filter(col("is_train")).filter(expr("pk % 2 = 0")))
-      try (Gbt.trainTree(half), half.count()) finally Checkpoints.release(half)
-    })
+  /** The "yesterday" DEPTH-2 model — [[gbtHalfTrainOrGet]] for trees;
+    * qModelServeTree publishes it as the stale v1. */
+  private[graft] val gbtTreeHalfTrainOrGet = PerDir { (spark, dir) =>
+    fitTrainSlice(spark, dir, evenHalf = true)(half =>
+      (graft.ops.Gbt.trainTree(half), half.count()))
+  }
 
   private[graft] def gbtTreeVersionsFor(spark: SparkSession,
       dir: String): Versions[graft.ops.Gbt.TreeModel] = {
@@ -906,7 +877,7 @@ object Relational {
     import graft.sources.Datalake
     val (served, _) =
       Gbt.treeModelFromDf(Datalake.readPublished(spark, modelRoot))
-    scoreEval(Gbt.featurize(Tables.part(spark, dir), dir),
+    scoreEval(Gbt.featurize(spark, dir),
       Gbt.fhatColTree(served))
   }
 
@@ -935,7 +906,7 @@ object Relational {
     import graft.sources.Datalake
     Datalake.publish(Gbt.treeModelToDf(spark, models.stale, models.staleN),
       root, "1")
-    val liveN = Gbt.featurize(Tables.part(spark, dir), dir)
+    val liveN = Gbt.featurize(spark, dir)
       .filter(col("is_train")).count()
     val (_, storedN) =
       Gbt.treeModelFromDf(Datalake.readPublished(spark, root))
@@ -983,7 +954,7 @@ object Relational {
     def serveProd(stage: String): DataFrame = {
       val v = Datalake.resolveAlias(spark, root, "prod")
       val (m, _) = Gbt.modelFromDf(Datalake.readAlias(spark, root, "prod"))
-      scoreEval(Gbt.featurize(Tables.part(spark, dir), dir), Gbt.fhatCol(m))
+      scoreEval(Gbt.featurize(spark, dir), Gbt.fhatCol(m))
         .select(lit(stage).as("stage"), lit("prod").as("alias"),
           lit(v).as("served_version"), col("split"), col("n"),
           col("rmse"), col("r2"))
@@ -1017,7 +988,7 @@ object Relational {
   def qConformalInterval(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
-    val scored = Gbt.featurize(Tables.part(spark, dir), dir)
+    val scored = Gbt.featurize(spark, dir)
       .filter(!col("is_train"))
       .select(col("pk"), col("y"), Gbt.fhatCol(m).as("fhat"))
       .withColumn("ar", abs(col("y") - col("fhat")))

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QueryDef
+import graft.{PerDir, QueryDef}
 import graft.QueryDef.{fixed, trained}
 import graft.sources.{Datalake, Tables}
 import graft.ops.{Dedup, Similarity}
@@ -160,17 +160,12 @@ object SimilarityQueries {
       .orderBy(col("id"))
   }
 
-  /** Trained-PCA memo per sfDir (the centroidCache discipline: the model
-    * is a pure function of the dir's corpus, training is two aggregate
-    * jobs + a bounded eigen step — once per JVM is enough).
-    */
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.Pca.PcaModel]()
-
-  private[graft] def pcaModelFor(spark: SparkSession,
-      dir: String): graft.ops.Pca.PcaModel =
-    pcaCache.computeIfAbsent(dir, _ => graft.ops.Pca.train(
-      Tables.embeddings(spark, dir), "embedding", dim = 64, k = 4))
+  /** The top-4 PCA of the embedding corpus: two aggregate jobs + a
+    * bounded eigen step. */
+  private[graft] val pcaModelFor = PerDir { (spark, dir) =>
+    graft.ops.Pca.train(Tables.embeddings(spark, dir), "embedding",
+      dim = 64, k = 4)
+  }
 
   /** INT8 quantization as a DRIVER row (round 10 — closes §2's last
     * spec-only entry): every embedding goes through the real codegen
@@ -227,12 +222,19 @@ object SimilarityQueries {
   val IvfK = 5
   val IvfNProbe = 4
 
-  /** Trained-centroid memo per sfDir: qAnnIvf, qAnnIvfQuantized and
-    * qSemanticDedup all need the SAME deterministic model (√n cells,
-    * 2 Lloyd iterations, same seed sample of the same corpus) — training
-    * once per dir removes two full k-means trainings and their count()
-    * scans from every Verify/bench sweep. The model is a pure function of
-    * the dir's corpus, so cache staleness is not a concern in one JVM.
+  /** The IVF coarse quantizer recipe: √n cells, 2 Lloyd iterations over
+    * `x`'s `emb` column (same seed sample discipline for every caller). */
+  private def trainIvf(x: DataFrame): Array[Array[Float]] =
+    Similarity.trainCentroids(x, nCells = Similarity.cellsFor(x.count()),
+      iters = 2)
+
+  /** The PQ codebook recipe: m=8 subspaces, ksub=16 codewords each,
+    * 2 Lloyd iterations over `x`'s column `emb`. */
+  private def trainPq(x: DataFrame, emb: Column): graft.ops.Pq.PqModel =
+    graft.ops.Pq.train(x, emb, m = 8, ksub = 16, iters = 2)
+
+  /** The IVF centroids of the dir's corpus: qAnnIvf, qAnnIvfQuantized,
+    * qSemanticDedup and the composed IVF rows all share this one model.
     *
     * The trained models are plain values: the registry row ([[defs]])
     * fetches one through an accessor like [[centroidsFor]], passes it to
@@ -241,18 +243,9 @@ object SimilarityQueries {
     * float-mean training isn't bit-stable ACROSS engines, but the model
     * is just data, so assignment+probe+topk replays exactly.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-
-  private[graft] def centroidsFor(spark: SparkSession, dir: String): Array[Array[Float]] =
-    centroidCache.computeIfAbsent(dir, _ => {
-      val c = corpus(spark, dir)
-      Similarity.trainCentroids(c,
-        nCells = Similarity.cellsFor(c.count()), iters = 2)
-    })
-
-  private val retrainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
+  private[graft] val centroidsFor = PerDir { (spark, dir) =>
+    trainIvf(corpus(spark, dir))
+  }
 
   /** Id offset + deterministic drifted increment shared by the retrain
     * query, its generated oracle, and the SimilaritySpec recall pin:
@@ -292,11 +285,13 @@ object SimilarityQueries {
     val drifted =
       Similarity.assignmentPsi(base, inc, centroidsFor(spark, dir)) > 0.2
     if (!drifted) (false, centroidsFor(spark, dir))
-    else (true, retrainCache.computeIfAbsent(dir, _ => {
-      val full = base.unionByName(inc)
-      Similarity.trainCentroids(full,
-        nCells = Similarity.cellsFor(full.count()), iters = 2)
-    }))
+    else (true, retrainedCentroids(spark, dir))
+  }
+
+  /** Centroids retrained on base ∪ drifted increment. */
+  private val retrainedCentroids = PerDir { (spark, dir) =>
+    val base = corpus(spark, dir)
+    trainIvf(base.unionByName(driftedIncrement(base)))
   }
 
   /** ANN INDEX MAINTENANCE UNDER DRIFT (round 14 — r13 verdict #7: the
@@ -413,18 +408,11 @@ object SimilarityQueries {
   val PqK = 5
   val PqShortlist = 64
 
-  /** Per-dir PQ codebook memo (the centroidCache pattern): qAnnPq and
-    * qAnnIvfPq need the SAME deterministic codebook (m=8, ksub=16, 2 Lloyd
-    * iterations over the same corpus), and training is the expensive step
-    * — one training per dir instead of one per query.
-    */
-  private val pqModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Pq.PqModel]()
-
-  private[graft] def pqModelFor(spark: SparkSession, dir: String): graft.ops.Pq.PqModel =
-    pqModelCache.computeIfAbsent(dir, _ =>
-      graft.ops.Pq.train(corpus(spark, dir), col("emb"), m = 8, ksub = 16,
-        iters = 2))
+  /** The PQ codebook of the dir's corpus, shared by qAnnPq and
+    * qAnnIvfPq. */
+  private[graft] val pqModelFor = PerDir { (spark, dir) =>
+    trainPq(corpus(spark, dir), col("emb"))
+  }
 
   /** PQ-compressed ANN: train per-subspace codebooks, encode the corpus to
     * 8-byte codes (32x compression), ADC-shortlist 64 candidates from the
@@ -450,28 +438,21 @@ object SimilarityQueries {
   /** Shortlist width of the PCA-compressed IVF path's full-dim rerank. */
   val PcaShortlist = 32
 
-  /** Per-dir PCA-compressed-IVF memo: the 64→16 projection is the trained
-    * PCA's top axes (pure function of the corpus), and the coarse
-    * quantizer is the SAME deterministic Lloyd as centroidsFor run on the
-    * projected column. The model is (PCA mean, row-major k×d projection,
-    * centroids trained on the projected vectors).
+  /** The PCA-compressed-IVF model: the 64→16 projection is the trained
+    * PCA's top axes, and the coarse quantizer is the same recipe as
+    * centroidsFor run on the projected column. The model is (PCA mean,
+    * row-major k×d projection, centroids trained on the projected
+    * vectors).
     */
-  private val ivfPcaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Double], Array[Double], Array[Array[Float]])]()
-
-  private[graft] def ivfPcaModelFor(spark: SparkSession, dir: String)
-      : (Array[Double], Array[Double], Array[Array[Float]]) =
-    ivfPcaCache.computeIfAbsent(dir, _ => {
-      val c = corpus(spark, dir)
-      val p = graft.ops.Pca.train(c, "emb", dim = 64, k = PcaServeDims)
-      val proj = p.comps.flatten // row-major k×64
-      val reduced = c.select(col("id"),
-        org.apache.spark.sql.graft.VectorColumns
-          .opqRotate(col("emb"), p.mean, proj).as("emb"))
-      val cents = Similarity.trainCentroids(reduced,
-        nCells = Similarity.cellsFor(c.count()), iters = 2)
-      (p.mean, proj, cents)
-    })
+  private[graft] val ivfPcaModelFor = PerDir { (spark, dir) =>
+    val c = corpus(spark, dir)
+    val p = graft.ops.Pca.train(c, "emb", dim = 64, k = PcaServeDims)
+    val proj = p.comps.flatten // row-major k×64
+    val reduced = c.select(col("id"),
+      org.apache.spark.sql.graft.VectorColumns
+        .opqRotate(col("emb"), p.mean, proj).as("emb"))
+    (p.mean, proj, trainIvf(reduced))
+  }
 
   /** PCA-COMPRESSED IVF serving (round 11 — the q_pca_project model as a
     * pipeline stage, the standard dimensionality step before clustering
@@ -508,26 +489,18 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Per-dir OPQ memo: the rotation is a pure function of the corpus
-    * (distributed PCA + deterministic allocation), and the codebook is
-    * the SAME deterministic Lloyd as pqModelFor run on the rotated
-    * column — one (rotation, codebook) pair per dir, shared between the
-    * query and its generated oracle.
+  /** The OPQ model: the rotation (distributed PCA + deterministic
+    * allocation) and the same codebook recipe as pqModelFor run on the
+    * rotated column.
     */
-  private val opqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.Opq.Rotation, graft.ops.Pq.PqModel)]()
-
-  private[graft] def opqModelFor(spark: SparkSession,
-      dir: String): (graft.ops.Opq.Rotation, graft.ops.Pq.PqModel) =
-    opqModelCache.computeIfAbsent(dir, _ => {
-      val c = corpus(spark, dir)
-      val r = graft.ops.Opq.trainRotationNP(c, "emb", dim = 64, m = 8)
-      val rotated = c.select(col("id"),
-        org.apache.spark.sql.graft.VectorColumns
-          .opqRotate(col("emb"), r.mean, r.rot).as("emb"))
-      (r, graft.ops.Pq.train(rotated, col("emb"), m = 8, ksub = 16,
-        iters = 2))
-    })
+  private[graft] val opqModelFor = PerDir { (spark, dir) =>
+    val c = corpus(spark, dir)
+    val r = graft.ops.Opq.trainRotationNP(c, "emb", dim = 64, m = 8)
+    val rotated = c.select(col("id"),
+      org.apache.spark.sql.graft.VectorColumns
+        .opqRotate(col("emb"), r.mean, r.rot).as("emb"))
+    (r, trainPq(rotated, col("emb")))
+  }
 
   /** OPQ-rotated product quantization (round 11 — makes the r10 PCA
     * machinery load-bearing): rotate the space with the trained
@@ -565,8 +538,8 @@ object SimilarityQueries {
   /** The COMPOSED serving index — IVF cells over PQ codes (IVFADC): the
     * production ANN shape at 100 TB, where the coarse cell bounds which
     * rows a query touches and the PQ code bounds what each row costs.
-    * `model` is the per-dir (centroids, codebook) pair — both caches —
-    * so query + oracle see identical constants. Exact-oracled: the generated
+    * `model` is the per-dir (centroids, codebook) pair, so query +
+    * oracle see identical constants. Exact-oracled: the generated
     * SQL merges the IVF assignment/probe CTEs with the PQ
     * encode/LUT/ADC/rerank CTEs ([[ivfpqOracle]]); recall vs the
     * float IVF-flat is pinned in SimilaritySpec.
@@ -587,22 +560,19 @@ object SimilarityQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Per-dir RESIDUAL codebook memo: trained on emb − centroid[cell]
-    * (the same deterministic Lloyd as pqModelFor, different input
-    * column), shared between the query and its generated oracle.
-    */
-  private val pqResModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Pq.PqModel]()
-
+  /** The residual IVF-PQ model: the IVF centroids and a codebook
+    * trained on emb − centroid[cell] (the pqModelFor recipe, different
+    * input column). */
   private[graft] def ivfPqResModelFor(spark: SparkSession,
-      dir: String): (Array[Array[Float]], graft.ops.Pq.PqModel) = {
+      dir: String): (Array[Array[Float]], graft.ops.Pq.PqModel) =
+    (centroidsFor(spark, dir), residualCodebook(spark, dir))
+
+  private val residualCodebook = PerDir { (spark, dir) =>
     val cents = centroidsFor(spark, dir)
-    (cents, pqResModelCache.computeIfAbsent(dir, _ =>
-      graft.ops.Pq.train(
-        corpus(spark, dir).withColumn("__res",
-          org.apache.spark.sql.graft.VectorColumns.ivfResidual(
-            col("emb"), cents.flatten, cents.length)),
-        col("__res"), m = 8, ksub = 16, iters = 2)))
+    trainPq(corpus(spark, dir).withColumn("__res",
+        org.apache.spark.sql.graft.VectorColumns.ivfResidual(
+          col("emb"), cents.flatten, cents.length)),
+      col("__res"))
   }
 
   /** IVFADC with RESIDUAL encoding — the composed index as published

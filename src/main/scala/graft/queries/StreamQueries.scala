@@ -920,7 +920,7 @@ object StreamQueries {
   def qStreamModelIngest(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.Model): DataFrame = {
     import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
+    import graft.sources.Datalake
     import graft.streaming.CorpusStreams
     import graft.ops.Gbt
     val root = Files.createTempDirectory("graft-ingest-score-replay")
@@ -931,7 +931,7 @@ object StreamQueries {
     Datalake.publish(Gbt.modelToDf(spark, m, 0L), modelRoot, "1")
     val (served, _) =
       Gbt.modelFromDf(Datalake.readPublished(spark, modelRoot))
-    val t = Gbt.featurize(Tables.part(spark, dir), dir)
+    val t = Gbt.featurize(spark, dir)
     val feed = root.resolve("feed").toString
     t.repartitionByRange(3, col("pk")).write.parquet(feed)
     val sq = StreamReplay.subSession(spark)
@@ -965,12 +965,12 @@ object StreamQueries {
       m: graft.ops.Gbt.Model): DataFrame = {
     import java.nio.file.Files
     import org.apache.spark.sql.types.DecimalType
-    import graft.sources.{Datalake, Tables}
+    import graft.sources.Datalake
     import graft.streaming.CorpusStreams
     import graft.ops.Gbt
     val root = Files.createTempDirectory("graft-gbtscore-replay")
     StreamReplay.track(root)
-    val t = Gbt.featurize(Tables.part(spark, dir), dir)
+    val t = Gbt.featurize(spark, dir)
     val feed = root.resolve("feed").toString
     t.repartitionByRange(3, col("pk")).write.parquet(feed)
     val sq = StreamReplay.subSession(spark)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QueryDef
+import graft.{PerDir, QueryDef}
 import graft.QueryDef.{fixed, trained}
 import graft.sources.Tables
 import graft.ops.TextAnalysis._
@@ -299,19 +299,14 @@ object TextQueries {
         isRef = col("doc_id") % 10 === 0, tau = 6.0)
       .orderBy(col("doc_id"))
 
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-
-  /** The 64 BPE merges trained on every-5th doc's word counts, memoized
-    * per sfDir — the merges are a pure function of the data. The
+  /** The 64 BPE merges trained on every-5th doc's word counts. The
     * q_bpe_tokenize row hands them to [[qBpeTokenize]] and inlines the
     * same value into the generated DuckDB replay.
     */
-  private[graft] def bpeModelFor(spark: SparkSession,
-      dir: String): Seq[(String, String)] =
-    bpeMemo.computeIfAbsent(dir, _ =>
-      graft.ops.Bpe.trainOnSlice(Tables.documents(spark, dir), col("doc_id"),
-        col("text"), isTrain = col("doc_id") % 5 === 0, nMerges = 64))
+  private[graft] val bpeModelFor = PerDir { (spark, dir) =>
+    graft.ops.Bpe.trainOnSlice(Tables.documents(spark, dir), col("doc_id"),
+      col("text"), isTrain = col("doc_id") % 5 === 0, nMerges = 64)
+  }
 
   /** BPE subword tokenizer: tokenize the whole corpus dictionary-encoded
     * with `merges` (ops.Bpe).

@@ -195,8 +195,7 @@ class Round16Spec extends SparkSpecBase {
     // OLS of y on the quadratic driver p_size, closed form over exact
     // sums (the q_regression discipline) — structurally blind to the
     // parabola, so GBT must be strictly better on its own train split
-    val f = Gbt.featurize(
-        sources.Tables.part(spark, sfDir))
+    val f = Gbt.featurize(spark, sfDir)
       .filter(col("is_train"))
       .selectExpr("CAST(b_size AS DOUBLE) AS xb", "y")
     val a = f.agg(count(lit(1)).cast("double").as("n"),

@@ -122,7 +122,7 @@ class Round17Spec extends SparkSpecBase {
     // resolves the planted per-brand-level term well above fold noise
     val dir = "/root/testdata/sf0.01"
     val tr = Checkpoints.checkpoint(
-      Gbt.featurize(sources.Tables.part(spark, dir))
+      Gbt.featurize(spark, dir)
         .filter(col("is_train")))
     try {
       val m3 = Gbt.train(tr, nFeatures = 3)
@@ -196,7 +196,7 @@ class Round17Spec extends SparkSpecBase {
     import graft.ops.{Checkpoints, Gbt}
     val dir = "/root/testdata/sf0.01"
     val tr = Checkpoints.checkpoint(
-      Gbt.featurize(sources.Tables.part(spark, dir))
+      Gbt.featurize(spark, dir)
         .filter(col("is_train")))
     try {
       val stump = graft.queries.Relational.gbtTrainOrGet(spark, dir)

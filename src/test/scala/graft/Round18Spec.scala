@@ -15,7 +15,7 @@ class Round18Spec extends SparkSpecBase {
   import spark.implicits._
 
   private def featurized(dir: String) =
-    Gbt.featurize(sources.Tables.part(spark, dir)).filter(col("is_train"))
+    Gbt.featurize(spark, dir).filter(col("is_train"))
 
   test("trainDepth(d=1) reproduces the stump trainer bit-for-bit") {
     val tr = graft.ops.Checkpoints.checkpoint(featurized(sfDir))
@@ -82,7 +82,7 @@ class Round18Spec extends SparkSpecBase {
       "the tree serving path must read the store, never a trainer")
     val m = Relational.gbtTreeTrainOrGet(spark, sfDir)
     val insession = Relational.scoreEval(
-      Gbt.featurize(sources.Tables.part(spark, sfDir), sfDir),
+      Gbt.featurize(spark, sfDir),
       Gbt.fhatColTree(m)).collect()
     assert(served.map(_.toString).toSeq === insession.map(_.toString).toSeq,
       "stored tree serve must equal in-session scoring bit-for-bit")
