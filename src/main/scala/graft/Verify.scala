@@ -21,6 +21,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
