@@ -54,7 +54,7 @@ def norm(tbl):
 
 def driver_incompatible(tbl):
     """Output types the driver's hash pipeline cannot process (two rounds of
-    CORRECTNESS_r*.json evidence): DECIMAL never hash-matches even when
+    history/CORRECTNESS_r*.json evidence): DECIMAL never hash-matches even when
     value- and type-equal (DuckDB->pandas float64 vs parquet Decimal
     objects), and struct/binary crash its pandas sort (unhashable dict /
     bytearray). Enforced as a WHITELIST: only the types every green query

@@ -8,7 +8,12 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-gate.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
 
-sbt -batch "compile; Test/compile" >/dev/null
+# sbt prints its [error] lines on stdout: keep the log, show it on failure
+if ! sbt -batch "compile; Test/compile" >"$OUT/compile.log" 2>&1; then
+  echo "GATE FAIL: compile" >&2
+  cat "$OUT/compile.log" >&2
+  exit 1
+fi
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED" | tail -2
 # A query that THROWS at runtime leaves no output dir — check_oracle
 # would then never see it, so a runtime-broken (but compiling) snapshot

@@ -20,9 +20,11 @@ import org.apache.spark.sql.SparkSession
   * distinguish "one good pass among noise" from "stable" — the JSON line
   * therefore also carries per-query MEDIANS (`queries_median`), the box's
   * load average before/after, and pass count, so a reader can judge how
-  * contended the run was without re-running it. Solo-run discipline still
-  * applies (BASELINE.md notes); `nice`/`taskset` pinning must wrap the JVM
-  * from the shell — in-process renice needs privileges this sandbox lacks.
+  * contended the run was without re-running it. Run it solo;
+  * `nice`/`taskset` pinning must wrap the JVM from the shell.
+  *
+  * `SPARK_GRAFT_BENCH_ONLY=q_a,q_b` restricts the run to those rows
+  * ([[SparkEntry.select]]: an unknown name fails the run).
   */
 object Bench {
 
@@ -37,21 +39,6 @@ object Bench {
     else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
-  /** Round-over-round artifacts must stay comparable: warn loudly (stderr,
-    * plus a field in the JSON line) when the contiguous BENCH_r{N}.json
-    * series on disk has holes — the round-6 gap made the r6/r7 comparison
-    * partially unreconstructable (round-7 verdict #4).
-    */
-  private def missingRounds(): Seq[Int] = {
-    val here = new java.io.File(".").listFiles()
-    if (here == null) return Nil
-    val rounds = here.flatMap { f =>
-      "BENCH_r(\\d+)\\.json".r.findFirstMatchIn(f.getName).map(_.group(1).toInt)
-    }.sorted
-    if (rounds.isEmpty) Nil
-    else (rounds.min to rounds.max).filterNot(rounds.contains)
-  }
-
   /** Name prefix for the floor-calibration probes interleaved into each
     * round-robin pass; excluded from `queries` totals, aggregated into the
     * `floor` field instead.
@@ -64,21 +51,11 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = os.getSystemLoadAverage
-    val gaps = missingRounds()
-    if (gaps.nonEmpty)
-      System.err.println(s"BENCH WARNING: missing round artifacts: " +
-        gaps.map(n => f"BENCH_r$n%02d.json").mkString(", ") +
-        " — round-over-round comparison has holes")
+    val base = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(SparkEntry.queries)(n => SparkEntry.frames(SparkEntry.select(n)))
+      .toSeq.sortBy(_._1)
     val spark: SparkSession = GraftSession.get("graft-bench")
     org.apache.spark.sql.graft.JobCounter.install(spark.sparkContext)
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run for local perf
-    // iteration on specific queries. A restricted run writes its summary
-    // to BENCH_SUMMARY_PARTIAL.json (see below) so it can never replace
-    // the full-registry round artifact.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val base = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Untimed warmup at the smallest SF: compiles every plan shape's
     // generated code and initializes shuffle/broadcast/write machinery, so
     // the timed passes below measure steady-state throughput (what a long-
@@ -181,42 +158,16 @@ object Bench {
       f""""min":${if (calibSamples.nonEmpty) calibSamples.min else 0.0}%.4f,""" +
       f""""max":${if (calibSamples.nonEmpty) calibSamples.max else 0.0}%.4f,""" +
       f""""drain_timeouts":$drainTimeouts}"""
+    // missing_artifacts stays in the line, always empty, so readers of the
+    // JSON keep the same keys
     val meta = f"""{"passes":$passes,"load_avg_start":$loadStart%.2f,""" +
       f""""load_avg_end":$loadEnd%.2f,"cpus":${spark.sparkContext.defaultParallelism},""" +
-      floorMeta + "," +
-      s""""missing_artifacts":${gaps.map(n => f""""BENCH_r$n%02d.json"""").mkString("[", ",", "]")}}"""
+      floorMeta + ""","missing_artifacts":[]}"""
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_median":$meds,"queries_jobs":$jobsJson,"queries_floor_adj":$adjs,"total_median":$totalMed%.3f,"total_floor_adj":$totalAdj%.3f,"meta":$meta,"sf":"$sfDir"}""")
-    // The driver's artifact keeps only the LAST ~2,000 stdout chars, so the
-    // full per-query line above gets truncated mid-key (BENCH_r07/r08 both
-    // recorded "parsed": null). The FINAL line is therefore a compact
-    // summary (≤ ~500 chars) that always survives the tail capture:
-    // totals + the worst query vs its BASELINE.md best-ever column, both
-    // raw and floor-adjusted.
-    // update_baseline.py keys on '"queries"' so it still reads the full
-    // line; both lines carry the same totals.
-    val worst = worstVsBaseline(
-      results.map { case (k, v, _, _, _) => k -> v }, "worst_vs_baseline")
-    val worstAdj = worstVsBaseline(
-      results.map { case (k, _, _, _, a) => k -> a }, "worst_vs_baseline_adj",
-      excludeAdditiveFloor = true)
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.length},"sf":"$sfDir","total_min":$total%.3f,"total_median":$totalMed%.3f,"total_floor_adj":$totalAdj%.3f,"floor_sec_per_job":$floor%.4f,"passes":$passes,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f$worst$worstAdj}"""
-    println(summary)
-    // Belt-and-braces for the stdout parse (round-9 verdict #2): the same
-    // summary lands on disk, so even a future harness change that trails
-    // extra stdout after the run leaves a machine-readable artifact.
-    // A RESTRICTED run (SPARK_GRAFT_BENCH_ONLY set) must never overwrite
-    // the round artifact: an n=4 summary replacing the 150-query one makes
-    // every round-over-round total comparison meaningless (r12 ADVICE) —
-    // partial runs land in a clearly-named side file instead.
-    val summaryFile =
-      if (only.isDefined) "BENCH_SUMMARY_PARTIAL.json" else "BENCH_SUMMARY.json"
-    if (only.isDefined)
-      System.err.println("BENCH NOTE: restricted run (SPARK_GRAFT_BENCH_ONLY)" +
-        s" — summary written to $summaryFile, round artifact untouched")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(summaryFile),
-      (summary + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"BENCH WARNING: $summaryFile not written: $e") }
+    // A capture that keeps only the tail of stdout truncates the full line
+    // above mid-key, so the FINAL line is a compact summary (≤ ~500 chars)
+    // with the same totals.
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.length},"sf":"$sfDir","total_min":$total%.3f,"total_median":$totalMed%.3f,"total_floor_adj":$totalAdj%.3f,"floor_sec_per_job":$floor%.4f,"passes":$passes,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f}""")
     spark.stop()
   }
 
@@ -276,79 +227,4 @@ object Bench {
     */
   private val calibFn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
     (s, _) => s.range(1).toDF("calib")
-
-  /** `,"<key>":{...}` for the compact summary line: the registered query
-    * with the highest value/baseline ratio against BASELINE.md's best-ever
-    * column — the per-query regression gate the judge applies, surfaced in
-    * the artifact itself. Called twice: raw mins (`worst_vs_baseline`) and
-    * floor-adjusted (`worst_vs_baseline_adj`). Empty string when BASELINE.md
-    * (or any comparable row) is absent so the bench never fails on a
-    * missing file.
-    */
-  /** Delta (seconds) under which a ≥2× ratio on a sub-second query is the
-    * documented ADDITIVE PER-JOB FLOOR, not a data-path regression: the
-    * r11-adjudicated signature is +0.1–0.2s per job that vanishes on
-    * heavier queries (BASELINE.md floor notes; r13 verdict #8 asked for
-    * the adjudication to be machine-readable instead of re-argued each
-    * round). update_baseline.py stamps the same threshold as `ƒ` tags.
-    */
-  private val FloorDeltaSec = 0.25
-
-  private def worstVsBaseline(mins: Seq[(String, Double)], key: String,
-      excludeAdditiveFloor: Boolean = false): String = try {
-    val path = java.nio.file.Paths.get("BASELINE.md")
-    if (!java.nio.file.Files.exists(path)) "" else {
-    val cell = "([0-9.]+)[†‡*]?".r
-    // explicit UTF-8: the footnote glyphs are multi-byte and the JVM
-    // default charset under sbt is not guaranteed to decode them
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Files
-      .readAllLines(path, java.nio.charset.StandardCharsets.UTF_8)
-      .asScala.iterator
-      .filter(_.startsWith("| q"))
-      .flatMap { l =>
-        val cs = l.stripPrefix("|").split("\\|").map(_.trim)
-        cs.last match {
-          case cell(v) => Some(cs.head.stripPrefix("`").stripSuffix("`") -> v.toDouble)
-          case _ => None
-        }
-      }.toMap
-    val all = mins.flatMap { case (k, v) =>
-      base.get(k).filter(_ > 0).map(b => (k, v, b, v / b)) }
-    // the floor-adjusted ranking drops rows whose regression is additive-
-    // small: a 0.1s query reading 0.3s is the box's per-job floor (the
-    // `ƒ` tag class), and letting it top worst_vs_baseline_adj buries the
-    // real signal every round (r13 verdict #8)
-    val rated =
-      if (excludeAdditiveFloor) all.filterNot {
-        case (_, v, b, r) => r >= 2.0 && v - b <= FloorDeltaSec }
-      else all
-    // name every excluded query, not just a count (r14 review): the
-    // floor class is an adjudication, and an adjudication the artifact
-    // doesn't itemize can't be audited against the ƒ-tagged baseline —
-    // update_baseline.py additionally gates each tag on the PLANDUMP
-    // plan line being unchanged, so a named row here that is NOT ƒ-tagged
-    // there is exactly the plan-changed genuine regression to chase.
-    val excluded =
-      if (excludeAdditiveFloor) {
-        val names = all.filterNot(rated.contains).map(_._1).sorted
-        val arr =
-          if (names.isEmpty) "[]"
-          else names.mkString("[\"", "\",\"", "\"]")
-        s""","floor_excluded":${names.length}""" +
-          s""","floor_excluded_queries":$arr"""
-      } else ""
-    if (rated.isEmpty) ""
-    else {
-      val (k, v, b, r) = rated.maxBy(_._4)
-      f""","$key":{"query":"$k","min":$v%.3f,"baseline":$b%.3f,"ratio":$r%.2f$excluded}"""
-    }
-    }
-  } catch {
-    // the summary line must ALWAYS print — a malformed baseline table
-    // degrades the artifact, never kills the run after 100+ timed queries
-    case e: Throwable =>
-      System.err.println(s"BENCH WARNING: baseline compare skipped: $e")
-      ""
-  }
 }

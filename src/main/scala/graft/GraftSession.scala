@@ -68,4 +68,20 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with each `key -> value` set on the session's conf,
+    * restoring every key on every exit path: its prior value if it had one,
+    * otherwise the key is unset. A session-wide write, so the usual
+    * one-query-at-a-time contract per session applies.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -13,7 +13,7 @@ import graft.ops.{Dedup, Similarity}
   * CANDIDATE pair count (the op with its verification threshold disabled —
   * exactly the join mass the banding admits), the verified pair count, and
   * the production op's wall time. The observed exponent between scale
-  * points (log pair-ratio / log n-ratio) goes into BASELINE.md; ~1 means
+  * points (log pair-ratio / log n-ratio) is printed per family; ~1 means
   * the candidate mass grows with the corpus, ~2 means the banding is NOT
   * containing the join and the df caps / cell counts need tightening.
   *
@@ -246,8 +246,8 @@ object ScalingBench {
     *    fold (state + emission mass, the thing a stream's memory and
     *    sink cost scale with).
     * Wall times are best-of-`passes` and carry the usual multi-action
-    * job-floor caveat (BASELINE.md's timing-regime notes); the exponent
-    * argument rests on the masses, which are deterministic.
+    * job-floor caveat; the exponent argument rests on the masses, which
+    * are deterministic.
     */
   def measureGraphStream(spark: SparkSession, dir: String,
       passes: Int = 2): Seq[String] = {
@@ -325,8 +325,8 @@ object ScalingBench {
     *   3. Salting.saltedJoin ×8, AQE OFF    — the explicit fix for cases
     *      AQE can't touch (its splitting works per shuffle block; a single
     *      mapper-side giant key is still one block sequence).
-    * Emits one JSON line per variant; the observed spread reduction goes
-    * into BASELINE.md as the skew-evidence row.
+    * Emits one JSON line per variant; the spread reduction between them
+    * is the skew evidence. Each variant's confs are scoped to it.
     */
   def skewBench(spark: SparkSession, n: Long = 4000000L,
       keys: Int = 1000, salts: Int = 8): Seq[String] = {
@@ -350,84 +350,67 @@ object ScalingBench {
     // AQE variant to demonstrate the mechanism at all. That asymmetry IS
     // the finding: AQE skew-split needs its thresholds tuned to the
     // workload, salting works at any scale.
-    val aqeThreshKey = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-    val aqeAdvisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prevSkew = spark.conf.get(aqeSkewKey)
-    val prevThresh = spark.conf.getOption(aqeThreshKey)
-    val prevAdvisory = spark.conf.getOption(aqeAdvisoryKey)
-    def run(variant: String, aqeSkew: Boolean)(df: => DataFrame): String = {
-      spark.conf.set(aqeSkewKey, aqeSkew.toString)
-      if (aqeSkew) {
-        spark.conf.set(aqeThreshKey, "4MB")
-        spark.conf.set(aqeAdvisoryKey, "4MB")
-      } else {
-        prevThresh.fold(spark.conf.unset(aqeThreshKey))(
-          spark.conf.set(aqeThreshKey, _))
-        prevAdvisory.fold(spark.conf.unset(aqeAdvisoryKey))(
-          spark.conf.set(aqeAdvisoryKey, _))
-      }
-      // TaskEnd events arrive on the ASYNC listener bus — a save() can
-      // return while its events are still queued, so both the clear and
-      // the read must wait for quiescence or warm-pass stragglers
-      // contaminate the measured buffer / measured tasks go missing.
-      // There is no public drain API; poll until the buffer stops growing.
-      def drained(): Unit = {
-        // require THREE consecutive stable readings: a single 100ms-stable
-        // sample can coincide with a bus-thread stall and declare
-        // quiescence while warm-pass events are still queued
-        var stable = 0
-        var prev = -1L
-        var spins = 0
-        while (stable < 3 && spins < 50) {
-          val cur = durations.size.toLong
-          stable = if (cur == prev) stable + 1 else 0
-          prev = cur
-          Thread.sleep(100)
-          spins += 1
+    val skewOff = Seq(aqeSkewKey -> "false")
+    val skewOn = Seq(aqeSkewKey -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4MB")
+    def run(variant: String, conf: Seq[(String, String)])(
+        df: => DataFrame): String =
+      GraftSession.withConf(spark, conf: _*) {
+        // TaskEnd events arrive on the ASYNC listener bus — a save() can
+        // return while its events are still queued, so both the clear and
+        // the read must wait for quiescence or warm-pass stragglers
+        // contaminate the measured buffer / measured tasks go missing.
+        // There is no public drain API; poll until the buffer stops growing.
+        def drained(): Unit = {
+          // require THREE consecutive stable readings: a single 100ms-stable
+          // sample can coincide with a bus-thread stall and declare
+          // quiescence while warm-pass events are still queued
+          var stable = 0
+          var prev = -1L
+          var spins = 0
+          while (stable < 3 && spins < 50) {
+            val cur = durations.size.toLong
+            stable = if (cur == prev) stable + 1 else 0
+            prev = cur
+            Thread.sleep(100)
+            spins += 1
+          }
+          if (stable < 3)
+            System.err.println(
+              "SKEW WARNING: listener bus not quiescent after 5s — task stats may mix passes")
         }
-        if (stable < 3)
-          System.err.println(
-            "SKEW WARNING: listener bus not quiescent after 5s — task stats may mix passes")
+        // warm pass compiles codegen; measured pass starts with a clean
+        // task-duration buffer
+        df.write.format("noop").mode("overwrite").save()
+        drained()
+        durations.clear()
+        val t0 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
+        drained()
+        val ds = durations.toArray(Array.empty[java.lang.Long])
+          .map(_.longValue).sorted
+        val p50 = if (ds.nonEmpty) ds(ds.length / 2) else 0L
+        val mx = if (ds.nonEmpty) ds.last else 0L
+        val spread = if (p50 > 0) mx.toDouble / p50 else 0.0
+        s"""{"variant":"$variant","n":$n,"hot_share":0.5,"salts":$salts,""" +
+          f""""wall_s":$wall%.2f,"task_p50_ms":$p50,"task_max_ms":$mx,""" +
+          f""""spread":$spread%.1f,"tasks":${ds.length}}"""
       }
-      // warm pass compiles codegen; measured pass starts with a clean
-      // task-duration buffer
-      df.write.format("noop").mode("overwrite").save()
-      drained()
-      durations.clear()
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      drained()
-      val ds = durations.toArray(Array.empty[java.lang.Long])
-        .map(_.longValue).sorted
-      val p50 = if (ds.nonEmpty) ds(ds.length / 2) else 0L
-      val mx = if (ds.nonEmpty) ds.last else 0L
-      val spread = if (p50 > 0) mx.toDouble / p50 else 0.0
-      s"""{"variant":"$variant","n":$n,"hot_share":0.5,"salts":$salts,""" +
-        f""""wall_s":$wall%.2f,"task_p50_ms":$p50,"task_max_ms":$mx,""" +
-        f""""spread":$spread%.1f,"tasks":${ds.length}}"""
-    }
     try {
       // shuffle_hash hint keeps the tiny side from broadcasting — a
       // broadcast join would hide the skew entirely (and IS the first fix
       // when the side fits; this bench models the case where it doesn't)
-      val out = Seq(
-        run("unsalted_noaqe", aqeSkew = false)(
+      Seq(
+        run("unsalted_noaqe", skewOff)(
           fact.join(dim.hint("shuffle_hash"), "key")),
-        run("unsalted_aqe_skew", aqeSkew = true)(
+        run("unsalted_aqe_skew", skewOn)(
           fact.join(dim.hint("shuffle_hash"), "key")),
-        run(s"salted_x$salts", aqeSkew = false)(
+        run(s"salted_x$salts", skewOff)(
           graft.ops.Salting.saltedJoin(fact, dim.hint("shuffle_hash"),
             "key", salts)))
-      out
-    } finally {
-      spark.conf.set(aqeSkewKey, prevSkew)
-      prevThresh.fold(spark.conf.unset(aqeThreshKey))(
-        spark.conf.set(aqeThreshKey, _))
-      prevAdvisory.fold(spark.conf.unset(aqeAdvisoryKey))(
-        spark.conf.set(aqeAdvisoryKey, _))
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   def main(args: Array[String]): Unit = {

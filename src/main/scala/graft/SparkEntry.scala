@@ -102,6 +102,21 @@ object SparkEntry {
       GraphQueries.defs ++ LayoutQueries.defs ++ DatalakeQueries.defs ++
       StreamQueries.defs)
 
+  /** The registry rows named in `names` (a comma list, as the dev mains
+    * take it). An unknown name throws, listing every unknown name: a typo
+    * must not silently shrink the selection to the rows that did match.
+    */
+  def select(names: String): Map[String, QueryDef] = {
+    val wanted = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val all = defs
+    val unknown = wanted.diff(all.keySet)
+    require(wanted.nonEmpty, s"no query names in '$names'")
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
+        "(see SparkEntry.defs)")
+    all.view.filterKeys(wanted).toMap
+  }
+
   /** The rows by name; a name declared twice throws instead of silently
     * keeping one of the two rows. */
   private[graft] def registry(

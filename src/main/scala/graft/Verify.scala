@@ -12,8 +12,11 @@ object Verify {
     // unchanged)
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
-      case Array(s, o, names) => (s, o, Some(names.split(",").toSet))
+      case Array(s, o, names) => (s, o, Some(names))
     }
+    // a typo throws (SparkEntry.select): a silently-empty selection
+    // would write an empty manifest and exit clean with nothing verified
+    val selected = only.fold(SparkEntry.defs)(SparkEntry.select)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -37,19 +40,6 @@ object Verify {
     // manifest, so check_oracle's missing-output check catches the partial
     // snapshot — written after, the same death leaves no manifest and the
     // oracle-keys-only fallback would silently pass over the missing dirs
-    val defs = SparkEntry.defs
-    val selected = only match {
-      case None => defs
-      case Some(names) =>
-        // loud on typos: a silently-empty selection writes an empty
-        // manifest, dumps nothing, and exits clean — the developer
-        // concludes the query verified when nothing ran (review finding)
-        val unknown = names.diff(defs.keySet)
-        require(unknown.isEmpty,
-          s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
-            s"— check SparkEntry.defs")
-        defs.view.filterKeys(names).toMap
-    }
     Files.writeString(Paths.get(s"$outDir/queries.txt"),
       selected.keys.toSeq.sorted.mkString("", "\n", "\n"))
     val failed = scala.collection.mutable.ListBuffer.empty[String]

@@ -59,23 +59,8 @@ object Fixpoint {
     * restoring both on every exit path. See the object scaladoc for why
     * and for the single-threaded-session assumption.
     */
-  def withLoopConf[T](spark: SparkSession, width: Int)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val aqePrior = spark.conf.getOption(aqeKey)
-    val spPrior = spark.conf.getOption(spKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(spKey, width.toString)
-    try body
-    finally {
-      aqePrior match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      spPrior match {
-        case Some(v) => spark.conf.set(spKey, v)
-        case None => spark.conf.unset(spKey)
-      }
-    }
-  }
+  def withLoopConf[T](spark: SparkSession, width: Int)(body: => T): T =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> width.toString)(body)
 }

@@ -16,6 +16,17 @@ class RegistrySpec extends SparkSpecBase {
     assert(SparkEntry.queries.keySet == defs.keySet)
   }
 
+  test("select returns exactly the named rows and throws naming each unknown name") {
+    val picked = SparkEntry.select("q_market_stats, q_bom_rollup")
+    assert(picked.keySet == Set("q_market_stats", "q_bom_rollup"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select("q_market_stats,q_market_statz,q_nope")
+    }
+    assert(e.getMessage.contains("q_market_statz"))
+    assert(e.getMessage.contains("q_nope"))
+    intercept[IllegalArgumentException](SparkEntry.select(" , "))
+  }
+
   test("two rows with one name throw, naming the row") {
     val row = QueryDef.fixed(frame)("SELECT 1")
     val e = intercept[IllegalArgumentException] {
