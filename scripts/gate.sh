@@ -14,7 +14,13 @@ if ! sbt -batch "compile; Test/compile" >"$OUT/compile.log" 2>&1; then
   cat "$OUT/compile.log" >&2
   exit 1
 fi
-sbt -batch test 2>&1 | grep -E "Tests:|FAILED" | tail -2
+# same for the tests: keep the log, and on failure name every failed test
+if ! sbt -batch test >"$OUT/test.log" 2>&1; then
+  echo "GATE FAIL: tests" >&2
+  grep -E "\*\*\* (FAILED|ABORTED) \*\*\*" "$OUT/test.log" >&2 || tail -20 "$OUT/test.log" >&2
+  exit 1
+fi
+grep -E "Tests:" "$OUT/test.log" | tail -1
 # A query that THROWS at runtime leaves no output dir — check_oracle
 # would then never see it, so a runtime-broken (but compiling) snapshot
 # would gate green. Verify records such failures in _failures.txt

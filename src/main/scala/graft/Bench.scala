@@ -168,6 +168,7 @@ object Bench {
     // above mid-key, so the FINAL line is a compact summary (≤ ~500 chars)
     // with the same totals.
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.length},"sf":"$sfDir","total_min":$total%.3f,"total_median":$totalMed%.3f,"total_floor_adj":$totalAdj%.3f,"floor_sec_per_job":$floor%.4f,"passes":$passes,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f}""")
+    graft.streaming.StreamReplay.stopStreams(spark)
     spark.stop()
   }
 

@@ -82,6 +82,7 @@ object Verify {
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.streaming.StreamReplay.stopStreams(spark)
     spark.stop()
   }
 }

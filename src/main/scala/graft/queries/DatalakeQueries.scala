@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -171,30 +169,10 @@ object DatalakeQueries {
       .orderBy(col("event_type"), col("event_date"))
   }
 
-  /** Lake roots awaiting exit-time cleanup: ONE JVM-wide shutdown hook
-    * draining a concurrent queue — per-call hook registration would
-    * accumulate hooks (and captured roots) unboundedly across repeated
-    * bench/verify invocations in one JVM.
-    */
-  private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
-  private lazy val cleanupHookInstalled: Boolean = {
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      var f = tempRoots.poll()
-      while (f != null) { rm(f); f = tempRoots.poll() }
-    }
-    true
-  }
-
-  private[graft] def tempLakeRoot(): String = {
-    val root = Files.createTempDirectory("graft-lake")
-    tempRoots.add(root.toFile)
-    cleanupHookInstalled
-    root.toString
-  }
+  /** A fresh lake root, deleted at JVM exit
+    * ([[graft.streaming.StreamReplay.scratch]]). */
+  private[graft] def tempLakeRoot(): String =
+    graft.streaming.StreamReplay.scratch("graft-lake").toString
 
   /** Driver-gate entry: fresh lake root per run (deterministic output —
     * the watermark always starts empty, so the batch is the full table).

@@ -79,14 +79,23 @@ object JourneyQueries {
       .distinct()
     val w = Window.partitionBy(col("user_id"))
     val grid = ud.withColumn("cohort_day", min(col("day")).over(w))
-    val sizes = grid.filter(col("day") === col("cohort_day"))
-      .groupBy(col("cohort_day"))
-      .agg(count(lit(1)).as("cohort_size"))
-    grid
+    retentionMatrix(grid.select(col("cohort_day"),
       // BIGINT offset: Spark's datediff is INT, DuckDB's is BIGINT — the
       // driver hash is type-sensitive (SURVEY §4), so widen here
-      .groupBy(col("cohort_day"),
-        datediff(col("day"), col("cohort_day")).cast("long").as("day_offset"))
+      datediff(col("day"), col("cohort_day")).cast("long").as("day_offset")))
+  }
+
+  /** The retention matrix over activity cells, one per (user, active
+    * day): n_active counts the cells per (cohort_day, day_offset),
+    * cohort_size the offset-0 cells of the cohort (a user's first active
+    * day is their cohort day). Shared by q_retention_cohort and its
+    * stream twins q_stream_retention and q_stream_recovery. */
+  private[graft] def retentionMatrix(cells: DataFrame): DataFrame = {
+    val sizes = cells.filter(col("day_offset") === 0)
+      .groupBy(col("cohort_day"))
+      .agg(count(lit(1)).as("cohort_size"))
+    cells
+      .groupBy(col("cohort_day"), col("day_offset"))
       .agg(count(lit(1)).as("n_active"))
       .join(broadcast(sizes), "cohort_day")
       .select(col("cohort_day"), col("day_offset"), col("n_active"),

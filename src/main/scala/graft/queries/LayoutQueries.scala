@@ -319,8 +319,7 @@ object LayoutQueries {
   def qOrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Agg.decSum2
     import graft.sources.Datalake
-    val root = java.nio.file.Files.createTempDirectory("graft-orc")
-    graft.streaming.StreamReplay.track(root)
+    val root = graft.streaming.StreamReplay.scratch("graft-orc")
     val p = root.resolve("lineitem_orc").toString
     Datalake.writeOrc(Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
@@ -350,8 +349,7 @@ object LayoutQueries {
   def qAvroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Agg.decSum2
     import graft.sources.AvroIo
-    val root = java.nio.file.Files.createTempDirectory("graft-avro")
-    graft.streaming.StreamReplay.track(root)
+    val root = graft.streaming.StreamReplay.scratch("graft-avro")
     val p = root.resolve("lineitem_avro").toString
     AvroIo.writeAvro(Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),

@@ -261,8 +261,7 @@ object Relational {
         when(col("o_orderpriority").startsWith("1-"),
           array(lit("orders-all"), lit("orders-hot")))
           .otherwise(array(lit("orders-all"))).as("tags"))
-    val root = java.nio.file.Files.createTempDirectory("graft-export")
-    graft.streaming.StreamReplay.track(root)
+    val root = graft.streaming.StreamReplay.scratch("graft-export")
     val p = root.resolve("docs").toString
     Datalake.writeJsonlExport(docs, p)
     val nDocs = spark.read.json(p).count()

@@ -383,18 +383,12 @@ object SimilarityQueries {
     */
   def qStreamIvfIngest(spark: SparkSession, dir: String,
       cents: Array[Array[Float]]): DataFrame = {
-    import java.nio.file.Files
+    import graft.streaming.StreamReplay.{feed, scratch}
     val c = corpus(spark, dir)
     val queries = c.filter(col("id") < 10)
       .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    val root = Files.createTempDirectory("graft-ivf-replay")
-    graft.streaming.StreamReplay.track(root)
-    val feed = root.resolve("feed").toString
-    c.repartitionByRange(2, col("id")).write.parquet(feed)
-    val sq = graft.streaming.StreamReplay.subSession(spark)
-    graft.streaming.IndexStreams.ivfStoreStream(
-        graft.streaming.CorpusStreams.readDocFiles(sq, feed, c.schema,
-          maxFilesPerTrigger = 1),
+    val root = scratch("graft-ivf-replay")
+    graft.streaming.IndexStreams.ivfStoreStream(feed(spark, c, 2, "id"),
         cents, root.resolve("inc").toString, root.resolve("ck").toString)
       .awaitTermination()
     val live = graft.streaming.IndexStreams.liveStore(spark,

@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.QueryDef.{fixed, trained}
-import graft.streaming.{EventStreams, StreamReplay}
+import graft.sources.{Datalake, Tables}
+import graft.streaming.{CorpusStreams, DatalakeStreams, EventStreams,
+  StreamReplay}
+import graft.streaming.StreamReplay.{feed, foreachEpoch, scratch}
 
 /** Driver-checkable rows for the streaming changelog surface: each query
   * runs the REAL Structured Streaming operator (file source → stateful
@@ -31,22 +34,11 @@ object StreamQueries {
     * cohort_size is the count of the users' own offset-0 cells (every
     * user's first active day is their cohort day).
     */
-  def qStreamRetention(spark: SparkSession, dir: String): DataFrame = {
-    val cells = StreamReplay.replayEvents(spark, dir)(
-        EventStreams.retentionActivity(_))
-      .filter(col("user_id") >= 0)
-    val act = cells
-      .groupBy(col("cohort_day"), col("day_offset"))
-      .agg(count(lit(1)).as("n_active"))
-    val sizes = cells.filter(col("day_offset") === 0)
-      .groupBy(col("cohort_day"))
-      .agg(count(lit(1)).as("cohort_size"))
-    act.join(broadcast(sizes), "cohort_day")
-      .select(col("cohort_day"), col("day_offset"), col("n_active"),
-        col("cohort_size"),
-        (col("n_active").cast("double") / col("cohort_size")).as("retention"))
-      .orderBy(col("cohort_day"), col("day_offset"))
-  }
+  def qStreamRetention(spark: SparkSession, dir: String): DataFrame =
+    JourneyQueries.retentionMatrix(
+      StreamReplay.replayEvents(spark, dir)(
+          EventStreams.retentionActivity(_))
+        .filter(col("user_id") >= 0))
 
   /** CRASH RECOVERY as a driver row (round 10): the retention fold run as
     * TWO incarnations against one checkpoint — incarnation 1 commits only
@@ -61,22 +53,11 @@ object StreamQueries {
     * driver. The mid-enqueue kill variant with duplicate-delivery
     * assertions stays pinned in StreamingSpec.
     */
-  def qStreamRecovery(spark: SparkSession, dir: String): DataFrame = {
-    val cells = StreamReplay.replayEventsWithRestart(spark, dir)(
-        EventStreams.retentionActivity(_))
-      .filter(col("user_id") >= 0)
-    val act = cells
-      .groupBy(col("cohort_day"), col("day_offset"))
-      .agg(count(lit(1)).as("n_active"))
-    val sizes = cells.filter(col("day_offset") === 0)
-      .groupBy(col("cohort_day"))
-      .agg(count(lit(1)).as("cohort_size"))
-    act.join(broadcast(sizes), "cohort_day")
-      .select(col("cohort_day"), col("day_offset"), col("n_active"),
-        col("cohort_size"),
-        (col("n_active").cast("double") / col("cohort_size")).as("retention"))
-      .orderBy(col("cohort_day"), col("day_offset"))
-  }
+  def qStreamRecovery(spark: SparkSession, dir: String): DataFrame =
+    JourneyQueries.retentionMatrix(
+      StreamReplay.replayEventsWithRestart(spark, dir)(
+          EventStreams.retentionActivity(_))
+        .filter(col("user_id") >= 0))
 
   /** q_scd2_history from the streamed [[EventStreams.scd2Changelog]]:
     * the stream emits one FINAL row per version (no valid_to — that fact
@@ -270,16 +251,6 @@ object StreamQueries {
       .select(col("click_id"), col("purchase_id"), col("user_id"))
       .orderBy(col("click_id"), col("purchase_id"))
 
-  /** q_heavy_hitters over a STREAM-MAINTAINED Count-Min store: the
-    * documents table is staged as ranged chunks and streamed
-    * (Trigger.AvailableNow, one file per micro-batch) through
-    * [[graft.streaming.CorpusStreams.cmsStream]] — each batch's sketch
-    * lands as an epoch-keyed store increment, exactly the continuous-
-    * ingest shape — then the live sketch (cell-wise sum over epochs,
-    * EXACT by CMS linearity) answers the same top-20 estimate join as the
-    * batch row. No ordering contract is needed at all: CMS folding is
-    * commutative, so this row's sealing argument is simply linearity.
-    */
   /** CDC APPLY STREAM as a driver row (round 14): q_merge_publish's
     * delta arrives CHUNKED as a file stream and every micro-batch lands
     * as one committed MERGE (`DatalakeStreams.mergeStream` →
@@ -291,11 +262,7 @@ object StreamQueries {
     * (mergeStream scaladoc), not from sink overwrite.
     */
   def qStreamMerge(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.{CorpusStreams, DatalakeStreams}
-    val root = Files.createTempDirectory("graft-smerge-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-smerge-replay")
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
@@ -307,12 +274,7 @@ object StreamQueries {
         lit("MERGED").as("o_orderpriority"),
         when(col("o_orderkey") % 10 === 0, lit("delete"))
           .otherwise(lit("upsert")).as("d_op"))
-    val feed = root.resolve("feed").toString
-    delta.repartitionByRange(2, col("o_orderkey")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    DatalakeStreams.mergeStream(
-      CorpusStreams.readDocFiles(sq, feed, delta.schema,
-        maxFilesPerTrigger = 1),
+    DatalakeStreams.mergeStream(feed(spark, delta, 2, "o_orderkey"),
       table, Seq("o_orderkey"),
       deleteWhen = Some(col("d_op") === "delete"),
       root.resolve("ck").toString).awaitTermination()
@@ -333,40 +295,34 @@ object StreamQueries {
     * per-row (chunking commutes with the split).
     */
   def qStreamQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.Tables
-    import graft.streaming.CorpusStreams
-    val root = Files.createTempDirectory("graft-quar-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-quar-replay")
     val o = Tables.orders(spark, dir).select(col("o_orderkey"),
       col("o_orderstatus"), col("o_totalprice"), col("o_custkey"),
       col("o_orderdate"))
-    val feed = root.resolve("feed").toString
-    o.repartitionByRange(2, col("o_orderkey")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
     val validDir = root.resolve("valid").toString
     val rejectDir = root.resolve("rejects").toString
-    CorpusStreams.quarantineStream(
-      CorpusStreams.readDocFiles(sq, feed, o.schema, maxFilesPerTrigger = 1),
+    CorpusStreams.quarantineStream(feed(spark, o, 2, "o_orderkey"),
       Relational.orderValidationRules, validDir, rejectDir,
       root.resolve("ck").toString).awaitTermination()
     Relational.quarantineReport(
       spark.read.parquet(validDir), spark.read.parquet(rejectDir))
   }
 
+  /** q_heavy_hitters over a STREAM-MAINTAINED Count-Min store: the
+    * documents table is staged as ranged chunks and streamed
+    * (Trigger.AvailableNow, one file per micro-batch) through
+    * [[graft.streaming.CorpusStreams.cmsStream]] — each batch's sketch
+    * lands as an epoch-keyed store increment, exactly the continuous-
+    * ingest shape — then the live sketch (cell-wise sum over epochs,
+    * EXACT by CMS linearity) answers the same top-20 estimate join as the
+    * batch row. No ordering contract is needed at all: CMS folding is
+    * commutative, so this row's sealing argument is simply linearity.
+    */
   def qStreamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.Tables
-    import graft.streaming.CorpusStreams
-    val root = Files.createTempDirectory("graft-cms-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-cms-replay")
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val feed = root.resolve("feed").toString
-    docs.repartitionByRange(2, col("doc_id")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    val stream = CorpusStreams.readDocFiles(sq, feed, docs.schema,
-      maxFilesPerTrigger = 1)
-    CorpusStreams.cmsStream(stream, root.resolve("store").toString,
+    CorpusStreams.cmsStream(feed(spark, docs, 2, "doc_id"),
+      root.resolve("store").toString,
       root.resolve("ck").toString, width = 1024).awaitTermination()
     val cms = CorpusStreams.cmsRead(spark, root.resolve("store").toString)
     // exact side: the same one-scan count table as the batch row
@@ -393,30 +349,18 @@ object StreamQueries {
     * or snapping. Oracle = q_drift_psi's verbatim.
     */
   def qStreamDrift(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.CorpusStreams
-    val root = Files.createTempDirectory("graft-drift-replay")
-    StreamReplay.track(root)
-    val e = Tables.events(spark, dir)
-    val feed = root.resolve("feed").toString
-    e.repartitionByRange(2, col("ts"), col("event_id")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    val stream = CorpusStreams.readDocFiles(sq, feed, e.schema,
-      maxFilesPerTrigger = 1)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", root.resolve("ck").toString)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        Datalake.writeParquet(
-          EventQueries.driftBinned(batch)
-            .groupBy(col("event_type"), col("bin"))
-            .agg(count(when(col("cohort") === 0L, 1)).as("n0"),
-              count(when(col("cohort") === 1L, 1)).as("n1")),
-          s"${root.resolve("store")}/epoch=$epoch")
-      }
-      .start().awaitTermination()
-    val folded = spark.read.parquet(root.resolve("store").toString)
+    val root = scratch("graft-drift-replay")
+    val store = root.resolve("store").toString
+    foreachEpoch(feed(spark, Tables.events(spark, dir), 2, "ts", "event_id"),
+        root.resolve("ck").toString) { (batch, epoch) =>
+      Datalake.writeParquet(
+        EventQueries.driftBinned(batch)
+          .groupBy(col("event_type"), col("bin"))
+          .agg(count(when(col("cohort") === 0L, 1)).as("n0"),
+            count(when(col("cohort") === 1L, 1)).as("n1")),
+        s"$store/epoch=$epoch")
+    }.awaitTermination()
+    val folded = spark.read.parquet(store)
       .groupBy(col("event_type"), col("bin"))
       .agg(sum(col("n0")).as("n0"), sum(col("n1")).as("n1"))
     EventQueries.driftPsiFromCounts(folded)
@@ -444,29 +388,18 @@ object StreamQueries {
     * "distinct users per type, continuously" plan.
     */
   def qStreamHll(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.CorpusStreams
-    val root = Files.createTempDirectory("graft-hll-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-hll-replay")
+    val store = root.resolve("store").toString
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val feed = root.resolve("feed").toString
-    e.repartitionByRange(2, col("ts"), col("event_id")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    val stream = CorpusStreams.readDocFiles(sq, feed, e.schema,
-      maxFilesPerTrigger = 1)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", root.resolve("ck").toString)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        Datalake.writeParquet(
-          graft.ops.Sketches.hllRegisters(batch, col("event_type"),
-            col("user_id")),
-          s"${root.resolve("store")}/epoch=$epoch")
-      }
-      .start().awaitTermination()
-    val folded = spark.read.parquet(root.resolve("store").toString)
+    foreachEpoch(feed(spark, e, 2, "ts", "event_id"),
+        root.resolve("ck").toString) { (batch, epoch) =>
+      Datalake.writeParquet(
+        graft.ops.Sketches.hllRegisters(batch, col("event_type"),
+          col("user_id")),
+        s"$store/epoch=$epoch")
+    }.awaitTermination()
+    val folded = spark.read.parquet(store)
       .groupBy(col("g"), col("bucket"))
       .agg(max(col("rho")).as("rho"))
     val base = Tables.events(spark, dir).groupBy(col("event_type"))
@@ -498,31 +431,20 @@ object StreamQueries {
     * gate consumes a firehose.
     */
   def qStreamCusum(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.types.DecimalType
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.CorpusStreams
-    val root = Files.createTempDirectory("graft-cusum-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-cusum-replay")
+    val store = root.resolve("store").toString
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val feed = root.resolve("feed").toString
-    e.repartitionByRange(2, col("ts"), col("event_id")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    val stream = CorpusStreams.readDocFiles(sq, feed, e.schema,
-      maxFilesPerTrigger = 1)
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", root.resolve("ck").toString)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        Datalake.writeParquet(
-          batch.groupBy(col("event_type"),
-              date_trunc("day", col("ts")).as("day"))
-            .agg(sum(col("value").cast(DecimalType(18, 2))).as("v")),
-          s"${root.resolve("store")}/epoch=$epoch")
-      }
-      .start().awaitTermination()
-    val folded = spark.read.parquet(root.resolve("store").toString)
+    foreachEpoch(feed(spark, e, 2, "ts", "event_id"),
+        root.resolve("ck").toString) { (batch, epoch) =>
+      Datalake.writeParquet(
+        batch.groupBy(col("event_type"),
+            date_trunc("day", col("ts")).as("day"))
+          .agg(sum(col("value").cast(DecimalType(18, 2))).as("v")),
+        s"$store/epoch=$epoch")
+    }.awaitTermination()
+    val folded = spark.read.parquet(store)
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("v")).cast(DecimalType(18, 2)).as("v"))
     EventQueries.cusumFromDaily(folded)
@@ -585,27 +507,18 @@ object StreamQueries {
     * status. No ordering contract, no watermark: zero streaming state.
     */
   def qStreamDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Dedup
-    import graft.sources.Tables
-    import graft.streaming.CorpusStreams
     val docs = Tables.documents(spark, dir)
     val (hist, todayAll) = SimilarityQueries.daySplit(docs, "doc_id")
     val today = todayAll.select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("graft-dedup-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-dedup-replay")
     // "yesterday's" job — the batch row's store builder verbatim
     val exactPath = root.resolve("exact_fp").toString
     val bandsPath = root.resolve("bands").toString
     SimilarityQueries.writeDedupHistoryStore(hist, exactPath, bandsPath)
     // today's docs arrive as a 2-chunk file stream
-    val feed = root.resolve("feed").toString
-    today.repartitionByRange(2, col("doc_id")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
     val resDir = root.resolve("res").toString
-    CorpusStreams.incrementalDedupStream(
-        CorpusStreams.readDocFiles(sq, feed, today.schema,
-          maxFilesPerTrigger = 1),
+    CorpusStreams.incrementalDedupStream(feed(spark, today, 2, "doc_id"),
         spark.read.parquet(exactPath), spark.read.parquet(bandsPath),
         root.resolve("inc").toString, resDir,
         root.resolve("ck").toString)
@@ -629,6 +542,23 @@ object StreamQueries {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** The raw JSONL feed of q_stream_datalake and q_stream_publish: the
+    * events table written as three fetch drops under `root/raw`, read
+    * back as a raw-fetch stream on a sub-session, one drop per trigger.
+    */
+  private def rawFetchFeed(spark: SparkSession, dir: String,
+      root: java.nio.file.Path): DataFrame = {
+    val bulkDir = root.resolve("raw").toString
+    Datalake.writeJsonl(
+      Tables.events(spark, dir)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"), unix_micros(col("ts")).as("ts_us"))
+        .repartition(3),
+      bulkDir)
+    DatalakeStreams.readRawStream(StreamReplay.subSession(spark), bulkDir,
+      maxFilesPerTrigger = 1)
+  }
+
   /** The reference's COMPOSED DAG as a micro-batch stream, driver-checked
     * (r9): the raw JSONL feed is staged as three fetch drops and drained
     * through [[graft.streaming.DatalakeStreams.runBackfill]] — each
@@ -640,22 +570,9 @@ object StreamQueries {
     * exact), so q_datalake_pipeline's oracle applies verbatim.
     */
   def qStreamDatalake(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.Tables
-    import graft.streaming.DatalakeStreams
-    val root = Files.createTempDirectory("graft-lake-replay")
-    StreamReplay.track(root)
-    val bulkDir = root.resolve("raw").toString
-    graft.sources.Datalake.writeJsonl(
-      Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-        .repartition(3),
-      bulkDir)
-    val sq = StreamReplay.subSession(spark)
+    val root = scratch("graft-lake-replay")
     val usagePath = root.resolve("usage").toString
-    DatalakeStreams.runBackfill(
-        DatalakeStreams.readRawStream(sq, bulkDir, maxFilesPerTrigger = 1),
+    DatalakeStreams.runBackfill(rawFetchFeed(spark, dir, root),
         root.resolve("fmt").toString, usagePath,
         root.resolve("ck").toString)
       .awaitTermination()
@@ -676,22 +593,9 @@ object StreamQueries {
     * time-travelable version per micro-batch).
     */
   def qStreamPublish(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.DatalakeStreams
-    val root = Files.createTempDirectory("graft-pub-replay")
-    StreamReplay.track(root)
-    val bulkDir = root.resolve("raw").toString
-    Datalake.writeJsonl(
-      Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-        .repartition(3),
-      bulkDir)
-    val sq = StreamReplay.subSession(spark)
+    val root = scratch("graft-pub-replay")
     val tableRoot = root.resolve("usage_table").toString
-    DatalakeStreams.runPublishingBackfill(
-        DatalakeStreams.readRawStream(sq, bulkDir, maxFilesPerTrigger = 1),
+    DatalakeStreams.runPublishingBackfill(rawFetchFeed(spark, dir, root),
         root.resolve("fmt").toString, tableRoot,
         root.resolve("ck").toString)
       .awaitTermination()
@@ -714,24 +618,17 @@ object StreamQueries {
     * recursive CTE verbatim.
     */
   def qStreamClusters(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.streaming.{ClusterStreams, CorpusStreams}
     val c = SimilarityQueries.corpus(spark, dir)
     val (hist, today) = SimilarityQueries.daySplit(c, "id")
-    val root = Files.createTempDirectory("graft-cluster-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-cluster-replay")
     // "yesterday's" stores — the batch row's store builder verbatim
     val labelsPath = root.resolve("labels").toString
     val bucketsPath = root.resolve("buckets").toString
     SimilarityQueries.writeClusterHistoryStore(hist, labelsPath, bucketsPath)
     // today's vectors as a 2-chunk stream
-    val feed = root.resolve("feed").toString
-    today.repartitionByRange(2, col("id")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
     val labelsDir = root.resolve("labels_inc").toString
-    ClusterStreams.incrementalClusterStream(
-        CorpusStreams.readDocFiles(sq, feed, today.schema,
-          maxFilesPerTrigger = 1),
+    graft.streaming.ClusterStreams.incrementalClusterStream(
+        feed(spark, today, 2, "id"),
         spark.read.parquet(labelsPath), spark.read.parquet(bucketsPath),
         root.resolve("buckets_inc").toString, labelsDir,
         root.resolve("ck").toString)
@@ -778,6 +675,9 @@ object StreamQueries {
     * record, or a wrong predecessor resolution all change the row mass
     * and hash-fail.
     */
+  def qStreamChangeFeed(spark: SparkSession, dir: String): DataFrame =
+    streamedChangeFeed(spark, dir, deleteBetween = false)
+
   /** DELETE COMMITS THROUGH THE LAKE STREAM (round 15 — the gap
     * changeFeedStream's first cut skipped loudly, now closed): the
     * source chain is epoch-publish e1 → a DELETION-VECTOR commit
@@ -789,28 +689,33 @@ object StreamQueries {
     * readToken) would both emit wrong deletes and corrupt the next
     * diff's preimages.
     */
-  def qStreamCdcDelete(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.DatalakeStreams
-    val root = Files.createTempDirectory("graft-scdd-replay")
-    StreamReplay.track(root)
+  def qStreamCdcDelete(spark: SparkSession, dir: String): DataFrame =
+    streamedChangeFeed(spark, dir, deleteBetween = true)
+
+  /** The body of q_stream_change_feed and q_stream_cdc_delete: epoch
+    * publish e1, then (when `deleteBetween`) a deletion-vector DELETE,
+    * then epoch publish e2, all streamed out of the table's commit log
+    * and read back as the sink's merged CDC log. */
+  private def streamedChangeFeed(spark: SparkSession, dir: String,
+      deleteBetween: Boolean): DataFrame = {
+    val root = scratch("graft-cdf-replay")
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"))
     val table = root.resolve("table").toString
     Datalake.publishEpochCas(o.filter(col("o_orderkey") % 7 =!= 0),
       table, "1")
-    Datalake.deleteWhere(spark, table, col("o_orderkey") % 9 === 0)
+    if (deleteBetween)
+      Datalake.deleteWhere(spark, table, col("o_orderkey") % 9 === 0)
     Datalake.publishEpochCas(
       o.filter(col("o_orderkey") % 5 =!= 0)
         .select(col("o_orderkey"),
           when(col("o_orderkey") % 3 === 0, col("o_totalprice") + lit(5.0))
             .otherwise(col("o_totalprice")).as("o_totalprice")),
       table, "2")
-    val sq = StreamReplay.subSession(spark)
     val sink = root.resolve("cdc_sink").toString
-    DatalakeStreams.changeFeedStream(sq, table, Seq("o_orderkey"), sink,
-      root.resolve("ck").toString).awaitTermination()
+    DatalakeStreams.changeFeedStream(StreamReplay.subSession(spark), table,
+      Seq("o_orderkey"), sink, root.resolve("ck").toString)
+      .awaitTermination()
     Datalake.readVersionsMerged(spark, sink,
         Datalake.listVersions(spark, sink))
       .select(col("o_orderkey"), col("o_totalprice"),
@@ -830,11 +735,7 @@ object StreamQueries {
     * change the row mass.
     */
   def qTableReplicate(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.DatalakeStreams
-    val root = Files.createTempDirectory("graft-repl-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-repl-replay")
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"))
     val src = root.resolve("src").toString
@@ -845,58 +746,15 @@ object StreamQueries {
       .select(col("o_orderkey"),
         (col("o_totalprice") + lit(10.0)).as("o_totalprice"))
     Datalake.mergeTransact(spark, src, delta, Seq("o_orderkey"))
-    val sq = StreamReplay.subSession(spark)
     val rep = root.resolve("replica").toString
-    DatalakeStreams.replicateStream(sq, src, Seq("o_orderkey"), rep,
-      root.resolve("ck").toString).awaitTermination()
+    DatalakeStreams.replicateStream(StreamReplay.subSession(spark), src,
+      Seq("o_orderkey"), rep, root.resolve("ck").toString)
+      .awaitTermination()
     val nVersions = Datalake.listVersions(spark, rep).length.toLong
     Datalake.readPublished(spark, rep)
       .withColumn("n_replica_versions", lit(nVersions))
   }
 
-  def qStreamChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.{Datalake, Tables}
-    import graft.streaming.DatalakeStreams
-    val root = Files.createTempDirectory("graft-scdf-replay")
-    StreamReplay.track(root)
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_totalprice"))
-    val table = root.resolve("table").toString
-    Datalake.publishEpochCas(o.filter(col("o_orderkey") % 7 =!= 0),
-      table, "1")
-    Datalake.publishEpochCas(
-      o.filter(col("o_orderkey") % 5 =!= 0)
-        .select(col("o_orderkey"),
-          when(col("o_orderkey") % 3 === 0, col("o_totalprice") + lit(5.0))
-            .otherwise(col("o_totalprice")).as("o_totalprice")),
-      table, "2")
-    val sq = StreamReplay.subSession(spark)
-    val sink = root.resolve("cdc_sink").toString
-    DatalakeStreams.changeFeedStream(sq, table, Seq("o_orderkey"), sink,
-      root.resolve("ck").toString).awaitTermination()
-    Datalake.readVersionsMerged(spark, sink,
-        Datalake.listVersions(spark, sink))
-      .select(col("o_orderkey"), col("o_totalprice"),
-        col("_change_type"), col("_from_version"), col("_to_version"))
-  }
-
-  /** STREAMING MODEL SCORING (round 16 — the serving twin of
-    * [[Relational.qGbtRegression]], extending the stream==batch family
-    * onto the ML surface): the featurized table arrives in file-chunk
-    * micro-batches; each batch scores rows with the SAME inlined
-    * integer-cents GBT model and lands its per-split exact partial
-    * moments (n, Σy, Σy², Σ(y−ŷ)²) as an epoch-keyed store increment
-    * (overwrite-on-replay idempotent — the CMS/HLL-store pattern). The
-    * live fold is a per-split SUM over increments — EXACT by decimal
-    * linearity, no ordering contract, zero streaming state — and the
-    * closed-form RMSE/R² tail is the batch row's code, so stream and
-    * batch cannot disagree: the oracle is q_gbt_regression's VERBATIM.
-    *
-    * Scale: per-batch work is one scan + a 2-group aggregate; the
-    * store grows one 2-row parquet per epoch and compacts by the same
-    * sum — the shape of a continuous model-quality monitor.
-    */
   /** SCORE-ON-INGEST (round 17 — the reference's "Ingest Pipeline"
     * integration, ML_ROADMAP.md Phase 3 "Méthode Industrielle": the
     * stored model is attached to the ingest path so documents land WITH
@@ -919,37 +777,24 @@ object StreamQueries {
     */
   def qStreamModelIngest(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.Model): DataFrame = {
-    import java.nio.file.Files
-    import graft.sources.Datalake
-    import graft.streaming.CorpusStreams
     import graft.ops.Gbt
-    val root = Files.createTempDirectory("graft-ingest-score-replay")
-    StreamReplay.track(root)
+    val root = scratch("graft-ingest-score-replay")
     // publish the registry artifact (the q_model_serve lifecycle's
     // serving half: the ingest job is a pure CONSUMER of the store)
     val modelRoot = root.resolve("model_store").toString
     Datalake.publish(Gbt.modelToDf(spark, m, 0L), modelRoot, "1")
     val (served, _) =
       Gbt.modelFromDf(Datalake.readPublished(spark, modelRoot))
-    val t = Gbt.featurize(spark, dir)
-    val feed = root.resolve("feed").toString
-    t.repartitionByRange(3, col("pk")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    val stream = CorpusStreams.readDocFiles(sq, feed, t.schema,
-      maxFilesPerTrigger = 1)
     val fmt = root.resolve("fmt").toString
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", root.resolve("ck").toString)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        Datalake.writeParquet(
-          batch.select(col("pk"),
-            when(col("is_train"), lit("train")).otherwise(lit("test"))
-              .as("split"),
-            col("y"), Gbt.fhatCol(served).as("pred")),
-          s"$fmt/epoch=$epoch")
-      }
-      .start().awaitTermination()
+    foreachEpoch(feed(spark, Gbt.featurize(spark, dir), 3, "pk"),
+        root.resolve("ck").toString) { (batch, epoch) =>
+      Datalake.writeParquet(
+        batch.select(col("pk"),
+          when(col("is_train"), lit("train")).otherwise(lit("test"))
+            .as("split"),
+          col("y"), Gbt.fhatCol(served).as("pred")),
+        s"$fmt/epoch=$epoch")
+    }.awaitTermination()
     val landed = spark.read.parquet(fmt)
     val nEpochs = landed.select(col("epoch")).distinct().count()
     landed.groupBy(col("split"))
@@ -961,41 +806,44 @@ object StreamQueries {
       .orderBy(col("split"))
   }
 
+  /** STREAMING MODEL SCORING (round 16 — the serving twin of
+    * [[Relational.qGbtRegression]], extending the stream==batch family
+    * onto the ML surface): the featurized table arrives in file-chunk
+    * micro-batches; each batch scores rows with the SAME inlined
+    * integer-cents GBT model and lands its per-split exact partial
+    * moments (n, Σy, Σy², Σ(y−ŷ)²) as an epoch-keyed store increment
+    * (overwrite-on-replay idempotent — the CMS/HLL-store pattern). The
+    * live fold is a per-split SUM over increments — EXACT by decimal
+    * linearity, no ordering contract, zero streaming state — and the
+    * closed-form RMSE/R² tail is the batch row's code, so stream and
+    * batch cannot disagree: the oracle is q_gbt_regression's VERBATIM.
+    *
+    * Scale: per-batch work is one scan + a 2-group aggregate; the
+    * store grows one 2-row parquet per epoch and compacts by the same
+    * sum — the shape of a continuous model-quality monitor.
+    */
   def qStreamGbtScore(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.Model): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.types.DecimalType
-    import graft.sources.Datalake
-    import graft.streaming.CorpusStreams
     import graft.ops.Gbt
-    val root = Files.createTempDirectory("graft-gbtscore-replay")
-    StreamReplay.track(root)
-    val t = Gbt.featurize(spark, dir)
-    val feed = root.resolve("feed").toString
-    t.repartitionByRange(3, col("pk")).write.parquet(feed)
-    val sq = StreamReplay.subSession(spark)
-    val stream = CorpusStreams.readDocFiles(sq, feed, t.schema,
-      maxFilesPerTrigger = 1)
+    val root = scratch("graft-gbtscore-replay")
     val store = root.resolve("store").toString
-    stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", root.resolve("ck").toString)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val scored = batch.select(
-          when(col("is_train"), lit("train")).otherwise(lit("test"))
-            .as("split"),
-          col("y"), Gbt.fhatCol(m).as("fhat"))
-        Datalake.writeParquet(
-          scored.groupBy(col("split")).agg(
-            count(lit(1)).as("n"),
-            sum(col("y")).as("sy_e"),
-            sum((col("y") * col("y")).cast(DecimalType(25, 0)))
-              .as("syy_e"),
-            sum(((col("y") - col("fhat")) * (col("y") - col("fhat")))
-              .cast(DecimalType(25, 0))).as("sse_e")),
-          s"$store/epoch=$epoch")
-      }
-      .start().awaitTermination()
+    foreachEpoch(feed(spark, Gbt.featurize(spark, dir), 3, "pk"),
+        root.resolve("ck").toString) { (batch, epoch) =>
+      val scored = batch.select(
+        when(col("is_train"), lit("train")).otherwise(lit("test"))
+          .as("split"),
+        col("y"), Gbt.fhatCol(m).as("fhat"))
+      Datalake.writeParquet(
+        scored.groupBy(col("split")).agg(
+          count(lit(1)).as("n"),
+          sum(col("y")).as("sy_e"),
+          sum((col("y") * col("y")).cast(DecimalType(25, 0)))
+            .as("syy_e"),
+          sum(((col("y") - col("fhat")) * (col("y") - col("fhat")))
+            .cast(DecimalType(25, 0))).as("sse_e")),
+        s"$store/epoch=$epoch")
+    }.awaitTermination()
     val folded = spark.read.parquet(store)
       .groupBy(col("split"))
       .agg(sum(col("n")).as("n"), sum(col("sy_e")).as("sy_e"),

@@ -118,16 +118,7 @@ object ClusterStreams {
     */
   def incrementalClusterStream(vecs: DataFrame, baseLabels: DataFrame,
       baseBuckets: DataFrame, bucketsIncDir: String, labelsDir: String,
-      checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(batch, epoch, baseLabels, baseBuckets, bucketsIncDir,
-          labelsDir)
-      }
-      .start()
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    StreamReplay.foreachEpoch(vecs, checkpoint)(
+      foldEpoch(_, _, baseLabels, baseBuckets, bucketsIncDir, labelsDir))
 }

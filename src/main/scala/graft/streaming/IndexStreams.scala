@@ -47,17 +47,10 @@ object IndexStreams {
     * quantizer (train offline via Similarity.trainCentroids).
     */
   def ivfStoreStream(vecs: DataFrame, cents: Array[Array[Float]],
-      storeIncDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      storeIncDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(batch, epoch, cents, storeIncDir)
-      }
-      .start()
+    StreamReplay.foreachEpoch(vecs, checkpoint)(
+      foldEpoch(_, _, cents, storeIncDir))
 
   /** The live serving store: base ∪ every landed increment. Readers call
     * this per serve; a periodic compaction folds increments into a new

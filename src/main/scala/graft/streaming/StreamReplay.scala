@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.sources.Tables
 import graft.streaming.EventStreams.Event
@@ -47,15 +48,23 @@ import graft.streaming.EventStreams.Event
   */
 object StreamReplay {
 
-  // The returned DataFrame reads the staged sink LAZILY, so the temp tree
-  // must outlive this call — repeated invocations in one JVM (bench passes,
-  // the spec suite) would otherwise accumulate feeds forever. One shutdown
-  // hook reaps every root this JVM created.
+  // Every temp tree this JVM created. Frames returned by the rows read
+  // their scratch LAZILY, so a tree must outlive the call that made it;
+  // repeated invocations in one JVM (bench passes, the spec suite) would
+  // otherwise accumulate trees forever. One shutdown hook reaps them all.
   private val roots = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
-  /** Register a replay temp tree for deletion at JVM exit (shared by the
-    * other replay-style queries, e.g. the CMS store replay). */
+  /** Register a temp tree for deletion at JVM exit. */
   def track(root: Path): Unit = { reaper; roots.add(root) }
+
+  /** The one way the engine makes a temp root: a fresh directory named
+    * `prefix…` under the JVM temp dir, deleted by the one shutdown hook at
+    * exit (lake tables, replay sinks and checkpoints, staged feeds). */
+  def scratch(prefix: String): Path = {
+    val root = Files.createTempDirectory(prefix)
+    track(root)
+    root
+  }
 
   // Every streaming sub-session this JVM created. StreamingQueryManager
   // is PER-SESSION state (SparkSession.streams = its SessionState's
@@ -80,10 +89,21 @@ object StreamReplay {
   /** Active StreamingQueries across the root session AND every
     * registered sub-session — the set a leak check must actually look
     * at. */
-  def activeStreamsAnywhere(root: SparkSession)
-      : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+  def activeStreamsAnywhere(root: SparkSession): Seq[StreamingQuery] = {
     import scala.jdk.CollectionConverters._
     (root +: subSessions.asScala.toSeq).flatMap(_.streams.active).distinct
+  }
+
+  /** Shutdown step before `spark.stop()`: stop every active stream, then
+    * the state-store maintenance task. A stateful stream row leaves that
+    * task scheduled; left running, it races `spark.stop()` and logs
+    * "SparkEnv not active, cannot do maintenance on StateStores" with a
+    * stack trace at exit. */
+  def stopStreams(root: SparkSession): Unit = {
+    activeStreamsAnywhere(root).foreach { q =>
+      try q.stop() catch { case _: Exception => () }
+    }
+    StateStore.stop()
   }
 
   private lazy val reaper: Unit =
@@ -98,6 +118,52 @@ object StreamReplay {
         } catch { case _: Exception => () }
       }
     }))
+
+  /** The one staging rule of every replayed feed: `df` range-partitioned
+    * on `keys` into `files` parquet part files under `dir`. Returns the
+    * part files in key order (part-00000 holds the lowest keys). */
+  private def stage(df: DataFrame, dir: Path, files: Int,
+      keys: Seq[String]): Seq[Path] = {
+    df.repartitionByRange(files, keys.map(col): _*).write.parquet(dir.toString)
+    listParts(dir)
+  }
+
+  /** Step the modtimes of `files` 2 s apart, in the given order, ending
+    * in the past: the file source drains by (modtime, path), so the
+    * files drain in this order on every run. */
+  private def stepModtimes(files: Seq[Path]): Unit = {
+    val base = (System.currentTimeMillis() / 2000L) * 2000L - 7200000L
+    files.zipWithIndex.foreach { case (p, i) =>
+      p.toFile.setLastModified(base + i * 2000L)
+    }
+  }
+
+  /** `df` replayed as a file stream: staged as `files` range-partitioned
+    * chunks on `keys` whose modtimes step in key order, read back on a
+    * registered [[subSession]] one file per trigger. So the feed drains in
+    * exactly one data micro-batch per non-empty chunk, lowest keys first.
+    */
+  def feed(spark: SparkSession, df: DataFrame, files: Int,
+      keys: String*): DataFrame = {
+    val dir = scratch("graft-feed").resolve("feed")
+    stepModtimes(stage(df, dir, files, keys))
+    subSession(spark).readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir.toString)
+  }
+
+  /** The one micro-batch loop: drain `stream` to the end of what is
+    * available now (Trigger.AvailableNow), checkpointed at `checkpoint`,
+    * running `body(batch, epoch)` once per micro-batch. A body that
+    * writes only under its own `epoch=` dir overwrites that dir when a
+    * restart replays the epoch, so a replay is idempotent. */
+  def foreachEpoch(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+      .start()
 
   /** Stage `events(dir)` as an event-time-ordered feed, run `op` over it
     * as a stream to completion, and return the materialized output
@@ -166,8 +232,7 @@ object StreamReplay {
   def replayEvents[O](spark: SparkSession, dir: String, chunks: Int = 2)(
       op: Dataset[Event] => Dataset[O]): DataFrame = {
     val feed = stagedFeed(spark, dir, chunks)
-    val root = Files.createTempDirectory("graft-replay")
-    track(root)
+    val root = scratch("graft-replay")
     runIncarnation(spark, feed, root, op)
     spark.read.parquet(root.resolve("out").toString)
   }
@@ -237,8 +302,7 @@ object StreamReplay {
   def replayEventsWithRestart[O](spark: SparkSession, dir: String,
       chunks: Int = 2)(op: Dataset[Event] => Dataset[O]): DataFrame = {
     val feed = stagedFeed(spark, dir, chunks)
-    val root = Files.createTempDirectory("graft-replay-rec")
-    track(root)
+    val root = scratch("graft-replay-rec")
     val live = Files.createDirectory(root.resolve("live"))
     // DATA files only (part-* chunks + zz-sentinel-*): the raw listing
     // also contains bookkeeping (_SUCCESS, Hadoop .crc siblings) whose
@@ -281,33 +345,24 @@ object StreamReplay {
     val src = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         coalesce(col("value"), lit(0.0)).as("value"))
-    val root = Files.createTempDirectory("graft-replay-feed")
-    track(root)
-    val feed = root.resolve("feed").toString
+    val root = scratch("graft-replay-feed")
+    val feed = root.resolve("feed")
     // ONE range-shuffle pass stages the feed; the sentinel timestamps
     // come from a max() over the staged files (footer-stat cheap), not a
     // second scan of the source table.
-    src.repartitionByRange(chunks, col("ts"), col("event_id"))
-      .write.parquet(feed)
-    val maxTs = spark.read.parquet(feed).agg(max(col("ts")))
+    val parts = stage(src, feed, chunks, Seq("ts", "event_id"))
+    val maxTs = spark.read.parquet(feed.toString).agg(max(col("ts")))
       .head.getTimestamp(0)
-    val parts = listParts(Paths.get(feed))
-    val base = (System.currentTimeMillis() / 2000L) * 2000L - 7200000L
-    parts.zipWithIndex.foreach { case (p, i) =>
-      p.toFile.setLastModified(base + i * 2000L)
-    }
-    Seq(3L, 6L).zipWithIndex.foreach { case (days, i) =>
+    val sentinels = Seq(3L, 6L).zipWithIndex.map { case (days, i) =>
       val sDir = root.resolve(s"s$i")
       spark.createDataset(Seq(Event(Long.MaxValue - i,
           new java.sql.Timestamp(maxTs.getTime + days * 86400000L),
           -1L, "view", 0.0)))
         .coalesce(1).write.parquet(sDir.toString)
-      val part = listParts(sDir).head
-      val dst = Paths.get(feed, s"zz-sentinel-$i.parquet")
-      Files.move(part, dst)
-      dst.toFile.setLastModified(base + (parts.length + i) * 2000L)
+      Files.move(listParts(sDir).head, feed.resolve(s"zz-sentinel-$i.parquet"))
     }
-    feed
+    stepModtimes(parts ++ sentinels)
+    feed.toString
   }
 
   private def listParts(dir: Path): Seq[Path] = {

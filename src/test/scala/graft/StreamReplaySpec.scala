@@ -1,8 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{max, min}
 
 import graft.queries.{EventQueries, JourneyQueries, StreamQueries}
+import graft.sources.Datalake
+import graft.streaming.StreamReplay.{feed, foreachEpoch, scratch}
 
 /** The registered streaming replay rows (q_stream_retention / q_stream_scd2
   * / q_stream_markov) equal their batch twins bit-for-bit: the file-source
@@ -85,5 +93,50 @@ class StreamReplaySpec extends SparkSpecBase {
       .orderBy(col("user_id"), col("day"))
     assert(rowsOf(StreamQueries.qStreamGapfill(spark, sfDir)) ===
       rowsOf(batch))
+  }
+
+  test("a feed of n files drains in exactly n data micro-batches, lowest keys in epoch 0") {
+    val root = scratch("graft-feed-spec")
+    val seen = new ConcurrentLinkedQueue[(Long, Long, Long)]()
+    val q = foreachEpoch(feed(spark, spark.range(0, 300).toDF("k"), 3, "k"),
+        root.resolve("ck").toString) { (batch, epoch) =>
+      val r = batch.agg(min("k"), max("k")).head
+      seen.add((epoch, r.getLong(0), r.getLong(1)))
+    }
+    q.awaitTermination()
+    val epochs = seen.asScala.toSeq.sortBy(_._1)
+    assert(epochs.map(_._1) === Seq(0L, 1L, 2L))
+    assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+    assert(epochs.head._2 === 0L, "the lowest keys must drain first")
+    // each chunk is one key range, drained in key order
+    epochs.sliding(2).foreach { case Seq(a, b) => assert(a._3 < b._2) }
+  }
+
+  test("a replayed foreachEpoch epoch overwrites its epoch= dir, leaving no second copy") {
+    val root = scratch("graft-epoch-spec")
+    val out = root.resolve("out").toString
+    val ck = root.resolve("ck").toString
+    val stream = feed(spark, spark.range(0, 200).toDF("k"), 2, "k")
+    def drain(): Seq[Long] = {
+      val ran = new ConcurrentLinkedQueue[Long]()
+      foreachEpoch(stream, ck) { (batch, epoch) =>
+        ran.add(epoch)
+        Datalake.writeParquet(batch, s"$out/epoch=$epoch")
+      }.awaitTermination()
+      ran.asScala.toSeq
+    }
+    def landed(): Seq[(Long, Int)] = spark.read.parquet(out).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+    assert(drain() === Seq(0L, 1L))
+    val first = landed()
+    assert(first.length === 200)
+    // lose the last commit record, as a crash after the sink write does:
+    // the restart must re-run epoch 1 into the same dir
+    Seq("1", ".1.crc").foreach(f => Files.deleteIfExists(Paths.get(ck, "commits", f)))
+    assert(drain() === Seq(1L))
+    assert(landed() === first)
+    assert(Files.list(Paths.get(out)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("epoch=")).toSeq.sorted ===
+      Seq("epoch=0", "epoch=1"))
   }
 }
