@@ -60,7 +60,7 @@ object Bench {
     // generated code and initializes shuffle/broadcast/write machinery, so
     // the timed passes below measure steady-state throughput (what a long-
     // running cluster job sees), not one-time JVM costs.
-    base.foreach { case (name, fn) =>
+    base.foreach { case (_, fn) =>
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }

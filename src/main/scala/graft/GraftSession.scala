@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   /** Entries in Spark's compiled-class cache, `spark.sql.codegen.cache.maxEntries`
-    * (default 100). Every session builder graft owns sets it: this one,
-    * `Verify.main` and the test session.
+    * (default 100). Every session builder graft owns sets it: this one
+    * (which `Verify.main` uses too) and the test session.
     *
     * The conf is static: `CodeGenerator`'s cache is one JVM-wide LRU, sized
     * once by the session that first generates code, and a later session's

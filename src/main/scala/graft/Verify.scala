@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each registry row's frame → parquet, plus
   * oracle_sql.json with the SQL each row's run rendered, for the DuckDB
@@ -17,14 +16,12 @@ object Verify {
     // a typo throws (SparkEntry.select): a silently-empty selection
     // would write an empty manifest and exit clean with nothing verified
     val selected = only.fold(SparkEntry.defs)(SparkEntry.select)
+    // the session Bench, Inspect and perfbench run, on local[cpus]
+    // (default 4) with the shuffle width to match
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-verify")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: pair counts are exact integers; the argmax tiebreak is
   * (count desc, pair asc) — training is a pure function of the vocabulary.
-  * Each round localCheckpoints the rewritten vocabulary so round N+1's
+  * Each round checkpoints the rewritten vocabulary so round N+1's
   * count job reads materialized state instead of replaying N rounds of
   * lineage (the ops.Components fixpoint discipline).
   */
@@ -62,34 +62,35 @@ object Bpe {
     */
   def train(wordCounts: DataFrame, nMerges: Int): Seq[(String, String)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    // Checkpoints.checkpoint, not bare localCheckpoint: the one-switch
-    // reliable-mode contract (spark.graft.checkpointDir) must cover every
-    // iterative operator, BPE training included
-    var reps = Checkpoints.checkpoint(wordCounts
-      .select(col("word"), wrapExpr(col("word")).as("rep"), col("wn")))
-    val merges = ListBuffer.empty[(String, String)]
-    var exhausted = false
-    while (merges.size < nMerges && !exhausted) {
-      val syms = symsExpr(col("rep"))
-      val pairs = zip_with(
-        slice(syms, lit(1), size(syms) - 1),
-        slice(syms, lit(2), size(syms) - 1),
-        (a, b) => concat(a, lit(Sep), b))
-      val best = reps.select(explode(pairs).as("p"), col("wn"))
-        .groupBy(col("p")).agg(sum(col("wn")).as("n"))
-        .orderBy(col("n").desc, col("p")).limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val Array(a, b) = best(0).getAs[String]("p").split(Sep)
-        merges += ((a, b))
-        val prev = reps
-        reps = Checkpoints.checkpoint(
-          reps.withColumn("rep", mergeExpr(col("rep"), a, b)))
-        Checkpoints.release(prev) // superseded checkpoint — the Components discipline
+    // training state lives in a Checkpoints scope: the one-switch
+    // reliable mode (spark.graft.checkpointDir) covers BPE training, and
+    // every round's vocabulary is released once the merges are extracted
+    Checkpoints.scoped { s =>
+      var reps = s.checkpoint(wordCounts
+        .select(col("word"), wrapExpr(col("word")).as("rep"), col("wn")))
+      val merges = ListBuffer.empty[(String, String)]
+      var exhausted = false
+      while (merges.size < nMerges && !exhausted) {
+        val syms = symsExpr(col("rep"))
+        val pairs = zip_with(
+          slice(syms, lit(1), size(syms) - 1),
+          slice(syms, lit(2), size(syms) - 1),
+          (a, b) => concat(a, lit(Sep), b))
+        val best = reps.select(explode(pairs).as("p"), col("wn"))
+          .groupBy(col("p")).agg(sum(col("wn")).as("n"))
+          .orderBy(col("n").desc, col("p")).limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val Array(a, b) = best(0).getAs[String]("p").split(Sep)
+          merges += ((a, b))
+          val next = s.checkpoint(
+            reps.withColumn("rep", mergeExpr(col("rep"), a, b)))
+          s.release(reps)
+          reps = next
+        }
       }
+      merges.toList
     }
-    Checkpoints.release(reps) // training state is dead once the merges are extracted
-    merges.toList
   }
 
   /** Apply an ordered merge list to a word: the full BPE encode, as a

@@ -1,6 +1,10 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ListBuffer
+import scala.util.control.NonFatal
 
 /** ONE switch for how iterative operators break lineage.
   *
@@ -24,6 +28,10 @@ import org.apache.spark.sql.DataFrame
   * Set `spark.graft.checkpointDir` in the session conf to switch every
   * iterative operator to reliable mode at once; GraphSpec proves both
   * modes converge to identical results.
+  *
+  * Operators make their working tables inside [[scoped]], which owns
+  * every checkpoint and cache made in it and releases them when it exits;
+  * [[release]] is for callers that free a result an operator returned.
   */
 object Checkpoints {
 
@@ -51,10 +59,14 @@ object Checkpoints {
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
-        // first reliable checkpoint wins the SparkContext-level dir; a
-        // session that re-points the conf mid-flight keeps the original
-        // (checkpoint dirs are append-only state, not per-query)
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        // the SparkContext holds ONE checkpoint dir (a fresh subdir of the
+        // dir it was given): re-point it when the conf names another dir,
+        // so the conf, not whichever checkpoint ran first, decides where
+        // this one lands. Earlier checkpoints keep their own files.
+        val root = new Path(dir)
+        val qualified = root.getFileSystem(sc.hadoopConfiguration).makeQualified(root)
+        if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
+          sc.setCheckpointDir(dir)
         df.checkpoint(eager = true)
       case None =>
         val sc = spark.sparkContext
@@ -70,18 +82,90 @@ object Checkpoints {
     }
   }
 
-  /** Release the storage of a frame produced by [[checkpoint]].
+  /** The working state of one [[scoped]] block. Every frame made with
+    * [[checkpoint]] or [[persist]] belongs to the block and is released
+    * when it exits, except those marked with [[keep]].
+    */
+  final class Scope private[Checkpoints] () {
+    // each owned frame with the call that frees it
+    private val owned = ListBuffer.empty[(DataFrame, DataFrame => Unit)]
+    private val kept = ListBuffer.empty[DataFrame]
+
+    /** [[Checkpoints.checkpoint]] `df`, owned by this scope. */
+    def checkpoint(df: DataFrame): DataFrame =
+      own(Checkpoints.checkpoint(df), Checkpoints.release)
+
+    /** Cache `df` (MEMORY_AND_DISK, lazy like `Dataset.persist`), owned by
+      * this scope.
+      */
+    def persist(df: DataFrame): DataFrame =
+      own(df.persist(StorageLevel.MEMORY_AND_DISK), _.unpersist(blocking = true))
+
+    /** Let `df`, a frame of this scope, outlive a successful exit: the
+      * caller reads it lazily. A throwing block releases it with the rest.
+      */
+    def keep(df: DataFrame): DataFrame = {
+      require(owned.exists(_._1 eq df), "keep: the frame was not made in this scope")
+      kept += df
+      df
+    }
+
+    /** Free a frame of this scope now (a superseded round), so a loop
+      * holds at most its live rounds.
+      */
+    def release(df: DataFrame): Unit = {
+      val i = owned.indexWhere(_._1 eq df)
+      require(i >= 0, "release: the frame was not made in this scope")
+      val (_, free) = owned.remove(i)
+      free(df)
+    }
+
+    private def own(df: DataFrame, free: DataFrame => Unit): DataFrame = {
+      owned += df -> free
+      df
+    }
+
+    /** Free every owned frame but the kept ones (`success`), or all. */
+    private[Checkpoints] def close(success: Boolean): Unit = {
+      val doomed = owned.filterNot(e => success && kept.exists(_ eq e._1)).toList
+      owned.clear()
+      doomed.foreach { case (df, free) => free(df) }
+    }
+  }
+
+  /** Run `body` with a fresh [[Scope]] and release what it made on every
+    * exit: on success all but the kept frames, on a throw everything (the
+    * body's error propagates, a release error is suppressed into it).
+    * This is adopt-before-release stated once: a checkpoint belongs to the
+    * scope from the moment it is made, so no window leaves it unowned.
+    */
+  def scoped[T](body: Scope => T): T = {
+    val s = new Scope
+    val out =
+      try body(s)
+      catch {
+        case e: Throwable =>
+          try s.close(success = false)
+          catch { case NonFatal(r) => e.addSuppressed(r) }
+          throw e
+      }
+    s.close(success = true)
+    out
+  }
+
+  /** Release the storage of a frame produced by [[checkpoint]] — for a
+    * caller freeing a result an operator returned; working tables are a
+    * [[Scope]]'s to release.
     *
     * `Dataset.unpersist()` is the WRONG tool for checkpointed frames: it
     * asks the CacheManager to uncache the query, but a checkpointed
     * dataset's blocks are persisted at the RDD level (the CacheManager
     * has never seen them), so the call is a silent no-op and superseded
-    * checkpoints linger until the ContextCleaner happens to GC them —
-    * the round-7 ADVICE leak, and the reason the GraphSpec leak test
-    * needed a retry loop. This walks the analyzed plan to the backing
-    * `LogicalRDD` and unpersists THAT, synchronously — deterministic
-    * release, no GC luck involved. (Reliable-mode checkpoints keep their
-    * lake files; only the block-cache copy is dropped.)
+    * checkpoints linger until the ContextCleaner happens to GC them. This
+    * walks the analyzed plan to the backing `LogicalRDD` and unpersists
+    * THAT, synchronously — deterministic release, no GC luck involved.
+    * (Reliable-mode checkpoints keep their lake files; only the
+    * block-cache copy is dropped.)
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {

@@ -38,7 +38,8 @@ object Components {
     * NOTE: eager — runs one bounded job per iteration (the convergence
     * witness); intermediate labelings are persisted and dropped as they are
     * superseded. Fails loudly if the graph hasn't converged in `maxIters`
-    * rather than returning a plausible-but-wrong partial labeling.
+    * rather than returning a plausible-but-wrong partial labeling, and
+    * releases every labeling when it does.
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIters: Int = 25): DataFrame = {
@@ -74,66 +75,65 @@ object Components {
     // AQE — the CALLER's pair derivation (e.g. an LSH bucket join) needs
     // runtime broadcast planning.
     val spark = nodes.sparkSession
-    val obsSym = org.apache.spark.sql.Observation()
-    val sym0 = Checkpoints.checkpoint(edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .observe(obsSym, count(lit(1)).as("n")))
-    val nSym = obsSym.get("n").asInstanceOf[Long]
-    val wSum = sum(col("component").cast(DecimalType(38, 0))).as("w")
-    val obs0 = org.apache.spark.sql.Observation()
-    var labels = Checkpoints.checkpoint(
-      nodes.select(col("id"), col("id").cast("long").as("component"))
-        .observe(obs0, wSum, count(lit(1)).as("n")))
-    var prev = obs0.get("w").asInstanceOf[java.math.BigDecimal]
-    if (prev == null) { // empty vertex set: sum() is NULL — already done
-      Checkpoints.release(sym0)
-      return labels
-    }
-    val nNodes = obs0.get("n").asInstanceOf[Long]
-    val width = Fixpoint.widthFor(spark, nSym + nNodes)
-    var it = 0
-    var converged = false
-    Fixpoint.withLoopConf(spark, width) {
-      // one bounded re-shuffle of the symmetrized edges, paid once,
-      // replacing a 2|E| exchange per round (explicit partition count:
-      // an eager checkpoint preserves the plan's output partitioning, so
-      // the loop join below sees HashPartitioning(dst, width) and leaves
-      // this side in place)
-      val sym = Checkpoints.checkpoint(sym0.repartition(width, col("dst")))
-      Checkpoints.release(sym0)
-      try {
-        while (!converged && it < maxIters) {
-          val nbr = sym.as("e").join(labels.as("l").hint("shuffle_hash"),
-              col("e.dst") === col("l.id"))
-            .select(col("e.src").as("id"), col("l.component").as("component"))
-          // pointer jumping: each node also adopts its label's label — chain
-          // depth halves per round, so rounds = O(log diameter) instead of
-          // O(diameter) (the Shiloach-Vishkin shortcut; a path graph would
-          // otherwise need diameter rounds)
-          val jump = labels.as("x").join(labels.as("y").hint("shuffle_hash"),
-              col("x.component") === col("y.id"))
-            .select(col("x.id").as("id"), col("y.component").as("component"))
-          val obs = org.apache.spark.sql.Observation()
-          val next = Checkpoints.checkpoint(
-            labels.unionByName(nbr).unionByName(jump)
-              .groupBy("id").agg(min("component").as("component"))
-              .observe(obs, wSum))
-          // harvested from the checkpoint's own action — no second job
-          val cur = obs.get("w").asInstanceOf[java.math.BigDecimal]
-          Checkpoints.release(labels)
-          labels = next
-          converged = cur.compareTo(prev) == 0
-          prev = cur
-          it += 1
+    Checkpoints.scoped { s =>
+      val obsSym = org.apache.spark.sql.Observation()
+      val sym0 = s.checkpoint(edges.select(col("src"), col("dst"))
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+        .observe(obsSym, count(lit(1)).as("n")))
+      val nSym = obsSym.get("n").asInstanceOf[Long]
+      val wSum = sum(col("component").cast(DecimalType(38, 0))).as("w")
+      val obs0 = org.apache.spark.sql.Observation()
+      var labels = s.checkpoint(
+        nodes.select(col("id"), col("id").cast("long").as("component"))
+          .observe(obs0, wSum, count(lit(1)).as("n")))
+      var prev = obs0.get("w").asInstanceOf[java.math.BigDecimal]
+      // an empty vertex set sums to NULL: the initial labeling is final
+      if (prev != null) {
+        val nNodes = obs0.get("n").asInstanceOf[Long]
+        val width = Fixpoint.widthFor(spark, nSym + nNodes)
+        var it = 0
+        var converged = false
+        Fixpoint.withLoopConf(spark, width) {
+          // one bounded re-shuffle of the symmetrized edges, paid once,
+          // replacing a 2|E| exchange per round (explicit partition count:
+          // an eager checkpoint preserves the plan's output partitioning, so
+          // the loop join below sees HashPartitioning(dst, width) and leaves
+          // this side in place)
+          val sym = s.checkpoint(sym0.repartition(width, col("dst")))
+          s.release(sym0)
+          while (!converged && it < maxIters) {
+            val nbr = sym.as("e").join(labels.as("l").hint("shuffle_hash"),
+                col("e.dst") === col("l.id"))
+              .select(col("e.src").as("id"), col("l.component").as("component"))
+            // pointer jumping: each node also adopts its label's label — chain
+            // depth halves per round, so rounds = O(log diameter) instead of
+            // O(diameter) (the Shiloach-Vishkin shortcut; a path graph would
+            // otherwise need diameter rounds)
+            val jump = labels.as("x").join(labels.as("y").hint("shuffle_hash"),
+                col("x.component") === col("y.id"))
+              .select(col("x.id").as("id"), col("y.component").as("component"))
+            val obs = org.apache.spark.sql.Observation()
+            val next = s.checkpoint(
+              labels.unionByName(nbr).unionByName(jump)
+                .groupBy("id").agg(min("component").as("component"))
+                .observe(obs, wSum))
+            // harvested from the checkpoint's own action — no second job
+            val cur = obs.get("w").asInstanceOf[java.math.BigDecimal]
+            s.release(labels)
+            labels = next
+            converged = cur.compareTo(prev) == 0
+            prev = cur
+            it += 1
+          }
         }
-      } finally Checkpoints.release(sym)
+        require(converged,
+          s"connectedComponents: not converged after $maxIters iterations — " +
+            "graph diameter exceeds the cap; raise maxIters or switch to " +
+            "large-star/small-star rounds")
+      }
+      s.keep(labels)
     }
-    require(converged,
-      s"connectedComponents: not converged after $maxIters iterations — " +
-        "graph diameter exceeds the cap; raise maxIters or switch to " +
-        "large-star/small-star rounds")
-    labels
   }
 
   /** Incremental component maintenance — fold one day's NEW vertices and
@@ -175,31 +175,34 @@ object Components {
     // endpoints stay themselves. The joins key on the EDGE list (the small
     // side) — at scale the store side is bucketed on id, the edge side
     // shuffles O(day's edges).
-    // eager localCheckpoint: cEdges feeds BOTH union branches of the
-    // propagation's symmetrized edge list AND both branches of the vertex
-    // set — without it the upstream day-pair derivation (an LSH bucket
-    // join in the cluster query) re-executes once per consumer
-    val cEdges = Checkpoints.checkpoint(
-      newEdges.select(col("src"), col("dst"))
-        .join(srcLbl, Seq("src"), "left")
-        .join(dstLbl, Seq("dst"), "left")
-        .select(coalesce(col("__csrc"), col("src")).as("src"),
-          coalesce(col("__cdst"), col("dst")).as("dst")))
-    // contracted vertex set: every new node (untouched ones stay
-    // singletons) plus every rep an edge touches
-    val cNodes = newNodes.select(col("id"))
-      .unionByName(cEdges.select(col("src").as("id")))
-      .unionByName(cEdges.select(col("dst").as("id")))
-      .distinct()
-    val sub = connectedComponents(cNodes, cEdges, maxIters)
-    // relabel history: broadcast the bounded (old rep → new label) remap
-    // over the store — the only rows that change are in touched components
-    val remap = sub.select(col("id").as("component"),
-      col("component").as("__newc"))
-    val hist = storeLabels
-      .join(broadcast(remap), Seq("component"), "left")
-      .select(col("id"), coalesce(col("__newc"), col("component")).as("component"))
-    val fresh = sub.join(newNodes.select(col("id")), Seq("id"), "leftsemi")
-    hist.unionByName(fresh)
+    // checkpointed: cEdges feeds BOTH union branches of the propagation's
+    // symmetrized edge list AND both branches of the vertex set — without
+    // it the upstream day-pair derivation (an LSH bucket join in the
+    // cluster query) re-executes once per consumer. The result reads only
+    // the converged labels, so cEdges is released on return.
+    Checkpoints.scoped { s =>
+      val cEdges = s.checkpoint(
+        newEdges.select(col("src"), col("dst"))
+          .join(srcLbl, Seq("src"), "left")
+          .join(dstLbl, Seq("dst"), "left")
+          .select(coalesce(col("__csrc"), col("src")).as("src"),
+            coalesce(col("__cdst"), col("dst")).as("dst")))
+      // contracted vertex set: every new node (untouched ones stay
+      // singletons) plus every rep an edge touches
+      val cNodes = newNodes.select(col("id"))
+        .unionByName(cEdges.select(col("src").as("id")))
+        .unionByName(cEdges.select(col("dst").as("id")))
+        .distinct()
+      val sub = connectedComponents(cNodes, cEdges, maxIters)
+      // relabel history: broadcast the bounded (old rep → new label) remap
+      // over the store — the only rows that change are in touched components
+      val remap = sub.select(col("id").as("component"),
+        col("component").as("__newc"))
+      val hist = storeLabels
+        .join(broadcast(remap), Seq("component"), "left")
+        .select(col("id"), coalesce(col("__newc"), col("component")).as("component"))
+      val fresh = sub.join(newNodes.select(col("id")), Seq("id"), "leftsemi")
+      hist.unionByName(fresh)
+    }
   }
 }

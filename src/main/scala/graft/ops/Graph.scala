@@ -35,10 +35,11 @@ import org.apache.spark.sql.functions._
   * the joined table cached and the count inlined, one shuffle per
   * iteration). The rank table is deliberately NOT broadcast-hinted: AQE
   * broadcasts it while N is small and falls back to a keyed shuffle join
-  * when a billion-node rank table outgrows broadcast. Every superseded
-  * rank checkpoint is unpersisted and the edge cache dropped after the
-  * final iteration (the ops.Components discipline) — one invocation
-  * leaves exactly one small persistent RDD behind: the returned result.
+  * when a billion-node rank table outgrows broadcast. The caches and
+  * every rank checkpoint live in a Checkpoints scope: superseded ranks
+  * are released as the loop goes and the rest on return or throw — one
+  * invocation leaves exactly one small persistent RDD behind: the
+  * returned result.
   */
 object Graph {
 
@@ -128,139 +129,108 @@ object Graph {
     // below lands directly AT that width, so the loop's rd-side exchanges
     // stop paying the session's cluster-width constant on node-sized
     // frames. One extra cached |E| pass at construction (raw → ed0).
-    val raw = edges
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdgesRaw = raw.count()
-    val loopWidth = Fixpoint.widthFor(edges.sparkSession, nEdgesRaw)
-    val ed0base = raw.repartition(loopWidth, col("src"))
-    val ed0 = (if (dedupEdges) ed0base.dropDuplicates(Seq("src", "dst"))
-      else ed0base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = ed0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = Checkpoints.checkpoint(
-      deg.select(col("src").as("node"), lit(1).as("is_src"),
-          lit(0).as("is_dst"))
-        .unionByName(ed0.select(col("dst").as("node"), lit(0).as("is_src"),
-          lit(1).as("is_dst")))
-        .groupBy(col("node"))
-        .agg(max(col("is_src")).as("is_src"), max(col("is_dst")).as("is_dst")))
-    val detect = stats.agg(count(lit(1)).as("nd"),
-      sum(col("is_src")).as("n_src"), sum(col("is_dst")).as("n_dst")).head()
-    // ed0 and deg are materialized (the stats checkpoint scanned both);
-    // the raw pair cache has served its purpose
-    raw.unpersist(blocking = true)
-    val nd = detect.getLong(0)
-    val nodes = stats.select(col("node"))
-    val hasDangling = detect.getLong(1) < nd
-    val needNodeJoin = hasDangling || detect.getLong(2) < nd
-    // static sink set for the per-iteration dangling aggregate — a
-    // FILTER VIEW over the checkpointed stats, not a second scan
-    val sinks = if (hasDangling) stats.filter(col("is_src") === 0)
-      .select(col("node")) else null
-    // hoisted so the finally block can release a mid-loop checkpoint if
-    // the rank loop throws (round-9 ADVICE: the unpersists ran in the
-    // try body, so an exception leaked ed0/deg/stats — and possibly a
-    // superseded rank checkpoint — with only the AQE conf restored)
-    var lastCp: DataFrame = null
-    var completed = false
-    try Fixpoint.withLoopConf(edges.sparkSession, loopWidth) {
-    // same IEEE divisions the oracle runs engine-side on the same value
-    val r0 = lit(1.0) / lit(nd.toDouble)
-    val teleport = lit(0.15) / lit(nd.toDouble)
-    // iteration-0 ranks are a VIEW over the cached stats (constant r0
-    // per node), not an eager checkpoint — one fewer scheduled job, and
-    // the first iteration reads the stats cache exactly like a
-    // checkpoint read would
-    var ranks = nodes.select(col("node"), r0.as("r"))
-    // Checkpoint every CpEvery-th iteration, not every one: lineage depth
-    // stays ≤ CpEvery join+agg layers (the analysis blow-up needs ~15),
-    // each materialization covers CpEvery iterations in ONE scheduled
-    // job, and the arithmetic is identical — the same IEEE expression
-    // tree evaluates whether its inputs come from a cached table or a
-    // chained plan. release() only ever targets the superseded
-    // CHECKPOINT (releasing a chained plan would free the live base).
-    // DANGLING graphs keep per-iteration checkpoints: their update
-    // references prev TWICE (inflow + the dm aggregate), so a chained
-    // layer would re-execute the chain per reference — 2^k work for k
-    // chained layers. The fast and no-dangling paths reference prev once
-    // (linear), so chaining is safe there.
-    val CpEvery = if (hasDangling) 1 else 3
-    // (AQE is off for this refinement loop — set just above the try:
-    // every stage here has a KNOWN shape (node-sized rank ⋈ cached deg →
-    // cached pre-partitioned edges → node-sized aggregate), so adaptive
-    // re-planning could not improve the plan — it only splits each tiny
-    // iteration into extra per-stage jobs whose scheduling dominates
-    // wall-clock on short iterations, and at 100 TB adds driver latency
-    // per round for nothing.)
-    // (lastCp stays null until the first checkpoint lands: the
-    // iteration-0 view must never be "released" — that would unpersist
-    // the live stats base)
-    for (i <- 1 to iters) {
-      val prev = ranks
-      // per-NODE contribution factor first (|V| divisions + |V| snaps,
-      // not |E|): rank ⋈ out-degree, both node-sized — the static
-      // planner broadcasts the cached deg. Then ONE shuffle_hash join
-      // against the cached pre-partitioned edge table: ed0's side never
-      // sorts and never re-shuffles, only the node-sized rd moves.
-      val rd = prev.join(deg, prev("node") === deg("src"))
-        .select(col("node").as("psrc"), snap(col("r") / col("deg")).as("c"))
-      val inflow = ed0.join(rd.hint("shuffle_hash"),
-          ed0("src") === rd("psrc"))
-        .select(col("dst"), col("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("s")) // exact: dyadic summands
-      val next =
-        if (!needNodeJoin)
-          // fast path (every node has in- and out-edges, e.g. bidirected
-          // graphs): inflow covers all nodes, no dangling term
-          inflow.select(col("dst").as("node"),
-            (teleport + lit(0.85) * col("s")).as("r"))
-        else {
-          val withAll = nodes.join(inflow.hint("shuffle_hash"),
-              col("node") === col("dst"), "left")
-            .select(col("node"), coalesce(col("s"), lit(0.0)).as("s"))
-          if (!hasDangling)
-            withAll.select(col("node"),
+    Checkpoints.scoped { s =>
+      val raw = s.persist(edges)
+      val nEdgesRaw = raw.count()
+      val loopWidth = Fixpoint.widthFor(edges.sparkSession, nEdgesRaw)
+      val ed0base = raw.repartition(loopWidth, col("src"))
+      val ed0 = s.persist(
+        if (dedupEdges) ed0base.dropDuplicates(Seq("src", "dst")) else ed0base)
+      val deg = s.persist(ed0.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+      val stats = s.checkpoint(
+        deg.select(col("src").as("node"), lit(1).as("is_src"),
+            lit(0).as("is_dst"))
+          .unionByName(ed0.select(col("dst").as("node"), lit(0).as("is_src"),
+            lit(1).as("is_dst")))
+          .groupBy(col("node"))
+          .agg(max(col("is_src")).as("is_src"), max(col("is_dst")).as("is_dst")))
+      val detect = stats.agg(count(lit(1)).as("nd"),
+        sum(col("is_src")).as("n_src"), sum(col("is_dst")).as("n_dst")).head()
+      // ed0 and deg are materialized (the stats checkpoint scanned both);
+      // the raw pair cache has served its purpose
+      s.release(raw)
+      val nd = detect.getLong(0)
+      val nodes = stats.select(col("node"))
+      val hasDangling = detect.getLong(1) < nd
+      val needNodeJoin = hasDangling || detect.getLong(2) < nd
+      // static sink set for the per-iteration dangling aggregate — a
+      // FILTER VIEW over the checkpointed stats, not a second scan
+      val sinks = if (hasDangling) stats.filter(col("is_src") === 0)
+        .select(col("node")) else null
+      Fixpoint.withLoopConf(edges.sparkSession, loopWidth) {
+        // same IEEE divisions the oracle runs engine-side on the same value
+        val r0 = lit(1.0) / lit(nd.toDouble)
+        val teleport = lit(0.15) / lit(nd.toDouble)
+        // one power iteration over the previous ranks
+        def step(prev: DataFrame): DataFrame = {
+          // per-NODE contribution factor first (|V| divisions + |V| snaps,
+          // not |E|): rank ⋈ out-degree, both node-sized — the static
+          // planner broadcasts the cached deg. Then ONE shuffle_hash join
+          // against the cached pre-partitioned edge table: ed0's side never
+          // sorts and never re-shuffles, only the node-sized rd moves.
+          val rd = prev.join(deg, prev("node") === deg("src"))
+            .select(col("node").as("psrc"), snap(col("r") / col("deg")).as("c"))
+          val inflow = ed0.join(rd.hint("shuffle_hash"),
+              ed0("src") === rd("psrc"))
+            .select(col("dst"), col("c"))
+            .groupBy(col("dst"))
+            .agg(sum(col("c")).as("s")) // exact: dyadic summands
+          if (!needNodeJoin)
+            // fast path (every node has in- and out-edges, e.g. bidirected
+            // graphs): inflow covers all nodes, no dangling term
+            inflow.select(col("dst").as("node"),
               (teleport + lit(0.85) * col("s")).as("r"))
           else {
-            // one bounded aggregate: exact sum of snapped sink ranks
-            val dm = prev.join(sinks.hint("shuffle_hash"), Seq("node"),
-                "leftsemi")
-              .agg(coalesce(sum(snap(col("r"))), lit(0.0)).as("dm"))
-            withAll.crossJoin(broadcast(dm))
-              .select(col("node"),
-                (teleport + lit(0.85) *
-                  (col("s") + snap(col("dm") / lit(nd.toDouble)))).as("r"))
+            val withAll = nodes.join(inflow.hint("shuffle_hash"),
+                col("node") === col("dst"), "left")
+              .select(col("node"), coalesce(col("s"), lit(0.0)).as("s"))
+            if (!hasDangling)
+              withAll.select(col("node"),
+                (teleport + lit(0.85) * col("s")).as("r"))
+            else {
+              // one bounded aggregate: exact sum of snapped sink ranks
+              val dm = prev.join(sinks.hint("shuffle_hash"), Seq("node"),
+                  "leftsemi")
+                .agg(coalesce(sum(snap(col("r"))), lit(0.0)).as("dm"))
+              withAll.crossJoin(broadcast(dm))
+                .select(col("node"),
+                  (teleport + lit(0.85) *
+                    (col("s") + snap(col("dm") / lit(nd.toDouble)))).as("r"))
+            }
           }
         }
-      if (i % CpEvery == 0 || i == iters) {
-        val cp = Checkpoints.checkpoint(next)
-        // adopt-before-release (see bfsDistances): if releasing the
-        // superseded frame throws, the finally block must already be
-        // guarding the freshly persisted checkpoint.
-        val prevCp = lastCp
-        lastCp = cp
-        ranks = cp
-        if (prevCp != null) Checkpoints.release(prevCp)
-      } else ranks = next
-    }
-    // (the i == iters arm guarantees the loop exits checkpointed:
-    // ranks == lastCp here for every iters >= 1)
-    completed = true
-    ranks
-    } finally {
-      // release EVERYTHING on every exit path (round-9 ADVICE): the
-      // working caches always, and — only when the loop did NOT finish —
-      // the latest superseded rank checkpoint too (on success lastCp IS
-      // the returned result and must stay persisted). blocking: the leak
-      // contract (GraphSpec) counts persistent RDDs right after return —
-      // async unpersist races that read.
-      ed0.unpersist(blocking = true)
-      deg.unpersist(blocking = true)
-      raw.unpersist(blocking = true) // no-op on the success path
-      Checkpoints.release(stats) // nodes and sinks are filter views over it
-      if (!completed && lastCp != null) Checkpoints.release(lastCp)
+        // iteration-0 ranks are a VIEW over the cached stats (constant r0
+        // per node), not an eager checkpoint — one fewer scheduled job, and
+        // the first iteration reads the stats cache exactly like a
+        // checkpoint read would
+        var ranks = nodes.select(col("node"), r0.as("r"))
+        // Checkpoint every CpEvery-th iteration and the last, not every one:
+        // lineage depth stays ≤ CpEvery join+agg layers (the analysis
+        // blow-up needs ~15), each materialization covers CpEvery iterations
+        // in ONE scheduled job, and the arithmetic is identical — the same
+        // IEEE expression tree evaluates whether its inputs come from a
+        // cached table or a chained plan. DANGLING graphs keep per-iteration
+        // checkpoints: their update references prev TWICE (inflow + the dm
+        // aggregate), so a chained layer would re-execute the chain per
+        // reference — 2^k work for k chained layers. The fast and
+        // no-dangling paths reference prev once (linear), so chaining is
+        // safe there. The loop runs with AQE off (Fixpoint): every stage has
+        // a KNOWN shape (node-sized rank ⋈ cached deg → cached pre-partitioned
+        // edges → node-sized aggregate), so adaptive re-planning could only
+        // split each tiny iteration into extra per-stage jobs.
+        val CpEvery = if (hasDangling) 1 else 3
+        var done = 0
+        while (done < iters) {
+          val chunk = math.min(CpEvery, iters - done)
+          val cp = s.checkpoint((1 to chunk).foldLeft(ranks)((r, _) => step(r)))
+          // the superseded checkpoint; the iteration-0 view is not one (it
+          // reads the live stats table)
+          if (done > 0) s.release(ranks)
+          ranks = cp
+          done += chunk
+        }
+        s.keep(ranks)
+      }
     }
   }
 
@@ -327,20 +297,13 @@ object Graph {
     // hash-partitioned on src AT that width from the raw cache — one
     // extra cached |E| pass at construction buys per-round exchanges
     // sized to the data instead of the session's cluster-width constant.
-    // Both caches are built inside the try: a count that throws (a
-    // failing edge derivation) must still release them.
-    val raw = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ed: DataFrame = null
-    var dist: DataFrame = null
-    var completed = false
-    try {
+    Checkpoints.scoped { s =>
+      val raw = s.persist(edges.select(col("src"), col("dst")))
       val nEdges = raw.count()
       val width = Fixpoint.widthFor(edges.sparkSession, nEdges)
-      ed = raw.repartition(width, col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val ed = s.persist(raw.repartition(width, col("src")))
       ed.count() // materialize from the raw cache, then drop it
-      raw.unpersist(blocking = true)
+      s.release(raw)
       Fixpoint.withLoopConf(edges.sparkSession, width) {
         // distinct: a caller-supplied source set may repeat a node — the old
         // union-min fixpoint absorbed that in its groupBy, but the
@@ -348,7 +311,7 @@ object Graph {
         // forever. The hop-0 witness (|sources| after dedup) rides the
         // checkpoint action the same way the loop's does.
         val obs0 = Observation()
-        dist = Checkpoints.checkpoint(
+        var dist = s.checkpoint(
           sources.select(col("node"), lit(0L).as("dist")).distinct()
             .observe(obs0, count(lit(1)).as("n_settled")))
         var fsize = obs0.get("n_settled").asInstanceOf[Long]
@@ -367,26 +330,15 @@ object Graph {
             .join(dist.hint("shuffle_hash"), Seq("node"), "left_anti")
             .select(col("node"), lit((hops + 1).toLong).as("dist"))
             .observe(obs, count(lit(1)).as("n_settled"))
-          val next = Checkpoints.checkpoint(dist.unionByName(fresh))
-          // adopt the fresh checkpoint BEFORE releasing the superseded one:
-          // if release (or the observation read below) throws, the finally
-          // block must release the frame that is actually persisted — the
-          // old order left `next` unguarded in that window (round-10
-          // ADVICE).
-          val prev = dist
+          val next = s.checkpoint(dist.unionByName(fresh))
+          s.release(dist)
           dist = next
-          Checkpoints.release(prev)
           hops += 1
           // harvested from the checkpoint's own action — no second job
           fsize = obs.get("n_settled").asInstanceOf[Long]
         }
-        completed = true
-        dist
+        s.keep(dist)
       }
-    } finally {
-      raw.unpersist(blocking = true) // no-op once the edge cache is built
-      if (ed != null) ed.unpersist(blocking = true)
-      if (!completed && dist != null) Checkpoints.release(dist)
     }
   }
 
@@ -422,21 +374,21 @@ object Graph {
     // plan, each branch re-runs the degree aggregation and both degree
     // joins (measured 3× the whole build at sf0.1). Checkpoint it once
     // (the pageRank edge-table discipline), and checkpoint the small
-    // result so the working table can be unpersisted before returning —
-    // one invocation leaves exactly one persistent RDD, the result.
-    val ori = Checkpoints.checkpoint(withDeg.select(
-        when(fwd, col("u")).otherwise(col("v")).as("s"),
-        when(fwd, col("v")).otherwise(col("u")).as("t")))
-    val e1 = ori.select(col("s").as("a"), col("t").as("b"))
-    val e2 = ori.select(col("s").as("b"), col("t").as("c"))
-    val e3 = ori.select(col("s").as("a"), col("t").as("c"))
-    try
-      Checkpoints.checkpoint(
+    // result so the working table is released before returning — one
+    // invocation leaves exactly one persistent RDD, the result.
+    Checkpoints.scoped { s =>
+      val ori = s.checkpoint(withDeg.select(
+          when(fwd, col("u")).otherwise(col("v")).as("s"),
+          when(fwd, col("v")).otherwise(col("u")).as("t")))
+      val e1 = ori.select(col("s").as("a"), col("t").as("b"))
+      val e2 = ori.select(col("s").as("b"), col("t").as("c"))
+      val e3 = ori.select(col("s").as("a"), col("t").as("c"))
+      s.keep(s.checkpoint(
         e1.join(e2, "b")           // wedges a→b→c
           .join(e3, Seq("a", "c")) // closed ⇔ triangle {a,b,c}
           .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
           .groupBy(col("node"))
-          .agg(count(lit(1)).as("n_tri")))
-    finally Checkpoints.release(ori) // released on success AND failure
+          .agg(count(lit(1)).as("n_tri"))))
+    }
   }
 }

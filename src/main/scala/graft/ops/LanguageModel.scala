@@ -102,14 +102,17 @@ object LanguageModel {
     // twice (class totals + the scoring join). Checkpoint it once so the
     // ref-slice tokenization underneath runs once, not per consumer
     // (round-11 verdict #4: 15 exchanges, zero reused).
-    val ctk = Checkpoints.checkpoint(
-      ref.groupBy(col("__lbl").as("cls"), col("t"))
-        .agg(count(lit(1)).as("ctn")))
+    // Both model tables are kept: the returned plan reads them lazily.
+    val (ctk, docsPerClass) = Checkpoints.scoped { s =>
+      (s.keep(s.checkpoint(
+        ref.groupBy(col("__lbl").as("cls"), col("t"))
+          .agg(count(lit(1)).as("ctn")))),
+      s.keep(s.checkpoint(docs.filter(isRef)
+        .groupBy(label.as("cls")).agg(count(lit(1)).as("nd")))))
+    }
     // vocabulary size from the MODEL, not a third pass over the tokens:
     // ctk's distinct terms ARE ref's distinct terms by construction
     val vocab = ctk.agg(count_distinct(col("t")).as("v")) // 1-row scalar
-    val docsPerClass = Checkpoints.checkpoint(docs.filter(isRef)
-      .groupBy(label.as("cls")).agg(count(lit(1)).as("nd")))
     // class-count total from the per-class table — one doc scan, not two.
     // coalesce: sum() over an EMPTY ref slice is NULL where the previous
     // count(*) form was 0; without it ntot=null would propagate nulls

@@ -78,8 +78,7 @@ object Ranking {
     * dimension's checkpoint materializes from it), so a caller that
     * checkpointed its input may release it immediately — where the fused
     * path reads the input lazily through the returned plan and the input
-    * must stay persisted (r18 ADVICE #2: the fallback used to leak the
-    * caller's input checkpoint until ContextCleaner GC).
+    * must stay persisted.
     */
   final case class Ranked(df: DataFrame, maxPartitionRows: Long,
       fellBack: Boolean = false)
@@ -209,25 +208,20 @@ object Ranking {
       .collect()
     if (cntRows.exists(_.getAs[Long]("c") > skewThreshold)) {
       // sequential fallback, checkpointing between dims like the fused
-      // path's single plan makes unnecessary — identical output
-      var cur = df
-      var done = List.empty[DataFrame]
+      // path's single plan makes unnecessary — identical output. The tail
+      // checkpoint stays persisted (the caller reads it lazily); every
+      // earlier one is fully consumed.
       var maxPart = 0L
-      dims.foreach { dim =>
-        val ranked = withRank(cur, Nil, dim.keyCol, dim.desc, tieCol,
-          dim.rankName, dim.nName, skewThreshold)
-        val r = Checkpoints.checkpoint(ranked.df)
-        // max ACROSS dims, like the fused path — not just the last call's
-        // (r18 ADVICE #2)
-        maxPart = math.max(maxPart, ranked.maxPartitionRows)
-        done = r :: done
-        cur = r
+      val tail = Checkpoints.scoped { s =>
+        s.keep(dims.foldLeft(df) { (cur, dim) =>
+          val ranked = withRank(cur, Nil, dim.keyCol, dim.desc, tieCol,
+            dim.rankName, dim.nName, skewThreshold)
+          // max ACROSS dims, like the fused path — not just the last call's
+          maxPart = math.max(maxPart, ranked.maxPartitionRows)
+          s.checkpoint(ranked.df)
+        })
       }
-      // the tail checkpoint stays persisted (the caller reads it lazily);
-      // everything BEFORE it — including the caller's input, which the
-      // flag hands back to the caller to release — is fully consumed
-      done.tail.foreach(Checkpoints.release)
-      return Ranked(cur, maxPart, fellBack = true)
+      return Ranked(tail, maxPart, fellBack = true)
     }
     val maxPart =
       if (cntRows.isEmpty) 0L

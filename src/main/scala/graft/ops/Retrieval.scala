@@ -98,7 +98,7 @@ object Retrieval {
     // the QUERY-MATCHING postings only — bounded by |query terms| ×
     // matching docs, never corpus-sized — and both consumers read the
     // materialized rows: the corpus tokenization runs once per serve.
-    val tf = Checkpoints.checkpoint(tf0)
+    val tf = Checkpoints.scoped(s => s.keep(s.checkpoint(tf0)))
     // document frequency over the restricted tf table: ≤ |query terms| rows
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
 

@@ -69,82 +69,77 @@ object SetJoin {
     // (verify=false) stays lazy and un-checkpointed: its output IS the
     // un-pruned candidate mass, which must not be block-cached eagerly
     // just to be counted.
-    val rawPostings = df.select(id.as("doc_id"),
-        graft.functions.text.wordShingleHashes(text, 3).as("__sh"))
-      .select(col("doc_id"), size(col("__sh")).cast("long").as("n"),
-        explode(col("__sh")).as("shingle"))
-    val postings =
-      if (verify) graft.ops.Checkpoints.checkpoint(rawPostings)
-      else rawPostings
-    // global df per shingle as a count-over-window: one shingle-keyed
-    // shuffle serves both the df and the prefix equi-join below
-    val wDf = Window.partitionBy(col("shingle"))
-    val wDoc = Window.partitionBy(col("doc_id"))
-      .orderBy(col("__df"), col("shingle"))
-    val ranked = postings
-      .withColumn("__df", count(lit(1)).over(wDf))
-      .withColumn("__rn", row_number().over(wDoc))
-    // prefix length p = n − ⌈τ·n⌉ + 1, in exact integer arithmetic
-    val ceilTauN = (lit(tauNum.toLong) * col("n") + lit(tauDen.toLong - 1L))
-      .divide(lit(tauDen.toLong)).cast("long")
-    val prefix = ranked.filter(col("__rn") <= col("n") - ceilTauN + lit(1L))
-      .select(col("doc_id"), col("n"), col("shingle"))
-    val a = prefix.select(col("doc_id").as("doc_a"), col("n").as("n_a"),
-      col("shingle"))
-    val b = prefix.select(col("doc_id").as("doc_b"), col("n").as("n_b"),
-      col("shingle").as("__shingle_b"))
-    // candidates: shared prefix shingle + the length filter
-    // τ·max ≤ min ⟺ tauNum·n_a ≤ tauDen·n_b ∧ tauNum·n_b ≤ tauDen·n_a
-    val cand = a.join(b, col("shingle") === col("__shingle_b") &&
-        col("doc_a") < col("doc_b") &&
-        lit(tauNum.toLong) * col("n_a") <= lit(tauDen.toLong) * col("n_b") &&
-        lit(tauNum.toLong) * col("n_b") <= lit(tauDen.toLong) * col("n_a"))
-      .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
-      .distinct()
-    val result = if (!verify) cand.select(col("doc_a"), col("doc_b"))
-    else {
-      // exact intersection count restricted to the candidate set — as an
-      // IN-ROW set intersection, not a postings join. The old tail joined
-      // cand ⋈ A-postings ⋈ B-postings, whose intermediate is
-      // candidates × set-size ROWS through a composite-key shuffle (the
-      // measured scaling-wall of this family: ~290M joined rows at the
-      // ×10 corpus for 2.9M candidates). Carrying each doc's (distinct)
-      // shingle set as ONE array column instead moves candidates rows —
-      // same bytes, 100× fewer rows — and `array_intersect` is a
-      // codegen'd hash-set probe per pair, O(n_a + n_b). The sets frame
-      // is doc-sized (one array per doc): AQE broadcasts it at bench
-      // scale; at 100 TB it shuffle-joins on the doc key, rows still
-      // ∝ candidates, never candidates × set size. Derived from the RAW
-      // CORPUS deliberately, not folded off the checkpointed postings:
-      // the obvious "reuse the checkpoint" refactor (groupBy(doc_id)
-      // .collect_list over the exploded postings) replaces one cheap
-      // shuffle-FREE codegen scan (shingle arrays materialize in the
-      // scan itself) with a full postings-mass shuffle — measured 2.98s
-      // → 9.51s on this family at the ×10 corpus. The checkpoint's job
-      // is de-duplicating the EXPLODED-posting subtrees (ranked/prefix/
-      // indexed); the array-per-doc frame was never exploded.
-      val sets = df.select(id.cast("long").as("__sid"),
-        graft.functions.text.wordShingleHashes(text, 3).as("__set"))
-      cand
-        .join(sets.select(col("__sid").as("doc_a"), col("__set").as("__set_a")),
-          "doc_a")
-        .join(sets.select(col("__sid").as("doc_b"), col("__set").as("__set_b")),
-          "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
-          size(array_intersect(col("__set_a"), col("__set_b")))
-            .cast("long").as("__inter"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("__inter").cast("double") /
-            (col("n_a") + col("n_b") - col("__inter"))).as("jaccard"))
-        .filter(col("jaccard") >= lit(tauNum.toDouble / tauDen))
-    }
-    if (!verify) result
-    else {
-      // materialize the (threshold-pruned, small) result, then release the
-      // corpus-sized postings — one persistent RDD per invocation survives
-      val res = graft.ops.Checkpoints.checkpoint(result)
-      graft.ops.Checkpoints.release(postings)
-      res
+    graft.ops.Checkpoints.scoped { s =>
+      val rawPostings = df.select(id.as("doc_id"),
+          graft.functions.text.wordShingleHashes(text, 3).as("__sh"))
+        .select(col("doc_id"), size(col("__sh")).cast("long").as("n"),
+          explode(col("__sh")).as("shingle"))
+      val postings = if (verify) s.checkpoint(rawPostings) else rawPostings
+      // global df per shingle as a count-over-window: one shingle-keyed
+      // shuffle serves both the df and the prefix equi-join below
+      val wDf = Window.partitionBy(col("shingle"))
+      val wDoc = Window.partitionBy(col("doc_id"))
+        .orderBy(col("__df"), col("shingle"))
+      val ranked = postings
+        .withColumn("__df", count(lit(1)).over(wDf))
+        .withColumn("__rn", row_number().over(wDoc))
+      // prefix length p = n − ⌈τ·n⌉ + 1, in exact integer arithmetic
+      val ceilTauN = (lit(tauNum.toLong) * col("n") + lit(tauDen.toLong - 1L))
+        .divide(lit(tauDen.toLong)).cast("long")
+      val prefix = ranked.filter(col("__rn") <= col("n") - ceilTauN + lit(1L))
+        .select(col("doc_id"), col("n"), col("shingle"))
+      val a = prefix.select(col("doc_id").as("doc_a"), col("n").as("n_a"),
+        col("shingle"))
+      val b = prefix.select(col("doc_id").as("doc_b"), col("n").as("n_b"),
+        col("shingle").as("__shingle_b"))
+      // candidates: shared prefix shingle + the length filter
+      // τ·max ≤ min ⟺ tauNum·n_a ≤ tauDen·n_b ∧ tauNum·n_b ≤ tauDen·n_a
+      val cand = a.join(b, col("shingle") === col("__shingle_b") &&
+          col("doc_a") < col("doc_b") &&
+          lit(tauNum.toLong) * col("n_a") <= lit(tauDen.toLong) * col("n_b") &&
+          lit(tauNum.toLong) * col("n_b") <= lit(tauDen.toLong) * col("n_a"))
+        .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
+        .distinct()
+      val result = if (!verify) cand.select(col("doc_a"), col("doc_b"))
+      else {
+        // exact intersection count restricted to the candidate set — as an
+        // IN-ROW set intersection, not a postings join. The old tail joined
+        // cand ⋈ A-postings ⋈ B-postings, whose intermediate is
+        // candidates × set-size ROWS through a composite-key shuffle (the
+        // measured scaling-wall of this family: ~290M joined rows at the
+        // ×10 corpus for 2.9M candidates). Carrying each doc's (distinct)
+        // shingle set as ONE array column instead moves candidates rows —
+        // same bytes, 100× fewer rows — and `array_intersect` is a
+        // codegen'd hash-set probe per pair, O(n_a + n_b). The sets frame
+        // is doc-sized (one array per doc): AQE broadcasts it at bench
+        // scale; at 100 TB it shuffle-joins on the doc key, rows still
+        // ∝ candidates, never candidates × set size. Derived from the RAW
+        // CORPUS deliberately, not folded off the checkpointed postings:
+        // the obvious "reuse the checkpoint" refactor (groupBy(doc_id)
+        // .collect_list over the exploded postings) replaces one cheap
+        // shuffle-FREE codegen scan (shingle arrays materialize in the
+        // scan itself) with a full postings-mass shuffle — measured 2.98s
+        // → 9.51s on this family at the ×10 corpus. The checkpoint's job
+        // is de-duplicating the EXPLODED-posting subtrees (ranked/prefix/
+        // indexed); the array-per-doc frame was never exploded.
+        val sets = df.select(id.cast("long").as("__sid"),
+          graft.functions.text.wordShingleHashes(text, 3).as("__set"))
+        cand
+          .join(sets.select(col("__sid").as("doc_a"), col("__set").as("__set_a")),
+            "doc_a")
+          .join(sets.select(col("__sid").as("doc_b"), col("__set").as("__set_b")),
+            "doc_b")
+          .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
+            size(array_intersect(col("__set_a"), col("__set_b")))
+              .cast("long").as("__inter"))
+          .select(col("doc_a"), col("doc_b"),
+            (col("__inter").cast("double") /
+              (col("n_a") + col("n_b") - col("__inter"))).as("jaccard"))
+          .filter(col("jaccard") >= lit(tauNum.toDouble / tauDen))
+      }
+      // materialize the (threshold-pruned, small) result; the corpus-sized
+      // postings are released on return — one persistent RDD survives
+      if (!verify) result else s.keep(s.checkpoint(result))
     }
   }
 
@@ -201,53 +196,51 @@ object SetJoin {
     // same checkpoint discipline as the Jaccard core: the production path
     // materializes the postings (ranked/prefix AND the full indexed side
     // read them), the diagnostic candidates path stays lazy
-    val rawPostings = df.select(id.as("doc_id"),
-        graft.functions.text.wordShingleHashes(text, 3).as("__sh"))
-      .select(col("doc_id"), size(col("__sh")).cast("long").as("n"),
-        explode(col("__sh")).as("shingle"))
-    val postings =
-      if (verify) graft.ops.Checkpoints.checkpoint(rawPostings)
-      else rawPostings
-    val wDf = Window.partitionBy(col("shingle"))
-    val wDoc = Window.partitionBy(col("doc_id"))
-      .orderBy(col("__df"), col("shingle"))
-    val ranked = postings
-      .withColumn("__df", count(lit(1)).over(wDf))
-      .withColumn("__rn", row_number().over(wDoc))
-    val ceilTauN = (lit(tauNum.toLong) * col("n") + lit(tauDen.toLong - 1L))
-      .divide(lit(tauDen.toLong)).cast("long")
-    val probe = ranked.filter(col("__rn") <= col("n") - ceilTauN + lit(1L))
-      .select(col("doc_id").as("doc_a"), col("n").as("n_a"), col("shingle"))
-    val indexed = postings.select(col("doc_id").as("doc_b"),
-      col("n").as("n_b"), col("shingle").as("__shingle_b"))
-    val cand = probe.join(indexed,
-        col("shingle") === col("__shingle_b") &&
-        col("doc_a") =!= col("doc_b") &&
-        lit(tauDen.toLong) * col("n_b") >= lit(tauNum.toLong) * col("n_a"))
-      .select(col("doc_a"), col("doc_b"), col("n_a"))
-      .distinct()
-    if (!verify) cand.select(col("doc_a"), col("doc_b"))
-    else {
-      // raw-corpus sets, same reasoning as the Jaccard core: the shingle
-      // arrays materialize shuffle-free in a codegen scan; folding them
-      // off the checkpointed postings costs a postings-mass shuffle
-      val sets = df.select(id.cast("long").as("__sid"),
-        graft.functions.text.wordShingleHashes(text, 3).as("__set"))
-      val result = cand
-        .join(sets.select(col("__sid").as("doc_a"), col("__set").as("__set_a")),
-          "doc_a")
-        .join(sets.select(col("__sid").as("doc_b"), col("__set").as("__set_b")),
-          "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("n_a"),
-          size(array_intersect(col("__set_a"), col("__set_b")))
-            .cast("long").as("__inter"))
-        .filter(lit(tauDen.toLong) * col("__inter") >=
-          lit(tauNum.toLong) * col("n_a"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("__inter").cast("double") / col("n_a")).as("containment"))
-      val res = graft.ops.Checkpoints.checkpoint(result)
-      graft.ops.Checkpoints.release(postings)
-      res
+    graft.ops.Checkpoints.scoped { s =>
+      val rawPostings = df.select(id.as("doc_id"),
+          graft.functions.text.wordShingleHashes(text, 3).as("__sh"))
+        .select(col("doc_id"), size(col("__sh")).cast("long").as("n"),
+          explode(col("__sh")).as("shingle"))
+      val postings = if (verify) s.checkpoint(rawPostings) else rawPostings
+      val wDf = Window.partitionBy(col("shingle"))
+      val wDoc = Window.partitionBy(col("doc_id"))
+        .orderBy(col("__df"), col("shingle"))
+      val ranked = postings
+        .withColumn("__df", count(lit(1)).over(wDf))
+        .withColumn("__rn", row_number().over(wDoc))
+      val ceilTauN = (lit(tauNum.toLong) * col("n") + lit(tauDen.toLong - 1L))
+        .divide(lit(tauDen.toLong)).cast("long")
+      val probe = ranked.filter(col("__rn") <= col("n") - ceilTauN + lit(1L))
+        .select(col("doc_id").as("doc_a"), col("n").as("n_a"), col("shingle"))
+      val indexed = postings.select(col("doc_id").as("doc_b"),
+        col("n").as("n_b"), col("shingle").as("__shingle_b"))
+      val cand = probe.join(indexed,
+          col("shingle") === col("__shingle_b") &&
+          col("doc_a") =!= col("doc_b") &&
+          lit(tauDen.toLong) * col("n_b") >= lit(tauNum.toLong) * col("n_a"))
+        .select(col("doc_a"), col("doc_b"), col("n_a"))
+        .distinct()
+      if (!verify) cand.select(col("doc_a"), col("doc_b"))
+      else {
+        // raw-corpus sets, same reasoning as the Jaccard core: the shingle
+        // arrays materialize shuffle-free in a codegen scan; folding them
+        // off the checkpointed postings costs a postings-mass shuffle
+        val sets = df.select(id.cast("long").as("__sid"),
+          graft.functions.text.wordShingleHashes(text, 3).as("__set"))
+        val result = cand
+          .join(sets.select(col("__sid").as("doc_a"), col("__set").as("__set_a")),
+            "doc_a")
+          .join(sets.select(col("__sid").as("doc_b"), col("__set").as("__set_b")),
+            "doc_b")
+          .select(col("doc_a"), col("doc_b"), col("n_a"),
+            size(array_intersect(col("__set_a"), col("__set_b")))
+              .cast("long").as("__inter"))
+          .filter(lit(tauDen.toLong) * col("__inter") >=
+            lit(tauNum.toLong) * col("n_a"))
+          .select(col("doc_a"), col("doc_b"),
+            (col("__inter").cast("double") / col("n_a")).as("containment"))
+        s.keep(s.checkpoint(result))
+      }
     }
   }
 }

@@ -117,13 +117,12 @@ object Sketches {
     * no false negatives (a build key's own cells are always set; pinned
     * in Round7Spec). Appends column `name` to `probe`.
     *
-    * CALLER CONTRACT: pass `bits` already materialized (localCheckpoint
-    * or cached) — left as a plan, each of the four broadcast exchanges
-    * independently re-runs the build-side scan and its distinct shuffle
-    * (the qHeavyHitters lesson). The checkpoint lives at the CALL SITE so
-    * the caller can unpersist it after its terminal action — an internal
-    * checkpoint here had no release hook and accumulated one working
-    * table per invocation until the ContextCleaner got around to it.
+    * CALLER CONTRACT: pass `bits` already materialized (a checkpoint of
+    * the caller's Checkpoints scope) — left as a plan, each of the four
+    * broadcast exchanges independently re-runs the build-side scan and
+    * its distinct shuffle (the qHeavyHitters lesson). The checkpoint
+    * lives at the CALL SITE so the caller's scope releases it after its
+    * terminal action.
     */
   def bloomMember(probe: DataFrame, key: Column, bits: DataFrame,
       width: Int, name: String): DataFrame = {

@@ -84,6 +84,7 @@ object DatalakeQueries {
     */
   def run(spark: SparkSession, dir: String, root: String): DataFrame = {
     val statePath = s"$root/state/events.watermark"
+    val usagePath = Datalake.path(root, Datalake.Usage, "events", "market_stats")
 
     // ---- extract → RAW. ts travels as micros-since-epoch longs: JSON has
     // no timestamp type, and a lossless integer beats parsing round-trips.
@@ -91,79 +92,79 @@ object DatalakeQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("ts_us_ts", timestamp_micros(col("ts_us")))
-    // persisted: the increment is consumed by four actions (emptiness
-    // probe, bulk write, page collect, watermark max) — one scan, not four
-    val batch = Watermark.incrementalRead(spark, src, "ts_us_ts", statePath)
-      .persist()
-    val bulkPath = Datalake.path(root, Datalake.Raw, "events", "bulk")
-    val pageDir = Datalake.path(root, Datalake.Raw, "events", "page0")
-    // raw ACCUMULATES across runs (the fetcher appends pages; formatted is
-    // rebuilt from all of raw each run, like the reference's convert step).
-    // The FIRST run always lands the raw dirs — possibly empty — so the
-    // format stage has layers to read; after that an empty increment skips
-    // the fetch writes entirely. A crash between fetch and commit
-    // re-appends the same increment on retry; the format stage's dedup
-    // absorbs the duplicates (at-least-once, idempotent).
-    // BOTH raw artifacts must exist to skip the fetch — the format stage
-    // reads both, and a crash between the bulk write and the page write
-    // would otherwise wedge every later empty-increment run on a missing
-    // fetch.json
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
+    graft.ops.Checkpoints.scoped { s =>
+      // persisted: the increment is consumed by four actions (emptiness
+      // probe, bulk write, page collect, watermark max) — one scan, not four
+      val batch = s.persist(
+        Watermark.incrementalRead(spark, src, "ts_us_ts", statePath))
+      val bulkPath = Datalake.path(root, Datalake.Raw, "events", "bulk")
+      val pageDir = Datalake.path(root, Datalake.Raw, "events", "page0")
+      // raw ACCUMULATES across runs (the fetcher appends pages; formatted is
+      // rebuilt from all of raw each run, like the reference's convert step).
+      // The FIRST run always lands the raw dirs — possibly empty — so the
+      // format stage has layers to read; after that an empty increment skips
+      // the fetch writes entirely. A crash between fetch and commit
+      // re-appends the same increment on retry; the format stage's dedup
+      // absorbs the duplicates (at-least-once, idempotent).
+      // BOTH raw artifacts must exist to skip the fetch — the format stage
+      // reads both, and a crash between the bulk write and the page write
+      // would otherwise wedge every later empty-increment run on a missing
+      // fetch.json
+      val hconf = spark.sparkContext.hadoopConfiguration
+      def exists(p: String): Boolean = {
+        val hp = new org.apache.hadoop.fs.Path(p)
+        hp.getFileSystem(hconf).exists(hp)
+      }
+      val rawInitialized = exists(bulkPath) && exists(s"$pageDir/fetch.json")
+      if (batch.head(1).nonEmpty || !rawInitialized) {
+        Datalake.writeJsonl(batch.drop("ts_us_ts"), bulkPath,
+          org.apache.spark.sql.SaveMode.Append)
+        // one fetch page = one pretty JSON ARRAY (bounded: a real API page) —
+        // overlaps the bulk feed on purpose. Written through the SAME Hadoop
+        // FS as every other layer artifact (java.nio would silently land on
+        // driver-local disk for an hdfs://-or-s3a:// root and the exists()
+        // gate above would never see it).
+        val pageRows = batch.drop("ts_us_ts").filter(col("event_id") <= 50)
+          .orderBy(col("event_id")).toJSON.collect()
+        val pagePath = new org.apache.hadoop.fs.Path(s"$pageDir/fetch.json")
+        val fs = pagePath.getFileSystem(hconf)
+        val out = fs.create(pagePath, true)
+        try out.write(pageRows.mkString("[\n", ",\n", "\n]").getBytes("UTF-8"))
+        finally out.close()
+      }
+
+      // ---- transform → FORMATTED: array + JSONL raw reads unioned, value
+      // coerced (errors='coerce' → fillna(0)), dedup keep-last per
+      // (user_id, event_type) — absorbs the page/bulk overlap and any
+      // re-fetched increments
+      val raw = Datalake.readJsonArray(spark, s"$pageDir/fetch.json", rawSchema)
+        .unionByName(Datalake.readJsonl(spark, bulkPath, rawSchema))
+      val formatted = dedupKeepLast(coerceRaw(raw)).drop("value")
+      val fmtPath = Datalake.path(root, Datalake.Formatted, "events", "latest")
+      Datalake.writeParquet(formatted, fmtPath)
+
+      // ---- compute_usage → USAGE: per (type, day) market stats over the
+      // formatted layer; exact decimal sums, final projection DOUBLE
+      val fmt = spark.read.parquet(fmtPath)
+      val usage = usageStats(fmt)
+      Datalake.writeParquet(usage, usagePath)
+
+      // ---- index/export: validated docs (whitelist + range + not-null) as
+      // the JSONL bulk shape
+      val validated = fmt.filter(
+        col("event_type").isin("view", "click", "purchase") &&
+          col("value_clean") >= 0 && col("user_id").isNotNull)
+      Datalake.writeJsonl(
+        validated.select(
+          concat(lit("evt_"), col("event_id")).as("doc_id"),
+          col("user_id"), col("event_type"), col("value_clean"),
+          col("event_date")),
+        Datalake.path(root, Datalake.Usage, "events", "export"))
+
+      // ---- state: watermark forward to the batch max ts — next run's
+      // incremental read starts past it
+      Watermark.commit(spark, batch, "ts_us_ts", statePath)
     }
-    val rawInitialized = exists(bulkPath) && exists(s"$pageDir/fetch.json")
-    if (batch.head(1).nonEmpty || !rawInitialized) {
-      Datalake.writeJsonl(batch.drop("ts_us_ts"), bulkPath,
-        org.apache.spark.sql.SaveMode.Append)
-      // one fetch page = one pretty JSON ARRAY (bounded: a real API page) —
-      // overlaps the bulk feed on purpose. Written through the SAME Hadoop
-      // FS as every other layer artifact (java.nio would silently land on
-      // driver-local disk for an hdfs://-or-s3a:// root and the exists()
-      // gate above would never see it).
-      val pageRows = batch.drop("ts_us_ts").filter(col("event_id") <= 50)
-        .orderBy(col("event_id")).toJSON.collect()
-      val pagePath = new org.apache.hadoop.fs.Path(s"$pageDir/fetch.json")
-      val fs = pagePath.getFileSystem(hconf)
-      val out = fs.create(pagePath, true)
-      try out.write(pageRows.mkString("[\n", ",\n", "\n]").getBytes("UTF-8"))
-      finally out.close()
-    }
-
-    // ---- transform → FORMATTED: array + JSONL raw reads unioned, value
-    // coerced (errors='coerce' → fillna(0)), dedup keep-last per
-    // (user_id, event_type) — absorbs the page/bulk overlap and any
-    // re-fetched increments
-    val raw = Datalake.readJsonArray(spark, s"$pageDir/fetch.json", rawSchema)
-      .unionByName(Datalake.readJsonl(spark, bulkPath, rawSchema))
-    val formatted = dedupKeepLast(coerceRaw(raw)).drop("value")
-    val fmtPath = Datalake.path(root, Datalake.Formatted, "events", "latest")
-    Datalake.writeParquet(formatted, fmtPath)
-
-    // ---- compute_usage → USAGE: per (type, day) market stats over the
-    // formatted layer; exact decimal sums, final projection DOUBLE
-    val fmt = spark.read.parquet(fmtPath)
-    val usage = usageStats(fmt)
-    val usagePath = Datalake.path(root, Datalake.Usage, "events", "market_stats")
-    Datalake.writeParquet(usage, usagePath)
-
-    // ---- index/export: validated docs (whitelist + range + not-null) as
-    // the JSONL bulk shape
-    val validated = fmt.filter(
-      col("event_type").isin("view", "click", "purchase") &&
-        col("value_clean") >= 0 && col("user_id").isNotNull)
-    Datalake.writeJsonl(
-      validated.select(
-        concat(lit("evt_"), col("event_id")).as("doc_id"),
-        col("user_id"), col("event_type"), col("value_clean"),
-        col("event_date")),
-      Datalake.path(root, Datalake.Usage, "events", "export"))
-
-    // ---- state: watermark forward to the batch max ts — next run's
-    // incremental read starts past it
-    Watermark.commit(spark, batch, "ts_us_ts", statePath)
-    batch.unpersist()
 
     spark.read.parquet(usagePath)
       .orderBy(col("event_type"), col("event_date"))

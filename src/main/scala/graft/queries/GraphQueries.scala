@@ -169,52 +169,45 @@ object GraphQueries {
     // node-sized peel stops paying cluster-width empty-task overhead per
     // stage per round. Construction stays under AQE for the scan-side
     // broadcast planning, materialized by the count below.
-    var edges = Checkpoints.checkpoint(und)
-    var nEdges = edges.count()
-    var converged = false
-    var rounds = 0
-    graft.ops.Fixpoint.withLoopConf(spark,
-        graft.ops.Fixpoint.widthFor(spark, 2L * nEdges)) {
-      while (rounds < 16 && !converged) {
-        rounds += 1
-        val deg = edges.select(col("u").as("n"))
-          .unionAll(edges.select(col("v").as("n")))
-          .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        val keep = deg.filter(col("d") >= k).select(col("n"))
-        val pruned = edges
-          .join(keep.withColumnRenamed("n", "u").hint("shuffle_hash"),
-            Seq("u"), "leftsemi")
-          .join(keep.withColumnRenamed("n", "v").hint("shuffle_hash"),
-            Seq("v"), "leftsemi")
-          .select(col("u"), col("v"))
-        val obs = org.apache.spark.sql.Observation()
-        val next = Checkpoints.checkpoint(
-          pruned.observe(obs, count(lit(1)).as("n")))
-        // harvested from the checkpoint's own action — no second job
-        val nNext = obs.get("n").asInstanceOf[Long]
-        Checkpoints.release(edges)
-        edges = next
-        converged = nNext == nEdges
-        nEdges = nNext
+    Checkpoints.scoped { s =>
+      var edges = s.checkpoint(und)
+      var nEdges = edges.count()
+      var converged = false
+      var rounds = 0
+      graft.ops.Fixpoint.withLoopConf(spark,
+          graft.ops.Fixpoint.widthFor(spark, 2L * nEdges)) {
+        while (rounds < 16 && !converged) {
+          rounds += 1
+          val deg = edges.select(col("u").as("n"))
+            .unionAll(edges.select(col("v").as("n")))
+            .groupBy(col("n")).agg(count(lit(1)).as("d"))
+          val keep = deg.filter(col("d") >= k).select(col("n"))
+          val pruned = edges
+            .join(keep.withColumnRenamed("n", "u").hint("shuffle_hash"),
+              Seq("u"), "leftsemi")
+            .join(keep.withColumnRenamed("n", "v").hint("shuffle_hash"),
+              Seq("v"), "leftsemi")
+            .select(col("u"), col("v"))
+          val obs = org.apache.spark.sql.Observation()
+          val next = s.checkpoint(pruned.observe(obs, count(lit(1)).as("n")))
+          // harvested from the checkpoint's own action — no second job
+          val nNext = obs.get("n").asInstanceOf[Long]
+          s.release(edges)
+          edges = next
+          converged = nNext == nEdges
+          nEdges = nNext
+        }
       }
-    }
-    if (!converged) {
-      // release the tail checkpoint before dying — without this the
-      // throw path leaks the final localCheckpoint's blocks until
-      // ContextCleaner GC (r16 ADVICE)
-      Checkpoints.release(edges)
-      throw new IllegalStateException(
+      if (!converged) throw new IllegalStateException(
         "qKcore: peel did not reach a fixpoint within 16 rounds — raise " +
           "the bound instead of trusting a half-peeled core")
+      // the converged edges stay persisted: the returned frame reads them
+      s.keep(edges)
+      edges.select(col("u").as("node"))
+        .unionAll(edges.select(col("v").as("node")))
+        .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
+        .orderBy(col("node"))
     }
-    // the converged `edges` checkpoint is NOT released here by design:
-    // the returned frame reads it lazily, so an eager release would pull
-    // the blocks out from under the caller — the blocks live until the
-    // frame is consumed and ContextCleaner collects them
-    edges.select(col("u").as("node"))
-      .unionAll(edges.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-      .orderBy(col("node"))
   }
 
   /** HIERARCHY ROLL-UP via POINTER DOUBLING (round 15c — the
@@ -243,47 +236,45 @@ object GraphQueries {
     import graft.ops.Checkpoints
     val parts = Tables.part(spark, dir).select(col("p_partkey").as("node"))
     // initial state: one step up (or self for roots)
-    var state = parts.select(col("node"),
+    val init = parts.select(col("node"),
       when(col("node") >= 4, expr("node div 4")).otherwise(col("node"))
         .as("cur"),
       when(col("node") >= 4, col("node") % 3 + 1).otherwise(lit(1L))
         .cast("long").as("prod"),
       when(col("node") >= 4, 1L).otherwise(0L).as("depth"))
-    var cp = Checkpoints.checkpoint(state)
-    state = cp
-    for (_ <- 1 to 5) {
-      val t = state.select(col("node").as("t_node"), col("cur").as("t_cur"),
-        col("prod").as("t_prod"), col("depth").as("t_depth"))
-      val next = state.join(t.hint("shuffle_hash"),
-          state("cur") === t("t_node"), "left")
-        .select(col("node"),
-          when(col("cur") >= 4, col("t_cur")).otherwise(col("cur"))
-            .as("cur"),
-          when(col("cur") >= 4, col("prod") * col("t_prod"))
-            .otherwise(col("prod")).as("prod"),
-          when(col("cur") >= 4, col("depth") + col("t_depth"))
-            .otherwise(col("depth")).as("depth"))
-      val nextCp = Checkpoints.checkpoint(next)
-      Checkpoints.release(cp)
-      cp = nextCp
-      state = nextCp
+    Checkpoints.scoped { s =>
+      var state = s.checkpoint(init)
+      for (_ <- 1 to 5) {
+        val t = state.select(col("node").as("t_node"), col("cur").as("t_cur"),
+          col("prod").as("t_prod"), col("depth").as("t_depth"))
+        val next = state.join(t.hint("shuffle_hash"),
+            state("cur") === t("t_node"), "left")
+          .select(col("node"),
+            when(col("cur") >= 4, col("t_cur")).otherwise(col("cur"))
+              .as("cur"),
+            when(col("cur") >= 4, col("prod") * col("t_prod"))
+              .otherwise(col("prod")).as("prod"),
+            when(col("cur") >= 4, col("depth") + col("t_depth"))
+              .otherwise(col("depth")).as("depth"))
+        val nextCp = s.checkpoint(next)
+        s.release(state)
+        state = nextCp
+      }
+      // convergence gate: 5 doubling rounds close depth ≤ 32; a deeper
+      // hierarchy would silently emit non-root `cur` values as roots, so
+      // assert reachability loudly (one cheap count over the checkpointed
+      // state — roots are keys ≤ 3 by construction)
+      val unconverged = state.filter(col("cur") >= 4).count()
+      if (unconverged > 0) throw new IllegalStateException(
+        s"qBomRollup: $unconverged nodes did not reach a root after 5 " +
+          "pointer-doubling rounds (hierarchy deeper than 32 levels) — " +
+          "raise the round count instead of trusting these as roots")
+      s.keep(s.checkpoint(state
+        .groupBy(col("cur").as("root"), col("depth"))
+        .agg(count(lit(1)).as("n_parts"),
+          sum(col("prod")).cast("bigint").as("total_units"))
+        .orderBy(col("root"), col("depth"))))
     }
-    // convergence gate: 5 doubling rounds close depth ≤ 32; a deeper
-    // hierarchy would silently emit non-root `cur` values as roots, so
-    // assert reachability loudly (one cheap count over the checkpointed
-    // state — roots are keys ≤ 3 by construction)
-    val unconverged = state.filter(col("cur") >= 4).count()
-    if (unconverged > 0) throw new IllegalStateException(
-      s"qBomRollup: $unconverged nodes did not reach a root after 5 " +
-        "pointer-doubling rounds (hierarchy deeper than 32 levels) — " +
-        "raise the round count instead of trusting these as roots")
-    val res = Checkpoints.checkpoint(state
-      .groupBy(col("cur").as("root"), col("depth"))
-      .agg(count(lit(1)).as("n_parts"),
-        sum(col("prod")).cast("bigint").as("total_units"))
-      .orderBy(col("root"), col("depth")))
-    Checkpoints.release(cp)
-    res
   }
 
   // ---- Registry rows and their DuckDB oracles ----

@@ -576,9 +576,9 @@ object Relational {
       evenHalf: Boolean)(fit: DataFrame => M): M = {
     import graft.ops.{Checkpoints, Gbt}
     val train = Gbt.featurize(spark, dir).filter(col("is_train"))
-    val tr = Checkpoints.checkpoint(
-      if (evenHalf) train.filter(expr("pk % 2 = 0")) else train)
-    try fit(tr) finally Checkpoints.release(tr)
+    Checkpoints.scoped { s =>
+      fit(s.checkpoint(if (evenHalf) train.filter(expr("pk % 2 = 0")) else train))
+    }
   }
 
   /** The GBT stump model on the full train slice. The GBT rows take it as
@@ -1523,45 +1523,42 @@ object Relational {
     * false_negative_rows column certifies 0 on every run).
     */
   def qBloomPrune(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Sketches
+    import graft.ops.{Checkpoints, Sketches}
     val w = 1 << 17
-    // the build keys feed the bit set AND the exact-match join —
-    // materialize once instead of rescanning orders for each
-    val urgent = Tables.orders(spark, dir)
-      .filter(col("o_orderpriority").like("1-%"))
-      .select(col("o_orderkey"))
-      .localCheckpoint(true)
-    // materialized per bloomMember's caller contract (four broadcast
-    // exchanges read it); released below with the other working tables
-    val bits = Sketches.bloomBits(urgent, col("o_orderkey").cast("string"), w)
-      .localCheckpoint(true)
-    val flagged = Sketches.bloomMember(
-        Tables.lineitem(spark, dir).select(col("l_orderkey")),
-        col("l_orderkey").cast("string"), bits, w, "bloom_pass")
-      .join(broadcast(urgent), col("l_orderkey") === col("o_orderkey"),
-        "left")
-    // checkpoint the 1-row summary eagerly so the working tables can be
-    // released before returning (the triangleCounts discipline): one
-    // invocation leaves exactly one persistent RDD — the result
-    val res = flagged
-      .agg(
-        count(lit(1)).as("probe_rows"),
-        sum(when(col("bloom_pass"), 1L).otherwise(0L)).as("bloom_pass_rows"),
-        sum(when(col("o_orderkey").isNotNull, 1L).otherwise(0L))
-          .as("exact_match_rows"),
-        sum(when(col("bloom_pass") && col("o_orderkey").isNull, 1L)
-          .otherwise(0L)).as("false_positive_rows"),
-        sum(when(!col("bloom_pass") && col("o_orderkey").isNotNull, 1L)
-          .otherwise(0L)).as("false_negative_rows"))
-      .select(col("probe_rows"), col("bloom_pass_rows"),
-        col("exact_match_rows"), col("false_positive_rows"),
-        col("false_negative_rows"),
-        ((col("probe_rows") - col("bloom_pass_rows")).cast("double") /
-          col("probe_rows")).as("pruned_fraction"))
-      .localCheckpoint(true)
-    graft.ops.Checkpoints.release(urgent)
-    graft.ops.Checkpoints.release(bits)
-    res
+    Checkpoints.scoped { s =>
+      // the build keys feed the bit set AND the exact-match join —
+      // materialize once instead of rescanning orders for each
+      val urgent = s.checkpoint(Tables.orders(spark, dir)
+        .filter(col("o_orderpriority").like("1-%"))
+        .select(col("o_orderkey")))
+      // materialized per bloomMember's caller contract (four broadcast
+      // exchanges read it)
+      val bits = s.checkpoint(
+        Sketches.bloomBits(urgent, col("o_orderkey").cast("string"), w))
+      val flagged = Sketches.bloomMember(
+          Tables.lineitem(spark, dir).select(col("l_orderkey")),
+          col("l_orderkey").cast("string"), bits, w, "bloom_pass")
+        .join(broadcast(urgent), col("l_orderkey") === col("o_orderkey"),
+          "left")
+      // the 1-row summary is checkpointed so the working tables are
+      // released before returning: one invocation leaves exactly one
+      // persistent RDD — the result
+      s.keep(s.checkpoint(flagged
+        .agg(
+          count(lit(1)).as("probe_rows"),
+          sum(when(col("bloom_pass"), 1L).otherwise(0L)).as("bloom_pass_rows"),
+          sum(when(col("o_orderkey").isNotNull, 1L).otherwise(0L))
+            .as("exact_match_rows"),
+          sum(when(col("bloom_pass") && col("o_orderkey").isNull, 1L)
+            .otherwise(0L)).as("false_positive_rows"),
+          sum(when(!col("bloom_pass") && col("o_orderkey").isNotNull, 1L)
+            .otherwise(0L)).as("false_negative_rows"))
+        .select(col("probe_rows"), col("bloom_pass_rows"),
+          col("exact_match_rows"), col("false_positive_rows"),
+          col("false_negative_rows"),
+          ((col("probe_rows") - col("bloom_pass_rows")).cast("double") /
+            col("probe_rows")).as("pruned_fraction"))))
+    }
   }
 
   /** Histogram quantiles per event type (ops.Sketches.histQuantiles):
@@ -1630,30 +1627,30 @@ object Relational {
   def qCooccurrence(spark: SparkSession, dir: String): DataFrame = {
     // distinct (order, part): multiple lineitems of the same part in one
     // order count once — basket membership, not quantity
-    val basket = graft.ops.Checkpoints.checkpoint(
-      Tables.lineitem(spark, dir)
-        .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
-        .distinct())
-    val marg = basket.groupBy(col("pkey")).agg(count(lit(1)).as("n_solo"))
-    val a = basket.select(col("okey"), col("pkey").as("p_a"))
-    val b = basket.select(col("okey"), col("pkey").as("p_b"))
-    val pairs = a.join(b, Seq("okey"))
-      .filter(col("p_a") < col("p_b"))
-      .groupBy(col("p_a"), col("p_b")).agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= 3)
-    val res = graft.ops.Checkpoints.checkpoint(
-      pairs
-        .join(marg.select(col("pkey").as("p_a"), col("n_solo").as("n_a")),
-          Seq("p_a"))
-        .join(marg.select(col("pkey").as("p_b"), col("n_solo").as("n_b")),
-          Seq("p_b"))
-        .select(col("p_a"), col("p_b"), col("n_ab"), col("n_a"), col("n_b"),
-          (col("n_ab").cast("double") /
-            sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
-            .as("cosine"))
-        .orderBy(col("p_a"), col("p_b")))
-    graft.ops.Checkpoints.release(basket)
-    res
+    graft.ops.Checkpoints.scoped { s =>
+      val basket = s.checkpoint(
+        Tables.lineitem(spark, dir)
+          .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
+          .distinct())
+      val marg = basket.groupBy(col("pkey")).agg(count(lit(1)).as("n_solo"))
+      val a = basket.select(col("okey"), col("pkey").as("p_a"))
+      val b = basket.select(col("okey"), col("pkey").as("p_b"))
+      val pairs = a.join(b, Seq("okey"))
+        .filter(col("p_a") < col("p_b"))
+        .groupBy(col("p_a"), col("p_b")).agg(count(lit(1)).as("n_ab"))
+        .filter(col("n_ab") >= 3)
+      s.keep(s.checkpoint(
+        pairs
+          .join(marg.select(col("pkey").as("p_a"), col("n_solo").as("n_a")),
+            Seq("p_a"))
+          .join(marg.select(col("pkey").as("p_b"), col("n_solo").as("n_b")),
+            Seq("p_b"))
+          .select(col("p_a"), col("p_b"), col("n_ab"), col("n_a"), col("n_b"),
+            (col("n_ab").cast("double") /
+              sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
+              .as("cosine"))
+          .orderBy(col("p_a"), col("p_b"))))
+    }
   }
 
   /** Association RULES (round 11 — Apriori step 2 over the q_cooccurrence
@@ -1675,49 +1672,49 @@ object Relational {
   def qAssocRules(spark: SparkSession, dir: String): DataFrame = {
     val minItemSupport = 25L
     val minPairSupport = 3L
-    val basket = graft.ops.Checkpoints.checkpoint(
-      Tables.lineitem(spark, dir)
-        .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
-        .distinct())
-    val marg = basket.groupBy(col("pkey")).agg(count(lit(1)).as("n_item"))
-    val freq = marg.filter(col("n_item") >= minItemSupport)
-    val nOrders = basket.select(col("okey")).distinct()
-      .agg(count(lit(1)).as("__n_orders"))
-    // Apriori prune: infrequent items leave the baskets BEFORE the
-    // quadratic pair stage — freq is catalog-sized, broadcast it. The
-    // prune is a SEMI-join (keys only): dragging n_item through the
-    // order-key self-join would widen the pair shuffle AND the groupBy
-    // key for values the threshold-pruned rule table can re-fetch from
-    // the catalog-sized marginals afterwards (measured 2.3s → the
-    // q_cooccurrence shape at ~1.3s)
-    val fb = basket.join(broadcast(freq.select(col("pkey"))), Seq("pkey"),
-      "left_semi")
-    val a = fb.select(col("okey"), col("pkey").as("p_a"))
-    val b = fb.select(col("okey"), col("pkey").as("p_b"))
-    val pairs = a.join(b, Seq("okey"))
-      .filter(col("p_a") < col("p_b"))
-      .groupBy(col("p_a"), col("p_b"))
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= minPairSupport)
-    val rules = pairs.select(col("p_a").as("antecedent"),
-        col("p_b").as("consequent"), col("n_ab"))
-      .unionByName(pairs.select(col("p_b").as("antecedent"),
-        col("p_a").as("consequent"), col("n_ab")))
-    val res = graft.ops.Checkpoints.checkpoint(
-      rules
-        .join(broadcast(marg.select(col("pkey").as("antecedent"),
-          col("n_item").as("n_ant"))), Seq("antecedent"))
-        .join(broadcast(marg.select(col("pkey").as("consequent"),
-          col("n_item").as("n_cons"))), Seq("consequent"))
-        .crossJoin(broadcast(nOrders))
-        .select(col("antecedent"), col("consequent"), col("n_ab"),
-          col("n_ant"), col("n_cons"),
-          (col("n_ab").cast("double") / col("n_ant")).as("confidence"),
-          ((col("n_ab") * col("__n_orders")).cast("double") /
-            (col("n_ant") * col("n_cons"))).as("lift"))
-        .orderBy(col("antecedent"), col("consequent")))
-    graft.ops.Checkpoints.release(basket)
-    res
+    graft.ops.Checkpoints.scoped { s =>
+      val basket = s.checkpoint(
+        Tables.lineitem(spark, dir)
+          .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
+          .distinct())
+      val marg = basket.groupBy(col("pkey")).agg(count(lit(1)).as("n_item"))
+      val freq = marg.filter(col("n_item") >= minItemSupport)
+      val nOrders = basket.select(col("okey")).distinct()
+        .agg(count(lit(1)).as("__n_orders"))
+      // Apriori prune: infrequent items leave the baskets BEFORE the
+      // quadratic pair stage — freq is catalog-sized, broadcast it. The
+      // prune is a SEMI-join (keys only): dragging n_item through the
+      // order-key self-join would widen the pair shuffle AND the groupBy
+      // key for values the threshold-pruned rule table can re-fetch from
+      // the catalog-sized marginals afterwards (measured 2.3s → the
+      // q_cooccurrence shape at ~1.3s)
+      val fb = basket.join(broadcast(freq.select(col("pkey"))), Seq("pkey"),
+        "left_semi")
+      val a = fb.select(col("okey"), col("pkey").as("p_a"))
+      val b = fb.select(col("okey"), col("pkey").as("p_b"))
+      val pairs = a.join(b, Seq("okey"))
+        .filter(col("p_a") < col("p_b"))
+        .groupBy(col("p_a"), col("p_b"))
+        .agg(count(lit(1)).as("n_ab"))
+        .filter(col("n_ab") >= minPairSupport)
+      val rules = pairs.select(col("p_a").as("antecedent"),
+          col("p_b").as("consequent"), col("n_ab"))
+        .unionByName(pairs.select(col("p_b").as("antecedent"),
+          col("p_a").as("consequent"), col("n_ab")))
+      s.keep(s.checkpoint(
+        rules
+          .join(broadcast(marg.select(col("pkey").as("antecedent"),
+            col("n_item").as("n_ant"))), Seq("antecedent"))
+          .join(broadcast(marg.select(col("pkey").as("consequent"),
+            col("n_item").as("n_cons"))), Seq("consequent"))
+          .crossJoin(broadcast(nOrders))
+          .select(col("antecedent"), col("consequent"), col("n_ab"),
+            col("n_ant"), col("n_cons"),
+            (col("n_ab").cast("double") / col("n_ant")).as("confidence"),
+            ((col("n_ab") * col("__n_orders")).cast("double") /
+              (col("n_ant") * col("n_cons"))).as("lift"))
+          .orderBy(col("antecedent"), col("consequent"))))
+    }
   }
 
   /** Explicit GROUPING SETS (round 15): the third member of the
@@ -1778,25 +1775,25 @@ object Relational {
       .agg(decSum2(col("o_totalprice")).cast("double").as("spend"),
         count(lit(1)).as("n_orders"))
     val c = Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")
-    val joined = Checkpoints.checkpoint(
-      spend.join(c, spend("o_custkey") === c("c_custkey"))
-        .select(col("c_custkey"), col("c_mktsegment"), col("spend"),
-          col("n_orders")))
     val rk = col("__rk").cast("double")
     val n = col("__n").cast("double")
-    // `joined` (the tail checkpoint) is deliberately NOT released: the
-    // returned frame's rank phases read it lazily — blocks live until
-    // ContextCleaner collects the unreferenced frame (r16 ADVICE note)
-    Ranking.withRank(joined, Seq("c_mktsegment"), "spend", desc = true,
-        tieCol = "c_custkey", rankName = "__rk", nName = "__n").df
-      .select(col("c_custkey"), col("c_mktsegment"), col("spend"),
-        col("n_orders"),
-        Ranking.ntileOf(col("__rk"), col("__n"), 4).cast("bigint")
-          .as("quartile"),
-        when(col("__n") === 1, lit(0.0))
-          .otherwise((rk - lit(1.0)) / (n - lit(1.0))).as("pct_rank"),
-        (rk / n).as("cume"))
-      .orderBy(col("c_mktsegment"), col("spend").desc, col("c_custkey"))
+    Checkpoints.scoped { s =>
+      // kept: the returned frame's rank phases read it lazily
+      val joined = s.keep(s.checkpoint(
+        spend.join(c, spend("o_custkey") === c("c_custkey"))
+          .select(col("c_custkey"), col("c_mktsegment"), col("spend"),
+            col("n_orders"))))
+      Ranking.withRank(joined, Seq("c_mktsegment"), "spend", desc = true,
+          tieCol = "c_custkey", rankName = "__rk", nName = "__n").df
+        .select(col("c_custkey"), col("c_mktsegment"), col("spend"),
+          col("n_orders"),
+          Ranking.ntileOf(col("__rk"), col("__n"), 4).cast("bigint")
+            .as("quartile"),
+          when(col("__n") === 1, lit(0.0))
+            .otherwise((rk - lit(1.0)) / (n - lit(1.0))).as("pct_rank"),
+          (rk / n).as("cume"))
+        .orderBy(col("c_mktsegment"), col("spend").desc, col("c_custkey"))
+    }
   }
 
   /** k-ANONYMITY suppression (round 15, k=5): the third privacy op beside
@@ -1996,23 +1993,19 @@ object Relational {
     // fused withRanks counts all three dimensions in one bounded pass
     // and chains the three bucket windows in one consumer plan (~6
     // jobs), with bit-identical ranks (Round18Spec pins the
-    // equivalence). cp0 (the tail checkpoint) is deliberately NOT
-    // released: the returned frame reads it lazily and an eager release
-    // would drop its blocks before the caller consumes them — they live
-    // until ContextCleaner collects the unreferenced frame (r16 ADVICE
-    // note).
-    val cp0 = Checkpoints.checkpoint(rfm)
-    val ranked = Ranking.withRanks(cp0, Seq(
-        Ranking.RankDim("r_days", desc = false, "__rk_r", "__n"),
-        Ranking.RankDim("f_orders", desc = true, "__rk_f", "__n2"),
-        Ranking.RankDim("m_total", desc = true, "__rk_m", "__n3")),
-      tieCol = "o_custkey")
-    // on the skew fallback cp0 is fully consumed inside withRanks (the
-    // returned frame reads only the tail checkpoint) — release it now
-    // instead of leaking its blocks until ContextCleaner GC (r18 ADVICE
-    // #2); on the fused path the returned plan reads cp0 lazily and it
-    // must stay persisted (the deliberate non-release above).
-    if (ranked.fellBack) Checkpoints.release(cp0)
+    // equivalence). The fused path's returned plan reads cp0 lazily, so
+    // it is kept; the skew fallback consumes cp0 inside withRanks and
+    // returns its own tail checkpoint, so cp0 is released.
+    val ranked = Checkpoints.scoped { s =>
+      val cp0 = s.checkpoint(rfm)
+      val r = Ranking.withRanks(cp0, Seq(
+          Ranking.RankDim("r_days", desc = false, "__rk_r", "__n"),
+          Ranking.RankDim("f_orders", desc = true, "__rk_f", "__n2"),
+          Ranking.RankDim("m_total", desc = true, "__rk_m", "__n3")),
+        tieCol = "o_custkey")
+      if (!r.fellBack) s.keep(cp0)
+      r
+    }
     ranked.df
       .select(col("o_custkey"), col("r_days"), col("f_orders"),
         col("m_total"),
@@ -2246,27 +2239,26 @@ object Relational {
       .groupBy(col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("prio"))
       .agg(count(lit(1)).as("n_xy"))
-    val cached = graft.ops.Checkpoints.checkpoint(joint)
-    val cx = cached.groupBy(col("seg"))
-      .agg(sum(col("n_xy")).cast("bigint").as("n_x"))
-    val cy = cached.groupBy(col("prio"))
-      .agg(sum(col("n_xy")).cast("bigint").as("n_y"))
-    val t = cached.agg(sum(col("n_xy")).cast("bigint").as("n"))
     val term = floor((col("n_xy").cast("double") / col("n")) *
       log((col("n_xy").cast("double") * col("n").cast("double")) /
         (col("n_x").cast("double") * col("n_y").cast("double"))) *
       lit(65536.0)) / lit(65536.0)
-    // the final frame is checkpointed EAGERLY before the joint table's
-    // blocks are released — release-before-consume would strand the
-    // truncated lineage (the Checkpoints contract)
-    val res = graft.ops.Checkpoints.checkpoint(cached
-      .join(broadcast(cx), Seq("seg"))
-      .join(broadcast(cy), Seq("prio"))
-      .crossJoin(broadcast(t))
-      .agg(count(lit(1)).as("n_pairs"), max(col("n")).as("n"),
-        sum(term).as("mi_nats")))
-    graft.ops.Checkpoints.release(cached)
-    res
+    graft.ops.Checkpoints.scoped { s =>
+      val cached = s.checkpoint(joint)
+      val cx = cached.groupBy(col("seg"))
+        .agg(sum(col("n_xy")).cast("bigint").as("n_x"))
+      val cy = cached.groupBy(col("prio"))
+        .agg(sum(col("n_xy")).cast("bigint").as("n_y"))
+      val t = cached.agg(sum(col("n_xy")).cast("bigint").as("n"))
+      // the final frame is checkpointed EAGERLY, so the joint table's
+      // blocks can be released on return
+      s.keep(s.checkpoint(cached
+        .join(broadcast(cx), Seq("seg"))
+        .join(broadcast(cy), Seq("prio"))
+        .crossJoin(broadcast(t))
+        .agg(count(lit(1)).as("n_pairs"), max(col("n")).as("n"),
+          sum(term).as("mi_nats"))))
+    }
   }
 
   /** K-fold OUT-OF-FOLD target encoding (round 15c): the leakage-safe

@@ -326,14 +326,14 @@ object StreamQueries {
       root.resolve("ck").toString, width = 1024).awaitTermination()
     val cms = CorpusStreams.cmsRead(spark, root.resolve("store").toString)
     // exact side: the same one-scan count table as the batch row
-    val counts = graft.ops.Checkpoints.checkpoint(
-      Tables.documents(spark, dir)
-        .select(explode(graft.functions.text.wordShingles(col("text"), 1))
-          .as("t"))
-        .groupBy(col("t")).agg(count(lit(1)).as("exact_cnt")))
-    val res = TextQueries.heavyHittersResult(counts, cms)
-    graft.ops.Checkpoints.release(counts)
-    res
+    graft.ops.Checkpoints.scoped { s =>
+      val counts = s.checkpoint(
+        Tables.documents(spark, dir)
+          .select(explode(graft.functions.text.wordShingles(col("text"), 1))
+            .as("t"))
+          .groupBy(col("t")).agg(count(lit(1)).as("exact_cnt")))
+      TextQueries.heavyHittersResult(s, counts, cms)
+    }
   }
 
   /** q_drift_psi over a STREAM-MAINTAINED histogram store: events stream

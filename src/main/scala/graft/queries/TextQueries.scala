@@ -113,46 +113,54 @@ object TextQueries {
     */
   def qHybridSearch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, dir)
-    // checkpoint the tiny corpus-derived query set: it feeds TWO
-    // broadcasts inside the BM25 serve (the semi-restricting term set and
-    // the scoring join) and each would otherwise re-derive this scan
-    val queryTerms = graft.ops.Checkpoints.checkpoint(
+    graft.ops.Checkpoints.scoped { s =>
+      val docs = Tables.documents(spark, dir)
+      val queryTerms = moreLikeThisTerms(s, docs)
+      val lex = graft.ops.Retrieval.bm25TopK(docs, col("doc_id"), col("text"),
+          queryTerms, k = 20)
+        .filter(col("doc_id") =!= col("query_id"))
+        .select(col("query_id"), col("doc_id"),
+          col("rank").cast("long").as("lex_rank"))
+      val embs = Tables.embeddings(spark, dir)
+        .select(col("vec_id").as("id"), col("embedding").as("emb"))
+      val qv = embs.filter(col("id") < 5)
+        .select(col("id").as("query_id"), col("emb").as("q_emb"))
+      val vec = graft.ops.Similarity.knnBruteForceTopK(embs, qv, 20)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"),
+          col("rank").as("vec_rank"))
+      // full-outer can't broadcast; without the hint it falls to
+      // SortMergeJoin (the q_table_diff discipline — registry plans stay
+      // SMJ-free; both sides are ≤20-row-per-query rank lists anyway)
+      val fused = lex.join(vec.hint("shuffle_hash"),
+        Seq("query_id", "doc_id"), "full_outer")
+        .select(col("query_id"), col("doc_id"),
+          (coalesce(lit(1.0) / (lit(60.0) + col("lex_rank")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
+            .as("rrf"),
+          col("lex_rank"), col("vec_rank"))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("rrf").desc, col("doc_id"))
+      fused.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 10)
+        .select(col("query_id"), col("rank"), col("doc_id"), col("rrf"),
+          col("lex_rank"), col("vec_rank"))
+        .orderBy(col("query_id"), col("rank"))
+    }
+  }
+
+  /** The more-like-this query set of the two hybrid rows: the terms of
+    * docs 0-4, checkpointed and kept in `s`. It feeds TWO broadcasts
+    * inside the BM25 serve (the semi-restricting term set and the scoring
+    * join), each of which would otherwise re-derive this scan.
+    */
+  private def moreLikeThisTerms(s: graft.ops.Checkpoints.Scope,
+      docs: DataFrame): DataFrame =
+    s.keep(s.checkpoint(
       docs.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"),
           explode(graft.functions.text.wordShingles(col("text"), 1)).as("term"))
         .filter(col("term") =!= "")
-        .distinct())
-    val lex = graft.ops.Retrieval.bm25TopK(docs, col("doc_id"), col("text"),
-        queryTerms, k = 20)
-      .filter(col("doc_id") =!= col("query_id"))
-      .select(col("query_id"), col("doc_id"),
-        col("rank").cast("long").as("lex_rank"))
-    val embs = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-    val qv = embs.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    val vec = graft.ops.Similarity.knnBruteForceTopK(embs, qv, 20)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("vec_rank"))
-    // full-outer can't broadcast; without the hint it falls to
-    // SortMergeJoin (the q_table_diff discipline — registry plans stay
-    // SMJ-free; both sides are ≤20-row-per-query rank lists anyway)
-    val fused = lex.join(vec.hint("shuffle_hash"),
-      Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"),
-        (coalesce(lit(1.0) / (lit(60.0) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
-          .as("rrf"),
-        col("lex_rank"), col("vec_rank"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 10)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("rrf"),
-        col("lex_rank"), col("vec_rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+        .distinct()))
 
   /** BM25 served from a PUBLISHED, INCREMENTALLY-BUILT inverted index
     * (round 11 — the reference's actual indexing shape: index_to_es.py
@@ -243,50 +251,46 @@ object TextQueries {
       cents: Array[Array[Float]]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.sources.Datalake
-    val docs = Tables.documents(spark, dir)
-    val root = graft.queries.DatalakeQueries.tempLakeRoot() + "/hybrid_serve"
-    // same checkpointed more-like-this query set as q_hybrid_search
-    val queryTerms = graft.ops.Checkpoints.checkpoint(
-      docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("query_id"),
-          explode(graft.functions.text.wordShingles(col("text"), 1)).as("term"))
-        .filter(col("term") =!= "")
-        .distinct())
-    // the two serving stores — each one atomic publish, read back
-    // through its manifest (a real deployment builds these hourly/daily)
-    Datalake.publish(indexPostings(docs), s"$root/postings", "1")
-    Datalake.publish(indexStats(docs), s"$root/docstats", "1")
-    val emb = SimilarityQueries.corpus(spark, dir)
-    Datalake.publish(emb, s"$root/ivf", "1")
-    val lex = graft.ops.Retrieval.bm25TopKFromIndex(
-        Datalake.readPublished(spark, s"$root/postings"),
-        Datalake.readPublished(spark, s"$root/docstats"), queryTerms, k = 20)
-      .filter(col("doc_id") =!= col("query_id"))
-      .select(col("query_id"), col("doc_id"),
-        col("rank").cast("long").as("lex_rank"))
-    val qv = emb.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("emb").as("q_emb"))
-    val vec = graft.ops.Similarity.ivfFlatKnnWith(
-        Datalake.readPublished(spark, s"$root/ivf"), qv, cents,
-        k = 20, nProbe = SimilarityQueries.IvfNProbe)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("vec_rank"))
-    // the q_hybrid_search fusion tail verbatim (shuffle_hash: full-outer
-    // of two rank-truncated lists — SMJ-free, never data-sized)
-    val fused = lex.join(vec.hint("shuffle_hash"),
-      Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"),
-        (coalesce(lit(1.0) / (lit(60.0) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
-          .as("rrf"),
-        col("lex_rank"), col("vec_rank"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 10)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("rrf"),
-        col("lex_rank"), col("vec_rank"))
-      .orderBy(col("query_id"), col("rank"))
+    graft.ops.Checkpoints.scoped { s =>
+      val docs = Tables.documents(spark, dir)
+      val root = graft.queries.DatalakeQueries.tempLakeRoot() + "/hybrid_serve"
+      val queryTerms = moreLikeThisTerms(s, docs)
+      // the two serving stores — each one atomic publish, read back
+      // through its manifest (a real deployment builds these hourly/daily)
+      Datalake.publish(indexPostings(docs), s"$root/postings", "1")
+      Datalake.publish(indexStats(docs), s"$root/docstats", "1")
+      val emb = SimilarityQueries.corpus(spark, dir)
+      Datalake.publish(emb, s"$root/ivf", "1")
+      val lex = graft.ops.Retrieval.bm25TopKFromIndex(
+          Datalake.readPublished(spark, s"$root/postings"),
+          Datalake.readPublished(spark, s"$root/docstats"), queryTerms, k = 20)
+        .filter(col("doc_id") =!= col("query_id"))
+        .select(col("query_id"), col("doc_id"),
+          col("rank").cast("long").as("lex_rank"))
+      val qv = emb.filter(col("id") < 5)
+        .select(col("id").as("query_id"), col("emb").as("q_emb"))
+      val vec = graft.ops.Similarity.ivfFlatKnnWith(
+          Datalake.readPublished(spark, s"$root/ivf"), qv, cents,
+          k = 20, nProbe = SimilarityQueries.IvfNProbe)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"),
+          col("rank").as("vec_rank"))
+      // the q_hybrid_search fusion tail verbatim (shuffle_hash: full-outer
+      // of two rank-truncated lists — SMJ-free, never data-sized)
+      val fused = lex.join(vec.hint("shuffle_hash"),
+        Seq("query_id", "doc_id"), "full_outer")
+        .select(col("query_id"), col("doc_id"),
+          (coalesce(lit(1.0) / (lit(60.0) + col("lex_rank")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
+            .as("rrf"),
+          col("lex_rank"), col("vec_rank"))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("rrf").desc, col("doc_id"))
+      fused.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 10)
+        .select(col("query_id"), col("rank"), col("doc_id"), col("rrf"),
+          col("lex_rank"), col("vec_rank"))
+        .orderBy(col("query_id"), col("rank"))
+    }
   }
 
   /** Bigram-LM quality scoring: every 10th doc trains the reference LM,
@@ -412,13 +416,13 @@ object TextQueries {
     // the occurrence-stream build would re-scan the corpus for the same
     // cells. The vocab-sized count table is checkpointed and released
     // after the 20-row result materializes.
-    val counts = graft.ops.Checkpoints.checkpoint(
-      toks.groupBy(col("t")).agg(count(lit(1)).as("exact_cnt")))
-    val cms = Sketches.cmsBuildWeighted(counts, col("t"), col("exact_cnt"),
-      width = 1024)
-    val res = heavyHittersResult(counts, cms)
-    graft.ops.Checkpoints.release(counts)
-    res
+    graft.ops.Checkpoints.scoped { s =>
+      val counts = s.checkpoint(
+        toks.groupBy(col("t")).agg(count(lit(1)).as("exact_cnt")))
+      val cms = Sketches.cmsBuildWeighted(counts, col("t"), col("exact_cnt"),
+        width = 1024)
+      heavyHittersResult(s, counts, cms)
+    }
   }
 
   /** Shared tail of the heavy-hitters rows: exact top-20 from the
@@ -426,24 +430,23 @@ object TextQueries {
     * from `cms` — which may be the batch-built sketch (qHeavyHitters) or
     * the cell-wise-summed streaming store (qStreamHeavyHitters); CMS
     * linearity makes both the SAME counters, so the result is identical.
+    * The result is a checkpoint kept in `s`; its working tables are not.
     */
-  private[graft] def heavyHittersResult(counts: DataFrame,
-      cms: DataFrame): DataFrame = {
+  private[graft] def heavyHittersResult(s: graft.ops.Checkpoints.Scope,
+      counts: DataFrame, cms: DataFrame): DataFrame = {
     import graft.ops.Sketches
     // the top-20 appears TWICE in the result plan (join left side + the
     // estimate's query set) and Spark has no cross-subtree reuse —
     // checkpoint the 20 rows so the vocab-wide TakeOrdered runs once
-    val exact = graft.ops.Checkpoints.checkpoint(counts
+    val exact = s.checkpoint(counts
       .orderBy(col("exact_cnt").desc, col("t"))
       .limit(20))
-    val res = graft.ops.Checkpoints.checkpoint(exact
+    s.keep(s.checkpoint(exact
       .join(Sketches.cmsEstimate(cms, exact.select(col("t")), col("t"),
         width = 1024).withColumnRenamed("item", "t"), Seq("t"))
       .select(col("t").as("token"), col("exact_cnt"), col("cms_est"),
         (col("cms_est") - col("exact_cnt")).as("overcount"))
-      .orderBy(col("exact_cnt").desc, col("token")))
-    graft.ops.Checkpoints.release(exact)
-    res
+      .orderBy(col("exact_cnt").desc, col("token"))))
   }
 
   /** In-engine trained multinomial Naive Bayes language classifier
@@ -578,28 +581,27 @@ object TextQueries {
     // checkpoint the bigram table: marginals, the 1-row total, AND the main
     // join all read it — without materialization each subtree re-runs the
     // corpus scan + shingle + shuffle (4 corpus passes at 100 TB)
-    val cxy = graft.ops.Checkpoints.checkpoint(
-      bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_xy")))
-    val cl = cxy.groupBy(col("w1")).agg(sum(col("n_xy")).as("n_left"))
-    val cr = cxy.groupBy(col("w2")).agg(sum(col("n_xy")).as("n_right"))
-    val total = cxy.agg(sum(col("n_xy")).as("total"))
-    val res = graft.ops.Checkpoints.checkpoint(
-      cxy.filter(col("n_xy") >= 5)
-        .join(cl, Seq("w1"))
-        .join(cr, Seq("w2"))
-        .crossJoin(broadcast(total))
-        .select(col("w1"), col("w2"), col("n_xy"),
-          (floor(log(
-            (col("n_xy").cast("double") * col("total").cast("double")) /
-              (col("n_left").cast("double") * col("n_right").cast("double")))
-            * lit(65536.0)) / lit(65536.0)).as("pmi"))
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))
-        .limit(100))
-    // the ≤100-row result is materialized — release the working bigram
-    // table now (the q_heavy_hitters discipline: one persistent RDD per
-    // invocation, the result)
-    graft.ops.Checkpoints.release(cxy)
-    res
+    // the ≤100-row result is checkpointed, so the working bigram table is
+    // released on return: one persistent RDD per invocation, the result
+    graft.ops.Checkpoints.scoped { s =>
+      val cxy = s.checkpoint(
+        bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_xy")))
+      val cl = cxy.groupBy(col("w1")).agg(sum(col("n_xy")).as("n_left"))
+      val cr = cxy.groupBy(col("w2")).agg(sum(col("n_xy")).as("n_right"))
+      val total = cxy.agg(sum(col("n_xy")).as("total"))
+      s.keep(s.checkpoint(
+        cxy.filter(col("n_xy") >= 5)
+          .join(cl, Seq("w1"))
+          .join(cr, Seq("w2"))
+          .crossJoin(broadcast(total))
+          .select(col("w1"), col("w2"), col("n_xy"),
+            (floor(log(
+              (col("n_xy").cast("double") * col("total").cast("double")) /
+                (col("n_left").cast("double") * col("n_right").cast("double")))
+              * lit(65536.0)) / lit(65536.0)).as("pmi"))
+          .orderBy(col("pmi").desc, col("w1"), col("w2"))
+          .limit(100)))
+    }
   }
 
   /** Per-source token entropy (round 8): Shannon entropy of each source's

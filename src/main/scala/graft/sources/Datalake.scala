@@ -884,17 +884,16 @@ object Datalake {
               new org.apache.hadoop.fs.Path("/" + rel).toUri.toString
                 .stripPrefix("/")
             val bigNames = big.map(f => metaRel(f.file))
-            val carried = spark.read.parquet(s"$tableRoot/$dvRel")
-              .filter(col("__file").isin(bigNames: _*))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
+            graft.ops.Checkpoints.scoped { s =>
+              val carried = s.persist(spark.read.parquet(s"$tableRoot/$dvRel")
+                .filter(col("__file").isin(bigNames: _*)))
               if (carried.count() > 0) {
                 val rel =
                   s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
                 carried.write.parquet(s"$tableRoot/$rel")
                 s"dv=v=$newV;$rel"
               } else s"v=$newV"
-            } finally { carried.unpersist(blocking = false); () }
+            }
           case None => s"v=$newV"
         }
         commitOrDiscard(spark, tableRoot, snap, newToken)(
@@ -1027,7 +1026,7 @@ object Datalake {
     * strict-schema apply stream): delta columns ABSENT from the base are
     * appended to the output schema; matched/inserted rows carry the
     * delta's value, pre-existing unmatched base rows are null-backfilled.
-    * With it OFF (default), extra delta columns stay what they always
+    * With it OFF, extra delta columns stay what they always
     * were — op markers visible to `deleteWhen`, dropped from the result —
     * so an evolving caller must first drop any marker column it does not
     * want absorbed into the table.
@@ -1035,7 +1034,7 @@ object Datalake {
   private def mergeFrames(base: DataFrame, delta: DataFrame,
       keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column],
-      evolveSchema: Boolean = false): DataFrame = {
+      evolveSchema: Boolean): DataFrame = {
     require(keys.nonEmpty, "merge needs at least one key column")
     val dataCols = base.columns.filterNot(keys.contains).toSeq
     val missing = (keys ++ dataCols).filterNot(delta.columns.contains)
@@ -1170,11 +1169,10 @@ object Datalake {
     // persist so the count and the write share one evaluation — the
     // previous read-back-and-count paid a whole extra scan of the
     // accumulated vector per delete (review finding)
-    val merged = existingDv
-      .map(p => spark.read.parquet(p).unionByName(newDel).distinct())
-      .getOrElse(newDel.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.ops.Checkpoints.scoped { s =>
+      val merged = s.persist(existingDv
+        .map(p => spark.read.parquet(p).unionByName(newDel).distinct())
+        .getOrElse(newDel.distinct()))
       val n = merged.count()
       val rel = s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
       merged.write.parquet(s"$tableRoot/$rel")
@@ -1189,7 +1187,7 @@ object Datalake {
         discard(spark, s"$tableRoot/$rel")
         None
       }
-    } finally { merged.unpersist(blocking = false); () }
+    }
   }
 
   // ==================== optimistic concurrency (CAS) ====================

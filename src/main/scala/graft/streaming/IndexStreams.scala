@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
 import graft.sources.Datalake
