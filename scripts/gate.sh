@@ -21,6 +21,8 @@ if ! sbt -batch test >"$OUT/test.log" 2>&1; then
   exit 1
 fi
 grep -E "Tests:" "$OUT/test.log" | tail -1
+# report only: oracle SQL copied between rows instead of named once
+python3 scripts/oracle_repeats.py || true
 # A query that THROWS at runtime leaves no output dir — check_oracle
 # would then never see it, so a runtime-broken (but compiling) snapshot
 # would gate green. Verify records such failures in _failures.txt

@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * Usage: sbt "runMain graft.Inspect <sfDir> [q_a,q_b,...] [reps]"
   *
   * Each selected row (every row when no list is given) runs `reps` times
-  * (default 1); run 1 includes JVM and codegen warm-up. Then one line of
+  * (default 1); run 1 includes JVM and codegen warm-up. Each run prints
+  * its time in two parts: building the frame (a row built on a checkpoint,
+  * such as q_bom_rollup, runs its loop here) and executing it. Then one line of
   * operator counts from the last run's executed plan — a quick scan for
   * accidental shuffles — and that plan's formatted explain, which under AQE
   * is the final plan. Redirect stdout to keep the plans in a file.
@@ -29,8 +31,11 @@ object Inspect {
         val qe = (1 to reps).map { i =>
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
           materialize(df)
-          println(f"INSPECT $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
+          val t2 = System.nanoTime()
+          println(f"INSPECT $name run$i: ${(t2 - t0) / 1e9}%.2fs " +
+            f"(build ${(t1 - t0) / 1e9}%.2fs, execute ${(t2 - t1) / 1e9}%.2fs)")
           df
         }.last.queryExecution
         val plan = (qe.executedPlan match {
@@ -48,6 +53,7 @@ object Inspect {
         println(qe.explainString(ExplainMode.fromString("formatted")))
       } catch { case e: Throwable => println(s"INSPECT $name FAILED: ${e.getMessage}") }
     }
+    graft.streaming.StreamReplay.stopStreams(spark)
     spark.stop()
   }
 

@@ -368,6 +368,20 @@ object CorpusQueries {
 
   // ---- Registry rows and their DuckDB oracles ----
 
+  /** 64-word chunks at a 48-word stride over `src` (doc_id, ws, n —
+    * the word list and its length): `c` one row per chunk, then each
+    * chunk's span and text. */
+  private def chunkWindowsSql(src: String): String =
+    s"""c AS (SELECT doc_id, ws, n,
+       |    unnest(generate_series(0, greatest((n-1)//48, 0))) AS chunk_idx
+       |  FROM $src)
+       |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+       |  CAST(chunk_idx*48 AS BIGINT) AS chunk_start,
+       |  CAST(least(64, n - chunk_idx*48) AS BIGINT) AS chunk_len,
+       |  array_to_string(list_slice(ws, chunk_idx*48 + 1,
+       |    chunk_idx*48 + least(64, n - chunk_idx*48)), ' ') AS chunk_text
+       |FROM c ORDER BY doc_id, chunk_idx""".stripMargin
+
   /** The CorpusQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
     // weight = integer-derived arithmetic (bit-identical both engines);
@@ -383,9 +397,7 @@ object CorpusQueries {
     // eval set = every 50th doc; contamination = any shared word 8-gram
     // (same normalization as the jaccard oracle)
     "q_decontaminate" -> fixed(qDecontaminate _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""WITH ${TextQueries.wordsCte("w", "doc_id")},
         |sh AS (SELECT doc_id,
         |    list_distinct(CASE WHEN len(ws) < 8 THEN [array_to_string(ws, ' ')]
         |      ELSE list_transform(generate_series(1, len(ws) - 7),
@@ -422,35 +434,22 @@ object CorpusQueries {
     // DuckDB list_slice end is INCLUSIVE (start-1+len), unlike Spark's
     // slice(start, length)
     "q_chunk_windows" -> fixed(qChunkWindows _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS ws
+      s"""WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(text), '\\s+') AS ws
         |  FROM documents),
         |t AS (SELECT doc_id, ws, len(ws) AS n FROM w),
-        |c AS (SELECT doc_id, ws, n,
-        |    unnest(generate_series(0, greatest((n-1)//48, 0))) AS chunk_idx
-        |  FROM t)
-        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-        |  CAST(chunk_idx*48 AS BIGINT) AS chunk_start,
-        |  CAST(least(64, n - chunk_idx*48) AS BIGINT) AS chunk_len,
-        |  array_to_string(list_slice(ws, chunk_idx*48 + 1,
-        |    chunk_idx*48 + least(64, n - chunk_idx*48)), ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+        |${chunkWindowsSql("t")}""".stripMargin),
     "q_pii_scrub" -> fixed(qPiiScrub _)(
       """SELECT event_id,
         |  regexp_replace(props, '\d+', '[NUM]', 'g') AS props_clean,
         |  CAST(len(regexp_extract_all(props, '\d+')) AS BIGINT) AS n_redacted
         |FROM events ORDER BY event_id""".stripMargin),
     "q_repetition_filter" -> fixed(qRepetitionFilter _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""WITH ${TextQueries.wordsCte("w", "doc_id")},
         |d AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
         |    CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct
         |  FROM w),
-        |bg AS (SELECT doc_id, unnest(CASE WHEN len(ws) < 2
-        |    THEN [array_to_string(ws, ' ')]
-        |    ELSE list_transform(generate_series(1, len(ws) - 1),
-        |      i -> ws[i]||' '||ws[i+1]) END) AS b
+        |bg AS (SELECT doc_id, ${TextQueries.wordBigramsSql("ws")} AS b
         |  FROM w),
         |bc AS (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY doc_id, b),
         |bt AS (SELECT doc_id, MAX(c) AS top_bigram_n,
@@ -465,36 +464,25 @@ object CorpusQueries {
     // the composed pipeline: sample → repetition keep → chunk, each stage
     // the proven oracle fragment of its standalone query
     "q_corpus_pipeline" -> fixed(qCorpusPipeline _)(
-      """WITH s AS (SELECT doc_id, text FROM documents
+      s"""WITH s AS (SELECT doc_id, text FROM documents
         |  WHERE substring(md5(text), 1, 3) <
-        |    (CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS INT) % 2 = 0
+        |    (CASE WHEN CAST(regexp_extract(source, '(\\d+)', 1) AS INT) % 2 = 0
         |      THEN '800' ELSE '333' END)),
-        |w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS lws
+        |w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS lws
         |  FROM s),
         |d AS (SELECT doc_id, len(lws) AS n_words,
         |    len(list_distinct(lws)) AS n_distinct FROM w),
-        |bg AS (SELECT doc_id, unnest(CASE WHEN len(lws) < 2
-        |    THEN [array_to_string(lws, ' ')]
-        |    ELSE list_transform(generate_series(1, len(lws) - 1),
-        |      i -> lws[i]||' '||lws[i+1]) END) AS b
+        |bg AS (SELECT doc_id, ${TextQueries.wordBigramsSql("lws")} AS b
         |  FROM w),
         |bc AS (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY doc_id, b),
         |bt AS (SELECT doc_id, MAX(c) AS top_n, SUM(c) AS n_bg FROM bc GROUP BY doc_id),
         |keep AS (SELECT d.doc_id FROM d JOIN bt ON d.doc_id = bt.doc_id
         |  WHERE 1.0 - CAST(n_distinct AS DOUBLE)/CAST(n_words AS DOUBLE) <= 0.95
         |    AND CAST(top_n AS DOUBLE)/CAST(n_bg AS DOUBLE) <= 0.18),
-        |t AS (SELECT s.doc_id, regexp_split_to_array(trim(s.text), '\s+') AS ws
+        |t AS (SELECT s.doc_id, regexp_split_to_array(trim(s.text), '\\s+') AS ws
         |  FROM s JOIN keep ON s.doc_id = keep.doc_id),
         |t2 AS (SELECT doc_id, ws, len(ws) AS n FROM t),
-        |c AS (SELECT doc_id, ws, n,
-        |    unnest(generate_series(0, greatest((n-1)//48, 0))) AS chunk_idx
-        |  FROM t2)
-        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-        |  CAST(chunk_idx*48 AS BIGINT) AS chunk_start,
-        |  CAST(least(64, n - chunk_idx*48) AS BIGINT) AS chunk_len,
-        |  array_to_string(list_slice(ws, chunk_idx*48 + 1,
-        |    chunk_idx*48 + least(64, n - chunk_idx*48)), ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+        |${chunkWindowsSql("t2")}""".stripMargin),
     // the two-phase enumeration (bounded subbucket counts + offsets +
     // within-subbucket row_number) equals ONE window ranked by
     // (subbucket, key, doc_id) within the shard — which is how the oracle
@@ -613,14 +601,7 @@ object CorpusQueries {
     // divides two identically-rounded doubles and snaps to the 2^-16
     // grid; rho/256 is exact dyadic; exact counts ride along
     "q_kmv_overlap" -> fixed(qKmvOverlap _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |      ELSE list_transform(generate_series(1, len(ws) - 2),
-        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
-        |  FROM w),
+      s"""WITH ${SimilarityQueries.distinctTrigramCtes},
         |p AS (SELECT doc_id, unnest(sg) AS s FROM sh),
         |hh AS (SELECT doc_id, CAST(CAST(md5_number_lower(s) AS HUGEINT)
         |    % 4611686018427387904 AS BIGINT) AS h FROM p),

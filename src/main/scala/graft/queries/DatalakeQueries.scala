@@ -1703,6 +1703,115 @@ object DatalakeQueries {
       |GROUP BY event_type, event_date
       |ORDER BY event_type, event_date""".stripMargin
 
+  /** The row count, distinct keys and exact price sum of an `orders`
+    * survivor set — the content check of the concurrent-commit rows. */
+  private val tableStatsCols =
+    """COUNT(*) AS n_rows,
+      |  COUNT(DISTINCT o_orderkey) AS n_distinct,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+      |    AS sum_price""".stripMargin
+
+  /** The committed MERGE's oracle: the FULL OUTER JOIN + CASE of a
+    * keyed upsert with a delete arm (key ≡ 0 mod 10), over a base whose
+    * `FROM` clause is `baseFrom` — the base filter is the one part the
+    * merge rows vary. */
+  private[graft] def mergeThroughOracle(baseFrom: String): String =
+    s"""WITH base AS (
+       |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+       |  $baseFrom
+       |), delta AS (
+       |  SELECT o_orderkey, o_custkey,
+       |    o_totalprice + 10.0 AS o_totalprice,
+       |    'MERGED' AS o_orderpriority,
+       |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete' ELSE 'upsert'
+       |      END AS d_op
+       |  FROM orders WHERE o_orderkey % 2 = 0
+       |)
+       |SELECT COALESCE(d.o_orderkey, b.o_orderkey) AS o_orderkey,
+       |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_custkey
+       |    ELSE b.o_custkey END AS o_custkey,
+       |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_totalprice
+       |    ELSE b.o_totalprice END AS o_totalprice,
+       |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderpriority
+       |    ELSE b.o_orderpriority END AS o_orderpriority
+       |FROM base b FULL OUTER JOIN delta d
+       |  ON b.o_orderkey = d.o_orderkey
+       |WHERE NOT (d.o_orderkey IS NOT NULL AND d.d_op = 'delete')
+       |ORDER BY 1""".stripMargin
+
+  /** The in-session MERGE oracles (q_merge_upsert, q_merge_delete):
+    * presence-marked base and delta, the action-labelled FULL OUTER
+    * JOIN. `deltaCols` extends the delta's select list, `where` (empty
+    * or one line ending in a newline) filters the joined rows. */
+  private def mergeArmsOracle(deltaCols: String, where: String): String =
+    s"""WITH base AS (SELECT o_orderkey, 1 AS in_base, o_custkey,
+       |    o_totalprice, o_orderpriority
+       |  FROM orders WHERE o_orderkey % 3 <> 0),
+       |delta AS (SELECT o_orderkey, 1 AS in_delta,
+       |    o_custkey AS d_custkey, o_totalprice + 10.0 AS d_price,
+       |    'MERGED' AS d_priority$deltaCols
+       |  FROM orders WHERE o_orderkey % 2 = 0)
+       |SELECT COALESCE(base.o_orderkey, delta.o_orderkey) AS o_orderkey,
+       |  COALESCE(d_custkey, o_custkey) AS o_custkey,
+       |  CASE WHEN in_delta IS NOT NULL THEN d_price
+       |    ELSE o_totalprice END AS o_totalprice,
+       |  CASE WHEN in_delta IS NOT NULL THEN d_priority
+       |    ELSE o_orderpriority END AS o_orderpriority,
+       |  CASE WHEN in_base IS NULL THEN 'inserted'
+       |    WHEN in_delta IS NULL THEN 'kept'
+       |    ELSE 'updated' END AS action
+       |FROM base FULL OUTER JOIN delta ON base.o_orderkey = delta.o_orderkey
+       |${where}ORDER BY o_orderkey""".stripMargin
+
+  /** The two table states every diff oracle compares, with presence
+    * markers: `old` (keys ≢ 0 mod 7) and `new` (keys ≢ 0 mod 5, +5.0 on
+    * every third key) — an exact IEEE add, so changed-ness is
+    * bit-decidable in both engines. */
+  private val diffStatesCtes =
+    """old AS (SELECT o_orderkey, 1 AS in_old,
+      |    o_totalprice AS old_price
+      |  FROM orders WHERE o_orderkey % 7 <> 0),
+      |new AS (SELECT o_orderkey, 1 AS in_new,
+      |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+      |      ELSE o_totalprice END AS new_price
+      |  FROM orders WHERE o_orderkey % 5 <> 0)""".stripMargin
+
+  /** The per-key diff class over [[diffStatesCtes]]' presence markers. */
+  private val diffStatusSql =
+    """CASE WHEN in_old IS NULL THEN 'added'
+      |      WHEN in_new IS NULL THEN 'removed'
+      |      WHEN old_price IS DISTINCT FROM new_price THEN 'changed'
+      |      ELSE 'unchanged' END AS status""".stripMargin
+
+  /** The change feed's two table versions over `orders`: `old` (keys
+    * ≢ 0 mod 7) and `nu` (keys ≢ 0 mod 5, +5.0 on every third key). */
+  private[graft] val feedOldCte =
+    """old AS (SELECT o_orderkey, o_totalprice FROM orders
+      |    WHERE o_orderkey % 7 <> 0)""".stripMargin
+  private[graft] val feedNewCte =
+    """nu AS (SELECT o_orderkey,
+      |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
+      |      ELSE o_totalprice END AS o_totalprice
+      |  FROM orders WHERE o_orderkey % 5 <> 0)""".stripMargin
+
+  /** `j`: [[feedOldCte]] ⟗ [[feedNewCte]] by key, each side's key and
+    * price kept (`ko`/`po`, `kn`/`pn`). */
+  private[graft] val feedJoinCte =
+    """j AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k,
+      |    o.o_orderkey AS ko, n.o_orderkey AS kn,
+      |    o.o_totalprice AS po, n.o_totalprice AS pn
+      |  FROM old o FULL OUTER JOIN nu n ON o.o_orderkey = n.o_orderkey)""".stripMargin
+
+  /** A feed's update rows from `j`: a pre- and a post-image per key on
+    * both sides whose price changed, labelled `from` → `to`. */
+  private[graft] def feedUpdateRows(from: String, to: String): String =
+    s"""UNION ALL SELECT k, po, 'update_preimage', '$from', '$to' FROM j
+       |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+       |    AND po IS DISTINCT FROM pn
+       |UNION ALL SELECT k, pn, 'update_postimage', '$from', '$to' FROM j
+       |  WHERE ko IS NOT NULL AND kn IS NOT NULL
+       |    AND po IS DISTINCT FROM pn""".stripMargin
+
   /** The DatalakeQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
     // the full DAG (raw JSON → coerce+dedup → usage stats) reduced to its
@@ -1737,108 +1846,43 @@ object DatalakeQueries {
     // presence markers, not value-null checks; +5.0 is an exact IEEE add
     // so changed-ness is bit-decidable in both engines
     "q_table_diff" -> fixed(qTableDiff _)(
-      """WITH old AS (SELECT o_orderkey, 1 AS in_old,
-        |    o_totalprice AS old_price
-        |  FROM orders WHERE o_orderkey % 7 <> 0),
-        |new AS (SELECT o_orderkey, 1 AS in_new,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
-        |      ELSE o_totalprice END AS new_price
-        |  FROM orders WHERE o_orderkey % 5 <> 0),
+      s"""WITH $diffStatesCtes,
         |d AS (SELECT COALESCE(old.o_orderkey, new.o_orderkey) AS o_orderkey,
         |    old_price, new_price,
-        |    CASE WHEN in_old IS NULL THEN 'added'
-        |      WHEN in_new IS NULL THEN 'removed'
-        |      WHEN old_price IS DISTINCT FROM new_price THEN 'changed'
-        |      ELSE 'unchanged' END AS status
+        |    $diffStatusSql
         |  FROM old FULL OUTER JOIN new ON old.o_orderkey = new.o_orderkey)
         |SELECT o_orderkey, status, old_price, new_price FROM d
         |WHERE status <> 'unchanged' ORDER BY o_orderkey""".stripMargin),
-    "q_merge_upsert" -> fixed(qMergeUpsert _)(
-      """WITH base AS (SELECT o_orderkey, 1 AS in_base, o_custkey,
-        |    o_totalprice, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 3 <> 0),
-        |delta AS (SELECT o_orderkey, 1 AS in_delta,
-        |    o_custkey AS d_custkey, o_totalprice + 10.0 AS d_price,
-        |    'MERGED' AS d_priority
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT COALESCE(base.o_orderkey, delta.o_orderkey) AS o_orderkey,
-        |  COALESCE(d_custkey, o_custkey) AS o_custkey,
-        |  CASE WHEN in_delta IS NOT NULL THEN d_price
-        |    ELSE o_totalprice END AS o_totalprice,
-        |  CASE WHEN in_delta IS NOT NULL THEN d_priority
-        |    ELSE o_orderpriority END AS o_orderpriority,
-        |  CASE WHEN in_base IS NULL THEN 'inserted'
-        |    WHEN in_delta IS NULL THEN 'kept'
-        |    ELSE 'updated' END AS action
-        |FROM base FULL OUTER JOIN delta ON base.o_orderkey = delta.o_orderkey
-        |ORDER BY o_orderkey""".stripMargin),
+    "q_merge_upsert" -> fixed(qMergeUpsert _)(mergeArmsOracle("", "")),
     // MERGE with the DELETE arm: matched deletes (key ≡ 0 mod 10) drop
     // the base row, unmatched deletes are no-ops — the WHERE clause after
     // the full outer join IS the delete arm
     "q_merge_delete" -> fixed(qMergeDelete _)(
-      """WITH base AS (SELECT o_orderkey, 1 AS in_base, o_custkey,
-        |    o_totalprice, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 3 <> 0),
-        |delta AS (SELECT o_orderkey, 1 AS in_delta,
-        |    o_custkey AS d_custkey, o_totalprice + 10.0 AS d_price,
-        |    'MERGED' AS d_priority,
-        |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete'
-        |      ELSE 'upsert' END AS d_op
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT COALESCE(base.o_orderkey, delta.o_orderkey) AS o_orderkey,
-        |  COALESCE(d_custkey, o_custkey) AS o_custkey,
-        |  CASE WHEN in_delta IS NOT NULL THEN d_price
-        |    ELSE o_totalprice END AS o_totalprice,
-        |  CASE WHEN in_delta IS NOT NULL THEN d_priority
-        |    ELSE o_orderpriority END AS o_orderpriority,
-        |  CASE WHEN in_base IS NULL THEN 'inserted'
-        |    WHEN in_delta IS NULL THEN 'kept'
-        |    ELSE 'updated' END AS action
-        |FROM base FULL OUTER JOIN delta ON base.o_orderkey = delta.o_orderkey
-        |WHERE d_op IS NULL OR d_op <> 'delete'
-        |ORDER BY o_orderkey""".stripMargin),
+      mergeArmsOracle(
+        ",\n    CASE WHEN o_orderkey % 10 = 0 THEN 'delete'" +
+          "\n      ELSE 'upsert' END AS d_op",
+        "WHERE d_op IS NULL OR d_op <> 'delete'\n")),
     // CDF replay: insert/delete one row each, updates emit PRE+POST image
     // pairs; unchanged keys emit nothing. The engine runs this through a
     // real publish → version-read round trip; the oracle replays the
     // feed classes from the same filters over orders.
     "q_change_feed" -> fixed(qChangeFeed _)(
-      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
-        |    WHERE o_orderkey % 7 <> 0),
-        |nu AS (SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
-        |      ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 5 <> 0),
-        |j AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k,
-        |    o.o_orderkey AS ko, n.o_orderkey AS kn,
-        |    o.o_totalprice AS po, n.o_totalprice AS pn
-        |  FROM old o FULL OUTER JOIN nu n ON o.o_orderkey = n.o_orderkey)
+      s"""WITH $feedOldCte,
+        |$feedNewCte,
+        |$feedJoinCte
         |SELECT k AS o_orderkey, pn AS o_totalprice,
         |    'insert' AS _change_type, '1' AS _from_version,
         |    '2' AS _to_version
         |  FROM j WHERE ko IS NULL
         |UNION ALL SELECT k, po, 'delete', '1', '2' FROM j WHERE kn IS NULL
-        |UNION ALL SELECT k, po, 'update_preimage', '1', '2' FROM j
-        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |    AND po IS DISTINCT FROM pn
-        |UNION ALL SELECT k, pn, 'update_postimage', '1', '2' FROM j
-        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |    AND po IS DISTINCT FROM pn
+        |${feedUpdateRows("1", "2")}
         |ORDER BY o_orderkey, _change_type""".stripMargin),
     // the oracle replays the SNAPSHOT RULES directly — the Spark side must
     // round-trip them through publish/readVersion/readPublished to match,
     // so a wrong manifest resolution or version bleed hash-fails here
     "q_time_travel" -> fixed(qTimeTravel _)(
-      """WITH old AS (SELECT o_orderkey, 1 AS in_old,
-        |    o_totalprice AS old_price
-        |  FROM orders WHERE o_orderkey % 7 <> 0),
-        |new AS (SELECT o_orderkey, 1 AS in_new,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
-        |      ELSE o_totalprice END AS new_price
-        |  FROM orders WHERE o_orderkey % 5 <> 0),
-        |d AS (SELECT CASE WHEN in_old IS NULL THEN 'added'
-        |      WHEN in_new IS NULL THEN 'removed'
-        |      WHEN old_price IS DISTINCT FROM new_price THEN 'changed'
-        |      ELSE 'unchanged' END AS status, old_price, new_price
+      s"""WITH $diffStatesCtes,
+        |d AS (SELECT $diffStatusSql, old_price, new_price
         |  FROM old FULL OUTER JOIN new ON old.o_orderkey = new.o_orderkey)
         |SELECT status, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(old_price AS DECIMAL(18,2))) AS DOUBLE) AS sum_old,
@@ -1875,10 +1919,7 @@ object DatalakeQueries {
     // resolution examines 3 (2 probes + the pointer read), never the 12
     // live records; the mass re-proves the resolved state is unchanged
     "q_commit_checkpoint" -> fixed(qCommitCheckpoint _)(
-      """SELECT COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price,
+      s"""SELECT $tableStatsCols,
         |  CAST(12 AS BIGINT) AS latest_seq,
         |  CAST(12 AS BIGINT) AS records_live,
         |  CAST(3 AS BIGINT) AS n_examined,
@@ -2022,21 +2063,15 @@ object DatalakeQueries {
     // plain per-half aggregate; the commit-count and abort literals pin
     // "2 commits, no lost version, stale single-shot refused"
     "q_concurrent_publish" -> fixed(qConcurrentPublish _)(
-      """SELECT CAST(o_orderkey % 2 AS BIGINT) AS writer,
-        |  COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price,
+      s"""SELECT CAST(o_orderkey % 2 AS BIGINT) AS writer,
+        |  $tableStatsCols,
         |  CAST(2 AS BIGINT) AS n_commits,
         |  CAST(1 AS BIGINT) AS stale_publish_aborted
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
     // survivors = base minus BOTH racing predicates; the literals pin the
     // protocol evidence (2 log records, stale claim lost)
     "q_concurrent_delete" -> fixed(qConcurrentDelete _)(
-      """SELECT COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price,
+      s"""SELECT $tableStatsCols,
         |  CAST(2 AS BIGINT) AS n_commits,
         |  CAST(1 AS BIGINT) AS stale_delete_lost
         |FROM orders
@@ -2046,34 +2081,13 @@ object DatalakeQueries {
     // non-committed merges, with the deletion vector's predicate folded
     // into the base CTE (the merge reads THROUGH the vector)
     "q_merge_publish" -> fixed(qMergePublish _)(
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-        |  FROM orders
-        |  WHERE o_orderkey % 3 <> 0 AND NOT (o_custkey % 7 = 0)
-        |), delta AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    o_totalprice + 10.0 AS o_totalprice,
-        |    'MERGED' AS o_orderpriority,
-        |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete' ELSE 'upsert'
-        |      END AS d_op
-        |  FROM orders WHERE o_orderkey % 2 = 0
-        |)
-        |SELECT COALESCE(d.o_orderkey, b.o_orderkey) AS o_orderkey,
-        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_custkey
-        |    ELSE b.o_custkey END AS o_custkey,
-        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_totalprice
-        |    ELSE b.o_totalprice END AS o_totalprice,
-        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderpriority
-        |    ELSE b.o_orderpriority END AS o_orderpriority
-        |FROM base b FULL OUTER JOIN delta d
-        |  ON b.o_orderkey = d.o_orderkey
-        |WHERE NOT (d.o_orderkey IS NOT NULL AND d.d_op = 'delete')
-        |ORDER BY 1""".stripMargin),
+      mergeThroughOracle("FROM orders\n" +
+        "  WHERE o_orderkey % 3 <> 0 AND NOT (o_custkey % 7 = 0)")),
     // COMMUTING racing mergers: the final table is the closed form of
     // both writers' arms regardless of schedule; the 2-commit literal
     // pins that losing claims create no record
     "q_merge_concurrent" -> fixed(qMergeConcurrent _)(
-      """WITH survivors AS (
+      s"""WITH survivors AS (
         |  SELECT o_orderkey, o_totalprice FROM orders
         |  WHERE o_orderkey % 3 <> 0 AND o_orderkey % 10 NOT IN (2, 5, 7)
         |  UNION ALL
@@ -2082,19 +2096,13 @@ object DatalakeQueries {
         |  UNION ALL
         |  SELECT o_orderkey, o_totalprice + 20.0 FROM orders
         |  WHERE o_orderkey % 10 = 7)
-        |SELECT COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price,
+        |SELECT $tableStatsCols,
         |  CAST(2 AS BIGINT) AS n_commits
         |FROM survivors""".stripMargin),
     // log retention: 5 appends (records 1-5) → sweep to newest 2 (3
     // removed) → a delete commit claims 6 over the truncated log
     "q_vacuum_commits" -> fixed(qVacuumCommits _)(
-      """SELECT COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price,
+      s"""SELECT $tableStatsCols,
         |  CAST(3 AS BIGINT) AS n_removed,
         |  CAST(6 AS BIGINT) AS latest_seq
         |FROM orders

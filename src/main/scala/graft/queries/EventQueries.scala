@@ -807,17 +807,23 @@ object EventQueries {
       |WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, event_id)
       |ORDER BY user_id, version""".stripMargin
 
+  /** The 30-minute gap sessionization over `e` (user_id, event_id,
+    * ts_us): `f` flags each session's first event, `n` numbers each
+    * user's sessions in (ts_us, event_id) order. */
+  private[graft] val sessionSeqCtes =
+    """f AS (SELECT *, CASE
+      |    WHEN ts_us - lag(ts_us) OVER w > 1800000000 THEN 1
+      |    WHEN lag(ts_us) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+      |n AS (SELECT *, SUM(is_new) OVER (PARTITION BY user_id
+      |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM f)""".stripMargin
+
   /** The q_sessionize oracle; q_stream_sessionize replays it over its
     * coalesced value column. */
   private[graft] def sessionizeOracle(value: String): String =
     s"""WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
       |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
-      |f AS (SELECT *, CASE
-      |    WHEN ts_us - lag(ts_us) OVER w > 1800000000 THEN 1
-      |    WHEN lag(ts_us) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-      |n AS (SELECT *, SUM(is_new) OVER (PARTITION BY user_id
-      |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM f)
+      |$sessionSeqCtes
       |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
       |  COUNT(*) AS n_events, MIN(ts) AS session_start, MAX(ts) AS session_end,
       |  CAST(SUM(CAST($value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
@@ -832,25 +838,48 @@ object EventQueries {
       |  CAST(SUM(CAST($value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** The q_range_join oracle; q_stream_attribution replays it verbatim. */
-  private[graft] def rangeJoinOracle: String =
-    """WITH c AS (SELECT event_id AS click_id, user_id,
+  /** The q_range_join oracle (`join` = "JOIN"); q_stream_attribution
+    * replays it verbatim, q_stream_outer_join as a "LEFT JOIN". */
+  private[graft] def rangeJoinOracle(join: String): String =
+    s"""WITH c AS (SELECT event_id AS click_id, user_id,
       |    CAST(ts AS TIMESTAMP) AS click_ts
       |  FROM events WHERE event_type = 'click'),
       |p AS (SELECT event_id AS purchase_id, user_id AS p_user,
       |    CAST(ts AS TIMESTAMP) AS p_ts
       |  FROM events WHERE event_type = 'purchase')
       |SELECT click_id, purchase_id, user_id
-      |FROM c JOIN p ON user_id = p_user
+      |FROM c $join p ON user_id = p_user
       |  AND click_ts >= p_ts - INTERVAL 1 HOUR AND click_ts < p_ts
       |ORDER BY click_id, purchase_id""".stripMargin
 
-  /** The q_drift_psi oracle; q_stream_drift replays it verbatim.
-    * PSI terms snapped to the 2^-16 grid pre-sum (the BM25 ln
-    * discipline); binning is IEEE divide+floor, identical both engines
-    */
-  private[graft] def driftPsiOracle: String =
-    """WITH e AS (SELECT event_type,
+  /** Per-(event_type, bin) cohort counts over `b` (event_type, cohort,
+    * bin) and `bins` (every type × bin): `c` counts each cohort, `f`
+    * fills the empty bins with zeros. */
+  private[graft] val driftCountCtes =
+    """c AS (SELECT event_type, bin,
+      |    COUNT(*) FILTER (cohort = 0) AS n0,
+      |    COUNT(*) FILTER (cohort = 1) AS n1
+      |  FROM b GROUP BY 1, 2),
+      |f AS (SELECT bins.event_type, bins.bin,
+      |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
+      |  FROM bins LEFT JOIN c
+      |    ON bins.event_type = c.event_type AND bins.bin = c.bin)""".stripMargin
+
+  /** PSI's add-one-smoothed bin shares over `f`: `tot` per-cohort
+    * totals, `terms` each bin's (p, q). */
+  private[graft] val psiTermsCtes =
+    """tot AS (SELECT event_type, SUM(n0) AS t0, SUM(n1) AS t1
+      |  FROM f GROUP BY 1),
+      |terms AS (SELECT f.event_type, tot.t0, tot.t1,
+      |    CAST(f.n0 + 1 AS DOUBLE) / (tot.t0 + 10) AS p,
+      |    CAST(f.n1 + 1 AS DOUBLE) / (tot.t1 + 10) AS q
+      |  FROM f JOIN tot USING (event_type))""".stripMargin
+
+  /** The batch drift rows' binned cohorts: `e` (cohort 1 from
+    * 2024-01-16, purchases scaled ×1.5), `b` (value bins of width 50,
+    * capped at 9), `bins`, then [[driftCountCtes]]. */
+  private val driftBinCtes =
+    s"""e AS (SELECT event_type,
       |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 0 ELSE 1 END AS cohort,
       |    CASE WHEN ts >= TIMESTAMP '2024-01-16' AND event_type = 'purchase'
       |      THEN value * 1.5 ELSE value END AS v
@@ -858,20 +887,15 @@ object EventQueries {
       |b AS (SELECT event_type, cohort,
       |    CAST(least(floor(v / 50.0), 9) AS BIGINT) AS bin FROM e),
       |bins AS (SELECT DISTINCT event_type, unnest(range(10)) AS bin FROM b),
-      |c AS (SELECT event_type, bin,
-      |    COUNT(*) FILTER (cohort = 0) AS n0,
-      |    COUNT(*) FILTER (cohort = 1) AS n1
-      |  FROM b GROUP BY 1, 2),
-      |f AS (SELECT bins.event_type, bins.bin,
-      |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
-      |  FROM bins LEFT JOIN c
-      |    ON bins.event_type = c.event_type AND bins.bin = c.bin),
-      |tot AS (SELECT event_type, SUM(n0) AS t0, SUM(n1) AS t1
-      |  FROM f GROUP BY 1),
-      |terms AS (SELECT f.event_type, tot.t0, tot.t1,
-      |    CAST(f.n0 + 1 AS DOUBLE) / (tot.t0 + 10) AS p,
-      |    CAST(f.n1 + 1 AS DOUBLE) / (tot.t1 + 10) AS q
-      |  FROM f JOIN tot USING (event_type))
+      |$driftCountCtes""".stripMargin
+
+  /** The q_drift_psi oracle; q_stream_drift replays it verbatim.
+    * PSI terms snapped to the 2^-16 grid pre-sum (the BM25 ln
+    * discipline); binning is IEEE divide+floor, identical both engines
+    */
+  private[graft] def driftPsiOracle: String =
+    s"""WITH $driftBinCtes,
+      |$psiTermsCtes
       |SELECT event_type, CAST(max(t0) AS BIGINT) AS n_before,
       |  CAST(max(t1) AS BIGINT) AS n_after,
       |  SUM(floor((p - q) * ln(p / q) * 65536.0) / 65536.0) AS psi
@@ -912,6 +936,16 @@ object EventQueries {
       |  CAST(s + s > total AS BIGINT) AS alarm
       |FROM s3 ORDER BY event_type, day""".stripMargin
 
+  /** The as-of attribution sides: `p` the purchases, `c` the clicks
+    * (one per user and timestamp, the highest event id). */
+  private val asofSidesCtes =
+    """p AS (SELECT event_id AS purchase_id, user_id,
+      |    CAST(ts AS TIMESTAMP) AS purchase_ts
+      |  FROM events WHERE event_type = 'purchase'),
+      |c AS (SELECT user_id AS c_user, CAST(ts AS TIMESTAMP) AS click_ts,
+      |    max(event_id) AS click_event_id
+      |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)""".stripMargin
+
   /** The EventQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
     "q_sessionize" -> fixed(qSessionize _)(sessionizeOracle("value")),
@@ -923,24 +957,14 @@ object EventQueries {
         |FROM events WHERE CAST(ts AS TIMESTAMP) > TIMESTAMP '2024-01-15 00:00:00'
         |GROUP BY user_id ORDER BY user_id""".stripMargin),
     "q_asof_attribution" -> fixed(qAsofAttribution _)(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id,
-        |    CAST(ts AS TIMESTAMP) AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id AS c_user, CAST(ts AS TIMESTAMP) AS click_ts,
-        |    max(event_id) AS click_event_id
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+      s"""WITH $asofSidesCtes
         |SELECT purchase_id, user_id, purchase_ts, click_event_id, click_ts
         |FROM p ASOF LEFT JOIN c
         |  ON p.user_id = c.c_user AND p.purchase_ts >= c.click_ts
         |ORDER BY purchase_id""".stripMargin),
     // tolerance = null out matches staler than 1h (merge_asof semantics)
     "q_asof_tolerance" -> fixed(qAsofTolerance _)(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id,
-        |    CAST(ts AS TIMESTAMP) AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id AS c_user, CAST(ts AS TIMESTAMP) AS click_ts,
-        |    max(event_id) AS click_event_id
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      s"""WITH $asofSidesCtes,
         |j AS (SELECT purchase_id, user_id, purchase_ts, click_event_id, click_ts
         |  FROM p ASOF LEFT JOIN c
         |    ON p.user_id = c.c_user AND p.purchase_ts >= c.click_ts)
@@ -974,7 +998,7 @@ object EventQueries {
         |FROM p ASOF LEFT JOIN hist
         |  ON p.user_id = hist.user_id AND p.purchase_ts >= hist.valid_from
         |ORDER BY purchase_id""".stripMargin),
-    "q_range_join" -> fixed(qRangeJoin _)(rangeJoinOracle),
+    "q_range_join" -> fixed(qRangeJoin _)(rangeJoinOracle("JOIN")),
     "q_attribution_linear" -> fixed(qAttributionLinear _)(
       """WITH c AS (SELECT event_id AS click_id, user_id,
         |    CAST(ts AS TIMESTAMP) AS click_ts
@@ -1043,22 +1067,7 @@ object EventQueries {
     // binned-ECDF KS: every CDF value is one long/long IEEE division
     // (correctly rounded both engines), diff and max exact — no snapping
     "q_drift_ks" -> fixed(qDriftKs _)(
-      """WITH e AS (SELECT event_type,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 0 ELSE 1 END AS cohort,
-        |    CASE WHEN ts >= TIMESTAMP '2024-01-16' AND event_type = 'purchase'
-        |      THEN value * 1.5 ELSE value END AS v
-        |  FROM events),
-        |b AS (SELECT event_type, cohort,
-        |    CAST(least(floor(v / 50.0), 9) AS BIGINT) AS bin FROM e),
-        |bins AS (SELECT DISTINCT event_type, unnest(range(10)) AS bin FROM b),
-        |c AS (SELECT event_type, bin,
-        |    COUNT(*) FILTER (cohort = 0) AS n0,
-        |    COUNT(*) FILTER (cohort = 1) AS n1
-        |  FROM b GROUP BY 1, 2),
-        |f AS (SELECT bins.event_type, bins.bin,
-        |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
-        |  FROM bins LEFT JOIN c
-        |    ON bins.event_type = c.event_type AND bins.bin = c.bin),
+      s"""WITH $driftBinCtes,
         |cum AS (SELECT event_type, bin, n0, n1,
         |    SUM(n0) OVER (PARTITION BY event_type ORDER BY bin
         |      ROWS UNBOUNDED PRECEDING) AS c0,

@@ -343,14 +343,9 @@ object JourneyQueries {
   /** The JourneyQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
     "q_top_paths" -> fixed(qTopPaths _)(
-      """WITH e AS (SELECT user_id, event_id, event_type,
+      s"""WITH e AS (SELECT user_id, event_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
-        |f AS (SELECT *, CASE
-        |    WHEN ts_us - lag(ts_us) OVER w > 1800000000 THEN 1
-        |    WHEN lag(ts_us) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |n AS (SELECT *, SUM(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM f),
+        |${EventQueries.sessionSeqCtes},
         |c AS (SELECT *, row_number() OVER (PARTITION BY user_id, session_seq
         |    ORDER BY ts_us, event_id) AS pos FROM n),
         |p AS (SELECT user_id, session_seq,

@@ -377,6 +377,38 @@ object LayoutQueries {
       s"((($y >> $i) & 1) << ${2 * i + 1})"))
       .mkString(" | ")
 
+  /** The probe box [lo, hi]² over `m` (x, y, l_extendedprice): `res`
+    * its exact row count and revenue, then one file envelope (fid, n,
+    * x and y ranges) per file of two layouts — `lf` linear by x, `zf`
+    * by the z-order file id `zFid`. */
+  private def probeFileCtes(lo: Int, hi: Int, zFid: String): String =
+    s"""res AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+       |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+       |      AS revenue
+       |  FROM m WHERE x BETWEEN $lo AND $hi AND y BETWEEN $lo AND $hi),
+       |lf AS (SELECT x >> 4 AS fid, COUNT(*) AS n,
+       |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
+       |  FROM m GROUP BY 1),
+       |zf AS (SELECT $zFid AS fid,
+       |    COUNT(*) AS n,
+       |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
+       |  FROM m GROUP BY 1)""".stripMargin
+
+  /** CTE `name`: one layout's file pruning for the probe box [lo, hi]²
+    * over the envelopes in `files` — total files, files whose envelope
+    * meets the box, and the rows those files hold. */
+  private def prunedTallyCte(name: String, layout: String, lo: Int,
+      hi: Int, files: String): String = {
+    val meets = s"mxx >= $lo AND mnx <= $hi\n        AND mxy >= $lo AND mny <= $hi"
+    s"""$name AS (SELECT '$layout' AS layout,
+       |    CAST(COUNT(*) AS BIGINT) AS files_total,
+       |    CAST(SUM(CASE WHEN $meets THEN 1 ELSE 0 END) AS BIGINT)
+       |      AS files_scanned,
+       |    CAST(SUM(CASE WHEN $meets THEN n ELSE 0 END) AS BIGINT)
+       |      AS rows_in_files
+       |  FROM $files)""".stripMargin
+  }
+
   /** The LayoutQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
     // Morton z-value as generated bit arithmetic — the IDENTICAL
@@ -464,35 +496,9 @@ object LayoutQueries {
     "q_optimize_zorder" -> fixed(qOptimizeZorder _)(
       s"""WITH m AS (SELECT l_partkey & 1023 AS x, l_orderkey & 1023 AS y,
          |    l_extendedprice FROM lineitem),
-         |res AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         |      AS revenue
-         |  FROM m WHERE x BETWEEN 128 AND 255 AND y BETWEEN 128 AND 255),
-         |lf AS (SELECT x >> 4 AS fid, COUNT(*) AS n,
-         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
-         |  FROM m GROUP BY 1),
-         |zf AS (SELECT (${zExprSql("x", "y", 10)}) >> 14 AS fid,
-         |    COUNT(*) AS n,
-         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
-         |  FROM m GROUP BY 1),
-         |l AS (SELECT '1_linear' AS layout,
-         |    CAST(COUNT(*) AS BIGINT) AS files_total,
-         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
-         |        AND mxy >= 128 AND mny <= 255 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS files_scanned,
-         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
-         |        AND mxy >= 128 AND mny <= 255 THEN n ELSE 0 END) AS BIGINT)
-         |      AS rows_in_files
-         |  FROM lf),
-         |z AS (SELECT '2_zorder' AS layout,
-         |    CAST(COUNT(*) AS BIGINT) AS files_total,
-         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
-         |        AND mxy >= 128 AND mny <= 255 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS files_scanned,
-         |    CAST(SUM(CASE WHEN mxx >= 128 AND mnx <= 255
-         |        AND mxy >= 128 AND mny <= 255 THEN n ELSE 0 END) AS BIGINT)
-         |      AS rows_in_files
-         |  FROM zf),
+         |${probeFileCtes(128, 255, s"(${zExprSql("x", "y", 10)}) >> 14")},
+         |${prunedTallyCte("l", "1_linear", 128, 255, "lf")},
+         |${prunedTallyCte("z", "2_zorder", 128, 255, "zf")},
          |u AS (SELECT * FROM l UNION ALL SELECT * FROM z)
          |SELECT layout, files_total, files_scanned, rows_in_files,
          |  n_rows, revenue
@@ -524,48 +530,15 @@ object LayoutQueries {
          |      WHEN (y & s) <> 0 THEN 1 ELSE 0 END)
          |  FROM hw WHERE s > 0),
          |hd AS (SELECT x0 AS x, y0 AS y, d FROM hw WHERE s = 0),
-         |res AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         |      AS revenue
-         |  FROM m WHERE x BETWEEN 96 AND 223 AND y BETWEEN 96 AND 223),
-         |lf AS (SELECT x >> 4 AS fid, COUNT(*) AS n,
-         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
-         |  FROM m GROUP BY 1),
-         |zf AS (SELECT ((${zExprSql("x", "y", 10)}) * 63) >> 20 AS fid,
-         |    COUNT(*) AS n,
-         |    min(x) AS mnx, max(x) AS mxx, min(y) AS mny, max(y) AS mxy
-         |  FROM m GROUP BY 1),
+         |${probeFileCtes(96, 223,
+              s"((${zExprSql("x", "y", 10)}) * 63) >> 20")},
          |hf AS (SELECT (hd.d * 63) >> 20 AS fid, COUNT(*) AS n,
          |    min(m.x) AS mnx, max(m.x) AS mxx,
          |    min(m.y) AS mny, max(m.y) AS mxy
          |  FROM m JOIN hd ON m.x = hd.x AND m.y = hd.y GROUP BY 1),
-         |l AS (SELECT '1_linear' AS layout,
-         |    CAST(COUNT(*) AS BIGINT) AS files_total,
-         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
-         |        AND mxy >= 96 AND mny <= 223 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS files_scanned,
-         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
-         |        AND mxy >= 96 AND mny <= 223 THEN n ELSE 0 END) AS BIGINT)
-         |      AS rows_in_files
-         |  FROM lf),
-         |z AS (SELECT '2_zorder' AS layout,
-         |    CAST(COUNT(*) AS BIGINT) AS files_total,
-         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
-         |        AND mxy >= 96 AND mny <= 223 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS files_scanned,
-         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
-         |        AND mxy >= 96 AND mny <= 223 THEN n ELSE 0 END) AS BIGINT)
-         |      AS rows_in_files
-         |  FROM zf),
-         |h AS (SELECT '3_hilbert' AS layout,
-         |    CAST(COUNT(*) AS BIGINT) AS files_total,
-         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
-         |        AND mxy >= 96 AND mny <= 223 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS files_scanned,
-         |    CAST(SUM(CASE WHEN mxx >= 96 AND mnx <= 223
-         |        AND mxy >= 96 AND mny <= 223 THEN n ELSE 0 END) AS BIGINT)
-         |      AS rows_in_files
-         |  FROM hf),
+         |${prunedTallyCte("l", "1_linear", 96, 223, "lf")},
+         |${prunedTallyCte("z", "2_zorder", 96, 223, "zf")},
+         |${prunedTallyCte("h", "3_hilbert", 96, 223, "hf")},
          |u AS (SELECT * FROM l UNION ALL SELECT * FROM z
          |  UNION ALL SELECT * FROM h)
          |SELECT layout, files_total, files_scanned, rows_in_files,

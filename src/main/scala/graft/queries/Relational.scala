@@ -2363,6 +2363,59 @@ object Relational {
        |FROM g ORDER BY c_custkey""".stripMargin
   }
 
+  /** The seeded location of each `table` row keyed by `key`: CTE `tag`
+    * (key, tag_lat, tag_lon), the coordinates the geo queries derive
+    * from the key with the same two multiplicative hashes. */
+  private def geoPointCte(tag: String, table: String, key: String): String =
+    s"""$tag AS (SELECT $key,
+       |    CAST(48 AS DOUBLE) + CAST($key * 2654435761 % 1000
+       |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS ${tag}_lat,
+       |    CAST(2 AS DOUBLE) + CAST($key * 1099087573 % 1000
+       |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS ${tag}_lon
+       |  FROM $table)""".stripMargin
+
+  /** Squared degree distance between the `s_` and `c_` coordinates. */
+  private val geoD2Sql =
+    """(s_lat - c_lat) * (s_lat - c_lat)
+      |      + (s_lon - c_lon) * (s_lon - c_lon)""".stripMargin
+
+  /** The nearest-customer readout over a grid join's candidates `cand`
+    * (s_suppkey, c_custkey, d2): `win` re-counts each supplier's
+    * customers within squared distance `r2` over the FULL cross join of
+    * `s` and `c` — a candidate set that missed a pair undercounts and
+    * hash-fails — then per supplier the candidate count, that count and
+    * the nearest customer; `extra` leads the select list. */
+  private def geoNearestSql(r2: String, extra: String): String =
+    s"""win AS (SELECT s.s_suppkey, COUNT(*) AS n_within
+       |  FROM s CROSS JOIN c
+       |  WHERE $geoD2Sql
+       |    < CAST($r2 AS DOUBLE)
+       |  GROUP BY 1),
+       |r AS (SELECT *, row_number() OVER (PARTITION BY s_suppkey
+       |    ORDER BY d2, c_custkey) AS rk FROM cand)
+       |SELECT r.s_suppkey, ${extra}COUNT(*) AS n_candidates,
+       |  CAST(COALESCE(MAX(win.n_within), 0) AS BIGINT) AS n_within,
+       |  MAX(CASE WHEN rk = 1 THEN c_custkey END) AS nearest_custkey,
+       |  MAX(CASE WHEN rk = 1 THEN d2 END) AS nearest_d2
+       |FROM r LEFT JOIN win ON r.s_suppkey = win.s_suppkey
+       |GROUP BY 1 ORDER BY r.s_suppkey""".stripMargin
+
+  /** The split-wise exact sums both regression rows fit from: `f`
+    * (split by part key, x = size, y = retail price as a decimal), `a`
+    * per split. */
+  private val regressionSumsCtes =
+    """f AS (SELECT
+      |    CASE WHEN p_partkey % 5 = 0 THEN 'test' ELSE 'train' END AS split,
+      |    CAST(p_size AS BIGINT) AS x,
+      |    CAST(p_retailprice AS DECIMAL(18,2)) AS y
+      |  FROM part WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
+      |a AS (SELECT split, COUNT(*) AS n_rows,
+      |    CAST(COUNT(*) AS DOUBLE) AS n,
+      |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(x*x) AS DOUBLE) AS sxx,
+      |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(x*y) AS DOUBLE) AS sxy,
+      |    CAST(SUM(y*y) AS DOUBLE) AS syy
+      |  FROM f GROUP BY split)""".stripMargin
+
   /** Generated geohash-radius oracle: the precision-5 re-encode (13+12
     * bit interleave, base32) regenerated as SQL from the SAME constants
     * graft.functions.geo.geohash5FromCell uses; ring candidates via the
@@ -2382,12 +2435,7 @@ object Relational {
       s"substr('$alpha', CAST((bits // ${1L << (20 - 5 * i)}) % 32 AS INT) + 1, 1)"
     }.mkString(" || ")
     def pointCtes(tag: String, table: String, key: String): String =
-      s"""$tag AS (SELECT $key,
-         |    CAST(48 AS DOUBLE) + CAST($key * 2654435761 % 1000
-         |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS ${tag}_lat,
-         |    CAST(2 AS DOUBLE) + CAST($key * 1099087573 % 1000
-         |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS ${tag}_lon
-         |  FROM $table),
+      s"""${geoPointCte(tag, table, key)},
          |${tag}q0 AS (SELECT *,
          |    CAST(FLOOR((${tag}_lon + CAST(180 AS DOUBLE))
          |      / CAST(360 AS DOUBLE) * CAST(32768 AS DOUBLE)) AS BIGINT)
@@ -2407,24 +2455,10 @@ object Relational {
        |sg AS (SELECT s_suppkey, s_lat, s_lon, cx, cy, $chars AS gh5
        |  FROM sb),
        |cand AS (SELECT s_suppkey, gh5, c_custkey,
-       |    (s_lat - c_lat) * (s_lat - c_lat)
-       |      + (s_lon - c_lon) * (s_lon - c_lon) AS d2
+       |    $geoD2Sql AS d2
        |  FROM sg JOIN cc ON abs(sg.cx - cc.cx) <= 1
        |    AND abs(sg.cy - cc.cy) <= 1),
-       |win AS (SELECT s.s_suppkey, COUNT(*) AS n_within
-       |  FROM s CROSS JOIN c
-       |  WHERE (s_lat - c_lat) * (s_lat - c_lat)
-       |      + (s_lon - c_lon) * (s_lon - c_lon)
-       |    < CAST(0.0004 AS DOUBLE)
-       |  GROUP BY 1),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY s_suppkey
-       |    ORDER BY d2, c_custkey) AS rk FROM cand)
-       |SELECT r.s_suppkey, MAX(r.gh5) AS gh5, COUNT(*) AS n_candidates,
-       |  CAST(COALESCE(MAX(win.n_within), 0) AS BIGINT) AS n_within,
-       |  MAX(CASE WHEN rk = 1 THEN c_custkey END) AS nearest_custkey,
-       |  MAX(CASE WHEN rk = 1 THEN d2 END) AS nearest_d2
-       |FROM r LEFT JOIN win ON r.s_suppkey = win.s_suppkey
-       |GROUP BY 1 ORDER BY r.s_suppkey""".stripMargin
+       |${geoNearestSql("0.0004", "MAX(r.gh5) AS gh5, ")}""".stripMargin
   }
 
   /** ONE rendering of the md5-lane HLL estimator CTE chain over `events`
@@ -2526,28 +2560,49 @@ object Relational {
        |      ELSE -1 END)""".stripMargin
   }
 
-  /** Model-inlined GBT scoring oracle: ŷ = base + routed per-stump
-    * deltas (exact integers), per-split exact sums, then the identical
-    * closed-form double RMSE/R² tree as the Spark query.
+  /** A stump model's scoring expression: base + the routed per-stump
+    * deltas, exact integers, mirroring Gbt.fhatCol token for token.
     */
-  private[graft] def gbtScoreOracle(m: graft.ops.Gbt.Model): String = {
+  private def stumpFhatSql(m: graft.ops.Gbt.Model): String = {
     import graft.ops.Gbt
-    val fhat = s"${m.base}" + m.stumps.map(s =>
+    s"${m.base}" + m.stumps.map(s =>
       s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
         s"ELSE ${s.dr} END").mkString
-    s"""WITH $gbtTCte,
-       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
-       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
+  }
+
+  /** The oracle side of [[scoreEval]]: CTEs `s$tag` (each row of `t`
+    * scored by `fhat`) and `a$tag` (per-split exact sums). */
+  private def gbtEvalCtes(tag: String, fhat: String): String =
+    s"""s$tag AS (SELECT split, y, ($fhat) AS fhat FROM t),
+       |a$tag AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
        |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
        |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
-       |  FROM s GROUP BY split)
-       |SELECT split, n,
-       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
-       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
-       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-       |    AS r2
+       |  FROM s$tag GROUP BY split)""".stripMargin
+
+  /** The closed-form double RMSE/R² columns over a [[gbtEvalCtes]] row. */
+  private val gbtRmseR2Sql =
+    """sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
+      |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
+      |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+      |    AS r2""".stripMargin
+
+  /** A model-inlined scoring replay: [[gbtEvalCtes]] over [[gbtTCte]],
+    * then per split the identical closed-form double RMSE/R² tree as
+    * [[scoreEval]]. `lead` is the row's own leading select-list text
+    * (its literal evidence columns), written before `split, n`.
+    */
+  private def gbtEvalOracle(fhat: String, lead: String = ""): String =
+    s"""WITH $gbtTCte,
+       |${gbtEvalCtes("", fhat)}
+       |SELECT ${lead}split, n,
+       |  $gbtRmseR2Sql
        |FROM a ORDER BY split""".stripMargin
-  }
+
+  /** Model-inlined GBT scoring oracle: ŷ = base + routed per-stump
+    * deltas (exact integers), then [[gbtEvalOracle]].
+    */
+  private[graft] def gbtScoreOracle(m: graft.ops.Gbt.Model): String =
+    gbtEvalOracle(stumpFhatSql(m))
 
   /** q_model_serve oracle: the scoring replay of [[gbtScoreOracle]]
     * (the STORED model must score identically to the in-session one —
@@ -2555,50 +2610,19 @@ object Relational {
     * manifest must land on v2 after the freshness-gated republish, two
     * versions must exist, and the artifact must carry every stump.
     */
-  private def modelServeOracle(m: graft.ops.Gbt.Model): String = {
-    import graft.ops.Gbt
-    val fhat = s"${m.base}" + m.stumps.map(s =>
-      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
-        s"ELSE ${s.dr} END").mkString
-    s"""WITH $gbtTCte,
-       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
-       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
-       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
-       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
-       |  FROM s GROUP BY split)
-       |SELECT '2' AS model_version, CAST(2 AS BIGINT) AS n_versions,
-       |  CAST(${m.stumps.length} AS BIGINT) AS n_stumps, split, n,
-       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
-       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
-       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-       |    AS r2
-       |FROM a ORDER BY split""".stripMargin
-  }
+  private def modelServeOracle(m: graft.ops.Gbt.Model): String =
+    gbtEvalOracle(stumpFhatSql(m),
+      "'2' AS model_version, CAST(2 AS BIGINT) AS n_versions,\n  " +
+        s"CAST(${m.stumps.length} AS BIGINT) AS n_stumps, ")
 
   /** q_model_rollback oracle: the scoring replay with the PINNED v1
     * (half-trained) model inlined, plus the version-pin evidence — a
     * rollback that silently serves the manifest-current v2 hash-fails
     * because the two models' scores differ on the planted slice.
     */
-  private def rollbackOracle(m: graft.ops.Gbt.Model): String = {
-    import graft.ops.Gbt
-    val fhat = s"${m.base}" + m.stumps.map(s =>
-      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
-        s"ELSE ${s.dr} END").mkString
-    s"""WITH $gbtTCte,
-       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
-       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
-       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
-       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
-       |  FROM s GROUP BY split)
-       |SELECT '1' AS served_version, CAST(2 AS BIGINT) AS n_versions,
-       |  split, n,
-       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
-       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
-       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-       |    AS r2
-       |FROM a ORDER BY split""".stripMargin
-  }
+  private def rollbackOracle(m: graft.ops.Gbt.Model): String =
+    gbtEvalOracle(stumpFhatSql(m),
+      "'1' AS served_version, CAST(2 AS BIGINT) AS n_versions,\n  ")
 
   /** The depth-2 model's scoring expression: base + per-tree routed
     * leaf delta — a nested exact-integer CASE per tree, mirroring
@@ -2621,22 +2645,10 @@ object Relational {
     * evidence with the DEPTH-2 scoring replay — the stored tree
     * artifact must score bit-identically to the in-session model.
     */
-  private def treeServeOracle(m: graft.ops.Gbt.TreeModel): String = {
-    val fhat = treeFhatSql(m)
-    s"""WITH $gbtTCte,
-       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
-       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
-       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
-       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
-       |  FROM s GROUP BY split)
-       |SELECT '2' AS model_version, CAST(2 AS BIGINT) AS n_versions,
-       |  CAST(${m.trees.length} AS BIGINT) AS n_trees, split, n,
-       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
-       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
-       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-       |    AS r2
-       |FROM a ORDER BY split""".stripMargin
-  }
+  private def treeServeOracle(m: graft.ops.Gbt.TreeModel): String =
+    gbtEvalOracle(treeFhatSql(m),
+      "'2' AS model_version, CAST(2 AS BIGINT) AS n_versions,\n  " +
+        s"CAST(${m.trees.length} AS BIGINT) AS n_trees, ")
 
   /** The generic depth-d model's scoring expression — the recursive
     * nested CASE mirroring Gbt.fhatColDeep token for token. */
@@ -2657,22 +2669,10 @@ object Relational {
 
   /** q_gbt_depth3 oracle: the depth-3 model-inlined scoring replay with
     * the depth/n_trees evidence literals. */
-  private def deepScoreOracle(m: graft.ops.Gbt.DeepModel): String = {
-    val fhat = deepFhatSql(m)
-    s"""WITH $gbtTCte,
-       |s AS (SELECT split, y, ($fhat) AS fhat FROM t),
-       |a AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
-       |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
-       |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
-       |  FROM s GROUP BY split)
-       |SELECT CAST(${m.depth} AS BIGINT) AS depth,
-       |  CAST(${m.trees.length} AS BIGINT) AS n_trees, split, n,
-       |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
-       |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
-       |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-       |    AS r2
-       |FROM a ORDER BY split""".stripMargin
-  }
+  private def deepScoreOracle(m: graft.ops.Gbt.DeepModel): String =
+    gbtEvalOracle(deepFhatSql(m),
+      s"CAST(${m.depth} AS BIGINT) AS depth,\n  " +
+        s"CAST(${m.trees.length} AS BIGINT) AS n_trees, ")
 
   /** q_model_alias oracle: BOTH stages' scoring replays over the one
     * shared featurized CTE — promoted rows with the full model (prod →
@@ -2680,27 +2680,14 @@ object Relational {
     */
   private def aliasOracle(full: graft.ops.Gbt.Model,
       half: graft.ops.Gbt.Model): String = {
-    import graft.ops.Gbt
-    def fhatOf(m: Gbt.Model): String = s"${m.base}" + m.stumps.map(s =>
-      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
-        s"ELSE ${s.dr} END").mkString
-    def evalCtes(tag: String, m: Gbt.Model): String =
-      s"""s$tag AS (SELECT split, y, (${fhatOf(m)}) AS fhat FROM t),
-         |a$tag AS (SELECT split, COUNT(*) AS n, SUM(y) AS sy,
-         |    SUM(CAST(y * y AS DECIMAL(25,0))) AS syy,
-         |    SUM(CAST((y - fhat) * (y - fhat) AS DECIMAL(25,0))) AS sse
-         |  FROM s$tag GROUP BY split)""".stripMargin
     def sel(stage: String, ver: String, tag: String): String =
       s"""SELECT '$stage' AS stage, 'prod' AS alias,
          |  '$ver' AS served_version, split, n,
-         |  sqrt(CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)) AS rmse,
-         |  CAST(1 AS DOUBLE) - CAST(sse AS DOUBLE) / (CAST(syy AS DOUBLE)
-         |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-         |    AS r2
+         |  $gbtRmseR2Sql
          |FROM a$tag""".stripMargin
     s"""WITH $gbtTCte,
-       |${evalCtes("p", full)},
-       |${evalCtes("r", half)}
+       |${gbtEvalCtes("p", stumpFhatSql(full))},
+       |${gbtEvalCtes("r", stumpFhatSql(half))}
        |${sel("1_promoted", "2", "p")}
        |UNION ALL
        |${sel("2_rolled_back", "1", "r")}
@@ -2713,30 +2700,21 @@ object Relational {
     * so stream == batch by construction and any ingest drift (stale
     * model, lost epoch, duplicated replay) hash-fails.
     */
-  private[graft] def modelIngestOracle(m: graft.ops.Gbt.Model): String = {
-    import graft.ops.Gbt
-    val fhat = s"${m.base}" + m.stumps.map(s =>
-      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
-        s"ELSE ${s.dr} END").mkString
+  private[graft] def modelIngestOracle(m: graft.ops.Gbt.Model): String =
     s"""WITH $gbtTCte
        |SELECT split, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS sum_y,
-       |  CAST(SUM($fhat) AS BIGINT) AS sum_pred,
+       |  CAST(SUM(${stumpFhatSql(m)}) AS BIGINT) AS sum_pred,
        |  CAST(3 AS BIGINT) AS n_epochs
        |FROM t GROUP BY split ORDER BY split""".stripMargin
-  }
 
   /** Split-conformal oracle: the inlined model scores the held-out
     * split, qhat replays as the identical cumulative-count order
     * statistic over the integer |residual| histogram (k = ⌈(n+1)·0.9⌉
     * clamped to n), coverage as exact counting aggregates.
     */
-  private def gbtConformalOracle(m: graft.ops.Gbt.Model): String = {
-    import graft.ops.Gbt
-    val fhat = s"${m.base}" + m.stumps.map(s =>
-      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
-        s"ELSE ${s.dr} END").mkString
+  private def gbtConformalOracle(m: graft.ops.Gbt.Model): String =
     s"""WITH $gbtTCte,
-       |a AS (SELECT pk, abs(y - ($fhat)) AS ar,
+       |a AS (SELECT pk, abs(y - (${stumpFhatSql(m)})) AS ar,
        |    CASE WHEN (pk // 5) % 2 = 0 THEN 'calibration' ELSE 'eval' END
        |      AS grp
        |  FROM t WHERE split = 'test'),
@@ -2756,6 +2734,72 @@ object Relational {
        |  CAST(SUM(CASE WHEN ar <= (SELECT qhat FROM q0) THEN 1 ELSE 0 END)
        |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS coverage
        |FROM a GROUP BY grp ORDER BY grp""".stripMargin
+
+  /** The feature-index and split-bin VALUES lists and the bin column of
+    * feature `alias.f`, as both training replays enumerate them. */
+  private def gbtFeatureValues: String =
+    graft.ops.Gbt.BinCols.indices.map(i => s"($i)").mkString(",")
+  private def gbtBinValues: String =
+    (0 until graft.ops.Gbt.NBins - 1).map(b => s"($b)").mkString(",")
+  private def gbtBinCase(alias: String): String =
+    s"CASE $alias.f " + graft.ops.Gbt.BinCols.zipWithIndex.map {
+      case (c, i) => s"WHEN $i THEN $c "
+    }.mkString + "END"
+
+  /** One training round's root histogram in both replays: CTEs
+    * `c$tag$i` (pattern `pat`, feature, bin counts and y sums over
+    * `tr`), `r$tag$i` (residual sums against the prior prediction
+    * `fhat`), `t$tag$i` (per-feature totals) and `s$tag$i` (left-side
+    * prefix sums per split bin).
+    */
+  private def gbtRootHistCtes(tag: String, i: Int, pat: String,
+      fhat: String): String =
+    s"""c$tag$i AS (SELECT $pat AS p, ff.f AS f,
+       |    ${gbtBinCase("ff")} AS v, COUNT(*) AS n, SUM(y) AS sy
+       |  FROM tr CROSS JOIN (VALUES $gbtFeatureValues) AS ff(f) GROUP BY 1, 2, 3),
+       |r$tag$i AS (SELECT f, v, CAST(n AS BIGINT) AS n,
+       |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * ($fhat)
+       |      AS r
+       |  FROM c$tag$i),
+       |t$tag$i AS (SELECT f, CAST(SUM(n) AS BIGINT) AS tot_n,
+       |    CAST(SUM(r) AS BIGINT) AS tot_r FROM r$tag$i GROUP BY f),
+       |s$tag$i AS (SELECT cell.f AS f, bb.b AS b,
+       |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
+       |  FROM r$tag$i cell CROSS JOIN (VALUES $gbtBinValues) AS bb(b)
+       |  WHERE cell.v <= bb.b GROUP BY 1, 2)""".stripMargin
+
+  /** The IEEE split-gain column both replays argmax over, mirroring
+    * Gbt.bestOver. */
+  private val gbtGainSql =
+    """(CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
+      |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
+      |        / CAST(rn AS DOUBLE) AS gain""".stripMargin
+
+  /** A training replay's frame: the `tr`/`b0` CTEs, the per-round
+    * `rounds`, then the per-feature readout of `union`'s split rows —
+    * split count and floor-snapped `gain` sum and share, by feature
+    * name.
+    */
+  private def gbtReplayOracle(rounds: Seq[String], union: String,
+      gain: String): String = {
+    val names = graft.ops.Gbt.FeatureNames.zipWithIndex
+      .map { case (n, i) => s"($i, '$n')" }.mkString(", ")
+    s"""WITH $gbtTCte,
+       |tr AS (SELECT * FROM t WHERE split = 'train'),
+       |b0 AS (SELECT CAST(SUM(y) // COUNT(*) AS BIGINT) AS base FROM tr),
+       |${rounds.mkString(",\n")},
+       |allr AS ($union),
+       |fl AS (SELECT f, COUNT(*) AS n_splits, SUM(FLOOR($gain)) AS tg
+       |  FROM allr GROUP BY f),
+       |names AS (SELECT * FROM (VALUES $names) AS nm(f, feature)),
+       |tot AS (SELECT SUM(FLOOR($gain)) AS gt FROM allr)
+       |SELECT feature,
+       |  CAST(COALESCE(n_splits, 0) AS BIGINT) AS n_splits,
+       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE)) AS total_gain,
+       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE))
+       |    / CAST(gt AS DOUBLE) AS share
+       |FROM names LEFT JOIN fl USING (f) CROSS JOIN tot
+       |ORDER BY feature""".stripMargin
   }
 
   /** GBT importance oracle: replays the ENTIRE training in SQL — per
@@ -2783,35 +2827,16 @@ object Relational {
         s" + CASE WHEN (p // ${1 << j}) % 2 = 1 THEN ${s.dl} " +
           s"ELSE ${s.dr} END"
       }.mkString
-    val fvals = Gbt.BinCols.indices.map(i => s"($i)").mkString(",")
-    val bvals = (0 until Gbt.NBins - 1).map(b => s"($b)").mkString(",")
-    val caseV = "CASE ff.f " + Gbt.BinCols.zipWithIndex.map {
-      case (c, i) => s"WHEN $i THEN $c "
-    }.mkString + "END"
     val rounds = m.stumps.indices.map { k =>
       val prior = m.stumps.take(k)
       val i = k + 1
-      s"""c$i AS (SELECT ${patSql(prior)} AS p, ff.f AS f,
-         |    $caseV AS v, COUNT(*) AS n, SUM(y) AS sy
-         |  FROM tr CROSS JOIN (VALUES $fvals) AS ff(f) GROUP BY 1, 2, 3),
-         |r$i AS (SELECT f, v, CAST(n AS BIGINT) AS n,
-         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
-         |      AS r
-         |  FROM c$i),
-         |t$i AS (SELECT f, CAST(SUM(n) AS BIGINT) AS tot_n,
-         |    CAST(SUM(r) AS BIGINT) AS tot_r FROM r$i GROUP BY f),
-         |s$i AS (SELECT cell.f AS f, bb.b AS b,
-         |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
-         |  FROM r$i cell CROSS JOIN (VALUES $bvals) AS bb(b)
-         |  WHERE cell.v <= bb.b GROUP BY 1, 2),
+      s"""${gbtRootHistCtes("", i, patSql(prior), fSql(prior))},
          |g$i AS (SELECT s.f, s.b, ln, lr, tot_n - ln AS rn,
          |    tot_r - lr AS rr
          |  FROM s$i s JOIN t$i USING (f)
          |  WHERE ln > 0 AND tot_n - ln > 0),
          |w$i AS (SELECT f, b,
-         |    (CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
-         |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
-         |        / CAST(rn AS DOUBLE) AS gain,
+         |    $gbtGainSql,
          |    CAST(FLOOR(CAST(0.5 AS DOUBLE) * (CAST(lr AS DOUBLE)
          |      / CAST(ln AS DOUBLE)) + CAST(0.5 AS DOUBLE)) AS BIGINT)
          |      AS dl,
@@ -2823,24 +2848,7 @@ object Relational {
     val union = m.stumps.indices
       .map(k => s"SELECT ${k + 1} AS round, f, b, dl, dr, gain FROM w${k + 1}")
       .mkString("\n  UNION ALL ")
-    val names = Gbt.FeatureNames.zipWithIndex
-      .map { case (n, i) => s"($i, '$n')" }.mkString(", ")
-    s"""WITH $gbtTCte,
-       |tr AS (SELECT * FROM t WHERE split = 'train'),
-       |b0 AS (SELECT CAST(SUM(y) // COUNT(*) AS BIGINT) AS base FROM tr),
-       |${rounds.mkString(",\n")},
-       |allr AS ($union),
-       |fl AS (SELECT f, COUNT(*) AS n_splits, SUM(FLOOR(gain)) AS tg
-       |  FROM allr GROUP BY f),
-       |names AS (SELECT * FROM (VALUES $names) AS nm(f, feature)),
-       |tot AS (SELECT SUM(FLOOR(gain)) AS gt FROM allr)
-       |SELECT feature,
-       |  CAST(COALESCE(n_splits, 0) AS BIGINT) AS n_splits,
-       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE)) AS total_gain,
-       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE))
-       |    / CAST(gt AS DOUBLE) AS share
-       |FROM names LEFT JOIN fl USING (f) CROSS JOIN tot
-       |ORDER BY feature""".stripMargin
+    gbtReplayOracle(rounds, union, "gain")
   }
 
   /** Depth-2 tree oracle: replays the ENTIRE two-level training in SQL.
@@ -2877,44 +2885,22 @@ object Relational {
         s" + CASE (p // ${1 << (2 * j)}) % 4 WHEN 0 THEN ${t.dLL} " +
           s"WHEN 1 THEN ${t.dLR} WHEN 2 THEN ${t.dRL} ELSE ${t.dRR} END"
       }.mkString
-    val fvals = Gbt.BinCols.indices.map(i => s"($i)").mkString(",")
-    val bvals = (0 until Gbt.NBins - 1).map(b => s"($b)").mkString(",")
-    val caseV = "CASE ff.f " + Gbt.BinCols.zipWithIndex.map {
-      case (c, i) => s"WHEN $i THEN $c "
-    }.mkString + "END"
-    val caseRoot = "CASE wa.f " + Gbt.BinCols.zipWithIndex.map {
-      case (c, i) => s"WHEN $i THEN $c "
-    }.mkString + "END"
     val rounds = m.trees.indices.map { k =>
       val prior = m.trees.take(k)
       val i = k + 1
-      s"""ca$i AS (SELECT ${patSql(prior)} AS p, ff.f AS f,
-         |    $caseV AS v, COUNT(*) AS n, SUM(y) AS sy
-         |  FROM tr CROSS JOIN (VALUES $fvals) AS ff(f) GROUP BY 1, 2, 3),
-         |ra$i AS (SELECT f, v, CAST(n AS BIGINT) AS n,
-         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
-         |      AS r
-         |  FROM ca$i),
-         |ta$i AS (SELECT f, CAST(SUM(n) AS BIGINT) AS tot_n,
-         |    CAST(SUM(r) AS BIGINT) AS tot_r FROM ra$i GROUP BY f),
-         |sa$i AS (SELECT cell.f AS f, bb.b AS b,
-         |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
-         |  FROM ra$i cell CROSS JOIN (VALUES $bvals) AS bb(b)
-         |  WHERE cell.v <= bb.b GROUP BY 1, 2),
+      s"""${gbtRootHistCtes("a", i, patSql(prior), fSql(prior))},
          |ga$i AS (SELECT s.f, s.b, ln, lr, tot_n - ln AS rn,
          |    tot_r - lr AS rr, tot_n, tot_r
          |  FROM sa$i s JOIN ta$i USING (f)
          |  WHERE ln > 0 AND tot_n - ln > 0),
          |wa$i AS (SELECT f, b,
-         |    (CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
-         |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
-         |        / CAST(rn AS DOUBLE) AS gain,
+         |    $gbtGainSql,
          |    tot_n, tot_r
          |  FROM ga$i ORDER BY gain DESC, f ASC, b ASC LIMIT 1),
          |cb$i AS (SELECT ${patSql(prior)} AS p,
-         |    CASE WHEN ($caseRoot) <= wa.b THEN 1 ELSE 0 END AS s,
-         |    ff.f AS f, $caseV AS v, COUNT(*) AS n, SUM(y) AS sy
-         |  FROM tr CROSS JOIN wa$i wa CROSS JOIN (VALUES $fvals) AS ff(f)
+         |    CASE WHEN (${gbtBinCase("wa")}) <= wa.b THEN 1 ELSE 0 END AS s,
+         |    ff.f AS f, ${gbtBinCase("ff")} AS v, COUNT(*) AS n, SUM(y) AS sy
+         |  FROM tr CROSS JOIN wa$i wa CROSS JOIN (VALUES $gbtFeatureValues) AS ff(f)
          |  GROUP BY 1, 2, 3, 4),
          |rb$i AS (SELECT s, f, v, CAST(n AS BIGINT) AS n,
          |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
@@ -2924,16 +2910,14 @@ object Relational {
          |    CAST(SUM(r) AS BIGINT) AS tot_r FROM rb$i GROUP BY s, f),
          |sb$i AS (SELECT cell.s AS s, cell.f AS f, bb.b AS b,
          |    CAST(SUM(n) AS BIGINT) AS ln, CAST(SUM(r) AS BIGINT) AS lr
-         |  FROM rb$i cell CROSS JOIN (VALUES $bvals) AS bb(b)
+         |  FROM rb$i cell CROSS JOIN (VALUES $gbtBinValues) AS bb(b)
          |  WHERE cell.v <= bb.b GROUP BY 1, 2, 3),
          |gb$i AS (SELECT s.s, s.f, s.b, ln, lr, t.tot_n - ln AS rn,
          |    t.tot_r - lr AS rr, t.tot_n, t.tot_r
          |  FROM sb$i s JOIN tb$i t ON s.s = t.s AND s.f = t.f
          |  WHERE ln > 0 AND t.tot_n - ln > 0),
          |wb$i AS (SELECT s, f, b,
-         |    (CAST(lr AS DOUBLE) * CAST(lr AS DOUBLE)) / CAST(ln AS DOUBLE)
-         |      + (CAST(rr AS DOUBLE) * CAST(rr AS DOUBLE))
-         |        / CAST(rn AS DOUBLE) AS gain,
+         |    $gbtGainSql,
          |    tot_n, tot_r
          |  FROM gb$i
          |  QUALIFY ROW_NUMBER() OVER (PARTITION BY s
@@ -2947,24 +2931,7 @@ object Relational {
         s"SELECT f, gain - (CAST(tot_r AS DOUBLE) * CAST(tot_r AS DOUBLE))" +
           s" / CAST(tot_n AS DOUBLE) AS gred FROM wb$i")
     }.mkString("\n  UNION ALL ")
-    val names = Gbt.FeatureNames.zipWithIndex
-      .map { case (n, i) => s"($i, '$n')" }.mkString(", ")
-    s"""WITH $gbtTCte,
-       |tr AS (SELECT * FROM t WHERE split = 'train'),
-       |b0 AS (SELECT CAST(SUM(y) // COUNT(*) AS BIGINT) AS base FROM tr),
-       |${rounds.mkString(",\n")},
-       |allr AS ($union),
-       |fl AS (SELECT f, COUNT(*) AS n_splits, SUM(FLOOR(gred)) AS tg
-       |  FROM allr GROUP BY f),
-       |names AS (SELECT * FROM (VALUES $names) AS nm(f, feature)),
-       |tot AS (SELECT SUM(FLOOR(gred)) AS gt FROM allr)
-       |SELECT feature,
-       |  CAST(COALESCE(n_splits, 0) AS BIGINT) AS n_splits,
-       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE)) AS total_gain,
-       |  COALESCE(CAST(tg AS DOUBLE), CAST(0 AS DOUBLE))
-       |    / CAST(gt AS DOUBLE) AS share
-       |FROM names LEFT JOIN fl USING (f) CROSS JOIN tot
-       |ORDER BY feature""".stripMargin
+    gbtReplayOracle(rounds, union, "gred")
   }
 
   /** The q_quarantine oracle; q_stream_quarantine replays it verbatim.
@@ -3105,17 +3072,7 @@ object Relational {
     // exact-domain sums (BIGINT/DECIMAL), closed-form double arithmetic
     // written in the same shape as the Spark query → bit-exact
     "q_regression" -> fixed(qRegression _)(
-      """WITH f AS (SELECT
-        |    CASE WHEN p_partkey % 5 = 0 THEN 'test' ELSE 'train' END AS split,
-        |    CAST(p_size AS BIGINT) AS x,
-        |    CAST(p_retailprice AS DECIMAL(18,2)) AS y
-        |  FROM part WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
-        |a AS (SELECT split, COUNT(*) AS n_rows,
-        |    CAST(COUNT(*) AS DOUBLE) AS n,
-        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(x*x) AS DOUBLE) AS sxx,
-        |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(x*y) AS DOUBLE) AS sxy,
-        |    CAST(SUM(y*y) AS DOUBLE) AS syy
-        |  FROM f GROUP BY split)
+      s"""WITH $regressionSumsCtes
         |SELECT split, n_rows AS n,
         |  (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
         |  (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept,
@@ -3126,17 +3083,7 @@ object Relational {
     // over the six exact aggregates — operator tree written identically
     // to the Spark side (IEEE double is order-sensitive)
     "q_regression_eval" -> fixed(qRegressionEval _)(
-      """WITH f AS (SELECT
-        |    CASE WHEN p_partkey % 5 = 0 THEN 'test' ELSE 'train' END AS split,
-        |    CAST(p_size AS BIGINT) AS x,
-        |    CAST(p_retailprice AS DECIMAL(18,2)) AS y
-        |  FROM part WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
-        |a AS (SELECT split, COUNT(*) AS n_rows,
-        |    CAST(COUNT(*) AS DOUBLE) AS n,
-        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(x*x) AS DOUBLE) AS sxx,
-        |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(x*y) AS DOUBLE) AS sxy,
-        |    CAST(SUM(y*y) AS DOUBLE) AS syy
-        |  FROM f GROUP BY split),
+      s"""WITH $regressionSumsCtes,
         |c AS (SELECT
         |    (n*sxy - sx*sy) / (n*sxx - sx*sx) AS m,
         |    (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS b
@@ -3664,40 +3611,16 @@ object Relational {
     // cover every within-radius pair; a grid join that missed one would
     // undercount and hash-fail (the q_fuzzy_join completeness discipline)
     "q_geo_grid_join" -> fixed(qGeoGridJoin _)(
-      """WITH c AS (SELECT c_custkey,
-        |    CAST(48 AS DOUBLE) + CAST(c_custkey * 2654435761 % 1000
-        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS c_lat,
-        |    CAST(2 AS DOUBLE) + CAST(c_custkey * 1099087573 % 1000
-        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS c_lon
-        |  FROM customer),
+      s"""WITH ${geoPointCte("c", "customer", "c_custkey")},
         |cc AS (SELECT *, CAST(FLOOR(c_lat * 10) AS BIGINT) AS cx,
         |    CAST(FLOOR(c_lon * 10) AS BIGINT) AS cy FROM c),
-        |s AS (SELECT s_suppkey,
-        |    CAST(48 AS DOUBLE) + CAST(s_suppkey * 2654435761 % 1000
-        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS s_lat,
-        |    CAST(2 AS DOUBLE) + CAST(s_suppkey * 1099087573 % 1000
-        |      AS DOUBLE) / CAST(1000 AS DOUBLE) AS s_lon
-        |  FROM supplier),
+        |${geoPointCte("s", "supplier", "s_suppkey")},
         |ss AS (SELECT *, CAST(FLOOR(s_lat * 10) AS BIGINT) AS sx,
         |    CAST(FLOOR(s_lon * 10) AS BIGINT) AS sy FROM s),
         |cand AS (SELECT s_suppkey, c_custkey,
-        |    (s_lat - c_lat) * (s_lat - c_lat)
-        |      + (s_lon - c_lon) * (s_lon - c_lon) AS d2
+        |    $geoD2Sql AS d2
         |  FROM ss JOIN cc ON abs(sx - cx) <= 1 AND abs(sy - cy) <= 1),
-        |win AS (SELECT s.s_suppkey, COUNT(*) AS n_within
-        |  FROM s CROSS JOIN c
-        |  WHERE (s_lat - c_lat) * (s_lat - c_lat)
-        |      + (s_lon - c_lon) * (s_lon - c_lon)
-        |    < CAST(0.0025 AS DOUBLE)
-        |  GROUP BY 1),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY s_suppkey
-        |    ORDER BY d2, c_custkey) AS rk FROM cand)
-        |SELECT r.s_suppkey, COUNT(*) AS n_candidates,
-        |  CAST(COALESCE(MAX(win.n_within), 0) AS BIGINT) AS n_within,
-        |  MAX(CASE WHEN rk = 1 THEN c_custkey END) AS nearest_custkey,
-        |  MAX(CASE WHEN rk = 1 THEN d2 END) AS nearest_d2
-        |FROM r LEFT JOIN win ON r.s_suppkey = win.s_suppkey
-        |GROUP BY 1 ORDER BY r.s_suppkey""".stripMargin),
+        |${geoNearestSql("0.0025", "")}""".stripMargin),
     // deterministic keyed tokens: same md5 over the same concatenation
     // in both engines; the raw identifier never reaches the output
     "q_pseudonymize" -> fixed(qPseudonymize _)(

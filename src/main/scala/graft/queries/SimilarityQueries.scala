@@ -935,8 +935,7 @@ object SimilarityQueries {
         s"(CASE WHEN list_dot_product(embd, ${planeLit(planes(b * bits + i))}) >= 0 THEN ${1 << i} ELSE 0 END)"
       }.mkString("", " + ", s" AS sig_$b")
     }
-    s"""e AS (SELECT vec_id AS id,
-       |    CAST(embedding AS DOUBLE[]) AS embd FROM embeddings),
+    s"""$floatCorpusCte,
        |s AS (SELECT id, embd, ${sigs.mkString(",\n")} FROM e),
        |bk AS (SELECT id, embd, band,
        |    CASE band ${(0 until bands).map(b => s"WHEN $b THEN sig_$b").mkString(" ")} END AS sig
@@ -966,6 +965,29 @@ object SimilarityQueries {
        |SELECT id, CAST(MIN(r) AS BIGINT) AS component
        |FROM reach GROUP BY id ORDER BY id""".stripMargin
 
+  /** Word 3-gram shingles per document: `w` (TextSketch.words — lower,
+    * trim, split on whitespace) and `sh` (each doc's 3-word shingles in
+    * order, the whole text as one shingle for docs under 3 words).
+    */
+  private val wordTrigramCtes =
+    """w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+      |  FROM documents),
+      |sh AS (SELECT doc_id,
+      |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+      |      ELSE list_transform(generate_series(1, len(ws) - 2),
+      |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END AS sg
+      |  FROM w)""".stripMargin
+
+  /** [[wordTrigramCtes]]' shingles as a SET per document (`sh.sg`
+    * distinct), the input of every exact set-similarity replay. */
+  private[graft] val distinctTrigramCtes =
+    s"""${TextQueries.wordsCte("w", "doc_id")},
+      |sh AS (SELECT doc_id,
+      |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
+      |      ELSE list_transform(generate_series(1, len(ws) - 2),
+      |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
+      |  FROM w)""".stripMargin
+
   /** ONE definition of the md5-lane minhash signature + banding CTEs
     * (w → sh → hx → g → sig → bk over `documents`), shared by every
     * oracle that replays the sketch (q_minhash_neardup,
@@ -974,13 +996,7 @@ object SimilarityQueries {
     * cannot desync one oracle from the shared Spark kernel.
     */
   private val minhashSigCtes =
-    """w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-      |  FROM documents),
-      |sh AS (SELECT doc_id,
-      |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-      |      ELSE list_transform(generate_series(1, len(ws) - 2),
-      |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END AS sg
-      |  FROM w),
+    s"""$wordTrigramCtes,
       |hx AS (SELECT doc_id,
       |    CAST(md5_number_lower(s) AS HUGEINT) AS h1,
       |    CAST(md5_number_upper(s) AS HUGEINT) AS h2
@@ -1207,14 +1223,32 @@ object SimilarityQueries {
   private def pqAdcSum(model: graft.ops.Pq.PqModel): String =
     (1 to model.m).map(i => s"ls[$i]").mkString(" + ")
 
-  /** shortlist → exact-L2 rerank tail: sqrt BEFORE the ordering (sqrt can
-    * collapse near-equal distances into double ties — EuclideanDistance
-    * applies math.sqrt first), ties to the smaller id, top-k.
+  /** The first ten vectors of `e` as the queries `q`. */
+  private val tenQueriesCte =
+    "q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10)"
+
+  /** ADC → shortlist → exact-L2 rerank tail of every PQ-family oracle:
+    * `adcl` gathers each (query, vector)'s LUT floats over `enc` joined
+    * through `joins` (which bind `l`, the LUT), `shortlist` keeps the
+    * `n` lowest ADC totals (ties to the smaller id), then the rerank:
+    * sqrt BEFORE the ordering (sqrt can collapse near-equal distances
+    * into double ties — EuclideanDistance applies math.sqrt first),
+    * ties to the smaller id, top-k.
     */
-  private def pqRerankTail(model: graft.ops.Pq.PqModel, k: Int): String = {
+  private def pqAdcRerankTail(model: graft.ops.Pq.PqModel, joins: String,
+      n: Int, k: Int): String = {
     val rerankDist = (1 to model.dim)
       .map(i => pqSq(s"a.embd[$i]", s"b.embd[$i]")).mkString(" + ")
-    s"""rr AS (SELECT s.query_id, s.id,
+    s"""adcl AS (SELECT l.query_id, enc.id,
+       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
+       |  FROM enc$joins
+       |  WHERE enc.id <> l.query_id
+       |  GROUP BY l.query_id, enc.id),
+       |shortlist AS (SELECT query_id, id FROM (
+       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
+       |    FROM adcl) WHERE rn <= $n),
+       |rr AS (SELECT s.query_id, s.id,
        |    CAST(row_number() OVER (PARTITION BY s.query_id
        |      ORDER BY sqrt($rerankDist) ASC, s.id ASC) AS BIGINT) AS rank
        |  FROM shortlist s
@@ -1238,22 +1272,18 @@ object SimilarityQueries {
     *    near-equal distances into double ties, so the oracle must order by
     *    the sqrt'd value too), ties to the smaller id, top-k.
     */
-  private def pqOracle(model: graft.ops.Pq.PqModel): String = {
-    s"""WITH e AS (SELECT vec_id AS id,
-       |    CAST(embedding AS DOUBLE[]) AS embd FROM embeddings),
-       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+  private def pqOracle(model: graft.ops.Pq.PqModel): String =
+    pqOracleOver(floatCorpusCte, model)
+
+  /** The plain-PQ replay over `corpusCtes`, which define `e`. */
+  private def pqOracleOver(corpusCtes: String,
+      model: graft.ops.Pq.PqModel): String =
+    s"""WITH $corpusCtes,
+       |$tenQueriesCte,
        |${pqEncodeLutCtes(model)},
-       |adcl AS (SELECT l.query_id, enc.id,
-       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
-       |  FROM enc JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell
-       |  WHERE enc.id <> l.query_id
-       |  GROUP BY l.query_id, enc.id),
-       |shortlist AS (SELECT query_id, id FROM (
-       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
-       |    FROM adcl) WHERE rn <= $PqShortlist),
-       |${pqRerankTail(model, PqK)}""".stripMargin
-  }
+       |${pqAdcRerankTail(model,
+         " JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell",
+         PqShortlist, PqK)}""".stripMargin
 
   /** Snapped-grid projection of the corpus CTE: `e(id, embd)` where embd
     * is the k-dim projection of `embeddings` under (mean, proj) —
@@ -1285,7 +1315,7 @@ object SimilarityQueries {
   private def ivfPcaOracle(mean: Array[Double], proj: Array[Double],
       cents: Array[Array[Float]]): String = {
     s"""WITH ${centroidAssignCtes(cents, projectedCorpusCtes(mean, proj, 64))},
-       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |$tenQueriesCte,
        |${probesCte(withQEmbd = true)},
        |shortlist AS (SELECT query_id, id FROM (
        |    SELECT p.query_id, a.id,
@@ -1314,21 +1344,8 @@ object SimilarityQueries {
     * fragments, exactly as PqKernels widens its float input per element.
     */
   private def opqOracle(r: graft.ops.Opq.Rotation,
-      model: graft.ops.Pq.PqModel): String = {
-    s"""WITH ${projectedCorpusCtes(r.mean, r.rot, r.dim)},
-       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
-       |${pqEncodeLutCtes(model)},
-       |adcl AS (SELECT l.query_id, enc.id,
-       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
-       |  FROM enc JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell
-       |  WHERE enc.id <> l.query_id
-       |  GROUP BY l.query_id, enc.id),
-       |shortlist AS (SELECT query_id, id FROM (
-       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
-       |    FROM adcl) WHERE rn <= $PqShortlist),
-       |${pqRerankTail(model, PqK)}""".stripMargin
-  }
+      model: graft.ops.Pq.PqModel): String =
+    pqOracleOver(projectedCorpusCtes(r.mean, r.rot, r.dim), model)
 
   /** The residual IVFADC oracle (q_ann_ivfpq_residual): like
     * [[ivfpqOracle]] but encode/LUT run on RESIDUALS. The residual
@@ -1348,7 +1365,7 @@ object SimilarityQueries {
       s"($i, CAST(${c.map(_.toString).mkString("[", ", ", "]")} AS FLOAT[]))"
     }.mkString(",\n")
     s"""WITH ${centroidAssignCtes(cents)},
-       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |$tenQueriesCte,
        |${probesCte(withQEmbd = false)},
        |ef AS (SELECT vec_id AS id, embedding AS embf FROM embeddings),
        |centsf(cell, cf) AS (VALUES
@@ -1372,19 +1389,11 @@ object SimilarityQueries {
        |lut AS (SELECT qr.query_id, qr.pcell, cb.mi, cb.cell,
        |    CAST(${pqSubDist(model, "qr.qresd")} AS FLOAT) AS lv
        |  FROM qres qr CROSS JOIN cb),
-       |adcl AS (SELECT l.query_id, enc.id,
-       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
-       |  FROM enc
-       |  JOIN assigned a ON a.id = enc.id
-       |  JOIN lut l ON l.pcell = a.cell AND enc.mi = l.mi
-       |    AND enc.cell = l.cell
-       |  WHERE enc.id <> l.query_id
-       |  GROUP BY l.query_id, enc.id),
-       |shortlist AS (SELECT query_id, id FROM (
-       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
-       |    FROM adcl) WHERE rn <= $IvfPqShortlist),
-       |${pqRerankTail(model, IvfK)}""".stripMargin
+       |${pqAdcRerankTail(model,
+         "\n  JOIN assigned a ON a.id = enc.id" +
+           "\n  JOIN lut l ON l.pcell = a.cell AND enc.mi = l.mi" +
+           "\n    AND enc.cell = l.cell",
+         IvfPqShortlist, IvfK)}""".stripMargin
   }
 
   /** The composed IVFADC oracle: the trained-centroid assignment + probe
@@ -1396,23 +1405,15 @@ object SimilarityQueries {
   private def ivfpqOracle(cents: Array[Array[Float]],
       model: graft.ops.Pq.PqModel): String = {
     s"""WITH ${centroidAssignCtes(cents)},
-       |q AS (SELECT id AS query_id, embd AS q_embd FROM e WHERE id < 10),
+       |$tenQueriesCte,
        |${probesCte(withQEmbd = false)},
        |${pqEncodeLutCtes(model)},
-       |adcl AS (SELECT l.query_id, enc.id,
-       |    list(CAST(l.lv AS DOUBLE) ORDER BY l.mi) AS ls
-       |  FROM enc
-       |  JOIN assigned a ON a.id = enc.id
-       |  JOIN probes p ON p.cell = a.cell
-       |  JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell
-       |    AND l.query_id = p.query_id
-       |  WHERE enc.id <> l.query_id
-       |  GROUP BY l.query_id, enc.id),
-       |shortlist AS (SELECT query_id, id FROM (
-       |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY (${pqAdcSum(model)}) ASC, id ASC) AS rn
-       |    FROM adcl) WHERE rn <= $IvfPqShortlist),
-       |${pqRerankTail(model, IvfK)}""".stripMargin
+       |${pqAdcRerankTail(model,
+         "\n  JOIN assigned a ON a.id = enc.id" +
+           "\n  JOIN probes p ON p.cell = a.cell" +
+           "\n  JOIN lut l ON enc.mi = l.mi AND enc.cell = l.cell" +
+           "\n    AND l.query_id = p.query_id",
+         IvfPqShortlist, IvfK)}""".stripMargin
   }
 
   /** SemDeDup oracle: the shared trained-centroid assignment CTEs, then
@@ -1462,6 +1463,42 @@ object SimilarityQueries {
       |LEFT JOIN ex ON b.doc_id = ex.doc_id
       |LEFT JOIN near ON b.doc_id = near.doc_id
       |ORDER BY b.doc_id""".stripMargin
+
+  /** q_entity_resolution's oracle; q_entity_resolution_incremental
+    * replays it verbatim, so the hash check re-proves incremental ==
+    * batch on the full linkage pipeline every round.
+    * Dirty-mention construction (every 10th customer gets a C→K typo
+    * duplicate), brute-force levenshtein × exact-balance pairs
+    * (re-proving the deletion-neighborhood blocking complete) → the
+    * q_dedup_clusters recursive min-label CTE → field survivorship.
+    */
+  private def entityResolutionOracle: String =
+    """WITH RECURSIVE m AS (
+      |  SELECT c_custkey*2 AS m_id, c_name AS m_name, c_acctbal
+      |    FROM customer
+      |  UNION ALL
+      |  SELECT c_custkey*2+1, replace(c_name, 'C', 'K'), c_acctbal
+      |    FROM customer WHERE c_custkey % 10 = 0),
+      |p AS (SELECT a.m_id AS src, b.m_id AS dst
+      |  FROM m a JOIN m b ON a.m_id < b.m_id
+      |    AND a.c_acctbal = b.c_acctbal
+      |    AND levenshtein(a.m_name, b.m_name) <= 1),
+      |ed AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
+      |reach(id, r) AS (
+      |  SELECT m_id, m_id FROM m
+      |  UNION
+      |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
+      |lab AS (SELECT id, CAST(MIN(r) AS BIGINT) AS component
+      |  FROM reach GROUP BY id)
+      |SELECT lab.component, CAST(COUNT(*) AS BIGINT) AS n_members,
+      |  MIN(m.m_name) AS canonical_name,
+      |  CAST(MAX(CAST(m.c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+      |    AS best_acctbal,
+      |  string_agg(CAST(m.m_id AS VARCHAR), ','
+      |    ORDER BY m.m_id) AS member_keys
+      |FROM lab JOIN m ON m.m_id = lab.id
+      |GROUP BY lab.component HAVING COUNT(*) > 1
+      |ORDER BY lab.component""".stripMargin
 
   /** The SimilarityQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
@@ -1572,13 +1609,7 @@ object SimilarityQueries {
     // sliding window (tie rule irrelevant — only the VALUE is kept),
     // distinct fingerprints, pairs weighted by shared count
     "q_winnow_neardup" -> fixed(qWinnowNearDup _)(
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |      ELSE list_transform(generate_series(1, len(ws) - 2),
-        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END AS sg
-        |  FROM w),
+      s"""WITH $wordTrigramCtes,
         |hx AS (SELECT doc_id, len(sg) AS m,
         |    unnest(range(1, len(sg) + 1)) AS i,
         |    md5_number_lower(unnest(sg)) AS h
@@ -1596,14 +1627,7 @@ object SimilarityQueries {
     // (lower, trim, split \s+), whole-text shingle for docs < 3 words,
     // Jaccard over DISTINCT shingles
     "q_ngram_jaccard" -> fixed(qNgramJaccard _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |      ELSE list_transform(generate_series(1, len(ws) - 2),
-        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
-        |  FROM w),
+      s"""WITH $distinctTrigramCtes,
         |p AS (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         |FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -1617,9 +1641,7 @@ object SimilarityQueries {
     // excluded on both sides (their collapse shingle is q_dedup_exact's
     // business)
     "q_substring_dedup" -> fixed(qSubstringDedup _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""WITH ${TextQueries.wordsCte("w", "doc_id")},
         |g AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i
         |  FROM w WHERE len(ws) >= 8),
         |p AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
@@ -1647,14 +1669,7 @@ object SimilarityQueries {
     // the prefix candidate set missed nothing. Jaccard emitted as the
     // same single double division of exact integers on both sides.
     "q_setjoin_prefix" -> fixed(qSetjoinPrefix _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |      ELSE list_transform(generate_series(1, len(ws) - 2),
-        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
-        |  FROM w),
+      s"""WITH $distinctTrigramCtes,
         |p AS (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) AS jaccard
@@ -1697,48 +1712,12 @@ object SimilarityQueries {
     // the neighborhood join's completeness proof: DuckDB brute-forces
     // levenshtein over all pairs, Spark only meets candidates that share a
     // deletion key — a hash mismatch here would mean a missed pair
-    // entity resolution: dirty-mention construction (every 10th customer
-    // gets a C→K typo duplicate), brute-force levenshtein × exact-balance
-    // pairs (re-proving the deletion-neighborhood blocking complete) →
-    // the q_dedup_clusters recursive min-label CTE → field survivorship
     "q_entity_resolution" -> fixed(qEntityResolution _)(
-      """WITH RECURSIVE m AS (
-        |  SELECT c_custkey*2 AS m_id, c_name AS m_name, c_acctbal
-        |    FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey*2+1, replace(c_name, 'C', 'K'), c_acctbal
-        |    FROM customer WHERE c_custkey % 10 = 0),
-        |p AS (SELECT a.m_id AS src, b.m_id AS dst
-        |  FROM m a JOIN m b ON a.m_id < b.m_id
-        |    AND a.c_acctbal = b.c_acctbal
-        |    AND levenshtein(a.m_name, b.m_name) <= 1),
-        |ed AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
-        |reach(id, r) AS (
-        |  SELECT m_id, m_id FROM m
-        |  UNION
-        |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
-        |lab AS (SELECT id, CAST(MIN(r) AS BIGINT) AS component
-        |  FROM reach GROUP BY id)
-        |SELECT lab.component, CAST(COUNT(*) AS BIGINT) AS n_members,
-        |  MIN(m.m_name) AS canonical_name,
-        |  CAST(MAX(CAST(m.c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-        |    AS best_acctbal,
-        |  string_agg(CAST(m.m_id AS VARCHAR), ','
-        |    ORDER BY m.m_id) AS member_keys
-        |FROM lab JOIN m ON m.m_id = lab.id
-        |GROUP BY lab.component HAVING COUNT(*) > 1
-        |ORDER BY lab.component""".stripMargin),
+      entityResolutionOracle),
     // full exact containment join — completeness proof for the asymmetric
     // prefix filter; τ in integer form so no float threshold boundary
     "q_containment" -> fixed(qContainment _)(
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |      ELSE list_transform(generate_series(1, len(ws) - 2),
-        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS sg
-        |  FROM w),
+      s"""WITH $distinctTrigramCtes,
         |p AS (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(COUNT(*) AS DOUBLE) / a.n AS containment
@@ -1746,36 +1725,9 @@ object SimilarityQueries {
         |GROUP BY a.doc_id, b.doc_id, a.n
         |HAVING 3 * COUNT(*) >= 2 * a.n
         |ORDER BY doc_a, doc_b""".stripMargin),
-    // incremental entity resolution: the oracle is the FROM-SCRATCH
-    // recursive CTE above VERBATIM — the driver hash re-proves
-    // incremental == batch on the full linkage pipeline every round
+    // incremental entity resolution: the FROM-SCRATCH oracle, verbatim
     "q_entity_resolution_incremental" -> fixed(qEntityResolutionIncremental _)(
-      """WITH RECURSIVE m AS (
-        |  SELECT c_custkey*2 AS m_id, c_name AS m_name, c_acctbal
-        |    FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey*2+1, replace(c_name, 'C', 'K'), c_acctbal
-        |    FROM customer WHERE c_custkey % 10 = 0),
-        |p AS (SELECT a.m_id AS src, b.m_id AS dst
-        |  FROM m a JOIN m b ON a.m_id < b.m_id
-        |    AND a.c_acctbal = b.c_acctbal
-        |    AND levenshtein(a.m_name, b.m_name) <= 1),
-        |ed AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
-        |reach(id, r) AS (
-        |  SELECT m_id, m_id FROM m
-        |  UNION
-        |  SELECT reach.id, ed.dst FROM reach JOIN ed ON reach.r = ed.src),
-        |lab AS (SELECT id, CAST(MIN(r) AS BIGINT) AS component
-        |  FROM reach GROUP BY id)
-        |SELECT lab.component, CAST(COUNT(*) AS BIGINT) AS n_members,
-        |  MIN(m.m_name) AS canonical_name,
-        |  CAST(MAX(CAST(m.c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-        |    AS best_acctbal,
-        |  string_agg(CAST(m.m_id AS VARCHAR), ','
-        |    ORDER BY m.m_id) AS member_keys
-        |FROM lab JOIN m ON m.m_id = lab.id
-        |GROUP BY lab.component HAVING COUNT(*) > 1
-        |ORDER BY lab.component""".stripMargin),
+      entityResolutionOracle),
     "q_ann_ivf" -> trained(centroidsFor)(qAnnIvf)(ivfOracle),
     "q_ann_ivf_retrain" -> trained(retrainModelFor)(
       qAnnIvfRetrain)(m => ivfRetrainOracle(m._2)),

@@ -860,6 +860,22 @@ object StreamQueries {
 
   // ---- Registry rows and their DuckDB oracles ----
 
+  /** The lake stream's first epoch: every row of the initial snapshot
+    * ([[DatalakeQueries.feedOldCte]]) as an insert, 'initial' → 'e1'. */
+  private val initialSnapshotRows =
+    """SELECT o_orderkey, o_totalprice, 'insert' AS _change_type,
+      |    'initial' AS _from_version, 'e1' AS _to_version
+      |  FROM old""".stripMargin
+
+  /** A streamed feed epoch `from` → `to` over `j`: inserts, deletes,
+    * then [[DatalakeQueries.feedUpdateRows]]. */
+  private def feedDiffRows(from: String, to: String): String =
+    s"""UNION ALL SELECT k, pn, 'insert', '$from', '$to' FROM j
+       |  WHERE ko IS NULL
+       |UNION ALL SELECT k, po, 'delete', '$from', '$to' FROM j
+       |  WHERE kn IS NULL
+       |${DatalakeQueries.feedUpdateRows(from, to)}""".stripMargin
+
   /** The StreamQueries registry rows. A streaming replay row names its
     * batch twin's oracle: stream == batch over the same input is exactly
     * the equality the hash check re-proves. */
@@ -890,7 +906,7 @@ object StreamQueries {
     "q_stream_window" -> fixed(qStreamWindow _)(
       EventQueries.windowTumblingOracle("coalesce(value, 0)")),
     "q_stream_attribution" -> fixed(qStreamAttribution _)(
-      EventQueries.rangeJoinOracle),
+      EventQueries.rangeJoinOracle("JOIN")),
     // CMS linearity: the epoch-folded store's cells equal the batch
     // build's cells exactly, so the estimates — and the oracle — are
     // the batch row's verbatim
@@ -904,28 +920,8 @@ object StreamQueries {
     // per-epoch merges compose to ONE whole-delta merge — same join +
     // CASE as q_merge_publish, base WITHOUT the DV filter
     "q_stream_merge" -> fixed(qStreamMerge _)(
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 3 <> 0
-        |), delta AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    o_totalprice + 10.0 AS o_totalprice,
-        |    'MERGED' AS o_orderpriority,
-        |    CASE WHEN o_orderkey % 10 = 0 THEN 'delete' ELSE 'upsert'
-        |      END AS d_op
-        |  FROM orders WHERE o_orderkey % 2 = 0
-        |)
-        |SELECT COALESCE(d.o_orderkey, b.o_orderkey) AS o_orderkey,
-        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_custkey
-        |    ELSE b.o_custkey END AS o_custkey,
-        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_totalprice
-        |    ELSE b.o_totalprice END AS o_totalprice,
-        |  CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderpriority
-        |    ELSE b.o_orderpriority END AS o_orderpriority
-        |FROM base b FULL OUTER JOIN delta d
-        |  ON b.o_orderkey = d.o_orderkey
-        |WHERE NOT (d.o_orderkey IS NOT NULL AND d.d_op = 'delete')
-        |ORDER BY 1""".stripMargin),
+      DatalakeQueries.mergeThroughOracle(
+        "FROM orders WHERE o_orderkey % 3 <> 0")),
     // new-vs-history-only dedup: the union of per-epoch streamed
     // results equals one batch run, so the batch oracle is verbatim
     "q_stream_dedup_incremental" -> fixed(qStreamDedupIncremental _)(
@@ -951,61 +947,28 @@ object StreamQueries {
     // (_from_version 'initial'), then the e1→e2 feed — q_change_feed's
     // oracle join relabeled to the epoch version names
     "q_stream_change_feed" -> fixed(qStreamChangeFeed _)(
-      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
-        |    WHERE o_orderkey % 7 <> 0),
-        |nu AS (SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
-        |      ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 5 <> 0),
-        |j AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k,
-        |    o.o_orderkey AS ko, n.o_orderkey AS kn,
-        |    o.o_totalprice AS po, n.o_totalprice AS pn
-        |  FROM old o FULL OUTER JOIN nu n ON o.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey, o_totalprice, 'insert' AS _change_type,
-        |    'initial' AS _from_version, 'e1' AS _to_version
-        |  FROM old
-        |UNION ALL SELECT k, pn, 'insert', 'e1', 'e2' FROM j
-        |  WHERE ko IS NULL
-        |UNION ALL SELECT k, po, 'delete', 'e1', 'e2' FROM j
-        |  WHERE kn IS NULL
-        |UNION ALL SELECT k, po, 'update_preimage', 'e1', 'e2' FROM j
-        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |    AND po IS DISTINCT FROM pn
-        |UNION ALL SELECT k, pn, 'update_postimage', 'e1', 'e2' FROM j
-        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |    AND po IS DISTINCT FROM pn""".stripMargin),
+      s"""WITH ${DatalakeQueries.feedOldCte},
+        |${DatalakeQueries.feedNewCte},
+        |${DatalakeQueries.feedJoinCte}
+        |$initialSnapshotRows
+        |${feedDiffRows("e1", "e2")}""".stripMargin),
     // the lake stream materializes a DELETION-VECTOR commit as delete
     // rows (label e1+dv), and the next feed diffs against the DELETED
     // state — a resurrecting reader corrupts both
     "q_stream_cdc_delete" -> fixed(qStreamCdcDelete _)(
-      """WITH old AS (SELECT o_orderkey, o_totalprice FROM orders
-        |    WHERE o_orderkey % 7 <> 0),
+      s"""WITH ${DatalakeQueries.feedOldCte},
         |afterdel AS (SELECT * FROM old WHERE o_orderkey % 9 <> 0),
-        |nu AS (SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 5.0
-        |      ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 5 <> 0),
+        |${DatalakeQueries.feedNewCte},
         |j AS (SELECT COALESCE(a.o_orderkey, n.o_orderkey) AS k,
         |    a.o_orderkey AS ko, n.o_orderkey AS kn,
         |    a.o_totalprice AS po, n.o_totalprice AS pn
         |  FROM afterdel a FULL OUTER JOIN nu n
         |    ON a.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey, o_totalprice, 'insert' AS _change_type,
-        |    'initial' AS _from_version, 'e1' AS _to_version
-        |  FROM old
+        |$initialSnapshotRows
         |UNION ALL SELECT o_orderkey, o_totalprice, 'delete', 'e1',
         |    'e1+dv'
         |  FROM old WHERE o_orderkey % 9 = 0
-        |UNION ALL SELECT k, pn, 'insert', 'e1+dv', 'e2' FROM j
-        |  WHERE ko IS NULL
-        |UNION ALL SELECT k, po, 'delete', 'e1+dv', 'e2' FROM j
-        |  WHERE kn IS NULL
-        |UNION ALL SELECT k, po, 'update_preimage', 'e1+dv', 'e2' FROM j
-        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |    AND po IS DISTINCT FROM pn
-        |UNION ALL SELECT k, pn, 'update_postimage', 'e1+dv', 'e2' FROM j
-        |  WHERE ko IS NOT NULL AND kn IS NOT NULL
-        |    AND po IS DISTINCT FROM pn""".stripMargin),
+        |${feedDiffRows("e1+dv", "e2")}""".stripMargin),
     // end-to-end CDC replication: the replica's content is the closed
     // form of snapshot → vector delete → merge, one replica version per
     // source commit
@@ -1026,16 +989,7 @@ object StreamQueries {
     // its seal), dropped (state evicted under a future match), or
     // duplicated (match + spurious null) each hash-fail
     "q_stream_outer_join" -> fixed(qStreamOuterJoin _)(
-      """WITH c AS (SELECT event_id AS click_id, user_id,
-        |    CAST(ts AS TIMESTAMP) AS click_ts
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS purchase_id, user_id AS p_user,
-        |    CAST(ts AS TIMESTAMP) AS p_ts
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT click_id, purchase_id, user_id
-        |FROM c LEFT JOIN p ON user_id = p_user
-        |  AND click_ts >= p_ts - INTERVAL 1 HOUR AND click_ts < p_ts
-        |ORDER BY click_id, purchase_id""".stripMargin),
+      EventQueries.rangeJoinOracle("LEFT JOIN")),
     // histogram-store fold == batch counts by count linearity, PSI
     // tail shared verbatim → the batch oracle applies unchanged
     "q_stream_drift" -> fixed(qStreamDrift _)(EventQueries.driftPsiOracle),
@@ -1050,7 +1004,7 @@ object StreamQueries {
     // a window the watermark failed to seal would be missing and
     // hash-fail here
     "q_stream_drift_windows" -> fixed(qStreamDriftWindows _)(
-      """WITH e AS (SELECT event_type, ts,
+      s"""WITH e AS (SELECT event_type, ts,
         |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 0 ELSE 1 END
         |      AS cohort,
         |    CASE WHEN ts >= TIMESTAMP '2024-01-16'
@@ -1067,20 +1021,8 @@ object StreamQueries {
         |  FROM b GROUP BY 1),
         |bins AS (SELECT DISTINCT event_type, unnest(range(10)) AS bin
         |  FROM b),
-        |c AS (SELECT event_type, bin,
-        |    COUNT(*) FILTER (cohort = 0) AS n0,
-        |    COUNT(*) FILTER (cohort = 1) AS n1
-        |  FROM b GROUP BY 1, 2),
-        |f AS (SELECT bins.event_type, bins.bin,
-        |    coalesce(c.n0, 0) AS n0, coalesce(c.n1, 0) AS n1
-        |  FROM bins LEFT JOIN c
-        |    ON bins.event_type = c.event_type AND bins.bin = c.bin),
-        |tot AS (SELECT event_type, SUM(n0) AS t0, SUM(n1) AS t1
-        |  FROM f GROUP BY 1),
-        |terms AS (SELECT f.event_type, tot.t0, tot.t1,
-        |    CAST(f.n0 + 1 AS DOUBLE) / (tot.t0 + 10) AS p,
-        |    CAST(f.n1 + 1 AS DOUBLE) / (tot.t1 + 10) AS q
-        |  FROM f JOIN tot USING (event_type)),
+        |${EventQueries.driftCountCtes},
+        |${EventQueries.psiTermsCtes},
         |p AS (SELECT event_type, CAST(max(t0) AS BIGINT) AS n_before,
         |    CAST(max(t1) AS BIGINT) AS n_after,
         |    SUM(floor((p - q) * ln(p / q) * 65536.0) / 65536.0) AS psi

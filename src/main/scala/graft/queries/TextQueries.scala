@@ -634,6 +634,50 @@ object TextQueries {
 
   // ---- Registry rows and their DuckDB oracles ----
 
+  /** CTE `name`: each document's words `ws` with its `keys` columns —
+    * TextSketch.words: lower, trim, split on whitespace. */
+  private[graft] def wordsCte(name: String, keys: String): String =
+    s"""$name AS (SELECT $keys,
+       |    regexp_split_to_array(trim(lower(text)), '\\s+') AS ws
+       |  FROM documents)""".stripMargin
+
+  /** The word bigrams of the word list `ws`, one row each (the whole
+    * list as one bigram when it has under two words). */
+  private[graft] def wordBigramsSql(ws: String): String =
+    s"""unnest(CASE WHEN len($ws) < 2
+       |    THEN [array_to_string($ws, ' ')]
+       |    ELSE list_transform(generate_series(1, len($ws) - 1),
+       |      i -> $ws[i]||' '||$ws[i+1]) END)""".stripMargin
+
+  /** BM25 scoring of the query terms in CTE `q` (query_id, term),
+    * mirroring ops.Retrieval.bm25TopK token for token: `w` tokens with
+    * doc lengths, `t` term frequencies, `d` document frequencies, `n`
+    * corpus stats, `s` the per-term partials floored onto the 2^-16
+    * dyadic grid (so the cross-term SUM is reduction-order-exact in both
+    * engines), `sc` each (query, doc) score.
+    */
+  private def bm25ScoreCtes(q: String): String =
+    s"""w AS (SELECT doc_id,
+       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS dl,
+       |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
+       |  FROM documents),
+       |t AS (SELECT doc_id, term, max(dl) AS dl, COUNT(*) AS tf FROM w
+       |  WHERE term <> '' AND term IN (SELECT term FROM $q)
+       |  GROUP BY doc_id, term),
+       |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term),
+       |n AS (SELECT COUNT(*) AS nd,
+       |    CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS sumdl
+       |  FROM documents),
+       |s AS (SELECT $q.query_id, t.doc_id,
+       |    floor((ln(1.0 + (CAST(nd AS DOUBLE) - df + 0.5) / (df + 0.5))
+       |      * ((CAST(tf AS DOUBLE) * 2.2)
+       |        / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
+       |          * (CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / nd))))))
+       |      * 65536.0) / 65536.0 AS ts
+       |  FROM t JOIN $q USING (term) JOIN d USING (term) CROSS JOIN n),
+       |sc AS (SELECT query_id, doc_id, SUM(ts) AS score FROM s
+       |  GROUP BY query_id, doc_id)""".stripMargin
+
   /** The hybrid-retrieval LEXICAL leg (bm25 replay with each query doc's
     * distinct unigrams as the query set, self-doc slot kept in the
     * ranking then filtered) and the RRF fusion tail — ONE rendering
@@ -644,31 +688,12 @@ object TextQueries {
     * (query_id, doc_id, *_rank ≤ 20).
     */
   private val hybridLexCtes =
-    """qd AS (SELECT doc_id AS query_id, term FROM (
+    s"""qd AS (SELECT doc_id AS query_id, term FROM (
       |    SELECT doc_id,
-      |      unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+      |      unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
       |    FROM documents WHERE doc_id < 5)
       |  WHERE term <> '' GROUP BY query_id, term),
-      |w AS (SELECT doc_id,
-      |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS dl,
-      |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-      |  FROM documents),
-      |t AS (SELECT doc_id, term, max(dl) AS dl, COUNT(*) AS tf FROM w
-      |  WHERE term <> '' AND term IN (SELECT term FROM qd)
-      |  GROUP BY doc_id, term),
-      |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term),
-      |n AS (SELECT COUNT(*) AS nd,
-      |    CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS sumdl
-      |  FROM documents),
-      |s AS (SELECT qd.query_id, t.doc_id,
-      |    floor((ln(1.0 + (CAST(nd AS DOUBLE) - df + 0.5) / (df + 0.5))
-      |      * ((CAST(tf AS DOUBLE) * 2.2)
-      |        / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-      |          * (CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / nd))))))
-      |      * 65536.0) / 65536.0 AS ts
-      |  FROM t JOIN qd USING (term) JOIN d USING (term) CROSS JOIN n),
-      |sc AS (SELECT query_id, doc_id, SUM(ts) AS score FROM s
-      |  GROUP BY query_id, doc_id),
+      |${bm25ScoreCtes("qd")},
       |lexall AS (SELECT query_id, doc_id, row_number() OVER (
       |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS lex_rank
       |  FROM sc),
@@ -725,26 +750,7 @@ object TextQueries {
       .map { case (q, t) => s"($q, '$t')" }.mkString(", ")
     s"""WITH q AS (SELECT CAST(query_id AS BIGINT) AS query_id, term
        |    FROM (VALUES $vals) AS v(query_id, term)),
-       |w AS (SELECT doc_id,
-       |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS dl,
-       |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
-       |  FROM documents),
-       |t AS (SELECT doc_id, term, max(dl) AS dl, COUNT(*) AS tf FROM w
-       |  WHERE term <> '' AND term IN (SELECT term FROM q)
-       |  GROUP BY doc_id, term),
-       |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term),
-       |n AS (SELECT COUNT(*) AS nd,
-       |    CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS sumdl
-       |  FROM documents),
-       |s AS (SELECT q.query_id, t.doc_id,
-       |    floor((ln(1.0 + (CAST(nd AS DOUBLE) - df + 0.5) / (df + 0.5))
-       |      * ((CAST(tf AS DOUBLE) * 2.2)
-       |        / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-       |          * (CAST(dl AS DOUBLE) / (CAST(sumdl AS DOUBLE) / nd))))))
-       |      * 65536.0) / 65536.0 AS ts
-       |  FROM t JOIN q USING (term) JOIN d USING (term) CROSS JOIN n),
-       |sc AS (SELECT query_id, doc_id, SUM(ts) AS score FROM s
-       |  GROUP BY query_id, doc_id),
+       |${bm25ScoreCtes("q")},
        |r AS (SELECT query_id, doc_id, score, row_number() OVER (
        |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank FROM sc)
        |SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score
@@ -795,26 +801,25 @@ object TextQueries {
     * same slices Sketches.buckets masks engine-side; arithmetic stays in
     * HUGEINT because UBIGINT lanes exceed BIGINT
     */
-  private[graft] def heavyHittersOracle: String =
-    """WITH tok AS (SELECT unnest(regexp_split_to_array(trim(lower(text)),
-      |    '\s+')) AS t FROM documents),
+  private[graft] def heavyHittersOracle: String = {
+    // the four lanes' bucket of token `t`, one row per lane
+    val buckets =
+      """unnest([CAST(CAST(md5_number_lower(t) AS HUGEINT) % 1024 AS BIGINT),
+        |      CAST((CAST(md5_number_lower(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT),
+        |      CAST(CAST(md5_number_upper(t) AS HUGEINT) % 1024 AS BIGINT),
+        |      CAST((CAST(md5_number_upper(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT)]) AS bucket,
+        |    unnest([0, 1, 2, 3]) AS lane""".stripMargin
+    s"""WITH tok AS (SELECT unnest(regexp_split_to_array(trim(lower(text)),
+      |    '\\s+')) AS t FROM documents),
       |buck AS (SELECT t,
-      |    unnest([CAST(CAST(md5_number_lower(t) AS HUGEINT) % 1024 AS BIGINT),
-      |      CAST((CAST(md5_number_lower(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT),
-      |      CAST(CAST(md5_number_upper(t) AS HUGEINT) % 1024 AS BIGINT),
-      |      CAST((CAST(md5_number_upper(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT)]) AS bucket,
-      |    unnest([0, 1, 2, 3]) AS lane
+      |    $buckets
       |  FROM tok),
       |cms AS (SELECT lane, bucket, COUNT(*) AS cnt FROM buck
       |  GROUP BY lane, bucket),
       |exact AS (SELECT t, COUNT(*) AS exact_cnt FROM tok GROUP BY t
       |  ORDER BY exact_cnt DESC, t LIMIT 20),
       |qb AS (SELECT t,
-      |    unnest([CAST(CAST(md5_number_lower(t) AS HUGEINT) % 1024 AS BIGINT),
-      |      CAST((CAST(md5_number_lower(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT),
-      |      CAST(CAST(md5_number_upper(t) AS HUGEINT) % 1024 AS BIGINT),
-      |      CAST((CAST(md5_number_upper(t) AS HUGEINT) // 4294967296) % 1024 AS BIGINT)]) AS bucket,
-      |    unnest([0, 1, 2, 3]) AS lane
+      |    $buckets
       |  FROM exact),
       |est AS (SELECT qb.t, MIN(cnt) AS cms_est FROM qb
       |  JOIN cms USING (lane, bucket) GROUP BY qb.t)
@@ -822,6 +827,24 @@ object TextQueries {
       |  cms_est - exact_cnt AS overcount
       |FROM exact JOIN est ON est.t = exact.t
       |ORDER BY exact_cnt DESC, token""".stripMargin
+  }
+
+  /** Each document's UTF-8 bytes as the values the codec rows decode:
+    * `b` the blob, `s` its unsigned bytes `bs` in order (from the blob's
+    * hex), with the byte count `n` and the height `h` of the 32-wide
+    * image the bytes fill when asked for. */
+  private def docBytesCtes(withLength: Boolean, withHeight: Boolean)
+      : String = {
+    val n = if (withLength) " CAST(octet_length(bl) AS BIGINT) AS n," else ""
+    val h = if (withHeight) "\n    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,"
+      else ""
+    s"""b AS (SELECT doc_id, encode(text) AS bl FROM documents),
+       |s AS (SELECT doc_id,$n$h
+       |    list_transform(range(CAST(octet_length(bl) AS INT)),
+       |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
+       |      AS bs
+       |  FROM b)""".stripMargin
+  }
 
   /** The TextQueries registry rows. */
   def defs: Seq[(String, QueryDef)] = Seq(
@@ -890,13 +913,7 @@ object TextQueries {
     // the byte stats, which this SQL computes from the hex of the blob —
     // any decode defect (color transform, padding, truncation) hash-fails
     "q_multimodal_features" -> fixed(qMultimodalFeatures _)(
-      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
-        |s AS (SELECT doc_id, CAST(octet_length(bl) AS BIGINT) AS n,
-        |    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,
-        |    list_transform(range(CAST(octet_length(bl) AS INT)),
-        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
-        |      AS bs
-        |  FROM b)
+      s"""WITH ${docBytesCtes(withLength = true, withHeight = true)}
         |SELECT doc_id, n AS n_bytes, CAST(32 AS BIGINT) AS img_w, h AS img_h,
         |  CAST(coalesce(list_sum(bs), 0) AS DOUBLE) / (32 * h) AS mean_px,
         |  CAST(coalesce(list_max(bs), 0) AS BIGINT) AS max_px
@@ -950,13 +967,8 @@ object TextQueries {
     // add-one bigram LM trained on every-10th docs; ln p floored to the
     // 2^-16 grid pre-sum (reduction-order-exact, same tree as the Spark op)
     "q_lm_score" -> fixed(qLmScore _)(
-      """WITH wr AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |bg AS (SELECT doc_id, unnest(CASE WHEN len(ws) < 2
-        |    THEN [array_to_string(ws, ' ')]
-        |    ELSE list_transform(generate_series(1, len(ws) - 1),
-        |      i -> ws[i]||' '||ws[i+1]) END) AS g
+      s"""WITH ${wordsCte("wr", "doc_id")},
+        |bg AS (SELECT doc_id, ${wordBigramsSql("ws")} AS g
         |  FROM wr),
         |c2 AS (SELECT g, COUNT(*) AS c2n FROM bg
         |  WHERE doc_id % 10 = 0 GROUP BY g),
@@ -986,9 +998,7 @@ object TextQueries {
     // model = (cls, token) counts + class totals + priors + vocab scalar,
     // every ln floored to the 2^-16 grid, argmax by (score desc, cls)
     "q_nb_classifier" -> fixed(qNbClassifier _)(
-      """WITH wr AS (SELECT doc_id, lang,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""WITH ${wordsCte("wr", "doc_id, lang")},
         |tok AS (SELECT doc_id, lang, unnest(ws) AS t FROM wr),
         |ref AS (SELECT * FROM tok WHERE doc_id % 10 = 0),
         |ctk AS (SELECT lang AS cls, t, COUNT(*) AS ctn FROM ref
@@ -1019,13 +1029,8 @@ object TextQueries {
     // same shingling CTE as q_lm_score; marginals are the bigram table's
     // own left/right totals; ln snapped to the 2^-16 grid
     "q_pmi_collocations" -> fixed(qPmiCollocations _)(
-      """WITH wr AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |bg AS (SELECT unnest(CASE WHEN len(ws) < 2
-        |    THEN [array_to_string(ws, ' ')]
-        |    ELSE list_transform(generate_series(1, len(ws) - 1),
-        |      i -> ws[i]||' '||ws[i+1]) END) AS g
+      s"""WITH ${wordsCte("wr", "doc_id")},
+        |bg AS (SELECT ${wordBigramsSql("ws")} AS g
         |  FROM wr),
         |b2 AS (SELECT split_part(g, ' ', 1) AS w1, split_part(g, ' ', 2) AS w2
         |  FROM bg WHERE g LIKE '% %'),
@@ -1045,9 +1050,7 @@ object TextQueries {
     // p·ln p snapped to the 2^-16 grid per term → the entropy sum is
     // exact dyadic arithmetic, order-free on both engines
     "q_source_entropy" -> fixed(qSourceEntropy _)(
-      """WITH wr AS (SELECT source,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""WITH ${wordsCte("wr", "source")},
         |tk AS (SELECT source, unnest(ws) AS t FROM wr),
         |c AS (SELECT source, t, COUNT(*) AS c FROM tk GROUP BY 1, 2),
         |n AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -1086,12 +1089,7 @@ object TextQueries {
     // so the decoded sample stats replay arithmetically from the bytes —
     // n_samples/sample_rate are the DECODER's container view
     "q_audio_features" -> fixed(qAudioFeatures _)(
-      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
-        |s AS (SELECT doc_id, CAST(octet_length(bl) AS BIGINT) AS n,
-        |    list_transform(range(CAST(octet_length(bl) AS INT)),
-        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
-        |      AS bs
-        |  FROM b)
+      s"""WITH ${docBytesCtes(withLength = true, withHeight = false)}
         |SELECT doc_id, n AS n_bytes, n AS n_samples,
         |  CAST(8000 AS DOUBLE) AS sample_rate,
         |  CAST(coalesce(list_sum(bs), 0) AS DOUBLE) / greatest(1, n) AS mean_amp,
@@ -1104,13 +1102,7 @@ object TextQueries {
     // exact integer arithmetic → this SQL replays the thumbnail pixels
     // from the blob's hex; any kernel/codec defect hash-fails.
     "q_image_thumbnail" -> fixed(qImageThumbnail _)(
-      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
-        |s AS (SELECT doc_id, CAST(octet_length(bl) AS BIGINT) AS n,
-        |    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,
-        |    list_transform(range(CAST(octet_length(bl) AS INT)),
-        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
-        |      AS bs
-        |  FROM b),
+      s"""WITH ${docBytesCtes(withLength = true, withHeight = true)},
         |t AS (SELECT doc_id, n, h, CAST(ceil(h / 2.0) AS BIGINT) AS th,
         |    list_transform(range(CAST(16 * ceil(h / 2.0) AS INT)), q ->
         |      CASE WHEN (q // 16) * 2 + 1 < h THEN
@@ -1160,13 +1152,7 @@ object TextQueries {
     // as the q_simhash oracle — a codec defect on the Spark side flips
     // bits and hash-fails here
     "q_image_phash" -> fixed(qImagePhash _)(
-      """WITH b AS (SELECT doc_id, encode(text) AS bl FROM documents),
-        |s AS (SELECT doc_id,
-        |    greatest(1, CAST(ceil(octet_length(bl) / 32.0) AS BIGINT)) AS h,
-        |    list_transform(range(CAST(octet_length(bl) AS INT)),
-        |      i -> CAST(('0x' || substr(hex(bl), CAST(i*2+1 AS INT), 2)) AS INT))
-        |      AS bs
-        |  FROM b),
+      s"""WITH ${docBytesCtes(withLength = false, withHeight = true)},
         |v AS (SELECT doc_id,
         |    list_transform(range(64), q ->
         |      coalesce(bs[CAST(((2*(q//8)+1)*h)//16 * 32

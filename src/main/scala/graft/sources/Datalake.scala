@@ -537,32 +537,39 @@ object Datalake {
       .makeQualified(p).toString
   }
 
-  /** Position columns (__file relative to the version dir, __pos) for
-    * every row of `scan` — the parquet `_metadata` hidden columns, so a
-    * row's identity is (file, row ordinal) with zero bookkeeping columns
-    * stored in the data.
+  /** Position columns (__file relative to `base`, __pos) for every row
+    * of `scan` — the parquet `_metadata` hidden columns, so a row's
+    * identity is (file, row ordinal) with zero bookkeeping columns stored
+    * in the data. `base` is a [[qualifiedPath]]: the version dir for a
+    * plain table, the table root for an evolved chain. The ONE
+    * row-position rule: every vector writer and reader derives
+    * positions here, so the relativization cannot drift.
     */
-  private def withRowPosition(spark: SparkSession, scan: DataFrame,
-      dataPath: String): DataFrame = {
-    val base = qualifiedPath(spark, dataPath)
+  private def withRowPosition(scan: DataFrame, base: String): DataFrame =
     scan.select(col("*"),
       expr(s"substring(_metadata.file_path, ${base.length + 2})")
         .as("__file"),
       col("_metadata.row_index").as("__pos"))
-  }
 
-  /** `scan` (any frame read from files under `dataPath` — the full dir
-    * or a pruned file subset) minus the DV's positions. Plain
+  /** `positioned` (a [[withRowPosition]] frame) minus the vector's
+    * positions, with the position columns dropped. Plain
     * (non-broadcast-forced) left-anti: AQE broadcasts a small vector,
     * and a huge one co-partitions on (__file, __pos) — either way no
-    * row of the base table is read twice. ONE definition for every DV
-    * read path so the relativization/join contract cannot drift.
+    * row of the base table is read twice.
+    */
+  private def minusDv(spark: SparkSession, positioned: DataFrame,
+      dvPath: String): DataFrame =
+    positioned
+      .join(spark.read.parquet(dvPath), Seq("__file", "__pos"), "left_anti")
+      .drop("__file", "__pos")
+
+  /** `scan` (any frame read from files under `dataPath` — the full dir
+    * or a pruned file subset) minus the DV's positions.
     */
   private def applyDvTo(spark: SparkSession, scan: DataFrame,
       dataPath: String, dvPath: String): DataFrame =
-    withRowPosition(spark, scan, dataPath)
-      .join(spark.read.parquet(dvPath), Seq("__file", "__pos"), "left_anti")
-      .drop("__file", "__pos")
+    minusDv(spark, withRowPosition(scan, qualifiedPath(spark, dataPath)),
+      dvPath)
 
   private def applyDv(spark: SparkSession, dataPath: String,
       dvPath: String): DataFrame =
@@ -582,10 +589,7 @@ object Datalake {
       anchor: String): DataFrame = {
     val rootQ = qualifiedPath(spark, tableRoot)
     segmentChain(spark, anchor)
-      .map(s => spark.read.parquet(s.addPath).select(col("*"),
-        expr(s"substring(_metadata.file_path, ${rootQ.length + 2})")
-          .as("__file"),
-        col("_metadata.row_index").as("__pos")))
+      .map(s => withRowPosition(spark.read.parquet(s.addPath), rootQ))
       .reduce(_.unionByName(_))
   }
 
@@ -598,9 +602,7 @@ object Datalake {
     */
   private def applyDvChain(spark: SparkSession, tableRoot: String,
       anchor: String, dvPath: String): DataFrame =
-    chainWithPositions(spark, tableRoot, anchor)
-      .join(spark.read.parquet(dvPath), Seq("__file", "__pos"), "left_anti")
-      .drop("__file", "__pos")
+    minusDv(spark, chainWithPositions(spark, tableRoot, anchor), dvPath)
 
   private def isEvolvedDir(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -1163,8 +1165,8 @@ object Datalake {
       (if (isEvolvedDir(spark, dataPath))
         chainWithPositions(spark, tableRoot, dataPath).filter(predicate)
       else
-        withRowPosition(spark,
-          spark.read.parquet(dataPath).filter(predicate), dataPath))
+        withRowPosition(spark.read.parquet(dataPath).filter(predicate),
+          qualifiedPath(spark, dataPath)))
         .select(col("__file"), col("__pos"))
     // persist so the count and the write share one evaluation — the
     // previous read-back-and-count paid a whole extra scan of the

@@ -29,7 +29,7 @@ class AvroSpec extends SparkSpecBase {
         LocalDateTime.parse("1969-12-31T23:59:59")))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
-    val p = java.nio.file.Files.createTempDirectory("graft-avrospec")
+    val p = graft.streaming.StreamReplay.scratch("graft-avrospec")
       .resolve("t").toString
     AvroIo.writeAvro(df, p)
     val back = AvroIo.readAvro(spark, p)
@@ -56,7 +56,7 @@ class AvroSpec extends SparkSpecBase {
       struct(lit(1.0).as("lat"), lit(2.0).as("lon")).as("location"),
       array(lit("t1")).as("tags"),
       to_date(lit("2024-01-01")).as("created"))
-    val p = java.nio.file.Files.createTempDirectory("graft-exportspec")
+    val p = graft.streaming.StreamReplay.scratch("graft-exportspec")
       .resolve("docs").toString
     Datalake.writeJsonlExport(docs, p)
     assert(Datalake.exportMapping(docs.schema) ===

@@ -17,7 +17,7 @@ class CorpusStreamSpec extends SparkSpecBase {
     StructField("n_chars", LongType)))
 
   test("AvailableNow backfill drains a multi-file backlog in bounded batches") {
-    val dir = Files.createTempDirectory("graft-backfill")
+    val dir = graft.streaming.StreamReplay.scratch("graft-backfill")
     // 3 identical files = a backlog; maxFilesPerTrigger=1 → ≥3 micro-batches
     (1 to 3).foreach { i =>
       Files.copy(Paths.get(s"$sfDir/documents.parquet"),
@@ -31,7 +31,7 @@ class CorpusStreamSpec extends SparkSpecBase {
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-backfill-ckpt").toString)
+        graft.streaming.StreamReplay.scratch("graft-backfill-ckpt").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val n = batch.count()
         if (n > 0) {
@@ -61,9 +61,9 @@ class CorpusStreamSpec extends SparkSpecBase {
     // today's crawl lands as TWO file drops → two micro-batches. The file
     // source does not recurse into non-partition subdirs, so each drop
     // must be a parquet FILE in dropDir, not a write-output directory
-    val dropDir = Files.createTempDirectory("graft-incr-drops")
+    val dropDir = graft.streaming.StreamReplay.scratch("graft-incr-drops")
     def land(df: DataFrame, name: String): Unit = {
-      val stage = Files.createTempDirectory("graft-incr-stage").resolve("out")
+      val stage = graft.streaming.StreamReplay.scratch("graft-incr-stage").resolve("out")
       df.coalesce(1).write.parquet(stage.toString)
       val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
@@ -71,13 +71,13 @@ class CorpusStreamSpec extends SparkSpecBase {
     }
     land(batch.filter(col("doc_id") % 2 === 0), "drop1.parquet")
     land(batch.filter(col("doc_id") % 2 =!= 0), "drop2.parquet")
-    val incDir = Files.createTempDirectory("graft-incr-store").toString
-    val resDir = Files.createTempDirectory("graft-incr-res").toString
+    val incDir = graft.streaming.StreamReplay.scratch("graft-incr-store").toString
+    val resDir = graft.streaming.StreamReplay.scratch("graft-incr-res").toString
     val q = CorpusStreams.incrementalDedupStream(
       CorpusStreams.readDocFiles(spark, dropDir.toString, docSchema, 1)
         .select(col("doc_id"), col("text")),
       exact, bands, incDir, resDir,
-      Files.createTempDirectory("graft-incr-ckpt").toString)
+      graft.streaming.StreamReplay.scratch("graft-incr-ckpt").toString)
     try {
       val done = q.awaitTermination(120000)
       assert(done, "AvailableNow query did not drain the drops in 120s")
@@ -120,25 +120,25 @@ class CorpusStreamSpec extends SparkSpecBase {
     // (unlike the dedup stream, epoch 2's fold depends on epoch 1's
     // labels and bucket rows — this is the stateful case)
     def land(df: DataFrame, dir: java.nio.file.Path, name: String): Unit = {
-      val stage = Files.createTempDirectory("graft-clus-stage").resolve("out")
+      val stage = graft.streaming.StreamReplay.scratch("graft-clus-stage").resolve("out")
       df.coalesce(1).write.parquet(stage.toString)
       val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
       Files.move(part, dir.resolve(name))
     }
-    val dropDir = Files.createTempDirectory("graft-clus-drops")
+    val dropDir = graft.streaming.StreamReplay.scratch("graft-clus-drops")
     val src = spark.read.parquet(s"$sfDir/embeddings.parquet")
     land(src.filter(col("vec_id") % 5 === 4 && col("vec_id") % 3 === 0),
       dropDir, "drop1.parquet")
     land(src.filter(col("vec_id") % 5 === 4 && col("vec_id") % 3 === 1),
       dropDir, "drop2.parquet")
-    val bucketsInc = Files.createTempDirectory("graft-clus-binc").toString
-    val labelsDir = Files.createTempDirectory("graft-clus-labels").toString
+    val bucketsInc = graft.streaming.StreamReplay.scratch("graft-clus-binc").toString
+    val labelsDir = graft.streaming.StreamReplay.scratch("graft-clus-labels").toString
     val q = graft.streaming.ClusterStreams.incrementalClusterStream(
       CorpusStreams.readDocFiles(spark, dropDir.toString, embSchema, 1)
         .select(col("vec_id").as("id"), col("embedding").as("emb")),
       baseLabels, baseBuckets, bucketsInc, labelsDir,
-      Files.createTempDirectory("graft-clus-ckpt").toString)
+      graft.streaming.StreamReplay.scratch("graft-clus-ckpt").toString)
     try {
       assert(q.awaitTermination(120000),
         "AvailableNow query did not drain the drops in 120s")
@@ -153,21 +153,21 @@ class CorpusStreamSpec extends SparkSpecBase {
     // COMPACT: increments fold back into base form; then a NEW stream
     // (fresh checkpoint, empty increment history) resumes against the
     // compacted base with the third drop
-    val cBuckets = Files.createTempDirectory("graft-clus-cbuck").toString
-    val cLabels = Files.createTempDirectory("graft-clus-clab").resolve("base").toString
+    val cBuckets = graft.streaming.StreamReplay.scratch("graft-clus-cbuck").toString
+    val cLabels = graft.streaming.StreamReplay.scratch("graft-clus-clab").resolve("base").toString
     graft.streaming.ClusterStreams.compactStores(spark, baseBuckets,
       bucketsInc, labelsDir, cBuckets, cLabels)
-    val dropDir2 = Files.createTempDirectory("graft-clus-drops2")
+    val dropDir2 = graft.streaming.StreamReplay.scratch("graft-clus-drops2")
     land(src.filter(col("vec_id") % 5 === 4 && col("vec_id") % 3 === 2),
       dropDir2, "drop3.parquet")
-    val bucketsInc2 = Files.createTempDirectory("graft-clus-binc2").toString
-    val labelsDir2 = Files.createTempDirectory("graft-clus-labels2").toString
+    val bucketsInc2 = graft.streaming.StreamReplay.scratch("graft-clus-binc2").toString
+    val labelsDir2 = graft.streaming.StreamReplay.scratch("graft-clus-labels2").toString
     val q2 = graft.streaming.ClusterStreams.incrementalClusterStream(
       CorpusStreams.readDocFiles(spark, dropDir2.toString, embSchema, 1)
         .select(col("vec_id").as("id"), col("embedding").as("emb")),
       spark.read.parquet(cLabels), spark.read.parquet(cBuckets),
       bucketsInc2, labelsDir2,
-      Files.createTempDirectory("graft-clus-ckpt2").toString)
+      graft.streaming.StreamReplay.scratch("graft-clus-ckpt2").toString)
     try {
       assert(q2.awaitTermination(120000),
         "resumed AvailableNow query did not drain drop 3 in 120s")
@@ -200,29 +200,29 @@ class CorpusStreamSpec extends SparkSpecBase {
     val cents = Similarity.trainCentroids(c,
       Similarity.cellsFor(c.count()), iters = 2)
     // "yesterday's" base store
-    val baseDir = Files.createTempDirectory("graft-ivf-base").resolve("s").toString
+    val baseDir = graft.streaming.StreamReplay.scratch("graft-ivf-base").resolve("s").toString
     graft.sources.Datalake.writeParquet(
       Similarity.ivfQuantizedStoreRows(hist, cents), baseDir)
     // today's embeddings arrive as TWO drops → two stateless epoch folds
     def land(df: DataFrame, dir: java.nio.file.Path, name: String): Unit = {
-      val stage = Files.createTempDirectory("graft-ivf-stage").resolve("out")
+      val stage = graft.streaming.StreamReplay.scratch("graft-ivf-stage").resolve("out")
       df.coalesce(1).write.parquet(stage.toString)
       val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
       Files.move(part, dir.resolve(name))
     }
-    val dropDir = Files.createTempDirectory("graft-ivf-drops")
+    val dropDir = graft.streaming.StreamReplay.scratch("graft-ivf-drops")
     val src = spark.read.parquet(s"$sfDir/embeddings.parquet")
     land(src.filter(col("vec_id") % 5 === 4 && col("vec_id") % 2 === 0),
       dropDir, "drop1.parquet")
     land(src.filter(col("vec_id") % 5 === 4 && col("vec_id") % 2 === 1),
       dropDir, "drop2.parquet")
-    val incDir = Files.createTempDirectory("graft-ivf-inc").toString
+    val incDir = graft.streaming.StreamReplay.scratch("graft-ivf-inc").toString
     val q = graft.streaming.IndexStreams.ivfStoreStream(
       CorpusStreams.readDocFiles(spark, dropDir.toString, embSchema, 1)
         .select(col("vec_id").as("id"), col("embedding").as("emb")),
       cents, incDir,
-      Files.createTempDirectory("graft-ivf-ckpt").toString)
+      graft.streaming.StreamReplay.scratch("graft-ivf-ckpt").toString)
     try {
       assert(q.awaitTermination(120000),
         "AvailableNow query did not drain the drops in 120s")
@@ -265,8 +265,8 @@ class CorpusStreamSpec extends SparkSpecBase {
       Similarity.hyperplaneLshPairs(hist)
         .select(col("id_a").as("src"), col("id_b").as("dst")))
     val baseBuckets = Similarity.lshBuckets(hist)
-    val binc = Files.createTempDirectory("graft-replay-binc").toString
-    val ldir = Files.createTempDirectory("graft-replay-labels").toString
+    val binc = graft.streaming.StreamReplay.scratch("graft-replay-binc").toString
+    val ldir = graft.streaming.StreamReplay.scratch("graft-replay-labels").toString
     val b0 = batch.filter(col("id") % 2 === 0)
     val b1 = batch.filter(col("id") % 2 =!= 0)
     graft.streaming.ClusterStreams.foldEpoch(b0, 0, baseLabels, baseBuckets, binc, ldir)
@@ -285,7 +285,7 @@ class CorpusStreamSpec extends SparkSpecBase {
   }
 
   test("streaming clean agrees with the batch funnel signals on the same docs") {
-    val dir = Files.createTempDirectory("graft-cleanstream")
+    val dir = graft.streaming.StreamReplay.scratch("graft-cleanstream")
     Files.copy(Paths.get(s"$sfDir/documents.parquet"),
       dir.resolve("documents.parquet"))
     val q = CorpusStreams.cleanDocs(
@@ -326,9 +326,9 @@ class CorpusStreamSpec extends SparkSpecBase {
     import graft.ops.Sketches
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // the corpus arrives as two file drops → two epochs, two increments
-    val dropDir = Files.createTempDirectory("graft-cms-drops")
+    val dropDir = graft.streaming.StreamReplay.scratch("graft-cms-drops")
     def land(df: DataFrame, name: String): Unit = {
-      val stage = Files.createTempDirectory("graft-cms-stage").resolve("out")
+      val stage = graft.streaming.StreamReplay.scratch("graft-cms-stage").resolve("out")
       df.coalesce(1).write.parquet(stage.toString)
       val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
@@ -336,12 +336,12 @@ class CorpusStreamSpec extends SparkSpecBase {
     }
     land(docs.filter(col("doc_id") % 2 === 0), "drop1.parquet")
     land(docs.filter(col("doc_id") % 2 =!= 0), "drop2.parquet")
-    val storeDir = Files.createTempDirectory("graft-cms-store").toString
+    val storeDir = graft.streaming.StreamReplay.scratch("graft-cms-store").toString
     val q = CorpusStreams.cmsStream(
       CorpusStreams.readDocFiles(spark, dropDir.toString, docSchema, 1)
         .select(col("text")),
       storeDir,
-      Files.createTempDirectory("graft-cms-ckpt").toString, width = 256)
+      graft.streaming.StreamReplay.scratch("graft-cms-ckpt").toString, width = 256)
     try assert(q.awaitTermination(120000), "AvailableNow must terminate")
     finally q.stop()
     assert(Files.list(Paths.get(storeDir))

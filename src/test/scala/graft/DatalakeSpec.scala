@@ -11,7 +11,7 @@ class DatalakeSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("jsonl bulk-export sink round-trips documents") {
-    val tmp = Files.createTempDirectory("graft-jsonl").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-jsonl").toString
     val docs = Seq((1L, "a", 10.5), (2L, "b", 20.0)).toDF("id", "name", "price")
     Datalake.writeJsonl(docs, s"$tmp/out")
     val schema = StructType(Seq(
@@ -23,7 +23,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("multiline JSON-array file reads one row per array element") {
-    val tmp = Files.createTempDirectory("graft-jsonarr").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-jsonarr").toString
     // the reference's raw layer: one pretty-printed JSON ARRAY per fetch
     Files.writeString(java.nio.file.Paths.get(s"$tmp/fetch1.json"),
       """[
@@ -47,7 +47,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("csv read with schema coerces malformed cells to null") {
-    val tmp = Files.createTempDirectory("graft-csv").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-csv").toString
     Files.writeString(java.nio.file.Paths.get(s"$tmp/in.csv"),
       "id,price\n1,10.5\n2,notanumber\n3,\n")
     val schema = StructType(Seq(
@@ -58,7 +58,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("watermark state: first read sees all, committed read sees only newer") {
-    val state = s"${Files.createTempDirectory("graft-wm")}/wm.state"
+    val state = s"${graft.streaming.StreamReplay.scratch("graft-wm")}/wm.state"
     def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     val batch1 = Seq((1L, t(0)), (2L, t(5))).toDF("id", "ts")
     assert(Watermark.read(spark, state).isEmpty)
@@ -78,7 +78,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("composed DAG: raw→formatted→usage layers populated, watermark advances, re-run is a no-op") {
-    val root = Files.createTempDirectory("graft-dag").toString
+    val root = graft.streaming.StreamReplay.scratch("graft-dag").toString
     val out1 = graft.queries.DatalakeQueries.run(spark, sfDir, root).collect()
     assert(out1.nonEmpty, "usage layer has market stats")
     // every layer materialized on disk
@@ -105,7 +105,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("dual-feed DAG: CSV.gz + JSON feeds land, coerce, and join in usage") {
-    val root = Files.createTempDirectory("graft-dualdag").toString
+    val root = graft.streaming.StreamReplay.scratch("graft-dualdag").toString
     val out = graft.queries.DatalakeQueries.runDual(spark, sfDir, root)
     val rows = out.collect()
     assert(rows.nonEmpty, "usage layer has segment stats")
@@ -146,7 +146,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("dynamic partition overwrite replaces only the re-run day") {
-    val tmp = Files.createTempDirectory("graft-upsert").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-upsert").toString
     val day1 = Seq((1L, "20240101", 1.0), (2L, "20240102", 2.0))
       .toDF("id", "ingest_date", "v")
     Datalake.upsertPartitions(day1, s"$tmp/t", Seq("ingest_date"))
@@ -160,7 +160,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("mergeSchema read unions columns added over time") {
-    val tmp = Files.createTempDirectory("graft-evolve").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-evolve").toString
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$tmp/t/f1")
     Seq((2L, "b", 9.5)).toDF("id", "name", "score").write.parquet(s"$tmp/t/f2")
     val got = Datalake.readMergedSchema(spark, s"$tmp/t/*")
@@ -171,7 +171,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("compaction rewrites many small files into the target count") {
-    val tmp = Files.createTempDirectory("graft-compact").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-compact").toString
     spark.read.parquet(s"$sfDir/events.parquet")
       .repartition(37) // simulate the small-files problem
       .write.parquet(s"$tmp/small")
@@ -185,7 +185,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("orc round-trip preserves data and pushes filters to the scan") {
-    val tmp = Files.createTempDirectory("graft-orc").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-orc").toString
     val src = spark.read.parquet(s"$sfDir/orders.parquet")
     Datalake.writeOrc(src, s"$tmp/orders_orc")
     val back = Datalake.readOrc(spark, s"$tmp/orders_orc")
@@ -200,7 +200,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("manifest publish is atomic: readers see old or new, never partial") {
-    val root = s"${Files.createTempDirectory("graft-pub")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-pub")}/t"
     Datalake.publish(Seq((1L, "a")).toDF("id", "v"), root, "001")
     assert(Datalake.readPublished(spark, root)
       .collect().map(_.getString(1)).toSeq === Seq("a"))
@@ -218,7 +218,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("partitioned parquet write enables partition pruning") {
-    val tmp = Files.createTempDirectory("graft-pq").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-pq").toString
     val df = Seq((1L, "20240101", 1.0), (2L, "20240102", 2.0)).toDF("id", "ingest_date", "v")
     Datalake.writeParquet(df, s"$tmp/t", partitionBy = Seq("ingest_date"))
     val read = spark.read.parquet(s"$tmp/t").filter(col("ingest_date") === "20240102")
@@ -229,7 +229,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("vacuum keeps the newest k AND the manifest-current version; retained reads unchanged") {
-    val root = Files.createTempDirectory("graft-vacuum").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-vacuum").toString + "/t"
     Datalake.publish(Seq((1L, "a")).toDF("id", "s"), root, "1")
     Datalake.publish(Seq((2L, "b")).toDF("id", "s"), root, "2")
     Datalake.publish(Seq((3L, "c")).toDF("id", "s"), root, "3")
@@ -256,7 +256,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("versions order numerically (10 > 9) and merged reads union schemas across versions") {
-    val root = Files.createTempDirectory("graft-vacuum-num").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-vacuum-num").toString + "/t"
     Datalake.publish(Seq((9L, "i")).toDF("id", "s"), root, "9")
     // v10 ADDS a column — the schema-evolution event across versions
     Datalake.publish(Seq((10L, "j", 0.5)).toDF("id", "s", "score"), root, "10")
@@ -273,7 +273,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("change feed replays v1 to v2 exactly (inserts, deletes, null-safe updates)") {
-    val root = Files.createTempDirectory("graft-cdf").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-cdf").toString + "/t"
     // key 1: deleted; key 2: value updated; key 3: NULL -> value (a
     // null-unsafe compare would miss it); key 4: value -> NULL; key 5:
     // unchanged (must emit nothing); key 6: unchanged NULL (ditto);
@@ -312,7 +312,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("stats-pruned read equals unpruned read and opens fewer files") {
-    val root = s"${Files.createTempDirectory("graft-stats")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-stats")}/t"
     // 8 contiguous key ranges, one file each (repartition on the bucket →
     // every bucket lands in exactly one task's partition)
     val df = spark.range(0, 800)
@@ -347,7 +347,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("optimize republishes identical data in fewer clustered files; old version retained") {
-    val root = s"${Files.createTempDirectory("graft-opt")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-opt")}/t"
     val df = spark.range(0, 1000)
       .select(col("id").as("k"), (col("id") * 3 % 11).as("v"))
     Datalake.publish(df.repartition(16), root, "7")
@@ -371,7 +371,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("shallow clone: zero-copy serve, copy-on-write divergence, vacuum hazard") {
-    val base = Files.createTempDirectory("graft-clone").toString
+    val base = graft.streaming.StreamReplay.scratch("graft-clone").toString
     val src = s"$base/src"
     val dst = s"$base/dst"
     val df = spark.range(100).select(col("id").as("k"),
@@ -428,7 +428,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("CAS publish: stale snapshot aborts loudly and rolls back its staged files") {
-    val root = s"${Files.createTempDirectory("graft-cas")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-cas")}/t"
     val (s1, _) = Datalake.publishCas(Seq((1L, "a")).toDF("id", "v"), root, 0L)
     assert(s1 === 1L)
     assert(Datalake.latestCommitSeq(spark, root) === 1L)
@@ -450,7 +450,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("CAS transact: conflicting appends serialize with no lost update") {
-    val root = s"${Files.createTempDirectory("graft-cas-tx")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-cas-tx")}/t"
     def append(rows: Seq[(Long, String)]) =
       Datalake.transact(spark, root, {
         case Some(cur) => cur.unionByName(rows.toDF("id", "v"))
@@ -482,7 +482,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("CAS repair: a crash between claim and manifest swap is healed from the log") {
-    val root = s"${Files.createTempDirectory("graft-cas-rep")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-cas-rep")}/t"
     Datalake.publishCas(Seq((1L, "a")).toDF("id", "v"), root, 0L)
     // simulate the crash: write commit 2's data + record directly, but
     // DON'T swap the manifest (exactly what a writer dying between
@@ -510,7 +510,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("deletion vectors: accumulate, fold into OPTIMIZE, vacuum retires stale ones") {
     import org.apache.spark.sql.functions.{col, lit}
-    val root = s"${Files.createTempDirectory("graft-dv")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-dv")}/t"
     val base = spark.range(0, 100).select(col("id"),
       (col("id") * 2).as("v")).repartition(4)
     Datalake.publish(base.toDF(), root, "1", Nil, Seq("id"))
@@ -562,7 +562,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("partitioned optimizeCompact: per-partition rewrite, vector carried across encoded dir names") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-cpart")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-cpart")}/t"
     val ver = s"$root/v=1"
     // two partitions, one with a SPACE in its value (the Hive dir is
     // URL-encoded in _metadata.file_path — the carried-vector compare
@@ -599,7 +599,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("mergeInto folds a live deletion vector, retires it, and preserves partition layout") {
     import org.apache.spark.sql.functions.{col, lit, when}
-    val root = s"${Files.createTempDirectory("graft-merge")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-merge")}/t"
     val base = spark.range(0, 100).select(col("id"),
       (col("id") % 4).as("grp"), (col("id") * 2).as("v"))
     Datalake.publish(base.toDF(), root, "1", Seq("grp"), Seq("id"))
@@ -651,7 +651,7 @@ class DatalakeSpec extends SparkSpecBase {
     // cross-process CAS writer's commit inside the token-read→commit
     // window forces a re-derivation (arbitrated by the log) instead of
     // being discarded by the swap
-    val root = s"${Files.createTempDirectory("graft-mntcas")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-mntcas")}/t"
     Datalake.transact(spark, root, {
       case None => spark.range(0, 100).toDF("id")
       case Some(_) => fail("fresh table")
@@ -677,7 +677,7 @@ class DatalakeSpec extends SparkSpecBase {
     })
     assert(Datalake.readPublished(spark, root).count() === 96)
     // plain table: no log appears — non-CAS tables keep plain swaps
-    val plain = s"${Files.createTempDirectory("graft-mntplain")}/t"
+    val plain = s"${graft.streaming.StreamReplay.scratch("graft-mntplain")}/t"
     Datalake.publish(spark.range(0, 50).toDF("id"), plain, "1")
     Datalake.optimize(spark, plain, 2)
     assert(Datalake.latestCommitSeq(spark, plain) === 0L,
@@ -691,7 +691,7 @@ class DatalakeSpec extends SparkSpecBase {
     // update/insert arms carry ABSOLUTE values the re-application must be
     // a value-level no-op (one version later)
     import org.apache.spark.sql.functions.{col, lit, when}
-    val root = s"${Files.createTempDirectory("graft-mergeidem")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-mergeidem")}/t"
     Datalake.publish(spark.range(0, 50)
       .select(col("id"), (col("id") * 2).as("v")).toDF(), root, "1")
     val delta = spark.range(40, 60).select(col("id"), lit(-7L).as("v"),
@@ -713,7 +713,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("commit-log retention: old records swept, claims and replays keep working") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-logvac")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-logvac")}/t"
     (1 to 5).foreach { i =>
       Datalake.transact(spark, root, {
         case Some(cur) => cur.unionByName(Seq(i.toLong).toDF("id"))
@@ -744,7 +744,7 @@ class DatalakeSpec extends SparkSpecBase {
     // transact over a deleted table: the RMW snapshot must fold the
     // vector (r14 review finding: deletes now ride the commit log, so the
     // newest record can be dv= — a raw resolveToken read resurrected)
-    val root = s"${Files.createTempDirectory("graft-txndv")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-txndv")}/t"
     Datalake.publish(spark.range(0, 100).toDF("id"), root, "1")
     assert(Datalake.deleteWhere(spark, root, col("id") < 20) === 20)
     Datalake.transact(spark, root, {
@@ -758,8 +758,8 @@ class DatalakeSpec extends SparkSpecBase {
     // shallow clone of a table with a live vector: the clone must hide
     // the same rows (vector copied — O(deleted), not O(table)), and
     // must keep hiding them if the SOURCE's vector is later retired
-    val src = s"${Files.createTempDirectory("graft-clonedv")}/src"
-    val dst = s"${Files.createTempDirectory("graft-clonedv")}/dst"
+    val src = s"${graft.streaming.StreamReplay.scratch("graft-clonedv")}/src"
+    val dst = s"${graft.streaming.StreamReplay.scratch("graft-clonedv")}/dst"
     Datalake.publish(spark.range(0, 50).toDF("id"), src, "1")
     Datalake.deleteWhere(spark, src, col("id") >= 45)
     Datalake.shallowClone(spark, src, dst)
@@ -780,7 +780,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("mergeInto refuses a delta with multiple rows per key (ANSI MERGE cardinality)") {
     import org.apache.spark.sql.functions.{col, lit}
-    val root = s"${Files.createTempDirectory("graft-mergedup")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-mergedup")}/t"
     Datalake.publish(
       spark.range(0, 10).select(col("id"), (col("id") * 2).as("v")).toDF(),
       root, "1")
@@ -802,7 +802,7 @@ class DatalakeSpec extends SparkSpecBase {
     // emitted an all-NULL ghost row while silently dropping the delta's
     // values. The merge now fails loudly up front.
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-mergenull")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-mergenull")}/t"
     Datalake.publish(
       spark.range(0, 10).select(col("id"), (col("id") * 2).as("v")).toDF(),
       root, "1")
@@ -828,7 +828,7 @@ class DatalakeSpec extends SparkSpecBase {
     // commit's token; repairManifest proves that token log-issued by
     // scanning surviving records — so retention must keep the issuing
     // record or the table is stranded unrepairable forever.
-    val root = s"${Files.createTempDirectory("graft-vacstrand")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-vacstrand")}/t"
     Datalake.transact(spark, root, {
       case None => Seq(1L).toDF("id")
       case Some(_) => fail("fresh table")
@@ -878,7 +878,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("commit-log checkpoint: probe resolution, vacuum raises the pointer before sweeping, fallback survives") {
-    val root = s"${Files.createTempDirectory("graft-ckpt")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-ckpt")}/t"
     (1 to 12).foreach { i =>
       Datalake.transact(spark, root, {
         case Some(cur) => cur.unionByName(Seq(i.toLong).toDF("id"))
@@ -913,7 +913,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("timestamp time travel: ≤-boundary, tie toward the newest version, predate fails loudly") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-asof")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-asof")}/t"
     Datalake.publishAt(spark.range(1).toDF("id"), root, "1", 1000L)
     Datalake.publishAt(spark.range(2).toDF("id"), root, "2", 2000L)
     // a TIE: two versions stamped the same millisecond (clock-skewed
@@ -942,7 +942,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("evolving merge appends delta-only columns; strict merge still drops them") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-evolve")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-evolve")}/t"
     Datalake.publish(
       spark.range(0, 6).select(col("id"), (col("id") * 2).as("v")),
       root, "1")
@@ -964,7 +964,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("delete commits ride the CAS log: a stale claim loses, rolls back, and no positions are lost") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-dvcas")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-dvcas")}/t"
     Datalake.publish(spark.range(0, 100).toDF("id"), root, "1", Nil, Seq("id"))
     // the winner: a real delete claims log record 1
     assert(Datalake.deleteWhere(spark, root, col("id") < 10) === 10)
@@ -1004,7 +1004,7 @@ class DatalakeSpec extends SparkSpecBase {
     // evaluation, inside the merge's first attempt, writes the record
     // straight through the Hadoop FS, holding the current manifest token
     import org.apache.spark.sql.functions.{col, udf}
-    val root = s"${Files.createTempDirectory("graft-mergerace")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-mergerace")}/t"
     Datalake.publish(spark.range(0, 20)
       .select(col("id"), (col("id") * 10).as("v")).toDF(), root, "1")
     assert(Datalake.deleteWhere(spark, root, col("id") < 5) === 5)
@@ -1056,7 +1056,7 @@ class DatalakeSpec extends SparkSpecBase {
     // Without the stripe the lost-delete schedule shows 100.
     import org.apache.spark.sql.functions.col
     (1 to 3).foreach { round =>
-      val root = s"${Files.createTempDirectory("graft-dvopt")}/t"
+      val root = s"${graft.streaming.StreamReplay.scratch("graft-dvopt")}/t"
       Datalake.publish(spark.range(0, 100).toDF("id").repartition(4),
         root, "1", Nil, Seq("id"))
       val barrier = new java.util.concurrent.CyclicBarrier(2)
@@ -1088,7 +1088,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("optimizeCompact folds the small files' deletions and carries the copied files' vector") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-dvc")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-dvc")}/t"
     val ver = s"$root/v=1"
     // one big file (ids 0..99) + two small files (100..104, 105..109)
     spark.range(0, 100).toDF("id").coalesce(1)
@@ -1119,7 +1119,7 @@ class DatalakeSpec extends SparkSpecBase {
 
   test("multi-table txn: snapshot isolation and partial write-set pin carry-forward") {
     import org.apache.spark.sql.functions.col
-    val root = s"${Files.createTempDirectory("graft-cat")}/c"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-cat")}/c"
     val t1 = Datalake.publishAtomic(spark, root, Seq(
       "a" -> Seq((1L, "x")).toDF("id", "v"),
       "b" -> Seq((1L, "y")).toDF("id", "v")))
@@ -1170,7 +1170,7 @@ class DatalakeSpec extends SparkSpecBase {
   }
 
   test("CAS swap ordering: a stalled writer's late sync cannot regress the manifest") {
-    val root = s"${Files.createTempDirectory("graft-cas-ord")}/t"
+    val root = s"${graft.streaming.StreamReplay.scratch("graft-cas-ord")}/t"
     // writer A commits seq 1, writer B commits seq 2 (manifest now at B)
     Datalake.publishCas(Seq((1L, "a")).toDF("id", "v"), root, 0L)
     Datalake.publishCas(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, 1L)

@@ -14,7 +14,7 @@ class FileStreamSpec extends SparkSpecBase {
 
   test("streaming micro-batch DAG converges to the batch DAG's usage layer") {
     import graft.streaming.DatalakeStreams
-    val root = java.nio.file.Files.createTempDirectory("graft-sdag")
+    val root = graft.streaming.StreamReplay.scratch("graft-sdag")
     val rawDir = s"$root/raw"; val fmt = s"$root/formatted"
     val usage = s"$root/usage"; val ckpt = s"$root/ckpt"
     // two fetch drops with an OVERLAPPING increment (at-least-once raw):
@@ -48,7 +48,7 @@ class FileStreamSpec extends SparkSpecBase {
   test("publishing backfill lands one manifest version per epoch; epochs time-travel") {
     import graft.sources.Datalake
     import graft.streaming.DatalakeStreams
-    val root = java.nio.file.Files.createTempDirectory("graft-spub")
+    val root = graft.streaming.StreamReplay.scratch("graft-spub")
     val rawDir = s"$root/raw"; val fmt = s"$root/formatted"
     val table = s"$root/usage_table"; val ckpt = s"$root/ckpt"
     val src = graft.sources.Tables.events(spark, sfDir)
@@ -90,7 +90,7 @@ class FileStreamSpec extends SparkSpecBase {
     // orphan a stream epoch. Epochs now claim commit-log sequences.
     import graft.sources.Datalake
     import graft.streaming.DatalakeStreams
-    val root = java.nio.file.Files.createTempDirectory("graft-spubcas")
+    val root = graft.streaming.StreamReplay.scratch("graft-spubcas")
     val rawDir = s"$root/raw"; val fmt = s"$root/formatted"
     val table = s"$root/usage_table"; val ckpt = s"$root/ckpt"
     val src = graft.sources.Tables.events(spark, sfDir)
@@ -143,7 +143,7 @@ class FileStreamSpec extends SparkSpecBase {
     // itself. Epochs now stage/commit v=e<epoch>, unreachable by every
     // other committer.
     import graft.sources.Datalake
-    val root = java.nio.file.Files.createTempDirectory("graft-ens")
+    val root = graft.streaming.StreamReplay.scratch("graft-ens")
     val table = s"$root/t"
     def df(tag: String) = spark.range(3).selectExpr(s"'$tag' AS tag", "id")
     assert(Datalake.publishEpochCas(df("e0"), table, "0") === 1L)
@@ -171,7 +171,7 @@ class FileStreamSpec extends SparkSpecBase {
     // as THIS epoch instead of claiming a fresh sequence (which would
     // commit the epoch twice and fork the exactly-once version history).
     import graft.sources.Datalake
-    val root = java.nio.file.Files.createTempDirectory("graft-ezr")
+    val root = graft.streaming.StreamReplay.scratch("graft-ezr")
     val table = s"$root/t"
     def df(tag: String) = spark.range(3).selectExpr(s"'$tag' AS tag", "id")
     assert(Datalake.publishEpochCas(df("e0"), table, "0") === 1L)
@@ -194,7 +194,7 @@ class FileStreamSpec extends SparkSpecBase {
     import graft.sources.Datalake
     import graft.streaming.DatalakeStreams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-replhw")
+    val root = graft.streaming.StreamReplay.scratch("graft-replhw")
     val src = s"$root/src"; val rep = s"$root/rep"
     def df(tag: String, n: Int) =
       spark.range(n).selectExpr("id", s"'$tag' AS tag")
@@ -232,7 +232,7 @@ class FileStreamSpec extends SparkSpecBase {
     import graft.sources.Datalake
     import graft.streaming.DatalakeStreams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-replvac")
+    val root = graft.streaming.StreamReplay.scratch("graft-replvac")
     val src = s"$root/src"; val rep = s"$root/rep"
     def df(tag: String, n: Int) =
       spark.range(n).selectExpr("id", s"'$tag' AS tag")
@@ -262,7 +262,7 @@ class FileStreamSpec extends SparkSpecBase {
     import graft.sources.Datalake
     import graft.streaming.DatalakeStreams
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cfsvac")
+    val root = graft.streaming.StreamReplay.scratch("graft-cfsvac")
     val table = s"$root/t"; val sink = s"$root/feed"
     def df(tag: String, n: Int) =
       spark.range(n).selectExpr("id", s"'$tag' AS tag")
@@ -296,7 +296,7 @@ class FileStreamSpec extends SparkSpecBase {
     // same way the batch loader does
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // file source wants a directory of files
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = graft.streaming.StreamReplay.scratch("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))

@@ -74,7 +74,7 @@ class GraphSpec extends SparkSpecBase {
     val edges = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
     val local = Graph.pageRank(edges, iters = 3).collect()
       .map(x => x.getAs[Long]("node") -> x.getAs[Double]("r")).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = graft.streaming.StreamReplay.scratch("graft-ckpt").toString
     spark.conf.set(graft.ops.Checkpoints.ConfKey, dir)
     try {
       val reliable = Graph.pageRank(edges, iters = 3).collect()

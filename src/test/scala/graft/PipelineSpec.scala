@@ -16,7 +16,7 @@ import graft.sources.Datalake
 class PipelineSpec extends SparkSpecBase {
 
   test("raw csv → formatted parquet → usage agg → jsonl export") {
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = graft.streaming.StreamReplay.scratch("graft-lake").toString
     // --- raw layer: dirty CSV (bad price, bad date, duplicate id)
     val rawDir = s"$root/raw/listings/ads"
     Files.createDirectories(Paths.get(rawDir))

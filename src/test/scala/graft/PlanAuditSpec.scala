@@ -97,7 +97,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // parquet-backed nested frame (a) broadcast-joins on the field and
     // (b) prunes unread struct fields out of the scan (nestedSchemaPruning).
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nested").toString
+    val tmp = graft.streaming.StreamReplay.scratch("graft-nested").toString
     spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"),
         struct(col("c_nationkey").as("zipcode"),

@@ -125,7 +125,7 @@ class Round11bSpec extends SparkSpecBase {
   test("stream hygiene sees sub-session streams the root session cannot") {
     import java.nio.file.Files
     import graft.streaming.StreamReplay
-    val root = Files.createTempDirectory("graft-hygiene")
+    val root = graft.streaming.StreamReplay.scratch("graft-hygiene")
     StreamReplay.track(root)
     val feed = root.resolve("feed")
     import spark.implicits._

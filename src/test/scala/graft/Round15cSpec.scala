@@ -80,8 +80,8 @@ class Round15cSpec extends SparkSpecBase {
     val e = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("day"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-evolve-spec").toString + "/t"
+    val root = graft.streaming.StreamReplay
+      .scratch("graft-evolve-spec").toString + "/t"
     Datalake.publishEvolved(e.filter(col("event_id") % 3 === 1)
       .repartition(1), root, "1", Seq("event_type"))
     val v1Files = new java.io.File(s"$root/v=1/add").listFiles()
@@ -113,8 +113,8 @@ class Round15cSpec extends SparkSpecBase {
 
   test("evolved read refuses a plain-published table (no silent empty)") {
     import graft.sources.{Datalake, Tables}
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-evolve-plain").toString + "/t"
+    val root = graft.streaming.StreamReplay
+      .scratch("graft-evolve-plain").toString + "/t"
     Datalake.publish(Tables.nation(spark, sfDir), root, "1")
     val ex = intercept[IllegalStateException] {
       Datalake.evolvedSegments(spark, root)
@@ -350,8 +350,8 @@ class Round15cSpec extends SparkSpecBase {
     val e = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("day"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-evolve-opt-spec").toString + "/t"
+    val root = graft.streaming.StreamReplay
+      .scratch("graft-evolve-opt-spec").toString + "/t"
     Datalake.publishEvolved(e.filter(col("event_id") % 2 === 0)
       .repartition(1), root, "1", Seq("event_type"))
     Datalake.publishEvolved(e.filter(col("event_id") % 2 === 1)

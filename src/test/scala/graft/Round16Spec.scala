@@ -13,7 +13,7 @@ class Round16Spec extends SparkSpecBase {
   import spark.implicits._
 
   private def evolvedFixture(): String = {
-    val root = Files.createTempDirectory("graft-evac").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-evac").toString + "/t"
     Datalake.publishEvolved(Seq((1L, "a", "d1")).toDF("id", "k", "day"),
       root, "1", Seq("k"))
     Datalake.publishEvolved(Seq((2L, "b", "d1")).toDF("id", "k", "day"),
@@ -116,7 +116,7 @@ class Round16Spec extends SparkSpecBase {
   }
 
   test("evolvedPrunedScan matches exact path segments, not substrings") {
-    val root = Files.createTempDirectory("graft-eps").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-eps").toString + "/t"
     // two partition values where one prefixes the other: day=1 vs day=10
     Datalake.publishEvolved(
       Seq((1L, "1"), (2L, "10")).toDF("id", "day").repartition(1),

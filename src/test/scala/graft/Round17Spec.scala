@@ -221,7 +221,7 @@ class Round17Spec extends SparkSpecBase {
   test("deleteWhere on an evolved chain: sidecar commit, append survival, rewrite fold") {
     import graft.sources.Datalake
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-evdel").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-evdel").toString + "/t"
     Datalake.publishEvolved(
       Seq((1L, "a", 10.0), (2L, "a", 20.0)).toDF("id", "k", "v"),
       root, "1", Seq("k"))
@@ -263,7 +263,7 @@ class Round17Spec extends SparkSpecBase {
   test("evolvedPrunedScan applies a live chain deletion vector") {
     import graft.sources.Datalake
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-evdelscan").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-evdelscan").toString + "/t"
     Datalake.publishEvolved(
       Seq((1L, "a", 10.0), (2L, "a", 20.0)).toDF("id", "k", "v"),
       root, "1", Seq("k"))
@@ -280,7 +280,7 @@ class Round17Spec extends SparkSpecBase {
   test("change feed across a chain-DV delete emits exactly the deleted rows") {
     import graft.sources.Datalake
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-evdelcdc").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-evdelcdc").toString + "/t"
     Datalake.publishEvolved(
       Seq((1L, "a", 10.0), (2L, "a", 20.0)).toDF("id", "k", "v"),
       root, "1", Seq("k"))

@@ -91,7 +91,7 @@ class Round18Spec extends SparkSpecBase {
   test("alias staging: atomic re-point, dangling and unknown fail loudly") {
     import graft.sources.Datalake
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-alias").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-alias").toString + "/t"
     Datalake.publish(Seq((1L, "v1")).toDF("id", "tag"), root, "1")
     Datalake.publish(Seq((2L, "v2")).toDF("id", "tag"), root, "2")
     // an alias may never be BORN dangling

@@ -132,7 +132,7 @@ class Round8bSpec extends SparkSpecBase {
 
   test("time travel: manifest resolves the latest version, old versions stay readable") {
     import graft.sources.Datalake
-    val root = java.nio.file.Files.createTempDirectory("graft-tt").toString + "/t"
+    val root = graft.streaming.StreamReplay.scratch("graft-tt").toString + "/t"
     import spark.implicits._
     Datalake.publish(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root, "1")
     Datalake.publish(Seq((1L, "a2"), (3L, "c")).toDF("k", "v"), root, "2")

@@ -92,8 +92,8 @@ class StreamingSpec extends SparkSpecBase {
   test("foreachBatch jsonl export writes every micro-batch's docs") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-export").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val out = graft.streaming.StreamReplay.scratch("graft-export").toString
+    val ckpt = graft.streaming.StreamReplay.scratch("graft-ckpt").toString
     val input = MemoryStream[Event]
     input.addData(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(1), 2, "view", 2.0))
     val q = EventStreams.exportJsonl(
@@ -427,8 +427,8 @@ class StreamingSpec extends SparkSpecBase {
           col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
         .as[Event].collect().sortBy(_.ts.getTime)
       val shifted = disorderedChunks(all, seed = 13)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-rec-ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft-rec-out").toString
+      val ckpt = graft.streaming.StreamReplay.scratch("graft-rec-ckpt").toString
+      val outDir = graft.streaming.StreamReplay.scratch("graft-rec-out").toString
       val input = MemoryStream[Event]
       // file sink, NOT memory sink: the parquet sink's _spark_metadata log
       // is what makes output exactly-once ACROSS restarts — the operational
