@@ -12,8 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   /** Entries in Spark's compiled-class cache, `spark.sql.codegen.cache.maxEntries`
-    * (default 100). Every session builder graft owns sets it: this one
-    * (which `Verify.main` uses too) and the test session.
+    * (default 100), one of the [[EngineConfs]].
     *
     * The conf is static: `CodeGenerator`'s cache is one JVM-wide LRU, sized
     * once by the session that first generates code, and a later session's
@@ -30,6 +29,32 @@ object GraftSession {
     * 91% of what any cache size saves there.
     */
   val CodegenCacheEntries = 2000
+
+  /** The confs that decide how Spark runs graft's work, as opposed to how
+    * a harness sizes it. Every session builder graft owns applies them:
+    * [[builder]] (which Verify, Bench, Inspect and perfbench use) and the
+    * test session, so the specs run the same I/O and codegen paths. Each
+    * is static: it holds only when set before the session is created.
+    *
+    *  - the compiled-class cache size, [[CodegenCacheEntries]];
+    *  - the local file system, Hadoop's with file modes set in-process
+    *    (`graft.sources.InProcessLocalFileSystem`), for both the
+    *    `FileSystem` and the `FileContext` API: stock Hadoop without its
+    *    native library forks a `chmod` per created file, `.crc` and dir
+    *    and a `readlink` per `FileContext` link status;
+    *  - no per-session artifact isolation: graft adds no jars or files to
+    *    a session, and with isolation on every cloned session (each
+    *    streaming query runs in one) gets its own executor class loader,
+    *    which is part of the codegen cache key, so a stream recompiled
+    *    every class it had compiled in an earlier run.
+    */
+  val EngineConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.InProcessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.sources.InProcessLocalFs].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   def builder(appName: String = "graft"): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -60,7 +85,7 @@ object GraftSession {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config(EngineConfs)
   }
 
   def get(appName: String = "graft"): SparkSession = {

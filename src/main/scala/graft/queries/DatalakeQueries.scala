@@ -92,7 +92,9 @@ object DatalakeQueries {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("ts_us_ts", timestamp_micros(col("ts_us")))
-    graft.ops.Checkpoints.scoped { s =>
+    // each layer is read back with the schema of the frame just written
+    // to it: Spark would otherwise run a job per read to infer it
+    val usageSchema = graft.ops.Checkpoints.scoped { s =>
       // persisted: the increment is consumed by four actions (emptiness
       // probe, bulk write, page collect, watermark max) — one scan, not four
       val batch = s.persist(
@@ -145,7 +147,7 @@ object DatalakeQueries {
 
       // ---- compute_usage → USAGE: per (type, day) market stats over the
       // formatted layer; exact decimal sums, final projection DOUBLE
-      val fmt = spark.read.parquet(fmtPath)
+      val fmt = spark.read.schema(formatted.schema).parquet(fmtPath)
       val usage = usageStats(fmt)
       Datalake.writeParquet(usage, usagePath)
 
@@ -164,9 +166,10 @@ object DatalakeQueries {
       // ---- state: watermark forward to the batch max ts — next run's
       // incremental read starts past it
       Watermark.commit(spark, batch, "ts_us_ts", statePath)
+      usage.schema
     }
 
-    spark.read.parquet(usagePath)
+    spark.read.schema(usageSchema).parquet(usagePath)
       .orderBy(col("event_type"), col("event_date"))
   }
 
@@ -242,13 +245,15 @@ object DatalakeQueries {
 
     // ---- compute_usage → USAGE: fact ⋈ broadcast(dim), per
     // (segment, type) stats — the reference's listings⋈stats join
+    // each layer is read back with the schema of the frame just written
+    // to it: Spark would otherwise run a job per read to infer it
     val usage = segmentStats(
-      spark.read.parquet(fmtEventsPath),
-      spark.read.parquet(fmtDimPath))
+      spark.read.schema(fmtEvents.schema).parquet(fmtEventsPath),
+      spark.read.schema(fmtDim.schema).parquet(fmtDimPath))
     val usagePath = Datalake.path(root, Datalake.Usage, "events", "segment_stats")
     Datalake.writeParquet(usage, usagePath)
 
-    spark.read.parquet(usagePath)
+    spark.read.schema(usage.schema).parquet(usagePath)
       .orderBy(col("c_mktsegment"), col("event_type"))
   }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{array, coalesce, col, count, explode, expr, lit, struct, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Layered datalake IO, mirroring the reference's raw/formatted/usage tree
   * (cf. /root/reference/Datalake + the dags/lib fetcher modules) as distributed
@@ -94,7 +94,7 @@ object Datalake {
     * multi-valued); strings are keyword (exact-match index — the export
     * consumer opts into analyzed text per field).
     */
-  private def exportFieldType(dt: org.apache.spark.sql.types.DataType): String = {
+  private def exportFieldType(dt: DataType): String = {
     import org.apache.spark.sql.types._
     dt match {
       case LongType | IntegerType | ShortType | ByteType => "long"
@@ -231,14 +231,60 @@ object Datalake {
       statsCols: Seq[String],
       commitTsMillis: Option[Long] = None): Unit = {
     val dataPath = s"$tableRoot/v=$version"
-    val w0 = df.write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-    (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-      .parquet(dataPath)
+    writeDataDir(df, dataPath, partitionBy)
     if (statsCols.nonEmpty)
       writeFileStats(df.sparkSession, dataPath, statsCols)
     recordCommitTs(df.sparkSession, tableRoot, version,
       commitTsMillis.getOrElse(System.currentTimeMillis()))
+  }
+
+  /** The data schema of a dir graft wrote, as `StructType` JSON, inside
+    * the dir beside the parquet files: immutable with them, carried by a
+    * `ref=` pointer, hidden from Spark's readers by its underscore.
+    */
+  private val SchemaFile = "_DATASCHEMA.json"
+
+  /** Write `df` as the snappy parquet files of the dir `dir` (replacing
+    * it), partitioned by `partitionBy`, and record the data schema there
+    * for [[scanDir]]. The data schema is `df.schema` without the
+    * partition columns: a read keeps discovering those from the directory
+    * names, so their types are the ones inference always gave them.
+    */
+  private def writeDataDir(df: DataFrame, dir: String,
+      partitionBy: Seq[String]): Unit = {
+    val w0 = df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
+    (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
+      .parquet(dir)
+    val spark = df.sparkSession
+    val resolver = spark.sessionState.conf.resolver
+    val p = new org.apache.hadoop.fs.Path(dir)
+    writeSmallFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(p, SchemaFile),
+      StructType(df.schema.filterNot(f =>
+        partitionBy.exists(resolver(_, f.name)))).json)
+  }
+
+  /** The one parquet read of a dir graft wrote: the whole dir, or only
+    * `files` (paths relative to `dir`, partition columns still discovered
+    * from `dir`). It takes the data schema recorded by [[writeDataDir]],
+    * so Spark runs no job to infer it from a footer; a dir without the
+    * file (written before it existed, or by [[adoptVersion]] or
+    * [[optimizeCompact]]) is inferred as before.
+    */
+  private def scanDir(spark: SparkSession, dir: String,
+      files: Seq[String] = Nil): DataFrame = {
+    val reader = recordedSchema(spark, dir).fold(spark.read)(spark.read.schema)
+    if (files.isEmpty) reader.parquet(dir)
+    else reader.option("basePath", dir).parquet(files.map(f => s"$dir/$f"): _*)
+  }
+
+  /** The data schema [[writeDataDir]] recorded in `dir`, if any. */
+  private[graft] def recordedSchema(spark: SparkSession,
+      dir: String): Option[StructType] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    readSmallFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(p, SchemaFile))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
   /** [[publish]] with an EXPLICIT commit timestamp — the deterministic
@@ -519,6 +565,15 @@ object Datalake {
 
   private val DvDir = "_dv"
 
+  /** The schema of every deletion-vector dir: the [[withRowPosition]]
+    * columns. */
+  private[graft] val DvSchema = StructType(Seq(
+    StructField("__file", StringType), StructField("__pos", LongType)))
+
+  /** The positions of the deletion vector at `dvPath`. */
+  private def readDv(spark: SparkSession, dvPath: String): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvPath)
+
   /** `dv=<base token>;<relative dv dir>` → (base, dvRel). */
   private def parseDvToken(token: String): Option[(String, String)] =
     if (!token.startsWith("dv=")) None
@@ -560,7 +615,7 @@ object Datalake {
   private def minusDv(spark: SparkSession, positioned: DataFrame,
       dvPath: String): DataFrame =
     positioned
-      .join(spark.read.parquet(dvPath), Seq("__file", "__pos"), "left_anti")
+      .join(readDv(spark, dvPath), Seq("__file", "__pos"), "left_anti")
       .drop("__file", "__pos")
 
   /** `scan` (any frame read from files under `dataPath` — the full dir
@@ -573,7 +628,7 @@ object Datalake {
 
   private def applyDv(spark: SparkSession, dataPath: String,
       dvPath: String): DataFrame =
-    applyDvTo(spark, spark.read.parquet(dataPath), dataPath, dvPath)
+    applyDvTo(spark, scanDir(spark, dataPath), dataPath, dvPath)
 
   /** Per-segment scans of an evolved chain with TABLE-ROOT-relative
     * positions (round 17 — per-segment deletion vectors): a chain spans
@@ -589,7 +644,7 @@ object Datalake {
       anchor: String): DataFrame = {
     val rootQ = qualifiedPath(spark, tableRoot)
     segmentChain(spark, anchor)
-      .map(s => withRowPosition(spark.read.parquet(s.addPath), rootQ))
+      .map(s => withRowPosition(scanDir(spark, s.addPath), rootQ))
       .reduce(_.unionByName(_))
   }
 
@@ -743,8 +798,7 @@ object Datalake {
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val staged = writes.map { case (table, df) =>
       val v = s"v=$txn-$attempt"
-      df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-        .parquet(s"$catalogRoot/$table/$v")
+      writeDataDir(df, s"$catalogRoot/$table/$v", Nil)
       table -> v
     }
     // tables not in this txn keep their prior pins — a transaction
@@ -772,7 +826,7 @@ object Datalake {
       snapshot: Map[String, String], table: String): DataFrame = {
     val v = snapshot.getOrElse(table,
       throw new IllegalArgumentException(s"table $table not in snapshot"))
-    spark.read.parquet(s"$catalogRoot/$table/$v")
+    scanDir(spark, s"$catalogRoot/$table/$v")
   }
 
   /** ADOPT an externally-written data directory as a published version:
@@ -887,7 +941,7 @@ object Datalake {
                 .stripPrefix("/")
             val bigNames = big.map(f => metaRel(f.file))
             graft.ops.Checkpoints.scoped { s =>
-              val carried = s.persist(spark.read.parquet(s"$tableRoot/$dvRel")
+              val carried = s.persist(readDv(spark, s"$tableRoot/$dvRel")
                 .filter(col("__file").isin(bigNames: _*)))
               if (carried.count() > 0) {
                 val rel =
@@ -1165,7 +1219,7 @@ object Datalake {
       (if (isEvolvedDir(spark, dataPath))
         chainWithPositions(spark, tableRoot, dataPath).filter(predicate)
       else
-        withRowPosition(spark.read.parquet(dataPath).filter(predicate),
+        withRowPosition(scanDir(spark, dataPath).filter(predicate),
           qualifiedPath(spark, dataPath)))
         .select(col("__file"), col("__pos"))
     // persist so the count and the write share one evaluation — the
@@ -1173,7 +1227,7 @@ object Datalake {
     // accumulated vector per delete (review finding)
     graft.ops.Checkpoints.scoped { s =>
       val merged = s.persist(existingDv
-        .map(p => spark.read.parquet(p).unionByName(newDel).distinct())
+        .map(p => readDv(spark, p).unionByName(newDel).distinct())
         .getOrElse(newDel.distinct()))
       val n = merged.count()
       val rel = s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -1785,9 +1839,8 @@ object Datalake {
     val fs = vDir.getFileSystem(conf)
     val baseAbs = base
       .map(p => fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString)
-    val w0 = df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-    (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-      .parquet(new org.apache.hadoop.fs.Path(vDir, EvolvedAdd).toString)
+    writeDataDir(df, new org.apache.hadoop.fs.Path(vDir, EvolvedAdd).toString,
+      partitionBy)
     writeSmallFile(fs, new org.apache.hadoop.fs.Path(vDir, EvolvedSpec),
       partitionBy.mkString(","))
     baseAbs.foreach(b =>
@@ -1856,9 +1909,9 @@ object Datalake {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(p, EvolvedSpec)))
       segmentChain(spark, dir)
-        .map(s => spark.read.parquet(s.addPath))
+        .map(s => scanDir(spark, s.addPath))
         .reduce(_.unionByName(_))
-    else spark.read.parquet(dir)
+    else scanDir(spark, dir)
   }
 
   /** Read the whole evolved table: the union of every segment's `add/`
@@ -1878,7 +1931,7 @@ object Datalake {
         applyDvChain(spark, tableRoot, anchor, s"$tableRoot/$dvRel")
       case None =>
         segmentChain(spark, anchor)
-          .map(s => spark.read.parquet(s.addPath))
+          .map(s => scanDir(spark, s.addPath))
           .reduce(_.unionByName(_))
     }
   }
@@ -1901,13 +1954,10 @@ object Datalake {
       .map { case (_, rel) => s"$tableRoot/$rel" }
     evolvedSegments(spark, tableRoot).map { seg =>
       val p = new org.apache.hadoop.fs.Path(seg.addPath)
-      val fs = p.getFileSystem(conf)
-      val it = fs.listFiles(p, true)
       var total = 0L; var scanned = 0L
-      while (it.hasNext) {
-        val f = it.next()
+      leafFiles(p.getFileSystem(conf), p).foreach { f =>
         val name = f.getPath.getName
-        if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
+        if (!name.startsWith("_") && !name.startsWith(".")) {
           total += 1
           // exact path-SEGMENT match: a bare substring test would
           // false-positive when one partition value prefixes another
@@ -1917,7 +1967,7 @@ object Datalake {
             f.getPath.toString.contains(s"/$partCol=$value/")) scanned += 1
         }
       }
-      val raw = spark.read.parquet(seg.addPath)
+      val raw = scanDir(spark, seg.addPath)
       val df = dvPath match {
         case Some(dv) => applyDvTo(spark, raw, tableRoot, dv)
         case None => raw
@@ -2557,17 +2607,28 @@ object Datalake {
     val base = new org.apache.hadoop.fs.Path(s"$tableRoot/v=$version")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return Nil
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (st.isFile && name.startsWith("part-") && name.endsWith(".parquet"))
-        out += st.getPath.toUri.getPath
-          .stripPrefix(base.toUri.getPath.stripSuffix("/") + "/")
-    }
-    out.result().sorted
+    partFiles(fs, base).map(st => st.getPath.toUri.getPath
+      .stripPrefix(base.toUri.getPath.stripSuffix("/") + "/")).sorted
   }
+
+  /** Every file under `dir`, at any depth. `listStatus` per dir, not
+    * `listFiles`: that one returns `LocatedFileStatus`es, whose
+    * constructor reads each file's owner and mode, and Hadoop's local
+    * file system without its native library forks an `ls -ld` for that.
+    */
+  private def leafFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Vector[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toVector.flatMap { st =>
+      if (st.isDirectory) leafFiles(fs, st.getPath) else Vector(st)
+    }
+
+  /** The parquet part files under the data dir `dir`. */
+  private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Vector[org.apache.hadoop.fs.FileStatus] =
+    leafFiles(fs, dir).filter { st =>
+      val name = st.getPath.getName
+      name.startsWith("part-") && name.endsWith(".parquet")
+    }
 
   /** Per-file statistics of one published file: path relative to the
     * version dir, row count, and [min, max] per tracked numeric column.
@@ -2604,12 +2665,7 @@ object Datalake {
     val fs = base.getFileSystem(conf)
     val want = statsCols.toSet
     import scala.jdk.CollectionConverters._
-    val it = fs.listFiles(base, true)
-    val parts = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filter { st =>
-        val name = st.getPath.getName
-        st.isFile && name.startsWith("part-") && name.endsWith(".parquet")
-      }.toVector
+    val parts = partFiles(fs, base)
     // one footer open per file — IO-bound driver work, so the sweep runs
     // on a parallel stream (r19: a 63-file publish paid ~63 sequential
     // opens per commit; the per-file blocks are independent and the
@@ -2751,11 +2807,8 @@ object Datalake {
       }
     }
     val raw =
-      if (keep.isEmpty)
-        spark.read.parquet(dataPath).filter(org.apache.spark.sql.functions
-          .lit(false))
-      else spark.read.option("basePath", dataPath)
-        .parquet(keep.map(f => s"$dataPath/${f.file}"): _*)
+      if (keep.isEmpty) scanDir(spark, dataPath).filter(lit(false))
+      else scanDir(spark, dataPath, keep.map(_.file))
     // a live deletion vector still applies to a pruned scan (pruning
     // narrows IO, never visibility); rows/files evidence stays PHYSICAL —
     // it measures what the scan opens, and DV rows are still read

@@ -69,10 +69,13 @@ object DatalakeStreams {
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     foreachEpoch(raw, checkpoint) { (increment, batchId) =>
       val spark = increment.sparkSession
-      DatalakeQueries.coerceRaw(increment).drop("value")
-        .write.mode(SaveMode.Append)
+      val formatted = DatalakeQueries.coerceRaw(increment).drop("value")
+      formatted.write.mode(SaveMode.Append)
         .option("compression", "snappy").parquet(fmtPath)
-      val fmt = DatalakeQueries.dedupKeepLast(spark.read.parquet(fmtPath))
+      // every increment has this schema: read the log back with it, not
+      // with a schema-inference job per micro-batch
+      val fmt = DatalakeQueries.dedupKeepLast(
+        spark.read.schema(formatted.schema).parquet(fmtPath))
       sink(DatalakeQueries.usageStats(fmt), batchId)
     }
 

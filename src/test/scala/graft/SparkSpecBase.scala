@@ -16,7 +16,7 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
+      .config(GraftSession.EngineConfs)
       .getOrCreate()
     // getOrCreate() can return a session another suite built first (suites run
     // in parallel); builder configs are then only best-effort. The nanos read
