@@ -23,6 +23,8 @@ fi
 grep -E "Tests:" "$OUT/test.log" | tail -1
 # report only: oracle SQL copied between rows instead of named once
 python3 scripts/oracle_repeats.py || true
+# report only: library defs that nothing in src/main calls
+python3 scripts/unused_defs.py || true
 # A query that THROWS at runtime leaves no output dir — check_oracle
 # would then never see it, so a runtime-broken (but compiling) snapshot
 # would gate green. Verify records such failures in _failures.txt

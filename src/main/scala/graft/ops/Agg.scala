@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * count: a single deterministic IEEE division.
   */
 object Agg {
-  /** IMPORTANT: only cast RAW stored columns to decimal. Spark converts
+  /* IMPORTANT: only cast RAW stored columns to decimal. Spark converts
     * double→decimal via the double's shortest string repr (HALF_UP on it)
     * while DuckDB rounds the exact binary value — for *computed* doubles the
     * two can disagree at the rounding boundary. Raw money columns carry

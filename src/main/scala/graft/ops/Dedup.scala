@@ -17,16 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** MinHash signature + LSH banding. Returns candidate pairs with the
-    * signature-estimated Jaccard (fraction of agreeing positions).
-    *
-    * Each shingle STRING is hashed exactly once (ONE md5 digest yields two
-    * independent 64-bit lanes — the same values DuckDB's md5_number_lower/
-    * upper produce, which is what makes the oracle replay exact); the k
-    * per-position hash functions are the Kirsch-Mitzenmacher family
-    * g_j = h1 + j*h2 mod 2^64, so building the signature is k array-mins
-    * over longs — cheap arithmetic instead of k full string hashes.
-    */
   /** Exploded LSH band rows of a signature frame (doc_id, __sig):
     * one row per (doc, band) with the murmur3 `bkey` (cheap 4-byte SHUFFLE
     * key) and the band-slice values themselves (`bslice` — the residual
@@ -57,6 +47,16 @@ object Dedup {
       graft.functions.text.minhashSig(
         graft.functions.text.wordShingles(text, 3), k).as("__sig"))
 
+  /** MinHash signature + LSH banding. Returns candidate pairs with the
+    * signature-estimated Jaccard (fraction of agreeing positions).
+    *
+    * Each shingle STRING is hashed exactly once (ONE md5 digest yields two
+    * independent 64-bit lanes — the same values DuckDB's md5_number_lower/
+    * upper produce, which is what makes the oracle replay exact); the k
+    * per-position hash functions are the Kirsch-Mitzenmacher family
+    * g_j = h1 + j*h2 mod 2^64, so building the signature is k array-mins
+    * over longs — cheap arithmetic instead of k full string hashes.
+    */
   def minhashLshPairs(df: DataFrame, id: Column, text: Column,
       k: Int = 32, bands: Int = 8): DataFrame = {
     val sigs = df.select(id.as("doc_id"),

@@ -1,28 +1,30 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.PerDir
 import graft.sources.Tables
 
-/** Gradient-boosted regression stumps with a per-feature importance
+/** Gradient-boosted regression trees with a per-feature importance
   * readout — the in-engine twin of the reference's Kibana Data Frame
   * Analytics *Regression* (a boosted tree with "Importance des
   * features", /root/reference/ML_ROADMAP.md Phase 2.2 steps 5-7 and
   * Phase 4 step 4), the one reference capability the closed-form OLS
-  * pair (q_regression / q_regression_eval) only approximated.
+  * pair (q_regression / q_regression_eval) only approximated. There is
+  * one model type, [[Model]]: its depth (1..4) is a value, and a depth-1
+  * tree is a stump.
   *
   * Spark-first shape — the BPE-merge-loop discipline applied to tree
-  * induction: each boosting round is ONE distributed aggregate
-  * (count, Σy per (leaf-pattern, feature, bin) — the classic
-  * histogram-split search), whose result is BOUNDED by construction
-  * (≤ 2^round · features · bins cells, a model step like Packing's
-  * bucket totals), prefix-scanned on the driver for the best variance-
-  * reduction split. The corpus is never collected and never sorted; K
-  * rounds cost K scans of the (checkpointed) training projection with
-  * map-side partial aggregation. At 100 TB this is exactly the
-  * XGBoost/LightGBM histogram algorithm's data-parallel half.
+  * induction: each level of each boosting round is ONE distributed
+  * aggregate (count, Σy per (leaf-pattern, path, feature, bin) — the
+  * classic histogram-split search), whose result is BOUNDED by
+  * construction (a model step like Packing's bucket totals), prefix-
+  * scanned on the driver for the best variance-reduction split. The
+  * corpus is never collected and never sorted; K rounds of depth d cost
+  * K·d scans of the (checkpointed) training projection with map-side
+  * partial aggregation. At 100 TB this is exactly the XGBoost/LightGBM
+  * histogram algorithm's data-parallel half.
   *
   * Cross-engine exactness (the DuckDB replay oracle re-runs the WHOLE
   * training): everything data-sized stays in exact integer domains —
@@ -35,112 +37,90 @@ import graft.sources.Tables
   */
 object Gbt {
 
-  final case class Stump(f: Int, b: Int, dl: Long, dr: Long, gain: Double)
-  final case class Model(base: Long, stumps: Seq[Stump])
+  /** A split node: route a row left iff its `f` bin is ≤ `b`. It keeps
+    * both the RAW argmax gain (q_gbt_importance reads it) and the
+    * variance REDUCTION (raw gain minus the parent's sum-of-squares
+    * term, ≥ 0 by Cauchy-Schwarz; q_gbt_tree reads it). */
+  final case class Node(f: Int, b: Int, gainRaw: Double, gainRed: Double)
 
-  /** Gbt.train invocations this JVM — test-visible evidence that
+  /** One tree: `splits` keyed by (level, path-prefix); `deltas` keyed by
+    * leaf index (level-0 direction = most significant bit, 0 = left/≤),
+    * all 2^depth leaves. A node with no valid split fills its whole leaf
+    * range with its side-mean delta — rows under it route with all-left
+    * suffix bits, so every reachable leaf is always present. */
+  final case class Tree(splits: Map[(Int, Int), Node], deltas: Map[Int, Long])
+
+  /** The boosted model: `base` plus one routed leaf delta per tree, all
+    * in integer cents. */
+  final case class Model(base: Long, depth: Int, trees: Seq[Tree])
+
+  /** [[trainDepth]] invocations this JVM — test-visible evidence that
     * store-serving paths never retrain (Round17Spec pins it). */
   private[graft] val trainCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The model as a tiny versionable frame — the lake ARTIFACT the
     * reference's Phase 3 stores server-side ("le modèle est stocké …
     * prêt à répondre", /root/reference/ML_ROADMAP.md Phase 3): row
-    * idx = -1 carries (base, n_train); rows 0..k-1 the stumps in
-    * boosting order. Gains travel as raw IEEE bit patterns so the
-    * publish → read round trip is LOSSLESS — a re-served model scores
-    * bit-identically to the in-session one, which is exactly what the
-    * q_model_serve oracle hash-proves.
+    * idx = -1 carries (base, n_train, depth); rows 0..k-1 the trees in
+    * boosting order, each with all its split nodes (level, path, f, b,
+    * raw gain bits, reduction gain bits) and its 2^depth leaf deltas.
+    * Gains travel as raw IEEE bit patterns so the publish → read round
+    * trip is LOSSLESS — a re-served model scores bit-identically to the
+    * in-session one, which is exactly what the q_model_serve oracles
+    * hash-prove.
     */
-  def modelToDf(spark: org.apache.spark.sql.SparkSession, m: Model,
-      nTrain: Long): DataFrame = {
+  def modelToDf(spark: SparkSession, m: Model, nTrain: Long): DataFrame = {
     import spark.implicits._
-    val rows = (-1L, -1, -1, m.base, nTrain, 0L) +:
-      m.stumps.zipWithIndex.map { case (s, i) =>
-        (i.toLong, s.f, s.b, s.dl, s.dr,
-          java.lang.Double.doubleToLongBits(s.gain))
+    import java.lang.Double.doubleToLongBits
+    val rows = (-1L, m.base, nTrain, m.depth,
+      Seq.empty[(Int, Int, Int, Int, Long, Long)], Seq.empty[Long]) +:
+      m.trees.zipWithIndex.map { case (t, i) =>
+        (i.toLong, 0L, 0L, 0,
+          t.splits.toSeq.sortBy(_._1).map { case ((l, p), n) =>
+            (l, p, n.f, n.b, doubleToLongBits(n.gainRaw),
+              doubleToLongBits(n.gainRed))
+          },
+          (0 until (1 << m.depth)).map(t.deltas))
       }
-    rows.toDF("idx", "f", "b", "dl", "dr", "gain_bits")
+    rows.toDF("idx", "base", "n_train", "depth", "splits", "deltas")
   }
 
   /** Inverse of [[modelToDf]] — a BOUNDED collect (rounds + 1 rows).
     * Fails loudly on a frame that is not a published model artifact.
     */
   def modelFromDf(df: DataFrame): (Model, Long) = {
-    val rows = df.select(col("idx"), col("f"), col("b"), col("dl"),
-        col("dr"), col("gain_bits"))
+    import java.lang.Double.longBitsToDouble
+    val rows = df.select(col("idx"), col("base"), col("n_train"),
+        col("depth"), col("splits"), col("deltas"))
       .collect().sortBy(_.getLong(0))
     require(rows.nonEmpty && rows.head.getLong(0) == -1L,
-      "Gbt.modelFromDf: no base row (idx = -1) — not a model artifact")
+      "Gbt.modelFromDf: no header row (idx = -1) — not a model artifact")
     val head = rows.head
-    val stumps = rows.tail.zipWithIndex.map { case (r, i) =>
-      require(r.getLong(0) == i.toLong,
-        s"Gbt.modelFromDf: stump rows out of order at idx ${r.getLong(0)}")
-      Stump(r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4),
-        java.lang.Double.longBitsToDouble(r.getLong(5)))
-    }
-    (Model(head.getLong(3), stumps.toVector), head.getLong(4))
-  }
-
-  /** The DEPTH-2 model as a versionable frame (round 18 — r17 verdict
-    * #1: the registry could only carry stumps, locking the engine's
-    * best model class out of the serve/rollback lifecycle while the
-    * reference's stored Phase 3 model is a real tree ensemble,
-    * /root/reference/ML_ROADMAP.md Phase 3). One row per tree: the root
-    * split, each optional child split (feature -1 = a side with no
-    * child — that side serves its single leaf), the four leaf deltas,
-    * and the three variance-reduction gains as raw IEEE bit patterns —
-    * the same lossless round-trip contract as [[modelToDf]]. Row
-    * idx = -1 carries (base, n_train).
-    */
-  def treeModelToDf(spark: org.apache.spark.sql.SparkSession,
-      m: TreeModel, nTrain: Long): DataFrame = {
-    import spark.implicits._
-    val rows = (-1L, -1, -1, -1, -1, -1, -1, m.base, nTrain, 0L, 0L,
-      0L, 0L, 0L) +:
-      m.trees.zipWithIndex.map { case (t, i) =>
-        (i.toLong, t.root.f, t.root.b,
-          t.lChild.map(_.f).getOrElse(-1), t.lChild.map(_.b).getOrElse(-1),
-          t.rChild.map(_.f).getOrElse(-1), t.rChild.map(_.b).getOrElse(-1),
-          t.dLL, t.dLR, t.dRL, t.dRR,
-          java.lang.Double.doubleToLongBits(t.rootGain),
-          java.lang.Double.doubleToLongBits(t.lGain),
-          java.lang.Double.doubleToLongBits(t.rGain))
-      }
-    rows.toDF("idx", "rf", "rb", "lf", "lb", "rcf", "rcb",
-      "dll", "dlr", "drl", "drr", "rg_bits", "lg_bits", "cg_bits")
-  }
-
-  /** Inverse of [[treeModelToDf]] — a BOUNDED collect (rounds + 1
-    * rows). Fails loudly on a frame that is not a tree-model artifact.
-    */
-  def treeModelFromDf(df: DataFrame): (TreeModel, Long) = {
-    val rows = df.select(col("idx"), col("rf"), col("rb"), col("lf"),
-        col("lb"), col("rcf"), col("rcb"), col("dll"), col("dlr"),
-        col("drl"), col("drr"), col("rg_bits"), col("lg_bits"),
-        col("cg_bits"))
-      .collect().sortBy(_.getLong(0))
-    require(rows.nonEmpty && rows.head.getLong(0) == -1L,
-      "Gbt.treeModelFromDf: no base row (idx = -1) — not a tree-model " +
-        "artifact")
-    val head = rows.head
+    val depth = head.getInt(3)
     val trees = rows.tail.zipWithIndex.map { case (r, i) =>
       require(r.getLong(0) == i.toLong,
-        s"Gbt.treeModelFromDf: tree rows out of order at idx ${r.getLong(0)}")
-      def child(fi: Int, bi: Int): Option[Node] =
-        if (r.getInt(fi) < 0) None else Some(Node(r.getInt(fi), r.getInt(bi)))
-      Tree(Node(r.getInt(1), r.getInt(2)), child(3, 4), child(5, 6),
-        r.getLong(7), r.getLong(8), r.getLong(9), r.getLong(10),
-        java.lang.Double.longBitsToDouble(r.getLong(11)),
-        java.lang.Double.longBitsToDouble(r.getLong(12)),
-        java.lang.Double.longBitsToDouble(r.getLong(13)))
+        s"Gbt.modelFromDf: tree rows out of order at idx ${r.getLong(0)}")
+      val deltas = r.getSeq[Long](5)
+      require(deltas.length == (1 << depth),
+        s"Gbt.modelFromDf: tree $i has ${deltas.length} leaf deltas, " +
+          s"depth $depth needs ${1 << depth}")
+      Tree(
+        r.getSeq[Row](4).map { s =>
+          (s.getInt(0), s.getInt(1)) -> Node(s.getInt(2), s.getInt(3),
+            longBitsToDouble(s.getLong(4)), longBitsToDouble(s.getLong(5)))
+        }.toMap,
+        deltas.zipWithIndex.map(_.swap).toMap)
     }
-    (TreeModel(head.getLong(7), trees.toVector), head.getLong(8))
+    (Model(head.getLong(1), depth, trees.toVector), head.getLong(2))
   }
 
   val FeatureNames: Seq[String] = Seq("x_size", "x_mod", "x_noise", "x_cat")
   val BinCols: Seq[String] = Seq("b_size", "b_mod", "b_noise", "b_cat")
   val NBins = 16
+  /** Boosting rounds of the depth-1 models. */
   val Rounds = 6
+  /** Boosting rounds of the depth-2 and depth-3 models. */
+  val TreeRounds = 4
 
   /** Engine-shared feature/target SQL over `part` — `%DIV%` renders as
     * `div` (Spark) or `//` (DuckDB); everything else parses identically.
@@ -268,71 +248,11 @@ object Gbt {
         s"CAST($TargetSql AS BIGINT) AS y",
         s"($TrainPredSql) AS is_train"): _*)
 
-  /** Leaf-pattern column after `stumps`: bit j set iff stump j routes
-    * the row left. Exact integer CASE chain — identical in the replay.
-    */
-  def patCol(stumps: Seq[Stump]): Column =
-    if (stumps.isEmpty) lit(0)
-    else stumps.zipWithIndex.map { case (s, j) =>
-      when(col(BinCols(s.f)) <= s.b, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
-
-  /** Model value (integer cents) at a leaf pattern. */
-  def fOf(base: Long, stumps: Seq[Stump], p: Int): Long =
-    base + stumps.zipWithIndex.map { case (s, j) =>
-      if (((p >> j) & 1) == 1) s.dl else s.dr
-    }.sum
-
-  /** Scoring column: base + per-stump routed delta, all exact longs. */
-  def fhatCol(m: Model): Column =
-    m.stumps.foldLeft(lit(m.base): Column) { (acc, s) =>
-      acc + when(col(BinCols(s.f)) <= s.b, lit(s.dl)).otherwise(lit(s.dr))
-    }
-
-  // ==================== depth-2 trees ====================
-  //
-  // Round 17 (r16 verdict #3): stumps cannot express feature
-  // interactions — the planted p_size × mod term is the real-estate
-  // lat×lon of this slice. A depth-2 tree is the same bounded histogram
-  // induction run twice per round: ONE (pattern, feature, bin)
-  // aggregate finds the root split, ONE (pattern, side, feature, bin)
-  // aggregate finds the per-side child splits and the four leaf deltas.
-  // The leaf-pattern bitmap carries 2 bits per round (leaf ∈ 0..3), so
-  // K rounds keep the aggregate bounded by 4^K · features · bins cells
-  // — still the XGBoost histogram algorithm's data-parallel half, one
-  // level deeper. All recorded gains are variance REDUCTIONS
-  // (raw split score minus the parent's sum-of-squares term — ≥ 0 by
-  // Cauchy-Schwarz), floor-snapped at readout exactly like the stump
-  // importance.
-
-  final case class Node(f: Int, b: Int)
-  final case class Tree(root: Node, lChild: Option[Node],
-      rChild: Option[Node], dLL: Long, dLR: Long, dRL: Long, dRR: Long,
-      rootGain: Double, lGain: Double, rGain: Double)
-  final case class TreeModel(base: Long, trees: Seq[Tree])
-
-  val TreeRounds = 4
-
-  /** Tree-model scoring column: base + per-tree routed leaf delta. */
-  def fhatColTree(m: TreeModel): Column =
-    m.trees.foldLeft(lit(m.base): Column) { (acc, t) =>
-      val l = t.lChild
-        .map(c => when(col(BinCols(c.f)) <= c.b, lit(t.dLL))
-          .otherwise(lit(t.dLR)))
-        .getOrElse(lit(t.dLL))
-      val r = t.rChild
-        .map(c => when(col(BinCols(c.f)) <= c.b, lit(t.dRL))
-          .otherwise(lit(t.dRR)))
-        .getOrElse(lit(t.dRL))
-      acc + when(col(BinCols(t.root.f)) <= t.root.b, l).otherwise(r)
-    }
-
   /** Best (feature, bin) over collected histogram cells (p, f, v, n, Σy)
-    * against the current model values `fint` — the shared split search
-    * of the stump trainer, factored so root and child searches run the
-    * IDENTICAL expression sequence the SQL replay writes. Returns
-    * (f, b, rawGain, gainReduction, dl, dr); argmax on rawGain with
-    * (f asc, b asc) tie-break, exactly the stump rule.
+    * against the current model values `fint` — the split search of every
+    * node, running the IDENTICAL expression sequence the SQL replay
+    * writes. Returns (f, b, rawGain, gainReduction, dl, dr); argmax on
+    * rawGain with (f asc, b asc) tie-break.
     */
   private def bestOver(cells: Array[(Int, Int, Int, Long, Long)],
       fint: Map[Int, Long],
@@ -353,6 +273,7 @@ object Gbt {
         if (ln > 0 && rn > 0) {
           val lnD = ln.toDouble; val lrD = lr.toDouble
           val rnD = rn.toDouble; val rrD = rr.toDouble
+          // the replay writes this exact tree: (lr²/ln) + (rr²/rn)
           val gain = (lrD * lrD) / lnD + (rrD * rrD) / rnD
           if (best.forall(gain > _._3)) {
             val tnD = tn.toDouble; val trD = tr.toDouble
@@ -369,41 +290,24 @@ object Gbt {
     best
   }
 
-  // ==================== depth-d generic induction ====================
+  // ==================== depth-d induction ====================
   //
-  // Round 18 (r17 verdict #6): the stump trainer and the depth-2 trainer
-  // shared only `bestOver` — one more depth would have meant a third
-  // copy. `trainDepth` is the ONE induction loop with depth as a
-  // parameter: per round, ONE bounded histogram aggregate PER LEVEL,
-  // keyed (boosting pattern, within-round path prefix, feature, bin) —
+  // `trainDepth` is the ONE induction loop, with depth as a parameter:
+  // per round, ONE bounded histogram aggregate PER LEVEL, keyed
+  // (boosting pattern, within-round path prefix, feature, bin) —
   // ≤ (2^depth)^rounds · 2^level · features · bins cells, the same
   // LightGBM-histogram data-parallel shape at every depth. The split
   // search per node and the leaf fitting stay driver model steps on the
-  // collected cells. Round18Spec pins trainDepth(d=1) == train (the
-  // stump trainer) model-for-model, and trainTree below IS
-  // trainDepth(d=2) — the depth-2 output is conversion-exact against
-  // the r17 two-level trainer (q_gbt_tree's full SQL training replay
-  // re-proves every split decision each round).
-
-  /** A split node of the generic trainer, carrying both the RAW argmax
-    * gain (what [[Stump.gain]] records) and the variance REDUCTION
-    * (what [[Tree]] records). */
-  final case class DeepNode(f: Int, b: Int, gainRaw: Double, gainRed: Double)
-
-  /** One depth-d tree: `splits` keyed by (level, path-prefix); `deltas`
-    * keyed by leaf index (level-0 direction = most significant bit,
-    * 0 = left/≤). A node with no valid split fills its whole leaf range
-    * with its side-mean delta — rows under it route with all-left
-    * suffix bits, so every reachable leaf is always present. */
-  final case class DeepTree(depth: Int, splits: Map[(Int, Int), DeepNode],
-      deltas: Map[Int, Long])
-
-  final case class DeepModel(base: Long, depth: Int, trees: Seq[DeepTree])
+  // collected cells. Depth 1 grows stumps (Round18Spec pins a depth-1
+  // model bit for bit); depth 2 grows the trees whose every split
+  // decision q_gbt_tree's full SQL training replay re-proves each round.
+  // Depth 2 exists for the planted p_size × mod interaction: a stump can
+  // capture at most half of it.
 
   /** Within-round path prefix after `levels` levels of `splits` — the
     * exact integer CASE chain 0..2^levels-1 (dir 0 = routed left /
     * ≤ bin; a path with no recorded split routes 0). */
-  private def pathPrefixCol(splits: Map[(Int, Int), DeepNode],
+  private def pathPrefixCol(splits: Map[(Int, Int), Node],
       levels: Int): Column = {
     var q: Column = lit(0)
     for (l <- 0 until levels) {
@@ -421,43 +325,50 @@ object Gbt {
     q
   }
 
-  /** Leaf-pattern column after `trees` — `depth` bits per tree. */
-  def patColDeep(trees: Seq[DeepTree], depth: Int): Column =
+  /** Leaf-pattern column after `trees` — `depth` bits per tree, tree j's
+    * leaf index in bits depth·j .. depth·(j+1)-1. */
+  def patColDeep(trees: Seq[Tree], depth: Int): Column =
     if (trees.isEmpty) lit(0)
     else trees.zipWithIndex.map { case (t, j) =>
       pathPrefixCol(t.splits, depth) * lit(1 << (depth * j))
     }.reduce(_ + _)
 
-  /** Deep-model value (integer cents) at a leaf pattern. */
-  def fOfDeep(base: Long, trees: Seq[DeepTree], depth: Int, p: Int): Long = {
+  /** Model value (integer cents) at a leaf pattern. */
+  def fOfDeep(base: Long, trees: Seq[Tree], depth: Int, p: Int): Long = {
     val mask = (1 << depth) - 1
     base + trees.zipWithIndex.map { case (t, j) =>
       t.deltas((p >> (depth * j)) & mask)
     }.sum
   }
 
-  /** Generic depth-d boosted-tree training — see the section comment.
-    * η = 0.5 whole-cent leaf snapping, (gain DESC, f ASC, b ASC)
-    * argmax, variance-reduction gains: the stump and depth-2 trainers'
-    * exact rules at every level.
+  /** Boosted-tree training on a (checkpointed) featurized TRAIN frame —
+    * see the section comment. η = 0.5 whole-cent leaf snapping (the
+    * model stays in the exact integer domain end to end), (gain DESC,
+    * f ASC, b ASC) argmax at every node. The leaf patterns are 32-bit
+    * ints holding `depth` bits per tree, so `depth · rounds` may not
+    * exceed 31: a wider pattern would wrap and merge distinct leaves.
     */
-  def trainDepth(trainDf: DataFrame, rounds: Int, depth: Int): DeepModel = {
+  def trainDepth(trainDf: DataFrame, rounds: Int, depth: Int): Model = {
     require(depth >= 1 && depth <= 4,
       s"Gbt.trainDepth: depth must be in 1..4, got $depth")
+    require(rounds <= 31 / depth,
+      s"Gbt.trainDepth: depth × rounds must be ≤ 31 (the leaf pattern " +
+        s"is a 32-bit int), got $depth × $rounds")
     trainCount.incrementAndGet()
     val r0 = trainDf.agg(count(lit(1)).cast("long").as("n"),
       sum(col("y")).as("sy")).collect()(0)
     val n0 = r0.getLong(0)
     require(n0 > 0, "Gbt.trainDepth: empty training slice")
+    // exact floor-div mean — DuckDB's HUGEINT // replays it verbatim
     val base = java.lang.Math.floorDiv(r0.getLong(1), n0)
-    var trees = Vector.empty[DeepTree]
+    var trees = Vector.empty[Tree]
     var exhausted = false
     val fv = explode(array(BinCols.zipWithIndex.map { case (c, i) =>
       struct(lit(i).as("f"), col(c).cast("int").as("v"))
     }: _*)).as("fv")
     for (_ <- 1 to rounds if !exhausted) {
       val pat = patColDeep(trees, depth).cast("int").as("p")
-      var splits = Map.empty[(Int, Int), DeepNode]
+      var splits = Map.empty[(Int, Int), Node]
       var deltas = Map.empty[Int, Long]
       var fint: Map[Int, Long] = Map.empty
       var rootMissing = false
@@ -484,7 +395,7 @@ object Gbt {
               .map(c => (c._1, c._3, c._4, c._5, c._6))
             bestOver(sc, fint, BinCols.indices) match {
               case Some((f, b, raw, red, dl, dr)) =>
-                splits += ((l, path) -> DeepNode(f, b, raw, red))
+                splits += ((l, path) -> Node(f, b, raw, red))
                 if (l == depth - 1) {
                   deltas += ((path << 1) -> dl)
                   deltas += (((path << 1) | 1) -> dr)
@@ -512,18 +423,17 @@ object Gbt {
         }
       }
       if (rootMissing) exhausted = true
-      else trees :+= DeepTree(depth, splits, deltas)
+      else trees :+= Tree(splits, deltas)
     }
-    DeepModel(base, depth, trees)
+    Model(base, depth, trees)
   }
 
-  /** Deep-model scoring column: base + per-tree routed leaf delta via
-    * the recursive nested CASE (route left/right at each recorded
-    * split; a node with no split serves its filled leaf delta
-    * unconditionally) — the depth-d generalization of [[fhatColTree]],
-    * mirrored token for token by the generated oracle's SQL.
+  /** Scoring column: base + per-tree routed leaf delta via the recursive
+    * nested CASE (route left/right at each recorded split; a node with
+    * no split serves its filled leaf delta unconditionally), mirrored
+    * token for token by the generated oracle's SQL.
     */
-  def fhatColDeep(m: DeepModel): Column =
+  def fhatColDeep(m: Model): Column =
     m.trees.foldLeft(lit(m.base): Column) { (acc, t) =>
       def route(l: Int, p: Int): Column =
         t.splits.get((l, p)) match {
@@ -534,108 +444,4 @@ object Gbt {
         }
       acc + route(0, 0)
     }
-
-  /** A depth-1 [[DeepModel]] as the stump [[Model]] — Round18Spec pins
-    * this against [[train]] bit-for-bit. */
-  def deepToModel(m: DeepModel): Model = {
-    require(m.depth == 1, s"deepToModel needs depth 1, got ${m.depth}")
-    Model(m.base, m.trees.map { t =>
-      val n = t.splits((0, 0))
-      Stump(n.f, n.b, t.deltas(0), t.deltas(1), n.gainRaw)
-    })
-  }
-
-  /** A depth-2 [[DeepModel]] as the [[TreeModel]] the serving /
-    * importance paths consume. */
-  def deepToTreeModel(m: DeepModel): TreeModel = {
-    require(m.depth == 2, s"deepToTreeModel needs depth 2, got ${m.depth}")
-    TreeModel(m.base, m.trees.map { t =>
-      val root = t.splits((0, 0))
-      def child(p: Int): Option[Node] =
-        t.splits.get((1, p)).map(n => Node(n.f, n.b))
-      Tree(Node(root.f, root.b), child(0), child(1),
-        t.deltas(0), t.deltas(1), t.deltas(2), t.deltas(3),
-        root.gainRed,
-        t.splits.get((1, 0)).map(_.gainRed).getOrElse(0.0),
-        t.splits.get((1, 1)).map(_.gainRed).getOrElse(0.0))
-    })
-  }
-
-  /** Train depth-2 boosted trees — [[trainDepth]] at depth 2: per
-    * round ONE root histogram aggregate + ONE path-conditioned child
-    * aggregate, both bounded; split search and leaf fitting on the
-    * collected cells (driver model step). A side with no valid child
-    * split keeps a single leaf at its side mean. Same η = 0.5
-    * whole-cent snapping as the stumps.
-    */
-  def trainTree(trainDf: DataFrame, rounds: Int = TreeRounds): TreeModel =
-    deepToTreeModel(trainDepth(trainDf, rounds, depth = 2))
-
-  /** Train on a (checkpointed) featurized TRAIN frame. One bounded
-    * histogram aggregate per round; split search and leaf fitting on
-    * the collected cells (driver model step). Learning rate η = 0.5,
-    * leaf deltas snapped to whole cents so the model stays in the exact
-    * integer domain end to end.
-    */
-  def train(trainDf: DataFrame, rounds: Int = Rounds,
-      nFeatures: Int = BinCols.length): Model = {
-    require(nFeatures >= 1 && nFeatures <= BinCols.length,
-      s"nFeatures must be in 1..${BinCols.length}")
-    val feats = BinCols.take(nFeatures)
-    trainCount.incrementAndGet()
-    val r0 = trainDf.agg(count(lit(1)).cast("long").as("n"),
-      sum(col("y")).as("sy")).collect()(0)
-    val n0 = r0.getLong(0)
-    require(n0 > 0, "Gbt.train: empty training slice")
-    // exact floor-div mean — DuckDB's HUGEINT // replays it verbatim
-    val base = java.lang.Math.floorDiv(r0.getLong(1), n0)
-    var stumps = Vector.empty[Stump]
-    var exhausted = false
-    for (_ <- 1 to rounds if !exhausted) {
-      val cells = trainDf.select(patCol(stumps).cast("int").as("p"),
-          col("y"), explode(array(feats.zipWithIndex.map { case (c, i) =>
-            struct(lit(i).as("f"), col(c).cast("int").as("v"))
-          }: _*)).as("fv"))
-        .select(col("p"), col("fv.f").as("f"), col("fv.v").as("v"),
-          col("y"))
-        .groupBy("p", "f", "v")
-        .agg(count(lit(1)).as("n"), sum("y").as("sy"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
-          r.getLong(3), r.getLong(4)))
-      val fint: Map[Int, Long] = cells.iterator.map(_._1).toSet
-        .map((p: Int) => p -> fOf(base, stumps, p)).toMap
-      var best: Option[Stump] = None
-      for (f <- feats.indices) {
-        val fc = cells.filter(_._2 == f)
-        val tn = fc.iterator.map(_._4).sum
-        val tr = fc.iterator.map(c => c._5 - c._4 * fint(c._1)).sum
-        var ln = 0L
-        var lr = 0L
-        for (b <- 0 until NBins - 1) {
-          val at = fc.filter(_._3 == b)
-          ln += at.iterator.map(_._4).sum
-          lr += at.iterator.map(c => c._5 - c._4 * fint(c._1)).sum
-          val rn = tn - ln
-          val rr = tr - lr
-          if (ln > 0 && rn > 0) {
-            val lnD = ln.toDouble; val lrD = lr.toDouble
-            val rnD = rn.toDouble; val rrD = rr.toDouble
-            // the replay writes this exact tree: (lr²/ln) + (rr²/rn)
-            val gain = (lrD * lrD) / lnD + (rrD * rrD) / rnD
-            if (best.forall(gain > _.gain)) {
-              val dl = math.floor(0.5 * (lrD / lnD) + 0.5).toLong
-              val dr = math.floor(0.5 * (rrD / rnD) + 0.5).toLong
-              best = Some(Stump(f, b, dl, dr, gain))
-            }
-          }
-        }
-      }
-      best match {
-        case Some(s) => stumps :+= s
-        case None => exhausted = true // no valid split anywhere: stop
-      }
-    }
-    Model(base, stumps)
-  }
 }

@@ -120,16 +120,6 @@ object Similarity {
     Array.fill(bands * bits)(Array.fill(dim)((rnd.nextGaussian()).toFloat))
   }
 
-  /** Candidate near-duplicate pairs via random-hyperplane LSH, verified with
-    * exact cosine ≥ `tau`.
-    *
-    * Plan shape: corpus → project per-plane sign bits (codegen'd dots, one
-    * pass) → explode to (band, signature) keys → shuffle once on the band
-    * key → equi-join within buckets → exact cosine filter. At 100 TB the
-    * explode factor is `bands` (small constant) and bucket sizes are kept
-    * bounded by the signature width; AQE's skew-join splitting handles hot
-    * buckets.
-    */
   /** Exploded LSH bucket rows (id, emb, band, sig) — the per-doc banded
     * signatures. Factored out of [[hyperplaneLshPairs]] because this is
     * also the row an INCREMENTAL deployment persists per historical vector
@@ -178,6 +168,16 @@ object Similarity {
       (lit(bp) < band) && (aSigs.getItem(bp) === bSigs.getItem(bp))
     }.reduceOption(_ || _).getOrElse(lit(false))
 
+  /** Candidate near-duplicate pairs via random-hyperplane LSH, verified with
+    * exact cosine ≥ `tau`.
+    *
+    * Plan shape: corpus → project per-plane sign bits (codegen'd dots, one
+    * pass) → explode to (band, signature) keys → shuffle once on the band
+    * key → equi-join within buckets → exact cosine filter. At 100 TB the
+    * explode factor is `bands` (small constant) and bucket sizes are kept
+    * bounded by the signature width; AQE's skew-join splitting handles hot
+    * buckets.
+    */
   def hyperplaneLshPairs(corpus: DataFrame, tau: Double = LshParams.tau,
       bands: Int = LshParams.bands, bits: Int = LshParams.bits): DataFrame = {
     val buckets = lshBuckets(corpus, bands, bits)
@@ -346,21 +346,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** IVF-flat approximate kNN — the scale path for SERVING top-k (vs the
-    * LSH path, which targets all-pairs dedup).
-    *
-    * Coarse quantizer: `nCells` centroids picked as a deterministic hash
-    * sample of the corpus (cheap stand-in for k-means; the plumbing — cell
-    * assignment, probe, within-cell search — is identical). Centroids are
-    * the "index model": tiny, collected once, broadcast everywhere.
-    *
-    * Plan shape at 100 TB: corpus×centroids is a broadcast nested-loop
-    * scored in one map-side pass (linear in corpus, no shuffle), each
-    * vector keeps its argmax cell; queries probe their `nProbe` nearest
-    * cells; the only shuffled data is corpus rows matched to probed cells
-    * (≈ nProbe/nCells of the corpus), then a per-query top-k window.
-    * Recall is tunable via nProbe; nProbe = nCells degrades to exact.
-    */
   /** Lloyd-refined coarse quantizer. Init = deterministic hash-sample of the
     * corpus; each iteration is one distributed pass: map-side argmax cell
     * assignment (centroids inlined as literals — no shuffle), then ONE
@@ -398,6 +383,21 @@ object Similarity {
     cents
   }
 
+  /** IVF-flat approximate kNN — the scale path for SERVING top-k (vs the
+    * LSH path, which targets all-pairs dedup).
+    *
+    * Coarse quantizer: `nCells` centroids picked as a deterministic hash
+    * sample of the corpus (cheap stand-in for k-means; the plumbing — cell
+    * assignment, probe, within-cell search — is identical). Centroids are
+    * the "index model": tiny, collected once, broadcast everywhere.
+    *
+    * Plan shape at 100 TB: corpus×centroids is a broadcast nested-loop
+    * scored in one map-side pass (linear in corpus, no shuffle), each
+    * vector keeps its argmax cell; queries probe their `nProbe` nearest
+    * cells; the only shuffled data is corpus rows matched to probed cells
+    * (≈ nProbe/nCells of the corpus), then a per-query top-k window.
+    * Recall is tunable via nProbe; nProbe = nCells degrades to exact.
+    */
   def ivfFlatKnn(corpus: DataFrame, queries: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4, trainIters: Int = 2): DataFrame = {
     // Index build: the centroid table IS the model — nCells×dim floats,

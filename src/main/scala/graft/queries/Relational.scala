@@ -118,21 +118,6 @@ object Relational {
       .orderBy(col("o_orderkey"))
   }
 
-  /** QUARANTINE split of the ES-validation rules (round 14 — r13 verdict
-    * #6; reference analog: index_to_es.py:116-143's bulk-error
-    * accounting). The same four rules as [[qValidatedFilter]] run through
-    * `Cleaning.quarantine`: the valid side is row-for-row the validated
-    * filter's population (ValidationSpec pins the equality), and the
-    * dead-letter side carries a per-row `reject_reason` (comma-joined in
-    * rule order for multi-rule failures). Output: one row per (class,
-    * reason) with count + exact-decimal price mass — the failure-mode
-    * accounting a production feed monitors; the oracle rebuilds the
-    * reason string with the same null-safe CASE chain, so a dropped
-    * reject, a mislabeled reason, or a pass/fail flip all hash-fail.
-    *
-    * Scale: one codegen projection over the scan, both classes filter-
-    * pushed; the aggregate is sketch-sized (reason combos × 2).
-    */
   /** The ONE statement of the order-feed validation rules — shared by
     * the batch row, its streaming twin (q_stream_quarantine), and the
     * ValidationSpec equality pin, so the three cannot drift.
@@ -163,6 +148,21 @@ object Relational {
     v.unionByName(r).orderBy(col("class"), col("reject_reason"))
   }
 
+  /** QUARANTINE split of the ES-validation rules (round 14 — r13 verdict
+    * #6; reference analog: index_to_es.py:116-143's bulk-error
+    * accounting). The same four rules as [[qValidatedFilter]] run through
+    * `Cleaning.quarantine`: the valid side is row-for-row the validated
+    * filter's population (ValidationSpec pins the equality), and the
+    * dead-letter side carries a per-row `reject_reason` (comma-joined in
+    * rule order for multi-rule failures). Output: one row per (class,
+    * reason) with count + exact-decimal price mass — the failure-mode
+    * accounting a production feed monitors; the oracle rebuilds the
+    * reason string with the same null-safe CASE chain, so a dropped
+    * reject, a mislabeled reason, or a pass/fail flip all hash-fail.
+    *
+    * Scale: one codegen projection over the scan, both classes filter-
+    * pushed; the aggregate is sketch-sized (reason combos × 2).
+    */
   def qQuarantine(spark: SparkSession, dir: String): DataFrame = {
     val (valid, rejected) = graft.ops.Cleaning.quarantine(
       Tables.orders(spark, dir), orderValidationRules)
@@ -581,12 +581,14 @@ object Relational {
     }
   }
 
-  /** The GBT stump model on the full train slice. The GBT rows take it as
-    * an argument; their registry rows generate the DuckDB training-replay
-    * / scoring oracles from the same value.
+  /** The depth-1 (stump) model on the full train slice. The GBT rows
+    * take it as an argument; their registry rows generate the DuckDB
+    * training-replay / scoring oracles from the same value.
     */
   private[graft] val gbtTrainOrGet = PerDir { (spark, dir) =>
-    fitTrainSlice(spark, dir, evenHalf = false)(graft.ops.Gbt.train(_))
+    import graft.ops.Gbt
+    fitTrainSlice(spark, dir, evenHalf = false)(
+      Gbt.trainDepth(_, Gbt.Rounds, depth = 1))
   }
 
   /** BOOSTED-TREE regression eval (round 16 — ML_ROADMAP.md Phase 2.2/4,
@@ -607,130 +609,137 @@ object Relational {
   def qGbtRegression(spark: SparkSession, dir: String,
       m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
-    scoreEval(Gbt.featurize(spark, dir), Gbt.fhatCol(m))
+    scoreEval(Gbt.featurize(spark, dir), Gbt.fhatColDeep(m))
+  }
+
+  /** The per-feature importance table of `m`: split count, total `gain`
+    * and gain share per feature. Gains are snapped to the integer grid
+    * (`floor`) before summation, and summed tree by tree, each tree's
+    * nodes level by level (root, left child, right child, ...): a double
+    * sum past 2^53 depends on its order.
+    */
+  private def gbtImportance(spark: SparkSession, m: graft.ops.Gbt.Model,
+      gain: graft.ops.Gbt.Node => Double): DataFrame = {
+    import graft.ops.Gbt
+    import spark.implicits._
+    // a tree-less model would make share = 0/0 = NaN here and leave the
+    // generated replay oracle syntactically invalid — trainDepth already
+    // requires a non-empty slice, so an empty model means the planted
+    // signal vanished: fail loudly
+    require(m.trees.nonEmpty,
+      "the trained model has zero trees — no valid root split existed, " +
+        "which the planted signal should make impossible")
+    val splits = m.trees.flatMap(_.splits.toSeq.sortBy(_._1).map(_._2))
+    val grand = splits.map(n => math.floor(gain(n))).sum
+    val rows = Gbt.FeatureNames.indices.map { f =>
+      val ss = splits.filter(_.f == f)
+      val tg = ss.map(n => math.floor(gain(n))).sum
+      (Gbt.FeatureNames(f), ss.size.toLong, tg, tg / grand)
+    }
+    rows.toDF("feature", "n_splits", "total_gain", "share")
+      .orderBy(col("feature"))
   }
 
   /** GBT FEATURE IMPORTANCE (round 16 — ML_ROADMAP.md Phase 4 step 4,
-    * "Importance des features"): per-feature split count, total
-    * variance-reduction gain, and gain share across the trained rounds.
-    * Gains are snapped to the integer grid (`floor`) before summation
-    * so the per-feature totals are order-independent exact doubles in
-    * both engines. The oracle REPLAYS THE ENTIRE TRAINING in SQL — per
-    * round: the same (pattern, feature, bin) histogram off the raw
+    * "Importance des features"): per-feature split count, total raw
+    * argmax gain, and gain share across the trained stumps
+    * ([[gbtImportance]]). The oracle REPLAYS THE ENTIRE TRAINING in SQL
+    * — per round: the same (pattern, feature, bin) histogram off the raw
     * table, the same exact-integer residual prefix sums, the same IEEE
     * gain/argmax — so a single diverged split decision anywhere in
     * training hash-fails the row set.
     */
   def qGbtImportance(spark: SparkSession, dir: String,
-      m: graft.ops.Gbt.Model): DataFrame = {
-    import graft.ops.Gbt
-    import spark.implicits._
-    // a stump-less model would make share = 0/0 = NaN here and leave the
-    // generated replay oracle syntactically invalid — train() already
-    // requires a non-empty slice, so an empty model means the planted
-    // signal vanished: fail loudly (r16 ADVICE)
-    require(m.stumps.nonEmpty,
-      "qGbtImportance: the trained model has zero stumps — no valid " +
-        "split existed anywhere, which the planted signal should make " +
-        "impossible")
-    val byF = m.stumps.groupBy(_.f)
-    val grand = m.stumps.map(s => math.floor(s.gain)).sum
-    val rows = Gbt.FeatureNames.indices.map { f =>
-      val ss = byF.getOrElse(f, Seq.empty)
-      val tg = ss.map(s => math.floor(s.gain)).sum
-      (Gbt.FeatureNames(f), ss.size.toLong, tg, tg / grand)
-    }
-    rows.toDF("feature", "n_splits", "total_gain", "share")
-      .orderBy(col("feature"))
-  }
+      m: graft.ops.Gbt.Model): DataFrame =
+    gbtImportance(spark, m, _.gainRaw)
 
-  /** The depth-2 TREE model on the full train slice. */
+  /** The depth-2 model on the full train slice. */
   private[graft] val gbtTreeTrainOrGet = PerDir { (spark, dir) =>
-    fitTrainSlice(spark, dir, evenHalf = false)(graft.ops.Gbt.trainTree(_))
+    import graft.ops.Gbt
+    fitTrainSlice(spark, dir, evenHalf = false)(
+      Gbt.trainDepth(_, Gbt.TreeRounds, depth = 2))
   }
 
-  /** DEPTH-2 BOOSTED TREES (round 17 — r16 verdict #3: Kibana DFA grows
-    * real trees; stumps cannot express the planted p_size × mod
-    * INTERACTION term): [[graft.ops.Gbt.trainTree]]'s two-level
-    * histogram induction over the same 4-feature slice, read out as the
-    * per-feature importance table (splits counted across roots and
-    * children, gains as floor-snapped variance reductions). The oracle
-    * REPLAYS THE ENTIRE TRAINING in SQL — per round the root histogram,
-    * the same exact-integer residual prefix sums, the IEEE gain argmax,
-    * then the side-conditioned child histogram and per-side argmax
-    * (QUALIFY row_number) — so one diverged decision anywhere in the
-    * two-level induction hash-fails the row set. Round17Spec pins the
-    * tree model's train SSE strictly below the stump model's.
+  /** DEPTH-2 BOOSTED TREES (round 17 — Kibana DFA grows real trees;
+    * stumps cannot express the planted p_size × mod INTERACTION term):
+    * the two-level histogram induction over the same 4-feature slice,
+    * read out as the per-feature importance table ([[gbtImportance]]:
+    * splits counted across roots and children, gains as floor-snapped
+    * variance reductions). The oracle REPLAYS THE ENTIRE TRAINING in SQL
+    * — per round the root histogram, the same exact-integer residual
+    * prefix sums, the IEEE gain argmax, then the side-conditioned child
+    * histogram and per-side argmax (QUALIFY row_number) — so one
+    * diverged decision anywhere in the two-level induction hash-fails
+    * the row set. Round17Spec pins the depth-2 model's train SSE
+    * strictly below the stump model's.
     */
   def qGbtTree(spark: SparkSession, dir: String,
-      m: graft.ops.Gbt.TreeModel): DataFrame = {
-    import graft.ops.Gbt
-    import spark.implicits._
-    require(m.trees.nonEmpty,
-      "qGbtTree: the trained model has zero trees — no valid root split " +
-        "existed, which the planted signal should make impossible")
-    val splits: Seq[(Int, Double)] = m.trees.flatMap(t =>
-      Seq(t.root.f -> t.rootGain) ++
-        t.lChild.map(c => c.f -> t.lGain) ++
-        t.rChild.map(c => c.f -> t.rGain))
-    val grand = splits.map(x => math.floor(x._2)).sum
-    val rows = Gbt.FeatureNames.indices.map { f =>
-      val ss = splits.filter(_._1 == f)
-      val tg = ss.map(x => math.floor(x._2)).sum
-      (Gbt.FeatureNames(f), ss.size.toLong, tg, tg / grand)
-    }
-    rows.toDF("feature", "n_splits", "total_gain", "share")
-      .orderBy(col("feature"))
-  }
+      m: graft.ops.Gbt.Model): DataFrame =
+    gbtImportance(spark, m, _.gainRed)
 
-  /** The depth-3 model from the generic-depth trainer. */
+  /** The depth-3 model on the full train slice. */
   private[graft] val gbtDeepTrainOrGet = PerDir { (spark, dir) =>
     import graft.ops.Gbt
     fitTrainSlice(spark, dir, evenHalf = false)(
-      Gbt.trainDepth(_, rounds = Gbt.TreeRounds, depth = 3))
+      Gbt.trainDepth(_, Gbt.TreeRounds, depth = 3))
   }
 
-  /** DEPTH-3 BOOSTED TREES through the GENERIC trainer (round 18 — the
-    * production proof of the r17 verdict's #6 ask: depth is a
-    * parameter, not a code path; the same one induction loop that
-    * reproduces the stump trainer at d=1 — Round18Spec — and the r17
-    * depth-2 trainer at d=2 — q_gbt_tree's full SQL training replay —
-    * grows a third level here, with per-round cost still ONE bounded
-    * histogram aggregate per level). Readout: per-split eval of the
-    * depth-3 model (the qGbtRegression shape) plus depth/n_trees
+  /** DEPTH-3 BOOSTED TREES (round 18 — depth is a parameter, not a code
+    * path: the one induction loop that grows the stumps and the depth-2
+    * trees grows a third level here, with per-round cost still ONE
+    * bounded histogram aggregate per level). Readout: per-split eval of
+    * the depth-3 model (the qGbtRegression shape) plus depth/n_trees
     * evidence. The oracle inlines the trained model as the recursive
     * nested-CASE scoring replay, so any routing or leaf-delta defect
     * at any of the three levels hash-fails.
     */
   def qGbtDepth3(spark: SparkSession, dir: String,
-      m: graft.ops.Gbt.DeepModel): DataFrame = {
+      m: graft.ops.Gbt.Model): DataFrame = {
     import graft.ops.Gbt
     scoreEval(Gbt.featurize(spark, dir),
         Gbt.fhatColDeep(m))
-      .select(lit(3L).as("depth"), lit(m.trees.length.toLong).as("n_trees"),
+      .select(lit(m.depth.toLong).as("depth"),
+        lit(m.trees.length.toLong).as("n_trees"),
         col("split"), col("n"), col("rmse"), col("r2"))
       .orderBy(col("split"))
   }
 
-  /** The two versions of one model class the registry rows publish:
-    * `stale` (yesterday's, trained on the even half of the train slice,
-    * recorded with its `staleN` training rows) and `fresh` (the full
-    * train slice).
+  /** The two versions of one model the registry rows publish: `stale`
+    * (yesterday's, trained on the even half of the train slice, recorded
+    * with its `staleN` training rows) and `fresh` (the full train slice).
     */
-  final case class Versions[M](stale: M, staleN: Long, fresh: M)
+  final case class Versions(stale: graft.ops.Gbt.Model, staleN: Long,
+      fresh: graft.ops.Gbt.Model)
 
-  private[graft] def gbtVersionsFor(spark: SparkSession,
-      dir: String): Versions[graft.ops.Gbt.Model] = {
-    val (stale, staleN) = gbtHalfTrainOrGet(spark, dir)
-    Versions(stale, staleN, gbtTrainOrGet(spark, dir))
+  /** The registry [[Versions]] of one model: `half` fits the even half
+    * of the train slice (with its row count), `full` the whole slice. */
+  private[graft] def gbtVersions(half: PerDir[(graft.ops.Gbt.Model, Long)],
+      full: PerDir[graft.ops.Gbt.Model])(spark: SparkSession,
+      dir: String): Versions = {
+    val (stale, staleN) = half(spark, dir)
+    Versions(stale, staleN, full(spark, dir))
   }
+
+  /** The stump model's registry versions. */
+  private[graft] def gbtVersionsFor(spark: SparkSession,
+      dir: String): Versions =
+    gbtVersions(gbtHalfTrainOrGet, gbtTrainOrGet)(spark, dir)
 
   /** The "yesterday" model of the registry rows — trained on the even
     * half of the train slice — with its training row count (qModelServe
     * publishes it as the stale v1; qModelRollback pins and serves it). */
   private[graft] val gbtHalfTrainOrGet = PerDir { (spark, dir) =>
+    import graft.ops.Gbt
     fitTrainSlice(spark, dir, evenHalf = true)(half =>
-      (graft.ops.Gbt.train(half), half.count()))
+      (Gbt.trainDepth(half, Gbt.Rounds, depth = 1), half.count()))
+  }
+
+  /** The "yesterday" depth-2 model — [[gbtHalfTrainOrGet]] for the tree
+    * registry row. */
+  private[graft] val gbtTreeHalfTrainOrGet = PerDir { (spark, dir) =>
+    import graft.ops.Gbt
+    fitTrainSlice(spark, dir, evenHalf = true)(half =>
+      (Gbt.trainDepth(half, Gbt.TreeRounds, depth = 2), half.count()))
   }
 
   /** MODEL ROLLBACK (round 17 — the registry lifecycle's incident
@@ -745,7 +754,7 @@ object Relational {
     * catalog-sized artifact reads as q_model_serve.
     */
   def qModelRollback(spark: SparkSession, dir: String,
-      models: Versions[graft.ops.Gbt.Model],
+      models: Versions,
       root: String = DatalakeQueries.tempLakeRoot() + "/gbt_model_rollback")
       : DataFrame = {
     import graft.ops.Gbt
@@ -757,7 +766,7 @@ object Relational {
     val (rolled, _) = Gbt.modelFromDf(Datalake.readVersion(spark, root, "1"))
     val nVersions = Datalake.listVersions(spark, root).length.toLong
     scoreEval(Gbt.featurize(spark, dir),
-        Gbt.fhatCol(rolled))
+        Gbt.fhatColDeep(rolled))
       .select(lit("1").as("served_version"),
         lit(nVersions).as("n_versions"), col("split"), col("n"),
         col("rmse"), col("r2"))
@@ -766,7 +775,8 @@ object Relational {
 
   /** Pure store-side serving step: resolve the manifest-current model
     * artifact and score the featurized frame with it — NO training
-    * anywhere on this path (Round17Spec pins Gbt.trainCount across it).
+    * anywhere on this path (Round17Spec and Round18Spec pin
+    * Gbt.trainCount across it).
     */
   private[graft] def scoreFromStore(spark: SparkSession, dir: String,
       modelRoot: String): DataFrame = {
@@ -774,15 +784,20 @@ object Relational {
     import graft.sources.Datalake
     val (served, _) = Gbt.modelFromDf(Datalake.readPublished(spark, modelRoot))
     scoreEval(Gbt.featurize(spark, dir),
-      Gbt.fhatCol(served))
+      Gbt.fhatColDeep(served))
   }
 
+  /** The count column the serve rows report a model's trees under. */
+  private def treeCountCol(m: graft.ops.Gbt.Model): String =
+    if (m.depth == 1) "n_stumps" else "n_trees"
+
   /** MODEL REGISTRY — train → PUBLISH as a versioned lake artifact →
-    * serve from the store (round 17, the r16 verdict's #1 gap: the
-    * reference's Phase 3 stores the trained model server-side and
-    * serves any number of inference calls from it, ML_ROADMAP.md
-    * Phase 3 incl. the "Ingest Pipeline" path, while gbtTrainOrGet
-    * retrained per JVM). The lifecycle exercised end to end:
+    * serve from the store (round 17: the reference's Phase 3 stores the
+    * trained model server-side and serves any number of inference calls
+    * from it, ML_ROADMAP.md Phase 3 incl. the "Ingest Pipeline" path,
+    * while gbtTrainOrGet retrained per JVM). q_model_serve runs it on
+    * the stumps, q_model_serve_tree on the depth-2 trees. The lifecycle
+    * exercised end to end:
     *
     *  1. v1 publishes a STALE model (trained on the even half of the
     *     train slice) — yesterday's artifact;
@@ -796,14 +811,15 @@ object Relational {
     *
     * The oracle is the model-INLINED scoring replay built from the
     * in-session fresh model plus the version-evidence literals: a
-    * lossy publish→read round trip, a refresh gate that fails to fire
-    * (serving the stale v1), or a manifest pointing at the wrong
-    * version all hash-fail. Scale: the artifact is rounds+1 rows —
-    * publish and resolve are catalog-sized; scoring is the one scan
-    * it always was. `root` is the model store's lake root.
+    * lossy publish→read round trip (any node, leaf delta or missing
+    * child), a refresh gate that fails to fire (serving the stale v1),
+    * or a manifest pointing at the wrong version all hash-fail. Scale:
+    * the artifact is rounds+1 rows — publish and resolve are
+    * catalog-sized; scoring is the one scan it always was. `root` is
+    * the model store's lake root.
     */
   def qModelServe(spark: SparkSession, dir: String,
-      models: Versions[graft.ops.Gbt.Model],
+      models: Versions,
       root: String = DatalakeQueries.tempLakeRoot() + "/gbt_model")
       : DataFrame = {
     import graft.ops.Gbt
@@ -818,11 +834,11 @@ object Relational {
       Datalake.publish(Gbt.modelToDf(spark, models.fresh, liveN), root, "2")
     val nVersions = Datalake.listVersions(spark, root).length.toLong
     val version = Datalake.currentVersion(spark, root).getOrElse("?")
-    val nStumps = graft.ops.Gbt.modelFromDf(
-      Datalake.readPublished(spark, root))._1.stumps.length.toLong
+    val (current, _) = Gbt.modelFromDf(Datalake.readPublished(spark, root))
     scoreFromStore(spark, dir, root)
       .select(lit(version).as("model_version"),
-        lit(nVersions).as("n_versions"), lit(nStumps).as("n_stumps"),
+        lit(nVersions).as("n_versions"),
+        lit(current.trees.length.toLong).as(treeCountCol(current)),
         col("split"), col("n"), col("rmse"), col("r2"))
       .orderBy(col("split"))
   }
@@ -852,77 +868,6 @@ object Relational {
       .orderBy(col("split"))
   }
 
-  /** The "yesterday" DEPTH-2 model — [[gbtHalfTrainOrGet]] for trees;
-    * qModelServeTree publishes it as the stale v1. */
-  private[graft] val gbtTreeHalfTrainOrGet = PerDir { (spark, dir) =>
-    fitTrainSlice(spark, dir, evenHalf = true)(half =>
-      (graft.ops.Gbt.trainTree(half), half.count()))
-  }
-
-  private[graft] def gbtTreeVersionsFor(spark: SparkSession,
-      dir: String): Versions[graft.ops.Gbt.TreeModel] = {
-    val (stale, staleN) = gbtTreeHalfTrainOrGet(spark, dir)
-    Versions(stale, staleN, gbtTreeTrainOrGet(spark, dir))
-  }
-
-  /** Pure store-side TREE serving step — the depth-2 twin of
-    * [[scoreFromStore]]: resolve the manifest-current tree artifact and
-    * score with it, NO training anywhere on this path (Round18Spec pins
-    * Gbt.trainCount across it).
-    */
-  private[graft] def scoreFromStoreTree(spark: SparkSession, dir: String,
-      modelRoot: String): DataFrame = {
-    import graft.ops.Gbt
-    import graft.sources.Datalake
-    val (served, _) =
-      Gbt.treeModelFromDf(Datalake.readPublished(spark, modelRoot))
-    scoreEval(Gbt.featurize(spark, dir),
-      Gbt.fhatColTree(served))
-  }
-
-  /** TREE-MODEL REGISTRY (round 18 — r17 verdict #1: the registry
-    * lifecycle could round-trip only stumps, so the BEST model class the
-    * engine trains — the depth-2 ensemble, strictly lower SSE per
-    * Round17Spec — was locked out of serve/rollback/score-on-ingest;
-    * the reference's stored Phase 3 model is a real tree ensemble,
-    * /root/reference/ML_ROADMAP.md Phase 3). The qModelServe lifecycle
-    * run ON TREES: v1 publishes the stale half-trained DEPTH-2 model via
-    * [[graft.ops.Gbt.treeModelToDf]], the freshness gate (stored n_train
-    * vs live count) fires and republishes the full depth-2 model as v2,
-    * and scoring resolves the manifest-current TREE artifact —
-    * [[scoreFromStoreTree]] never touches a trainer. The oracle is the
-    * tree-model-INLINED scoring replay (nested per-tree CASE routing)
-    * plus the version evidence: a lossy tree round trip — any node,
-    * leaf delta or child-presence flag — or a wrong manifest hash-fails.
-    * Scale: the artifact is rounds+1 rows; publish/resolve are
-    * catalog-sized; scoring is the one scan it always was.
-    */
-  def qModelServeTree(spark: SparkSession, dir: String,
-      models: Versions[graft.ops.Gbt.TreeModel],
-      root: String = DatalakeQueries.tempLakeRoot() + "/gbt_tree_model")
-      : DataFrame = {
-    import graft.ops.Gbt
-    import graft.sources.Datalake
-    Datalake.publish(Gbt.treeModelToDf(spark, models.stale, models.staleN),
-      root, "1")
-    val liveN = Gbt.featurize(spark, dir)
-      .filter(col("is_train")).count()
-    val (_, storedN) =
-      Gbt.treeModelFromDf(Datalake.readPublished(spark, root))
-    if (storedN != liveN)
-      Datalake.publish(Gbt.treeModelToDf(spark, models.fresh, liveN),
-        root, "2")
-    val nVersions = Datalake.listVersions(spark, root).length.toLong
-    val version = Datalake.currentVersion(spark, root).getOrElse("?")
-    val nTrees = Gbt.treeModelFromDf(
-      Datalake.readPublished(spark, root))._1.trees.length.toLong
-    scoreFromStoreTree(spark, dir, root)
-      .select(lit(version).as("model_version"),
-        lit(nVersions).as("n_versions"), lit(nTrees).as("n_trees"),
-        col("split"), col("n"), col("rmse"), col("r2"))
-      .orderBy(col("split"))
-  }
-
   /** MODEL-REGISTRY ALIAS STAGING (round 18 — r17 verdict #5:
     * qModelRollback pins a version by NUMBER, but production registries
     * resolve by ALIAS — champion/challenger, a "prod" tag — so
@@ -940,7 +885,7 @@ object Relational {
     * re-pointing one alias leaves the others intact.
     */
   def qModelAlias(spark: SparkSession, dir: String,
-      models: Versions[graft.ops.Gbt.Model]): DataFrame = {
+      models: Versions): DataFrame = {
     import graft.ops.Gbt
     import graft.sources.Datalake
     val root = DatalakeQueries.tempLakeRoot() + "/gbt_model_alias"
@@ -953,7 +898,7 @@ object Relational {
     def serveProd(stage: String): DataFrame = {
       val v = Datalake.resolveAlias(spark, root, "prod")
       val (m, _) = Gbt.modelFromDf(Datalake.readAlias(spark, root, "prod"))
-      scoreEval(Gbt.featurize(spark, dir), Gbt.fhatCol(m))
+      scoreEval(Gbt.featurize(spark, dir), Gbt.fhatColDeep(m))
         .select(lit(stage).as("stage"), lit("prod").as("alias"),
           lit(v).as("served_version"), col("split"), col("n"),
           col("rmse"), col("r2"))
@@ -989,7 +934,7 @@ object Relational {
     import graft.ops.Gbt
     val scored = Gbt.featurize(spark, dir)
       .filter(!col("is_train"))
-      .select(col("pk"), col("y"), Gbt.fhatCol(m).as("fhat"))
+      .select(col("pk"), col("y"), Gbt.fhatColDeep(m).as("fhat"))
       .withColumn("ar", abs(col("y") - col("fhat")))
       .withColumn("grp", when(expr("(pk div 5) % 2 = 0"),
         lit("calibration")).otherwise(lit("eval")))
@@ -1561,11 +1506,6 @@ object Relational {
     }
   }
 
-  /** Histogram quantiles per event type (ops.Sketches.histQuantiles):
-    * p50/p95 from fixed-width buckets — the oracle-exact stand-in for
-    * qApproxProfile's engine-private percentile sketch; error bounded by
-    * the bucket width by construction.
-    */
   /** EXACT per-group quantiles (r9) — the precise sibling of
     * q_hist_quantiles' bounded-state sketch: Spark's `percentile`
     * aggregate sorts each group's value multiset and interpolates the
@@ -1592,6 +1532,11 @@ object Relational {
       .orderBy(col("l_returnflag"))
   }
 
+  /** Histogram quantiles per event type (ops.Sketches.histQuantiles):
+    * p50/p95 from fixed-width buckets — the oracle-exact stand-in for
+    * qApproxProfile's engine-private percentile sketch; error bounded by
+    * the bucket width by construction.
+    */
   def qHistQuantiles(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Sketches.histQuantiles(Tables.events(spark, dir),
         col("event_type"), col("value"), Seq(0.5, 0.95))
@@ -2560,15 +2505,30 @@ object Relational {
        |      ELSE -1 END)""".stripMargin
   }
 
-  /** A stump model's scoring expression: base + the routed per-stump
-    * deltas, exact integers, mirroring Gbt.fhatCol token for token.
-    */
-  private def stumpFhatSql(m: graft.ops.Gbt.Model): String = {
+  /** Tree `t`'s nested routing CASE at `depth`, mirroring
+    * Gbt.fhatColDeep token for token: a recorded split routes left (≤ its
+    * bin) or right, and a node without one writes `leaf(k)` for the first
+    * leaf index k of its range. */
+  private def routeSql(t: graft.ops.Gbt.Tree, depth: Int)(
+      leaf: Int => String): String = {
     import graft.ops.Gbt
-    s"${m.base}" + m.stumps.map(s =>
-      s" + CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${s.dl} " +
-        s"ELSE ${s.dr} END").mkString
+    def route(l: Int, p: Int): String =
+      t.splits.get((l, p)) match {
+        case Some(n) if l < depth =>
+          s"CASE WHEN ${Gbt.BinCols(n.f)} <= ${n.b} " +
+            s"THEN ${route(l + 1, p << 1)} " +
+            s"ELSE ${route(l + 1, (p << 1) | 1)} END"
+        case _ => leaf(p << (depth - l))
+      }
+    route(0, 0)
   }
+
+  /** A model's scoring expression: base + each tree's routed leaf delta,
+    * exact integers. */
+  private def deepFhatSql(m: graft.ops.Gbt.Model): String =
+    s"${m.base}" + m.trees.map { t =>
+      s" + ${routeSql(t, m.depth)(k => s"${t.deltas(k)}")}"
+    }.mkString
 
   /** The oracle side of [[scoreEval]]: CTEs `s$tag` (each row of `t`
     * scored by `fhat`) and `a$tag` (per-split exact sums). */
@@ -2598,22 +2558,23 @@ object Relational {
        |  $gbtRmseR2Sql
        |FROM a ORDER BY split""".stripMargin
 
-  /** Model-inlined GBT scoring oracle: ŷ = base + routed per-stump
+  /** Model-inlined GBT scoring oracle: ŷ = base + routed per-tree
     * deltas (exact integers), then [[gbtEvalOracle]].
     */
   private[graft] def gbtScoreOracle(m: graft.ops.Gbt.Model): String =
-    gbtEvalOracle(stumpFhatSql(m))
+    gbtEvalOracle(deepFhatSql(m))
 
-  /** q_model_serve oracle: the scoring replay of [[gbtScoreOracle]]
-    * (the STORED model must score identically to the in-session one —
-    * the round-trip proof) plus the registry-lifecycle literals: the
-    * manifest must land on v2 after the freshness-gated republish, two
-    * versions must exist, and the artifact must carry every stump.
+  /** q_model_serve / q_model_serve_tree oracle: the scoring replay of
+    * [[gbtScoreOracle]] (the STORED model must score identically to the
+    * in-session one — the round-trip proof) plus the registry-lifecycle
+    * literals: the manifest must land on v2 after the freshness-gated
+    * republish, two versions must exist, and the artifact must carry
+    * every tree.
     */
   private def modelServeOracle(m: graft.ops.Gbt.Model): String =
-    gbtEvalOracle(stumpFhatSql(m),
+    gbtEvalOracle(deepFhatSql(m),
       "'2' AS model_version, CAST(2 AS BIGINT) AS n_versions,\n  " +
-        s"CAST(${m.stumps.length} AS BIGINT) AS n_stumps, ")
+        s"CAST(${m.trees.length} AS BIGINT) AS ${treeCountCol(m)}, ")
 
   /** q_model_rollback oracle: the scoring replay with the PINNED v1
     * (half-trained) model inlined, plus the version-pin evidence — a
@@ -2621,55 +2582,12 @@ object Relational {
     * because the two models' scores differ on the planted slice.
     */
   private def rollbackOracle(m: graft.ops.Gbt.Model): String =
-    gbtEvalOracle(stumpFhatSql(m),
+    gbtEvalOracle(deepFhatSql(m),
       "'1' AS served_version, CAST(2 AS BIGINT) AS n_versions,\n  ")
-
-  /** The depth-2 model's scoring expression: base + per-tree routed
-    * leaf delta — a nested exact-integer CASE per tree, mirroring
-    * Gbt.fhatColTree token for token (a side with no child serves its
-    * single leaf delta unconditionally).
-    */
-  private def treeFhatSql(m: graft.ops.Gbt.TreeModel): String = {
-    import graft.ops.Gbt
-    s"${m.base}" + m.trees.map { t =>
-      def side(c: Option[Gbt.Node], dl: Long, dr: Long): String =
-        c.map(n => s"CASE WHEN ${Gbt.BinCols(n.f)} <= ${n.b} " +
-          s"THEN $dl ELSE $dr END").getOrElse(s"$dl")
-      s" + CASE WHEN ${Gbt.BinCols(t.root.f)} <= ${t.root.b}" +
-        s" THEN ${side(t.lChild, t.dLL, t.dLR)}" +
-        s" ELSE ${side(t.rChild, t.dRL, t.dRR)} END"
-    }.mkString
-  }
-
-  /** q_model_serve_tree oracle: [[modelServeOracle]]'s lifecycle
-    * evidence with the DEPTH-2 scoring replay — the stored tree
-    * artifact must score bit-identically to the in-session model.
-    */
-  private def treeServeOracle(m: graft.ops.Gbt.TreeModel): String =
-    gbtEvalOracle(treeFhatSql(m),
-      "'2' AS model_version, CAST(2 AS BIGINT) AS n_versions,\n  " +
-        s"CAST(${m.trees.length} AS BIGINT) AS n_trees, ")
-
-  /** The generic depth-d model's scoring expression — the recursive
-    * nested CASE mirroring Gbt.fhatColDeep token for token. */
-  private def deepFhatSql(m: graft.ops.Gbt.DeepModel): String = {
-    import graft.ops.Gbt
-    s"${m.base}" + m.trees.map { t =>
-      def route(l: Int, p: Int): String =
-        t.splits.get((l, p)) match {
-          case Some(n) if l < m.depth =>
-            s"CASE WHEN ${Gbt.BinCols(n.f)} <= ${n.b} " +
-              s"THEN ${route(l + 1, p << 1)} " +
-              s"ELSE ${route(l + 1, (p << 1) | 1)} END"
-          case _ => s"${t.deltas(p << (m.depth - l))}"
-        }
-      s" + ${route(0, 0)}"
-    }.mkString
-  }
 
   /** q_gbt_depth3 oracle: the depth-3 model-inlined scoring replay with
     * the depth/n_trees evidence literals. */
-  private def deepScoreOracle(m: graft.ops.Gbt.DeepModel): String =
+  private def deepScoreOracle(m: graft.ops.Gbt.Model): String =
     gbtEvalOracle(deepFhatSql(m),
       s"CAST(${m.depth} AS BIGINT) AS depth,\n  " +
         s"CAST(${m.trees.length} AS BIGINT) AS n_trees, ")
@@ -2686,8 +2604,8 @@ object Relational {
          |  $gbtRmseR2Sql
          |FROM a$tag""".stripMargin
     s"""WITH $gbtTCte,
-       |${gbtEvalCtes("p", stumpFhatSql(full))},
-       |${gbtEvalCtes("r", stumpFhatSql(half))}
+       |${gbtEvalCtes("p", deepFhatSql(full))},
+       |${gbtEvalCtes("r", deepFhatSql(half))}
        |${sel("1_promoted", "2", "p")}
        |UNION ALL
        |${sel("2_rolled_back", "1", "r")}
@@ -2703,7 +2621,7 @@ object Relational {
   private[graft] def modelIngestOracle(m: graft.ops.Gbt.Model): String =
     s"""WITH $gbtTCte
        |SELECT split, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS sum_y,
-       |  CAST(SUM(${stumpFhatSql(m)}) AS BIGINT) AS sum_pred,
+       |  CAST(SUM(${deepFhatSql(m)}) AS BIGINT) AS sum_pred,
        |  CAST(3 AS BIGINT) AS n_epochs
        |FROM t GROUP BY split ORDER BY split""".stripMargin
 
@@ -2714,7 +2632,7 @@ object Relational {
     */
   private def gbtConformalOracle(m: graft.ops.Gbt.Model): String =
     s"""WITH $gbtTCte,
-       |a AS (SELECT pk, abs(y - (${stumpFhatSql(m)})) AS ar,
+       |a AS (SELECT pk, abs(y - (${deepFhatSql(m)})) AS ar,
        |    CASE WHEN (pk // 5) % 2 = 0 THEN 'calibration' ELSE 'eval' END
        |      AS grp
        |  FROM t WHERE split = 'test'),
@@ -2802,6 +2720,27 @@ object Relational {
        |ORDER BY feature""".stripMargin
   }
 
+  /** A training replay's leaf pattern over the `prior` trees: each
+    * tree's leaf index (its routing CASE with the leaf number in place of
+    * the delta), shifted to bits depth·j .. depth·(j+1)-1 — the value
+    * Gbt.patColDeep computes. */
+  private def gbtLeafSql(prior: Seq[graft.ops.Gbt.Tree], depth: Int): String =
+    if (prior.isEmpty) "0"
+    else prior.zipWithIndex.map { case (t, j) =>
+      s"(${routeSql(t, depth)(_.toString)}) * ${1 << (depth * j)}"
+    }.mkString(" + ")
+
+  /** A training replay's prior prediction at leaf pattern `p`: base plus
+    * each `prior` tree's delta at its leaf index — Gbt.fOfDeep. */
+  private def gbtPriorSql(prior: Seq[graft.ops.Gbt.Tree], depth: Int): String = {
+    val leaves = 1 << depth
+    "(SELECT base FROM b0)" + prior.zipWithIndex.map { case (t, j) =>
+      s" + CASE (p // ${1 << (depth * j)}) % $leaves " +
+        (0 until leaves - 1).map(k => s"WHEN $k THEN ${t.deltas(k)} ")
+          .mkString + s"ELSE ${t.deltas(leaves - 1)} END"
+    }.mkString
+  }
+
   /** GBT importance oracle: replays the ENTIRE training in SQL — per
     * round the same (pattern, feature, bin) histogram over the raw
     * table, exact-integer residual prefix sums (HUGEINT domain), the
@@ -2810,27 +2749,18 @@ object Relational {
     * diverged split decision anywhere in training changes the rows.
     */
   private def gbtImportanceOracle(m: graft.ops.Gbt.Model): String = {
-    import graft.ops.Gbt
-    // a stump-less model would render a dangling comma and an empty
+    // a tree-less model would render a dangling comma and an empty
     // UNION chain below — fail loudly instead of emitting invalid SQL
-    // (qGbtImportance guards the same condition on the query side)
-    require(m.stumps.nonEmpty,
-      "gbtImportanceOracle: cannot render a replay for a zero-stump model")
-    def patSql(stumps: Seq[Gbt.Stump]): String =
-      if (stumps.isEmpty) "0"
-      else stumps.zipWithIndex.map { case (s, j) =>
-        s"(CASE WHEN ${Gbt.BinCols(s.f)} <= ${s.b} THEN ${1 << j} " +
-          "ELSE 0 END)"
-      }.mkString(" + ")
-    def fSql(stumps: Seq[Gbt.Stump]): String =
-      "(SELECT base FROM b0)" + stumps.zipWithIndex.map { case (s, j) =>
-        s" + CASE WHEN (p // ${1 << j}) % 2 = 1 THEN ${s.dl} " +
-          s"ELSE ${s.dr} END"
-      }.mkString
-    val rounds = m.stumps.indices.map { k =>
-      val prior = m.stumps.take(k)
+    // (gbtImportance guards the same condition on the query side)
+    require(m.trees.nonEmpty,
+      "gbtImportanceOracle: cannot render a replay for a zero-tree model")
+    require(m.depth == 1,
+      s"gbtImportanceOracle replays stump training, got depth ${m.depth}")
+    val rounds = m.trees.indices.map { k =>
+      val prior = m.trees.take(k)
       val i = k + 1
-      s"""${gbtRootHistCtes("", i, patSql(prior), fSql(prior))},
+      s"""${gbtRootHistCtes("", i, gbtLeafSql(prior, 1),
+           gbtPriorSql(prior, 1))},
          |g$i AS (SELECT s.f, s.b, ln, lr, tot_n - ln AS rn,
          |    tot_r - lr AS rr
          |  FROM s$i s JOIN t$i USING (f)
@@ -2845,7 +2775,7 @@ object Relational {
          |      AS dr
          |  FROM g$i ORDER BY gain DESC, f ASC, b ASC LIMIT 1)""".stripMargin
     }
-    val union = m.stumps.indices
+    val union = m.trees.indices
       .map(k => s"SELECT ${k + 1} AS round, f, b, dl, dr, gain FROM w${k + 1}")
       .mkString("\n  UNION ALL ")
     gbtReplayOracle(rounds, union, "gain")
@@ -2864,31 +2794,16 @@ object Relational {
     * subtraction happens in the union projection, mirroring
     * Gbt.bestOver's exact two-step IEEE sequence.
     */
-  private def gbtTreeOracle(m: graft.ops.Gbt.TreeModel): String = {
-    import graft.ops.Gbt
+  private def gbtTreeOracle(m: graft.ops.Gbt.Model): String = {
     require(m.trees.nonEmpty,
       "gbtTreeOracle: cannot render a replay for a zero-tree model")
-    def patSql(trees: Seq[Gbt.Tree]): String =
-      if (trees.isEmpty) "0"
-      else trees.zipWithIndex.map { case (t, j) =>
-        val l = t.lChild.map(c =>
-          s"CASE WHEN ${Gbt.BinCols(c.f)} <= ${c.b} THEN 0 ELSE 1 END")
-          .getOrElse("0")
-        val r = t.rChild.map(c =>
-          s"CASE WHEN ${Gbt.BinCols(c.f)} <= ${c.b} THEN 2 ELSE 3 END")
-          .getOrElse("2")
-        s"(CASE WHEN ${Gbt.BinCols(t.root.f)} <= ${t.root.b} THEN $l " +
-          s"ELSE $r END) * ${1 << (2 * j)}"
-      }.mkString(" + ")
-    def fSql(trees: Seq[Gbt.Tree]): String =
-      "(SELECT base FROM b0)" + trees.zipWithIndex.map { case (t, j) =>
-        s" + CASE (p // ${1 << (2 * j)}) % 4 WHEN 0 THEN ${t.dLL} " +
-          s"WHEN 1 THEN ${t.dLR} WHEN 2 THEN ${t.dRL} ELSE ${t.dRR} END"
-      }.mkString
+    require(m.depth == 2,
+      s"gbtTreeOracle replays depth-2 training, got depth ${m.depth}")
     val rounds = m.trees.indices.map { k =>
       val prior = m.trees.take(k)
+      val (pat, fhat) = (gbtLeafSql(prior, 2), gbtPriorSql(prior, 2))
       val i = k + 1
-      s"""${gbtRootHistCtes("a", i, patSql(prior), fSql(prior))},
+      s"""${gbtRootHistCtes("a", i, pat, fhat)},
          |ga$i AS (SELECT s.f, s.b, ln, lr, tot_n - ln AS rn,
          |    tot_r - lr AS rr, tot_n, tot_r
          |  FROM sa$i s JOIN ta$i USING (f)
@@ -2897,13 +2812,13 @@ object Relational {
          |    $gbtGainSql,
          |    tot_n, tot_r
          |  FROM ga$i ORDER BY gain DESC, f ASC, b ASC LIMIT 1),
-         |cb$i AS (SELECT ${patSql(prior)} AS p,
+         |cb$i AS (SELECT $pat AS p,
          |    CASE WHEN (${gbtBinCase("wa")}) <= wa.b THEN 1 ELSE 0 END AS s,
          |    ff.f AS f, ${gbtBinCase("ff")} AS v, COUNT(*) AS n, SUM(y) AS sy
          |  FROM tr CROSS JOIN wa$i wa CROSS JOIN (VALUES $gbtFeatureValues) AS ff(f)
          |  GROUP BY 1, 2, 3, 4),
          |rb$i AS (SELECT s, f, v, CAST(n AS BIGINT) AS n,
-         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * (${fSql(prior)})
+         |    CAST(sy AS BIGINT) - CAST(n AS BIGINT) * ($fhat)
          |      AS r
          |  FROM cb$i),
          |tb$i AS (SELECT s, f, CAST(SUM(n) AS BIGINT) AS tot_n,
@@ -3825,9 +3740,10 @@ object Relational {
     // the tree registry serves the STORED depth-2 artifact; the oracle
     // inlines the in-session tree model — any round-trip loss in a
     // node, child flag or leaf delta hash-fails the scores
-    "q_model_serve_tree" -> trained(gbtTreeVersionsFor)(
-      (s, d, m) => qModelServeTree(s, d, m))(
-      m => treeServeOracle(m.fresh)),
+    "q_model_serve_tree" -> trained(
+      gbtVersions(gbtTreeHalfTrainOrGet, gbtTreeTrainOrGet))(
+      (s, d, m) => qModelServe(s, d, m))(
+      m => modelServeOracle(m.fresh)),
     // depth-3 scoring replay from the generic trainer's model — any
     // routing or leaf-delta defect at any level hash-fails
     "q_gbt_depth3" -> trained(gbtDeepTrainOrGet)(qGbtDepth3)(deepScoreOracle),

@@ -792,7 +792,7 @@ object StreamQueries {
         batch.select(col("pk"),
           when(col("is_train"), lit("train")).otherwise(lit("test"))
             .as("split"),
-          col("y"), Gbt.fhatCol(served).as("pred")),
+          col("y"), Gbt.fhatColDeep(served).as("pred")),
         s"$fmt/epoch=$epoch")
     }.awaitTermination()
     val landed = spark.read.parquet(fmt)
@@ -833,7 +833,7 @@ object StreamQueries {
       val scored = batch.select(
         when(col("is_train"), lit("train")).otherwise(lit("test"))
           .as("split"),
-        col("y"), Gbt.fhatCol(m).as("fhat"))
+        col("y"), Gbt.fhatColDeep(m).as("fhat"))
       Datalake.writeParquet(
         scored.groupBy(col("split")).agg(
           count(lit(1)).as("n"),

@@ -162,6 +162,24 @@ object TextQueries {
         .filter(col("term") =!= "")
         .distinct()))
 
+  /** The inverted-index build both store-serving rows share: the ONE
+    * wide (term, doc) shuffle, producing the stored postings an index
+    * serve reads instead of raw text. */
+  private def indexPostings(d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
+        graft.ops.TextAnalysis.wsTokenCount(col("text")).cast("long")
+          .as("dl"),
+        explode(graft.functions.text.wordShingles(col("text"), 1))
+          .as("term"))
+      .filter(col("term") =!= "")
+      .groupBy(col("term"), col("doc_id"))
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+
+  private def indexStats(d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
+      graft.ops.TextAnalysis.wsTokenCount(col("text")).cast("long")
+        .as("dl"))
+
   /** BM25 served from a PUBLISHED, INCREMENTALLY-BUILT inverted index
     * (round 11 — the reference's actual indexing shape: index_to_es.py
     * ships documents to Elasticsearch in incremental batches and QUERIES
@@ -183,24 +201,6 @@ object TextQueries {
     * becomes a pruned scan), then serve any number of query batches from
     * the compact store without touching raw text.
     */
-  /** The inverted-index build both store-serving rows share: the ONE
-    * wide (term, doc) shuffle, producing the stored postings an index
-    * serve reads instead of raw text. */
-  private def indexPostings(d: DataFrame): DataFrame =
-    d.select(col("doc_id"),
-        graft.ops.TextAnalysis.wsTokenCount(col("text")).cast("long")
-          .as("dl"),
-        explode(graft.functions.text.wordShingles(col("text"), 1))
-          .as("term"))
-      .filter(col("term") =!= "")
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-
-  private def indexStats(d: DataFrame): DataFrame =
-    d.select(col("doc_id"),
-      graft.ops.TextAnalysis.wsTokenCount(col("text")).cast("long")
-        .as("dl"))
-
   def qIndexServe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.sources.Datalake
@@ -476,22 +476,6 @@ object TextQueries {
       .withColumnRenamed("media_id", "doc_id")
       .orderBy(col("doc_id"))
 
-  /** REAL video demux + decode (round 9 — closes the last stub): each
-    * document's payload becomes a true MJPEG stream, demuxed back into
-    * frames by SOI/EOI marker scan, every 2nd frame decoded through the
-    * JDK JPEG codec (ops.Multimodal.mjpegFrameStats for the full
-    * argument). The hash-checked columns are the decode-derived frame
-    * geometry (any demux/codec defect changes them or the row count) and
-    * the source-slice brightness; the decoded brightness itself is lossy
-    * (JPEG) and therefore spec-pinned, not oracle-hashed — dropped here.
-    */
-  /** REAL audio decode (round 9): every document's bytes become a true
-    * 8-bit mono PCM WAV, parsed back through javax.sound's codec
-    * (ops.Multimodal.wavRoundTripStats). PCM is lossless, so the decoded
-    * sample statistics replay arithmetically from the bytes in the
-    * DuckDB oracle — n_samples and sample_rate are the DECODER's view of
-    * the container, so a header/width/rate parse defect hash-fails.
-    */
   /** REAL image resize (round 10 — retires the last stub): payload →
     * real grayscale PNG → JDK decode → area-mean ÷2 resize → PNG
     * re-encode → JDK decode again → thumbnail pixel stats
@@ -509,6 +493,13 @@ object TextQueries {
       .withColumnRenamed("media_id", "doc_id")
       .orderBy(col("doc_id"))
 
+  /** REAL audio decode (round 9): every document's bytes become a true
+    * 8-bit mono PCM WAV, parsed back through javax.sound's codec
+    * (ops.Multimodal.wavRoundTripStats). PCM is lossless, so the decoded
+    * sample statistics replay arithmetically from the bytes in the
+    * DuckDB oracle — n_samples and sample_rate are the DECODER's view of
+    * the container, so a header/width/rate parse defect hash-fails.
+    */
   def qAudioFeatures(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Multimodal.wavRoundTripStats(
         graft.ops.Multimodal.withPayload(Tables.documents(spark, dir), "text"),
@@ -546,6 +537,15 @@ object TextQueries {
         col("doc_id"), col("ahash"), maxHamming = 8)
       .orderBy(col("doc_a"), col("doc_b"))
 
+  /** REAL video demux + decode (round 9 — closes the last stub): each
+    * document's payload becomes a true MJPEG stream, demuxed back into
+    * frames by SOI/EOI marker scan, every 2nd frame decoded through the
+    * JDK JPEG codec (ops.Multimodal.mjpegFrameStats for the full
+    * argument). The hash-checked columns are the decode-derived frame
+    * geometry (any demux/codec defect changes them or the row count) and
+    * the source-slice brightness; the decoded brightness itself is lossy
+    * (JPEG) and therefore spec-pinned, not oracle-hashed — dropped here.
+    */
   def qVideoFrames(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Multimodal.mjpegFrameStats(
         graft.ops.Multimodal.withPayload(Tables.documents(spark, dir), "text"),

@@ -1536,6 +1536,12 @@ object Datalake {
     (nextSeq, version)
   }
 
+  /** Test seam for the cross-process same-epoch race (see the hook call
+    * site in [[publishEpochCas]]); (token, scannedTo) at invocation.
+    */
+  private[graft] var epochClaimRaceHook: Option[(String, Long) => Unit] =
+    None
+
   /** EPOCH-keyed CAS publish — the streaming-sink commit shape (r13
     * verdict #4: `runPublishingBackfill` published through plain
     * last-writer-wins `publish`, so a concurrent batch CAS writer to the
@@ -1576,12 +1582,6 @@ object Datalake {
     * this token can only have been written by an epoch publisher, which
     * is exactly what the replay scan needs to verify.
     */
-  /** Test seam for the cross-process same-epoch race (see the hook call
-    * site in [[publishEpochCas]]); (token, scannedTo) at invocation.
-    */
-  private[graft] var epochClaimRaceHook: Option[(String, Long) => Unit] =
-    None
-
   def publishEpochCas(df: DataFrame, tableRoot: String, epoch: String,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession

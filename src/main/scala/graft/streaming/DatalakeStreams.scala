@@ -79,23 +79,6 @@ object DatalakeStreams {
       sink(DatalakeQueries.usageStats(fmt), batchId)
     }
 
-  /** STREAMING → MANIFEST PUBLISH (round-10 verdict #5 — marries the two
-    * flagship subsystems): same micro-batch DAG as [[runBackfill]], but
-    * every trigger PUBLISHES the refreshed usage aggregate as an atomic
-    * manifest version named by the batch epoch. Readers of the published
-    * table therefore always resolve a COMPLETE usage snapshot (old epoch
-    * or new, never a half-written refresh — runBackfill's plain overwrite
-    * has exactly that torn-read window), and the version history is the
-    * stream's epoch history: time travel to "usage as of batch N" for
-    * free, vacuum retires old epochs.
-    *
-    * Crash-replay idempotence is BY CONSTRUCTION of the epoch keying: a
-    * restarted stream re-runs the last uncommitted batch with the SAME
-    * batchId, so it overwrites the same v=<epoch> dir and re-swaps the
-    * manifest to the identical target; the formatted-layer append is
-    * at-least-once, and replayed raw rows are absorbed by the read-time
-    * keep-last dedup before any published aggregate sees them.
-    */
   /** CDC APPLY STREAM (round 14): a change feed arrives as micro-batches
     * and each batch lands on the table as ONE committed MERGE —
     * `Datalake.mergeTransact`, so every epoch claims a commit-log record
@@ -124,6 +107,23 @@ object DatalakeStreams {
       ()
     }
 
+  /** STREAMING → MANIFEST PUBLISH (round-10 verdict #5 — marries the two
+    * flagship subsystems): same micro-batch DAG as [[runBackfill]], but
+    * every trigger PUBLISHES the refreshed usage aggregate as an atomic
+    * manifest version named by the batch epoch. Readers of the published
+    * table therefore always resolve a COMPLETE usage snapshot (old epoch
+    * or new, never a half-written refresh — runBackfill's plain overwrite
+    * has exactly that torn-read window), and the version history is the
+    * stream's epoch history: time travel to "usage as of batch N" for
+    * free, vacuum retires old epochs.
+    *
+    * Crash-replay idempotence is BY CONSTRUCTION of the epoch keying: a
+    * restarted stream re-runs the last uncommitted batch with the SAME
+    * batchId, so it overwrites the same v=<epoch> dir and re-swaps the
+    * manifest to the identical target; the formatted-layer append is
+    * at-least-once, and replayed raw rows are absorbed by the read-time
+    * keep-last dedup before any published aggregate sees them.
+    */
   def runPublishingBackfill(raw: DataFrame, fmtPath: String,
       tableRoot: String, checkpoint: String): StreamingQuery =
     backfill(raw, fmtPath, checkpoint) { (usage, batchId) =>
@@ -136,40 +136,6 @@ object DatalakeStreams {
       ()
     }
 
-  /** STREAMING SOURCE FROM A PUBLISHED TABLE (round 15 — r14 verdict
-    * #4): every stream above consumes raw file dirs; this is the missing
-    * half of the CDC story — CONSUMING the lake. A manifest-aware stream
-    * that emits each committed version's change feed as a micro-batch,
-    * the Delta streaming-source shape. No custom Source machinery is
-    * needed: the `_commits/` log is append-only immutable small files,
-    * which is EXACTLY the contract Spark's file source streams over — so
-    * the log itself is the stream, and each record row arrives with its
-    * sequence (from `_metadata.file_path`) and token (the file body).
-    *
-    * Per record the emission is SELF-CONTAINED (intra-batch order never
-    * matters): sequence 1 emits the initial snapshot as inserts
-    * (`_from_version='initial'`, the Delta initial-snapshot convention);
-    * sequence N>1 resolves its predecessor's token with one point read
-    * and emits `Datalake.changeFeedTokens(prev, cur)` — the
-    * token-general diff, so EVERY commit class feeds correctly: a
-    * deletion-vector commit materializes as delete rows, a committed
-    * MERGE as its arms, a maintenance rewrite as the empty feed. Only
-    * `ref=` clone pointers are skipped (their data lives in another
-    * table), loudly. A log whose early records were vacuumed before the
-    * stream attached still gets an initial snapshot: the earliest live
-    * record's resolved state is emitted as inserts (r15 hardening — a
-    * mid-stream gap, by contrast, stays a loud skip, never a second
-    * "initial").
-    *
-    * Each micro-batch lands on the SINK via [[Datalake.publishEpochCas]]
-    * keyed by batchId — the foreachBatch at-least-once caveat closed by
-    * the epoch machinery: a crash-replayed batch republishes the same
-    * epoch version instead of double-appending. The full CDC log is the
-    * union of the sink's epoch versions ([[Datalake.readVersionsMerged]]).
-    *
-    * Scale: per-trigger cost is one keyed full-outer join per NEW commit
-    * (the CDC consumer's signed-up cost); the log read is catalog-sized.
-    */
   /** CDC TABLE REPLICATION end-to-end (round 15 — the composed proof of
     * the lake-as-stream source: not just emitting the feed but APPLYING
     * it): consume the source table's commit log as a stream and fold
@@ -311,6 +277,40 @@ object DatalakeStreams {
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
+  /** STREAMING SOURCE FROM A PUBLISHED TABLE (round 15 — r14 verdict
+    * #4): every stream above consumes raw file dirs; this is the missing
+    * half of the CDC story — CONSUMING the lake. A manifest-aware stream
+    * that emits each committed version's change feed as a micro-batch,
+    * the Delta streaming-source shape. No custom Source machinery is
+    * needed: the `_commits/` log is append-only immutable small files,
+    * which is EXACTLY the contract Spark's file source streams over — so
+    * the log itself is the stream, and each record row arrives with its
+    * sequence (from `_metadata.file_path`) and token (the file body).
+    *
+    * Per record the emission is SELF-CONTAINED (intra-batch order never
+    * matters): sequence 1 emits the initial snapshot as inserts
+    * (`_from_version='initial'`, the Delta initial-snapshot convention);
+    * sequence N>1 resolves its predecessor's token with one point read
+    * and emits `Datalake.changeFeedTokens(prev, cur)` — the
+    * token-general diff, so EVERY commit class feeds correctly: a
+    * deletion-vector commit materializes as delete rows, a committed
+    * MERGE as its arms, a maintenance rewrite as the empty feed. Only
+    * `ref=` clone pointers are skipped (their data lives in another
+    * table), loudly. A log whose early records were vacuumed before the
+    * stream attached still gets an initial snapshot: the earliest live
+    * record's resolved state is emitted as inserts (r15 hardening — a
+    * mid-stream gap, by contrast, stays a loud skip, never a second
+    * "initial").
+    *
+    * Each micro-batch lands on the SINK via [[Datalake.publishEpochCas]]
+    * keyed by batchId — the foreachBatch at-least-once caveat closed by
+    * the epoch machinery: a crash-replayed batch republishes the same
+    * epoch version instead of double-appending. The full CDC log is the
+    * union of the sink's epoch versions ([[Datalake.readVersionsMerged]]).
+    *
+    * Scale: per-trigger cost is one keyed full-outer join per NEW commit
+    * (the CDC consumer's signed-up cost); the log read is catalog-sized.
+    */
   def changeFeedStream(spark: SparkSession, tableRoot: String,
       keys: Seq[String], sinkRoot: String,
       checkpoint: String): StreamingQuery = {

@@ -228,9 +228,9 @@ class Round16Spec extends SparkSpecBase {
     assert(noise._4 < 0.05, s"noise share ${noise._4} must be ~0")
     assert(math.abs(rows.map(_._4).sum - 1.0) < 1e-12,
       "shares must partition the total gain")
-    assert(rows.map(_._2).sum === m.stumps.length.toLong)
-    // every trained stump carries positive variance reduction
-    assert(m.stumps.forall(_.gain > 0))
+    assert(rows.map(_._2).sum === m.trees.length.toLong)
+    // every trained stump carries a positive split gain
+    assert(m.trees.forall(_.splits.values.forall(_.gainRaw > 0)))
   }
 
   test("geohash5FromCell is exactly the precision-5 prefix of geohash6") {

@@ -125,17 +125,19 @@ class Round17Spec extends SparkSpecBase {
       Gbt.featurize(spark, dir)
         .filter(col("is_train")))
     try {
-      val m3 = Gbt.train(tr, nFeatures = 3)
-      val m4 = Gbt.train(tr, nFeatures = 4)
+      // one bin for every row: no split on the categorical feature is
+      // valid, so the search never picks it — the 3-feature model
+      val m3 = Gbt.trainDepth(tr.withColumn("b_cat", lit(0)), Gbt.Rounds, 1)
+      val m4 = Gbt.trainDepth(tr, Gbt.Rounds, 1)
       def sse(m: Gbt.Model): Double = tr
-        .select(((col("y") - Gbt.fhatCol(m)) *
-          (col("y") - Gbt.fhatCol(m))).cast("decimal(25,0)").as("e"))
+        .select(((col("y") - Gbt.fhatColDeep(m)) *
+          (col("y") - Gbt.fhatColDeep(m))).cast("decimal(25,0)").as("e"))
         .agg(sum(col("e")).cast("double")).collect()(0).getDouble(0)
       val (s3, s4) = (sse(m3), sse(m4))
       assert(s4 < s3,
         s"4-feature train SSE $s4 must beat the 3-feature model's $s3 — " +
           "the categorical encoding is the only path to the brand term")
-      assert(m4.stumps.exists(_.f === 3),
+      assert(m4.trees.exists(_.splits((0, 0)).f === 3),
         "the trained model must actually split on the categorical bin")
       // leakage check: the encoding is out-of-fold, so the categorical
       // feature cannot memorize rows — test R² must stay in the same
@@ -154,9 +156,8 @@ class Round17Spec extends SparkSpecBase {
     val m = graft.queries.Relational.gbtTrainOrGet(spark, sfDir)
     val (m2, n2) = Gbt.modelFromDf(Gbt.modelToDf(spark, m, 42L))
     assert(n2 === 42L)
-    assert(m2.base === m.base)
-    assert(m2.stumps === m.stumps,
-      "stump list (incl. raw gain doubles) must survive the frame round trip")
+    assert(m2 === m,
+      "the stumps (incl. raw gain doubles) must survive the frame round trip")
   }
 
   test("store serving never retrains and matches in-session scoring") {
@@ -205,16 +206,15 @@ class Round17Spec extends SparkSpecBase {
         .select(((col("y") - fhat) * (col("y") - fhat))
           .cast("decimal(25,0)").as("e"))
         .agg(sum(col("e")).cast("double")).collect()(0).getDouble(0)
-      val (sStump, sTree) = (sse(Gbt.fhatCol(stump)),
-        sse(Gbt.fhatColTree(tree)))
-      assert(sTree < sStump,
-        s"depth-2 train SSE $sTree must beat the stump model's $sStump — " +
+      val (sDepth1, sDepth2) = (sse(Gbt.fhatColDeep(stump)),
+        sse(Gbt.fhatColDeep(tree)))
+      assert(sDepth2 < sDepth1,
+        s"depth-2 train SSE $sDepth2 must beat the stump model's $sDepth1 — " +
           "the interaction term needs a second level")
-      assert(tree.trees.exists(t => t.lChild.isDefined || t.rChild.isDefined),
+      assert(tree.trees.exists(_.splits.keySet.exists(_._1 == 1)),
         "at least one tree must actually grow a child split")
       // every recorded gain is a variance REDUCTION: non-negative
-      assert(tree.trees.forall(t =>
-        t.rootGain >= 0 && t.lGain >= 0 && t.rGain >= 0))
+      assert(tree.trees.forall(_.splits.values.forall(_.gainRed >= 0)))
     } finally Checkpoints.release(tr)
   }
 

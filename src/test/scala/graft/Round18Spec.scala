@@ -18,15 +18,45 @@ class Round18Spec extends SparkSpecBase {
     Gbt.featurize(spark, dir).filter(col("is_train"))
 
   test("trainDepth(d=1) reproduces the stump trainer bit-for-bit") {
+    // the model the dedicated stump trainer (since folded into
+    // trainDepth) grew on sf0.001: base, then per stump its feature,
+    // bin, left and right deltas and the raw IEEE bits of its argmax gain
+    val stumpBase = 147049L
+    val stumps = Seq(
+      (0, 0, 14152L, -1794L, 4759816185478226497L),
+      (0, 12, -2142L, 10550L, 4758878999383168260L),
+      (1, 10, -2890L, 6745L, 4757839229765624978L),
+      (0, 1, 7804L, -1801L, 4756013613136326299L),
+      (3, 7, -3961L, 3241L, 4755408272273912098L),
+      (1, 4, -4346L, 2214L, 4753250444829065628L))
     val tr = graft.ops.Checkpoints.checkpoint(featurized(sfDir))
     try {
-      val stumps = Gbt.train(tr)
-      val viaDeep = Gbt.deepToModel(Gbt.trainDepth(tr, Gbt.Rounds, 1))
-      assert(viaDeep.base === stumps.base)
-      assert(viaDeep.stumps === stumps.stumps,
+      val m = Gbt.trainDepth(tr, Gbt.Rounds, 1)
+      assert(m.base === stumpBase)
+      assert(m.trees.forall(t => t.splits.keySet === Set((0, 0)) &&
+        t.deltas.keySet === Set(0, 1)))
+      assert(m.trees.map { t =>
+        val n = t.splits((0, 0))
+        (n.f, n.b, t.deltas(0), t.deltas(1),
+          java.lang.Double.doubleToLongBits(n.gainRaw))
+      } === stumps,
         "the generic depth-1 induction must make the IDENTICAL split " +
-          "decisions (features, bins, deltas, raw IEEE gains) as train()")
+          "decisions (features, bins, deltas, raw IEEE gains) as the " +
+          "stump trainer")
     } finally graft.ops.Checkpoints.release(tr)
+  }
+
+  test("trainDepth rejects a leaf pattern wider than 31 bits") {
+    // 34 depth-1 rounds would shift tree 32's leaf bit onto tree 0's
+    val before = Gbt.trainCount.get()
+    intercept[IllegalArgumentException] {
+      Gbt.trainDepth(featurized(sfDir), rounds = 34, depth = 1)
+    }
+    intercept[IllegalArgumentException] {
+      Gbt.trainDepth(featurized(sfDir), rounds = 8, depth = 4)
+    }
+    assert(Gbt.trainCount.get() === before,
+      "a rejected call must not count as a training run")
   }
 
   test("trainDepth(d=3) trains and does not regress depth-2 train SSE") {
@@ -34,7 +64,7 @@ class Round18Spec extends SparkSpecBase {
     try {
       val d2 = Gbt.trainDepth(tr, 2, 2)
       val d3 = Gbt.trainDepth(tr, 2, 3)
-      def sse(m: Gbt.DeepModel): Double = {
+      def sse(m: Gbt.Model): Double = {
         val fhat = m.trees.foldLeft(lit(m.base)) { (acc, t) =>
           // score via the pattern column + a driver lookup CASE
           val leaf = Gbt.patColDeep(Seq(t), m.depth)
@@ -54,36 +84,49 @@ class Round18Spec extends SparkSpecBase {
 
   test("tree-model artifact round-trips losslessly, incl. childless sides") {
     // hand-built model exercising every encoding edge: absent children,
-    // negative deltas, distinct IEEE gain bit patterns
-    val m = Gbt.TreeModel(-17L, Vector(
-      Gbt.Tree(Gbt.Node(0, 3), Some(Gbt.Node(1, 7)), None,
-        -5L, 9L, 4L, 4L, 123.456, 1.5e-300, 0.0),
-      Gbt.Tree(Gbt.Node(3, 15), None, Some(Gbt.Node(2, 0)),
-        Long.MinValue + 1, Long.MinValue + 1, -1L, Long.MaxValue,
-        0.1 + 0.2, Double.MinPositiveValue, 7.0)))
-    val (m2, n2) = Gbt.treeModelFromDf(Gbt.treeModelToDf(spark, m, 99L))
+    // extreme and negative deltas, subnormal and distinct IEEE gain bits
+    def leaves(ds: Long*) = ds.zipWithIndex.map(_.swap).toMap
+    val m = Gbt.Model(-17L, 2, Vector(
+      Gbt.Tree(Map((0, 0) -> Gbt.Node(0, 3, 123.456, 1.5e-300),
+          (1, 0) -> Gbt.Node(1, 7, 0.0, -0.0)),
+        leaves(-5L, 9L, 4L, 4L)),
+      Gbt.Tree(Map((0, 0) -> Gbt.Node(3, 15, 0.1 + 0.2, 7.0),
+          (1, 1) -> Gbt.Node(2, 0, Double.MinPositiveValue, 2.5e-310)),
+        leaves(Long.MinValue + 1, Long.MinValue + 1, -1L, Long.MaxValue))))
+    val (m2, n2) = Gbt.modelFromDf(Gbt.modelToDf(spark, m, 99L))
     assert(n2 === 99L)
     assert(m2 === m,
-      "trees (nodes, child flags, deltas, raw gain doubles) must survive " +
-        "the frame round trip")
-    val trained = graft.queries.Relational.gbtTreeTrainOrGet(spark, sfDir)
-    val (t2, _) = Gbt.treeModelFromDf(Gbt.treeModelToDf(spark, trained, 1L))
-    assert(t2 === trained)
+      "trees (nodes, missing children, deltas, raw gain doubles) must " +
+        "survive the frame round trip")
+    def gainBits(x: Gbt.Model) = x.trees.flatMap(_.splits.values.flatMap(n =>
+      Seq(n.gainRaw, n.gainRed).map(java.lang.Double.doubleToRawLongBits)))
+    assert(gainBits(m2) === gainBits(m), "gains must keep their exact bits")
+    import graft.queries.Relational
+    for (trained <- Seq(Relational.gbtTreeTrainOrGet(spark, sfDir),
+        Relational.gbtDeepTrainOrGet(spark, sfDir))) {
+      val (t2, _) = Gbt.modelFromDf(Gbt.modelToDf(spark, trained, 1L))
+      assert(t2 === trained, s"depth-${trained.depth} model round trip")
+    }
+    // a frame that is not an artifact fails loudly
+    intercept[IllegalArgumentException] {
+      Gbt.modelFromDf(Gbt.modelToDf(spark, m, 1L).filter(col("idx") >= 0))
+    }
   }
 
   test("tree store serving never retrains and matches in-session scoring") {
     import graft.queries.Relational
     val root = graft.queries.DatalakeQueries.tempLakeRoot() + "/gbt_tree_model"
-    Relational.qModelServeTree(spark, sfDir,
-      Relational.gbtTreeVersionsFor(spark, sfDir), root).collect()
+    Relational.qModelServe(spark, sfDir,
+      Relational.gbtVersions(Relational.gbtTreeHalfTrainOrGet,
+        Relational.gbtTreeTrainOrGet)(spark, sfDir), root).collect()
     val before = Gbt.trainCount.get()
-    val served = Relational.scoreFromStoreTree(spark, sfDir, root).collect()
+    val served = Relational.scoreFromStore(spark, sfDir, root).collect()
     assert(Gbt.trainCount.get() === before,
       "the tree serving path must read the store, never a trainer")
     val m = Relational.gbtTreeTrainOrGet(spark, sfDir)
     val insession = Relational.scoreEval(
       Gbt.featurize(spark, sfDir),
-      Gbt.fhatColTree(m)).collect()
+      Gbt.fhatColDeep(m)).collect()
     assert(served.map(_.toString).toSeq === insession.map(_.toString).toSeq,
       "stored tree serve must equal in-session scoring bit-for-bit")
   }
